@@ -272,7 +272,7 @@ def cmd_segment_txn_stat(spark, args) -> int:
     bstr = batches.select(
         F.col("doc_id").alias("_b_doc"), batch_record_string().alias("_b_str")
     )
-    # closing_batch_doc_id is the control BATCH line (txn_events attributes
+    # closing_batch_doc_id is the control BATCH line (the txn fold attributes
     # controls to klog's currentBatch cursor); the ControlMessage detail is
     # the last control record inside that batch (Kafka control batches carry
     # exactly one — the window is just defensive).
@@ -379,27 +379,13 @@ def cmd_group(spark, args) -> int:
 
 
 def cmd_segment_health(spark, args) -> int:
-    """Per-file health dashboard (the q_file_health composition over
-    arbitrary CLI input): line/batch/corrupt counts, corrupt rate,
-    offset-gap count per segment file — the first look at a dump fleet."""
-    from .operators.aggregates import offset_gaps
+    """Per-file health dashboard (aggregates.file_health over arbitrary CLI
+    input, the same table as q_file_health and the file_health SQL view):
+    line/batch/corrupt counts, corrupt rate, offset-gap count per segment
+    file — the first look at a dump fleet."""
+    from .operators.aggregates import file_health
 
-    parsed = _parsed(spark, args.input)
-    routed = _routed(spark, args.input)
-    base = routed.groupBy("file", "segment_type").agg(
-        F.count("*").alias("n_lines"),
-        F.sum((F.col("record_class") == "batch").cast("int")).alias("n_batches"),
-        F.sum((F.col("record_class") == "corrupt").cast("int")).alias("n_corrupt"),
-    )
-    gaps = offset_gaps(parsed).groupBy("file").agg(F.count("*").alias("n_offset_gaps"))
-    df = base.join(gaps, "file", "left").select(
-        "file", "segment_type", "n_lines", "n_batches", "n_corrupt",
-        # unrounded, matching q_file_health and the h1_file_health SQL view:
-        # every entry point reports the identical value (ADVICE r5 #5)
-        (F.col("n_corrupt").cast("double") / F.col("n_lines")).alias("corrupt_rate"),
-        F.coalesce("n_offset_gaps", F.lit(0)).alias("n_offset_gaps"),
-    ).orderBy("file")
-    _print_rows(df)
+    _print_rows(file_health(_parsed(spark, args.input), _routed(spark, args.input)).orderBy("file"))
     return 0
 
 

@@ -94,7 +94,7 @@ def run_incremental(spark: SparkSession, input_path: str, out_dir: str,
     from .operators.parse import parse_sequences
     from .operators.route import apply_validity_routing
 
-    t0 = time.time()
+    t0 = time.perf_counter()
     run_id = uuid.uuid4().hex[:12]
     # crash recovery: a previous run that appended but never committed left
     # orphan run_id partitions — delete them BEFORE reprocessing their files,
@@ -129,6 +129,6 @@ def run_incremental(spark: SparkSession, input_path: str, out_dir: str,
         ).collect()
     }
     sinks = {r["record_class"]: r["n"] for r in routed.groupBy("record_class").agg(F.count("*").alias("n")).collect()}
-    wall = time.time() - t0
+    wall = time.perf_counter() - t0
     ckpt.commit(run_id, per_file, sinks, wall)
     return {"run_id": run_id, "n_files": len(per_file), "sink_counts": sinks, "wall_s": wall}

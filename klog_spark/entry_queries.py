@@ -272,7 +272,7 @@ gm_msgs AS (
 
 def klog_txn_cte(fx: str = FX) -> str:
     """CTEs for the sessionized transactional fold (valid data-segment
-    batches + their control messages; see aggregates.txn_groups)."""
+    batches + their control messages; see aggregates._txn_groups)."""
     return klog_base_cte(fx) + """,
 dbatches AS (
   SELECT * FROM batches WHERE segment_type = 'data'
@@ -2222,26 +2222,11 @@ WHERE r.rn = 1 AND COALESCE(contam.n_test_shingles, 0) < 3
 
 
 def q_file_health(spark, sf_dir):
-    """Per-dump-file health report — the fleet dashboard an operator runs
-    before anything else: line/batch/corrupt counts, exact corrupt rate
-    and offset-gap count per segment file. Composes the routed classes
-    with the gap detection; the oracle recomputes both from the text CTEs."""
-    from .operators.aggregates import offset_gaps
+    """Per-dump-file health report (aggregates.file_health); the oracle
+    recomputes the counts and gaps from the text CTEs."""
+    from .operators.aggregates import file_health
 
-    parsed = load_parsed(spark, sf_dir)
-    base = parsed.groupBy("file", "segment_type").agg(
-        F.count("*").cast("long").alias("n_lines"),
-        F.sum((F.col("record_class") == "batch").cast("int")).cast("long").alias("n_batches"),
-        F.sum((F.col("record_class") == "corrupt").cast("int")).cast("long").alias("n_corrupt"),
-    )
-    gaps = offset_gaps(load_parsed_raw(spark, sf_dir)).groupBy("file").agg(
-        F.count("*").cast("long").alias("n_offset_gaps")
-    )
-    return base.join(gaps, "file", "left").select(
-        "file", "segment_type", "n_lines", "n_batches", "n_corrupt",
-        (F.col("n_corrupt").cast("double") / F.col("n_lines")).alias("corrupt_rate"),
-        F.coalesce("n_offset_gaps", F.lit(0)).cast("long").alias("n_offset_gaps"),
-    )
+    return file_health(load_parsed_raw(spark, sf_dir), load_parsed(spark, sf_dir))
 
 
 SQL_FILE_HEALTH = f"""

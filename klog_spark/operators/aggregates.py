@@ -31,10 +31,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _stream_window_cols():
-    return [F.col("file"), F.col("line_no")]
-
-
 def _countable_batch():
     """A data-segment batch that survives validity routing: CRC-valid and
     not a sessionless transactional batch (reference-fatal,
@@ -77,29 +73,6 @@ def attach_parent_batch(parsed: DataFrame) -> DataFrame:
     return parsed.withColumn("parent", parent)
 
 
-def _txn_base(parsed: DataFrame) -> DataFrame:
-    """ONE windowed pass feeding every transactional aggregate.
-
-    Scale shape: the parse output is filtered to batch-header + control
-    lines only (the other ~2/3 of lines never enter the shuffle), then a
-    single Exchange on `file` serves THREE window expressions (parent
-    cursor, previous-valid-batch last_offset for gap detection) — branches
-    downstream reuse that exchange, so the Arrow parse runs once.
-    """
-    rows = parsed.filter(
-        (F.col("segment_type") == "data") & F.col("record_class").isin("batch", "control_msg")
-    )
-    rows = attach_parent_batch(rows)
-    w_prev = Window.partitionBy("file").orderBy("line_no").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    prev_valid_last = F.last(
-        F.when((F.col("record_class") == "batch") & _countable_batch(), F.col("last_offset")),
-        ignorenulls=True,
-    ).over(w_prev)
-    return rows.withColumn("prev_last_offset", prev_valid_last)
-
-
 def _batch_selected(prefix: str, pid, producer_epoch, leader_epoch):
     """BatchPredicate conjunction (segment/cli/BatchPredicate.java:29-62)."""
     p = lambda c: F.col(prefix + c)  # noqa: E731
@@ -113,136 +86,114 @@ def _batch_selected(prefix: str, pid, producer_epoch, leader_epoch):
     return cond
 
 
-def txn_events(parsed: DataFrame, pid: int | None = None, producer_epoch: int | None = None,
-               leader_epoch: int | None = None, base: DataFrame | None = None) -> DataFrame:
-    """The per-session event stream feeding the transactional fold.
+def with_previous_batch(batches: DataFrame, **prev: str) -> DataFrame:
+    """Add ``<alias> = lag(<column>)`` over the previous row of the same dump
+    file in line order — the "previous batch" of the per-file checks. Pass
+    batch rows only: the sort then never touches record lines."""
+    w = Window.partitionBy("file").orderBy("line_no")
+    return batches.withColumns({alias: F.lag(c).over(w) for alias, c in prev.items()})
 
-    One row per *valid, selected* transactional data batch (opens/extends a
-    txn) or control message attributed to its enclosing batch (klog's
-    currentBatch cursor, TransactionalInfoCollector.java:61).
+
+def _is_gap():
+    """W8: a batch whose base offset does not follow the previous countable
+    batch's last offset (``prev_last_offset``)."""
+    return F.col("prev_last_offset").isNotNull() & (
+        F.col("base_offset") != F.col("prev_last_offset") + 1
+    )
+
+
+def _txn_groups(parsed: DataFrame, count_gaps: bool = False, pid: int | None = None,
+                producer_epoch: int | None = None, leader_epoch: int | None = None) -> DataFrame:
+    """The transactional fold (TransactionalInfoCollector.java:56-113): one
+    row per (session, txn group); group id = #controls strictly before.
+
+    Events are valid, selected transactional data batches (open/extend a
+    txn) and control messages attributed to their enclosing batch (klog's
+    currentBatch cursor, collector :61). Only batch-header and control lines
+    of data segments enter the per-file window that attaches the cursor.
+
+    ``count_gaps`` (txn_stats only) also keeps offset-gap batches — the
+    previous-countable-batch lookup shares the cursor's window — and adds
+    ``n_gaps``. Gap rows that are not events get a per-line ``_spread`` key
+    so the ``producer_id = -1`` bulk never forms a hot session partition;
+    ``_spread`` is both a window partition column and a group key, so the
+    rollup reuses the window's Exchange.
     """
-    rows = base if base is not None else _txn_base(parsed)
+    rows = attach_parent_batch(parsed.filter(
+        (F.col("segment_type") == "data") & F.col("record_class").isin("batch", "control_msg")
+    ))
     is_b = F.col("record_class") == "batch"
     # a transactional data batch without a real session (pid/epoch == -1) is
     # reference-fatal (SegmentDumpReader.checkBatch) — never an event, though
     # it remains a currentBatch cursor target like any other batch line
-    data_keep = (
+    is_data = (
         is_b & F.col("is_valid") & F.col("is_transactional") & ~F.col("is_control")
         & (F.col("producer_id") != -1) & (F.col("producer_epoch") != -1)
         & _batch_selected("", pid, producer_epoch, leader_epoch)
     )
-    ctl_keep = (
+    is_ctl = (
         ~is_b & F.col("parent").isNotNull() & F.col("parent.is_valid")
         & _batch_selected("parent.", pid, producer_epoch, leader_epoch)
     )
-    return rows.filter(data_keep | ctl_keep).select(
+    keep, session, extra = is_data | is_ctl, ["producer_id", "producer_epoch"], []
+    if count_gaps:
+        prev_last = F.last(
+            F.when(is_b & _countable_batch(), F.col("last_offset")), ignorenulls=True,
+        ).over(Window.partitionBy("file").orderBy("line_no").rowsBetween(Window.unboundedPreceding, -1))
+        rows = rows.withColumn("prev_last_offset", prev_last)
+        is_gap = is_b & _countable_batch() & _is_gap()
+        extra = [is_gap.cast("int").alias("is_gap"),
+                 F.when(keep, F.lit(-1)).otherwise(F.col("line_no")).alias("_spread")]
+        keep = keep | is_gap
+        session.append("_spread")
+    ev = rows.filter(keep).select(
         F.when(is_b, F.col("producer_id")).otherwise(F.col("parent.producer_id")).alias("producer_id"),
         F.when(is_b, F.col("producer_epoch")).otherwise(F.col("parent.producer_epoch")).alias("producer_epoch"),
         "file", "line_no",
         # duration uses the enclosing BATCH CreateTime on both sides
         F.when(is_b, F.col("create_time_ms")).otherwise(F.col("parent.create_time_ms")).alias("create_time_ms"),
         F.when(is_b, F.col("doc_id")).otherwise(F.col("parent.doc_id")).alias("doc_id"),
-        (~is_b).alias("is_ctl"),
-        F.col("commit"),
+        is_data.alias("is_data"), is_ctl.alias("is_ctl"), F.col("commit"), *extra,
     )
-
-
-def txn_groups(parsed: DataFrame, base: DataFrame | None = None, **filters) -> DataFrame:
-    """Per-(session, txn-group) rollup. Group id = #controls strictly before."""
-    ev = txn_events(parsed, base=base, **filters)
-    w = Window.partitionBy("producer_id", "producer_epoch").orderBy(*_stream_window_cols())
+    w = Window.partitionBy(*session).orderBy("file", "line_no")
     grp = F.coalesce(
-        F.sum(F.when(F.col("is_ctl"), 1).otherwise(0)).over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        F.sum(F.col("is_ctl").cast("int")).over(w.rowsBetween(Window.unboundedPreceding, -1)),
         F.lit(0),
     )
-    ev = ev.withColumn("txn_grp", grp)
-    order_key = F.struct(F.col("file"), F.col("line_no"))
-    return ev.groupBy("producer_id", "producer_epoch", "txn_grp").agg(
-        F.sum(F.when(~F.col("is_ctl"), 1).otherwise(0)).alias("n_data_batches"),
+    at = (F.struct(F.col("file"), F.col("line_no")).alias("k"), F.col("create_time_ms").alias("ct"),
+          F.col("doc_id").alias("doc_id"))
+    return ev.withColumn("txn_grp", grp).groupBy(*session, "txn_grp").agg(
+        F.sum(F.col("is_data").cast("int")).alias("n_data_batches"),
         F.max(F.col("is_ctl")).alias("has_control"),
-        F.min(F.when(~F.col("is_ctl"), F.struct(order_key.alias("k"), F.col("create_time_ms").alias("ct"),
-                                                F.col("doc_id").alias("doc_id")))).alias("first_data"),
-        F.max(F.when(F.col("is_ctl"), F.struct(order_key.alias("k"), F.col("create_time_ms").alias("ct"),
-                                               F.col("doc_id").alias("doc_id"),
-                                               F.col("commit").alias("commit")))).alias("closing_ctl"),
-        F.sum(F.when(F.col("is_ctl") & F.col("commit"), 1).otherwise(0)).alias("n_commit"),
-        F.sum(F.when(F.col("is_ctl") & ~F.col("commit"), 1).otherwise(0)).alias("n_abort"),
+        F.min(F.when(F.col("is_data"), F.struct(*at))).alias("first_data"),
+        F.max(F.when(F.col("is_ctl"), F.struct(*at, F.col("commit").alias("commit")))).alias("closing_ctl"),
+        F.sum((F.col("is_ctl") & F.col("commit")).cast("int")).alias("n_commit"),
+        F.sum((F.col("is_ctl") & ~F.col("commit")).cast("int")).alias("n_abort"),
+        *([F.sum("is_gap").alias("n_gaps")] if count_gaps else []),
     )
+
+
+def _empty():
+    """A group closed by a control with no data (EmptyTransaction.java:24-35)."""
+    return F.col("has_control") & (F.col("n_data_batches") == 0)
+
+
+def _open():
+    """A trailing group with data but no closing control (collector
+    finisher :109-113). Gap-only groups carry neither."""
+    return ~F.col("has_control") & (F.col("n_data_batches") > 0)
 
 
 def txn_stats(parsed: DataFrame, **filters) -> DataFrame:
     """Single-row TransactionalInfo summary (TxnStat output,
-    segment/cli/TxnStat.java:94-103) + offset-gap count (W8).
-
-    ONE plan, ONE parse: transactional events and gap rows flow through the
-    same filter -> window -> group rollup -> final aggregate, so the Arrow
-    parse and the per-file window Exchange each run exactly once (the round-1
-    shape re-executed the parse per branch and cross-joined two singleton
-    aggregates). Gap rows that are not transactional events bypass the
-    session window via a spread partition key (they only contribute a
-    counter), so the ``producer_id = -1`` bulk never forms a hot window
-    partition.
-    """
-    pid = filters.get("pid")
-    producer_epoch = filters.get("producer_epoch")
-    leader_epoch = filters.get("leader_epoch")
-    base = _txn_base(parsed)
-    is_b = F.col("record_class") == "batch"
-    # see txn_events: sessionless transactional batches are reference-fatal,
-    # cursor-visible but never events
-    data_keep = (
-        is_b & F.col("is_valid") & F.col("is_transactional") & ~F.col("is_control")
-        & (F.col("producer_id") != -1) & (F.col("producer_epoch") != -1)
-        & _batch_selected("", pid, producer_epoch, leader_epoch)
-    )
-    ctl_keep = (
-        ~is_b & F.col("parent").isNotNull() & F.col("parent.is_valid")
-        & _batch_selected("parent.", pid, producer_epoch, leader_epoch)
-    )
-    is_gap = (
-        is_b & _countable_batch() & F.col("prev_last_offset").isNotNull()
-        & (F.col("base_offset") != F.col("prev_last_offset") + 1)
-    )
-    ev = base.filter(data_keep | ctl_keep | is_gap).select(
-        F.when(is_b, F.col("producer_id")).otherwise(F.col("parent.producer_id")).alias("producer_id"),
-        F.when(is_b, F.col("producer_epoch")).otherwise(F.col("parent.producer_epoch")).alias("producer_epoch"),
-        "file", "line_no",
-        F.when(is_b, F.col("create_time_ms")).otherwise(F.col("parent.create_time_ms")).alias("create_time_ms"),
-        ctl_keep.alias("is_ctl"),
-        (data_keep | ctl_keep).alias("is_event"),
-        is_gap.cast("int").alias("is_gap"),
-        F.col("commit"),
-    )
-    # Session window over transactional events only: non-event (gap-counting)
-    # rows get a per-line partition key so they never enter — or skew — the
-    # (producer_id, producer_epoch) sort.
-    w = Window.partitionBy(
-        "producer_id", "producer_epoch",
-        F.when(F.col("is_event"), F.lit(-1)).otherwise(F.col("line_no")),
-    ).orderBy(*_stream_window_cols())
-    cum_ctl = F.coalesce(
-        F.sum(F.when(F.col("is_ctl"), 1).otherwise(0)).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-        F.lit(0),
-    )
-    ev = ev.withColumn("txn_grp", F.when(F.col("is_event"), cum_ctl).otherwise(F.lit(-1)))
-    order_key = F.struct(F.col("file"), F.col("line_no"))
-    is_data_ev = F.col("is_event") & ~F.col("is_ctl")
-    groups = ev.groupBy("producer_id", "producer_epoch", "txn_grp").agg(
-        F.sum(F.when(is_data_ev, 1).otherwise(0)).alias("n_data_batches"),
-        F.sum(F.when(F.col("is_event"), 1).otherwise(0)).alias("n_events"),
-        F.max(F.col("is_ctl")).alias("has_control"),
-        F.min(F.when(is_data_ev, F.struct(order_key.alias("k"), F.col("create_time_ms").alias("ct")))).alias("first_data"),
-        F.max(F.when(F.col("is_ctl"), F.struct(order_key.alias("k"), F.col("create_time_ms").alias("ct")))).alias("closing_ctl"),
-        F.sum(F.when(F.col("is_ctl") & F.col("commit"), 1).otherwise(0)).alias("n_commit"),
-        F.sum(F.when(F.col("is_ctl") & ~F.col("commit"), 1).otherwise(0)).alias("n_abort"),
-        F.sum("is_gap").alias("n_gaps"),
-    )
+    segment/cli/TxnStat.java:94-103) + offset-gap count (W8): the final
+    aggregate over the fold, gap rows included, so the Arrow parse and each
+    Exchange run exactly once."""
+    g = _txn_groups(parsed, count_gaps=True, **filters)
     closed = F.col("has_control") & (F.col("n_data_batches") > 0)
-    empty = F.col("has_control") & (F.col("n_data_batches") == 0)
-    opened = ~F.col("has_control") & (F.col("n_events") > 0)
     dur = (F.col("closing_ctl.ct") - F.col("first_data.ct")).cast("int")
     zero = F.lit(0).cast("long")
-    return groups.agg(
+    return g.agg(
         # count-like outputs are 0 on an empty stream, never NULL (the
         # reference prints zeros; min/max/avg stay NULL when nothing closed)
         F.coalesce(F.sum("n_commit"), zero).alias("num_committed"),
@@ -257,8 +208,8 @@ def txn_stats(parsed: DataFrame, **filters) -> DataFrame:
         F.min(F.when(closed, dur)).alias("txn_dur_min"),
         F.max(F.when(closed, dur)).alias("txn_dur_max"),
         F.avg(F.when(closed, dur)).alias("txn_dur_avg"),
-        F.coalesce(F.sum(F.when(empty, 1).otherwise(0)), zero).alias("num_empty_txn"),
-        F.coalesce(F.sum(F.when(opened, 1).otherwise(0)), zero).alias("num_open_txn"),
+        F.coalesce(F.sum(F.when(_empty(), 1).otherwise(0)), zero).alias("num_empty_txn"),
+        F.coalesce(F.sum(F.when(_open(), 1).otherwise(0)), zero).alias("num_open_txn"),
         F.coalesce(F.sum("n_gaps"), zero).alias("num_offset_gaps"),
     )
 
@@ -266,8 +217,7 @@ def txn_stats(parsed: DataFrame, **filters) -> DataFrame:
 def open_txns(parsed: DataFrame, **filters) -> DataFrame:
     """Sessions whose trailing group has no closing control
     (collector finisher :109-113; printed TxnStat.java:101-103)."""
-    g = txn_groups(parsed, **filters)
-    return g.filter(~F.col("has_control")).select(
+    return _txn_groups(parsed, **filters).filter(_open()).select(
         "producer_id", "producer_epoch",
         F.col("first_data.doc_id").alias("first_batch_doc_id"),
         F.col("n_data_batches").alias("n_data_batches"),
@@ -277,8 +227,7 @@ def open_txns(parsed: DataFrame, **filters) -> DataFrame:
 def empty_txns(parsed: DataFrame, **filters) -> DataFrame:
     """Control batches that closed a transaction with no data
     (EmptyTransaction.java:24-35)."""
-    g = txn_groups(parsed, **filters)
-    return g.filter(F.col("has_control") & (F.col("n_data_batches") == 0)).select(
+    return _txn_groups(parsed, **filters).filter(_empty()).select(
         "producer_id", "producer_epoch",
         F.col("closing_ctl.doc_id").alias("closing_batch_doc_id"),
         F.col("closing_ctl.commit").alias("commit"),
@@ -291,12 +240,25 @@ def offset_gaps(parsed: DataFrame) -> DataFrame:
     b = parsed.filter(
         (F.col("segment_type") == "data") & (F.col("record_class") == "batch") & _countable_batch()
     )
-    w = Window.partitionBy("file").orderBy("line_no")
-    prev_last = F.lag("last_offset").over(w)
-    return (
-        b.withColumn("prev_last_offset", prev_last)
-        .filter(F.col("prev_last_offset").isNotNull() & (F.col("base_offset") != F.col("prev_last_offset") + 1))
-        .select("doc_id", "file", "line_no", "topic", "partition", "base_offset", "prev_last_offset")
+    return with_previous_batch(b, prev_last_offset="last_offset").filter(_is_gap()).select(
+        "doc_id", "file", "line_no", "topic", "partition", "base_offset", "prev_last_offset"
+    )
+
+
+def file_health(raw: DataFrame, routed: DataFrame) -> DataFrame:
+    """Per-dump-file health — the fleet dashboard an operator runs before
+    anything else: line/batch/corrupt counts over the routed (sink) view,
+    the exact corrupt rate, and the offset-gap count over the raw view."""
+    base = routed.groupBy("file", "segment_type").agg(
+        F.count("*").cast("long").alias("n_lines"),
+        F.sum((F.col("record_class") == "batch").cast("int")).cast("long").alias("n_batches"),
+        F.sum((F.col("record_class") == "corrupt").cast("int")).cast("long").alias("n_corrupt"),
+    )
+    gaps = offset_gaps(raw).groupBy("file").agg(F.count("*").cast("long").alias("n_offset_gaps"))
+    return base.join(gaps, "file", "left").select(
+        "file", "segment_type", "n_lines", "n_batches", "n_corrupt",
+        (F.col("n_corrupt").cast("double") / F.col("n_lines")).alias("corrupt_rate"),
+        F.coalesce("n_offset_gaps", F.lit(0)).cast("long").alias("n_offset_gaps"),
     )
 
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .aggregates import MSG_CLASSES, attach_parent_batch, with_previous_batch
+
 # validPrevious transition table (TransactionStateChange.java:82-127):
 # state -> set of legal predecessors
 VALID_PREVIOUS: dict[str, tuple[str, ...]] = {
@@ -33,8 +35,7 @@ def _valid_batches(parsed: DataFrame) -> DataFrame:
 def position_monotonic_violations(parsed: DataFrame) -> DataFrame:
     """W2: batch `position` must be strictly increasing within a dump file
     (AssertBatchPositionMonotonic's intent)."""
-    w = Window.partitionBy("file").orderBy("line_no")
-    b = _valid_batches(parsed).withColumn("prev_position", F.lag("position").over(w))
+    b = with_previous_batch(_valid_batches(parsed), prev_position="position")
     return b.filter(
         F.col("prev_position").isNotNull() & (F.col("position") <= F.col("prev_position"))
     ).select("doc_id", "file", "line_no", "position", "prev_position")
@@ -44,8 +45,7 @@ def leader_epoch_monotonic_violations(parsed: DataFrame) -> DataFrame:
     """W3: partitionLeaderEpoch non-decreasing within a dump file
     (AssertLeaderEpochMonotonic's intent; the reference's `>=` would reject
     equal epochs — the realistic check is non-decreasing)."""
-    w = Window.partitionBy("file").orderBy("line_no")
-    b = _valid_batches(parsed).withColumn("prev_le", F.lag("partition_leader_epoch").over(w))
+    b = with_previous_batch(_valid_batches(parsed), prev_le="partition_leader_epoch")
     return b.filter(
         F.col("prev_le").isNotNull() & (F.col("partition_leader_epoch") < F.col("prev_le"))
     ).select("doc_id", "file", "line_no", "partition_leader_epoch", "prev_le")
@@ -74,10 +74,6 @@ def batch_message_count_check(parsed: DataFrame) -> DataFrame:
     number of record lines grouped under it (the reference's stateful
     `expect` counter, SegmentDumpReader.java:182-203, which throws on
     mismatch). Flags batches whose message-line count differs."""
-    from .aggregates import attach_parent_batch
-
-    from .aggregates import MSG_CLASSES
-
     msg_classes = MSG_CLASSES
     with_parent = attach_parent_batch(
         parsed.filter(F.col("record_class").isin("batch", *msg_classes))
@@ -106,20 +102,16 @@ def batch_message_count_check(parsed: DataFrame) -> DataFrame:
 
 
 def header_consistency_check(parsed: DataFrame) -> DataFrame:
-    """S2/S3: each dump file's 'Dumping <path>' line must exist and the
-    2nd-line starting offset must equal the offset encoded in the segment
-    file name (SegmentDumpReader.java:363-396). Returns offending files."""
-    hdr2 = parsed.filter((F.col("record_class") == "header") & (F.col("line_no") == 2))
-    # starting offset is re-derivable from source: <base>.log
-    name_off = F.regexp_extract(F.col("source"), r"/([0-9]+)\.(?:log|snapshot)$", 1).cast("long")
+    """S2: each dump file must carry its 'Dumping <path>' first line
+    (SegmentDumpReader.java:363-396). Returns offending files. The S3
+    starting-offset cross-check is :func:`starting_offset_mismatches`."""
     hdr1_files = parsed.filter(
         (F.col("record_class") == "header") & (F.col("line_no") == 1)
     ).select("file").distinct()
     files = parsed.select("file").distinct()
-    missing_hdr1 = files.join(hdr1_files, "file", "left_anti").select(
+    return files.join(hdr1_files, "file", "left_anti").select(
         "file", F.lit("missing_dumping_line").alias("issue")
     )
-    return missing_hdr1
 
 
 def starting_offset_mismatches(parsed: DataFrame) -> DataFrame:

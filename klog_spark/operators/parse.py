@@ -527,42 +527,6 @@ def _parse_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
         cols.set_bool("commit", good, (ge["end_txn_marker"] == "COMMIT").to_numpy(dtype=bool))
         cols.set_int("coordinator_epoch", good, ge["coordinator_epoch"])
 
-    if is_txn_msg.any():
-        good, ge = extract(is_txn_msg, "txn", "offset")
-        reason[is_txn_msg & ~good] = "txn_record_regex_mismatch"
-        base_msg_fields(good, ge)
-        cols.set_str("transactional_id", good, ge["transactional_id"].to_numpy(dtype=object))
-        payload = ge["payload"]
-        is_del = (payload == "<DELETE>").to_numpy(dtype=bool)
-        del_mask = good.copy()
-        del_mask[good] = is_del
-        chg_mask = good.copy()
-        chg_mask[good] = ~is_del
-        if (~is_del).any():
-            pext = payload[~is_del].str.extract(_ANCHORED["payload"])
-            pok = pext["state"].notna().to_numpy(dtype=bool)
-            chg_ok = chg_mask.copy()
-            chg_ok[chg_mask] = pok
-            chg_bad = chg_mask & ~chg_ok
-            pe = pext[pok]
-        else:
-            chg_ok = np.zeros(n, dtype=bool)
-            chg_bad = np.zeros(n, dtype=bool)
-            pe = None
-        cls[del_mask] = "txn_deletion"
-        cls[chg_ok] = "txn_state"
-        cls[chg_bad] = "corrupt"
-        reason[chg_bad] = "txn_payload_mismatch"
-        cols.set_bool("is_deletion", del_mask, np.ones(int(del_mask.sum()), dtype=bool))
-        if pe is not None and len(pe):
-            cols.set_bool("is_deletion", chg_ok, np.zeros(int(chg_ok.sum()), dtype=bool))
-            for c in ("txn_producer_id", "txn_producer_epoch", "txn_last_update_ms", "txn_timeout_ms"):
-                cols.set_int(c, chg_ok, pe[c])
-            cols.set_str("state", chg_ok, pe["state"].to_numpy(dtype=object))
-            cols.set_str("partitions", chg_ok, pe["partitions"].to_numpy(dtype=object))
-
-    # --- __consumer_offsets records (beyond the reference: Segment.java:28
-    # leaves these a TODO; grammar = kafka-dump-log --offsets-decoder) ------
     def split_payload(good: np.ndarray, payload: pd.Series, pat_key: str, required: str):
         """(deletion_mask, payload_ok_mask, payload_bad_mask, extracted)."""
         is_del = (payload == "<DELETE>").to_numpy(dtype=bool)
@@ -578,6 +542,26 @@ def _parse_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
             return del_mask, chg_ok, chg_mask & ~chg_ok, pext[pok]
         return del_mask, np.zeros(n, dtype=bool), np.zeros(n, dtype=bool), None
 
+    if is_txn_msg.any():
+        good, ge = extract(is_txn_msg, "txn", "offset")
+        reason[is_txn_msg & ~good] = "txn_record_regex_mismatch"
+        base_msg_fields(good, ge)
+        cols.set_str("transactional_id", good, ge["transactional_id"].to_numpy(dtype=object))
+        del_mask, chg_ok, chg_bad, pe = split_payload(good, ge["payload"], "payload", "state")
+        cls[del_mask] = "txn_deletion"
+        cls[chg_ok] = "txn_state"
+        cls[chg_bad] = "corrupt"
+        reason[chg_bad] = "txn_payload_mismatch"
+        cols.set_bool("is_deletion", del_mask, np.ones(int(del_mask.sum()), dtype=bool))
+        if pe is not None and len(pe):
+            cols.set_bool("is_deletion", chg_ok, np.zeros(int(chg_ok.sum()), dtype=bool))
+            for c in ("txn_producer_id", "txn_producer_epoch", "txn_last_update_ms", "txn_timeout_ms"):
+                cols.set_int(c, chg_ok, pe[c])
+            cols.set_str("state", chg_ok, pe["state"].to_numpy(dtype=object))
+            cols.set_str("partitions", chg_ok, pe["partitions"].to_numpy(dtype=object))
+
+    # --- __consumer_offsets records (beyond the reference: Segment.java:28
+    # leaves these a TODO; grammar = kafka-dump-log --offsets-decoder) ------
     if is_oc_msg.any():
         good, ge = extract(is_oc_msg, "oc", "offset")
         reason[is_oc_msg & ~good] = "offset_commit_regex_mismatch"

@@ -10,11 +10,8 @@ runs exactly once, and downstream readers get partition pruning for free
 (``WHERE record_class = 'batch'`` never touches other sinks' files).
 
 Validity routing folded in before the write (the reference *throws*; we
-re-route):
-  * CRC-invalid batches (AssertBatchesValid.java:27-37)          -> corrupt
-  * txn-state segment invariant violations
-    (SegmentDumpReader.checkBatch:322-338, W5/W6)                -> corrupt
-  * snapshot pid/epoch == -1 (AssertTransactionalProducer:25-35) -> corrupt
+re-route to corrupt with a reason): the ``REROUTES`` table below, which
+``routed_as_parsed`` inverts to rebuild the raw view from the staging.
 """
 
 from __future__ import annotations
@@ -49,32 +46,39 @@ SINK_PROJECTIONS = {
 }
 
 
+#: Validity routing, one entry per reason: the class a row is routed away
+#: from (to ``corrupt``) and the condition on that class's rows. Order is
+#: precedence. ``apply_validity_routing`` tags rows from this table and
+#: ``routed_as_parsed`` inverts all of it.
+REROUTES = {
+    # CRC-invalid batches (AssertBatchesValid.java:27-37)
+    "crc_invalid": ("batch", lambda: ~F.col("is_valid")),
+    # __transaction_state batches must have pid == epoch == -1 and be
+    # non-transactional (SegmentDumpReader.checkBatch:322-338 +
+    # AssertBatchesTransactional, W5/W6)
+    "txn_state_segment_invariant": (
+        "batch",
+        lambda: (F.col("segment_type") == "txn_state")
+        & ((F.col("producer_id") != -1) | (F.col("producer_epoch") != -1) | F.col("is_transactional")),
+    ),
+    # DATA transactional batches must carry a real session (checkBatch)
+    "transactional_batch_without_session": (
+        "batch",
+        lambda: (F.col("segment_type") == "data") & F.col("is_transactional")
+        & ((F.col("producer_id") == -1) | (F.col("producer_epoch") == -1)),
+    ),
+    # snapshot pid/epoch == -1 (AssertTransactionalProducer:25-35)
+    "non_transactional_producer_state": (
+        "producer_state",
+        lambda: (F.col("producer_id") == -1) & (F.col("producer_epoch") == -1),
+    ),
+}
+
+
 def apply_validity_routing(parsed: DataFrame) -> DataFrame:
     """Re-route reference-fatal rows to the corrupt class with a reason."""
-    is_batch = F.col("record_class") == "batch"
-    txn_seg = F.col("segment_type") == "txn_state"
-    data_seg = F.col("segment_type") == "data"
-
-    crc_invalid = is_batch & ~F.col("is_valid")
-    # __transaction_state batches must have pid == epoch == -1 and be
-    # non-transactional (checkBatch + AssertBatchesTransactional)
-    txn_seg_invariant = is_batch & txn_seg & (
-        (F.col("producer_id") != -1) | (F.col("producer_epoch") != -1) | F.col("is_transactional")
-    )
-    # DATA transactional batches must carry a real session (checkBatch)
-    data_invariant = is_batch & data_seg & F.col("is_transactional") & (
-        (F.col("producer_id") == -1) | (F.col("producer_epoch") == -1)
-    )
-    snap_invariant = (F.col("record_class") == "producer_state") & (
-        (F.col("producer_id") == -1) & (F.col("producer_epoch") == -1)
-    )
-
-    reason = (
-        F.when(crc_invalid, F.lit("crc_invalid"))
-        .when(txn_seg_invariant, F.lit("txn_state_segment_invariant"))
-        .when(data_invariant, F.lit("transactional_batch_without_session"))
-        .when(snap_invariant, F.lit("non_transactional_producer_state"))
-    )
+    reason = F.coalesce(*[F.when((F.col("record_class") == cls) & cond(), F.lit(name))
+                          for name, (cls, cond) in REROUTES.items()])
     # materialize the reason before record_class is overwritten — both
     # replacement columns must see the ORIGINAL record_class
     tagged = parsed.withColumn("_route_reason", reason)
@@ -214,25 +218,30 @@ def sink_counts(parsed: DataFrame) -> DataFrame:
 
 
 def routed_as_parsed(routed: DataFrame, classes: list[str] | None = None) -> DataFrame:
-    """Reconstruct the pre-routing view the transactional aggregates need
-    from a routed staging table.
+    """Reconstruct the pre-routing view the transactional aggregates and
+    checks need from a routed staging table.
 
-    Validity routing moves CRC-invalid batches to the corrupt class but
-    keeps their parsed fields; klog's currentBatch cursor must still see
-    them (their control messages are then dropped, not re-attached), so
-    restore their `batch` class with ``is_valid = false``. This is what
-    makes "parse once -> query the staging" exact, not approximate.
+    Validity routing moves rows to the corrupt class but keeps their parsed
+    fields. Every reason in ``REROUTES`` is inverted here: the row gets its
+    original class back and a null ``corrupt_reason``. klog's currentBatch
+    cursor must see rerouted batches (their control messages are then
+    dropped, not re-attached to an earlier batch), so this is what makes
+    "parse once -> query the staging" exact, not approximate.
 
-    ``classes``: the record classes the caller will consume. The rewrite
-    below makes ``record_class`` a COMPUTED column, so a downstream filter
-    on it can no longer prune staging partitions — pass the class list here
-    and the filter lands on the original partition column before the
-    rewrite ('corrupt' is always added: restored batch rows live there).
+    ``classes``: the raw record classes the caller will consume. The rewrite
+    makes ``record_class`` a COMPUTED column, so a downstream filter on it
+    can no longer prune staging partitions — pass the class list here and
+    the filter lands on the stored partition column before the rewrite
+    ('corrupt' is read only when a requested class can be restored from it).
     """
+    rerouted = (F.col("record_class") == "corrupt") & F.col("corrupt_reason").isin(*REROUTES)
+    origin = F.create_map(*[F.lit(x) for r, (cls, _) in REROUTES.items() for x in (r, cls)])
+    raw_class = F.when(rerouted, origin[F.col("corrupt_reason")]).otherwise(F.col("record_class"))
     if classes is not None:
-        routed = routed.filter(F.col("record_class").isin(*sorted({*classes, "corrupt"})))
-    crc_invalid = (F.col("record_class") == "corrupt") & (F.col("corrupt_reason") == "crc_invalid")
-    return routed.withColumn(
-        "record_class",
-        F.when(crc_invalid, F.lit("batch")).otherwise(F.col("record_class")),
-    )
+        restorable = any(cls in classes for cls, _ in REROUTES.values())
+        stored = sorted({*classes, "corrupt"} if restorable else set(classes))
+        routed = routed.filter(F.col("record_class").isin(*stored) & raw_class.isin(*classes))
+    return routed.withColumns({
+        "record_class": raw_class,
+        "corrupt_reason": F.when(~rerouted, F.col("corrupt_reason")),
+    })

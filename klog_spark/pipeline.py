@@ -9,7 +9,7 @@ a query over the routed result.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from .checkpoint import Checkpoint, run_incremental
 from .operators import aggregates, checks, enrich, filters
 from .operators.parse import parse_sequences
-from .operators.route import apply_validity_routing, sink_counts
+from .operators.route import apply_validity_routing, routed_as_parsed, sink_counts
 
 
 @dataclass
@@ -27,11 +27,15 @@ class Pipeline:
     a pre-existing routed table) every query reads the partitioned staging
     parquet — partition-pruned per sink class, zero re-parses — instead of
     re-running the Arrow parse per query. At 100 TB the parse is the
-    dominant cost; the product API must pay it once."""
+    dominant cost; the product API must pay it once. The staging table is
+    listed once, on first use after :meth:`stage` or a ``staging_dir``
+    change; the sink view and every raw view derive from that one
+    DataFrame."""
 
     spark: SparkSession
     fixture_dir: str
     staging_dir: str | None = None
+    _staged: tuple[str, DataFrame] | None = field(default=None, init=False, repr=False)
 
     def input_df(self) -> DataFrame:
         return self.spark.read.parquet(str(Path(self.fixture_dir) / "sequences.parquet"))
@@ -42,8 +46,13 @@ class Pipeline:
         from .operators.route import write_routed
 
         write_routed(apply_validity_routing(parse_sequences(self.input_df())), out_dir)
-        self.staging_dir = out_dir
+        self.staging_dir, self._staged = out_dir, None
         return self
+
+    def _staged_df(self) -> DataFrame:
+        if self._staged is None or self._staged[0] != self.staging_dir:
+            self._staged = (self.staging_dir, self.spark.read.parquet(self.staging_dir))
+        return self._staged[1]
 
     def topic_meta(self) -> DataFrame:
         return self.spark.read.parquet(str(Path(self.fixture_dir) / "topic_meta.parquet"))
@@ -61,17 +70,20 @@ class Pipeline:
         re-attached to an earlier valid batch).
         """
         if self.staging_dir:
-            return self.spark.read.parquet(self.staging_dir)
+            return self._staged_df()
         return apply_validity_routing(parse_sequences(self.input_df()))
 
     def parsed_raw(self) -> DataFrame:
         """Pre-routing parse for the transactional aggregates (the view
         TransactionalInfoCollector.java:61 folds over). From a staging table
         this is reconstructed exactly by ``routed_as_parsed``."""
-        if self.staging_dir:
-            from .operators.route import routed_as_parsed
+        return self._raw()
 
-            return routed_as_parsed(self.spark.read.parquet(self.staging_dir))
+    def _raw(self, *classes: str) -> DataFrame:
+        """The raw view; from a staging table, pruned to ``classes`` (all
+        classes when none are named)."""
+        if self.staging_dir:
+            return routed_as_parsed(self._staged_df(), list(classes) if classes else None)
         return parse_sequences(self.input_df())
 
     def run_routed(self, out_dir: str) -> dict:
@@ -81,7 +93,7 @@ class Pipeline:
 
     # --- the reference's query surface -------------------------------------
     def txn_stats(self, **flt) -> DataFrame:
-        return aggregates.txn_stats(self.parsed_raw(), **flt)
+        return aggregates.txn_stats(self._raw("batch", "control_msg"), **flt)
 
     def cat_batches(self, **flt) -> DataFrame:
         return filters.cat_batches(self.parsed(), **flt)
@@ -93,7 +105,7 @@ class Pipeline:
         return enrich.abort_commands_for(self.parsed(), pid, producer_epoch)
 
     def open_txn_abort_commands(self, **flt) -> DataFrame:
-        return enrich.open_txn_abort_commands(self.parsed_raw(), **flt)
+        return enrich.open_txn_abort_commands(self._raw("batch", "control_msg", "producer_state"), **flt)
 
     def sink_counts(self) -> DataFrame:
         return sink_counts(self.parsed())
@@ -121,11 +133,12 @@ class Pipeline:
         return enrich.enrich_with_producer_meta(df, self.producer_meta())
 
     def all_checks(self) -> dict[str, DataFrame]:
-        p = self.parsed_raw()
+        batches = self._raw("batch")
         return {
-            "offset_gaps": aggregates.offset_gaps(p),
-            "position_monotonic": checks.position_monotonic_violations(p),
-            "leader_epoch_monotonic": checks.leader_epoch_monotonic_violations(p),
-            "state_machine": checks.state_machine_violations(p),
-            "batch_message_count": checks.batch_message_count_check(p),
+            "offset_gaps": aggregates.offset_gaps(batches),
+            "position_monotonic": checks.position_monotonic_violations(batches),
+            "leader_epoch_monotonic": checks.leader_epoch_monotonic_violations(batches),
+            "state_machine": checks.state_machine_violations(self._raw("txn_state")),
+            "batch_message_count": checks.batch_message_count_check(
+                self._raw("batch", *aggregates.MSG_CLASSES)),
         }

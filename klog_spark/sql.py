@@ -11,7 +11,7 @@ analytic views:
   <p>_txn_stats, <p>_open_txns, <p>_empty_txns, <p>_offset_gaps,
   <p>_batches_per_epoch, <p>_state_machine_violations, <p>_group_offsets,
   <p>_group_offsets_read_committed, <p>_group_lag, <p>_group_metadata_latest,
-  <p>_group_offset_rewinds
+  <p>_group_offset_rewinds, <p>_file_health
 
 Views are DataFrame-backed (createOrReplaceTempView), so every SQL query
 plans through the same operators the API uses — one parse, partition
@@ -82,21 +82,8 @@ def register_views(spark: SparkSession, input_data, prefix: str = "klog") -> lis
             "group_lag": group_offsets.group_lag(routed),
             "group_metadata_latest": group_offsets.latest_group_metadata(routed),
             "group_offset_rewinds": group_offsets.offset_rewinds(routed),
+            "file_health": aggregates.file_health(parsed, routed),
         }
-    )
-    # per-file health dashboard (q_file_health shape over this input)
-    gaps = aggregates.offset_gaps(parsed).groupBy("file").agg(
-        F.count("*").alias("n_offset_gaps")
-    )
-    views["file_health"] = (
-        routed.groupBy("file", "segment_type")
-        .agg(
-            F.count("*").alias("n_lines"),
-            F.sum((F.col("record_class") == "batch").cast("int")).alias("n_batches"),
-            F.sum((F.col("record_class") == "corrupt").cast("int")).alias("n_corrupt"),
-        )
-        .join(gaps, "file", "left")
-        .withColumn("n_offset_gaps", F.coalesce("n_offset_gaps", F.lit(0)))
     )
     names = []
     for view, df in views.items():

@@ -417,6 +417,12 @@ def test_cli_segment_health(spark, dump_dir, capsys):
     assert "h1_file_health" in names
     n = spark.sql("SELECT SUM(n_lines) s FROM h1_file_health").collect()[0]["s"]
     assert n == total_lines
+    # the view reports the CLI's exact corrupt_rate per file
+    view = spark.sql("SELECT file, corrupt_rate FROM h1_file_health").collect()
+    printed = {ln.split("file=")[1].split(" ")[0]: float(ln.split("corrupt_rate=")[1].split(" ")[0])
+               for ln in out}
+    assert {r["file"]: r["corrupt_rate"] for r in view} == printed
+    assert any(rate > 0 for rate in printed.values())
 
 
 def test_cli_corpus_commands(spark, capsys, tmp_path):

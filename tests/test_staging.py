@@ -35,6 +35,113 @@ def test_staging_open_empty_parity(spark, parsed_df, routed_dir):
     assert sorted(map(tuple, empty_txns(parsed_df).collect())) == sorted(map(tuple, empty_txns(rp).collect()))
 
 
+def test_routed_as_parsed_is_exact(spark, parsed_df, routed_dir):
+    """Every validity-routing reason is inverted: the staged raw view holds
+    exactly the direct parse's rows, column for column."""
+    from klog_spark.operators.route import routed_as_parsed
+
+    cols = parsed_df.columns
+    staged = routed_as_parsed(spark.read.parquet(routed_dir)).select(*cols)
+    assert staged.exceptAll(parsed_df).count() == 0
+    assert parsed_df.exceptAll(staged).count() == 0
+    for cls in ("batch", "producer_state", "corrupt"):
+        pruned = routed_as_parsed(spark.read.parquet(routed_dir), classes=[cls]).select(*cols)
+        want = parsed_df.filter(F.col("record_class") == cls)
+        assert pruned.exceptAll(want).count() == 0 and want.exceptAll(pruned).count() == 0, cls
+
+
+BATCH = (
+    "baseOffset: {bo} lastOffset: {bo} count: 1 baseSequence: 0 lastSequence: 0 "
+    "producerId: {pid} producerEpoch: {ep} partitionLeaderEpoch: {le} isTransactional: {txn} "
+    "isControl: false position: {pos} CreateTime: {ct} size: 10 magic: 2 "
+    "compresscodec: none crc: 1 isvalid: true"
+)
+DATA_MSG = "| offset: {o} CreateTime: {ct} keySize: 1 valueSize: 1 sequence: 0 headerKeys: []"
+CTRL_MSG = (
+    "| offset: {o} CreateTime: {ct} keySize: 4 valueSize: 6 sequence: -1 headerKeys: [] "
+    "endTxnMarker: COMMIT coordinatorEpoch: 1"
+)
+TXN_MSG = (
+    "| offset: {o} CreateTime: {ct} keySize: 30 valueSize: 50 sequence: -1 headerKeys: [] "
+    "key: transaction_metadata::transactionalId=app payload: producerId:7,producerEpoch:0,"
+    "state={state},partitions=[t-0],txnLastUpdateTimestamp={ct},txnTimeoutMs=60000"
+)
+
+
+def _batch(bo, pid=7, ep=0, le=1, txn=True, pos=None):
+    return BATCH.format(bo=bo, pid=pid, ep=ep, le=le, txn=str(txn).lower(),
+                        pos=bo * 10 if pos is None else pos, ct=1000 + bo)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+REROUTED_INPUTS = {
+    # a sessionless transactional batch between a pid-7 data batch and a
+    # COMMIT record: the record's currentBatch is the sessionless batch
+    "transactional_batch_without_session": ("t-0", [
+        _batch(0), DATA_MSG.format(o=0, ct=1000),
+        _batch(1, pid=-1, ep=-1), CTRL_MSG.format(o=1, ct=1001),
+    ]),
+    # a __transaction_state batch with a real pid (invariant violation):
+    # its state record is its own message, and its position and leader
+    # epoch take part in the per-file monotonic checks
+    "txn_state_segment_invariant": ("__transaction_state-0", [
+        _batch(0, pid=-1, ep=-1, le=5, txn=False, pos=100), TXN_MSG.format(o=0, ct=1000, state="Ongoing"),
+        _batch(1, pid=7, ep=0, le=3, txn=False, pos=50), TXN_MSG.format(o=1, ct=1001, state="PrepareCommit"),
+        _batch(2, pid=-1, ep=-1, le=5, txn=False, pos=200),
+        TXN_MSG.format(o=2, ct=1002, state="CompleteCommit"),
+    ]),
+}
+
+
+@pytest.mark.parametrize("reason", sorted(REROUTED_INPUTS))
+def test_staged_raw_view_restores_rerouted_batches(spark, tmp_path, reason):
+    """Staged transactional answers and checks equal the direct parse's when
+    validity routing moved a batch out of the batch class."""
+    from klog_spark.operators.aggregates import empty_txns, open_txns
+    from klog_spark.operators.route import routed_as_parsed
+    from klog_spark.pipeline import Pipeline
+    from klog_spark.schemas import INPUT_SCHEMA
+
+    topic, body = REROUTED_INPUTS[reason]
+    src = f"/tmp/kafka-logs/{topic}/00000000000000000000.log"
+    lines = [f"Dumping {src}", "Log starting offset: 0", *body]
+    spark.createDataFrame(
+        [(f"{topic}.log.dump.txt:{i}", [ord(c) for c in ln], len(ln), src) for i, ln in enumerate(lines, 1)],
+        INPUT_SCHEMA,
+    ).write.parquet(str(tmp_path / "sequences.parquet"))
+
+    direct = Pipeline(spark, str(tmp_path))
+    staged = Pipeline(spark, str(tmp_path)).stage(str(tmp_path / "staged"))
+    assert staged.parsed().filter(F.col("corrupt_reason") == reason).count() == 1
+
+    assert _rows(staged.txn_stats()) == _rows(direct.txn_stats())
+    raw = routed_as_parsed(staged.parsed())
+    for q in (open_txns, empty_txns):
+        assert _rows(q(raw)) == _rows(q(direct.parsed_raw())), q.__name__
+    want = direct.all_checks()
+    for name, df in staged.all_checks().items():
+        assert _rows(df) == _rows(want[name]), name
+
+
+def test_staged_pruned_queries_parity(spark, fixture_dir, tmp_path):
+    """The class-pruned staged queries equal the unstaged Pipeline's."""
+    from klog_spark.pipeline import Pipeline
+
+    direct = Pipeline(spark, fixture_dir)
+    staged = Pipeline(spark, fixture_dir).stage(str(tmp_path / "staged"))
+
+    assert _rows(staged.open_txn_abort_commands()) == _rows(direct.open_txn_abort_commands())
+    want = direct.all_checks()
+    got = staged.all_checks()
+    assert set(got) == set(want) == {"offset_gaps", "position_monotonic", "leader_epoch_monotonic",
+                                     "state_machine", "batch_message_count"}
+    for name, df in got.items():
+        assert _rows(df) == _rows(want[name]), name
+
+
 def test_read_sink_projections(spark, routed_dir):
     from klog_spark.operators.route import SINK_PROJECTIONS, read_sink
 
