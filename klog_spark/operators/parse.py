@@ -2,27 +2,36 @@
 
 The Spark-first equivalent of klog's line-at-a-time regex dispatch
 (segment/reader/SegmentDumpReader.java:167-311): one ``mapInArrow`` pass
-per Arrow batch —
+per Arrow batch emits every column of ``PARSED_SCHEMA`` —
 
 1. decode ``tokens:array<int32>`` to text straight off the Arrow list
    buffer (flat values + offsets -> one UTF-32 decode; zero per-character
    Python and no pandas materialization of the token arrays),
-2. classify lines with vectorized prefix/substring tests (the klog
+2. derive lineage with Arrow's RE2 kernels: ``file``/``line_no`` from one
+   extract over ``doc_id``; ``segment_type``/``topic``/``partition``
+   (SegmentDumpReader.java:340-361) from the batch's *distinct* ``source``
+   values (one per segment file), taken back by dictionary index — so the
+   source regexes cost O(files), not O(rows),
+3. classify lines with vectorized prefix/substring tests (the klog
    dispatch: batch header / record / control / txn-state / snapshot /
    headers / corrupt),
-3. extract fields per class with ``pd.Series.str.extract`` on the same
+4. extract fields per class with ``pd.Series.str.extract`` on the same
    tolerant named-group grammars klog compiles
    (SegmentDumpReader.java:66-104, SnapshotDumpReader.java:36-45),
-4. build output columns as numpy data+mask pairs handed directly to Arrow
+5. build output columns as numpy data+mask pairs handed directly to Arrow
    (pandas nullable-array construction was the profile's hot spot at ~70%
    of parse time),
-5. lines the reference would *throw* on (SegmentDumpReader.java:246,266,...)
+6. lines the reference would *throw* on (SegmentDumpReader.java:246,266,...)
    become ``record_class='corrupt'`` rows with a reason — the north rule's
-   corrupt sink instead of a crash.
+   corrupt sink instead of a crash. Lineage never fails the job either: a
+   ``doc_id`` without an int32 ``:<n>`` suffix gives ``file`` NULL and
+   ``line_no`` 0; an unmatched ``source`` or a partition past int32 gives
+   ``topic``/``partition`` NULL.
 
-Everything derivable from ``source`` (segment type, topic, partition —
-SegmentDumpReader.java:340-361) stays JVM-side as ``regexp_extract`` so it
-never crosses the Arrow boundary.
+Lineage is emitted here rather than by JVM expressions after the map:
+per-row JVM regexes over ``doc_id``/``source`` cost about 0.32 s per 66k
+rows (4 vCPU, sf0.01), while shipping the five columns back through Arrow
+costs about nothing.
 """
 
 from __future__ import annotations
@@ -33,20 +42,11 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from .. import grammar as g
-from ..schemas import PARSED_FIELDS, PARSED_SCHEMA
-
-# Columns produced JVM-side after the UDF: segment_type/topic/partition are
-# pure regexp_extract on `source`; file/line_no are pure regexp_extract on
-# `doc_id` (moved out of the UDF in r9 — they cost ~55 B/row of Arrow
-# output for values the JVM can re-derive; the kernel still derives
-# line_no internally for the header-line-2 rule).
-_JVM_COLS = ("segment_type", "topic", "partition", "file", "line_no")
-UDF_SCHEMA = StructType([f for f in PARSED_SCHEMA.fields if f.name not in _JVM_COLS])
+from ..schemas import PARSED_SCHEMA
 
 _ANCHORED = {
     "batch": re.compile(r"^(?:%s)$" % g.BATCH_PATTERN.pattern),
@@ -61,8 +61,6 @@ _ANCHORED = {
     "snapshot": re.compile(r"^(?:%s)$" % g.SNAPSHOT_PATTERN.pattern),
     "hdr2": re.compile(r"^.*starting offset: (?P<starting_offset>[0-9]+)$", re.IGNORECASE),
 }
-
-import pyarrow.compute as pc  # noqa: E402
 
 
 def _unnamed_to_noncapturing(pattern: str) -> str:
@@ -124,7 +122,17 @@ def _re2_compatible() -> dict[str, str]:
 
 
 _RE2_KEYS = _re2_compatible()
-_DOC_ID_PATTERN = r"^(?P<file>.*):(?P<line_no>[0-9]+)$"
+
+# Lineage patterns (RE2 search semantics, like the JVM's find()). The
+# number group skips leading zeros and takes at most 10 digits, so it
+# always fits the int64 cast; `_name_and_int32` then drops values past
+# int32.
+_DOC_ID_PATTERN = r"^(?P<file>.*):0*(?P<line_no>[0-9]{1,10})$"
+_TOPIC_PATTERN = r".*/(?P<topic>[a-zA-Z0-9_.-]+)-0*(?P<partition>[0-9]{1,10})/[^/]+$"
+#: First match wins; every other source is a `data` segment (Segment.Type).
+_SEGMENT_TYPES = (("txn_state", r"/__transaction_state-[0-9]+/[^/]+$"),
+                  ("consumer_offsets", r"/__consumer_offsets-[0-9]+/[^/]+$"))
+_INT32_MAX = 2**31 - 1
 
 
 def _re2_match_pattern(key: str) -> str | None:
@@ -174,7 +182,6 @@ _BOOL_COLS = ("is_transactional", "is_control", "is_valid", "commit", "is_deleti
 _STR_COLS = ("compress_codec", "header_keys", "transactional_id", "state", "partitions",
              "group_id", "commit_topic", "commit_metadata", "protocol_type", "protocol",
              "leader", "corrupt_reason")
-_UDF_COL_ORDER = [f.name for f in UDF_SCHEMA.fields]
 
 
 class _Cols:
@@ -271,6 +278,35 @@ def _decode_tokens(col) -> tuple:
     return lines, n_tok
 
 
+def _name_and_int32(ext: pa.StructArray) -> tuple[pa.Array, pa.Array]:
+    """(name, number) groups of a lineage extract; both NULL where the
+    pattern missed or the number is past int32 (corrupt-not-crash: an
+    int32 cast there would fail the whole job)."""
+    num = pc.cast(pc.struct_field(ext, [1]), pa.int64())
+    ok = pc.less_equal(num, _INT32_MAX)
+    return (pc.if_else(ok, pc.struct_field(ext, [0]), None),
+            pc.cast(pc.if_else(ok, num, None), pa.int32()))
+
+
+def _lineage(doc_id: pa.Array, source: pa.Array) -> dict[str, pa.Array]:
+    """file/line_no per row from doc_id; segment_type/topic/partition per
+    distinct source, taken back by dictionary index."""
+    file, line_no = _name_and_int32(pc.extract_regex(doc_id, pattern=_DOC_ID_PATTERN))
+    src = pc.dictionary_encode(source)
+    names = src.dictionary
+    seg = np.full(len(names), "data", dtype=object)
+    for kind, pat in reversed(_SEGMENT_TYPES):
+        seg[pc.match_substring_regex(names, pattern=pat).to_numpy(zero_copy_only=False)] = kind
+    topic, partition = _name_and_int32(pc.extract_regex(names, pattern=_TOPIC_PATTERN))
+    return {
+        "file": file,
+        "line_no": pc.fill_null(line_no, 0),
+        "segment_type": pc.fill_null(pc.take(pa.array(seg, pa.string()), src.indices), "data"),
+        "topic": pc.take(topic, src.indices),
+        "partition": pc.take(partition, src.indices),
+    }
+
+
 def _parse_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     n = batch.num_rows
     doc_id = batch.column(batch.schema.get_field_index("doc_id"))
@@ -280,12 +316,8 @@ def _parse_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     arr = pa.array(lines_list, type=pa.string())  # one UTF-8 encode, reused
     # by every C++ classify/extract kernel below
 
-    # line_no is only needed kernel-side for the header-line-2 rule; the
-    # file/line_no OUTPUT columns are derived JVM-side (parse_sequences)
-    doc_ext = pc.extract_regex(pc.cast(doc_id, pa.string()), pattern=_DOC_ID_PATTERN)
-    line_no = pc.fill_null(
-        pc.cast(doc_ext.field(1), pa.int32()), 0
-    ).to_numpy(zero_copy_only=False)
+    arrays = _lineage(doc_id, source)
+    line_no = arrays["line_no"].to_numpy(zero_copy_only=False)
 
     cls = np.full(n, "corrupt", dtype=object)
     reason = np.full(n, None, dtype=object)
@@ -624,13 +656,13 @@ def _parse_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     unmatched = (cls == "corrupt") & (reason == None)  # noqa: E711
     reason[unmatched] = "unrecognised_line"
 
-    arrays = {
+    arrays.update({
         "doc_id": doc_id,
         "source": source,
         "n_tok": pa.array(n_tok, type=pa.int32()),
         "record_class": pa.array(cls, type=pa.string()),
         "corrupt_reason": pa.array(reason, type=pa.string()),
-    }
+    })
     for c, data in cols.int_data.items():
         arrays[c] = pa.array(data, type=_INT_TYPES[c][1], mask=cols.int_mask[c])
     for c in _BOOL_COLS:
@@ -638,20 +670,16 @@ def _parse_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     for c in _STR_COLS:
         if c != "corrupt_reason":
             arrays[c] = pa.array(cols.str_data[c], type=pa.string())
-    return pa.RecordBatch.from_arrays([arrays[c] for c in _UDF_COL_ORDER], names=_UDF_COL_ORDER)
-
-
-def _parse_batch_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """pandas-frontend wrapper (kept for tests/profiling)."""
-    batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
-    return _parse_arrow_batch(batch).to_pandas()
+    return pa.RecordBatch.from_arrays([arrays[c] for c in PARSED_SCHEMA.names],
+                                      names=PARSED_SCHEMA.names)
 
 
 def parse_sequences(df: DataFrame) -> DataFrame:
-    """input (doc_id, tokens, n_tok, source) -> wide parsed DataFrame.
+    """input (doc_id, tokens, source) -> wide parsed DataFrame.
 
-    Narrow map (no shuffle); source-derived columns stay in whole-stage
-    codegen.
+    One narrow Arrow map (no shuffle) emits every output column; ``n_tok``
+    is recounted from the token offsets, so only the three columns the
+    kernel reads cross into Python.
     """
 
     def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -659,34 +687,4 @@ def parse_sequences(df: DataFrame) -> DataFrame:
             if batch.num_rows:
                 yield _parse_arrow_batch(batch)
 
-    parsed = df.mapInArrow(gen, schema=UDF_SCHEMA)
-    # file/line_no re-derived JVM-side from doc_id (r9: ~55 B/row less
-    # Arrow output). Semantics pinned to the kernel's extract_regex:
-    # unmatched doc_id -> file NULL, line_no 0 (JVM regexp_extract alone
-    # would yield ''/NULL there).
-    doc_matched = F.col("doc_id").rlike(r"^.*:[0-9]+$")
-    parsed = (
-        parsed.withColumn(
-            "file",
-            F.when(doc_matched,
-                   F.regexp_extract(F.col("doc_id"), r"^(.*):([0-9]+)$", 1)),
-        )
-        .withColumn(
-            "line_no",
-            F.when(doc_matched,
-                   F.regexp_extract(F.col("doc_id"), r"^(.*):([0-9]+)$", 2)
-                   .cast("int")).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "segment_type",
-            F.when(F.col("source").rlike(r"/__transaction_state-[0-9]+/[^/]+$"), F.lit("txn_state"))
-            .when(F.col("source").rlike(r"/__consumer_offsets-[0-9]+/[^/]+$"), F.lit("consumer_offsets"))
-            .otherwise(F.lit("data")),
-        )
-        .withColumn("topic", F.regexp_extract(F.col("source"), r".*/([a-zA-Z0-9_.-]+)-([0-9]+)/[^/]+$", 1))
-        .withColumn(
-            "partition",
-            F.regexp_extract(F.col("source"), r".*/([a-zA-Z0-9_.-]+)-([0-9]+)/[^/]+$", 2).cast("int"),
-        )
-    )
-    return parsed.select(*[n for n, _ in PARSED_FIELDS])
+    return df.select("doc_id", "tokens", "source").mapInArrow(gen, PARSED_SCHEMA)

@@ -142,3 +142,78 @@ def test_parse_matches_oracle_on_random_lines(lines):
             elif isinstance(got, (np.bool_,)):
                 got = bool(got)
             assert got == val, (lines[i], field, got, val)
+
+
+# --- lineage parity: the kernel's five lineage columns vs the JVM ------------
+
+def _jvm_lineage(df):
+    """The five JVM expressions that derived lineage after the Arrow map
+    before the kernel emitted them itself (the reference for the property
+    below)."""
+    from pyspark.sql import functions as F
+
+    doc_matched = F.col("doc_id").rlike(r"^.*:[0-9]+$")
+    return df.select(
+        F.when(doc_matched,
+               F.regexp_extract(F.col("doc_id"), r"^(.*):([0-9]+)$", 1)).alias("file"),
+        F.when(doc_matched,
+               F.regexp_extract(F.col("doc_id"), r"^(.*):([0-9]+)$", 2)
+               .cast("int")).otherwise(F.lit(0)).alias("line_no"),
+        F.when(F.col("source").rlike(r"/__transaction_state-[0-9]+/[^/]+$"), F.lit("txn_state"))
+        .when(F.col("source").rlike(r"/__consumer_offsets-[0-9]+/[^/]+$"), F.lit("consumer_offsets"))
+        .otherwise(F.lit("data")).alias("segment_type"),
+        F.regexp_extract(F.col("source"), r".*/([a-zA-Z0-9_.-]+)-([0-9]+)/[^/]+$", 1).alias("topic"),
+        F.regexp_extract(F.col("source"), r".*/([a-zA-Z0-9_.-]+)-([0-9]+)/[^/]+$", 2)
+        .cast("int").alias("partition"),
+    )
+
+
+near_2_31 = st.integers(min_value=2**31 - 3, max_value=2**31 + 3).map(str)
+number = st.one_of(st.integers(0, 999).map(str), near_2_31, st.just("99999999999"),
+                   st.tuples(st.sampled_from(["0", "000"]), near_2_31).map("".join))
+path_part = st.text(alphabet="abz09._-", min_size=1, max_size=6)
+topic_name = st.one_of(st.text(alphabet="aZ09._-", min_size=1, max_size=8),
+                       st.sampled_from(["__transaction_state", "__consumer_offsets", "my.topic_2"]))
+
+
+@st.composite
+def lineage_rows(draw):
+    dirs = "/".join(draw(st.lists(path_part, max_size=3)))
+    topic = draw(topic_name)
+    seg = draw(st.one_of(
+        st.tuples(st.just(topic + "-"), number).map("".join),
+        st.just(topic), path_part))
+    source = draw(st.sampled_from(["/", ""])) + (dirs + "/" if dirs else "") + seg + "/" + draw(path_part)
+    source = draw(st.one_of(st.just(source), st.just(source + "/"), path_part))
+    doc = draw(path_part) + draw(st.sampled_from([":", "::", ":x:", ""])) + draw(number)
+    return doc, source
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(lineage_rows(), min_size=1, max_size=30))
+def test_lineage_matches_jvm_reference(spark, rows):
+    """Where the JVM expressions answer, the kernel gives the same five
+    values. Where they would fail the job (an ANSI int cast of '' or of a
+    number past int32), the kernel gives NULL fields instead: the reference
+    runs with ANSI off, so a NULL cast result marks those rows."""
+    ref_df = spark.createDataFrame(rows, "doc_id string, source string")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        ref = [r.asDict() for r in _jvm_lineage(ref_df).collect()]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    batch = pa.RecordBatch.from_pydict({
+        "doc_id": pa.array([d for d, _ in rows], pa.string()),
+        "tokens": pa.array([[ord("x")]] * len(rows), pa.list_(pa.int32())),
+        "source": pa.array([s for _, s in rows], pa.string()),
+    })
+    got = _parse_arrow_batch(batch).select(list(ref[0])).to_pylist()
+    for row, want, have in zip(rows, ref, got):
+        doc_raises = want["line_no"] is None
+        src_raises = want["partition"] is None
+        if doc_raises:
+            want.update(file=None, line_no=0)
+        if src_raises:
+            want.update(topic=None, partition=None)
+        assert have == want, (row, have, want)

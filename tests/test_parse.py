@@ -138,11 +138,57 @@ def test_broken_28_dump_routes_to_corrupt(spark):
     assert out[0]["corrupt_reason"] == "batch_regex_mismatch"
 
 
-def test_topic_partition_inference(spark):
-    out = _parse(spark, [KAFKA_27_BATCH], source="/tmp/kafka-logs/my.topic_2-13/00000000000000000042.log").collect()
-    assert out[0]["topic"] == "my.topic_2"
-    assert out[0]["partition"] == 13
-    assert out[0]["segment_type"] == "data"
+TOPIC_SRC = "/tmp/kafka-logs/my.topic_2-13/00000000000000000042.log"
+
+
+@pytest.mark.parametrize("doc_id,source,want", [
+    pytest.param("f.dump.txt:1", TOPIC_SRC, ("f.dump.txt", 1, "data", "my.topic_2", 13), id="topic"),
+    pytest.param("f:1", "/tmp/kafka-logs/__consumer_offsets-49/00000000000000000000.log",
+                 ("f", 1, "consumer_offsets", "__consumer_offsets", 49), id="consumer-offsets"),
+    # malformed lineage is corrupt-not-crash: NULL fields, the row keeps its class
+    pytest.param("nocolon", TOPIC_SRC, (None, 0, "data", "my.topic_2", 13), id="doc-id-no-colon"),
+    pytest.param("f:1\r", TOPIC_SRC, (None, 0, "data", "my.topic_2", 13), id="doc-id-trailing-cr"),
+    pytest.param("f:99999999999", TOPIC_SRC, (None, 0, "data", "my.topic_2", 13), id="line-no-past-int32"),
+    pytest.param("f:1", "weird", ("f", 1, "data", None, None), id="source-unmatched"),
+    pytest.param("f:1", "/x/t-99999999999/0.log", ("f", 1, "data", None, None), id="partition-past-int32"),
+])
+def test_topic_partition_inference(spark, doc_id, source, want):
+    from klog_spark.operators.parse import parse_sequences
+
+    df = spark.createDataFrame([(doc_id, [ord(c) for c in KAFKA_27_BATCH], source)],
+                               "doc_id string, tokens array<int>, source string")
+    r = parse_sequences(df).collect()[0]
+    assert r["record_class"] == "batch"
+    assert (r["file"], r["line_no"], r["segment_type"], r["topic"], r["partition"]) == want
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_parse_plan_is_one_arrow_map(spark):
+    """Every parsed column comes out of the one Arrow map: only the three
+    columns the kernel reads go in, and no per-row JVM regex runs after it."""
+    from klog_spark.operators.parse import parse_sequences
+
+    df = spark.createDataFrame([], INPUT_SCHEMA)
+    plan = parse_sequences(df)._jdf.queryExecution().optimizedPlan()
+    nodes = list(_plan_nodes(plan))
+    maps = [nd for nd in nodes if nd.nodeName() == "MapInArrow"]
+    assert len(maps) == 1
+    child_out = maps[0].child().output()
+    assert [child_out.apply(i).name() for i in range(child_out.size())] == ["doc_id", "tokens", "source"]
+    exprs = set()
+    for nd in nodes:
+        todo = [nd.expressions().apply(i) for i in range(nd.expressions().size())]
+        while todo:
+            e = todo.pop()
+            exprs.add(e.getClass().getSimpleName())
+            todo.extend(e.children().apply(i) for i in range(e.children().size()))
+    assert not exprs & {"RLike", "RegExpExtract"}, exprs
 
 
 # --- full-fixture parity -----------------------------------------------------
