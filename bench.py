@@ -152,7 +152,6 @@ def main() -> None:
             timed("ann_cosine_topk", lambda: eq.q_ann_topk(spark, sf_dir).count())
             timed("ann_ivfpq_topk", lambda: eq.q_ann_ivfpq(spark, sf_dir).count())
             timed("text_quality", lambda: eq.q_text_quality(spark, sf_dir).count())
-            timed("events_daily", lambda: eq.q_events_daily(spark, sf_dir).count())
             # round-4 operators at sf0.1 scale
             timed("corpus_pack", lambda: eq.q_corpus_pack(spark, sf_dir).count())
             timed("contamination_check", lambda: eq.q_contamination_check(spark, sf_dir).count())

@@ -101,7 +101,6 @@ def main() -> None:
         "ann_cosine_topk": lambda: eq.q_ann_topk(spark, sf_dir).count(),
         "ann_ivfpq_topk": lambda: eq.q_ann_ivfpq(spark, sf_dir).count(),
         "text_quality": lambda: eq.q_text_quality(spark, sf_dir).count(),
-        "events_daily": lambda: eq.q_events_daily(spark, sf_dir).count(),
         "corpus_pack": lambda: eq.q_corpus_pack(spark, sf_dir).count(),
         "contamination_check": lambda: eq.q_contamination_check(spark, sf_dir).count(),
         "lm_quality": lambda: eq.q_lm_quality(spark, sf_dir).count(),

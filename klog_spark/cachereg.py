@@ -5,7 +5,7 @@ DSIR vocabulary LMs, BM25 length norms, per-source token masses, trainer
 feature matrices) because multiple eager jobs — or one expensive lazy plan
 referenced several times — consume them inside a single invocation. The
 persist is the right call per invocation, but in a LONG-LIVED session (the
-195-test suite, the 124-pair gate, the bench loop, a user notebook) those
+test suite, the query/oracle gate, the bench loop, a user notebook) those
 blocks accumulate: nothing ever unpersisted them, because the operator
 returns a lazy plan that still references the cache, so it cannot release
 it before the caller materializes.

@@ -27,6 +27,13 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from .schemas import PARSED_SCHEMA
+
+# The routed sink's schema, read explicitly: a run over empty input writes
+# no data files, and schema inference fails on a table without any.
+_ROUTED_SCHEMA = StructType([*PARSED_SCHEMA.fields, StructField("run_id", StringType())])
 
 
 class Checkpoint:
@@ -79,7 +86,7 @@ def read_routed_committed(spark: SparkSession, out_dir: str, ckpt: Checkpoint) -
     """Read the routed sink pruned to manifest-committed run_ids — safe even
     while another (possibly doomed) run is appending."""
     committed = sorted(ckpt.committed_run_ids())
-    df = spark.read.parquet(str(Path(out_dir) / "routed"))
+    df = spark.read.schema(_ROUTED_SCHEMA).parquet(str(Path(out_dir) / "routed"))
     return df.filter(F.col("run_id").isin(committed) if committed else F.lit(False))
 
 
@@ -120,7 +127,7 @@ def run_incremental(spark: SparkSession, input_path: str, out_dir: str,
         "append"
     ).partitionBy("record_class", "run_id").parquet(out_path)
 
-    routed = spark.read.parquet(out_path).filter(F.col("run_id") == run_id)
+    routed = spark.read.schema(_ROUTED_SCHEMA).parquet(out_path).filter(F.col("run_id") == run_id)
     per_file = {
         r["file"]: {"n_rows": r["n_rows"], "n_corrupt": r["n_corrupt"]}
         for r in routed.groupBy("file").agg(

@@ -881,12 +881,11 @@ def semdedup_embedding(emb: DataFrame, threshold: float = 0.95,
     quantizer trained offline — the production train-once shape AND the
     hash-gateable one). Never an O(n^2) stage over the corpus.
 
-    ``max_cell_size`` makes that contract FAIL-LOUD (VERDICT r6 next #4,
-    the ``interval_join`` cap pattern): a degenerate embedding
-    distribution or an undersized ``n_centroids`` that produces a
-    mega-cell would silently turn the per-cell self-join quadratic; with
-    the cap set, one cheap groupBy count raises BEFORE the join runs,
-    naming the offending cells.
+    ``max_cell_size`` makes that contract FAIL-LOUD (VERDICT r6 next #4):
+    a degenerate embedding distribution or an undersized ``n_centroids``
+    that produces a mega-cell would silently turn the per-cell self-join
+    quadratic; with the cap set, one cheap groupBy count raises BEFORE the
+    join runs, naming the offending cells.
 
     ``keep`` picks WHICH member of a near-dup neighborhood survives:
     ``'min_id'`` (SemDeDup's arbitrary-representative default) or

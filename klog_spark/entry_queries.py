@@ -1121,40 +1121,6 @@ SELECT doc_id, file, line_no, display FROM rendered
 SQL_CAT_RENDER = _sql_cat_render()
 
 
-def q_token_freq_topk(spark, sf_dir):
-    """Vocabulary statistics over the tokenized-sequence table itself
-    (input_hint shape): corpus-wide token-frequency top-k."""
-    from .tokens import token_frequency_topk
-
-    fx = klog_fixture(sf_dir)
-    return token_frequency_topk(spark.read.parquet(f"{fx}/sequences.parquet"), k=50)
-
-
-SQL_TOKEN_FREQ_TOPK = f"""
-WITH f AS (
-  SELECT unnest(tokens) AS token FROM read_parquet('{FX}/sequences.parquet')
-),
-g AS (SELECT token, COUNT(*) AS n FROM f GROUP BY token),
-r AS (SELECT token, n, ROW_NUMBER() OVER (ORDER BY n DESC, token ASC) AS rank FROM g)
-SELECT token, n, CAST(rank AS INT) AS rank FROM r WHERE rank <= 50
-"""
-
-
-def q_seq_len_hist(spark, sf_dir):
-    """Sequence-length histogram over the tokenized table (packing stat)."""
-    from .tokens import sequence_length_histogram
-
-    fx = klog_fixture(sf_dir)
-    return sequence_length_histogram(spark.read.parquet(f"{fx}/sequences.parquet"), bucket=32)
-
-
-SQL_SEQ_LEN_HIST = f"""
-SELECT CAST((n_tok // 32) * 32 AS BIGINT) AS bucket_start, COUNT(*) AS n_sequences
-FROM read_parquet('{FX}/sequences.parquet')
-GROUP BY 1
-"""
-
-
 def q_first_last_batch(spark, sf_dir):
     from .operators.aggregates import first_last_batch
 
@@ -1170,7 +1136,7 @@ SELECT arg_min(doc_id, ord) AS first_batch_doc_id, arg_max(doc_id, ord) AS last_
 
 
 # ---------------------------------------------------------------------------
-# Training-data pipeline queries (documents / embeddings / events / lineitem)
+# Training-data pipeline queries (documents / embeddings / events)
 #
 # The driver tables contain no duplicates, so dedup queries derive a
 # deterministic dup-corpus from `documents` with identical expressions on
@@ -2353,64 +2319,6 @@ FROM r, tot WHERE rank IN (3, 5, 10, 20, 30)
 """
 
 
-def q_events_anomaly(spark, sf_dir):
-    """Daily-volume anomaly detection per event type: each day judged
-    against its trailing 7 PRIOR days' mean/variance. The 3-sigma test is
-    cross-multiplied into pure integer arithmetic —
-    ``(n*n7 - sum)^2 > 9*n7*(n7*sumsq - sum^2)`` — so the anomaly flag
-    involves no sqrt and no float anywhere: bit-exact on any engine. The
-    reported mean/variance are exact-integer divisions (double)."""
-    from pyspark.sql import Window
-
-    ev = _read_events(spark, sf_dir)
-    daily = ev.groupBy(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
-    ).agg(F.count("*").cast("long").alias("n"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy(F.col("day").asc_nulls_first())
-        .rowsBetween(-7, -1)
-    )
-    stats = daily.select(
-        "day", "event_type", "n",
-        F.count("n").over(w).cast("long").alias("n7"),
-        F.sum("n").over(w).cast("long").alias("s"),
-        F.sum(F.col("n") * F.col("n")).over(w).cast("long").alias("sq"),
-    ).filter(F.col("n7") == 7)
-    lhs = (F.col("n") * F.col("n7") - F.col("s"))
-    rhs = F.lit(9) * F.col("n7") * (F.col("n7") * F.col("sq") - F.col("s") * F.col("s"))
-    return stats.select(
-        "day", "event_type", "n",
-        (F.col("s").cast("double") / F.col("n7")).alias("mean_7d"),
-        ((F.col("n7") * F.col("sq") - F.col("s") * F.col("s")).cast("double")
-         / (F.col("n7") * F.col("n7"))).alias("var_7d"),
-        (lhs * lhs > rhs).alias("is_anomaly"),
-    )
-
-
-SQL_EVENTS_ANOMALY = """
-WITH daily AS (
-  SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT day, event_type, n,
-         CAST(COUNT(n) OVER w AS BIGINT) AS n7,
-         CAST(SUM(n) OVER w AS BIGINT) AS s,
-         CAST(SUM(n * n) OVER w AS BIGINT) AS sq
-  FROM daily
-  WINDOW w AS (PARTITION BY event_type ORDER BY day NULLS FIRST
-               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-)
-SELECT day, event_type, n,
-       CAST(s AS DOUBLE) / n7 AS mean_7d,
-       CAST(n7 * sq - s * s AS DOUBLE) / (n7 * n7) AS var_7d,
-       (n * n7 - s) * (n * n7 - s) > 9 * n7 * (n7 * sq - s * s) AS is_anomaly
-FROM st WHERE n7 = 7
-"""
-
-
 # SQL_CORPUS_CURATE is assigned after _sql_stoplist_all is defined below
 
 
@@ -2980,180 +2888,6 @@ def _read_events(spark, sf_dir):
     return spark.read.schema(_EVENTS_SCHEMA).parquet(f"{sf_dir}/events.parquet")
 
 
-def _ts_ms_ntz(col: str = "ts"):
-    """Epoch millis from an NTZ timestamp via timestamp_diff against an NTZ
-    epoch literal — matches DuckDB's ``epoch_ms(naive_ts)`` exactly and never
-    consults the session timezone."""
-    epoch_ntz = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
-    return F.timestamp_diff("MILLISECOND", epoch_ntz, F.col(col))
-
-
-def _exact_avg(sum_micro, n):
-    """sum(value) in exact integer micro-units / count -> DOUBLE.
-
-    Both engines divide the SAME two exact integers as IEEE doubles, so the
-    results are bit-identical — no ROUND(double) tie sensitivity (VERDICT r3
-    #1c). Inputs stay < 2^53 (micro-sum <= ~1.5e13 at sf0.1), so the
-    int->double conversions are exact too."""
-    return sum_micro.cast("double") / (F.lit(1000000.0) * n)
-
-
-def q_events_daily(spark, sf_dir):
-    ev = _read_events(spark, sf_dir)
-    return (
-        ev.withColumn("k", F.get_json_object("props", "$.k").cast("int"))
-        .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            # exact decimal sum -> integer micro-units -> double division:
-            # deterministic across engines with no rounding step
-            _exact_avg(
-                (F.sum(F.col("value").cast("decimal(28,6)")) * 1000000).cast("long"),
-                F.count("value"),
-            ).alias("avg_value"),
-            (F.sum("k").cast("double") / F.count("k")).alias("avg_k"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-    )
-
-
-SQL_EVENTS_DAILY = """
-SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-       COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(28,6))) * 1000000 AS BIGINT) AS DOUBLE)
-         / (1000000.0 * COUNT(value)) AS avg_value,
-       CAST(SUM(CAST(json_extract_string(props, '$.k') AS INT)) AS DOUBLE)
-         / COUNT(json_extract_string(props, '$.k')) AS avg_k,
-       COUNT(DISTINCT user_id) AS n_users
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_event_sessions(spark, sf_dir):
-    """Gap-based user sessionization over the events stream (30-min idle
-    cutoff): the telemetry twin of klog's transactional sessionization —
-    same shape (per-key window, cumulative boundary count, per-session
-    rollup), different domain. Timestamps emitted as epoch seconds for
-    engine-neutral hashing."""
-    from pyspark.sql import Window
-
-    ev = _read_events(spark, sf_dir).select(
-        "user_id", "event_id", _ts_ms_ntz("ts").alias("ts_ms")
-    )
-    # NULL ordering pinned explicitly on BOTH engines (Spark defaults
-    # NULLS FIRST, DuckDB NULLS LAST — a driver fixture with null ts would
-    # silently diverge otherwise)
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts_ms").asc_nulls_first(), F.col("event_id").asc_nulls_first()
-    )
-    gap = F.when(
-        F.col("ts_ms") - F.lag("ts_ms").over(w) > 1800 * 1000, 1
-    ).otherwise(0)
-    ev = ev.withColumn("session_id", F.sum(gap).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    return ev.groupBy("user_id", "session_id").agg(
-        F.count("*").alias("n_events"),
-        F.min("ts_ms").alias("session_start_ms"),
-        F.max("ts_ms").alias("session_end_ms"),
-        (F.max("ts_ms") - F.min("ts_ms")).alias("duration_ms"),
-    )
-
-
-SQL_EVENT_SESSIONS = """
-WITH e AS (
-  SELECT user_id, event_id, epoch_ms(ts) AS ts_ms FROM events
-),
-g AS (
-  SELECT *, CASE WHEN ts_ms - LAG(ts_ms) OVER (PARTITION BY user_id
-                     ORDER BY ts_ms NULLS FIRST, event_id NULLS FIRST) > 1800000
-                 THEN 1 ELSE 0 END AS gap
-  FROM e
-),
-s AS (
-  -- DuckDB SUM(BIGINT) returns HUGEINT (decimal128 under Arrow fetch) —
-  -- always CAST to BIGINT so the oracle's surface type matches Spark's long
-  -- under ANY fetch path (r3/r4 driver hash-red root cause).
-  SELECT user_id, event_id, ts_ms,
-         CAST(SUM(gap) OVER (PARTITION BY user_id
-                        ORDER BY ts_ms NULLS FIRST, event_id NULLS FIRST
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS session_id
-  FROM g
-)
-SELECT user_id, session_id, COUNT(*) AS n_events,
-       MIN(ts_ms) AS session_start_ms, MAX(ts_ms) AS session_end_ms,
-       MAX(ts_ms) - MIN(ts_ms) AS duration_ms
-FROM s GROUP BY user_id, session_id
-"""
-
-
-def q_events_rolling(spark, sf_dir):
-    """7-day rolling event volume + average value per event type — the
-    trailing-window health metric of a telemetry pipeline. ROWS frame over
-    the daily rollup (fixture days are dense). The rolling average is an
-    exact-integer-micro-units / count double division (see ``_exact_avg``) —
-    no ROUND(double) tie sensitivity, no session-TZ dependence."""
-    from pyspark.sql import Window
-
-    ev = _read_events(spark, sf_dir)
-    daily = ev.groupBy(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
-    ).agg(
-        F.count("*").alias("n"),
-        (F.sum(F.col("value").cast("decimal(28,6)")) * 1000000).cast("long").alias("v_micro"),
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy(F.col("day").asc_nulls_first())
-        .rowsBetween(-6, 0)
-    )
-    return daily.select(
-        "day", "event_type",
-        F.sum("n").over(w).alias("n_7d"),
-        _exact_avg(F.sum("v_micro").over(w), F.sum("n").over(w)).alias("avg_value_7d"),
-    )
-
-
-SQL_EVENTS_ROLLING = """
-WITH daily AS (
-  SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-         COUNT(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(28,6))) * 1000000 AS BIGINT) AS v_micro
-  FROM events GROUP BY 1, 2
-)
-SELECT day, event_type,
-       CAST(SUM(n) OVER w AS BIGINT) AS n_7d,
-       CAST(CAST(SUM(v_micro) OVER w AS BIGINT) AS DOUBLE)
-         / (1000000.0 * CAST(SUM(n) OVER w AS BIGINT)) AS avg_value_7d
-FROM daily
-WINDOW w AS (PARTITION BY event_type ORDER BY day NULLS FIRST
-             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-"""
-
-
-def q_seq_len_percentiles(spark, sf_dir):
-    """Exact sequence-length percentiles (p50/p90/p99) over the tokenized
-    table — the packing/truncation planning numbers. Exact (sort-based)
-    percentile with linear interpolation on both engines."""
-    fx = klog_fixture(sf_dir)
-    seq = spark.read.parquet(f"{fx}/sequences.parquet")
-    pct = F.percentile("n_tok", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)))
-    return seq.agg(
-        F.round(pct[0], 4).alias("p50"),
-        F.round(pct[1], 4).alias("p90"),
-        F.round(pct[2], 4).alias("p99"),
-        F.max("n_tok").cast("long").alias("max_len"),
-    )
-
-
-SQL_SEQ_LEN_PERCENTILES = f"""
-SELECT ROUND(quantile_cont(n_tok, 0.5), 4) AS p50,
-       ROUND(quantile_cont(n_tok, 0.9), 4) AS p90,
-       ROUND(quantile_cont(n_tok, 0.99), 4) AS p99,
-       CAST(MAX(n_tok) AS BIGINT) AS max_len
-FROM read_parquet('{FX}/sequences.parquet')
-"""
-
-
 def q_multimodal_features(spark, sf_dir):
     from .datapipe.multimodal import documents_as_media, extract_features
 
@@ -3185,62 +2919,6 @@ SELECT d.doc_id,
        CAST(greatest(1, CAST(ceil(octet_length(encode(d.text)) / 1024.0) AS INT)) AS INT) AS n_frames,
        CAST(COALESCE(list_aggregate(b.char_byte_sums, 'sum'), 0) AS BIGINT) AS total_digest
 FROM documents d JOIN b USING (doc_id)
-"""
-
-
-def q_tpch_pricing_summary(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-SQL_TPCH_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       ROUND(SUM(l_quantity), 2) AS sum_qty,
-       ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       ROUND(AVG(l_quantity), 4) AS avg_qty,
-       COUNT(*) AS count_order
-FROM lineitem WHERE l_shipdate <= '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_tpch_revenue_by_nation(spark, sf_dir):
-    cu = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    na = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    return (
-        li.join(od, li["l_orderkey"] == od["o_orderkey"])
-        .join(F.broadcast(cu), od["o_custkey"] == cu["c_custkey"])
-        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count("*").alias("n_lineitems"),
-        )
-    )
-
-
-SQL_TPCH_REVENUE_BY_NATION = """
-SELECT n_name,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       COUNT(*) AS n_lineitems
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
 """
 
 
@@ -3776,233 +3454,6 @@ FROM c WHERE tag = 1
 """
 
 
-def q_event_session_interval_join(spark, sf_dir):
-    """Range join (operators/asof.interval_join): every event re-attached to
-    its session's [start, end] interval via bucketed containment join, then
-    counted per session. The oracle recomputes with a naive BETWEEN theta
-    join over the same session CTEs — agreement proves the bucketed scale
-    path implements containment semantics exactly. Null-ts events have no
-    position and are excluded on both engines."""
-    from .operators.asof import interval_join
-
-    sessions = q_event_sessions(spark, sf_dir).select(
-        "user_id", "session_id", "session_start_ms", "session_end_ms"
-    )
-    pts = _read_events(spark, sf_dir).select(
-        "user_id", "event_id", _ts_ms_ntz("ts").alias("ts_ms")
-    ).filter(F.col("ts_ms").isNotNull())
-    joined = interval_join(
-        pts, sessions, point_ts="ts_ms", start="session_start_ms",
-        end="session_end_ms", by=["user_id"], bucket_width=1800 * 1000,
-    )
-    return joined.groupBy("user_id", "session_id").agg(
-        F.count("*").alias("n_located_events")
-    )
-
-
-SQL_EVENT_SESSION_INTERVAL_JOIN = """
-WITH e AS (
-  SELECT user_id, event_id, epoch_ms(ts) AS ts_ms FROM events
-),
-g AS (
-  SELECT *, CASE WHEN ts_ms - LAG(ts_ms) OVER (PARTITION BY user_id
-                     ORDER BY ts_ms NULLS FIRST, event_id NULLS FIRST) > 1800000
-                 THEN 1 ELSE 0 END AS gap
-  FROM e
-),
-s AS (
-  -- HUGEINT → BIGINT cast: see SQL_EVENT_SESSIONS (same driver-fetch rule).
-  SELECT user_id, event_id, ts_ms,
-         CAST(SUM(gap) OVER (PARTITION BY user_id
-                        ORDER BY ts_ms NULLS FIRST, event_id NULLS FIRST
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS session_id
-  FROM g
-),
-sess AS (
-  SELECT user_id, session_id,
-         MIN(ts_ms) AS session_start_ms, MAX(ts_ms) AS session_end_ms
-  FROM s GROUP BY user_id, session_id
-)
-SELECT p.user_id, sess.session_id, COUNT(*) AS n_located_events
-FROM (SELECT user_id, event_id, epoch_ms(ts) AS ts_ms FROM events
-      WHERE ts IS NOT NULL) p
-JOIN sess ON p.user_id = sess.user_id
-         AND p.ts_ms BETWEEN sess.session_start_ms AND sess.session_end_ms
-GROUP BY p.user_id, sess.session_id
-"""
-
-
-def q_interval_join_oversized(spark, sf_dir):
-    """Range join with the REPLICATION-CAP OVERFLOW path live (VERDICT r5
-    #6): the session intervals are joined alongside planted per-user "audit"
-    intervals spanning the user's whole event range (session_id = -1). With
-    ``max_interval_buckets=4`` the audit intervals (and any session > 4
-    buckets) exceed the cap and take interval_join's ``on_oversize=
-    'broadcast'`` BETWEEN-union path, while short sessions take the bucketed
-    explode — so the gate hashes rows produced by BOTH physical paths. The
-    oracle is path-agnostic: one naive BETWEEN theta join over the unioned
-    interval set. test_events_property.py asserts both paths are
-    non-degenerate on the driver fixture."""
-    from .operators.asof import interval_join
-
-    sessions = q_event_sessions(spark, sf_dir).select(
-        "user_id", "session_id", "session_start_ms", "session_end_ms"
-    )
-    pts = _read_events(spark, sf_dir).select(
-        "user_id", "event_id", _ts_ms_ntz("ts").alias("ts_ms")
-    ).filter(F.col("ts_ms").isNotNull())
-    audit = pts.groupBy("user_id").agg(
-        F.lit(-1).cast("long").alias("session_id"),
-        F.min("ts_ms").alias("session_start_ms"),
-        F.max("ts_ms").alias("session_end_ms"),
-    )
-    joined = interval_join(
-        pts, sessions.unionByName(audit), point_ts="ts_ms",
-        start="session_start_ms", end="session_end_ms", by=["user_id"],
-        bucket_width=1800 * 1000, max_interval_buckets=4,
-        on_oversize="broadcast",
-    )
-    return joined.groupBy("user_id", "session_id").agg(
-        F.count("*").alias("n_located_events")
-    )
-
-
-SQL_INTERVAL_JOIN_OVERSIZED = """
-WITH e AS (
-  SELECT user_id, event_id, epoch_ms(ts) AS ts_ms FROM events
-),
-g AS (
-  SELECT *, CASE WHEN ts_ms - LAG(ts_ms) OVER (PARTITION BY user_id
-                     ORDER BY ts_ms NULLS FIRST, event_id NULLS FIRST) > 1800000
-                 THEN 1 ELSE 0 END AS gap
-  FROM e
-),
-s AS (
-  SELECT user_id, event_id, ts_ms,
-         CAST(SUM(gap) OVER (PARTITION BY user_id
-                        ORDER BY ts_ms NULLS FIRST, event_id NULLS FIRST
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS session_id
-  FROM g
-),
-p AS (
-  SELECT user_id, event_id, epoch_ms(ts) AS ts_ms FROM events
-  WHERE ts IS NOT NULL
-),
-sess AS (
-  SELECT user_id, session_id,
-         MIN(ts_ms) AS session_start_ms, MAX(ts_ms) AS session_end_ms
-  FROM s GROUP BY user_id, session_id
-  UNION ALL
-  SELECT user_id, CAST(-1 AS BIGINT) AS session_id,
-         MIN(ts_ms) AS session_start_ms, MAX(ts_ms) AS session_end_ms
-  FROM p GROUP BY user_id
-)
-SELECT p.user_id, sess.session_id, COUNT(*) AS n_located_events
-FROM p
-JOIN sess ON p.user_id = sess.user_id
-         AND p.ts_ms BETWEEN sess.session_start_ms AND sess.session_end_ms
-GROUP BY p.user_id, sess.session_id
-"""
-
-
-def q_events_hypertable(spark, sf_dir):
-    """Hypertable rollup: event volume/value at 10-minute, 1-hour and 1-day
-    resolutions per event type — the coarser levels RE-AGGREGATED from the
-    finer rollup (one raw scan total), while the oracle computes every level
-    independently from raw rows; agreement proves lossless re-aggregation.
-    Value is summed in exact micro-units (no float accumulation)."""
-    from .operators.asof import hypertable_rollup
-
-    ev = _read_events(spark, sf_dir).select(
-        "event_type", _ts_ms_ntz("ts").alias("ts_ms"),
-        (F.col("value").cast("decimal(28,6)") * 1000000).cast("long").alias("v_micro"),
-    ).filter(F.col("ts_ms").isNotNull())
-    return hypertable_rollup(
-        ev, ts_ms="ts_ms", by=["event_type"], value="v_micro",
-        resolutions_ms=[600_000, 3_600_000, 86_400_000],
-    )
-
-
-SQL_EVENTS_HYPERTABLE = """
-WITH e AS (
-  SELECT event_type, epoch_ms(ts) AS ts_ms,
-         CAST(CAST(value AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS v_micro
-  FROM events WHERE ts IS NOT NULL
-),
-lv AS (
-  SELECT res.r AS resolution_ms,
-         CAST(FLOOR(ts_ms / res.r) * res.r AS BIGINT) AS bucket_start_ms,
-         event_type,
-         COUNT(*) AS n_events, CAST(SUM(v_micro) AS BIGINT) AS sum_value,
-         MIN(v_micro) AS min_value, MAX(v_micro) AS max_value
-  FROM e CROSS JOIN (VALUES (600000), (3600000), (86400000)) res(r)
-  GROUP BY 1, 2, 3
-)
-SELECT * FROM lv
-"""
-
-
-def q_event_funnel(spark, sf_dir):
-    """Ordered funnel conversion view -> click -> purchase: a user reaches
-    step k at the earliest event of type k AT OR AFTER their step-(k-1)
-    time. Three equi-joins on user_id (each stage strictly narrows), exact
-    user counts and an integer-exact conversion ratio."""
-    ev = _read_events(spark, sf_dir).select(
-        "user_id", "event_type", _ts_ms_ntz("ts").alias("ts_ms")
-    ).filter(F.col("ts_ms").isNotNull())
-    s1 = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
-        F.min("ts_ms").alias("t1"))
-    s2 = (ev.filter(F.col("event_type") == "click")
-          .join(s1, "user_id").filter(F.col("ts_ms") >= F.col("t1"))
-          .groupBy("user_id").agg(F.min("ts_ms").alias("t2")))
-    s3 = (ev.filter(F.col("event_type") == "purchase")
-          .join(s2, "user_id").filter(F.col("ts_ms") >= F.col("t2"))
-          .groupBy("user_id").agg(F.min("ts_ms").alias("t3")))
-    n1, n2, n3 = (s.agg(F.count("*").cast("long").alias("n")) for s in (s1, s2, s3))
-    return (
-        n1.select(F.col("n").alias("n_view"))
-        .crossJoin(n2.select(F.col("n").alias("n_click")))
-        .crossJoin(n3.select(F.col("n").alias("n_purchase")))
-        .select(
-            "n_view", "n_click", "n_purchase",
-            # try_divide: an empty funnel step yields NULL, not an ANSI
-            # divide-by-zero crash (property-test-found; oracle NULLIFs)
-            F.try_divide(F.col("n_click").cast("double"), F.col("n_view"))
-            .alias("view_to_click"),
-            F.try_divide(F.col("n_purchase").cast("double"), F.col("n_click"))
-            .alias("click_to_purchase"),
-        )
-    )
-
-
-SQL_EVENT_FUNNEL = """
-WITH e AS (
-  SELECT user_id, event_type, epoch_ms(ts) AS ts_ms
-  FROM events WHERE ts IS NOT NULL
-),
-s1 AS (SELECT user_id, MIN(ts_ms) AS t1 FROM e WHERE event_type = 'view' GROUP BY user_id),
-s2 AS (
-  SELECT e.user_id, MIN(ts_ms) AS t2
-  FROM e JOIN s1 USING (user_id)
-  WHERE event_type = 'click' AND ts_ms >= t1 GROUP BY e.user_id
-),
-s3 AS (
-  SELECT e.user_id, MIN(ts_ms) AS t3
-  FROM e JOIN s2 USING (user_id)
-  WHERE event_type = 'purchase' AND ts_ms >= t2 GROUP BY e.user_id
-)
-SELECT CAST((SELECT COUNT(*) FROM s1) AS BIGINT) AS n_view,
-       CAST((SELECT COUNT(*) FROM s2) AS BIGINT) AS n_click,
-       CAST((SELECT COUNT(*) FROM s3) AS BIGINT) AS n_purchase,
-       CAST((SELECT COUNT(*) FROM s2) AS DOUBLE)
-         / NULLIF((SELECT COUNT(*) FROM s1), 0) AS view_to_click,
-       CAST((SELECT COUNT(*) FROM s3) AS DOUBLE)
-         / NULLIF((SELECT COUNT(*) FROM s2), 0) AS click_to_purchase
-"""
-
-
 def q_source_curation_report(spark, sf_dir):
     """Per-source curation dashboard over the round-5 scores: document
     count, PII-document rate (PII planted on doc_id % 7 == 0 exactly as
@@ -4091,89 +3542,6 @@ GROUP BY p.source
 
 
 SQL_SOURCE_CURATION_REPORT = _sql_source_curation_report()
-
-
-def q_dau_wau(spark, sf_dir):
-    """DAU / trailing-7-day WAU / stickiness per day. Distinct aggregates
-    are illegal inside window frames, so WAU uses the standard exact
-    construction: each (user, active-day) contributes itself to the WAU of
-    days d..d+6 via a 7-row explode, then one countDistinct per target day
-    — exact, shuffle keyed on day, no approximation. Output restricted to
-    days that actually have activity; stickiness = try_divide(dau, wau)."""
-    day_ms = 86_400_000
-    ev = _read_events(spark, sf_dir).select(
-        "user_id", (F.floor(_ts_ms_ntz("ts") / day_ms)).cast("long").alias("d")
-    ).filter(F.col("d").isNotNull()).distinct()
-    dau = ev.groupBy("d").agg(F.count_distinct("user_id").cast("long").alias("dau"))
-    wau = (
-        ev.select(
-            "user_id",
-            F.explode(F.sequence(F.col("d"), F.col("d") + 6)).alias("d"),
-        )
-        .groupBy("d")
-        .agg(F.count_distinct("user_id").cast("long").alias("wau"))
-    )
-    return (
-        dau.join(wau, "d")
-        .select(
-            F.col("d").alias("epoch_day"), "dau", "wau",
-            F.try_divide(F.col("dau").cast("double"), F.col("wau")).alias("stickiness"),
-        )
-    )
-
-
-SQL_DAU_WAU = """
-WITH e AS (
-  SELECT DISTINCT user_id,
-         CAST(FLOOR(epoch_ms(ts) / 86400000.0) AS BIGINT) AS d
-  FROM events WHERE ts IS NOT NULL
-),
-dau AS (SELECT d, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dau FROM e GROUP BY d),
-wau AS (
-  SELECT e.d + r.range AS d, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS wau
-  FROM e, range(0, 7) r
-  GROUP BY e.d + r.range
-)
-SELECT dau.d AS epoch_day, dau.dau, wau.wau,
-       CAST(dau.dau AS DOUBLE) / NULLIF(wau.wau, 0) AS stickiness
-FROM dau JOIN wau ON dau.d = wau.d
-"""
-
-
-def q_user_retention(spark, sf_dir):
-    """Weekly cohort retention: users bucketed by first-activity week,
-    counted distinct per (cohort_week, weeks_since) — the standard
-    retention triangle, all integer week arithmetic on epoch ms."""
-    week_ms = 7 * 86_400_000
-    ev = _read_events(spark, sf_dir).select(
-        "user_id", _ts_ms_ntz("ts").alias("ts_ms")
-    ).filter(F.col("ts_ms").isNotNull())
-    wk = ev.select("user_id", F.floor(F.col("ts_ms") / week_ms).alias("week")).distinct()
-    cohort = wk.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    return (
-        wk.join(cohort, "user_id")
-        .groupBy(
-            F.col("cohort_week").cast("long").alias("cohort_week"),
-            (F.col("week") - F.col("cohort_week")).cast("long").alias("weeks_since"),
-        )
-        .agg(F.count_distinct("user_id").cast("long").alias("n_active_users"))
-    )
-
-
-SQL_USER_RETENTION = """
-WITH e AS (
-  SELECT user_id, epoch_ms(ts) AS ts_ms FROM events WHERE ts IS NOT NULL
-),
-wk AS (
-  SELECT DISTINCT user_id, CAST(FLOOR(ts_ms / 604800000.0) AS BIGINT) AS week FROM e
-),
-c AS (SELECT user_id, MIN(week) AS cohort_week FROM wk GROUP BY user_id)
-SELECT CAST(cohort_week AS BIGINT) AS cohort_week,
-       CAST(week - cohort_week AS BIGINT) AS weeks_since,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_active_users
-FROM wk JOIN c USING (user_id)
-GROUP BY cohort_week, weeks_since
-"""
 
 
 def q_cms_user_counts(spark, sf_dir):

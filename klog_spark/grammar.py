@@ -130,22 +130,6 @@ DUMPING_PATTERN = re.compile(r"Dumping (?P<segment_path>.*)")
 STARTING_OFFSET_PATTERN = re.compile(r".*starting offset: (?P<starting_offset>[0-9]+)", re.IGNORECASE)
 
 # Segment-type inference from the dumped segment's parent directory
-# (SegmentDumpReader.java:348-361); topic-name per :340-346 — note the
-# reference keeps only the `-<partition>` suffix (a quirk we mirror in a
-# dedicated column while also extracting the real topic).
+# (SegmentDumpReader.java:348-361).
 TXN_STATE_DIR = re.compile(r".*/__transaction_state-[0-9]+/[^/]+$")
 CONSUMER_OFFSETS_DIR = re.compile(r".*/__consumer_offsets-[0-9]+/[^/]+$")
-TOPIC_PART_DIR = re.compile(r".*/(?P<topic>[a-zA-Z0-9_.-]+)-(?P<partition>[0-9]+)/[^/]+$")
-
-RECORD_CLASSES = (
-    "batch",
-    "data_msg",
-    "control_msg",
-    "txn_state",
-    "txn_deletion",
-    "producer_state",
-    "offset_commit",    # __consumer_offsets decode (tombstone = is_deletion)
-    "group_metadata",   # __consumer_offsets decode (tombstone = is_deletion)
-    "header",
-    "corrupt",
-)

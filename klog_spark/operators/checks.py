@@ -99,29 +99,3 @@ def batch_message_count_check(parsed: DataFrame) -> DataFrame:
         .filter(F.col("count") != F.col("n_messages"))
         .select("batch_doc_id", "file", "line_no", "count", "n_messages")
     )
-
-
-def header_consistency_check(parsed: DataFrame) -> DataFrame:
-    """S2: each dump file must carry its 'Dumping <path>' first line
-    (SegmentDumpReader.java:363-396). Returns offending files. The S3
-    starting-offset cross-check is :func:`starting_offset_mismatches`."""
-    hdr1_files = parsed.filter(
-        (F.col("record_class") == "header") & (F.col("line_no") == 1)
-    ).select("file").distinct()
-    files = parsed.select("file").distinct()
-    return files.join(hdr1_files, "file", "left_anti").select(
-        "file", F.lit("missing_dumping_line").alias("issue")
-    )
-
-
-def starting_offset_mismatches(parsed: DataFrame) -> DataFrame:
-    """Files whose first batch offset precedes the segment-name offset —
-    the spirit of readStartingOffsetLine's cross-check, applied to data."""
-    name_off = F.regexp_extract(F.col("source"), r"/0*([0-9]+)\.log$", 1).cast("long")
-    b = _valid_batches(parsed).withColumn("name_offset", F.coalesce(name_off, F.lit(0)))
-    first = b.groupBy("file").agg(
-        F.min("base_offset").alias("first_offset"), F.first("name_offset").alias("name_offset")
-    )
-    return first.filter(F.col("first_offset") < F.col("name_offset")).select(
-        "file", "name_offset", "first_offset"
-    )

@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_SUM_LIKE = {"sum", "count", "min", "max", "bool_or", "bool_and"}
-
 
 def with_salt(df: DataFrame, salt_buckets: int = 16, from_col: str = "doc_id") -> DataFrame:
     """Deterministic salt column in [0, salt_buckets)."""

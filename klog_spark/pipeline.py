@@ -19,6 +19,7 @@ from .checkpoint import Checkpoint, run_incremental
 from .operators import aggregates, checks, enrich, filters
 from .operators.parse import parse_sequences
 from .operators.route import apply_validity_routing, routed_as_parsed, sink_counts
+from .schemas import PARSED_SCHEMA
 
 
 @dataclass
@@ -50,8 +51,10 @@ class Pipeline:
         return self
 
     def _staged_df(self) -> DataFrame:
+        # the known schema, not inference: empty input stages no data files
         if self._staged is None or self._staged[0] != self.staging_dir:
-            self._staged = (self.staging_dir, self.spark.read.parquet(self.staging_dir))
+            df = self.spark.read.schema(PARSED_SCHEMA).parquet(self.staging_dir)
+            self._staged = (self.staging_dir, df)
         return self._staged[1]
 
     def topic_meta(self) -> DataFrame:

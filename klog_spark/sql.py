@@ -92,62 +92,3 @@ def register_views(spark: SparkSession, input_data, prefix: str = "klog") -> lis
         names.append(name)
     return names
 
-
-def register_corpus_views(spark: SparkSession, docs, prefix: str = "corpus") -> list[str]:
-    """The training-data pipeline surface as SQL views over a documents
-    table (doc_id, text, ...): quality/LM/PII/repetition scoring, exact-dup
-    groups, leakage-safe split, cross-doc repeated spans and the BPE pair
-    statistic — so corpus curation, like the klog analysis, is drivable
-    from pure ``spark.sql``. DataFrame-backed temp views: filters an
-    analyst writes in SQL push down into every underlying plan."""
-    from . import entry_queries as eq
-    from .datapipe.bpe import symbol_pair_counts
-    from .datapipe.dedup import (
-        dedup_paragraph_blocks, exact_duplicates, leakage_safe_split,
-        repeated_ngram_spans,
-    )
-    from .datapipe.textstats import (
-        chunk_quality_filter, lang_id, quality_scores, redact_pii,
-        repetition_scores, unigram_lm_scores,
-    )
-
-    if not isinstance(docs, DataFrame):
-        docs = spark.read.parquet(str(docs))
-    views: dict[str, DataFrame] = {
-        "documents": docs,
-        "quality": quality_scores(docs),
-        "lang": lang_id(docs),
-        "lm_scores": unigram_lm_scores(docs),
-        "pii": redact_pii(docs),
-        "repetition": repetition_scores(docs),
-        "exact_dups": exact_duplicates(docs),
-        "split": leakage_safe_split(docs),
-        "repeated_spans": repeated_ngram_spans(docs),
-        "bpe_pairs": symbol_pair_counts(docs),
-        # round-7 curation surface
-        "block_dedup": dedup_paragraph_blocks(docs),
-        "chunk_quality": chunk_quality_filter(
-            docs, eq.SCORED_FILTER_WEIGHTS, eq.SCORED_FILTER_STATS,
-            max_words=40, overlap=8),
-    }
-    # round-8: cross-source dup matrix (needs a source column) and the
-    # curriculum manifest over the pinned margins
-    if "source" in docs.columns:
-        from .datapipe.dedup import cross_source_dup_matrix
-
-        views["dup_matrix"] = cross_source_dup_matrix(docs)
-    from .datapipe.mixture import curriculum_order
-    from .streaming import scored_filter_stream
-
-    views["curriculum"] = curriculum_order(
-        scored_filter_stream(docs, eq.SCORED_FILTER_WEIGHTS,
-                             eq.SCORED_FILTER_STATS)
-        .select("doc_id", "margin_micro"),
-        "margin_micro", [-2_000_000, 0, 2_000_000],
-    )
-    names = []
-    for view, df in views.items():
-        name = f"{prefix}_{view}"
-        df.createOrReplaceTempView(name)
-        names.append(name)
-    return names

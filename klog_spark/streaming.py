@@ -254,70 +254,6 @@ def group_lag_stream(stream: DataFrame, log_end: DataFrame) -> DataFrame:
     )
 
 
-def event_sessions_stream(events: DataFrame, gap_ms: int = 1800 * 1000,
-                          watermark: str = "2 hours") -> DataFrame:
-    """Watermarked event-time gap sessionization of the telemetry events
-    stream — the streaming twin of entry_queries.q_event_sessions, built on
-    Spark's native ``session_window`` (merging session state handled by the
-    engine, late data bounded by the watermark; sessions spanning
-    micro-batches merge exactly).
-
-    This is NOT the klog txn sessionization the module docstring rules out
-    for streams: gap sessions are a pure event-time construction with no
-    order-of-arrival semantics, so the streaming answer is well-defined.
-
-    Boundary pin (the same 1800s contract the batch query and the Python
-    oracle enforce): a gap of EXACTLY ``gap_ms`` stays in-session;
-    ``session_window`` merges events strictly inside ``window_end = last +
-    gap``, so the window gap is ``gap_ms + 1`` ms. Events with null
-    timestamps have no event time and are dropped (the batch query instead
-    attaches them to the running session — documented divergence, nulls
-    cannot be watermarked).
-
-    Output per closed session: user_id, session_start_ms, session_end_ms,
-    n_events, duration_ms (no session_id — streaming sessions have no
-    stable ordinal; identity is (user_id, session_start_ms)).
-
-    ``watermark`` is the max event-time DISORDER tolerated: input older
-    than (max seen event time - watermark) is dropped by the engine's
-    late-row filter before it can merge. For live telemetry a couple of
-    hours is right; for a historical REPLAY (availableNow over files with
-    arbitrary arrival order) pass a watermark covering the full replayed
-    span, or sessions fragment silently.
-    """
-    # Watermarks demand TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE for
-    # NTZ), but a plain cast would consult the session timezone. The
-    # TZ-independent route is pure epoch arithmetic in both directions:
-    # NTZ -> ms via timestamp_diff against an NTZ epoch literal (wall-clock
-    # subtraction), ms -> TIMESTAMP via timestamp_millis (absolute instant),
-    # and back out with unix_millis. No step reads the session timezone.
-    epoch_ntz = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
-    ev = events.filter(F.col("ts").isNotNull()).withColumn(
-        "event_time",
-        F.timestamp_millis(F.timestamp_diff("MILLISECOND", epoch_ntz, F.col("ts"))),
-    )
-    ms = lambda c: F.unix_millis(F.col(c))  # noqa: E731
-    return (
-        ev.withWatermark("event_time", watermark)
-        .groupBy(
-            F.col("user_id"),
-            F.session_window("event_time", f"{gap_ms + 1} milliseconds").alias("sw"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("event_time").alias("first_event"),
-            F.max("event_time").alias("last_event"),
-        )
-        .select(
-            "user_id",
-            ms("first_event").alias("session_start_ms"),
-            ms("last_event").alias("session_end_ms"),
-            "n_events",
-            (ms("last_event") - ms("first_event")).alias("duration_ms"),
-        )
-    )
-
-
 def dedup_stream(docs: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id",
                  watermark_col: str | None = None,

@@ -53,40 +53,6 @@ def token_series_to_texts(tokens: pd.Series) -> pd.Series:
     return pd.Series(out, index=tokens.index, dtype=object)
 
 
-def token_frequency_topk(df, k: int = 50, tokens_col: str = "tokens"):
-    """Corpus-wide token-frequency top-k over a pre-tokenized sequence table
-    — the canonical vocab-statistics job of a training-data pipeline. The
-    explode is narrow, map-side partial aggregation bounds the shuffle to
-    the vocabulary size (not the token count), and the final top-k is a
-    single-partition sort over |vocab| rows."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    freq = (
-        df.select(F.explode(tokens_col).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.orderBy(F.desc("n"), F.asc("token"))
-    return (
-        freq.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("token", "n", "rank")
-    )
-
-
-def sequence_length_histogram(df, bucket: int = 32, n_tok_col: str = "n_tok"):
-    """Sequence-length distribution in fixed buckets — the pre-training
-    packing/truncation planning stat. Pure map-side-combinable aggregate."""
-    from pyspark.sql import functions as F
-
-    return (
-        df.select((F.floor(F.col(n_tok_col) / bucket) * bucket).cast("long").alias("bucket_start"))
-        .groupBy("bucket_start")
-        .agg(F.count("*").alias("n_sequences"))
-    )
-
-
 def pack_sequences(df, budget: int = 4096, id_col: str = "doc_id",
                    n_tok_col: str = "n_tok"):
     """Streaming token-budget packing: assign each sequence to a training

@@ -12,9 +12,8 @@ FIXTURE_SF = 0.001
 @pytest.fixture(autouse=True)
 def _release_operator_caches():
     """Release operator-owned persisted intermediates after every test
-    (klog_spark.cachereg) — the 195-test shared session otherwise
-    accumulates minhash-signature / DSIR-LM / BM25-length cache blocks
-    across invocations (ADVICE r7)."""
+    (klog_spark.cachereg) — the shared session otherwise accumulates
+    minhash-signature / DSIR-LM / BM25-length cache blocks across tests."""
     from klog_spark.cachereg import release_tracked
 
     yield

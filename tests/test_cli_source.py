@@ -145,78 +145,6 @@ def test_sql_view_surface(spark, fixture_dir):
     assert "base_offset" in cols and "committed_offset" not in cols
 
 
-def test_sql_corpus_view_surface(spark):
-    """register_corpus_views publishes the curation surface for pure-SQL
-    use: scoring views match the API, and a realistic curation query (keep
-    quality-passing, PII-clean, non-duplicate docs) composes across views."""
-    from klog_spark.datapipe.textstats import unigram_lm_scores
-    from klog_spark.sql import register_corpus_views
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    names = register_corpus_views(spark, docs, prefix="c1")
-    assert "c1_lm_scores" in names and "c1_bpe_pairs" in names
-
-    got = {r["doc_id"]: r["avg_nll"]
-           for r in spark.sql("SELECT doc_id, avg_nll FROM c1_lm_scores").collect()}
-    want = {r["doc_id"]: r["avg_nll"] for r in unigram_lm_scores(docs).collect()}
-    assert got == want
-
-    kept = spark.sql("""
-        SELECT q.doc_id
-        FROM c1_quality q
-        JOIN c1_pii p USING (doc_id)
-        LEFT JOIN c1_exact_dups d ON q.doc_id = d.doc_id AND q.doc_id <> d.keep_doc_id
-        WHERE q.passes_quality AND NOT p.had_pii AND d.doc_id IS NULL
-    """).count()
-    assert 0 < kept <= docs.count()
-
-    # round-8 views: the curriculum manifest is queryable (one pos=1 row per
-    # non-empty (bucket, shard)); dup_matrix registers when source exists
-    assert "c1_curriculum" in names and "c1_dup_matrix" in names
-    heads = spark.sql(
-        "SELECT bucket, shard, COUNT(*) n FROM c1_curriculum WHERE pos = 1 "
-        "GROUP BY bucket, shard"
-    ).collect()
-    assert heads and all(r["n"] == 1 for r in heads)
-
-
-def test_cli_corpus_round8_commands(spark, capsys, tmp_path):
-    """Round-8 corpus CLI faces: novelty matches the library on a planted
-    republication; dup-matrix prints the mirror counts; order writes a
-    manifest identical to the gated curriculum query."""
-    from klog_spark import entry_queries as eq
-    from klog_spark.__main__ import main
-
-    docs = "/root/testdata/sf0.001/documents.parquet"
-
-    # novelty: reference = the corpus itself -> every doc is 0-novel
-    ndest = str(tmp_path / "novelty")
-    assert main(["corpus", "novelty", docs, "--reference", docs,
-                 "--out", ndest], spark=spark) == 0
-    nov = spark.read.parquet(ndest)
-    assert nov.filter(F.col("novelty_ppm") != 0).count() == 0
-
-    # dup-matrix over a two-source mirror corpus
-    rows = [(1, "same text here", "web"), (2, "same text here", "wiki"),
-            (3, "unique content", "web")]
-    mpath = str(tmp_path / "mirror")
-    spark.createDataFrame(rows, "doc_id long, text string, source string") \
-        .write.parquet(mpath)
-    assert main(["corpus", "dup-matrix", mpath], spark=spark) == 0
-    assert "web" in capsys.readouterr().out
-
-    # order: CLI face == gated curriculum query row-exact
-    odest = str(tmp_path / "manifest")
-    # leading-minus values must use the --flag=value form (argparse)
-    tvals = ",".join(str(t) for t in eq.CURRICULUM_THRESHOLDS)
-    assert main(["corpus", "order", docs, "--out", odest,
-                 f"--thresholds={tvals}"], spark=spark) == 0
-    got = {tuple(r) for r in spark.read.parquet(odest).collect()}
-    want = {tuple(r)
-            for r in eq.q_curriculum_order(spark, "/root/testdata/sf0.001").collect()}
-    assert got == want
-
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -423,220 +351,3 @@ def test_cli_segment_health(spark, dump_dir, capsys):
                for ln in out}
     assert {r["file"]: r["corrupt_rate"] for r in view} == printed
     assert any(rate > 0 for rate in printed.values())
-
-
-def test_cli_corpus_commands(spark, capsys, tmp_path):
-    """The corpus CLI family end to end over the driver documents fixture:
-    stats aggregates per source, shard writes a dense permutation whose
-    printed manifest proves it, chunk covers every word, curate writes a
-    deduplicated scrubbed corpus no larger than its input."""
-    from klog_spark.__main__ import main
-
-    docs = "/root/testdata/sf0.001/documents.parquet"
-    n_docs = spark.read.parquet(docs).count()
-
-    assert main(["corpus", "stats", docs], spark=spark) == 0
-    stats_lines = [ln for ln in capsys.readouterr().out.splitlines() if "n_docs=" in ln]
-    assert sum(int(ln.split("n_docs=")[1].split()[0]) for ln in stats_lines) == n_docs
-
-    dest = str(tmp_path / "shards")
-    assert main(["corpus", "shard", docs, "--out", dest, "--n-shards", "4",
-                 "--seed", "cli", "--hash-fn", "java32"], spark=spark) == 0
-    out = capsys.readouterr().out
-    man = [ln for ln in out.splitlines() if "content_checksum=" in ln]
-    assert len(man) == 4
-    total = 0
-    for ln in man:
-        nd = int(ln.split("n_docs=")[1].split()[0])
-        mp = int(ln.split("max_position=")[1].split()[0])
-        assert mp == nd - 1                       # dense 0-based positions
-        total += nd
-    assert total == n_docs
-    assert spark.read.parquet(dest).count() == n_docs
-
-    cdest = str(tmp_path / "chunks")
-    assert main(["corpus", "chunk", docs, "--out", cdest,
-                 "--max-words", "50", "--overlap", "10"], spark=spark) == 0
-    chunked = spark.read.parquet(cdest)
-    assert chunked.select("doc_id").distinct().count() <= n_docs
-    assert chunked.filter("n_chunk_words > 50").count() == 0
-
-    qdest = str(tmp_path / "curated")
-    assert main(["corpus", "curate", docs, "--out", qdest], spark=spark) == 0
-    curated = spark.read.parquet(qdest)
-    assert 0 < curated.count() <= n_docs
-    assert set(curated.columns) == {"doc_id", "source", "text",
-                                    "n_kept_words", "n_removed_words"}
-
-    sdest = str(tmp_path / "scored")
-    assert main(["corpus", "score", docs, "--out", sdest], spark=spark) == 0
-    from klog_spark import entry_queries as eq
-
-    scored = spark.read.parquet(sdest)
-    assert scored.count() == n_docs
-    want = {r["doc_id"]: (r["kept"], r["margin_micro"])
-            for r in eq.q_scored_quality_filter(
-                spark, "/root/testdata/sf0.001").collect()}
-    got = {r["doc_id"]: (r["kept"], r["margin_micro"]) for r in scored.collect()}
-    assert got == want                      # CLI face == gated query, row-exact
-
-
-def test_cli_corpus_round7_commands(spark, capsys, tmp_path):
-    """Round-7 corpus CLI faces: sample == the gated rejection-sample
-    query row-exact; decontaminate drops a planted train->test leak;
-    embed writes normalized hashed vectors; rebalance keeps every vector
-    of cells at or under the cap."""
-    from klog_spark import entry_queries as eq
-    from klog_spark.__main__ import main
-
-    docs = "/root/testdata/sf0.001/documents.parquet"
-    n_docs = spark.read.parquet(docs).count()
-
-    # sample: CLI face == gated quality_rejection_sample at the same T
-    sdest = str(tmp_path / "sampled")
-    assert main(["corpus", "sample", docs, "--out", sdest,
-                 "--temperature-micro", str(eq.QRS_TEMPERATURE_MICRO)], spark=spark) == 0
-    got = {r["doc_id"]: (r["margin_micro"], r["u_micro"], r["kept"])
-           for r in spark.read.parquet(sdest).collect()}
-    want = {r["doc_id"]: (r["margin_micro"], r["u_micro"], r["kept"])
-            for r in eq.q_quality_rejection_sample(
-                spark, "/root/testdata/sf0.001").collect()}
-    assert got == want
-
-    # decontaminate: doc 0's text re-published as a benchmark doc
-    leak = spark.read.parquet(docs).filter(F.col("doc_id") == 0) \
-        .select((F.col("doc_id") + 900000).alias("doc_id"), "text")
-    test_path = str(tmp_path / "bench_docs")
-    leak.write.mode("overwrite").parquet(test_path)
-    ddest = str(tmp_path / "decon")
-    assert main(["corpus", "decontaminate", docs, "--test", test_path,
-                 "--out", ddest, "--n", "5", "--min-common", "3"], spark=spark) == 0
-    dec = {r["doc_id"]: r["kept"] for r in spark.read.parquet(ddest).collect()}
-    assert len(dec) == n_docs and dec[0] is False
-    assert sum(0 if k else 1 for k in dec.values()) < n_docs / 2
-
-    # decontaminate with COLLIDING doc_ids (ADVICE r7): independent corpora
-    # both numbered from 0 must not cross-label — a test doc reusing train
-    # id 0 with UNRELATED text leaves train doc 0 kept, while a test doc
-    # whose text replays train doc 1 drops train doc 1 regardless of ids.
-    tr_rows = [(0, "alpha beta gamma delta epsilon zeta eta theta"),
-               (1, "one two three four five six seven eight nine"),
-               (2, "totally different content nothing shared here at all")]
-    te_rows = [(0, "unrelated benchmark text with fresh vocabulary words"),
-               (1, "one two three four five six seven eight nine")]
-    ctr = str(tmp_path / "coll_train")
-    cte = str(tmp_path / "coll_test")
-    spark.createDataFrame(tr_rows, "doc_id long, text string").write.parquet(ctr)
-    spark.createDataFrame(te_rows, "doc_id long, text string").write.parquet(cte)
-    cdest = str(tmp_path / "coll_decon")
-    assert main(["corpus", "decontaminate", ctr, "--test", cte,
-                 "--out", cdest, "--n", "5", "--min-common", "3"], spark=spark) == 0
-    crows = spark.read.parquet(cdest).collect()
-    cdec = {r["doc_id"]: r["kept"] for r in crows}
-    assert len(crows) == 3, "colliding ids must not duplicate decision rows"
-    assert cdec == {0: True, 1: False, 2: True}
-
-    # embed: unit-norm vectors (or zero for empty docs), requested dim
-    edest = str(tmp_path / "embedded")
-    assert main(["corpus", "embed", docs, "--out", edest, "--dim", "16"], spark=spark) == 0
-    emb = spark.read.parquet(edest)
-    assert emb.count() == n_docs
-    nrm2 = F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x)
-    bad = emb.select(F.size("embedding").alias("d"), nrm2.alias("n2")) \
-        .filter((F.col("d") != 16) | ((F.abs(F.col("n2") - 1.0) > 1e-9) & (F.col("n2") != 0.0)))
-    assert bad.count() == 0
-
-    # rebalance: big cap keeps everything
-    rdest = str(tmp_path / "rebalanced")
-    embs = "/root/testdata/sf0.001/embeddings.parquet"
-    n_vecs = spark.read.parquet(embs).count()
-    assert main(["corpus", "rebalance", embs, "--out", rdest,
-                 "--cap", str(n_vecs), "--n-centroids", "4"], spark=spark) == 0
-    reb = spark.read.parquet(rdest)
-    assert reb.count() == n_vecs
-    assert reb.filter(~F.col("kept")).count() == 0
-
-
-def test_cli_corpus_new_round7_commands(spark, capsys, tmp_path):
-    """Late round-7 corpus CLI faces: dedup-blocks == the batch operator
-    row-exact; badwords decisions match wordlist_filter; diff status counts
-    are exact on a constructed v2; calibrate prints one confusion row per
-    threshold with counts partitioning n_docs."""
-    from klog_spark.__main__ import main
-    from klog_spark.datapipe.dedup import dedup_paragraph_blocks
-    from klog_spark.datapipe.textstats import wordlist_filter
-
-    docs = "/root/testdata/sf0.001/documents.parquet"
-    ddf = spark.read.parquet(docs)
-    n_docs = ddf.count()
-
-    bdest = str(tmp_path / "blocks")
-    assert main(["corpus", "dedup-blocks", docs, "--out", bdest,
-                 "--block-words", "8"], spark=spark) == 0
-    got = {r["doc_id"]: (r["n_blocks"], r["n_kept_blocks"], r["kept_text"])
-           for r in spark.read.parquet(bdest).collect()}
-    want = {r["doc_id"]: (r["n_blocks"], r["n_kept_blocks"], r["kept_text"])
-            for r in dedup_paragraph_blocks(ddf, block_words=8).collect()}
-    assert got == want
-
-    wdest = str(tmp_path / "badwords")
-    assert main(["corpus", "badwords", docs, "--out", wdest,
-                 "--blocklist", "slow,dup", "--max-ppm", "30000"],
-                spark=spark) == 0
-    got = {r["doc_id"]: (r["n_blocked"], r["keep"])
-           for r in spark.read.parquet(wdest).collect()}
-    want = {r["doc_id"]: (r["n_blocked"], r["keep"])
-            for r in wordlist_filter(ddf, ["slow", "dup"],
-                                     max_ppm=30_000).collect()}
-    assert got == want
-
-    v2 = str(tmp_path / "v2.parquet")
-    ddf.filter("doc_id % 3 != 0").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 4 == 1, F.concat("text", F.lit(" x")))
-        .otherwise(F.col("text")).alias("text"),
-    ).write.parquet(v2)
-    fdest = str(tmp_path / "diff")
-    assert main(["corpus", "diff", docs, "--new", v2, "--out", fdest],
-                spark=spark) == 0
-    diff = {r["status"]: r["count"]
-            for r in spark.read.parquet(fdest).groupBy("status").count().collect()}
-    assert diff.get("added") is None                # v2 adds nothing
-    assert diff["removed"] == ddf.filter("doc_id % 3 = 0").count()
-    assert diff["changed"] == ddf.filter(
-        "doc_id % 3 != 0 and doc_id % 4 = 1").count()
-    assert sum(diff.values()) == n_docs
-
-    capsys.readouterr()
-    assert main(["corpus", "calibrate", docs,
-                 "--thresholds=-1000000,0,1000000"], spark=spark) == 0
-    out = capsys.readouterr().out
-    rows = [ln for ln in out.splitlines() if "threshold_micro=" in ln]
-    assert len(rows) == 3
-    for ln in rows:
-        tp = int(ln.split("tp=")[1].split()[0])
-        fp = int(ln.split("fp=")[1].split()[0])
-        fn = int(ln.split("fn=")[1].split()[0])
-        tn = int(ln.split("tn=")[1].split()[0])
-        assert tp + fp + fn + tn == n_docs
-
-
-def test_cli_corpus_dsir(spark, tmp_path):
-    """dsir CLI face == the operator row-exact, with the gate's src0 target."""
-    from klog_spark.__main__ import main
-    from klog_spark.datapipe.mixture import dsir_importance_sample
-
-    docs = "/root/testdata/sf0.001/documents.parquet"
-    ddf = spark.read.parquet(docs)
-    tgt = str(tmp_path / "target.parquet")
-    ddf.filter("source = 'src0'").write.parquet(tgt)
-    dest = str(tmp_path / "dsir")
-    assert main(["corpus", "dsir", docs, "--target", tgt, "--k", "10",
-                 "--out", dest], spark=spark) == 0
-    got = {r["doc_id"]: (r["weight_micro"], r["key_micro"], r["selected"])
-           for r in spark.read.parquet(dest).collect()}
-    want = {r["doc_id"]: (r["weight_micro"], r["key_micro"], r["selected"])
-            for r in dsir_importance_sample(
-                ddf, ddf.filter("source = 'src0'"), k=10).collect()}
-    assert got == want
-    assert sum(1 for v in got.values() if v[2]) == 10

@@ -743,82 +743,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
         assert got == want
 
 
-def test_interval_join_semantics(spark):
-    """Bucketed containment join: inclusive boundaries, multi-bucket
-    intervals, no duplicates, non-matching points dropped."""
-    from klog_spark.operators.asof import interval_join
-
-    pts = spark.createDataFrame(
-        [(1, "k", 10), (2, "k", 25), (3, "k", 99), (4, "k", 100), (5, "k", 101),
-         (6, "x", 50)],
-        "pid long, k string, ts long",
-    )
-    ivs = spark.createDataFrame(
-        [("k", 10, 100, "A"),   # spans many width-7 buckets; 10 and 100 inclusive
-         ("k", 24, 26, "B"),    # nested: point 25 matches both A and B
-         ("x", 0, 10, "C")],
-        "k string, s long, e long, name string",
-    )
-    out = interval_join(pts, ivs, point_ts="ts", start="s", end="e",
-                        by=["k"], bucket_width=7)
-    got = sorted((r["pid"], r["name"]) for r in out.collect())
-    assert got == [(1, "A"), (2, "A"), (2, "B"), (3, "A"), (4, "A")]
-
-
-def test_interval_join_oversize_cap(spark):
-    """Replication contract (VERDICT r4 #2): an interval spanning more than
-    ``max_interval_buckets`` buckets — a month-long outlier against a
-    30-minute bucket width — must NEVER enter the explode. It is either
-    routed to the broadcast BETWEEN path (results identical to naive) or,
-    under on_oversize='error', fails the job executor-side."""
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    from klog_spark.operators.asof import _interval_span_buckets, interval_join
-
-    wk = 1800 * 1000  # 30-minute buckets
-    month = 30 * 86_400_000
-    pts = spark.createDataFrame(
-        [(i, "k", i * 6 * 3_600_000) for i in range(20)]  # every 6h for 5 days
-        + [(100, "k", month + 10 * wk), (101, "x", 3 * wk)],
-        "pid long, k string, ts long",
-    )
-    ivs = spark.createDataFrame(
-        [("k", 0, month, "MONTH"),            # pathological: 1441 buckets
-         ("k", 0, 2 * wk, "NORMAL"),          # 3 buckets
-         ("x", 2 * wk, 4 * wk, "OTHERKEY")],  # 3 buckets
-        "k string, s long, e long, name string",
-    )
-    naive = sorted(
-        (p, n)
-        for p, key, t in [(r["pid"], r["k"], r["ts"]) for r in pts.collect()]
-        for key2, s, e, n in [(r["k"], r["s"], r["e"], r["name"]) for r in ivs.collect()]
-        if key == key2 and s <= t <= e
-    )
-    out = interval_join(pts, ivs, point_ts="ts", start="s", end="e", by=["k"],
-                        bucket_width=wk, max_interval_buckets=8)
-    assert sorted((r["pid"], r["name"]) for r in out.collect()) == naive
-
-    # the month interval is provably outside the explode's input set...
-    spans = {r["name"]: r["span"] for r in ivs.select(
-        "name", _interval_span_buckets("s", "e", wk).alias("span")).collect()}
-    assert spans["MONTH"] > 8 >= spans["NORMAL"]
-    # ...and the oversized tail goes through a broadcast join in the plan
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan
-
-    # on_oversize='error': the guard must actually evaluate (it is folded
-    # into the sequence bound so Catalyst cannot prune it) and kill the job
-    with pytest.raises(SparkRuntimeException, match="interval_join"):
-        interval_join(pts, ivs, point_ts="ts", start="s", end="e", by=["k"],
-                      bucket_width=wk, max_interval_buckets=8,
-                      on_oversize="error").collect()
-    # ...and pass cleanly when every interval is within contract
-    ok = interval_join(pts, ivs, point_ts="ts", start="s", end="e", by=["k"],
-                       bucket_width=wk, max_interval_buckets=2000,
-                       on_oversize="error")
-    assert sorted((r["pid"], r["name"]) for r in ok.collect()) == naive
-
-
 def test_kmv_sketch_non_string_group_keys(spark):
     """`by` columns keep their input types in the output (the partial's
     schema is built from df.schema, not hardcoded StringType) — grouping by

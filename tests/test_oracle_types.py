@@ -12,9 +12,6 @@ level so the gap can never reopen:
    for the lint itself.
 2. Every registered oracle (driver 50 + extras) must produce an Arrow output
    schema with no decimal / unsigned / float16 column.
-3. For the events family (the r3/r4 red set), the DuckDB Arrow output types
-   must equal the Spark result schema types field by field — the type-level
-   twin of the driver's value-hash gate.
 """
 
 from __future__ import annotations
@@ -23,8 +20,6 @@ import sys
 from pathlib import Path
 
 import duckdb
-import pytest
-from pyspark.sql import types as T
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -123,45 +118,3 @@ def test_all_driver_row_spark_schemas_flat(spark):
         if viol:
             bad[name] = viol
     assert not bad, bad
-
-
-# Spark result type -> acceptable DuckDB Arrow types. string/large_string
-# both map to Spark StringType depending on DuckDB version.
-_SPARK_TO_ARROW = {
-    T.LongType(): {"int64"},
-    T.IntegerType(): {"int32"},
-    T.DoubleType(): {"double"},
-    T.FloatType(): {"float"},
-    T.StringType(): {"string", "large_string"},
-    T.BooleanType(): {"bool"},
-    T.DateType(): {"date32[day]"},
-    T.TimestampNTZType(): {"timestamp[us]", "timestamp[ns]"},
-}
-
-_EVENTS_FAMILY = [
-    "events_daily",
-    "event_sessions",
-    "events_rolling_7d",
-    "event_session_interval_join",
-    "events_hypertable",
-]
-
-
-@pytest.mark.parametrize("name", _EVENTS_FAMILY)
-def test_events_oracle_types_match_spark(spark, name):
-    """Field-by-field type equality between the Spark result schema and the
-    oracle's Arrow output schema — fails on any representation divergence
-    (HUGEINT, DECIMAL, unsigned) even when values would hash equal."""
-    qs = {**entry.queries(), **entry.extra_queries()}
-    oss = {**entry.oracle_sql(), **entry.extra_oracle_sql()}
-    sschema = {f.name.lower(): f.dataType for f in qs[name](spark, SF_DIR).schema}
-    con = _oracle_con()
-    aschema = con.execute(oss[name]).arrow().schema
-    oschema = {f.name.lower(): str(f.type) for f in aschema}
-    assert sorted(sschema) == sorted(oschema)
-    for col, sparktype in sschema.items():
-        allowed = _SPARK_TO_ARROW.get(sparktype)
-        assert allowed is not None, f"{name}.{col}: unmapped Spark type {sparktype}"
-        assert oschema[col] in allowed, (
-            f"{name}.{col}: Spark {sparktype} vs oracle Arrow {oschema[col]}"
-        )

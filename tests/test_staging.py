@@ -204,6 +204,33 @@ def test_checkpoint_crash_recovery_no_duplicates(spark, fixture_dir, tmp_path):
     assert spark.read.parquet(f"{out}/routed").count() == total
 
 
+def test_empty_input_gives_empty_answers(spark, tmp_path):
+    """Zero input rows: staging writes no data files, yet every staged query
+    and an incremental run answer as the direct parse does (no rows, zero
+    counts) instead of failing to infer the schema of an empty table."""
+    from klog_spark.checkpoint import Checkpoint, read_routed_committed, run_incremental
+    from klog_spark.pipeline import Pipeline
+    from klog_spark.schemas import INPUT_SCHEMA
+
+    inp = str(tmp_path / "sequences.parquet")
+    spark.createDataFrame([], INPUT_SCHEMA).write.parquet(inp)
+
+    direct = Pipeline(spark, str(tmp_path))
+    staged = Pipeline(spark, str(tmp_path)).stage(str(tmp_path / "staged"))
+    assert staged.sink_counts().collect() == []
+    (row,) = staged.txn_stats().collect()
+    assert row.asDict() == direct.txn_stats().collect()[0].asDict()
+    assert row["num_committed"] == row["num_aborted"] == row["num_open_txn"] == 0
+    assert staged.open_txn_abort_commands().count() == 0
+    for name, df in staged.all_checks().items():
+        assert df.count() == 0, name
+
+    ckpt = Checkpoint(tmp_path / "sink" / "_checkpoint")
+    r = run_incremental(spark, inp, str(tmp_path / "sink"), ckpt)
+    assert r["n_files"] == 0 and r["sink_counts"] == {}
+    assert read_routed_committed(spark, str(tmp_path / "sink"), ckpt).count() == 0
+
+
 def test_write_routed_bounds_file_count(spark, fixture_dir, tmp_path):
     """The pre-shuffled routed write must emit ~write_tasks files, not
     tasks x sinks (the small-files explosion the pre-shuffle exists to

@@ -194,66 +194,6 @@ def test_group_lag_stream_matches_batch(spark, fixture_dir, stream_input, tmp_pa
     assert got == want and got
 
 
-def test_event_sessions_stream_matches_python_oracle(spark, tmp_path_factory):
-    """Native session_window gap sessionization: sessions split across
-    micro-batches must merge to exactly the batch/Python-oracle sessions
-    (same 1800s boundary contract: delta == gap stays in-session), under a
-    hostile non-UTC session timezone (the NTZ->TIMESTAMP conversion is
-    pure epoch arithmetic, never the session TZ)."""
-    from klog_spark.streaming import event_sessions_stream
-
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").filter(
-            F.col("ts").isNotNull()
-        )
-        src = tmp_path_factory.mktemp("ev_stream")
-        # several files, rows shuffled across them: sessions arrive split
-        # and out of order over micro-batches
-        ev.repartition(5).write.mode("overwrite").parquet(str(src))
-
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        # the shuffled files interleave a MONTH of event time across
-        # micro-batches; the watermark must cover that disorder or the
-        # late-drop filter discards old events (the operator's documented
-        # replay contract)
-        q = (
-            event_sessions_stream(stream, watermark="60 days")
-            .writeStream.format("memory").queryName("ev_sessions")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        got = {
-            (r["user_id"], r["session_start_ms"], r["session_end_ms"], r["n_events"])
-            for r in spark.sql("select * from ev_sessions").collect()
-        }
-
-        # sequential oracle over the same (null-free) events
-        from test_events_property import _python_sessions
-
-        events = [
-            (r["event_id"],
-             int(r["ts"].replace(tzinfo=__import__("datetime").timezone.utc)
-                 .timestamp() * 1000),
-             r["user_id"], r["event_type"], r["value"])
-            for r in ev.collect()
-        ]
-        want = {
-            (uid, lo, hi, n)
-            for (uid, _sid), (n, lo, hi, _dur) in _python_sessions(events).items()
-        }
-        assert got == want and len(got) > 50
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
-
-
 def test_dedup_stream_matches_batch_distinct(spark, tmp_path_factory):
     """Streaming exact dedup: over any micro-batch split, exactly one row
     per distinct text survives, and the surviving digest set equals the

@@ -28,28 +28,6 @@ def test_codepoint_encoding_is_invertible_identity():
     assert values.tolist() == [ord(c) for c in text]
 
 
-def test_token_frequency_topk_matches_python(spark):
-    from collections import Counter
-
-    from klog_spark.tokens import token_frequency_topk
-
-    rows = [(f"d{i}", [1, 2, 2, 3] * (i + 1), 4 * (i + 1), "s") for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id: string, tokens: array<int>, n_tok: int, source: string")
-    got = [(r["token"], r["n"], r["rank"]) for r in token_frequency_topk(df, k=3).collect()]
-    cnt = Counter(t for _, toks, _, _ in rows for t in toks)
-    want = [(t, n, i + 1) for i, (t, n) in enumerate(sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:3])]
-    assert sorted(got, key=lambda x: x[2]) == want
-
-
-def test_sequence_length_histogram(spark):
-    from klog_spark.tokens import sequence_length_histogram
-
-    rows = [(f"d{i}", [0], n, "s") for i, n in enumerate([0, 5, 31, 32, 33, 64, 100])]
-    df = spark.createDataFrame(rows, "doc_id: string, tokens: array<int>, n_tok: int, source: string")
-    got = {r["bucket_start"]: r["n_sequences"] for r in sequence_length_histogram(df, bucket=32).collect()}
-    assert got == {0: 3, 32: 2, 64: 1, 96: 1}
-
-
 def test_bpe_train_and_encode(spark):
     """Distributed BPE: the learned merges must equal an independent
     pure-Python reference BPE computed straight from the raw texts (no

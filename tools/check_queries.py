@@ -32,7 +32,7 @@ import pyarrow as pa
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "events documents embeddings".split()
 
 
 def _norm(v):

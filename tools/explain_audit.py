@@ -133,15 +133,11 @@ def main() -> None:
     assert "CartesianProduct" not in pq_plan and "BroadcastNestedLoopJoin" not in pq_plan
 
     # 8e. named custom-operator classes: as-of is windows (no join at all),
-    #     the range join is a bucket equi-join, neither may nest loops
+    #     and may not nest loops
     af = eq.q_batch_state_asof(spark, SF_DIR)
     af_plan = plan_of(af, "simple")
     sections.append(("AS-OF join (union+window)", plan_of(af), ["Window"]))
     assert "CartesianProduct" not in af_plan and "BroadcastNestedLoopJoin" not in af_plan
-    ij = eq.q_event_session_interval_join(spark, SF_DIR)
-    ij_plan = plan_of(ij, "simple")
-    sections.append(("range join (bucketed containment)", plan_of(ij), ["Join"]))
-    assert "CartesianProduct" not in ij_plan and "BroadcastNestedLoopJoin" not in ij_plan
 
     # 8f. round-5 corpus operators: LM scoring is three keyed shuffles
     #     (word count, score join, doc agg) with map-side partials; the

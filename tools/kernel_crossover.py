@@ -55,13 +55,13 @@ def make_corpus(spark, n_docs: int, doc_len: int, out: str,
 
 
 def time_kernel(docs, hash_fn: str) -> float:
-    t0 = time.time()
+    t0 = time.perf_counter()
     sigs = minhash_signatures(docs, num_hashes=64, shingle_n=3, hash_fn=hash_fn)
     sigs.agg(
         F.count("*").alias("n"),
         F.sum(F.element_at("signature", 1)).alias("s1"),
     ).collect()
-    return time.time() - t0
+    return time.perf_counter() - t0
 
 
 def main() -> None:
@@ -76,13 +76,14 @@ def main() -> None:
         try:
             make_corpus(spark, n_docs, L, f"{out}/docs", word_pad)
             docs = spark.read.parquet(f"{out}/docs")
-            docs.limit(16).collect()  # warm the scan (excluded)
+            time_kernel(docs, KERNELS[0])  # untimed full pass: warm scan + codegen
             best = {k: float("inf") for k in KERNELS}
             sanity = {}
             for _ in range(reps):
                 for k in KERNELS:  # alternate kernels within each rep
                     best[k] = min(best[k], time_kernel(docs, k))
-            # sanity: both kernels must emit one signature per doc
+            # presence-only sanity: both kernels emit one signature per doc
+            # (signature VALUES are checked by the dedup recall pytests)
             for k in KERNELS:
                 sanity[k] = minhash_signatures(docs, 64, 3, hash_fn=k).count()
             assert sanity["xxhash64"] == sanity["xxhash64_words"] == n_docs, sanity
