@@ -370,11 +370,11 @@ def cmd_segment_health(spark, args) -> int:
 
 
 def cmd_route(spark, args) -> int:
-    from .operators.route import sink_counts, write_routed
+    from .operators.route import read_routed, sink_counts, write_routed
 
     routed = _routed(spark, args.input)
     write_routed(routed, args.out, write_tasks=args.write_tasks)
-    _print_rows(sink_counts(spark.read.parquet(args.out)))
+    _print_rows(sink_counts(read_routed(spark, args.out)))
     print(f"routed staging written to {args.out}")
     return 0
 

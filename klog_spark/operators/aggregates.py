@@ -307,10 +307,9 @@ def deep_iteration_files(parsed: DataFrame) -> DataFrame:
     """S4: per-file deep-iteration flag. klog sniffs lines 3-4 for a
     leading '| ' (SegmentDumpReader.java:136-163); at table scale the flag
     is simply 'does the file contain record lines'."""
-    msg_classes = MSG_CLASSES
     files = parsed.filter(F.col("record_class") != "header").select("file").distinct()
     deep = (
-        parsed.filter(F.col("record_class").isin(*msg_classes))
+        parsed.filter(F.col("record_class").isin(*MSG_CLASSES))
         .select("file").distinct().withColumn("deep_iteration", F.lit(True))
     )
     return files.join(deep, "file", "left").fillna(False, ["deep_iteration"])
@@ -321,14 +320,11 @@ def nest_messages(parsed: DataFrame) -> DataFrame:
     batch with its record lines collected as an ordered array of structs
     (Batch.messages, Batch.java:53). Shuffles once on the batch key; message
     arrays are bounded by batch `count` (small), so no skew concern."""
-    from .aggregates import attach_parent_batch  # self-import safe
-
-    msg_classes = MSG_CLASSES
     with_parent = attach_parent_batch(
-        parsed.filter(F.col("record_class").isin("batch", *msg_classes))
+        parsed.filter(F.col("record_class").isin("batch", *MSG_CLASSES))
     )
     msgs = with_parent.filter(
-        F.col("record_class").isin(*msg_classes) & F.col("parent").isNotNull()
+        F.col("record_class").isin(*MSG_CLASSES) & F.col("parent").isNotNull()
     ).select(
         F.col("parent.doc_id").alias("batch_doc_id"),
         F.struct(

@@ -74,12 +74,11 @@ def batch_message_count_check(parsed: DataFrame) -> DataFrame:
     number of record lines grouped under it (the reference's stateful
     `expect` counter, SegmentDumpReader.java:182-203, which throws on
     mismatch). Flags batches whose message-line count differs."""
-    msg_classes = MSG_CLASSES
     with_parent = attach_parent_batch(
-        parsed.filter(F.col("record_class").isin("batch", *msg_classes))
+        parsed.filter(F.col("record_class").isin("batch", *MSG_CLASSES))
     )
     msg_counts = (
-        with_parent.filter(F.col("record_class").isin(*msg_classes) & F.col("parent").isNotNull())
+        with_parent.filter(F.col("record_class").isin(*MSG_CLASSES) & F.col("parent").isNotNull())
         .groupBy(F.col("parent.doc_id").alias("batch_doc_id"))
         .agg(F.count("*").alias("n_messages"))
     )
@@ -92,7 +91,7 @@ def batch_message_count_check(parsed: DataFrame) -> DataFrame:
     # only deep-iteration files carry message lines at all: flag within
     # files that have at least one message line
     deep_files = (
-        parsed.filter(F.col("record_class").isin(*msg_classes)).select("file").distinct()
+        parsed.filter(F.col("record_class").isin(*MSG_CLASSES)).select("file").distinct()
     )
     return (
         joined.join(F.broadcast(deep_files), "file", "left_semi")

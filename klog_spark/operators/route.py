@@ -26,6 +26,7 @@ from ..schemas import (
     DATA_MSG_COLS,
     GROUP_METADATA_COLS,
     GROUP_OFFSET_COLS,
+    PARSED_SCHEMA,
     PRODUCER_STATE_COLS,
     TXN_STATE_COLS,
 )
@@ -206,9 +207,15 @@ def pre_shuffle_for_write(parsed: DataFrame, write_tasks: int) -> DataFrame:
     )
 
 
+def read_routed(spark, out_dir: str) -> DataFrame:
+    """Read a routed staging table with its known schema, not inference:
+    empty input stages no data files, only ``_SUCCESS``."""
+    return spark.read.schema(PARSED_SCHEMA).parquet(out_dir)
+
+
 def read_sink(spark, out_dir: str, record_class: str) -> DataFrame:
     """Read one sink with partition pruning + the klog per-class projection."""
-    df = spark.read.parquet(out_dir).filter(F.col("record_class") == record_class)
+    df = read_routed(spark, out_dir).filter(F.col("record_class") == record_class)
     cols = SINK_PROJECTIONS.get(record_class)
     return df.select(*cols) if cols else df
 

@@ -18,8 +18,7 @@ from pyspark.sql import functions as F
 from .checkpoint import Checkpoint, run_incremental
 from .operators import aggregates, checks, enrich, filters
 from .operators.parse import parse_sequences
-from .operators.route import apply_validity_routing, routed_as_parsed, sink_counts
-from .schemas import PARSED_SCHEMA
+from .operators.route import apply_validity_routing, read_routed, routed_as_parsed, sink_counts
 
 
 @dataclass
@@ -51,10 +50,8 @@ class Pipeline:
         return self
 
     def _staged_df(self) -> DataFrame:
-        # the known schema, not inference: empty input stages no data files
         if self._staged is None or self._staged[0] != self.staging_dir:
-            df = self.spark.read.schema(PARSED_SCHEMA).parquet(self.staging_dir)
-            self._staged = (self.staging_dir, df)
+            self._staged = (self.staging_dir, read_routed(self.spark, self.staging_dir))
         return self._staged[1]
 
     def topic_meta(self) -> DataFrame:

@@ -79,6 +79,19 @@ def get_spark(
         # allocation-failure GCs (measured 2.7x on 16-core full-width
         # transfers). Size it explicitly.
         "spark.driver.extraJavaOptions": "-XX:MaxDirectMemorySize=16g",
+        # Generated-class cache (an LRU, default 100 entries): it must hold
+        # the klog query surface's working set of distinct generated classes,
+        # or every warm pass recompiles its plans with Janino. Working set =
+        # compiles of one cold pass (``compiled_classes`` below): 163-167
+        # for the seven staged queries, 390 for one round of the 38
+        # ``klog_*`` rows of ``__spark_entry__``. At 100 entries each warm
+        # staged pass recompiled 152-158 of them; at 1000 it compiles none,
+        # and staged latency_s_p50 fell 25 % (10 of 10 alternating pairs,
+        # 4 vCPU). 1000 is 2.5x the larger set. Re-measure when adding
+        # operators: ``tools/check_queries.py`` prints the compiles of the
+        # rows it runs, tests/test_session.py those of two staged passes.
+        # Static conf: it takes effect only when the JVM starts.
+        "spark.sql.codegen.cache.maxEntries": "1000",
         "spark.ui.enabled": "false",
     }
     if extra_conf:
@@ -86,3 +99,10 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def compiled_classes(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far: one per miss of the
+    generated-class cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -231,6 +231,25 @@ def test_empty_input_gives_empty_answers(spark, tmp_path):
     assert read_routed_committed(spark, str(tmp_path / "sink"), ckpt).count() == 0
 
 
+def test_empty_staging_sink_readers(spark, tmp_path, capsys):
+    """Zero input rows: the sink reader and the route CLI's sink-count
+    re-read answer with no rows instead of failing to infer the schema of a
+    staging table that holds only ``_SUCCESS``."""
+    from klog_spark.__main__ import main
+    from klog_spark.operators.route import SINK_PROJECTIONS, read_sink
+    from klog_spark.schemas import INPUT_SCHEMA
+
+    inp = str(tmp_path / "sequences.parquet")
+    spark.createDataFrame([], INPUT_SCHEMA).write.parquet(inp)
+    out = str(tmp_path / "routed")
+    assert main(["route", inp, "--out", out], spark=spark) == 0
+    printed = capsys.readouterr().out
+    assert "record_class=" not in printed and "routed staging written" in printed
+    for cls, cols in SINK_PROJECTIONS.items():
+        df = read_sink(spark, out, cls)
+        assert df.columns == cols and df.count() == 0, cls
+
+
 def test_write_routed_bounds_file_count(spark, fixture_dir, tmp_path):
     """The pre-shuffled routed write must emit ~write_tasks files, not
     tasks x sinks (the small-files explosion the pre-shuffle exists to

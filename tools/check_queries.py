@@ -5,6 +5,11 @@ matching ``oracle_sql()`` through DuckDB (with the driver's pre-registered
 views emulated), and compares row count, column names and an
 order-insensitive value hash. Usage: python tools/check_queries.py [name...]
 
+Before its verdict it prints how many generated classes Spark compiled for
+the rows it ran: the working set that ``spark.sql.codegen.cache.maxEntries``
+in ``klog_spark/session.py`` must exceed. For the klog surface alone, pass
+the names of the 38 ``klog_*`` rows.
+
 Oracle results are fetched via DuckDB's **Arrow** surface (``.arrow()``),
 not ``fetchall()``: a driver harness that fetches via Arrow/pandas sees
 DuckDB's surface types (HUGEINT → decimal128(38,0), which stringifies as
@@ -140,7 +145,7 @@ def value_hash(rows, cols):
 
 def main(names=None):
     import __spark_entry__ as entry
-    from klog_spark.session import get_spark
+    from klog_spark.session import compiled_classes, get_spark
 
     # KLOG_CHECK_TZ: run the whole gate under a hostile session timezone to
     # prove every query is TZ-independent (the driver's harness makes no TZ
@@ -167,6 +172,7 @@ def main(names=None):
 
     selected = names or list(qs)
     failures = []
+    compiled_before = compiled_classes(spark)
     for name in selected:
         release_tracked()  # per-row storage hygiene (ADVICE r7)
         t0 = time.time()
@@ -222,6 +228,8 @@ def main(names=None):
             diffs = [(a, b) for a, b in zip(sset, oset) if a != b][:3]
             for a, b in diffs:
                 print(f"      spark: {a[:160]}\n      duck:  {b[:160]}")
+    print(f"  generated classes compiled: {compiled_classes(spark) - compiled_before}"
+          f" over {len(selected)} rows")
     print(("FAILURES: " + ", ".join(failures)) if failures else "ALL OK")
     return 1 if failures else 0
 
