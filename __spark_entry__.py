@@ -43,7 +43,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # reference leaves it a TODO, Segment.java:28)
         "klog_group_offsets": eq.q_sink_group_offsets,
         "klog_group_offsets_read_committed": eq.q_group_offsets_read_committed,
-        # training-data pipeline (dedup / similarity / text / multimodal)
+        # training-data pipeline (dedup / similarity / text)
         "dedup_canonical": eq.q_dedup_canonical,           # keep-best resolution (subsumes dedup_exact's digest agg)
         "dedup_clusters": eq.q_dedup_clusters,             # large-star/small-star CC (recomputes the jaccard pair CTEs)
         "dedup_paragraphs": eq.q_dedup_paragraphs,         # CCNet/MassiveText paragraph dedup: first-occurrence keep + reassembly (r7-built)
@@ -54,23 +54,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_lang_id": eq.q_text_lang_id,
         "wordlist_filter": eq.q_wordlist_filter,           # blocked-wordlist (badwords) filter, integer ppm accept test (r7-built)
         "corpus_pack": eq.q_corpus_pack,                   # token-budget sequence packing
-        "multimodal_decode": eq.q_multimodal_decode,       # REAL stdlib PNG/WAV decode vs first-principles oracle
         # round-5/6 corpus-curation classes, first driver rows (r6 rotation)
         "pii_redaction": eq.q_pii_redaction,               # rule-based PII scrub, byte-exact rewrite parity
         "dsir_sample": eq.q_dsir_sample,                   # DSIR importance resampling: LM log-ratio weights + derandomized Gumbel-top-k (r7-built)
         "repeated_span_removal": eq.q_repeated_span_removal,  # exact-substring-dedup rewrite (spans excised; recomputes the detection CTEs)
-        "cms_user_counts": eq.q_cms_user_counts,           # Count-Min sketch estimates vs exact
-        "bpe_encode_stats": eq.q_bpe_encode_stats,         # BPE ENCODE path vs recursive-CTE re-encoder (consumes the trained merges)
         "corpus_curate": eq.q_corpus_curate,               # quality+PII+split+dedup+DECONTAMINATION composed pipeline (r7: 5 stages)
         # round-6 corpus-recipe classes, first driver rows (r7 rotation)
         "perplexity_buckets": eq.q_perplexity_buckets,     # CCNet head/middle/tail split
         "doc_chunks": eq.q_doc_chunks,                     # context-window chunking (zero-Exchange)
-        "corpus_diff": eq.q_corpus_diff,                   # snapshot diff for incremental curation (digest-only full-outer join; r7-built)
         # round-8-built operators, driver rows from birth (standing
-        # rotation discipline; the four rotated-out rows — klog_file_health,
-        # quality_rejection_sample, cluster_balanced_sample,
-        # corpus_shard_manifest — are green in CORRECTNESS_r07 with
-        # subsumption notes in extra_queries())
+        # rotation discipline; the rotated-out rows — klog_file_health,
+        # quality_rejection_sample, cluster_balanced_sample — are green in
+        # CORRECTNESS_r07 with subsumption notes in extra_queries())
         "ngram_novelty": eq.q_ngram_novelty,               # n-gram freshness vs a reference corpus (inverse contamination; planted zero-novelty rows)
         "ann_sq8_topk": eq.q_ann_sq8_topk,                 # asymmetric SQ8 scalar-quantized ANN (faiss QT_8bit; third compression point after Flat/PQ)
         "cross_source_dups": eq.q_cross_source_dups,       # cross-source duplication matrix (digest-keyed; per-source dedup-budget audit)
@@ -89,7 +84,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # recomputes rotate out (notes inline in extra_queries()).
         "quality_calibration": eq.q_quality_calibration,   # threshold sweep -> confusion counts; oracle NESTS the full scored_quality_filter SQL (keeps that row's coverage)
         "chunk_quality": eq.q_chunk_quality,               # FineWeb worst-chunk decision; composes doc_chunks + the pinned model
-        "bm25_topk": eq.q_bm25_topk,                       # BM25 keyword retrieval: relational postings, integer micro scores
         "temperature_weights": eq.q_temperature_weights,   # mT5/XLM-R alpha-sampling source weights (integer normalizer)
         "minhash_recall_eval": eq.q_minhash_recall_eval,   # LSH candidate recall vs exact Jaccard; oracle NESTS the full dedup_minhash SQL (keeps that row's coverage)
         # named custom-operator classes (as-of)
@@ -119,14 +113,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_clean": eq.q_corpus_clean,                       # composition of three driver-gated ops
         "ann_cosine_topk": eq.q_ann_topk,                        # brute-force baseline; knn_label_eval keeps the brute driver row
         "klog_group_offset_rewinds": eq.q_group_offset_rewinds,  # incident-signal view over the group_offsets row
-        "multimodal_features": eq.q_multimodal_features,         # opaque-blob plumbing twin of multimodal_decode row
         "klog_cat_pid_epoch": eq.q_cat_pid_epoch,                # P3/P6 conjunction; P1/P8/F1 keep the cat_pid row
         "klog_abort_cmds": eq.q_abort_cmds,                      # S10+P7; open_txn_abort_cmds keeps the S10 driver row
         "dedup_exact": eq.q_dedup_exact,                         # digest agg inside dedup_canonical + dedup_incremental rows
         "klog_topics_sanity": eq.q_topics_sanity,                # A8 1-row sanity
-        "media_resize": eq.q_media_resize,                       # real decode->NN-resize->re-encode vs closed form
-        "audio_features": eq.q_audio_features,                   # energy/ZCR/peak over real decoded audio
-        "vocab_coverage": eq.q_vocab_coverage,                   # top-k vocabulary coverage / OOV curve
         "near_dup_canonical": eq.q_near_dup_canonical,           # one representative per near-dup cluster
         "doc_keywords": eq.q_doc_keywords,                       # TF-IDF top-k terms, integer micro-nat idf
         "source_curation_report": eq.q_source_curation_report,   # per-source PII-rate + mean-LM dashboard
@@ -153,7 +143,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "leakage_safe_split": eq.q_leakage_safe_split,           # split now driver-exercised INSIDE corpus_curate + contamination_removal rows
         "knn_label_eval": eq.q_knn_label_eval,                   # embedding-eval class keeps the ann_recall_eval driver row
         "doc_repetition": eq.q_doc_repetition,                   # textstats family keeps lm_quality/pii/lang_id/source_quality rows
-        "kmv_distinct_users": eq.q_kmv_distinct_users,           # sketch family keeps the cms_user_counts driver row
         "dedup_simhash": eq.q_dedup_simhash,                     # near-dup family keeps minhash_lsh/embedding_lsh/clusters/semdedup rows
         "contamination_check": eq.q_contamination_check,         # superseded by the contamination_removal driver row (same join, train-side agg)
         # round-7 variants, locally gated from birth
@@ -165,7 +154,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_quality_score": eq.q_lm_quality,                     # unigram LM strictly generalized by the bigram_lm_score driver row (interpolates the same unigram model)
         "source_quality": eq.q_source_quality,                   # per-source report kept by corpus_curate + source_curation_report; per-doc heuristics by text_quality
         "weighted_sample_by_source": eq.q_weighted_sample,       # A-ES selection machinery lives on inside the dsir_sample driver row (Gumbel-top-k = A-ES in log space) + token_budget_mixture
-        "bpe_pair_counts": eq.q_bpe_pair_counts,                 # training statistic consumed by the bpe_encode_stats driver row; Sennrich-parity pytest
         "corpus_mixture_sample": eq.q_corpus_mixture_sample,     # mixture family keeps weighted_sample + token_budget_mixture driver rows
         # rotated OUT of the driver gate in round 8 (all green in
         # CORRECTNESS_r07; capability kept by the noted driver row)
@@ -175,11 +163,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivfpq_topk": eq.q_ann_ivfpq,                        # full IVF-PQ SQL nested (k=40) inside the ann_ivfpq_rerank driver row
         "dedup_minhash_lsh": eq.q_dedup_minhash,                 # full MinHash-LSH pair SQL nested inside the minhash_recall_eval driver row
         # rotated OUT mid-round-8 to give the round-8-built operators driver
-        # rows from birth (all four green in CORRECTNESS_r07)
+        # rows from birth (green in CORRECTNESS_r07)
         "klog_file_health": eq.q_file_health,                    # W8/corrupt-rate capability kept by klog_txn_stats (num_offset_gaps) + klog_sink_corrupt driver rows
         "quality_rejection_sample": eq.q_quality_rejection_sample,  # pinned-margin path hash-kept via quality_calibration's nested scored-filter SQL; integer accept test pytest-pinned
         "cluster_balanced_sample": eq.q_cluster_balanced_sample,    # pinned-quantizer cell assign kept by semdedup + semdedup_prototypes driver rows; cap policy pytest-pinned
-        "corpus_shard_manifest": eq.q_corpus_shard_manifest,        # deterministic hash-shard machinery lives on inside the curriculum_order driver row (+ corpus_diff digests)
         # round-8 scale-path variant, locally gated from birth
         "ngram_novelty_packed": eq.q_ngram_novelty_packed,       # zero-Exchange packed-Bloom novelty kernel; exact-join twin holds the ngram_novelty driver row
         "ann_ivfsq8_topk": eq.q_ann_ivfsq8_topk,                 # faiss IVF16,SQ8 composite: cells bound the scan, SQ8 bounds the bytes; composition of two gated ops
@@ -224,23 +211,18 @@ def oracle_sql() -> dict[str, str]:
         "text_lang_id": eq.SQL_TEXT_LANG_ID,
         "wordlist_filter": eq.SQL_WORDLIST_FILTER,
         "corpus_pack": eq.SQL_CORPUS_PACK,
-        "multimodal_decode": eq.SQL_MULTIMODAL_DECODE,
         "pii_redaction": eq.SQL_PII_REDACTION,
         "dsir_sample": eq.SQL_DSIR_SAMPLE,
         "repeated_span_removal": eq.SQL_REPEATED_SPAN_REMOVAL,
-        "cms_user_counts": eq.SQL_CMS_USER_COUNTS,
-        "bpe_encode_stats": eq.SQL_BPE_ENCODE_STATS,
         "corpus_curate": eq.SQL_CORPUS_CURATE,
         "perplexity_buckets": eq.SQL_PERPLEXITY_BUCKETS,
         "doc_chunks": eq.SQL_DOC_CHUNKS,
-        "corpus_diff": eq.SQL_CORPUS_DIFF,
         "bloom_screen_packed": eq.SQL_BLOOM_SCREEN_PACKED,
         "hashed_embeddings": eq.SQL_HASHED_EMBEDDINGS,
         "semdedup_prototypes": eq.SQL_SEMDEDUP_PROTOTYPES,
-        # r8 rotation: every row in queries() has an oracle — 50/50 hashable
+        # r8 rotation: every row in queries() has an oracle
         "quality_calibration": eq.SQL_QUALITY_CALIBRATION,
         "chunk_quality": eq.SQL_CHUNK_QUALITY,
-        "bm25_topk": eq.SQL_BM25_TOPK,
         "temperature_weights": eq.SQL_TEMPERATURE_WEIGHTS,
         "minhash_recall_eval": eq.SQL_MINHASH_RECALL_EVAL,
         # r8-built operators
@@ -275,14 +257,10 @@ def extra_oracle_sql() -> dict[str, str]:
         "corpus_clean": eq.SQL_CORPUS_CLEAN,
         "ann_cosine_topk": eq.SQL_ANN_TOPK,
         "klog_group_offset_rewinds": eq.SQL_GROUP_OFFSET_REWINDS,
-        "multimodal_features": eq.SQL_MULTIMODAL_FEATURES,
         "klog_cat_pid_epoch": eq.SQL_CAT_PID_EPOCH,
         "klog_abort_cmds": eq.SQL_ABORT_CMDS,
         "dedup_exact": eq.SQL_DEDUP_EXACT,
         "klog_topics_sanity": eq.SQL_TOPICS_SANITY,
-        "media_resize": eq.SQL_MEDIA_RESIZE,
-        "audio_features": eq.SQL_AUDIO_FEATURES,
-        "vocab_coverage": eq.SQL_VOCAB_COVERAGE,
         "near_dup_canonical": eq.SQL_NEAR_DUP_CANONICAL,
         "doc_keywords": eq.SQL_DOC_KEYWORDS,
         "source_curation_report": eq.SQL_SOURCE_CURATION_REPORT,
@@ -303,7 +281,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "leakage_safe_split": eq.SQL_LEAKAGE_SAFE_SPLIT,
         "knn_label_eval": eq.SQL_KNN_LABEL_EVAL,
         "doc_repetition": eq.SQL_DOC_REPETITION,
-        "kmv_distinct_users": eq.SQL_KMV_DISTINCT_USERS,
         "dedup_simhash": eq.SQL_DEDUP_SIMHASH,
         "contamination_check": eq.SQL_CONTAMINATION_CHECK,
         "semdedup_first_n": eq.SQL_SEMDEDUP_FIRST_N,
@@ -312,7 +289,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "lm_quality_score": eq.SQL_LM_QUALITY,
         "source_quality": eq.SQL_SOURCE_QUALITY,
         "weighted_sample_by_source": eq.SQL_WEIGHTED_SAMPLE,
-        "bpe_pair_counts": eq.SQL_BPE_PAIR_COUNTS,
         "corpus_mixture_sample": eq.SQL_CORPUS_MIXTURE_SAMPLE,
         # r8 rotated-out rows (trained_quality_filter stays rows-only here)
         "scored_quality_filter": eq.SQL_SCORED_QUALITY_FILTER,
@@ -322,7 +298,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "klog_file_health": eq.SQL_FILE_HEALTH,
         "quality_rejection_sample": eq.SQL_QUALITY_REJECTION_SAMPLE,
         "cluster_balanced_sample": eq.SQL_CLUSTER_BALANCED_SAMPLE,
-        "corpus_shard_manifest": eq.SQL_CORPUS_SHARD_MANIFEST,
         "ngram_novelty_packed": eq.SQL_NGRAM_NOVELTY_PACKED,
         "ann_ivfsq8_topk": eq.SQL_ANN_IVFSQ8,
         "soft_dedup_weights": eq.SQL_SOFT_DEDUP_WEIGHTS,

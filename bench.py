@@ -77,7 +77,7 @@ def main() -> None:
         t0 = time.time()
         fn()
         timings[name] = round(time.time() - t0, 3)
-        # operator-owned caches (minhash sigs, DSIR LMs, BM25 lengths) are
+        # operator-owned caches (minhash sigs, DSIR LMs) are
         # per-invocation; release so run N+1 starts from the same storage
         # state as run 1 (ADVICE r7)
         release_tracked()
@@ -173,10 +173,8 @@ def main() -> None:
                   .write.format("noop").mode("overwrite").save())
             timed("dsir_sample", lambda: eq.q_dsir_sample(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
-            # round-8 (VERDICT r7 #6): the two r7-built operators without a
-            # bench row — BM25 retrieval (postings + broadcast query join)
-            # and chunk-granular quality (explode + pinned-margin fold)
-            timed("bm25_topk", lambda: eq.q_bm25_topk(spark, sf_dir).count())
+            # round-8 (VERDICT r7 #6): chunk-granular quality (explode +
+            # pinned-margin fold)
             timed("chunk_quality", lambda: eq.q_chunk_quality(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
             # round-8 operators: exact novelty join, its zero-Exchange

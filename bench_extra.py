@@ -109,7 +109,6 @@ def main() -> None:
         "dedup_paragraphs": lambda: noop(dedup_paragraph_blocks(
             _dup_corpus(spark, sf_dir), block_words=16, hash_blocks=True)),
         "dsir_sample": lambda: noop(eq.q_dsir_sample(spark, sf_dir)),
-        "bm25_topk": lambda: eq.q_bm25_topk(spark, sf_dir).count(),
         "chunk_quality": lambda: noop(eq.q_chunk_quality(spark, sf_dir)),
         "ngram_novelty": lambda: noop(eq.q_ngram_novelty(spark, sf_dir)),
         "ngram_novelty_packed": lambda: noop(_novelty_packed_xx()),

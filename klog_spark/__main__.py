@@ -7,9 +7,9 @@ those commands (plus the beyond-reference ``group`` analytics and the
 the same commands at the same dump files and get the same output — computed
 by Spark instead of a single-threaded visitor walk.
 
-INPUT is either a directory/glob of `kafka-dump-log` text output
-(``sources.dump_files.read_dump_files``) or a parquet path/directory of
-tokenized sequences (the engine's native table). Results stream through
+INPUT is either a directory/glob of `kafka-dump-log` text output or a
+parquet path/directory of tokenized sequences (the engine's native table);
+``sources.dump_files.read_input`` tells them apart. Results stream through
 ``toLocalIterator`` — the driver never holds a whole dump in memory.
 
 Usage::
@@ -28,29 +28,17 @@ Usage::
 from __future__ import annotations
 
 import argparse
-import glob
-import os
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _input_df(spark: SparkSession, path: str) -> DataFrame:
-    """Dump-text directory/glob OR tokenized-sequence parquet -> input table."""
-    from .sources.dump_files import read_dump_files
-
-    if path.endswith(".parquet") or glob.glob(os.path.join(path, "*.parquet")):
-        return spark.read.parquet(path)
-    if os.path.isdir(path):
-        path = os.path.join(path, "*.dump.txt")
-    return read_dump_files(spark, path)
-
-
 def _parsed(spark: SparkSession, path: str) -> DataFrame:
     from .operators.parse import parse_sequences
+    from .sources.dump_files import read_input
 
-    return parse_sequences(_input_df(spark, path))
+    return parse_sequences(read_input(spark, path))
 
 
 def _routed(spark: SparkSession, path: str) -> DataFrame:
@@ -145,9 +133,6 @@ def cmd_segment_cat(spark, args) -> int:
     rather than BatchPredicate's RuntimeException — their batch headers
     carry real pids since fixture v8's transactional-offsets flows.
     """
-    from pyspark.sql import Window
-
-    from .operators.aggregates import attach_parent_batch
     from .operators.render import render_cat_lines
 
     parsed = _parsed(spark, args.input)

@@ -1,7 +1,7 @@
 """Operator-owned cache registry (ADVICE r7).
 
 Several operators ``persist()`` bounded intermediates (MinHash signatures,
-DSIR vocabulary LMs, BM25 length norms, per-source token masses, trainer
+DSIR vocabulary LMs, per-source token masses, trainer
 feature matrices) because multiple eager jobs — or one expensive lazy plan
 referenced several times — consume them inside a single invocation. The
 persist is the right call per invocation, but in a LONG-LIVED session (the

@@ -479,9 +479,7 @@ def curriculum_order(scored: DataFrame, score_col: str = "margin_micro",
     total-order trap. The manifest key is (bucket, shard, pos): shard =
     hash % n_shards, pos = row_number inside the (bucket, shard) window.
     n_shards scales with the corpus, so every window partition stays
-    bounded; readers concatenate shards in (bucket, shard) order.
-    corpus_shard_manifest's deterministic-shuffle machinery lives on here
-    with the difficulty dimension added."""
+    bounded; readers concatenate shards in (bucket, shard) order."""
     from ..javahash import java_hash_u32_expr
 
     if thresholds is None:

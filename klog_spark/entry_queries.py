@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 import re
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2263,62 +2262,6 @@ FROM r WHERE rank <= 3
 """
 
 
-def q_vocab_coverage(spark, sf_dir):
-    """Vocabulary-coverage curve: what fraction of the corpus' running
-    words a top-k word vocabulary covers, at ladder points scaled to the fixture vocabulary — the
-    number a tokenizer/vocab-size decision is made on. Words ranked by
-    (freq DESC, word ASC); coverage = exact integer cumulative-freq /
-    total, a deterministic double division (OOV rate = 1 - coverage).
-    Scale note: the ranking window is global BUT over the word-frequency
-    table — vocabulary-sized by Heaps' law, never the corpus; the
-    corpus-scale work is the word count feeding it."""
-    from pyspark.sql import Window
-
-    from .datapipe.bpe import word_freqs
-
-    wf = word_freqs(_docs(spark, sf_dir))
-    w = Window.orderBy(F.desc("freq"), F.asc("word")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ranked = wf.select(
-        "word", "freq",
-        F.row_number().over(Window.orderBy(F.desc("freq"), F.asc("word"))).alias("rank"),
-        F.sum("freq").over(w).cast("long").alias("cum_freq"),
-    )
-    total = wf.agg(F.sum("freq").cast("long").alias("n_total"))
-    ks = [3, 5, 10, 20, 30]
-    return (
-        ranked.filter(F.col("rank").isin(ks))
-        .crossJoin(F.broadcast(total))
-        .select(
-            F.col("rank").cast("long").alias("vocab_size"),
-            "cum_freq",
-            (F.col("cum_freq").cast("double") / F.col("n_total")).alias("coverage"),
-        )
-    )
-
-
-SQL_VOCAB_COVERAGE = """
-WITH wf AS (
-  SELECT w AS word, CAST(COUNT(*) AS BIGINT) AS freq
-  FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM documents)
-  WHERE w <> '' GROUP BY w
-),
-r AS (
-  SELECT word, freq,
-         ROW_NUMBER() OVER (ORDER BY freq DESC, word ASC) AS rank,
-         CAST(SUM(freq) OVER (ORDER BY freq DESC, word ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_freq
-  FROM wf
-),
-tot AS (SELECT CAST(SUM(freq) AS BIGINT) AS n_total FROM wf)
-SELECT CAST(rank AS BIGINT) AS vocab_size, cum_freq,
-       CAST(cum_freq AS DOUBLE) / n_total AS coverage
-FROM r, tot WHERE rank IN (3, 5, 10, 20, 30)
-"""
-
-
 # SQL_CORPUS_CURATE is assigned after _sql_stoplist_all is defined below
 
 
@@ -2873,55 +2816,6 @@ FROM h
 """
 
 
-_EVENTS_SCHEMA = (
-    "event_id long, ts timestamp_ntz, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
-def _read_events(spark, sf_dir):
-    """Events fixture with ``ts`` forced to TIMESTAMP_NTZ. The parquet column
-    is a naive ``timestamp[us]``; reading it as NTZ makes every downstream
-    epoch-millis / day computation pure wall-clock arithmetic — independent of
-    ``spark.sql.session.timeZone`` and of whichever query ran first
-    (driver-robustness: VERDICT r3 #1/#2)."""
-    return spark.read.schema(_EVENTS_SCHEMA).parquet(f"{sf_dir}/events.parquet")
-
-
-def q_multimodal_features(spark, sf_dir):
-    from .datapipe.multimodal import documents_as_media, extract_features
-
-    media = documents_as_media(_docs(spark, sf_dir))
-    feats = extract_features(media)
-    return feats.select(
-        "doc_id", "byte_len", "n_frames",
-        F.aggregate("frame_digests", F.lit(0).cast("long"), lambda a, x: a + x).alias("total_digest"),
-    )
-
-
-# total_digest on the Spark side sums UTF-8 BYTES of the blob; the oracle
-# sums each character's UTF-8 byte values explicitly (exact for any text,
-# not just ASCII), iterating chars via string_split (newline-safe).
-SQL_MULTIMODAL_FEATURES = """
-WITH b AS (
-  SELECT doc_id,
-    [CASE WHEN unicode(c) < 128 THEN unicode(c)::BIGINT
-          WHEN unicode(c) < 2048 THEN (192 + unicode(c) // 64) + (128 + unicode(c) % 64)
-          WHEN unicode(c) < 65536 THEN (224 + unicode(c) // 4096) + (128 + (unicode(c) // 64) % 64)
-                                       + (128 + unicode(c) % 64)
-          ELSE (240 + unicode(c) // 262144) + (128 + (unicode(c) // 4096) % 64)
-               + (128 + (unicode(c) // 64) % 64) + (128 + unicode(c) % 64) END
-     for c in list_filter(string_split(text, ''), x -> x <> '')] AS char_byte_sums
-  FROM documents
-)
-SELECT d.doc_id,
-       CAST(octet_length(encode(d.text)) AS INT) AS byte_len,
-       CAST(greatest(1, CAST(ceil(octet_length(encode(d.text)) / 1024.0) AS INT)) AS INT) AS n_frames,
-       CAST(COALESCE(list_aggregate(b.char_byte_sums, 'sum'), 0) AS BIGINT) AS total_digest
-FROM documents d JOIN b USING (doc_id)
-"""
-
-
 def q_batches_per_epoch_salted(spark, sf_dir):
     """A9 via explicit two-phase salting (north rule's skew handling) —
     identical result to the direct aggregate, same oracle SQL."""
@@ -3340,50 +3234,6 @@ WHERE NOT is_deletion AND prev_offset IS NOT NULL AND committed_offset < prev_of
 """
 
 
-def q_multimodal_decode(spark, sf_dir):
-    """REAL media decode, verified from first principles: the synthetic
-    media table carries genuine PNG, WAV and AIFF blobs whose content is a
-    closed form of doc_id; Spark DECODES THE BYTES (stdlib zlib/struct
-    decoders incl. the hand-rolled big-endian AIFF chunk walk,
-    executor-side) while the oracle recomputes the same features from the
-    generation formula — agreement proves the decoders, not just the
-    plumbing."""
-    from .datapipe.multimodal import extract_decoded_features, synthetic_media_table
-
-    return extract_decoded_features(synthetic_media_table(spark, n=200))
-
-
-SQL_MULTIMODAL_DECODE = """
-WITH ids AS (SELECT range AS i FROM range(0, 200)),
-png AS (
-  SELECT i AS doc_id, 'image/png' AS media_type,
-         CAST(8 + i % 5 AS INT) AS width, CAST(6 + i % 7 AS INT) AS height,
-         CAST(3 AS INT) AS channels,
-         CAST((SELECT SUM((x.range * 7 + y.range * 13 + ch.range * 29 + i * 31) % 256)
-               FROM range(0, 12) x, range(0, 12) y, range(0, 3) ch
-               WHERE x.range < 8 + i % 5 AND y.range < 6 + i % 7)
-              AS BIGINT) AS pixel_sum,
-         CAST(NULL AS INT) AS sample_rate, CAST(NULL AS INT) AS n_samples,
-         CAST(NULL AS BIGINT) AS sample_abs_sum, true AS decode_ok
-  FROM ids WHERE i % 2 = 0
-),
-wav AS (
-  SELECT i AS doc_id,
-         CASE WHEN i % 4 = 1 THEN 'audio/wav' ELSE 'audio/x-aiff' END AS media_type,
-         CAST(NULL AS INT) AS width, CAST(NULL AS INT) AS height,
-         CAST(1 AS INT) AS channels,
-         CAST(NULL AS BIGINT) AS pixel_sum,
-         CAST(CASE WHEN i % 4 = 1 THEN 8000 ELSE 11025 END AS INT) AS sample_rate,
-         CAST(64 + (i % 37) * 8 AS INT) AS n_samples,
-         CAST((SELECT SUM(ABS((t.range * (i % 13 + 3)) % 2001 - 1000))
-               FROM range(0, 352) t WHERE t.range < 64 + (i % 37) * 8)
-              AS BIGINT) AS sample_abs_sum, true AS decode_ok
-  FROM ids WHERE i % 2 = 1
-)
-SELECT * FROM png UNION ALL SELECT * FROM wav
-"""
-
-
 def q_batch_state_asof(spark, sf_dir):
     """AS-OF join (operators/asof.py): every data batch annotated with the
     producer-snapshot state that was current AT ITS CreateTime — the
@@ -3542,466 +3392,6 @@ GROUP BY p.source
 
 
 SQL_SOURCE_CURATION_REPORT = _sql_source_curation_report()
-
-
-def q_cms_user_counts(spark, sf_dir):
-    """Count-Min sketch (datapipe/sketch.cms_build/cms_estimate): per-type
-    event counts for users 0-9 estimated from a 4x64 sketch, alongside the
-    exact counts. Width 64 against ~hundreds of distinct users per type
-    forces real collisions, so the gate verifies the SKETCH estimates
-    (upper bounds), not a trivially-exact path; the deterministic salted
-    java-hash rows make the oracle reproduce every cell and every min
-    bit-for-bit."""
-    from .datapipe.sketch import cms_build, cms_estimate
-
-    ev = _read_events(spark, sf_dir).select("event_type", "user_id")
-    sketch = cms_build(ev, "user_id", by=["event_type"], depth=4, width=64)
-    queries = (
-        ev.select("event_type").distinct()
-        .crossJoin(spark.range(10).select(F.col("id").alias("user_id")))
-    )
-    est = cms_estimate(sketch, queries, "user_id", by=["event_type"],
-                       depth=4, width=64)
-    exact = ev.filter(F.col("user_id") < 10).groupBy("event_type", "user_id").agg(
-        F.count("*").cast("long").alias("exact_count")
-    )
-    return est.join(exact, ["event_type", "user_id"], "left").select(
-        "event_type", "user_id", "cms_count",
-        F.coalesce("exact_count", F.lit(0)).cast("long").alias("exact_count"),
-    )
-
-
-def _sql_cms_user_counts(depth: int = 4, width: int = 64) -> str:
-    digest = "sha256(CAST(user_id AS VARCHAR))"
-
-    def hash_select(src: str, d: int) -> str:
-        salted = "'d" + str(d) + ":' || " + digest
-        return (
-            f"SELECT event_type, user_id, {d} AS d, "
-            f"{_sql_java_u32(salted)} % {width} AS bucket FROM {src}"
-        )
-
-    cell_selects = " UNION ALL ".join(hash_select("e", d) for d in range(depth))
-    qcell_selects = " UNION ALL ".join(hash_select("q", d) for d in range(depth))
-    return f"""
-WITH e AS (SELECT event_type, user_id FROM events),
-cells AS ({cell_selects}),
-sk AS (
-  SELECT event_type, d, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM cells GROUP BY event_type, d, bucket
-),
-q AS (
-  SELECT et.event_type, r.range AS user_id
-  FROM (SELECT DISTINCT event_type FROM e) et, range(0, 10) r
-),
-qcells AS ({qcell_selects}),
-est AS (
-  SELECT qc.event_type, qc.user_id,
-         CAST(MIN(COALESCE(sk.cnt, 0)) AS BIGINT) AS cms_count
-  FROM qcells qc LEFT JOIN sk USING (event_type, d, bucket)
-  GROUP BY qc.event_type, qc.user_id
-)
-SELECT est.event_type, est.user_id, est.cms_count,
-       CAST(COALESCE(x.n, 0) AS BIGINT) AS exact_count
-FROM est LEFT JOIN (
-  SELECT event_type, user_id, COUNT(*) AS n FROM e WHERE user_id < 10
-  GROUP BY event_type, user_id
-) x USING (event_type, user_id)
-"""
-
-
-SQL_CMS_USER_COUNTS = _sql_cms_user_counts()
-
-
-def q_bpe_pair_counts(spark, sf_dir):
-    """BPE training statistic (datapipe/bpe.symbol_pair_counts): adjacent
-    character-symbol pair frequencies over the word-frequency table — the
-    table whose argmax is BPE's first merge. The oracle recomputes word
-    freqs, char segmentation with the '</w>' marker, and pair sums from
-    scratch in SQL."""
-    from .datapipe.bpe import symbol_pair_counts
-
-    return symbol_pair_counts(_docs(spark, sf_dir))
-
-
-SQL_BPE_PAIR_COUNTS = """
-WITH wf AS (
-  SELECT w AS word, CAST(COUNT(*) AS BIGINT) AS freq
-  FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM documents)
-  WHERE w <> '' GROUP BY w
-),
-sym AS (
-  SELECT freq, list_append(string_split(word, ''), '</w>') AS syms FROM wf
-),
-pairs AS (
-  -- correlated-bound comprehension: a word of ANY symbol length contributes
-  -- every adjacent pair, no fixed range(0, N) cap (ADVICE r5 #1)
-  SELECT u.l AS sym_left, u.r AS sym_right, freq FROM (
-    SELECT freq, unnest([{'l': syms[i + 1], 'r': syms[i + 2]}
-                         for i in range(0, len(syms) - 1)]) AS u
-    FROM sym
-  )
-)
-SELECT sym_left, sym_right, CAST(SUM(freq) AS BIGINT) AS pair_count
-FROM pairs GROUP BY sym_left, sym_right
-"""
-
-
-# BPE merge table pinned from `train_bpe(sf0.01 documents, 32)` so the
-# encode-path oracle (a from-scratch DuckDB recursive-CTE re-encoder) can
-# embed the SAME tokenizer as literals. test_bpe.py asserts the pin equals
-# the trainer's output on the driver fixture, so drift fails loudly.
-BPE_ENCODE_MERGES = [
-    ("e", "r", 4568), ("e", "</w>", 4473), ("n", "</w>", 2834),
-    ("er", "</w>", 2779), ("o", "w", 2747), ("ow", "</w>", 2747),
-    ("o", "r", 2696), ("s", "t", 2676), ("h", "</w>", 1884),
-    ("a", "t", 1845), ("l", "u", 1831), ("i", "n", 1796),
-    ("a", "</w>", 1788), ("g", "</w>", 1777), ("y", "</w>", 1767),
-    ("a", "r", 1758), ("p", "ar", 1758), ("t", "</w>", 1750),
-    ("i", "n</w>", 964), ("j", "o", 964), ("jo", "in</w>", 964),
-    ("a", "s", 947), ("as", "h</w>", 947), ("h", "ash</w>", 947),
-    ("r", "ow</w>", 943), ("at", "c", 937), ("atc", "h</w>", 937),
-    ("b", "atch</w>", 937), ("a", "n</w>", 936), ("c", "an</w>", 936),
-    ("s", "can</w>", 936), ("c", "o", 934),
-]
-
-
-def q_bpe_encode_stats(spark, sf_dir):
-    """BPE ENCODE path (datapipe/bpe.apply_bpe): per-source token counts and
-    fertility (tokens/word) from encoding every document with the pinned
-    merge table. The oracle re-encodes from scratch in DuckDB — a recursive
-    CTE that repeatedly finds each word's lowest-rank applicable pair and
-    applies one full left-to-right non-overlapping merge pass as a list
-    comprehension — an algorithmically independent formulation of the same
-    Sennrich BPE encode the Arrow-batched mapInPandas performs."""
-    from .datapipe.bpe import apply_bpe
-
-    docs = _docs(spark, sf_dir)
-    enc = apply_bpe(docs, BPE_ENCODE_MERGES)
-    return (
-        enc.join(F.broadcast(docs.select("doc_id", "source")), "doc_id")
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.sum("n_words").cast("long").alias("n_words"),
-        )
-        .withColumn(
-            "fertility",
-            F.round(F.try_divide(F.col("n_tokens"), F.col("n_words")), 6),
-        )
-    )
-
-
-def _sql_bpe_encode_stats() -> str:
-    # The single-pass merge comprehension below is exact only when no merge
-    # has left == right (adjacent matches are then impossible, so greedy
-    # non-overlap == "apply at every match"); assert it at SQL-build time
-    # so a future re-pin that violates the assumption fails loudly instead
-    # of silently diverging from _merge_word's run-parity behavior.
-    assert all(l != r for l, r, _ in BPE_ENCODE_MERGES), (
-        "bpe_encode_stats oracle requires left != right for every pinned merge"
-    )
-    merge_vals = ", ".join(
-        f"('{l}', '{r}', {i})" for i, (l, r, _) in enumerate(BPE_ENCODE_MERGES)
-    )
-    return f"""
-WITH RECURSIVE
-merges(ml, mr, rnk) AS (VALUES {merge_vals}),
-doc_words AS (
-  SELECT doc_id, source, w AS word
-  FROM (SELECT doc_id, source,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM documents)
-  WHERE w <> ''
-),
-vocab AS (SELECT DISTINCT word FROM doc_words),
-enc AS (
-  SELECT word, list_append(string_split(word, ''), '</w>') AS syms FROM vocab
-  UNION ALL
-  -- one encode step: lowest-rank pair present anywhere in syms, applied at
-  -- every (necessarily non-adjacent, see build-time assert) match position
-  SELECT word,
-         [CASE WHEN i < len(syms) AND syms[i] = ml AND syms[i+1] = mr
-               THEN ml || mr ELSE syms[i] END
-          for i in range(1, len(syms) + 1)
-          if NOT (i > 1 AND syms[i-1] = ml AND syms[i] = mr)]
-  FROM (
-    SELECT word, syms,
-           (SELECT m.ml FROM merges m
-            WHERE list_contains(prs, m.ml || chr(1) || m.mr)
-            ORDER BY m.rnk LIMIT 1) AS ml,
-           (SELECT m.mr FROM merges m
-            WHERE list_contains(prs, m.ml || chr(1) || m.mr)
-            ORDER BY m.rnk LIMIT 1) AS mr
-    FROM (SELECT word, syms,
-                 [syms[i] || chr(1) || syms[i+1] for i in range(1, len(syms))] AS prs
-          FROM enc)
-  )
-  WHERE ml IS NOT NULL
-),
-encoded AS (
-  SELECT word, CAST(len(syms) AS BIGINT) AS n_toks
-  FROM enc
-  WHERE NOT EXISTS (
-    SELECT 1 FROM merges m
-    WHERE list_contains([syms[i] || chr(1) || syms[i+1] for i in range(1, len(syms))],
-                        m.ml || chr(1) || m.mr))
-),
-per_doc AS (
-  SELECT d.doc_id, d.source,
-         CAST(COUNT(*) AS BIGINT) AS nw, CAST(SUM(e.n_toks) AS BIGINT) AS nt
-  FROM doc_words d JOIN encoded e ON d.word = e.word
-  GROUP BY d.doc_id, d.source
-),
-all_docs AS (SELECT doc_id, source FROM documents)
-SELECT a.source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COALESCE(SUM(p.nt), 0) AS BIGINT) AS n_tokens,
-       CAST(COALESCE(SUM(p.nw), 0) AS BIGINT) AS n_words,
-       ROUND(CAST(COALESCE(SUM(p.nt), 0) AS DOUBLE)
-             / NULLIF(COALESCE(SUM(p.nw), 0), 0), 6) AS fertility
-FROM all_docs a LEFT JOIN per_doc p ON a.doc_id = p.doc_id
-GROUP BY a.source
-"""
-
-
-SQL_BPE_ENCODE_STATS = _sql_bpe_encode_stats()
-
-
-def q_corpus_diff(spark, sf_dir):
-    """Corpus snapshot diff (shard.corpus_diff): documents vs a
-    deterministically perturbed v2 (every 7th doc dropped, every 5th
-    rewritten, a shifted-id slice appended) — per-doc added / removed /
-    changed / unchanged status from one digest-only full-outer join. The
-    oracle rebuilds v2 and replays the digest compare in SQL."""
-    from .datapipe.shard import corpus_diff
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    v2 = (
-        docs.filter(F.col("doc_id") % 7 != 3)
-        .select(
-            "doc_id",
-            F.when(F.col("doc_id") % 5 == 0,
-                   F.concat(F.col("text"), F.lit(" v2")))
-            .otherwise(F.col("text")).alias("text"),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 11 == 0).select(
-                (F.col("doc_id") + 3000000).alias("doc_id"), "text"
-            )
-        )
-    )
-    return corpus_diff(docs, v2)
-
-
-SQL_CORPUS_DIFF = """
-WITH v2 AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END AS text
-  FROM documents WHERE doc_id % 7 <> 3
-  UNION ALL
-  SELECT doc_id + 3000000 AS doc_id, text FROM documents WHERE doc_id % 11 = 0
-),
-o AS (SELECT doc_id, sha256(text) AS od FROM documents),
-n AS (SELECT doc_id, sha256(text) AS nd FROM v2)
-SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-       CASE WHEN od IS NULL THEN 'added'
-            WHEN nd IS NULL THEN 'removed'
-            WHEN od = nd THEN 'unchanged'
-            ELSE 'changed' END AS status
-FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-"""
-
-
-def q_corpus_shard_manifest(spark, sf_dir):
-    """Deterministic corpus shuffle + shard export manifest
-    (datapipe/shard.py): every document gets a seeded-hash-permutation
-    position inside one of 16 shards, and the manifest reports per-shard
-    doc count, char total, max position (= n_docs-1 proves the positions
-    are a dense 0-based permutation) and an order-independent content
-    checksum. java32 hash so DuckDB replicates the permutation exactly;
-    xxhash64 is the throughput default (CLAUDE.md hash convention)."""
-    from .datapipe.shard import deterministic_shuffle, shard_manifest
-
-    shuffled = deterministic_shuffle(
-        _docs(spark, sf_dir), seed="r6", n_shards=16, hash_fn="java32"
-    )
-    return shard_manifest(shuffled, hash_fn="java32")
-
-
-# java fold of 'r6:' || doc_id: plain (ASCII key) fold; the TEXT content
-# checksum reuses SQL_DOC_FINGERPRINT's surrogate-aware unit construction.
-SQL_CORPUS_SHARD_MANIFEST = """
-WITH key_h AS (
-  SELECT doc_id, text,
-    list_reduce(list_prepend(0::BIGINT,
-      [unicode(c)::BIGINT
-       for c in list_filter(string_split('r6:' || CAST(doc_id AS VARCHAR), ''),
-                            x -> x <> '')]),
-      (acc, c) -> (acc * 31 + c) % 4294967296) AS h
-  FROM documents
-),
-pos AS (
-  SELECT doc_id, text, CAST(h % 16 AS INT) AS shard_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY h % 16 ORDER BY h, doc_id) - 1
-              AS BIGINT) AS position
-  FROM key_h
-),
-content AS (
-  SELECT shard_id, position, length(text) AS len,
-    list_reduce(list_prepend(0::BIGINT,
-      flatten([CASE WHEN unicode(c) < 65536 THEN [unicode(c)::BIGINT]
-                    ELSE [55296 + ((unicode(c)::BIGINT - 65536) // 1024),
-                          56320 + ((unicode(c)::BIGINT - 65536) % 1024)] END
-               for c in list_filter(string_split(text, ''), x -> x <> '')])),
-      (acc, c) -> (acc * 31 + c) % 4294967296) AS ch
-  FROM pos
-)
-SELECT shard_id,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(len) AS BIGINT) AS n_chars,
-       MAX(position) AS max_position,
-       CAST(SUM(ch) % 4294967296 AS BIGINT) AS content_checksum
-FROM content GROUP BY shard_id
-"""
-
-
-def q_media_resize(spark, sf_dir):
-    """Distributed image resize (multimodal.resize_media): the synthetic
-    closed-form PNGs resampled to 4x6 nearest-neighbor — Spark decodes,
-    resamples and re-encodes REAL bytes executor-side, while the oracle
-    computes the resized pixel sum straight from the generation formula
-    composed with the NN index map (floor(x*w/tw)); audio rows prove the
-    poison contract (decode_ok=false) inside the gate."""
-    from .datapipe.multimodal import resize_media, synthetic_media_table
-
-    return resize_media(synthetic_media_table(spark, n=200), 4, 6).select(
-        "doc_id", "media_type", "width", "height", "pixel_sum", "decode_ok"
-    )
-
-
-SQL_MEDIA_RESIZE = """
-WITH ids AS (SELECT range AS i FROM range(0, 200)),
-png AS (
-  SELECT i AS doc_id, 'image/png' AS media_type,
-         CAST(4 AS INT) AS width, CAST(6 AS INT) AS height,
-         CAST((SELECT SUM((((x.range * (8 + i % 5)) // 4) * 7
-                         + ((y.range * (6 + i % 7)) // 6) * 13
-                         + c.range * 29 + i * 31) % 256)
-               FROM range(0, 4) x, range(0, 6) y, range(0, 3) c)
-              AS BIGINT) AS pixel_sum,
-         true AS decode_ok
-  FROM ids WHERE i % 2 = 0
-),
-audio AS (
-  SELECT i AS doc_id,
-         CASE WHEN i % 4 = 1 THEN 'audio/wav' ELSE 'audio/x-aiff' END AS media_type,
-         CAST(NULL AS INT) AS width, CAST(NULL AS INT) AS height,
-         CAST(NULL AS BIGINT) AS pixel_sum, false AS decode_ok
-  FROM ids WHERE i % 2 = 1
-)
-SELECT * FROM png UNION ALL SELECT * FROM audio
-"""
-
-
-def q_audio_features(spark, sf_dir):
-    """Audio screening features (multimodal.extract_audio_features): exact
-    integer energy, standard zero-crossing count (zeros inherit the last
-    nonzero sign; the leading-zero run never counts) and peak amplitude
-    over REAL decoded WAV/AIFF bytes — the oracle recomputes all three
-    from the sample-generation formula with the identical carried-sign
-    window. Image rows prove the poison contract in-gate."""
-    from .datapipe.multimodal import extract_audio_features, synthetic_media_table
-
-    return extract_audio_features(synthetic_media_table(spark, n=200))
-
-
-SQL_AUDIO_FEATURES = """
-WITH ids AS (SELECT range AS i FROM range(0, 200)),
-a AS (
-  SELECT i, t.range AS t, ((t.range * (i % 13 + 3)) % 2001 - 1000) AS v
-  FROM ids, range(0, 352) t
-  WHERE i % 2 = 1 AND t.range < 64 + (i % 37) * 8
-),
-c AS (
-  SELECT i, t, v,
-         LAST_VALUE(CASE WHEN v > 0 THEN 1 WHEN v < 0 THEN -1 END IGNORE NULLS)
-           OVER (PARTITION BY i ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS car
-  FROM a
-),
-z AS (
-  SELECT i,
-         CAST(COUNT(*) AS INT) AS n_samples,
-         CAST(SUM(v * v) AS BIGINT) AS energy,
-         CAST(SUM(CASE WHEN prev IS NOT NULL AND car <> prev
-                       THEN 1 ELSE 0 END) AS INT) AS n_zero_crossings,
-         CAST(MAX(ABS(v)) AS INT) AS peak_abs
-  FROM (SELECT *, LAG(car) OVER (PARTITION BY i ORDER BY t) AS prev FROM c)
-  GROUP BY i
-),
-audio AS (
-  SELECT i AS doc_id,
-         CASE WHEN i % 4 = 1 THEN 'audio/wav' ELSE 'audio/x-aiff' END AS media_type,
-         CAST(CASE WHEN i % 4 = 1 THEN 8000 ELSE 11025 END AS INT) AS sample_rate,
-         n_samples, energy, n_zero_crossings, peak_abs, true AS decode_ok
-  FROM z
-),
-png AS (
-  SELECT i AS doc_id, 'image/png' AS media_type,
-         CAST(NULL AS INT) AS sample_rate, CAST(NULL AS INT) AS n_samples,
-         CAST(NULL AS BIGINT) AS energy, CAST(NULL AS INT) AS n_zero_crossings,
-         CAST(NULL AS INT) AS peak_abs, false AS decode_ok
-  FROM ids WHERE i % 2 = 0
-)
-SELECT * FROM audio UNION ALL SELECT * FROM png
-"""
-
-
-def q_kmv_distinct_users(spark, sf_dir):
-    """KMV bottom-k distinct sketch: estimated distinct users per event
-    type at k=16, alongside the exact count — deterministic java-hash
-    fractions make the ESTIMATE itself oracle-replicable (an HLL's is
-    not), and small groups fall back to exact."""
-    from .datapipe.sketch import kmv_distinct
-
-    ev = _read_events(spark, sf_dir).select("event_type", "user_id")
-    sk = kmv_distinct(ev, value_col="user_id", by=["event_type"], k=16)
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_distinct")
-    )
-    return sk.join(exact, "event_type").select(
-        "event_type", "n_hashes", "kth_hash", "kmv_estimate", "exact_distinct"
-    )
-
-
-SQL_KMV_DISTINCT_USERS = f"""
-WITH vals AS (
-  SELECT DISTINCT event_type, CAST(user_id AS VARCHAR) AS v FROM events
-),
-hashed AS (
-  SELECT event_type, {_sql_java_u32('sha256(v)')} AS h FROM vals
-),
-bk AS (
-  SELECT event_type, h,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn
-  FROM (SELECT DISTINCT event_type, h FROM hashed)
-),
-sk AS (
-  SELECT event_type, COUNT(*) AS n_hashes, MAX(h) AS kth_hash
-  FROM bk WHERE rn <= 16 GROUP BY event_type
-),
-exact AS (
-  SELECT event_type, COUNT(DISTINCT user_id) AS exact_distinct FROM events GROUP BY 1
-)
-SELECT sk.event_type, sk.n_hashes, sk.kth_hash,
-       CASE WHEN sk.n_hashes < 16 THEN CAST(sk.n_hashes AS DOUBLE)
-            ELSE 15.0 / (CAST(sk.kth_hash AS DOUBLE) / 4294967296.0) END AS kmv_estimate,
-       exact.exact_distinct
-FROM sk JOIN exact USING (event_type)
-"""
 
 
 def q_perplexity_buckets(spark, sf_dir):
@@ -4479,70 +3869,6 @@ SELECT source, n_tokens,
          AS weight_micro
 FROM pm CROSS JOIN tot
 """
-
-
-BM25_QUERIES = [(1, "slow query table"), (2, "stream window agg"),
-                (3, "customer join fast"), (4, "the a big"),
-                (5, "vector sort merge")]
-
-
-def q_bm25_topk(spark, sf_dir):
-    """BM25 keyword retrieval (retrieval.bm25_topk) — the lexical
-    first-stage retriever complementing the embedding-ANN family: Okapi
-    tf saturation + RSJ idf over relational postings, five keyword
-    queries, top-10 each. Per-(term, doc) scores round once to integer
-    micro units (pure function of tf/df/dl/corpus constants), so ranks
-    and scores are engine-exact. The oracle rebuilds postings, df, length
-    norms and the saturation formula from scratch."""
-    from .datapipe.retrieval import bm25_topk
-
-    return bm25_topk(_docs(spark, sf_dir), BM25_QUERIES, k=10)
-
-
-def _sql_bm25(k1: float = 1.2, b: float = 0.75, k: int = 10) -> str:
-    qvals = ", ".join(
-        f"({qid}, '{t}')"
-        for qid, q in BM25_QUERIES
-        for t in sorted(set(q.lower().strip().split()))
-    )
-    return f"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                     x -> x <> '') AS ws
-  FROM documents
-),
-lens AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl FROM w),
-consts AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, AVG(dl) AS avgdl FROM lens),
-post AS (SELECT doc_id, unnest(ws) AS w FROM w),
-tft AS (SELECT w, doc_id, CAST(COUNT(*) AS BIGINT) AS tf FROM post GROUP BY 1, 2),
-dft AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS df FROM tft GROUP BY w),
-q(qid, w) AS (VALUES {{QVALS}}),
-sc AS (
-  SELECT q.qid, t.doc_id,
-         CAST(ROUND(LN(1.0 + (CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5))
-                    * ((t.tf * {k1 + 1.0!r})
-                       / (t.tf + {k1!r} * ({1.0 - b!r} + {b!r} * dl / avgdl)))
-                    * 1000000) AS BIGINT) AS s
-  FROM q JOIN tft t USING (w) JOIN dft USING (w)
-  JOIN lens ON t.doc_id = lens.doc_id CROSS JOIN consts
-),
-agg AS (
-  SELECT qid, doc_id, CAST(SUM(s) AS BIGINT) AS score_micro
-  FROM sc GROUP BY qid, doc_id
-),
-r AS (
-  SELECT qid, doc_id, score_micro,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY score_micro DESC, doc_id ASC) AS rank
-  FROM agg
-)
-SELECT qid, doc_id, CAST(rank AS INT) AS rank, score_micro
-FROM r WHERE rank <= {k}
-""".replace("{QVALS}", qvals)
-
-
-SQL_BM25_TOPK = _sql_bm25()
 
 
 BLOOM_M, BLOOM_K = 4096, 3

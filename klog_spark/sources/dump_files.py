@@ -53,6 +53,17 @@ OUT_SCHEMA = StructType(
 )
 
 
+def read_input(spark: SparkSession, path: str) -> DataFrame:
+    """The one input resolver of the CLI and the SQL views: tokenized-sequence
+    parquet (a ``.parquet`` path, or a directory holding parquet files) is
+    read as is; anything else is a directory/glob of dump-text files."""
+    if path.endswith(".parquet") or (
+        os.path.isdir(path) and _glob.glob(os.path.join(path, "*.parquet"))
+    ):
+        return spark.read.parquet(path)
+    return read_dump_files(spark, path)
+
+
 def read_dump_files(spark: SparkSession, path: str) -> DataFrame:
     """Directory/glob of dump-text files -> the tokenized sequence table."""
     from ..tokens import texts_to_token_arrays

@@ -43,22 +43,10 @@ def register_views(spark: SparkSession, input_data, prefix: str = "klog") -> lis
     from .operators import aggregates, checks, group_offsets
     from .operators.parse import parse_sequences
     from .operators.route import apply_validity_routing
+    from .sources.dump_files import read_input
 
-    if isinstance(input_data, DataFrame):
-        seq = input_data
-    elif str(input_data).endswith(".parquet"):
-        seq = spark.read.parquet(str(input_data))
-    else:
-        import glob
-        import os
-
-        p = str(input_data)
-        if os.path.isdir(p) and glob.glob(os.path.join(p, "*.parquet")):
-            seq = spark.read.parquet(p)
-        else:
-            from .sources.dump_files import read_dump_files
-
-            seq = read_dump_files(spark, p)
+    seq = (input_data if isinstance(input_data, DataFrame)
+           else read_input(spark, str(input_data)))
 
     parsed = parse_sequences(seq)          # raw: txn aggregates consume this
     routed = apply_validity_routing(parsed)  # sink view: corrupt re-routed

@@ -280,77 +280,6 @@ def dedup_stream(docs: DataFrame, text_col: str = "text",
     )
 
 
-def cms_cells_stream(stream: DataFrame, value_col: str,
-                     by: list[str] | None = None,
-                     depth: int = 4, width: int = 256) -> DataFrame:
-    """Live Count-Min sketch over a stream: the sketch's cells ARE a
-    streaming aggregation (``groupBy(by, d, bucket).count()`` in update
-    mode), so the engine's aggregation state IS the sketch — bounded at
-    depth x width counters per group by construction, no custom state
-    handler needed. After any prefix of the stream the emitted cells equal
-    ``sketch.cms_build`` over the same rows (pytest-pinned), and
-    ``sketch.cms_estimate`` answers point queries against the latest
-    snapshot. The natural shape for a live heavy-hitters / hot-key monitor
-    on an unbounded stream, where an exact per-key count would grow state
-    with key cardinality."""
-    from .datapipe.sketch import _cms_cells
-
-    by = by or []
-    cells = stream.select(*by, _cms_cells(value_col, depth, width))
-    return cells.groupBy(
-        *by, F.col("cell.d").alias("d"), F.col("cell.bucket").alias("bucket")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-
-
-def shard_manifest_stream(docs: DataFrame, seed: str, n_shards: int,
-                          text_col: str = "text", id_col: str = "doc_id",
-                          hash_fn: str = "xxhash64") -> DataFrame:
-    """Live export-audit manifest (streaming twin of
-    ``datapipe.shard.shard_manifest``): as documents stream toward the
-    sharded export, per-shard doc counts, char totals and the
-    order-independent content checksum accumulate in plain engine
-    aggregation state (update mode). Exact after ANY prefix of the stream
-    because every manifest column is a commutative count/sum — the property
-    the batch manifest was designed around (contrast the order-dependent
-    open/empty-txn fold, which stays batch-only). ``position`` is
-    deliberately absent: within-shard positions are assigned by the batch
-    write itself (a per-shard sort), not meaningful mid-stream.
-
-    State: ``n_shards`` rows of three counters — bounded by construction.
-    The checksum accumulates raw u32 sums in the state and applies the
-    final mod at emission, exact while a shard holds < 2^31 documents
-    (the batch module's bound)."""
-    from .datapipe.shard import U32, _shuffle_hash
-
-    if hash_fn == "xxhash64":
-        content_h = F.pmod(F.xxhash64(F.col(text_col)), F.lit(U32))
-    elif hash_fn == "java32":
-        from .javahash import java_hash_u32_expr
-
-        content_h = java_hash_u32_expr(F.col(text_col))
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    keyed = docs.select(
-        F.pmod(_shuffle_hash(seed, id_col, hash_fn), F.lit(n_shards))
-        .cast("int").alias("shard_id"),
-        F.length(text_col).cast("long").alias("_len"),
-        content_h.alias("_ch"),
-    )
-    return (
-        keyed.groupBy("shard_id")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("_len").cast("long").alias("n_chars"),
-            F.sum("_ch").alias("_ch_sum"),
-        )
-        .select(
-            "shard_id", "n_docs", "n_chars",
-            F.pmod(F.col("_ch_sum"), F.lit(U32)).cast("long")
-            .alias("content_checksum"),
-        )
-    )
-
-
 def scored_filter_stream(docs: DataFrame, weights: list[float],
                          stats: dict[str, tuple[float, float]],
                          text_col: str = "text",

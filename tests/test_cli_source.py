@@ -320,10 +320,11 @@ def test_dump_source_survives_junk_bytes(spark, tmp_path_factory):
     assert classes["j.log.dump.txt:2"] == "corrupt"
 
 
-def test_cli_segment_health(spark, dump_dir, capsys):
+def test_cli_segment_health(spark, dump_dir, capsys, tmp_path):
     """`segment health` prints the per-file dashboard over CLI input and
-    its counts agree with direct aggregation; the same table is published
-    as a SQL view."""
+    its counts agree with direct aggregation; a tokenized parquet directory
+    of the same dumps prints the same dashboard; the same table is
+    published as a SQL view."""
     from klog_spark.__main__ import main
     from klog_spark.operators.parse import parse_sequences
     from klog_spark.operators.route import apply_validity_routing
@@ -340,6 +341,11 @@ def test_cli_segment_health(spark, dump_dir, capsys):
     assert all("n_corrupt=" in ln and "corrupt_rate=" in ln for ln in out)
     total_lines = sum(int(ln.split("n_lines=")[1].split(" ")[0]) for ln in out)
     assert total_lines == routed.count()
+
+    pq_dir = str(tmp_path / "tokenized")
+    read_dump_files(spark, dump_dir + "/*.dump.txt").write.parquet(pq_dir)
+    assert main(["segment", "health", pq_dir], spark=spark) == 0
+    assert capsys.readouterr().out.strip().splitlines() == out
 
     names = register_views(spark, dump_dir, prefix="h1")
     assert "h1_file_health" in names

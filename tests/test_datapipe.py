@@ -1,5 +1,4 @@
-"""Training-data pipeline operators: dedup recall, ANN recall, text stats,
-multimodal plumbing."""
+"""Training-data pipeline operators: dedup recall, ANN recall, text stats."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -120,23 +119,6 @@ def test_textstats_shapes(docs):
     assert q.filter(F.col("stopword_ratio").isNull()).count() == 0
     langs = lang_id(docs).groupBy("lang_guess").count().collect()
     assert len(langs) >= 2  # fixture has multiple languages
-
-
-def test_multimodal_plumbing(spark, docs):
-    from klog_spark.datapipe.multimodal import decode_media, documents_as_media, extract_features
-
-    media = documents_as_media(docs)
-    feats = extract_features(media).collect()
-    assert len(feats) == docs.count()
-    by_id = {r["doc_id"]: r for r in feats}
-    sample = docs.first()
-    blob = sample["text"].encode()
-    r = by_id[sample["doc_id"]]
-    assert r["byte_len"] == len(blob)
-    assert r["n_frames"] == max(1, (len(blob) + 1023) // 1024)
-    assert sum(r["frame_digests"]) == sum(blob)
-    with pytest.raises(NotImplementedError):
-        decode_media(b"x", "image/jpeg")
 
 
 def test_ngram_max_df_cap_is_subquadratic_on_hot_shingle(spark):
@@ -538,173 +520,6 @@ def test_ivfpq_shape_and_codebook_trainer(spark):
     assert recon_err(trained) < recon_err(first_n)
 
 
-def test_png_decoder_all_filters_and_wav_roundtrip():
-    """Pure-stdlib codecs: decode must invert every PNG scanline filter
-    (None/Sub/Up/Average/Paeth) — rows 3/4 are hand-filtered per the spec
-    since the encoder only writes 0-2 — and WAV PCM16 must round-trip."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from klog_spark.datapipe.multimodal import (
-        _PNG_SIG, decode_png, decode_wav, encode_png, encode_wav_pcm16,
-    )
-
-    rng = np.random.default_rng(11)
-    arr = rng.integers(0, 256, size=(5, 6, 3), dtype=np.uint8)
-    h, w, c = arr.shape
-    lines = []
-    prev = np.zeros(w * c, dtype=np.int64)
-    for y, ftype in enumerate([0, 1, 2, 3, 4]):
-        row = arr[y].reshape(-1).astype(np.int64)
-        filt = np.empty_like(row)
-        for i in range(len(row)):
-            a = row[i - c] if i >= c else 0
-            b = prev[i]
-            cc = prev[i - c] if i >= c else 0
-            if ftype == 0:
-                pred = 0
-            elif ftype == 1:
-                pred = a
-            elif ftype == 2:
-                pred = b
-            elif ftype == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - cc
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-            filt[i] = (row[i] - pred) % 256
-        lines.append(bytes([ftype]) + filt.astype(np.uint8).tobytes())
-        prev = row
-
-    def chunk(typ, data):
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
-
-    blob = (_PNG_SIG + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(b"".join(lines))) + chunk(b"IEND", b""))
-    assert np.array_equal(decode_png(blob), arr)
-
-    # encoder round-trips for its own filters, gray + RGBA variants
-    for ft in (0, 1, 2):
-        assert np.array_equal(decode_png(encode_png(arr, filter_type=ft)), arr)
-    gray = rng.integers(0, 256, size=(4, 7), dtype=np.uint8)
-    assert np.array_equal(decode_png(encode_png(gray))[:, :, 0], gray)
-    rgba = rng.integers(0, 256, size=(3, 3, 4), dtype=np.uint8)
-    assert np.array_equal(decode_png(encode_png(rgba)), rgba)
-
-    samples = rng.integers(-30000, 30000, size=777).astype(np.int64)
-    dec, sr, ch = decode_wav(encode_wav_pcm16(samples, 16000))
-    assert sr == 16000 and ch == 1 and np.array_equal(dec[:, 0], samples)
-
-
-def test_media_decode_video_stays_honest():
-    import pytest as _pytest
-
-    from klog_spark.datapipe.multimodal import decode_media
-
-    with _pytest.raises(NotImplementedError):
-        decode_media(b"\x00\x01", "video/mp4")
-
-
-def test_corrupt_media_blob_routes_not_raises(spark):
-    """Poison rows route, never kill the job: a corrupt blob AND an
-    unsupported per-row media_type ('video/mp4', garbage strings) yield
-    decode_ok=false with null features — media_type is data just like the
-    blob. on_unsupported='error' restores the fail-loud contract."""
-    import pytest as _pytest
-
-    from klog_spark.datapipe.multimodal import (
-        encode_wav_pcm16, extract_decoded_features,
-    )
-    import numpy as np
-
-    good = encode_wav_pcm16(np.arange(10, dtype=np.int64), 8000)
-    rows = [(1, bytearray(good), "audio/wav"),
-            (2, bytearray(b"\x89PNG\r\n\x1a\nGARBAGE"), "image/png"),
-            (3, bytearray(b"not media at all"), "audio/wav"),
-            (4, bytearray(b"\x00\x01\x02"), "video/mp4"),
-            (5, bytearray(good), "application/whatever")]
-    df = spark.createDataFrame(rows, "doc_id long, media binary, media_type string")
-    out = {r["doc_id"]: r for r in extract_decoded_features(df).collect()}
-    assert out[1]["decode_ok"] and out[1]["n_samples"] == 10
-    assert not out[2]["decode_ok"] and out[2]["pixel_sum"] is None
-    assert not out[3]["decode_ok"]
-    assert not out[4]["decode_ok"] and out[4]["media_type"] == "video/mp4"
-    assert not out[5]["decode_ok"]
-    # configured-contract mode: an unexpected type fails the job loudly
-    with _pytest.raises(Exception, match="(?i)no stdlib codec"):
-        extract_decoded_features(df, on_unsupported="error").collect()
-
-
-def test_bmp_ppm_codecs_roundtrip():
-    import numpy as np
-
-    from klog_spark.datapipe.multimodal import (
-        decode_bmp, decode_media, decode_ppm, encode_bmp, encode_ppm,
-    )
-
-    rng = np.random.default_rng(5)
-    arr = rng.integers(0, 256, size=(7, 5, 3), dtype=np.uint8)  # odd width: padding
-    assert np.array_equal(decode_bmp(encode_bmp(arr)), arr)
-    assert np.array_equal(decode_ppm(encode_ppm(arr)), arr)
-    assert decode_media(encode_bmp(arr), "image/bmp")["pixel_sum"] == int(arr.sum())
-    # comment-tolerant PPM header
-    blob = b"P6\n# a comment\n5 7\n255\n" + arr.tobytes()
-    assert np.array_equal(decode_ppm(blob), arr)
-
-
-def test_aiff_codec_roundtrip_and_stdlib_parity():
-    """Hand-rolled big-endian AIFF codec: roundtrip at awkward sample rates
-    (the 80-bit extended-float COMM field), byte-level parity with the
-    stdlib ``aifc`` writer as an independent oracle, and decode_media
-    dispatch for both MIME spellings."""
-    import warnings
-
-    import numpy as np
-
-    from klog_spark.datapipe.multimodal import (
-        _f80_decode, _f80_encode, decode_aiff, decode_media, encode_aiff_pcm16,
-    )
-
-    for rate in (8000, 11025, 22050, 44100, 48000):
-        assert _f80_decode(_f80_encode(float(rate))) == float(rate)
-
-    rng = np.random.default_rng(11)
-    samples = rng.integers(-30000, 30000, size=513).astype(np.int64)
-    blob = encode_aiff_pcm16(samples, 44100)
-    dec, sr, ch = decode_aiff(blob)
-    assert sr == 44100 and ch == 1 and np.array_equal(dec[:, 0], samples)
-
-    # independent oracle: our decoder must read the stdlib aifc writer's
-    # output bit-for-bit (aifc is deprecated; fine as a test-only oracle)
-    import io as _io
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", DeprecationWarning)
-        import aifc
-
-        class _KeepOpen(_io.BytesIO):  # aifc closes the passed file object
-            def close(self):
-                pass
-
-        buf = _KeepOpen()
-        with aifc.open(buf, "wb") as af:
-            af.setnchannels(1)
-            af.setsampwidth(2)
-            af.setframerate(11025)
-            af.writeframes(samples.astype(">i2").tobytes())
-        dec2, sr2, ch2 = decode_aiff(buf.getvalue())
-    assert sr2 == 11025 and ch2 == 1 and np.array_equal(dec2[:, 0], samples)
-
-    feats = decode_media(blob, "audio/x-aiff")
-    assert feats["n_samples"] == 513
-    assert feats["sample_abs_sum"] == int(np.abs(samples).sum())
-    assert decode_media(blob, "audio/aiff") == feats
-
-
 def test_asof_join_matches_pandas_merge_asof(spark):
     """The generic as-of join must agree with pandas.merge_asof (the
     reference implementation) on random inputs, including the <=-tie case
@@ -741,43 +556,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
             for r in merged.itertuples()
         }
         assert got == want
-
-
-def test_kmv_sketch_non_string_group_keys(spark):
-    """`by` columns keep their input types in the output (the partial's
-    schema is built from df.schema, not hardcoded StringType) — grouping by
-    an int partition key must round-trip as a long, with the same estimates
-    as the equivalent string-keyed sketch."""
-    from klog_spark.datapipe.sketch import kmv_distinct
-
-    rows = [(j, f"g{j}", f"v{i % (20 if j == 0 else 900)}")
-            for j in range(2) for i in range(2000)]
-    df = spark.createDataFrame(rows, "gi long, gs string, v string")
-    by_int = kmv_distinct(df, "v", ["gi"], k=32)
-    assert dict(by_int.dtypes)["gi"] == "bigint"
-    got_int = {r["gi"]: r["kmv_estimate"] for r in by_int.collect()}
-    got_str = {r["gs"]: r["kmv_estimate"]
-               for r in kmv_distinct(df, "v", ["gs"], k=32).collect()}
-    assert got_int == {0: got_str["g0"], 1: got_str["g1"]}
-    assert got_int[0] == 20.0  # below k -> exact
-
-
-def test_kmv_sketch_accuracy_and_partition_invariance(spark):
-    """KMV: exact below k, ~10-15% accurate above it at k=64, and the
-    result is identical under different partitionings (the bottom-k state
-    is a proper mergeable sketch)."""
-    from klog_spark.datapipe.sketch import kmv_distinct
-
-    rows = [(f"g{j}", f"v{i % (50 if j == 0 else 2000)}") for j in range(2)
-            for i in range(6000)]
-    df = spark.createDataFrame(rows, "g string, v string")
-    out1 = {r["g"]: r for r in kmv_distinct(df, "v", ["g"], k=64).collect()}
-    assert out1["g0"]["kmv_estimate"] == 50.0  # below k -> exact
-    est = out1["g1"]["kmv_estimate"]
-    assert 2000 * 0.75 <= est <= 2000 * 1.3  # sketch-accurate, not exact
-    out2 = {r["g"]: r["kmv_estimate"]
-            for r in kmv_distinct(df.repartition(17), "v", ["g"], k=64).collect()}
-    assert out2 == {g: r["kmv_estimate"] for g, r in out1.items()}
 
 
 def _java32(s: str) -> int:
@@ -1011,54 +789,6 @@ def test_remove_repeated_spans(spark):
     assert via_table == out
 
 
-def test_cms_sketch_properties(spark):
-    """Count-Min invariants: estimates are upper bounds on true counts and
-    exact at collision-free width; the sketch is partition-invariant; and
-    the sketch of a union equals the cell-wise sum of the parts (proper
-    mergeable-sketch semantics)."""
-    from klog_spark.datapipe.sketch import cms_build, cms_estimate
-
-    rows = [(f"v{i % 37}",) for i in range(3000)] + [("hot",)] * 500
-    df = spark.createDataFrame(rows, "v string")
-    true = {r["v"]: r["n"] for r in
-            df.groupBy("v").agg(F.count("*").alias("n")).collect()}
-    queries = df.select("v").distinct()
-
-    narrow = cms_build(df, "v", depth=4, width=16)      # collisions certain
-    est_n = {r["v"]: r["cms_count"] for r in
-             cms_estimate(narrow, queries, "v", depth=4, width=16).collect()}
-    assert all(est_n[v] >= n for v, n in true.items())  # upper bound, always
-    assert est_n["hot"] >= 500
-
-    wide = cms_build(df, "v", depth=4, width=4096)      # 38 keys: no collision
-    est_w = {r["v"]: r["cms_count"] for r in
-             cms_estimate(wide, queries, "v", depth=4, width=4096).collect()}
-    assert est_w == true
-
-    # partition invariance: identical cells under a different partitioning
-    cells_a = {(r["d"], r["bucket"]): r["cnt"] for r in narrow.collect()}
-    cells_b = {(r["d"], r["bucket"]): r["cnt"]
-               for r in cms_build(df.repartition(13), "v",
-                                  depth=4, width=16).collect()}
-    assert cells_a == cells_b
-
-    # mergeability: sketch(A ∪ B) == cellwise_sum(sketch(A), sketch(B))
-    half1 = spark.createDataFrame(rows[:1500], "v string")
-    half2 = spark.createDataFrame(rows[1500:], "v string")
-    merged = (
-        cms_build(half1, "v", depth=4, width=16)
-        .unionByName(cms_build(half2, "v", depth=4, width=16))
-        .groupBy("d", "bucket").agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    cells_m = {(r["d"], r["bucket"]): r["cnt"] for r in merged.collect()}
-    assert cells_m == cells_a
-
-    # unknown value -> 0 only if its cells are all empty; at minimum bounded
-    unk = cms_estimate(narrow, spark.createDataFrame([("never-seen-xyz",)],
-                       "v string"), "v", depth=4, width=16).collect()[0]
-    assert unk["cms_count"] >= 0
-
-
 def test_logreg_trainer_matches_numpy(spark):
     """Distributed full-batch GD vs the sequential NumPy oracle: same
     weights and loss trajectory to 1e-6 (only float-summation order can
@@ -1170,76 +900,6 @@ def test_logreg_trainer_scans_input_once(spark):
     assert acc.value <= 400, acc.value
 
 
-def test_resize_media_distributed(spark):
-    """Distributed nearest-neighbor resize: the resized blob decodes to
-    exactly the NumPy-reference resample of the closed-form source image
-    (pixel-for-pixel), gray images survive, corrupt blobs and audio rows
-    flag decode_ok=false instead of failing the batch."""
-    import numpy as np
-
-    from klog_spark.datapipe.multimodal import (
-        decode_png, encode_png, encode_wav_pcm16, resize_image, resize_media,
-    )
-
-    def img(i, w=11, h=9):
-        x = np.arange(w)[None, :, None]
-        y = np.arange(h)[:, None, None]
-        ch = np.arange(3)[None, None, :]
-        return ((x * 7 + y * 13 + ch * 29 + i * 31) % 256).astype(np.uint8)
-
-    gray = (np.arange(35, dtype=np.uint8).reshape(5, 7) * 3) % 256
-    rows = [
-        (0, bytearray(encode_png(img(0))), "image/png"),
-        (1, bytearray(encode_png(img(1), filter_type=2)), "image/png"),
-        (2, bytearray(encode_png(gray)), "image/png"),
-        (3, bytearray(b"\x89PNG\r\n\x1a\nBROKEN"), "image/png"),
-        (4, bytearray(encode_wav_pcm16(np.arange(8, dtype=np.int64))), "audio/wav"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, media binary, media_type string")
-    out = {r["doc_id"]: r for r in resize_media(df, 4, 6).collect()}
-
-    for i in (0, 1):
-        want = resize_image(img(i), 4, 6)
-        got = decode_png(bytes(out[i]["media"]))
-        assert np.array_equal(got, want)
-        assert out[i]["pixel_sum"] == int(want.astype(np.int64).sum())
-        assert (out[i]["width"], out[i]["height"]) == (4, 6)
-    wg = resize_image(gray[:, :, None], 4, 6)
-    assert np.array_equal(decode_png(bytes(out[2]["media"]))[:, :, 0], wg[:, :, 0])
-    assert not out[3]["decode_ok"] and out[3]["pixel_sum"] is None
-    assert not out[4]["decode_ok"]  # audio is not resizable
-    assert bytes(out[4]["media"]) == bytes(rows[4][1])  # original preserved
-
-
-def test_audio_features_zcr_edges(spark):
-    """Zero-crossing convention pinned: zeros inherit the previous sign,
-    the leading-zero run never counts, an all-zero signal has zero
-    crossings; energy/peak are exact integers."""
-    import numpy as np
-
-    from klog_spark.datapipe.multimodal import (
-        encode_wav_pcm16, extract_audio_features,
-    )
-
-    sigs = {
-        1: [0, 0, 5, -3, 0, 0, -2, 7],   # lead zeros no count; 5->-3, -2->7 = 2... and zeros carry -3
-        2: [0, 0, 0, 0],                  # all zero -> 0 crossings
-        3: [1, -1, 1, -1, 1],             # alternating -> 4
-        4: [3, 3, 3],                     # constant sign -> 0
-    }
-    rows = [(i, bytearray(encode_wav_pcm16(np.array(s, dtype=np.int64))), "audio/wav")
-            for i, s in sigs.items()]
-    df = spark.createDataFrame(rows, "doc_id long, media binary, media_type string")
-    out = {r["doc_id"]: r for r in extract_audio_features(df).collect()}
-    # sig 1: carried = [0,0,+,-,-,-,-,+]; transitions with signed prev: +->- and -> + = 2
-    assert out[1]["n_zero_crossings"] == 2
-    assert out[1]["energy"] == sum(v * v for v in sigs[1])
-    assert out[1]["peak_abs"] == 7
-    assert out[2]["n_zero_crossings"] == 0 and out[2]["energy"] == 0
-    assert out[3]["n_zero_crossings"] == 4
-    assert out[4]["n_zero_crossings"] == 0
-
-
 def test_compression_ratio_scores(spark):
     """Ratio parity with direct zlib, and the signal's defining ordering:
     repetitive text compresses far better than high-entropy text."""
@@ -1309,74 +969,6 @@ def test_doc_keywords_python_parity(spark):
     got2 = {(r["doc_id"], r["rank"]): (r["keyword"], r["tf"], r["tfidf"])
             for r in doc_keywords(df.repartition(5), k=3).collect()}
     assert got2 == got
-
-
-def test_deterministic_shuffle_permutation_properties(spark, docs):
-    """deterministic_shuffle must be a seeded PERMUTATION: dense 0-based
-    positions per shard, every doc exactly once, identical under
-    repartitioning (no RNG/partition state), different under a different
-    seed — while the manifest's order-independent checksum is seed-invariant
-    per corpus and sensitive to content corruption."""
-    from klog_spark.datapipe.shard import deterministic_shuffle, shard_manifest
-
-    n_shards = 8
-    sh = deterministic_shuffle(docs, seed="s1", n_shards=n_shards,
-                               hash_fn="java32")
-    rows = sh.select("doc_id", "shard_id", "position").collect()
-    n = docs.count()
-    assert len(rows) == n
-    assert len({r["doc_id"] for r in rows}) == n          # every doc once
-    by_shard: dict[int, list[int]] = {}
-    for r in rows:
-        assert 0 <= r["shard_id"] < n_shards
-        by_shard.setdefault(r["shard_id"], []).append(r["position"])
-    for ps in by_shard.values():
-        assert sorted(ps) == list(range(len(ps)))          # dense 0-based
-
-    # partition invariance: same (doc_id -> shard, position) map
-    again = deterministic_shuffle(docs.repartition(7), seed="s1",
-                                  n_shards=n_shards, hash_fn="java32")
-    assert {(r["doc_id"], r["shard_id"], r["position"]) for r in rows} == {
-        (r["doc_id"], r["shard_id"], r["position"])
-        for r in again.select("doc_id", "shard_id", "position").collect()
-    }
-
-    # a different seed reorders (astronomically unlikely to agree on all)
-    other = deterministic_shuffle(docs, seed="s2", n_shards=n_shards,
-                                  hash_fn="java32")
-    assert {(r["doc_id"], r["shard_id"], r["position"]) for r in rows} != {
-        (r["doc_id"], r["shard_id"], r["position"])
-        for r in other.select("doc_id", "shard_id", "position").collect()
-    }
-
-    # manifest: totals conserve; global checksum is seed-INVARIANT
-    def global_sum(shuffled):
-        m = shard_manifest(shuffled, hash_fn="java32")
-        rs = m.collect()
-        assert all(r["max_position"] == r["n_docs"] - 1 for r in rs)
-        return (sum(r["n_docs"] for r in rs),
-                sum(r["content_checksum"] for r in rs) % 4_294_967_296)
-    assert global_sum(sh) == global_sum(other)
-    # ...and content-SENSITIVE: corrupt one document, checksum moves
-    corrupted = docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") == rows[0]["doc_id"],
-               F.concat(F.col("text"), F.lit("!corrupt"))).otherwise(F.col("text")),
-    )
-    assert global_sum(
-        deterministic_shuffle(corrupted, seed="s1", n_shards=n_shards,
-                              hash_fn="java32")
-    )[1] != global_sum(sh)[1]
-
-    # xxhash64 throughput variant: same permutation contract
-    xs = deterministic_shuffle(docs, seed="s1", n_shards=n_shards)
-    xr = xs.select("doc_id", "shard_id", "position").collect()
-    assert len({r["doc_id"] for r in xr}) == n
-    xby: dict[int, list[int]] = {}
-    for r in xr:
-        xby.setdefault(r["shard_id"], []).append(r["position"])
-    for ps in xby.values():
-        assert sorted(ps) == list(range(len(ps)))
 
 
 def test_bigram_lm_scores_python_parity(spark):
@@ -2333,21 +1925,6 @@ def test_wordlist_filter_paths_and_semantics(spark):
         assert empty == {1: (0, True), 2: (0, True), 3: (0, True), 4: (0, True)}
 
 
-def test_corpus_diff_statuses(spark):
-    """All four statuses come out right, including an id present in both
-    with identical text, a rewrite, a pure add and a pure remove."""
-    from klog_spark.datapipe.shard import corpus_diff
-
-    old = spark.createDataFrame(
-        [(1, "same"), (2, "will change"), (3, "will vanish")],
-        "doc_id long, text string")
-    new = spark.createDataFrame(
-        [(1, "same"), (2, "changed!"), (9, "brand new")],
-        "doc_id long, text string")
-    got = {r["doc_id"]: r["status"] for r in corpus_diff(old, new).collect()}
-    assert got == {1: "unchanged", 2: "changed", 3: "removed", 9: "added"}
-
-
 def test_calibration_sweep_confusion_counts(spark):
     """Hand-checkable confusion table at three thresholds; counts partition
     n_docs; monotonicity: n_kept is non-increasing in the threshold."""
@@ -2452,60 +2029,6 @@ def test_chunk_quality_filter_worst_chunk_semantics(spark):
         SCORED_FILTER_WEIGHTS, SCORED_FILTER_STATS, max_words=40, overlap=0)
     per_chunk = {r["doc_id"]: r["min_margin_micro"] for r in rescored.collect()}
     assert min(per_chunk[2000 + i] for i in range(3)) == out[2]["min_margin_micro"]
-
-
-def test_bm25_topk_python_oracle(spark):
-    """BM25 ranks equal a sequential Python recomputation of the exact
-    formula on a hand-built mini-corpus; a rare term out-ranks a common
-    one; ties break on doc_id."""
-    import math
-
-    from klog_spark.datapipe.retrieval import bm25_topk
-
-    rows = [
-        (1, "apple banana apple"),          # tf(apple)=2
-        (2, "apple cherry"),
-        (3, "banana banana banana banana"),
-        (4, "cherry durian cherry"),
-        (5, "filler words only here today"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    queries = [(1, "apple"), (2, "durian banana"), (3, "apple apple")]
-    out = {}
-    for r in bm25_topk(df, queries, k=3).collect():
-        out.setdefault(r["qid"], []).append((r["rank"], r["doc_id"], r["score_micro"]))
-
-    k1, b = 1.2, 0.75
-    docs_w = {i: t.split() for i, t in rows}
-    N = len(rows)
-    avgdl = sum(len(w) for w in docs_w.values()) / N
-    tf = {}
-    for i, ws in docs_w.items():
-        for w in ws:
-            tf[(w, i)] = tf.get((w, i), 0) + 1
-    dfreq = {}
-    for (w, _i) in tf:
-        dfreq[w] = dfreq.get(w, 0) + 1
-
-    def score(q_terms, i):
-        s = 0
-        for w in sorted(set(q_terms)):
-            if (w, i) not in tf:
-                continue
-            idf = math.log(1.0 + (N - dfreq[w] + 0.5) / (dfreq[w] + 0.5))
-            t = tf[(w, i)]
-            tfn = (t * (k1 + 1.0)) / (t + k1 * (1 - b + b * len(docs_w[i]) / avgdl))
-            s += round(idf * tfn * 1e6)
-        return s
-
-    for qid, q in queries:
-        scored = [(score(q.split(), i), i) for i in docs_w
-                  if score(q.split(), i) > 0]
-        want = [(r + 1, i, s) for r, (s, i) in
-                enumerate(sorted(scored, key=lambda x: (-x[0], x[1]))[:3])]
-        assert sorted(out[qid]) == want, f"qid={qid}"
-    # duplicate query terms count once: qids 1 and 3 rank identically
-    assert [x[1:] for x in sorted(out[1])] == [x[1:] for x in sorted(out[3])]
 
 
 def test_temperature_weights_semantics(spark):

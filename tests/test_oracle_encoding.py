@@ -1,12 +1,11 @@
 """Oracle encoding-faithfulness (ADVICE round 1): the DuckDB oracles for
-doc_fingerprint / multimodal_features must agree with the Spark engine on
+doc_fingerprint must agree with the Spark engine on
 hostile text — newlines, non-ASCII, surrogate-pair codepoints — not just the
 driver tables' ASCII single-line content (whose precondition is asserted
 here too)."""
 
 import duckdb
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 HOSTILE = [
@@ -17,13 +16,6 @@ HOSTILE = [
     (5, ""),
     (6, "tab\tand\rcarriage"),
 ]
-
-
-@pytest.fixture()
-def duck():
-    con = duckdb.connect()
-    con.register("documents", pd.DataFrame(HOSTILE, columns=["doc_id", "text"]))
-    return con
 
 
 def test_driver_documents_are_single_line_ascii():
@@ -61,23 +53,6 @@ def test_fingerprint_oracle_utf16_faithful(spark):
     con.register("documents", pd.DataFrame(HOSTILE, columns=["doc_id", "text"]))
     oracle = dict(con.execute(SQL_DOC_FINGERPRINT).fetchall())
     assert oracle == got
-
-
-def test_multimodal_oracle_utf8_faithful(spark, duck):
-    from klog_spark.entry_queries import SQL_MULTIMODAL_FEATURES, q_multimodal_features
-    import tempfile
-
-    docs = spark.createDataFrame(HOSTILE, "doc_id: long, text: string")
-    with tempfile.TemporaryDirectory() as d:
-        docs.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-        got = {r["doc_id"]: (r["byte_len"], r["n_frames"], r["total_digest"])
-               for r in q_multimodal_features(spark, d).collect()}
-    want = {r[0]: (r[1], r[2], r[3]) for r in duck.execute(SQL_MULTIMODAL_FEATURES).fetchall()}
-    # python reference: UTF-8 byte sums
-    for i, t in HOSTILE:
-        b = t.encode("utf-8")
-        assert got[i] == (len(b), max(1, (len(b) + 1023) // 1024), sum(b)), (i, t)
-    assert want == got
 
 
 def test_instant_string_matches_java_instant_tostring(spark):

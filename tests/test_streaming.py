@@ -226,38 +226,6 @@ def test_dedup_stream_matches_batch_distinct(spark, tmp_path_factory):
     assert {r["text"] for r in out} == set(texts)
 
 
-def test_cms_cells_stream_matches_batch(spark, tmp_path_factory):
-    """Streaming CMS: after consuming all micro-batches, the emitted cells
-    equal the batch cms_build over the same rows — the engine's aggregation
-    state is the sketch, bounded at depth x width per group."""
-    from klog_spark.datapipe.sketch import cms_build
-    from klog_spark.streaming import cms_cells_stream
-
-    src = tmp_path_factory.mktemp("cms_stream")
-    rows = [(f"g{i % 2}", f"v{i % 50}") for i in range(2000)]
-    df = spark.createDataFrame(rows, "g string, v string")
-    df.repartition(6).write.mode("overwrite").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(str(src))
-    )
-    q = (
-        cms_cells_stream(stream, "v", by=["g"], depth=4, width=32)
-        .writeStream.format("memory").queryName("cms_cells")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {(r["g"], r["d"], r["bucket"]): r["cnt"]
-           for r in spark.sql("select * from cms_cells").collect()}
-    want = {(r["g"], r["d"], r["bucket"]): r["cnt"]
-            for r in cms_build(df, "v", by=["g"], depth=4, width=32).collect()}
-    assert got == want and len(got) <= 2 * 4 * 32
-
-
 def test_dedup_stream_within_watermark(spark, tmp_path_factory):
     """The watermark-bounded dedup variant: duplicates arriving within the
     watermark window are dropped; the output carries exactly one row per
@@ -288,44 +256,6 @@ def test_dedup_stream_within_watermark(spark, tmp_path_factory):
     out = spark.sql("select * from dedup_wm_out").collect()
     assert len(out) == 25
     assert {r["text"] for r in out} == {f"txt {i}" for i in range(25)}
-
-
-def test_shard_manifest_stream_matches_batch(spark, tmp_path_factory):
-    """Streaming export-audit manifest: after consuming all micro-batches
-    (out of any order), the emitted per-shard counts/chars/checksums equal
-    the batch shard_manifest over the same documents — every manifest
-    column is a commutative sum, so engine aggregation state is exact."""
-    from klog_spark.datapipe.shard import deterministic_shuffle, shard_manifest
-    from klog_spark.streaming import shard_manifest_stream
-
-    src = tmp_path_factory.mktemp("shard_stream")
-    rows = [(i, f"doc {i} body " + "w" * (i % 17)) for i in range(500)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    df.repartition(7).write.mode("overwrite").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(str(src))
-    )
-    q = (
-        shard_manifest_stream(stream, seed="s", n_shards=8, hash_fn="java32")
-        .writeStream.format("memory").queryName("shard_manifest")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {r["shard_id"]: (r["n_docs"], r["n_chars"], r["content_checksum"])
-           for r in spark.sql("select * from shard_manifest").collect()}
-    want = {
-        r["shard_id"]: (r["n_docs"], r["n_chars"], r["content_checksum"])
-        for r in shard_manifest(
-            deterministic_shuffle(df, seed="s", n_shards=8, hash_fn="java32"),
-            hash_fn="java32",
-        ).collect()
-    }
-    assert got == want and sum(n for n, _, _ in got.values()) == 500
 
 
 def test_scored_filter_stream_matches_batch(spark, tmp_path_factory):

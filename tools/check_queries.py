@@ -37,7 +37,7 @@ import pyarrow as pa
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = "events documents embeddings".split()
+TABLES = "documents embeddings".split()
 
 
 def _norm(v):
@@ -164,7 +164,7 @@ def main(names=None):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
 
-    # driver-gate registry (50 rows) + the locally-verified extras: the
+    # driver-gate registry + the locally-verified extras: the
     # local gate always checks the FULL surface
     qs = {**entry.queries(), **entry.extra_queries()}
     oss = {**entry.oracle_sql(), **entry.extra_oracle_sql()}

@@ -84,16 +84,14 @@ def main(sf: float = 0.1) -> int:
         "cluster_balanced_sample": (eq.q_cluster_balanced_sample, eq.SQL_CLUSTER_BALANCED_SAMPLE),
         "semdedup_prototypes": (eq.q_semdedup_prototypes, eq.SQL_SEMDEDUP_PROTOTYPES),
         # late-round-7 operators: paragraph dedup's global first-occurrence
-        # rule, the two-stage ANN refine, the wordlist screen, the snapshot
-        # diff and the calibration sweep
+        # rule, the two-stage ANN refine, the wordlist screen and the
+        # calibration sweep
         "dedup_paragraphs": (eq.q_dedup_paragraphs, eq.SQL_DEDUP_PARAGRAPHS),
         "ann_ivfpq_rerank": (eq.q_ann_ivfpq_rerank, eq.SQL_ANN_IVFPQ_RERANK),
         "wordlist_filter": (eq.q_wordlist_filter, eq.SQL_WORDLIST_FILTER),
-        "corpus_diff": (eq.q_corpus_diff, eq.SQL_CORPUS_DIFF),
         "quality_calibration": (eq.q_quality_calibration, eq.SQL_QUALITY_CALIBRATION),
         "dsir_sample": (eq.q_dsir_sample, eq.SQL_DSIR_SAMPLE),
         "chunk_quality": (eq.q_chunk_quality, eq.SQL_CHUNK_QUALITY),
-        "bm25_topk": (eq.q_bm25_topk, eq.SQL_BM25_TOPK),
         "temperature_weights": (eq.q_temperature_weights, eq.SQL_TEMPERATURE_WEIGHTS),
         # round-8 operators at 10x the gate scale: the novelty shingle
         # join, the SQ8 quantizer retrained on the 10x corpus (per-dim

@@ -153,15 +153,8 @@ def main() -> None:
     sections.append(("weighted sample (global A-ES)", plan_of(ws), ["TakeOrderedAndProject"]))
     assert "TakeOrderedAndProject" in ws_plan, "global sample must be TakeOrdered"
 
-    # 8g. sketches & corpus stats: fixed-size hash aggregations; the CMS
-    #     estimate is a bounded (by, d, bucket) equi-join; the repeated-span
-    #     merge is windows + aggregates with no nested loop anywhere
-    cms = eq.q_cms_user_counts(spark, SF_DIR)
-    cms_plan = plan_of(cms, "simple")
-    sections.append(("Count-Min sketch build+estimate", plan_of(cms), ["HashAggregate", "Join"]))
-    assert "CartesianProduct" not in cms_plan
-    bp = eq.q_bpe_pair_counts(spark, SF_DIR)
-    sections.append(("BPE pair counts", plan_of(bp), ["HashAggregate"]))
+    # 8g. corpus stats: the repeated-span merge is windows + aggregates with
+    #     no nested loop anywhere
     rs = eq.q_repeated_spans(spark, SF_DIR)
     rs_plan = plan_of(rs, "simple")
     sections.append(("repeated-span detection", plan_of(rs), ["Window", "HashAggregate"]))
@@ -224,8 +217,7 @@ def main() -> None:
     #     partial-aggregated hash agg (never a window funneling hot blocks
     #     through one task); the ANN refine stage must BROADCAST the
     #     candidate set against the corpus; the wordlist screen is a pure
-    #     projection; the snapshot diff is one digest-only SortMergeJoin/
-    #     ShuffledHashJoin with no cartesian
+    #     projection
     dp = eq.q_dedup_paragraphs(spark, SF_DIR)
     dp_plan = plan_of(dp, "simple")
     sections.append(("paragraph-block dedup", plan_of(dp), ["HashAggregate"]))
@@ -238,10 +230,6 @@ def main() -> None:
     wf_plan = plan_of(wf, "simple")
     sections.append(("blocked-wordlist filter", plan_of(wf), ["Scan parquet"]))
     assert "Exchange" not in wf_plan, "the expr wordlist path must not shuffle"
-    cd = eq.q_corpus_diff(spark, SF_DIR)
-    cd_plan = plan_of(cd, "simple")
-    sections.append(("corpus snapshot diff", plan_of(cd), ["Join"]))
-    assert "CartesianProduct" not in cd_plan and "BroadcastNestedLoopJoin" not in cd_plan
     qc = eq.q_quality_calibration(spark, SF_DIR)
     qc_plan = plan_of(qc, "simple")
     sections.append(("quality calibration sweep", plan_of(qc), ["HashAggregate"]))
@@ -258,11 +246,6 @@ def main() -> None:
         "chunk quality's only shuffle is the doc_id aggregation"
     assert cq_plan.count("Exchange") == 1, \
         "chunk quality must shuffle exactly once (the doc_id agg)"
-    bm = eq.q_bm25_topk(spark, SF_DIR)
-    bm_plan = plan_of(bm, "simple")
-    sections.append(("BM25 keyword retrieval", plan_of(bm), ["BroadcastHashJoin"]))
-    assert "CartesianProduct" not in bm_plan and "BroadcastNestedLoopJoin" not in bm_plan, \
-        "query terms must broadcast into the postings join"
     twq = eq.q_temperature_weights(spark, SF_DIR)
     sections.append(("temperature source weights", plan_of(twq), ["HashAggregate"]))
 
