@@ -49,33 +49,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_paragraphs": eq.q_dedup_paragraphs,         # CCNet/MassiveText paragraph dedup: first-occurrence keep + reassembly (r7-built)
         "semdedup": eq.q_semdedup,                         # SemDeDup on the PINNED kmeans quantizer (r7: trains offline, gates the kmeans codepath)
         "contamination_removal": eq.q_contamination_removal,  # decontaminated-corpus decision table (supersedes contamination_check row: same shingle join, train-side agg)
-        "ann_lsh_topk": eq.q_ann_lsh,                      # hyperplane-LSH multiprobe
-        "ann_ivfpq_rerank": eq.q_ann_ivfpq_rerank,         # two-stage refine: ADC candidates -> exact re-rank; oracle NESTS the full IVF-PQ SQL at k=40 (subsumes the ann_ivfpq_topk row)
         "text_lang_id": eq.q_text_lang_id,
         "wordlist_filter": eq.q_wordlist_filter,           # blocked-wordlist (badwords) filter, integer ppm accept test (r7-built)
         "corpus_pack": eq.q_corpus_pack,                   # token-budget sequence packing
         # round-5/6 corpus-curation classes, first driver rows (r6 rotation)
         "pii_redaction": eq.q_pii_redaction,               # rule-based PII scrub, byte-exact rewrite parity
-        "dsir_sample": eq.q_dsir_sample,                   # DSIR importance resampling: LM log-ratio weights + derandomized Gumbel-top-k (r7-built)
         "repeated_span_removal": eq.q_repeated_span_removal,  # exact-substring-dedup rewrite (spans excised; recomputes the detection CTEs)
         "corpus_curate": eq.q_corpus_curate,               # quality+PII+split+dedup+DECONTAMINATION composed pipeline (r7: 5 stages)
         # round-6 corpus-recipe classes, first driver rows (r7 rotation)
         "perplexity_buckets": eq.q_perplexity_buckets,     # CCNet head/middle/tail split
         "doc_chunks": eq.q_doc_chunks,                     # context-window chunking (zero-Exchange)
         # round-8-built operators, driver rows from birth (standing
-        # rotation discipline; the rotated-out rows — klog_file_health,
-        # quality_rejection_sample, cluster_balanced_sample — are green in
-        # CORRECTNESS_r07 with subsumption notes in extra_queries())
+        # rotation discipline; the rotated-out row klog_file_health is green
+        # in CORRECTNESS_r07 with its subsumption note in extra_queries())
         "ngram_novelty": eq.q_ngram_novelty,               # n-gram freshness vs a reference corpus (inverse contamination; planted zero-novelty rows)
-        "ann_sq8_topk": eq.q_ann_sq8_topk,                 # asymmetric SQ8 scalar-quantized ANN (faiss QT_8bit; third compression point after Flat/PQ)
         "cross_source_dups": eq.q_cross_source_dups,       # cross-source duplication matrix (digest-keyed; per-source dedup-budget audit)
-        "curriculum_order": eq.q_curriculum_order,         # curriculum manifest over PINNED margins: (bucket, shard, pos) — no global sort; oracle nests the scored-filter SQL
-        "corpus_drift": eq.q_corpus_drift,                 # snapshot unigram-KL drift monitor (late-r8-built, driver row from birth; replaced ann_recall_eval — eval-class machinery kept by minhash_recall_eval, the IVF codepath by ann_ivfpq_rerank + its recall pytest)
+        "corpus_drift": eq.q_corpus_drift,                 # snapshot unigram-KL drift monitor (late-r8-built, driver row from birth)
         "kneser_ney_score": eq.q_kneser_ney_score,         # interpolated Kneser-Ney bigram scoring (late-r8-built; replaced bigram_lm_score — green r6/r7, count-interpolated path stays a gated extra, perplexity_buckets keeps the LM-filter presence)
-        "mixture_interleave": eq.q_mixture_interleave,     # stride-scheduled weighted source interleave (late-r8-built; replaced token_budget_mixture — green r6/r7, greedy/epoch machinery pytest-pinned, mixture family keeps dsir + temperature rows)
         # round-7-built operators, driver rows from birth (no stale round)
         "bloom_screen_packed": eq.q_bloom_screen_packed,   # packed-bitmap broadcast Bloom, Arrow-kernel probe (VERDICT r6 #2)
-        "hashed_embeddings": eq.q_hashed_embeddings,       # feature-hashing text->embedding bridge (r8: scalar (doc_id, dim, component_micro) rows — VERDICT r7 #1)
         "semdedup_prototypes": eq.q_semdedup_prototypes,   # D4-style keep=farthest prototype selection
         # round-8 rotation (VERDICT r7 #3/#4): the five r7-built operators
         # with zero driver history take rows; trained_quality_filter (the
@@ -84,7 +76,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # recomputes rotate out (notes inline in extra_queries()).
         "quality_calibration": eq.q_quality_calibration,   # threshold sweep -> confusion counts; oracle NESTS the full scored_quality_filter SQL (keeps that row's coverage)
         "chunk_quality": eq.q_chunk_quality,               # FineWeb worst-chunk decision; composes doc_chunks + the pinned model
-        "temperature_weights": eq.q_temperature_weights,   # mT5/XLM-R alpha-sampling source weights (integer normalizer)
         "minhash_recall_eval": eq.q_minhash_recall_eval,   # LSH candidate recall vs exact Jaccard; oracle NESTS the full dedup_minhash SQL (keeps that row's coverage)
         # named custom-operator classes (as-of)
         "klog_batch_state_asof": eq.q_batch_state_asof,
@@ -111,7 +102,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": eq.q_text_quality,                       # per-doc detail of source_quality row
         "klog_group_metadata": eq.q_group_metadata,              # compaction twin of klog_group_offsets row
         "corpus_clean": eq.q_corpus_clean,                       # composition of three driver-gated ops
-        "ann_cosine_topk": eq.q_ann_topk,                        # brute-force baseline; knn_label_eval keeps the brute driver row
         "klog_group_offset_rewinds": eq.q_group_offset_rewinds,  # incident-signal view over the group_offsets row
         "klog_cat_pid_epoch": eq.q_cat_pid_epoch,                # P3/P6 conjunction; P1/P8/F1 keep the cat_pid row
         "klog_abort_cmds": eq.q_abort_cmds,                      # S10+P7; open_txn_abort_cmds keeps the S10 driver row
@@ -132,7 +122,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "klog_first_last_batch": eq.q_first_last_batch,          # A4: file/line_no extremes; pytest parity
         "klog_group_commit_rates": eq.q_group_commit_rates,      # group family keeps 3 driver rows
         "dedup_ngram_jaccard": eq.q_dedup_ngram_jaccard,         # dedup_clusters row recomputes the same pair CTEs
-        "ann_ivf_topk": eq.q_ann_ivf,                            # ann_ivfpq_topk row keeps the IVF cell routing
         "dedup_incremental": eq.q_dedup_incremental,             # digest screen: dedup_canonical + contamination_check rows
         # rotated OUT of the driver gate in round 7 (all green in
         # CORRECTNESS_r06; each capability keeps a driver row via the noted
@@ -141,7 +130,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "klog_batches_per_epoch": eq.q_batches_per_epoch,        # A9: green r1-r6; txn_stats/file_health keep the agg family; salted twin pytest
         "klog_group_lag": eq.q_group_lag,                        # group family keeps 2 driver rows (offsets, read_committed)
         "leakage_safe_split": eq.q_leakage_safe_split,           # split now driver-exercised INSIDE corpus_curate + contamination_removal rows
-        "knn_label_eval": eq.q_knn_label_eval,                   # embedding-eval class keeps the ann_recall_eval driver row
         "doc_repetition": eq.q_doc_repetition,                   # textstats family keeps lm_quality/pii/lang_id/source_quality rows
         "dedup_simhash": eq.q_dedup_simhash,                     # near-dup family keeps minhash_lsh/embedding_lsh/clusters/semdedup rows
         "contamination_check": eq.q_contamination_check,         # superseded by the contamination_removal driver row (same join, train-side agg)
@@ -150,34 +138,23 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rotated OUT mid-round-7 to give the round-7-built operators driver
         # rows from birth (all five green in CORRECTNESS_r06)
         "repeated_spans": eq.q_repeated_spans,                   # detection CTEs recomputed inside the repeated_span_removal driver row
-        "dedup_embedding_lsh": eq.q_dedup_embedding_lsh,         # hyperplane-bucket capability kept by ann_lsh_topk; embedding near-dup family keeps semdedup/_prototypes driver rows
+        "dedup_embedding_lsh": eq.q_dedup_embedding_lsh,         # hyperplane-bucket candidates; embedding near-dup family keeps semdedup/_prototypes driver rows
         "lm_quality_score": eq.q_lm_quality,                     # unigram LM strictly generalized by the bigram_lm_score driver row (interpolates the same unigram model)
         "source_quality": eq.q_source_quality,                   # per-source report kept by corpus_curate + source_curation_report; per-doc heuristics by text_quality
-        "weighted_sample_by_source": eq.q_weighted_sample,       # A-ES selection machinery lives on inside the dsir_sample driver row (Gumbel-top-k = A-ES in log space) + token_budget_mixture
-        "corpus_mixture_sample": eq.q_corpus_mixture_sample,     # mixture family keeps weighted_sample + token_budget_mixture driver rows
         # rotated OUT of the driver gate in round 8 (all green in
         # CORRECTNESS_r07; capability kept by the noted driver row)
         "trained_quality_filter": eq.q_trained_quality_filter,   # rows-only by design (iterative GD); its fitted twin is hash-covered via quality_calibration's nested scored-filter SQL + NumPy-parity pytests — moved here so no driver row burns a guaranteed err (VERDICT r7 #2)
         "scored_quality_filter": eq.q_scored_quality_filter,     # full SQL nested inside the quality_calibration driver row; chunk_quality applies the same pinned model
         "bloom_screen": eq.q_bloom_screen,                       # relational Bloom twin; bloom_screen_packed driver row keeps the semantics (parity pytest) at the scale shape
-        "ann_ivfpq_topk": eq.q_ann_ivfpq,                        # full IVF-PQ SQL nested (k=40) inside the ann_ivfpq_rerank driver row
         "dedup_minhash_lsh": eq.q_dedup_minhash,                 # full MinHash-LSH pair SQL nested inside the minhash_recall_eval driver row
         # rotated OUT mid-round-8 to give the round-8-built operators driver
         # rows from birth (green in CORRECTNESS_r07)
         "klog_file_health": eq.q_file_health,                    # W8/corrupt-rate capability kept by klog_txn_stats (num_offset_gaps) + klog_sink_corrupt driver rows
-        "quality_rejection_sample": eq.q_quality_rejection_sample,  # pinned-margin path hash-kept via quality_calibration's nested scored-filter SQL; integer accept test pytest-pinned
-        "cluster_balanced_sample": eq.q_cluster_balanced_sample,    # pinned-quantizer cell assign kept by semdedup + semdedup_prototypes driver rows; cap policy pytest-pinned
         # round-8 scale-path variant, locally gated from birth
         "ngram_novelty_packed": eq.q_ngram_novelty_packed,       # zero-Exchange packed-Bloom novelty kernel; exact-join twin holds the ngram_novelty driver row
-        "ann_ivfsq8_topk": eq.q_ann_ivfsq8_topk,                 # faiss IVF16,SQ8 composite: cells bound the scan, SQ8 bounds the bytes; composition of two gated ops
-        "soft_dedup_weights": eq.q_soft_dedup_weights,           # SoftDeDup: 1/n_copies micro weights instead of drops; composes with A-ES/temperature samplers
+        "soft_dedup_weights": eq.q_soft_dedup_weights,           # SoftDeDup: 1/n_copies micro weights instead of drops
         "quality_ensemble": eq.q_quality_ensemble,               # FineWeb-Edu-style 2-of-3 vote over three gated quality signals
         "bigram_lm_score": eq.q_bigram_lm_score,                 # count-interpolated bigram path; the KN driver row carries the bigram-LM family, perplexity_buckets the filter shape
-        "token_budget_mixture": eq.q_token_budget_mixture,       # budget/epoch machinery pytest-pinned; mixture family keeps dsir + temperature + interleave driver rows
-        # rotated OUT late-round-8 for corpus_drift (green r7; recall-eval
-        # machinery kept by the minhash_recall_eval driver row, the IVF
-        # codepath by ann_ivfpq_rerank + the recall-floor pytests)
-        "ann_recall_eval": eq.q_ann_recall_eval,
     }
 
 
@@ -206,33 +183,25 @@ def oracle_sql() -> dict[str, str]:
         "dedup_paragraphs": eq.SQL_DEDUP_PARAGRAPHS,
         "semdedup": eq.SQL_SEMDEDUP,
         "contamination_removal": eq.SQL_CONTAMINATION_REMOVAL,
-        "ann_lsh_topk": eq.SQL_ANN_LSH,
-        "ann_ivfpq_rerank": eq.SQL_ANN_IVFPQ_RERANK,
         "text_lang_id": eq.SQL_TEXT_LANG_ID,
         "wordlist_filter": eq.SQL_WORDLIST_FILTER,
         "corpus_pack": eq.SQL_CORPUS_PACK,
         "pii_redaction": eq.SQL_PII_REDACTION,
-        "dsir_sample": eq.SQL_DSIR_SAMPLE,
         "repeated_span_removal": eq.SQL_REPEATED_SPAN_REMOVAL,
         "corpus_curate": eq.SQL_CORPUS_CURATE,
         "perplexity_buckets": eq.SQL_PERPLEXITY_BUCKETS,
         "doc_chunks": eq.SQL_DOC_CHUNKS,
         "bloom_screen_packed": eq.SQL_BLOOM_SCREEN_PACKED,
-        "hashed_embeddings": eq.SQL_HASHED_EMBEDDINGS,
         "semdedup_prototypes": eq.SQL_SEMDEDUP_PROTOTYPES,
         # r8 rotation: every row in queries() has an oracle
         "quality_calibration": eq.SQL_QUALITY_CALIBRATION,
         "chunk_quality": eq.SQL_CHUNK_QUALITY,
-        "temperature_weights": eq.SQL_TEMPERATURE_WEIGHTS,
         "minhash_recall_eval": eq.SQL_MINHASH_RECALL_EVAL,
         # r8-built operators
         "corpus_drift": eq.SQL_CORPUS_DRIFT,
         "kneser_ney_score": eq.SQL_KNESER_NEY_SCORE,
-        "mixture_interleave": eq.SQL_MIXTURE_INTERLEAVE,
         "ngram_novelty": eq.SQL_NGRAM_NOVELTY,
-        "ann_sq8_topk": eq.SQL_ANN_SQ8,
         "cross_source_dups": eq.SQL_CROSS_SOURCE_DUPS,
-        "curriculum_order": eq.SQL_CURRICULUM_ORDER,
         "klog_batch_state_asof": eq.SQL_BATCH_STATE_ASOF,
     }
 
@@ -255,7 +224,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "text_quality": eq.SQL_TEXT_QUALITY,
         "klog_group_metadata": eq.SQL_GROUP_METADATA,
         "corpus_clean": eq.SQL_CORPUS_CLEAN,
-        "ann_cosine_topk": eq.SQL_ANN_TOPK,
         "klog_group_offset_rewinds": eq.SQL_GROUP_OFFSET_REWINDS,
         "klog_cat_pid_epoch": eq.SQL_CAT_PID_EPOCH,
         "klog_abort_cmds": eq.SQL_ABORT_CMDS,
@@ -273,13 +241,11 @@ def extra_oracle_sql() -> dict[str, str]:
         "klog_first_last_batch": eq.SQL_FIRST_LAST_BATCH,
         "klog_group_commit_rates": eq.SQL_GROUP_COMMIT_RATES,
         "dedup_ngram_jaccard": eq.SQL_DEDUP_NGRAM_JACCARD,
-        "ann_ivf_topk": eq.SQL_ANN_IVF,
         "dedup_incremental": eq.SQL_DEDUP_INCREMENTAL,
         "klog_filter_txn_id": eq.SQL_FILTER_TXN_ID,
         "klog_batches_per_epoch": eq.SQL_BATCHES_PER_EPOCH,
         "klog_group_lag": eq.SQL_GROUP_LAG,
         "leakage_safe_split": eq.SQL_LEAKAGE_SAFE_SPLIT,
-        "knn_label_eval": eq.SQL_KNN_LABEL_EVAL,
         "doc_repetition": eq.SQL_DOC_REPETITION,
         "dedup_simhash": eq.SQL_DEDUP_SIMHASH,
         "contamination_check": eq.SQL_CONTAMINATION_CHECK,
@@ -288,21 +254,13 @@ def extra_oracle_sql() -> dict[str, str]:
         "dedup_embedding_lsh": eq.SQL_DEDUP_EMBEDDING_LSH,
         "lm_quality_score": eq.SQL_LM_QUALITY,
         "source_quality": eq.SQL_SOURCE_QUALITY,
-        "weighted_sample_by_source": eq.SQL_WEIGHTED_SAMPLE,
-        "corpus_mixture_sample": eq.SQL_CORPUS_MIXTURE_SAMPLE,
         # r8 rotated-out rows (trained_quality_filter stays rows-only here)
         "scored_quality_filter": eq.SQL_SCORED_QUALITY_FILTER,
         "bloom_screen": eq.SQL_BLOOM_SCREEN,
-        "ann_ivfpq_topk": eq.SQL_ANN_IVFPQ,
         "dedup_minhash_lsh": eq.SQL_DEDUP_MINHASH,
         "klog_file_health": eq.SQL_FILE_HEALTH,
-        "quality_rejection_sample": eq.SQL_QUALITY_REJECTION_SAMPLE,
-        "cluster_balanced_sample": eq.SQL_CLUSTER_BALANCED_SAMPLE,
         "ngram_novelty_packed": eq.SQL_NGRAM_NOVELTY_PACKED,
-        "ann_ivfsq8_topk": eq.SQL_ANN_IVFSQ8,
         "soft_dedup_weights": eq.SQL_SOFT_DEDUP_WEIGHTS,
         "quality_ensemble": eq.SQL_QUALITY_ENSEMBLE,
         "bigram_lm_score": eq.SQL_BIGRAM_LM_SCORE,
-        "token_budget_mixture": eq.SQL_TOKEN_BUDGET_MIXTURE,
-        "ann_recall_eval": eq.SQL_ANN_RECALL_EVAL,
     }

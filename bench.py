@@ -41,9 +41,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from klog_spark.datapipe.dedup import (dedup_paragraph_blocks,
-                                           embedding_near_dups_lsh,
-                                           minhash_dedup)
+    from klog_spark.datapipe.dedup import dedup_paragraph_blocks, minhash_dedup
     from klog_spark.entry_queries import _dup_corpus
     from klog_spark.operators import checks
     from klog_spark.operators.enrich import enrich_with_producer_meta
@@ -77,7 +75,7 @@ def main() -> None:
         t0 = time.time()
         fn()
         timings[name] = round(time.time() - t0, 3)
-        # operator-owned caches (minhash sigs, DSIR LMs) are
+        # operator-owned caches (minhash sigs, LM counts) are
         # per-invocation; release so run N+1 starts from the same storage
         # state as run 1 (ADVICE r7)
         release_tracked()
@@ -149,8 +147,6 @@ def main() -> None:
                                       threshold=0.5, hash_fn="xxhash64").count(),
             )
             timed("dedup_embedding_lsh", lambda: eq.q_dedup_embedding_lsh(spark, sf_dir).count())
-            timed("ann_cosine_topk", lambda: eq.q_ann_topk(spark, sf_dir).count())
-            timed("ann_ivfpq_topk", lambda: eq.q_ann_ivfpq(spark, sf_dir).count())
             timed("text_quality", lambda: eq.q_text_quality(spark, sf_dir).count())
             # round-4 operators at sf0.1 scale
             timed("corpus_pack", lambda: eq.q_corpus_pack(spark, sf_dir).count())
@@ -165,31 +161,23 @@ def main() -> None:
             timed("bloom_screen_packed", lambda: eq.q_bloom_screen_packed(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
             # late round-7: paragraph dedup (min-struct agg + reassembly,
-            # xxhash64 8-byte shuffle key) and DSIR importance resampling
-            # (two LM passes + Gumbel-top-k TakeOrdered)
+            # xxhash64 8-byte shuffle key)
             timed("dedup_paragraphs",
                   lambda: dedup_paragraph_blocks(_dup_corpus(spark, sf_dir),
                                                  block_words=16, hash_blocks=True)
-                  .write.format("noop").mode("overwrite").save())
-            timed("dsir_sample", lambda: eq.q_dsir_sample(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
             # round-8 (VERDICT r7 #6): chunk-granular quality (explode +
             # pinned-margin fold)
             timed("chunk_quality", lambda: eq.q_chunk_quality(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
-            # round-8 operators: exact novelty join, its zero-Exchange
-            # packed-Bloom twin (bitmap build included — the realistic
-            # cost), SQ8 quantize+search, curriculum manifest
+            # round-8 operators: exact novelty join and its zero-Exchange
+            # packed-Bloom twin (bitmap build included — the realistic cost)
             timed("ngram_novelty", lambda: eq.q_ngram_novelty(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
             # throughput path (xxhash64 probes); the java32 oracle variant
             # is gate-verified (same split as dedup_minhash_lsh)
             timed("ngram_novelty_packed", lambda: _novelty_packed_xx(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
-            timed("ann_sq8_topk", lambda: eq.q_ann_sq8_topk(spark, sf_dir).count())
-            timed("curriculum_order", lambda: eq.q_curriculum_order(spark, sf_dir)
-                  .write.format("noop").mode("overwrite").save())
-            timed("ann_ivfsq8_topk", lambda: eq.q_ann_ivfsq8_topk(spark, sf_dir).count())
             timed("corpus_drift", lambda: eq.q_corpus_drift(spark, sf_dir).count())
             all_runs.append(timings)
             shutil.rmtree(routed_dir, ignore_errors=True)

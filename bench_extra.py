@@ -29,9 +29,7 @@ def main() -> None:
 
     from klog_spark import entry_queries as eq
     from klog_spark.cachereg import release_tracked
-    from klog_spark.datapipe.dedup import (dedup_paragraph_blocks,
-                                           embedding_near_dups_lsh,
-                                           minhash_dedup)
+    from klog_spark.datapipe.dedup import dedup_paragraph_blocks, minhash_dedup
     from klog_spark.entry_queries import _dup_corpus
     from klog_spark.operators import aggregates, checks
     from klog_spark.operators.enrich import enrich_with_producer_meta
@@ -98,8 +96,6 @@ def main() -> None:
             _dup_corpus(spark, sf_dir), num_hashes=64, bands=16,
             threshold=0.5, hash_fn="xxhash64").count(),
         "dedup_embedding_lsh": lambda: eq.q_dedup_embedding_lsh(spark, sf_dir).count(),
-        "ann_cosine_topk": lambda: eq.q_ann_topk(spark, sf_dir).count(),
-        "ann_ivfpq_topk": lambda: eq.q_ann_ivfpq(spark, sf_dir).count(),
         "text_quality": lambda: eq.q_text_quality(spark, sf_dir).count(),
         "corpus_pack": lambda: eq.q_corpus_pack(spark, sf_dir).count(),
         "contamination_check": lambda: eq.q_contamination_check(spark, sf_dir).count(),
@@ -108,13 +104,9 @@ def main() -> None:
         "bloom_screen_packed": lambda: noop(eq.q_bloom_screen_packed(spark, sf_dir)),
         "dedup_paragraphs": lambda: noop(dedup_paragraph_blocks(
             _dup_corpus(spark, sf_dir), block_words=16, hash_blocks=True)),
-        "dsir_sample": lambda: noop(eq.q_dsir_sample(spark, sf_dir)),
         "chunk_quality": lambda: noop(eq.q_chunk_quality(spark, sf_dir)),
         "ngram_novelty": lambda: noop(eq.q_ngram_novelty(spark, sf_dir)),
         "ngram_novelty_packed": lambda: noop(_novelty_packed_xx()),
-        "ann_sq8_topk": lambda: eq.q_ann_sq8_topk(spark, sf_dir).count(),
-        "curriculum_order": lambda: noop(eq.q_curriculum_order(spark, sf_dir)),
-        "ann_ivfsq8_topk": lambda: eq.q_ann_ivfsq8_topk(spark, sf_dir).count(),
         "corpus_drift": lambda: eq.q_corpus_drift(spark, sf_dir).count(),
     }
     sel = {k: v for k, v in jobs.items() if not only or k in only}

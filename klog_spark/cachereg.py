@@ -1,9 +1,9 @@
 """Operator-owned cache registry (ADVICE r7).
 
 Several operators ``persist()`` bounded intermediates (MinHash signatures,
-DSIR vocabulary LMs, per-source token masses, trainer
-feature matrices) because multiple eager jobs — or one expensive lazy plan
-referenced several times — consume them inside a single invocation. The
+unigram and bigram LM counts, the drift monitor's joined vocabularies)
+because multiple eager jobs — or one expensive lazy plan referenced
+several times — consume them inside a single invocation. The
 persist is the right call per invocation, but in a LONG-LIVED session (the
 test suite, the query/oracle gate, the bench loop, a user notebook) those
 blocks accumulate: nothing ever unpersisted them, because the operator

@@ -1438,8 +1438,7 @@ def soft_dedup_weights(docs: DataFrame, text_col: str = "text",
     keeps ``weight = 1 / n_copies`` (integer micro grid) so the duplicated
     CONTENT contributes one document's worth of training mass in total —
     the gentler alternative to exact dedup when near-boilerplate carries
-    signal. Composes directly with the A-ES weighted sampler and the
-    temperature mixture (their weight columns accept micro weights).
+    signal.
 
     Returns (doc_id, n_copies, weight_micro) for EVERY doc. One sha256
     digest aggregation + a broadcast-friendly count join back — the same

@@ -1,77 +1,23 @@
-"""Approximate-nearest-neighbor search over an embedding column.
+"""Embedding quantizers shared by the dedup operators and tools/pin_centroids.py.
 
-Two paths:
-* brute-force cosine top-k — the exactness baseline. The query set is tiny
-  and broadcast as a numpy matrix; each Arrow batch of the corpus does ONE
-  matmul (vectorized pandas UDF), followed by a per-query top-k window.
-  Per-partition pre-top-k keeps the shuffle at O(k * queries * partitions).
-* LSH (random-hyperplane) bucketing — the 100 TB path: corpus and queries
-  hash to sign-bit buckets; search joins only matching buckets (equi-join,
-  broadcast on the query side), then exact-scores within candidates.
+* :func:`hyperplane_buckets` — random-hyperplane LSH: each vector's
+  sign-bit signature against seeded planes (the embedding-LSH dedup's
+  candidate key).
+* :func:`kmeans_centroids` — deterministic Lloyd k-means on a bounded
+  driver-side sample (the IVF trainer; pins SEMDEDUP_CENTROIDS).
+* :func:`ivf_cell_assign` — IVF coarse-quantizer cell per vector (the
+  SemDeDup clusters).
+
+Each corpus-wide step is one pandas-UDF matmul per Arrow batch; nothing
+shuffles.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StructField, StructType
-
-
-def _normalize_np(mat: np.ndarray) -> np.ndarray:
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return mat / norms
-
-
-def brute_force_topk(emb: DataFrame, queries: list[tuple[int, list[float]]], k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact cosine top-k per query: (qid, vec_id, rank, cosine).
-
-    ``queries`` is a small driver-side list [(qid, vector), ...] — broadcast
-    to every task; scoring is one float64 GEMM per Arrow batch.
-    """
-    qids = np.array([q[0] for q in queries], dtype=np.int64)
-    qmat = _normalize_np(np.array([q[1] for q in queries], dtype=np.float64))
-    spark = emb.sparkSession
-    bq = spark.sparkContext.broadcast((qids, qmat))
-
-    out_schema = StructType(
-        [
-            StructField("qid", LongType()),
-            StructField("vec_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    n_queries = len(queries)
-
-    def score(it):
-        q_ids, q_mat = bq.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            corpus = _normalize_np(np.array(pdf[vec_col].tolist(), dtype=np.float64))
-            sims = corpus @ q_mat.T  # (batch, nq)
-            vec_ids = pdf[id_col].to_numpy()
-            # per-batch pre-top-k per query bounds the shuffle
-            kk = min(k, sims.shape[0])
-            idx = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-            rows = {
-                "qid": np.repeat(q_ids, kk),
-                "vec_id": vec_ids[idx].T.ravel(),
-                "cosine": np.take_along_axis(sims, idx, axis=0).T.ravel(),
-            }
-            yield pd.DataFrame(rows)
-
-    scored = emb.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "rank", F.round("cosine", 4).alias("cosine"))
-    )
+from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 
 def hyperplane_buckets(emb: DataFrame, n_planes: int = 12, seed: int = 7,
@@ -137,11 +83,11 @@ def ivf_cell_assign(emb: DataFrame, n_centroids: int = 16, train: str = "first_n
                     sample_size: int = 4096, kmeans_iters: int = 10, seed: int = 7,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     centroids=None):
-    """IVF coarse-quantizer cell assignment, shared by :func:`ivf_topk` and
-    the SemDeDup cluster-dedup operator: train centroids ('first_n' = the
-    first n vectors by id, engine-replicable; 'kmeans' = sampled Lloyd, the
-    balance path), broadcast them, and argmin-assign every corpus vector in
-    one float64 GEMM per Arrow batch (|c|^2 - 2 v.c — same argmin as
+    """IVF coarse-quantizer cell assignment for the SemDeDup cluster-dedup
+    operators: train centroids ('first_n' = the first n vectors by id,
+    engine-replicable; 'kmeans' = sampled Lloyd, the balance path),
+    broadcast them, and argmin-assign every corpus vector in one float64
+    GEMM per Arrow batch (|c|^2 - 2 v.c — same argmin as
     squared L2). Ties go to the lowest cell id (np.argmin first-occurrence;
     cids are in ascending id/index order by construction).
 
@@ -153,8 +99,7 @@ def ivf_cell_assign(emb: DataFrame, n_centroids: int = 16, train: str = "first_n
     same matrix. Cell ids are the centroid row indices 0..k-1.
 
     Returns ``(assigned, cids, cmat)``: a DataFrame (cid_ = vector id,
-    cell, cvec_ = float64 vector) plus the centroid ids and matrix for
-    driver-side probe selection. The only corpus-wide cost is the narrow
+    cell, cvec_ = float64 vector) plus the centroid ids and matrix. The only corpus-wide cost is the narrow
     assignment map — no shuffle."""
     if centroids is not None:
         cmat = np.asarray(centroids, dtype=np.float64)
@@ -198,415 +143,3 @@ def ivf_cell_assign(emb: DataFrame, n_centroids: int = 16, train: str = "first_n
 
     assigned = emb.select(id_col, vec_col).mapInPandas(assign, assign_schema)
     return assigned, cids, cmat
-
-
-def ivf_topk(emb: DataFrame, queries: list[tuple[int, list[float]]], k: int = 10,
-             n_centroids: int = 16, n_probe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             train: str = "first_n", sample_size: int = 4096,
-             kmeans_iters: int = 10, seed: int = 7) -> DataFrame:
-    """IVF-Flat ANN: coarse-quantize the corpus into ``n_centroids`` cells,
-    probe the ``n_probe`` nearest cells per query, exact cosine within the
-    probed cells. The inverted-file twin of lsh_topk: recall degrades
-    gracefully with n_probe instead of bucket-collision luck.
-
-    ``train`` picks the coarse quantizer:
-    * ``'first_n'`` — the first ``n_centroids`` vectors by id. Trivially
-      engine-replicable (the DuckDB gate oracle recomputes it), but cell
-      balance is pathological when the leading ids are clustered.
-    * ``'kmeans'`` — Lloyd on a deterministic bounded sample (the first
-      ``sample_size`` vectors by id; the cap, not the corpus, bounds driver
-      memory). This is the scale path: balanced cells bound every probe's
-      candidate-scan cost (tests/test_datapipe.py proves the balance win on
-      a skewed fixture).
-
-    Assignment is one GEMM per Arrow batch (argmin squared-L2 via
-    |c|^2 - 2 v.c); the probe join broadcasts the tiny query-cell table, so
-    the only corpus-wide cost is the narrow assignment map.
-    """
-    assigned, cids, cmat = ivf_cell_assign(
-        emb, n_centroids=n_centroids, train=train, sample_size=sample_size,
-        kmeans_iters=kmeans_iters, seed=seed, id_col=id_col, vec_col=vec_col,
-    )
-    spark = emb.sparkSession
-
-    c_sq = (cmat * cmat).sum(axis=1)
-    qrows = []
-    for qid, vec in queries:
-        v = np.asarray(vec, dtype=np.float64)
-        d = c_sq - 2.0 * (cmat @ v)
-        order = np.lexsort((cids, d))  # distance, then cid tie-break
-        probes = [int(cids[i]) for i in order[:n_probe]]
-        qrows.append((qid, [float(x) for x in v], probes))
-    qdf = spark.createDataFrame(qrows, "qid: long, qvec: array<double>, probes: array<long>")
-    qdf = qdf.select("qid", "qvec", F.explode("probes").alias("cell"))
-
-    cand = assigned.join(F.broadcast(qdf), "cell")
-    qn = F.sqrt(F.aggregate("qvec", F.lit(0.0), lambda a, x: a + x * x))
-    cn = F.sqrt(F.aggregate("cvec_", F.lit(0.0), lambda a, x: a + x * x))
-    dot = F.aggregate(F.zip_with("qvec", "cvec_", lambda x, y: x * y), F.lit(0.0), lambda a, z: a + z)
-    scored = cand.withColumn("cosine", dot / (qn * cn))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid_"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("cid_").alias("vec_id"), "rank", F.round("cosine", 4).alias("cosine"))
-    )
-
-
-def lsh_topk(emb: DataFrame, queries: list[tuple[int, list[float]]], k: int = 10,
-             n_planes: int = 8, seed: int = 7, multiprobe: int = 1,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k searching the query's LSH bucket plus (``multiprobe`` = 1)
-    every bucket within hamming distance 1 of it — recall stays high as
-    n_planes grows instead of falling off a cliff, at ~(n_planes+1)x the
-    candidate cost (still a vanishing fraction of the corpus). Exact cosine
-    within candidates; tested against the brute-force baseline."""
-    dim = len(queries[0][1])
-    buckets = hyperplane_buckets(emb, n_planes, seed, dim, id_col, vec_col)
-    corpus = emb.join(buckets, emb[id_col] == buckets["vec_id"], "inner").select(
-        emb[id_col].alias("cid"), F.col(vec_col).alias("cvec"), "bucket"
-    )
-
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes))
-    qrows = []
-    for qid, vec in queries:
-        v = np.asarray(vec, dtype=np.float64)
-        bits = (v @ planes) > 0
-        bucket = 0
-        for i in range(n_planes):
-            bucket |= int(bits[i]) << i
-        probes = [bucket]
-        if multiprobe >= 1:
-            probes += [bucket ^ (1 << i) for i in range(n_planes)]
-        qrows.append((qid, [float(x) for x in v], probes))
-    spark = emb.sparkSession
-    qdf = spark.createDataFrame(qrows, "qid: long, qvec: array<double>, probes: array<long>")
-    qdf = qdf.select("qid", "qvec", F.explode("probes").alias("bucket"))
-
-    cand = corpus.join(F.broadcast(qdf), "bucket").dropDuplicates(["qid", "cid"])
-    qn = F.sqrt(F.aggregate("qvec", F.lit(0.0), lambda a, x: a + x * x))
-    cn = F.sqrt(F.aggregate("cvec", F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")))
-    dot = F.aggregate(F.zip_with("qvec", "cvec", lambda x, y: x * y.cast("double")), F.lit(0.0), lambda a, z: a + z)
-    scored = cand.withColumn("cosine", dot / (qn * cn))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("cid").alias("vec_id"), "rank", F.round("cosine", 4).alias("cosine"))
-    )
-
-
-def pq_codebooks(sample: np.ndarray, m: int, ksub: int, n_iter: int = 10,
-                 seed: int = 7) -> np.ndarray:
-    """Per-subspace PQ codebooks via the same bounded-sample Lloyd trainer
-    as the IVF coarse quantizer. Returns (m, ksub, dsub)."""
-    dim = sample.shape[1]
-    dsub = dim // m
-    return np.stack([
-        kmeans_centroids(sample[:, j * dsub:(j + 1) * dsub], ksub,
-                         n_iter=n_iter, seed=seed + j)
-        for j in range(m)
-    ])
-
-
-def ivfpq_topk(emb: DataFrame, queries: list[tuple[int, list[float]]], k: int = 10,
-               n_centroids: int = 16, n_probe: int = 2, m: int = 8, ksub: int = 16,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               train: str = "first_n", sample_size: int = 4096, seed: int = 7) -> DataFrame:
-    """IVF-PQ ANN — the memory-compressed scale path past IVF-Flat.
-
-    The corpus is coarse-quantized into ``n_centroids`` inverted cells (as
-    in ivf_topk) and each vector is product-quantized: split into ``m``
-    subspaces, each encoded as the id of its nearest codebook entry
-    (``ksub`` entries/subspace). Storage per vector drops from dim x 8 bytes
-    to ``m`` bytes (64x at dim=64/m=8) — the difference between an index
-    that fits in cluster RAM at 10^12 vectors and one that does not.
-
-    Scoring is cosine(query, decode(codes)) — algebraically the ADC
-    approximation (dot(q, decode(v)) = sum of per-subspace LUT entries),
-    written as a decode + exact fold so both engines (and the DuckDB gate
-    oracle) evaluate the identical sequential float expression. Like
-    ivf_topk, ``train='first_n'`` derives codebooks from the first ``ksub``
-    corpus vectors (oracle-replicable); ``train='kmeans'`` is the scale
-    path (per-subspace Lloyd on the bounded sample).
-
-    No residual encoding (faiss by_residual=False flavor): codes are
-    cell-independent, so re-probing never re-encodes.
-    """
-    dim = len(queries[0][1])
-    dsub = dim // m
-    spark = emb.sparkSession
-
-    # --- coarse quantizer (shared shape with ivf_topk)
-    if train == "kmeans":
-        sample = np.array(
-            [r[vec_col] for r in
-             emb.select(id_col, vec_col).orderBy(id_col).limit(sample_size).collect()],
-            dtype=np.float64,
-        )
-        cmat = kmeans_centroids(sample, n_centroids, seed=seed)
-        cids = np.arange(len(cmat), dtype=np.int64)
-        cb = pq_codebooks(sample, m, ksub, seed=seed)
-    else:
-        first = [
-            (r[id_col], np.asarray(r[vec_col], dtype=np.float64))
-            for r in emb.select(id_col, vec_col).orderBy(id_col)
-            .limit(max(n_centroids, ksub)).collect()
-        ]
-        cids = np.array([c[0] for c in first[:n_centroids]], dtype=np.int64)
-        cmat = np.stack([c[1] for c in first[:n_centroids]])
-        base = np.stack([c[1] for c in first[:ksub]])  # (ksub, dim)
-        cb = np.stack([base[:, j * dsub:(j + 1) * dsub] for j in range(m)])  # (m, ksub, dsub)
-
-    bc = spark.sparkContext.broadcast((cids, cmat, cb))
-
-    enc_schema = StructType(
-        [StructField("cid_", LongType()), StructField("cell", LongType()),
-         StructField("codes", ArrayType(IntegerType()))]
-    )
-
-    def encode(it):
-        ids_, mat, books = bc.value
-        c_sq = (mat * mat).sum(axis=1)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cell = ids_[np.argmin(c_sq[None, :] - 2.0 * (v @ mat.T), axis=1)]
-            codes = np.empty((len(v), m), dtype=np.int32)
-            for j in range(m):
-                sub = v[:, j * dsub:(j + 1) * dsub]
-                bj = books[j]
-                d = (bj * bj).sum(axis=1)[None, :] - 2.0 * (sub @ bj.T)
-                codes[:, j] = np.argmin(d, axis=1)
-            yield pd.DataFrame({
-                "cid_": pdf[id_col].to_numpy(),
-                "cell": cell,
-                "codes": list(codes),
-            })
-
-    encoded = emb.select(id_col, vec_col).mapInPandas(encode, enc_schema)
-
-    # --- query probes (identical to ivf_topk)
-    c_sq = (cmat * cmat).sum(axis=1)
-    qrows = []
-    for qid, vec in queries:
-        v = np.asarray(vec, dtype=np.float64)
-        d = c_sq - 2.0 * (cmat @ v)
-        order = np.lexsort((cids, d))
-        qrows.append((qid, [float(x) for x in v], [int(cids[i]) for i in order[:n_probe]]))
-    qdf = spark.createDataFrame(qrows, "qid: long, qvec: array<double>, probes: array<long>")
-    qdf = qdf.select("qid", "qvec", F.explode("probes").alias("cell"))
-
-    cand = encoded.join(F.broadcast(qdf), "cell")
-
-    # --- decode: codebook as a nested literal; decoded[j*dsub + t] =
-    # cb[j][codes[j]][t]. Flatten over j ascending = the encode order.
-    cb_lit = F.array(*[
-        F.array(*[F.array(*[F.lit(float(x)) for x in cb[j][c]]) for c in range(ksub)])
-        for j in range(m)
-    ])
-    decoded = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda j: F.element_at(
-                F.element_at(cb_lit, j + 1), F.element_at(F.col("codes"), j + 1) + 1
-            ),
-        )
-    )
-    cand = cand.withColumn("dvec", decoded)
-    qn = F.sqrt(F.aggregate("qvec", F.lit(0.0), lambda a, x: a + x * x))
-    dn = F.sqrt(F.aggregate("dvec", F.lit(0.0), lambda a, x: a + x * x))
-    dot = F.aggregate(F.zip_with("qvec", "dvec", lambda x, y: x * y), F.lit(0.0), lambda a, z: a + z)
-    scored = cand.withColumn("cosine", dot / (qn * dn))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid_"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("cid_").alias("vec_id"), "rank")
-    )
-
-
-def ivfpq_rerank_topk(emb: DataFrame, queries: list[tuple[int, list[float]]],
-                      k: int = 10, refine: int = 40,
-                      n_centroids: int = 16, n_probe: int = 2, m: int = 8,
-                      ksub: int = 16, id_col: str = "vec_id",
-                      vec_col: str = "embedding", train: str = "first_n",
-                      sample_size: int = 4096, seed: int = 7) -> DataFrame:
-    """Two-stage retrieval: IVF-PQ ADC narrows each query to ``refine``
-    candidates, then EXACT cosine against the ORIGINAL float vectors
-    re-ranks those candidates to the final top-``k`` — the standard
-    refine/re-rank step production ANN systems put after a compressed
-    index (faiss ``IndexRefineFlat``). PQ quantization error decides only
-    which ~``refine`` vectors are considered; the returned ordering is
-    exact, so recall@k approaches brute force once ``refine`` covers the
-    true neighbors, at PQ's candidate-generation cost.
-
-    Returns (qid, vec_id, rank, cosine) with the exact cosine, rounded.
-
-    Scale shape: stage 1 is the gated ``ivfpq_topk`` plan (8 B/vector
-    index, broadcast probes); the refine set is ``|queries| x refine``
-    rows — tiny — so stage 2 BROADCASTS it against the full-precision
-    corpus: one scan of ``emb``, a broadcast hash join, zero shuffle of
-    the big side, then a per-query window over <= refine rows. The
-    full-precision vectors are touched only for candidates — at 10^12
-    vectors the random-access fetch is the join, never a second index.
-    """
-    cand = ivfpq_topk(emb, queries, k=refine, n_centroids=n_centroids,
-                      n_probe=n_probe, m=m, ksub=ksub, id_col=id_col,
-                      vec_col=vec_col, train=train, sample_size=sample_size,
-                      seed=seed).select("qid", "vec_id")
-    qdf = emb.sparkSession.createDataFrame(
-        [(qid, [float(x) for x in vec]) for qid, vec in queries],
-        "qid: long, qvec: array<double>",
-    )
-    fetched = (
-        emb.select(F.col(id_col).alias("vec_id"),
-                   F.col(vec_col).cast("array<double>").alias("dvec"))
-        .join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(qdf), "qid")
-    )
-    qn = F.sqrt(F.aggregate("qvec", F.lit(0.0), lambda a, x: a + x * x))
-    dn = F.sqrt(F.aggregate("dvec", F.lit(0.0), lambda a, x: a + x * x))
-    dot = F.aggregate(F.zip_with("qvec", "dvec", lambda x, y: x * y),
-                      F.lit(0.0), lambda a, z: a + z)
-    scored = fetched.withColumn("cosine", dot / (qn * dn))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "rank", F.round("cosine", 4).alias("cosine"))
-    )
-
-
-def hashed_doc_embeddings(docs: DataFrame, dim: int = 64,
-                          text_col: str = "text", id_col: str = "doc_id",
-                          normalize: bool = True) -> DataFrame:
-    """Model-free document embeddings via the feature-hashing trick
-    (Weinberger et al. 2009): each word lands in bucket
-    ``java_u32(word) % dim`` with sign ``+1/-1`` from an independent salted
-    hash, the document vector is the signed bucket-count histogram,
-    L2-normalized. No trained model, no Python — and bit-replicable in any
-    engine (the java-hash family the MinHash / SimHash oracles already
-    pin).
-
-    This is the bridge from the text operators to the embedding operators
-    for corpora with no model embeddings: the output (id, array<double>)
-    feeds ann_topk / ivf_topk / semdedup_embedding / cluster_balanced_sample
-    unchanged (cosine on hashed vectors approximates token-multiset
-    cosine; pytest-asserted against an exact NumPy replica).
-
-    Scale shape: the minhash-signature pattern — explode words, hash each
-    word EXACTLY ONCE row-wise (whole-stage codegen; a per-row nested
-    higher-order form was measured 60x slower because Catalyst re-evaluates
-    the inlined hash per output dimension in interpreted mode), then ONE
-    map-side-partial groupBy(doc_id) with ``dim`` conditional sums — the
-    only shuffle carries (doc_id, dim longs). Documents with no words keep
-    an all-zero vector via the left join back onto the id set."""
-    from ..javahash import java_hash_u32_expr
-
-    if dim < 2:
-        raise ValueError("dim must be >= 2")
-    words = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda w: w != ""
-    )
-    w = docs.select(F.col(id_col).alias("doc_id"), F.explode(words).alias("w"))
-    w = w.select(
-        "doc_id",
-        F.pmod(java_hash_u32_expr(F.col("w")), F.lit(dim)).alias("b"),
-        F.when(
-            F.pmod(java_hash_u32_expr(F.concat(F.lit("sign#"), F.col("w"))), F.lit(2)) == 0,
-            F.lit(1),
-        ).otherwise(F.lit(-1)).cast("long").alias("s"),
-    )
-    sums = w.groupBy("doc_id").agg(
-        *[
-            F.sum(F.when(F.col("b") == i, F.col("s")).otherwise(F.lit(0).cast("long"))).alias(f"v_{i}")
-            for i in range(dim)
-        ]
-    )
-    ids = docs.select(F.col(id_col).alias("doc_id"))
-    joined = ids.join(sums, "doc_id", "left")
-    vec = F.array(*[
-        F.coalesce(F.col(f"v_{i}"), F.lit(0)).cast("double") for i in range(dim)
-    ])
-    if normalize:
-        out = joined.select("doc_id", vec.alias("_raw"))
-        nrm = F.sqrt(F.aggregate("_raw", F.lit(0.0), lambda a, x: a + x * x))
-        return out.select(
-            "doc_id",
-            F.when(nrm > 0, F.transform("_raw", lambda x: x / nrm))
-            .otherwise(F.col("_raw")).alias("embedding"),
-        )
-    return joined.select("doc_id", vec.alias("embedding"))
-
-
-def sq8_train(emb: DataFrame, vec_col: str = "embedding") -> list[tuple[float, float]]:
-    """Train the SQ8 scalar quantizer: per-dimension (min, max) over the
-    corpus — the faiss ScalarQuantizer QT_8bit recipe. One posexplode
-    aggregation to exactly ``dim`` rows; the collect is dimension-bounded
-    (64 doubles here), never corpus-scaled."""
-    stats = (
-        emb.select(F.posexplode(vec_col).alias("dim", "x"))
-        .groupBy("dim")
-        .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-        .limit(65536).collect()  # dim-bounded (one row per dimension)
-    )
-    by_dim = {r["dim"]: (float(r["mn"]), float(r["mx"])) for r in stats}
-    # ragged/short embedding arrays produce missing dimension indices —
-    # fail with a clear message instead of a bare KeyError far from the
-    # cause (ADVICE r8)
-    missing = [i for i in range(len(by_dim)) if i not in by_dim]
-    if missing:
-        raise ValueError(
-            f"sq8_train: embedding dimensions are not contiguous — missing "
-            f"dim indices {missing[:8]}{'...' if len(missing) > 8 else ''} "
-            f"(ragged or short {vec_col!r} arrays?)")
-    return [by_dim[i] for i in range(len(by_dim))]
-
-
-def sq8_decoded(emb: DataFrame, stats: list[tuple[float, float]],
-                vec_col: str = "embedding") -> DataFrame:
-    """Quantize to 8-bit codes and decode back — the reconstruction the
-    asymmetric SQ8 search actually scores against (1 byte/dim/vector at
-    rest, 8x smaller than float64).
-
-    Formula order is PINNED for cross-engine float identity (the DuckDB
-    oracle replays the identical IEEE operations):
-    ``code = round(((x - mn) * 255.0) / (mx - mn))`` and
-    ``decoded = mn + (code * (mx - mn)) / 255.0``; a degenerate dimension
-    (mx == mn) codes to 0 and decodes to mn. All JVM-side (two
-    index-aware ``transform``s over literal min/max arrays)."""
-    mins_c = F.array(*[F.lit(mn) for mn, _ in stats])
-    maxs_c = F.array(*[F.lit(mx) for _, mx in stats])
-    vec = F.col(vec_col).cast("array<double>")
-    codes = F.transform(
-        vec,
-        lambda x, i: F.when(
-            F.get(maxs_c, i) > F.get(mins_c, i),
-            F.round(((x - F.get(mins_c, i)) * F.lit(255.0))
-                    / (F.get(maxs_c, i) - F.get(mins_c, i))).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-    decoded = F.transform(
-        codes,
-        lambda c, i: F.get(mins_c, i)
-        + (c.cast("double") * (F.get(maxs_c, i) - F.get(mins_c, i)))
-        / F.lit(255.0),
-    )
-    return emb.withColumn("_sq8", decoded)
-
-
-def sq8_topk(emb: DataFrame, queries: list[tuple[int, list[float]]], k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Asymmetric SQ8 ANN: exact float queries against the 8-bit-decoded
-    corpus (faiss IndexScalarQuantizer) — the third compression point next
-    to Flat (8 B/dim) and PQ (1 B/subvector). Re-uses the brute-force GEMM
-    kernel on the decoded vectors, so ranking semantics (cosine desc,
-    vec_id asc) and the per-batch partial top-k shuffle bound are identical
-    to brute_force_topk; only the memory footprint changes."""
-    stats = sq8_train(emb, vec_col)
-    dec = sq8_decoded(emb, stats, vec_col).select(id_col, F.col("_sq8").alias(vec_col))
-    return brute_force_topk(dec, queries, k=k, id_col=id_col, vec_col=vec_col)

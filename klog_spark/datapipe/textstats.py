@@ -694,7 +694,7 @@ def corpus_drift(old_docs: DataFrame, new_docs: DataFrame,
     p_new * ln(p_new / p_old)`` on the integer micro-nat grid — per-word
     rounding BEFORE any cross-row arithmetic, so the total
     ``SUM(contrib_micro_nats)`` is an order-independent exact integer on
-    any engine (the DSIR determinism pattern).
+    any engine.
 
     Scale shape: two vocabulary-sized word-count aggregations (map-side
     partials; Heaps-law bounded), one full-outer join on the word key, one

@@ -1311,102 +1311,6 @@ SELECT doc_id, CASE WHEN bucket < 80 THEN 'train' ELSE 'test' END AS split FROM 
 """
 
 
-def q_dsir_sample(spark, sf_dir):
-    """DSIR-style importance resampling (mixture.dsir_importance_sample):
-    re-weight the corpus toward the src0 target domain by the add-1 unigram
-    LM log-ratio (per-word integer micro-nats, order-independent doc sums)
-    and select k=100 docs by derandomized Gumbel-top-k (hash uniforms).
-    The oracle retrains BOTH LMs, recomputes every log-ratio, the Gumbel
-    keys and the top-k from scratch."""
-    from .datapipe.mixture import dsir_importance_sample
-
-    docs = _docs(spark, sf_dir)
-    return dsir_importance_sample(docs, docs.filter(F.col("source") == "src0"),
-                                  k=100)
-
-
-SQL_DSIR_SAMPLE = f"""
-WITH rw AS (
-  SELECT doc_id, w
-  FROM (SELECT doc_id,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM documents)
-  WHERE w <> ''
-),
-tw AS (
-  SELECT doc_id, w
-  FROM (SELECT doc_id,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM documents WHERE source = 'src0')
-  WHERE w <> ''
-),
-raw_lm AS (SELECT w, COUNT(*) AS c_raw FROM rw GROUP BY w),
-tgt_lm AS (SELECT w, COUNT(*) AS c_tgt FROM tw GROUP BY w),
-consts AS (
-  SELECT (SELECT COUNT(*) FROM (SELECT w FROM raw_lm UNION SELECT w FROM tgt_lm))
-           AS n_vocab,
-         (SELECT COUNT(*) FROM rw) AS n_raw,
-         (SELECT COUNT(*) FROM tw) AS n_tgt
-),
-ratio AS (
-  SELECT r.w,
-         CAST(ROUND((LN((COALESCE(t.c_tgt, 0) + 1)
-                        / CAST(n_tgt + n_vocab AS DOUBLE))
-                     - LN((r.c_raw + 1) / CAST(n_raw + n_vocab AS DOUBLE)))
-                    * 1000000) AS BIGINT) AS lr_micro
-  FROM raw_lm r LEFT JOIN tgt_lm t USING (w) CROSS JOIN consts
-),
-weights AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-         CAST(SUM(lr_micro) AS BIGINT) AS weight_micro
-  FROM rw JOIN ratio USING (w) GROUP BY doc_id
-),
-keyed AS (
-  SELECT doc_id, n_words, weight_micro,
-         weight_micro + CAST(ROUND(-LN(-LN(
-           ({_sql_java_u32("sha256('dsir:' || CAST(doc_id AS VARCHAR))")} + 0.5)
-             / 4294967296.0)) * 1000000) AS BIGINT) AS key_micro
-  FROM weights
-),
-sel AS (
-  SELECT doc_id, TRUE AS selected
-  FROM keyed ORDER BY key_micro DESC, doc_id ASC LIMIT 100
-)
-SELECT k.doc_id, k.n_words, k.weight_micro, k.key_micro,
-       COALESCE(s.selected, FALSE) AS selected
-FROM keyed k LEFT JOIN sel s USING (doc_id)
-"""
-
-
-def q_weighted_sample(spark, sf_dir):
-    """Derandomized Efraimidis-Spirakis weighted sampling: top-5 docs per
-    source with probability proportional to n_chars, deterministic via
-    hash-derived uniforms (mixture.weighted_sample). The oracle recomputes
-    key = u^(1/w) per row from the same sha256->java32 composition and
-    takes the same per-source top-5."""
-    from .datapipe.mixture import weighted_sample
-
-    return weighted_sample(
-        _docs(spark, sf_dir), k=5, weight_col="n_chars", by=["source"]
-    ).select("doc_id", "source", F.col("n_chars").cast("long").alias("n_chars"))
-
-
-SQL_WEIGHTED_SAMPLE = f"""
-WITH h AS (
-  SELECT doc_id, source, n_chars,
-         POW(({_sql_java_u32("sha256(CAST(doc_id AS VARCHAR))")} + 0.5) / 4294967296.0,
-             1.0 / CAST(n_chars AS DOUBLE)) AS es_key
-  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
-),
-r AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY source
-                               ORDER BY es_key DESC, doc_id ASC) AS rn
-  FROM h
-)
-SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars FROM r WHERE rn <= 5
-"""
-
-
 def q_repeated_spans(spark, sf_dir):
     """Cross-document repeated-span detection (dedup.repeated_ngram_spans):
     maximal merged spans of word 8-grams occurring in >= 2 distinct docs of
@@ -1878,137 +1782,6 @@ WHERE list_cosine_similarity(e1.embedding, e2.embedding) >= {threshold}
 
 
 SQL_DEDUP_EMBEDDING_LSH = _sql_dedup_embedding_lsh()
-
-
-def _ann_query_set(emb):
-    """The 5-vector probe set shared by the ANN gate queries — a bounded
-    driver collect (fixed 5 rows, never corpus-scaled)."""
-    return [
-        (r["vec_id"], list(r["embedding"]))
-        for r in emb.filter(F.col("vec_id") < 5).collect()
-    ]
-
-
-def q_ann_topk(spark, sf_dir):
-    from .datapipe.similarity import brute_force_topk
-
-    emb = _emb(spark, sf_dir)
-    return brute_force_topk(emb, _ann_query_set(emb), k=10).select("qid", "vec_id", "rank")
-
-
-SQL_ANN_TOPK = """
-WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-scored AS (
-  SELECT q.qid, e.vec_id,
-         list_cosine_similarity(CAST(q.qvec AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS cosine
-  FROM q CROSS JOIN embeddings e
-),
-ranked AS (
-  SELECT qid, vec_id, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT qid, vec_id, CAST(rank AS INT) AS rank FROM ranked WHERE rank <= 10
-"""
-
-
-def q_ann_lsh(spark, sf_dir):
-    """LSH-bucketed ANN with hamming-1 multiprobe (scale path) — now
-    hash-verified: the oracle reproduces the seeded hyperplanes, probes and
-    exact within-candidate ranking."""
-    from .datapipe.similarity import lsh_topk
-
-    emb = _emb(spark, sf_dir)
-    return lsh_topk(emb, _ann_query_set(emb), k=10, n_planes=8, seed=7, multiprobe=1).select(
-        "qid", "vec_id", "rank"
-    )
-
-
-def _sql_ann_lsh(k: int = 10, n_planes: int = 8, seed: int = 7) -> str:
-    probe_list = ", ".join(f"xor(bucket, {1 << i})" for i in range(n_planes))
-    return f"""
-WITH c AS (
-  SELECT vec_id, embedding,
-         CAST({_sql_hyperplane_bucket('embedding', n_planes, seed)} AS BIGINT) AS bucket
-  FROM embeddings
-),
-q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qvec, bucket FROM c WHERE vec_id < 5),
-probes AS (
-  SELECT qid, qvec, unnest(list_prepend(bucket, [{probe_list}])) AS bucket FROM q
-),
-cand AS (
-  SELECT DISTINCT p.qid, p.qvec, c.vec_id, c.embedding
-  FROM probes p JOIN c USING (bucket)
-),
-scored AS (
-  SELECT qid, vec_id,
-         list_cosine_similarity(qvec, CAST(embedding AS DOUBLE[])) AS cosine
-  FROM cand
-),
-ranked AS (
-  SELECT qid, vec_id, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT qid, vec_id, CAST(rank AS INT) AS rank FROM ranked WHERE rank <= {k}
-"""
-
-
-SQL_ANN_LSH = _sql_ann_lsh()
-
-
-def q_ann_ivf(spark, sf_dir):
-    """IVF-Flat ANN (inverted-file scale path): deterministic centroid init
-    (first n vectors by id), argmin-L2 cell assignment, n_probe nearest
-    cells per query, exact cosine within probed cells."""
-    from .datapipe.similarity import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    return ivf_topk(emb, _ann_query_set(emb), k=10, n_centroids=16, n_probe=2).select(
-        "qid", "vec_id", "rank"
-    )
-
-
-def _sql_ann_ivf(k: int = 10, n_centroids: int = 16, n_probe: int = 2) -> str:
-    return f"""
-WITH cent AS (
-  SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT {n_centroids}
-),
-scored_cells AS (
-  SELECT e.vec_id, c.cell,
-         list_distance(CAST(e.embedding AS DOUBLE[]), c.cvec) AS d
-  FROM embeddings e CROSS JOIN cent c
-),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-    FROM scored_cells
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT vec_id AS qid, cell FROM (
-    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-    FROM scored_cells WHERE vec_id < 5
-  ) WHERE rn <= {n_probe}
-),
-cand AS (
-  SELECT q.qid, a.vec_id FROM qprobe q JOIN assign a USING (cell)
-),
-scored AS (
-  SELECT c.qid, c.vec_id,
-         list_cosine_similarity(CAST(qe.embedding AS DOUBLE[]), CAST(ve.embedding AS DOUBLE[])) AS cosine
-  FROM cand c
-  JOIN embeddings qe ON qe.vec_id = c.qid
-  JOIN embeddings ve ON ve.vec_id = c.vec_id
-),
-ranked AS (
-  SELECT qid, vec_id, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT qid, vec_id, CAST(rank AS INT) AS rank FROM ranked WHERE rank <= {k}
-"""
-
-
-SQL_ANN_IVF = _sql_ann_ivf()
 
 
 def q_corpus_clean(spark, sf_dir):
@@ -2712,80 +2485,6 @@ GROUP BY d.source
 """
 
 
-#: Eval-query budget for kNN label eval. The driver collect is bounded by
-#: THIS constant, never by the corpus: the query set is the first
-#: KNN_EVAL_CAP vectors by vec_id (a deterministic sampled eval split any
-#: engine can reproduce), while the corpus side streams through the
-#: broadcast-GEMM scorer and is never collected.
-KNN_EVAL_CAP = 200
-
-
-def q_knn_label_eval(spark, sf_dir):
-    """kNN majority-vote label prediction over the embedding table's `label`
-    ground truth, leave-one-out, reported as a confusion matrix — the
-    embedding-quality eval a pipeline runs before trusting ANN dedup.
-
-    The query set is a deterministic KNN_EVAL_CAP-row eval split (first N
-    by vec_id); driver memory is O(cap·dim) regardless of corpus size."""
-    from .datapipe.similarity import brute_force_topk
-
-    emb = _emb(spark, sf_dir)
-    queries = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in emb.select("vec_id", "embedding").orderBy("vec_id").limit(KNN_EVAL_CAP).collect()
-    ]
-    topk = brute_force_topk(emb, queries, k=6)  # self + 5 neighbors
-    labels = emb.select("vec_id", "label")
-    neigh = (
-        topk.filter(F.col("vec_id") != F.col("qid"))
-        .join(labels, "vec_id")
-        .groupBy("qid", "label")
-        .agg(F.count("*").alias("votes"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("votes"), F.asc("label"))
-    pred = neigh.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).select(
-        "qid", F.col("label").alias("pred_label")
-    )
-    truth = labels.select(F.col("vec_id").alias("qid"), F.col("label").alias("true_label"))
-    return pred.join(truth, "qid").groupBy("true_label", "pred_label").agg(
-        F.count("*").alias("n")
-    )
-
-
-SQL_KNN_LABEL_EVAL = f"""
-WITH eval_split AS (
-  SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {KNN_EVAL_CAP}
-),
-scored AS (
-  SELECT q.vec_id AS qid, e.vec_id,
-         list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS cosine
-  FROM eval_split q CROSS JOIN embeddings e
-  WHERE q.vec_id <> e.vec_id
-),
-ranked AS (
-  SELECT qid, vec_id, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-),
-neigh AS (
-  SELECT r.qid, e.label, COUNT(*) AS votes
-  FROM ranked r JOIN embeddings e ON e.vec_id = r.vec_id
-  WHERE r.rank <= 5
-  GROUP BY r.qid, e.label
-),
-pred AS (
-  SELECT qid, label AS pred_label FROM (
-    SELECT qid, label, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY votes DESC, label ASC) AS rn
-    FROM neigh
-  ) WHERE rn = 1
-)
-SELECT t.label AS true_label, p.pred_label, COUNT(*) AS n
-FROM pred p JOIN embeddings t ON t.vec_id = p.qid
-GROUP BY t.label, p.pred_label
-"""
-
-
 def q_doc_fingerprint(spark, sf_dir):
     from .datapipe.textstats import fingerprints
 
@@ -3038,43 +2737,6 @@ FROM latest WHERE rn = 1 AND NOT is_deletion
 """
 
 
-def q_corpus_mixture_sample(spark, sf_dir):
-    """Deterministic domain-mixture curation: sample each source to a target
-    share of a 30k-char budget, greedy in content-hash order (engine- and
-    run-stable — no RNG). src0/src1/src2 get explicit shares, the rest split
-    a default share."""
-    from .datapipe.mixture import mixture_sample
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text", "source", "n_chars")
-    return mixture_sample(
-        docs,
-        weights={"src0": 0.25, "src1": 0.15, "src2": 0.10},
-        total_chars=30000,
-        default_weight=0.5 / 17,
-    )
-
-
-SQL_CORPUS_MIXTURE_SAMPLE = f"""
-WITH h AS (
-  SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars,
-         {_sql_java_u32('sha256(text)')} % 1000000000 AS _h,
-         -- integer literals = python int(w * total): decimal-vs-float
-         -- literal arithmetic must never decide a budget boundary
-         CASE source WHEN 'src0' THEN 7500
-                     WHEN 'src1' THEN 4500
-                     WHEN 'src2' THEN 3000
-                     ELSE 882 END AS budget
-  FROM documents
-),
-p AS (
-  SELECT *, COALESCE(SUM(n_chars) OVER (PARTITION BY source ORDER BY _h, doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior
-  FROM h
-)
-SELECT doc_id, source, n_chars FROM p WHERE prior < budget
-"""
-
-
 def q_dedup_incremental(spark, sf_dir):
     """Append-only ingestion check: the planted duplicate batch (ids >=
     1,000,000 in the dup corpus) screened against the base documents table —
@@ -3096,116 +2758,6 @@ inc AS (
   SELECT doc_id, sha256(text) AS digest FROM corpus WHERE doc_id >= 1000000
 )
 SELECT inc.doc_id, idx.dup_of FROM inc JOIN idx USING (digest)
-"""
-
-
-def q_ann_ivfpq(spark, sf_dir):
-    """IVF-PQ ANN (inverted cells + product-quantized codes, m=8 subspaces x
-    16 codes = 8 bytes/vector vs 512): rank by cosine against the DECODED
-    vector — algebraically the ADC approximation, written as the same
-    sequential fold on both engines. Gate variant keeps the
-    oracle-replicable first-N coarse cells and codebooks."""
-    from .datapipe.similarity import ivfpq_topk
-
-    emb = _emb(spark, sf_dir)
-    return ivfpq_topk(emb, _ann_query_set(emb), k=10, n_centroids=16, n_probe=2,
-                      m=8, ksub=16)
-
-
-def _sql_ann_ivfpq(k: int = 10, n_centroids: int = 16, n_probe: int = 2,
-                   m: int = 8, dsub: int = 8, ksub: int = 16) -> str:
-    return f"""
-WITH cent AS (
-  SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT {n_centroids}
-),
-base AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, CAST(embedding AS DOUBLE[]) AS bvec
-  FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT {ksub})
-),
-cb AS (
-  SELECT t.j, base.code, list_slice(base.bvec, t.j * {dsub} + 1, (t.j + 1) * {dsub}) AS cbvec
-  FROM base CROSS JOIN (SELECT range AS j FROM range(0, {m})) t
-),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cvec), c.cell) AS rn
-    FROM embeddings e CROSS JOIN cent c) WHERE rn = 1
-),
-codes AS (
-  SELECT vec_id, j, code FROM (
-    SELECT e.vec_id, cb.j, cb.code,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j
-             ORDER BY list_distance(
-               list_slice(CAST(e.embedding AS DOUBLE[]), cb.j * {dsub} + 1, (cb.j + 1) * {dsub}),
-               cb.cbvec), cb.code) AS rn
-    FROM embeddings e CROSS JOIN cb) WHERE rn = 1
-),
-decoded AS (
-  SELECT vec_id, flatten(list(cbvec ORDER BY j)) AS dvec
-  FROM codes JOIN cb USING (j, code) GROUP BY vec_id
-),
-q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id < 5),
-qprobe AS (
-  SELECT qid, qvec, cell FROM (
-    SELECT q.qid, q.qvec, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.qid
-             ORDER BY list_distance(q.qvec, c.cvec), c.cell) AS rn
-    FROM q CROSS JOIN cent c) WHERE rn <= {n_probe}
-),
-cand AS (
-  SELECT DISTINCT p.qid, p.qvec, a.vec_id FROM qprobe p JOIN assign a USING (cell)
-),
-scored AS (
-  SELECT qid, vec_id, list_cosine_similarity(qvec, d.dvec) AS cosine
-  FROM cand JOIN decoded d USING (vec_id)
-),
-ranked AS (
-  SELECT qid, vec_id,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT qid, vec_id, CAST(rank AS INT) AS rank FROM ranked WHERE rank <= {k}
-"""
-
-
-SQL_ANN_IVFPQ = _sql_ann_ivfpq()
-
-
-def q_ann_ivfpq_rerank(spark, sf_dir):
-    """Two-stage retrieval (similarity.ivfpq_rerank_topk): the gated IVF-PQ
-    plan narrows each query to 40 ADC candidates, then exact cosine on the
-    ORIGINAL float vectors re-ranks to top-10 — the faiss
-    IndexRefineFlat recipe. The refine set is broadcast against the
-    full-precision corpus (one scan, zero shuffle of the big side). The
-    oracle nests the complete IVF-PQ SQL at k=40 as a derived table and
-    replays the exact re-rank from the raw embeddings."""
-    from .datapipe.similarity import ivfpq_rerank_topk
-
-    emb = _emb(spark, sf_dir)
-    return ivfpq_rerank_topk(emb, _ann_query_set(emb), k=10, refine=40,
-                             n_centroids=16, n_probe=2, m=8, ksub=16
-                             ).select("qid", "vec_id", "rank")
-
-
-SQL_ANN_IVFPQ_RERANK = f"""
-WITH approx AS (
-  SELECT * FROM ({_sql_ann_ivfpq(k=40)})
-),
-q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id < 5),
-exact AS (
-  SELECT a.qid, a.vec_id,
-         list_cosine_similarity(q.qvec, CAST(e.embedding AS DOUBLE[])) AS cosine
-  FROM approx a JOIN q ON a.qid = q.qid JOIN embeddings e ON a.vec_id = e.vec_id
-),
-rr AS (
-  SELECT qid, vec_id,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM exact
-)
-SELECT qid, vec_id, CAST(rank AS INT) AS rank FROM rr WHERE rank <= 10
 """
 
 
@@ -3414,101 +2966,6 @@ SELECT s.doc_id, d.source, s.n_words, s.avg_nll,
                            ORDER BY s.avg_nll ASC, s.doc_id ASC) AS INT)
          AS ppl_bucket
 FROM scores s JOIN documents d USING (doc_id)
-"""
-
-
-def q_token_budget_mixture(spark, sf_dir):
-    """Token-budget mixture with epoch repetition
-    (mixture.token_budget_mixture): a 20k-token budget split src0=0.2
-    (budget above source mass -> 2 full epochs + a greedy partial),
-    src1=0.5 (hits the max_epochs=3 repetition cap, no partial),
-    src2=0.04 and default=0.01 (sub-mass budgets -> single greedy partial
-    epoch) — all three recipe paths exercised in one gate row. Fully
-    integer + content-hash deterministic; the oracle recomputes masses,
-    epochs, and the prefix-sum fill from scratch."""
-    from .datapipe.mixture import token_budget_mixture
-
-    return token_budget_mixture(
-        _docs(spark, sf_dir).select("doc_id", "source", "text"),
-        weights={"src0": 0.2, "src1": 0.5, "src2": 0.04},
-        total_tokens=20000,
-        max_epochs=3,
-        default_weight=0.01,
-    )
-
-
-SQL_TOKEN_BUDGET_MIXTURE = f"""
-WITH d AS (
-  SELECT doc_id, source,
-         CAST(len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                              w -> w <> '')) AS BIGINT) AS n_tokens,
-         {_sql_java_u32('sha256(text)')} % 1000000000 AS _h,
-         -- integer literals = python int(w * total_tokens)
-         CAST(CASE source WHEN 'src0' THEN 4000
-                          WHEN 'src1' THEN 10000
-                          WHEN 'src2' THEN 800
-                          ELSE 200 END AS BIGINT) AS _budget
-  FROM documents
-),
-m AS (SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS _mass FROM d GROUP BY source),
-j AS (
-  SELECT d.*, m._mass,
-         LEAST(CASE WHEN m._mass > 0 THEN d._budget // m._mass ELSE 0 END,
-               3) AS n_full
-  FROM d JOIN m USING (source)
-),
-full_epochs AS (
-  SELECT doc_id, source, CAST(e AS BIGINT) AS epoch, n_tokens
-  FROM j, LATERAL (SELECT unnest(range(0, CAST(n_full AS BIGINT)))) t(e)
-  WHERE n_full >= 1
-),
-rem AS (
-  SELECT doc_id, source, CAST(n_full AS BIGINT) AS epoch, n_tokens
-  FROM (
-    SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY source
-                ORDER BY _h, doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS _prior
-    FROM j WHERE n_full < 3
-  )
-  WHERE _prior < _budget - n_full * _mass
-)
-SELECT doc_id, source, epoch, n_tokens FROM full_epochs
-UNION ALL
-SELECT doc_id, source, epoch, n_tokens FROM rem
-"""
-
-
-def q_ann_recall_eval(spark, sf_dir):
-    """ANN quality evaluation: recall@10 of the IVF-Flat index
-    (similarity.ivf_topk, the gated scale path) against exact brute-force
-    cosine ground truth (similarity.brute_force_topk), per query — the
-    accept/reject number an ANN deployment is judged on. Both sides are
-    independently gated; this row verifies the EVALUATION join itself
-    (n_hits = |ivf top-10 ∩ exact top-10|, recall = n_hits/10)."""
-    from .datapipe.similarity import brute_force_topk, ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    qs = _ann_query_set(emb)
-    exact = brute_force_topk(emb, qs, k=10).select("qid", "vec_id")
-    approx = (
-        ivf_topk(emb, qs, k=10, n_centroids=16, n_probe=2)
-        .select("qid", "vec_id", F.lit(1).alias("_hit"))
-    )
-    return (
-        exact.join(approx, ["qid", "vec_id"], "left")
-        .groupBy("qid")
-        .agg(F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_hits"))
-        .select("qid", "n_hits",
-                (F.col("n_hits").cast("double") / 10.0).alias("recall_at_10"))
-    )
-
-
-SQL_ANN_RECALL_EVAL = f"""
-SELECT e.qid, CAST(COUNT(i.vec_id) AS BIGINT) AS n_hits,
-       CAST(COUNT(i.vec_id) AS DOUBLE) / 10.0 AS recall_at_10
-FROM ({SQL_ANN_TOPK}) e
-LEFT JOIN ({SQL_ANN_IVF}) i ON e.qid = i.qid AND e.vec_id = i.vec_id
-GROUP BY e.qid
 """
 
 
@@ -3829,18 +3286,6 @@ def q_minhash_recall_eval(spark, sf_dir):
     )
 
 
-def q_temperature_weights(spark, sf_dir):
-    """Temperature (alpha=0.5) source weighting
-    (mixture.temperature_mixture_weights — the mT5/XLM-R alpha-sampling
-    recipe): per-source weight proportional to sqrt(token mass), on the
-    micro-integer grid with an INTEGER normalizer (a float sum across
-    sources would be partition-order-dependent). Oracle recomputes masses,
-    pow_micro, the integer total and the final ratio from scratch."""
-    from .datapipe.mixture import temperature_mixture_weights
-
-    return temperature_mixture_weights(_docs(spark, sf_dir), alpha=0.5)
-
-
 SQL_MINHASH_RECALL_EVAL = f"""
 WITH mh AS (SELECT id1, id2 FROM ({SQL_DEDUP_MINHASH})),
 ex AS (SELECT id1, id2 FROM ({SQL_DEDUP_NGRAM_JACCARD}))
@@ -3848,26 +3293,6 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM ex) AS n_exact_pairs,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM mh) AS n_lsh_pairs,
        (SELECT CAST(COUNT(*) AS BIGINT)
         FROM (SELECT * FROM ex INTERSECT SELECT * FROM mh)) AS n_common_pairs
-"""
-
-
-SQL_TEMPERATURE_WEIGHTS = """
-WITH masses AS (
-  SELECT source,
-         CAST(SUM(len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                                  x -> x <> ''))) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY source
-),
-pm AS (
-  SELECT source, n_tokens,
-         CAST(ROUND(POW(CAST(n_tokens AS DOUBLE), 0.5) * 1000000) AS BIGINT) AS pmv
-  FROM masses
-),
-tot AS (SELECT CAST(SUM(pmv) AS BIGINT) AS total_micro FROM pm)
-SELECT source, n_tokens,
-       CAST(ROUND(CAST(pmv AS DOUBLE) / total_micro * 1000000) AS BIGINT)
-         AS weight_micro
-FROM pm CROSS JOIN tot
 """
 
 
@@ -3939,162 +3364,6 @@ def q_bloom_screen_packed(spark, sf_dir):
 SQL_BLOOM_SCREEN_PACKED = SQL_BLOOM_SCREEN
 
 
-# ---------------------------------------------------------------------------
-# round 7: soft quality sampling + cluster-balanced subsampling
-# ---------------------------------------------------------------------------
-
-# temperature (micro margin units) for the soft filter's gate row: 2.0
-# margin units — wide enough that the fixture's margins (|m| up to ~20)
-# exercise the always-accept, never-accept AND genuinely-stochastic bands
-QRS_TEMPERATURE_MICRO = 2_000_000
-
-
-def q_quality_rejection_sample(spark, sf_dir):
-    """DCLM/FineWeb-style SOFT quality filtering (mixture.rejection_sample):
-    accept each document with probability clamp(1/2 + margin/(2T), 0, 1)
-    over the PINNED scored-filter margin — marginal docs survive
-    proportionally to quality instead of dying at a hard cutoff. The
-    per-doc uniform is java_u32(sha256('qrs:'||doc_id)) % 1e6 and the
-    accept test is a pure integer comparison, so the full
-    (doc_id, margin_micro, u_micro, kept) table hash-matches a DuckDB
-    oracle that recomputes margin, uniform and comparison from scratch."""
-    from .datapipe.mixture import rejection_sample
-
-    scored = q_scored_quality_filter(spark, sf_dir).select("doc_id", "margin_micro")
-    return rejection_sample(scored, QRS_TEMPERATURE_MICRO)
-
-
-SQL_QUALITY_REJECTION_SAMPLE = f"""
-WITH s AS (SELECT * FROM ({SQL_SCORED_QUALITY_FILTER})),
-u AS (
-  SELECT doc_id, margin_micro,
-         {_sql_java_u32("sha256('qrs:' || CAST(doc_id AS VARCHAR))")} % 1000000 AS u_micro
-  FROM s
-)
-SELECT doc_id, CAST(margin_micro AS BIGINT) AS margin_micro,
-       CAST(u_micro AS BIGINT) AS u_micro,
-       (u_micro - 500000) * {2 * QRS_TEMPERATURE_MICRO} < margin_micro * 1000000 AS kept
-FROM u
-"""
-
-
-# expected per-cell sample size for the gate row: the 16 pinned cells hold
-# ~20-45 of the 500 sf0.01 embeddings each, so cap=25 thins the big cells
-# and passes the small ones through untouched (both branches exercised)
-CBS_CAP = 25
-
-
-def q_cluster_balanced_sample(spark, sf_dir):
-    """Cluster-balanced subsampling (mixture.cluster_balanced_sample) on
-    the PINNED kmeans quantizer: every embedding is assigned to its
-    SEMDEDUP_CENTROIDS cell, and each cell is thinned to an expected
-    CBS_CAP vectors via the integer test u_micro * cell_size <
-    cap * 1e6 (cells at or under the cap keep everything). The DuckDB
-    oracle re-derives assignment (argmin L2 against the same literals),
-    cell sizes, uniforms and the comparison from scratch."""
-    from .datapipe.mixture import cluster_balanced_sample
-
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    return cluster_balanced_sample(emb, cap=CBS_CAP, centroids=SEMDEDUP_CENTROIDS)
-
-
-def _sql_cluster_balanced_sample() -> str:
-    u = _sql_java_u32("sha256('cbs:' || CAST(vec_id AS VARCHAR))")
-    return f"""
-WITH {_sql_semdedup_pinned_cent()},
-scored_cells AS (
-  SELECT e.vec_id, c.cell,
-         list_distance(CAST(e.embedding AS DOUBLE[]), c.cvec) AS d
-  FROM embeddings e CROSS JOIN cent c
-),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-    FROM scored_cells
-  ) WHERE rn = 1
-),
-sizes AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS cell_size FROM assign GROUP BY cell),
-u AS (SELECT vec_id, {u} % 1000000 AS u_micro FROM assign)
-SELECT a.vec_id, CAST(a.cell AS BIGINT) AS cell, s.cell_size,
-       CAST(u.u_micro AS BIGINT) AS u_micro,
-       u.u_micro * s.cell_size < {CBS_CAP} * 1000000 AS kept
-FROM assign a JOIN sizes s USING (cell) JOIN u USING (vec_id)
-"""
-
-
-SQL_CLUSTER_BALANCED_SAMPLE = _sql_cluster_balanced_sample()
-
-
-HDE_DIM = 32
-
-
-def q_hashed_embeddings(spark, sf_dir):
-    """Feature-hashing document embeddings (similarity.hashed_doc_embeddings):
-    signed java-hash bucket histogram per document, L2-normalized — the
-    model-free text -> embedding bridge, gated end-to-end.
-
-    Gated shape (round 8, VERDICT r7 #1): the raw operator returns
-    ``array<double>``, which the driver's pandas canonicalizer cannot hash
-    (CORRECTNESS_r07 ``unhashable type: 'list'``). The driver row therefore
-    posexplodes to SCALAR rows ``(doc_id, dim, component_micro)`` with the
-    component on the integer micro grid (round(x*1e6) — exact integer sums
-    in, one normalized quotient out, so the grid is the only fp on either
-    path). The array form stays available for internal consumers
-    (similarity.hashed_doc_embeddings)."""
-    from .datapipe.similarity import hashed_doc_embeddings
-
-    emb = hashed_doc_embeddings(_docs(spark, sf_dir), dim=HDE_DIM)
-    return emb.select(
-        "doc_id", F.posexplode("embedding").alias("dim", "component")
-    ).select(
-        "doc_id",
-        F.col("dim").cast("long").alias("dim"),
-        F.round(F.col("component") * F.lit(1000000.0)).cast("long").alias("component_micro"),
-    )
-
-
-def _sql_hashed_embeddings() -> str:
-    u32w = _sql_java_u32("w")
-    u32s = _sql_java_u32("'sign#' || w")
-    return f"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                     x -> x <> '') AS words
-  FROM documents
-),
-f AS (
-  SELECT doc_id,
-         [{{'b': {u32w} % {HDE_DIM},
-            's': CASE WHEN {u32s} % 2 = 0 THEN 1 ELSE -1 END}}
-          for w in words] AS feats
-  FROM w
-),
-v AS (
-  SELECT doc_id,
-         [CAST(coalesce(list_sum([f.s for f in feats if f.b = i]), 0) AS DOUBLE)
-          for i in range(0, {HDE_DIM})] AS vec
-  FROM f
-),
-n AS (
-  SELECT doc_id, vec, sqrt(list_sum([x * x for x in vec])) AS nrm FROM v
-),
-e AS (
-  SELECT doc_id,
-         unnest([{{'dim': i,
-                   'x': CASE WHEN nrm > 0 THEN vec[i + 1] / nrm ELSE vec[i + 1] END}}
-                 for i in range(0, {HDE_DIM})]) AS c
-  FROM n
-)
-SELECT doc_id, CAST(c.dim AS BIGINT) AS dim,
-       CAST(round(c.x * 1000000.0) AS BIGINT) AS component_micro
-FROM e
-"""
-
-
-SQL_HASHED_EMBEDDINGS = _sql_hashed_embeddings()
-
-
 def q_semdedup_prototypes(spark, sf_dir):
     """SemDeDup with the D4-style keep policy (keep='farthest'): within
     every near-dup neighborhood the member FARTHEST from its pinned-kmeans
@@ -4164,12 +3433,6 @@ FROM corpus c LEFT JOIN dup d USING (vec_id)
 SQL_SEMDEDUP_PROTOTYPES = _sql_semdedup_prototypes(_sql_semdedup_pinned_cent())
 
 
-# ---------------------------------------------------------------------------
-# round-8 operators: novelty scoring, SQ8 ANN, cross-source dup matrix,
-# curriculum ordering
-# ---------------------------------------------------------------------------
-
-
 def _novelty_corpora(spark, sf_dir):
     """Reference = documents with doc_id % 3 == 0; targets = the rest PLUS
     exact re-publications of every 9th reference doc (ids offset by 5M) —
@@ -4234,54 +3497,6 @@ GROUP BY t.doc_id
 """
 
 
-SQ8_DIM = 64
-
-
-def q_ann_sq8_topk(spark, sf_dir):
-    """Asymmetric SQ8 ANN (similarity.sq8_topk): per-dimension 8-bit affine
-    quantization (faiss QT_8bit), exact float queries scored against the
-    DECODED corpus — the third compression point after Flat and PQ. The
-    oracle retrains the quantizer (per-dim min/max), replays the PINNED
-    code/decode float formulas and re-ranks; ranks hash exactly."""
-    from .datapipe.similarity import sq8_topk
-
-    emb = _emb(spark, sf_dir)
-    return sq8_topk(emb, _ann_query_set(emb), k=10).select("qid", "vec_id", "rank")
-
-
-SQL_ANN_SQ8 = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-ex AS (
-  SELECT vec_id, u.i AS i, u.x AS x FROM (
-    SELECT vec_id,
-           unnest([{{'i': i, 'x': v[i + 1]}} for i in range(0, {SQ8_DIM})]) AS u
-    FROM e)
-),
-mm AS (SELECT i, MIN(x) AS mn, MAX(x) AS mx FROM ex GROUP BY i),
-dec AS (
-  SELECT ex.vec_id,
-         list(CASE WHEN mm.mx > mm.mn
-                   THEN mm.mn + (ROUND(((ex.x - mm.mn) * 255.0) / (mm.mx - mm.mn))
-                                 * (mm.mx - mm.mn)) / 255.0
-                   ELSE mm.mn END ORDER BY ex.i) AS dv
-  FROM ex JOIN mm USING (i)
-  GROUP BY ex.vec_id
-),
-q AS (SELECT vec_id AS qid, v AS qvec FROM e WHERE vec_id < 5),
-scored AS (
-  SELECT q.qid, d.vec_id,
-         list_cosine_similarity(q.qvec, d.dv) AS cosine
-  FROM q CROSS JOIN dec d
-),
-ranked AS (
-  SELECT qid, vec_id,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT qid, vec_id, CAST(rank AS INT) AS rank FROM ranked WHERE rank <= 10
-"""
-
-
 def _mirror_corpus(spark, sf_dir):
     """documents + cross-source mirrors: every 10th doc re-published under
     'mirror_a', every 15th under 'mirror_b', every 40th duplicated WITHIN
@@ -4341,52 +3556,6 @@ SELECT * FROM cross_pairs WHERE n_dup_pairs > 0
 UNION ALL
 SELECT * FROM same_pairs WHERE n_dup_pairs > 0
 """
-
-
-CURRICULUM_THRESHOLDS = [-2_000_000, 0, 2_000_000]
-CURRICULUM_SHARDS = 8
-
-
-def q_curriculum_order(spark, sf_dir):
-    """Curriculum training-order manifest (mixture.curriculum_order) over
-    the PINNED quality margins: easy -> hard buckets on fixed integer
-    thresholds, deterministic hash shuffle within, (bucket, shard, pos)
-    layout — no global sort anywhere. The oracle nests the full
-    scored-filter SQL and replays bucket/shard/pos from scratch."""
-    from .datapipe.mixture import curriculum_order
-
-    scored = q_scored_quality_filter(spark, sf_dir)
-    return curriculum_order(scored, "margin_micro", CURRICULUM_THRESHOLDS,
-                            n_shards=CURRICULUM_SHARDS)
-
-
-def _sql_curriculum_order() -> str:
-    u = _sql_java_u32("sha256('curriculum:' || CAST(doc_id AS VARCHAR))")
-    level = " + ".join(
-        f"CASE WHEN margin_micro >= {t} THEN 1 ELSE 0 END"
-        for t in sorted(CURRICULUM_THRESHOLDS)
-    )
-    return f"""
-WITH s AS (SELECT * FROM ({SQL_SCORED_QUALITY_FILTER})),
-keyed AS (
-  SELECT doc_id, CAST(margin_micro AS BIGINT) AS score,
-         CAST({len(CURRICULUM_THRESHOLDS)} - ({level}) AS BIGINT) AS bucket,
-         CAST({u} AS BIGINT) AS u
-  FROM s
-),
-sharded AS (
-  SELECT doc_id, score, bucket, u,
-         CAST(u % {CURRICULUM_SHARDS} AS BIGINT) AS shard
-  FROM keyed
-)
-SELECT doc_id, score, bucket, shard,
-       CAST(ROW_NUMBER() OVER (PARTITION BY bucket, shard
-                               ORDER BY u ASC, doc_id ASC) AS BIGINT) AS pos
-FROM sharded
-"""
-
-
-SQL_CURRICULUM_ORDER = _sql_curriculum_order()
 
 
 NOVELTY_BLOOM_M = 1 << 20
@@ -4471,83 +3640,6 @@ GROUP BY doc_id
 
 
 SQL_NGRAM_NOVELTY_PACKED = _sql_ngram_novelty_packed()
-
-
-def q_ann_ivfsq8_topk(spark, sf_dir):
-    """IVF-SQ8 composite ANN (faiss 'IVF16,SQ8'): the corpus stored as
-    8-bit SQ codes (1 B/dim + one cell id per vector), coarse-quantized
-    into IVF cells over the DECODED vectors, exact float queries probing
-    n_probe cells and scoring asymmetric cosine against the decoded codes.
-    Pure composition of two gated operators (similarity.sq8_decoded ->
-    ivf_topk), so the oracle composes the pinned SQ8 decode CTEs with the
-    IVF assign/probe/rank SQL."""
-    from .datapipe.similarity import ivf_topk, sq8_decoded, sq8_train
-
-    emb = _emb(spark, sf_dir)
-    stats = sq8_train(emb)
-    dec = sq8_decoded(emb, stats).select("vec_id", F.col("_sq8").alias("embedding"))
-    return ivf_topk(dec, _ann_query_set(emb), k=10, n_centroids=16,
-                    n_probe=2).select("qid", "vec_id", "rank")
-
-
-def _sql_ann_ivfsq8(k: int = 10, n_centroids: int = 16, n_probe: int = 2) -> str:
-    return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-ex AS (
-  SELECT vec_id, u.i AS i, u.x AS x FROM (
-    SELECT vec_id,
-           unnest([{{'i': i, 'x': v[i + 1]}} for i in range(0, {SQ8_DIM})]) AS u
-    FROM e)
-),
-mm AS (SELECT i, MIN(x) AS mn, MAX(x) AS mx FROM ex GROUP BY i),
-dec AS (
-  SELECT ex.vec_id,
-         list(CASE WHEN mm.mx > mm.mn
-                   THEN mm.mn + (ROUND(((ex.x - mm.mn) * 255.0) / (mm.mx - mm.mn))
-                                 * (mm.mx - mm.mn)) / 255.0
-                   ELSE mm.mn END ORDER BY ex.i) AS dv
-  FROM ex JOIN mm USING (i)
-  GROUP BY ex.vec_id
-),
-cent AS (
-  SELECT vec_id AS cell, dv AS cvec FROM dec ORDER BY vec_id LIMIT {n_centroids}
-),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT d.vec_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY d.vec_id
-                              ORDER BY list_distance(d.dv, c.cvec), c.cell) AS rn
-    FROM dec d CROSS JOIN cent c
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT qid, cell FROM (
-    SELECT q.vec_id AS qid, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY list_distance(q.v, c.cvec), c.cell) AS rn
-    FROM e q CROSS JOIN cent c WHERE q.vec_id < 5
-  ) WHERE rn <= {n_probe}
-),
-cand AS (
-  SELECT q.qid, a.vec_id FROM qprobe q JOIN assign a USING (cell)
-),
-scored AS (
-  SELECT c.qid, c.vec_id,
-         list_cosine_similarity(qe.v, d.dv) AS cosine
-  FROM cand c
-  JOIN e qe ON qe.vec_id = c.qid
-  JOIN dec d ON d.vec_id = c.vec_id
-),
-ranked AS (
-  SELECT qid, vec_id,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT qid, vec_id, CAST(rank AS INT) AS rank FROM ranked WHERE rank <= {k}
-"""
-
-
-SQL_ANN_IVFSQ8 = _sql_ann_ivfsq8()
 
 
 def q_corpus_drift(spark, sf_dir):
@@ -4734,45 +3826,3 @@ GROUP BY pr.doc_id
 """
 
 
-INTERLEAVE_WEIGHTS = {"web": 0.5, "books": 0.3, "code": 0.2}
-
-
-def q_mixture_interleave(spark, sf_dir):
-    """Stride-scheduled weighted source interleaving
-    (mixture.mixture_interleave): the deterministic data-loader order that
-    realizes mixture weights as arrival frequency. Sources outside the
-    weight map take the default 2% floor; all-integer slots. The oracle
-    replays the hash rank and the integer stride from scratch."""
-    from .datapipe.mixture import mixture_interleave
-
-    return mixture_interleave(_docs(spark, sf_dir), INTERLEAVE_WEIGHTS,
-                              default_weight=0.02)
-
-
-def _sql_mixture_interleave() -> str:
-    u = _sql_java_u32("sha256('il:' || CAST(doc_id AS VARCHAR))")
-    cases = " ".join(
-        f"WHEN '{s}' THEN {int(round(w * 1_000_000))}"
-        for s, w in sorted(INTERLEAVE_WEIGHTS.items())
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, source,
-         CASE source {cases} ELSE 20000 END AS ppm,
-         {u} % 1000000000 AS h
-  FROM documents
-),
-nz AS (SELECT * FROM base WHERE ppm > 0),
-ranked AS (
-  SELECT doc_id, source, ppm,
-         CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY h, doc_id)
-              AS BIGINT) AS rank_in_source
-  FROM nz
-)
-SELECT doc_id, source, rank_in_source,
-       CAST(rank_in_source * (1000000000000 // ppm) AS BIGINT) AS slot
-FROM ranked
-"""
-
-
-SQL_MIXTURE_INTERLEAVE = _sql_mixture_interleave()

@@ -367,40 +367,6 @@ def block_dedup_stream(docs: DataFrame, block_words: int = 16,
     return blk.dropDuplicates(["block_text"])
 
 
-def dsir_score_stream(docs: DataFrame, ratio_micro: dict[str, int],
-                      default_micro: int = 0, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Streaming twin of the DSIR weighting step
-    (mixture.dsir_importance_sample): apply a TRAINED importance-ratio
-    table — word -> integer micro-nat log(p_target/p_raw), fitted offline
-    exactly like the pinned quality model — to documents as they arrive.
-    The fold is a pure per-row JVM aggregate over a literal map (broadcast
-    the table past literal sizes), so the stream is stateless, needs no
-    watermark, and emits (doc_id, n_words, weight_micro) in append mode
-    with exactly the batch weights for every row (pytest-asserted).
-    ``default_micro`` scores out-of-vocabulary words (a word unseen when
-    the table was fitted); selection (Gumbel-top-k) stays a batch/
-    micro-batch step — a global top-k has no streaming-append analogue.
-    """
-    pairs: list = []
-    for w in sorted(ratio_micro):
-        pairs.extend([F.lit(w), F.lit(int(ratio_micro[w])).cast("long")])
-    lut = F.create_map(*pairs) if pairs else F.create_map()
-    words = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda w: w != ""
-    )
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(words).cast("long").alias("n_words"),
-        F.aggregate(
-            words,
-            F.lit(0).cast("long"),
-            lambda acc, w: acc
-            + F.coalesce(lut[w], F.lit(int(default_micro)).cast("long")),
-        ).alias("weight_micro"),
-    )
-
-
 def novelty_screen_stream(docs: DataFrame, bitmap, m: int, k: int, n: int = 3,
                           text_col: str = "text", id_col: str = "doc_id",
                           hash_fn: str = "java32") -> DataFrame:

@@ -20,14 +20,11 @@ def test_track_and_release(spark):
 
 
 def test_operators_register_their_caches(spark):
-    """minhash (persist_signatures), DSIR and temperature weights all leave
-    ZERO persisted blocks behind once release_tracked runs — the
-    long-lived-session leak the advice flagged."""
+    """minhash (persist_signatures), the unigram LM and the Kneser-Ney
+    bigram model all leave ZERO persisted blocks behind once
+    release_tracked runs — the long-lived-session leak the advice flagged."""
     from klog_spark.datapipe.dedup import minhash_dedup
-    from klog_spark.datapipe.mixture import (
-        dsir_importance_sample,
-        temperature_mixture_weights,
-    )
+    from klog_spark.datapipe.textstats import kneser_ney_doc_scores, unigram_lm_scores
 
     docs = spark.createDataFrame(
         [(i, f"some words {i} repeat words here", "web") for i in range(40)],
@@ -40,8 +37,8 @@ def test_operators_register_their_caches(spark):
     release_tracked(blocking=True)
     baseline = n_cached()  # session fixtures legitimately cache the parsed fixture
     minhash_dedup(docs, num_hashes=8, bands=4, shingle_n=2).count()
-    dsir_importance_sample(docs, docs.limit(3), k=5).count()
-    temperature_mixture_weights(docs, alpha=0.5).count()
+    unigram_lm_scores(docs).count()
+    kneser_ney_doc_scores(docs).count()
     assert len(_TRACKED) >= 3
     assert n_cached() > baseline, "operators should have cached intermediates"
     release_tracked(blocking=True)

@@ -73,43 +73,6 @@ def test_embedding_near_dups_planted(spark, emb):
     assert planted == got  # identical vectors, nothing else is close
 
 
-def test_ann_lsh_recall_vs_brute_force(emb):
-    from klog_spark.datapipe.similarity import brute_force_topk, lsh_topk
-
-    queries = [(r["vec_id"], list(r["embedding"])) for r in emb.filter(F.col("vec_id") < 3).collect()]
-    exact = brute_force_topk(emb, queries, k=10).collect()
-    approx = lsh_topk(emb, queries, k=10, n_planes=4).collect()
-    exact_sets = {}
-    for r in exact:
-        exact_sets.setdefault(r["qid"], set()).add(r["vec_id"])
-    approx_sets = {}
-    for r in approx:
-        approx_sets.setdefault(r["qid"], set()).add(r["vec_id"])
-    # rank-1 must be the query itself (cosine 1.0 with itself in corpus)
-    for r in approx:
-        if r["rank"] == 1:
-            assert r["vec_id"] == r["qid"]
-    recalls = [len(exact_sets[q] & approx_sets.get(q, set())) / 10 for q in exact_sets]
-    assert sum(recalls) / len(recalls) >= 0.2  # 4 planes = 16 buckets over 500 vecs
-
-
-def test_brute_force_topk_is_exact(emb):
-    from klog_spark.datapipe.similarity import brute_force_topk
-    import numpy as np
-
-    queries = [(r["vec_id"], list(r["embedding"])) for r in emb.filter(F.col("vec_id") == 0).collect()]
-    got = [(r["vec_id"], r["rank"]) for r in brute_force_topk(emb, queries, k=5).collect()]
-    all_vecs = emb.collect()
-    q = np.array(queries[0][1], dtype=np.float64)
-    q /= np.linalg.norm(q)
-    sims = []
-    for r in all_vecs:
-        v = np.array(r["embedding"], dtype=np.float64)
-        sims.append((r["vec_id"], float(v @ q / np.linalg.norm(v))))
-    want = [(vid, i + 1) for i, (vid, _) in enumerate(sorted(sims, key=lambda t: (-t[1], t[0]))[:5])]
-    assert sorted(got, key=lambda t: t[1]) == want
-
-
 def test_textstats_shapes(docs):
     from klog_spark.datapipe.textstats import lang_id, quality_scores, token_counts
 
@@ -203,79 +166,6 @@ def test_embedding_lsh_dedup_matches_exact(spark, emb):
     assert exact == lsh and exact  # exact dups always bucket-collide
 
 
-def test_ann_multiprobe_recall_at_high_n_planes(spark, emb):
-    """Hamming-1 multiprobe keeps recall >= 0.9 at n_planes=12 where
-    single-bucket probing collapses (planted near-neighbors, cosine~0.995)."""
-    import numpy as np
-
-    from klog_spark.datapipe.similarity import brute_force_topk, lsh_topk
-
-    rng = np.random.default_rng(42)
-    rows = emb.collect()
-    queries = [(r["vec_id"], list(r["embedding"])) for r in rows if r["vec_id"] < 3]
-    planted = []
-    next_id = 10_000
-    for qid, vec in queries:
-        v = np.asarray(vec, dtype=np.float64)
-        for _ in range(10):
-            noisy = v + 0.05 * np.linalg.norm(v) / np.sqrt(len(v)) * rng.standard_normal(len(v))
-            planted.append((next_id, [float(x) for x in noisy]))
-            next_id += 1
-    corpus = emb.select("vec_id", "embedding").unionByName(
-        spark.createDataFrame(planted, "vec_id: long, embedding: array<double>")
-        .select("vec_id", F.col("embedding").cast("array<float>").alias("embedding"))
-    )
-    exact = brute_force_topk(corpus, queries, k=10).collect()
-    multi = lsh_topk(corpus, queries, k=10, n_planes=12, multiprobe=1).collect()
-    single = lsh_topk(corpus, queries, k=10, n_planes=12, multiprobe=0).collect()
-
-    def sets(rs):
-        out = {}
-        for r in rs:
-            out.setdefault(r["qid"], set()).add(r["vec_id"])
-        return out
-
-    es, ms, ss = sets(exact), sets(multi), sets(single)
-    recall_multi = sum(len(es[q] & ms.get(q, set())) / len(es[q]) for q in es) / len(es)
-    recall_single = sum(len(es[q] & ss.get(q, set())) / len(es[q]) for q in es) / len(es)
-    assert recall_multi >= 0.9, f"multiprobe recall {recall_multi}"
-    assert recall_multi >= recall_single
-
-
-def test_ann_ivf_recall_on_planted_neighbors(spark, emb):
-    """IVF-Flat with n_probe=2/16 cells must recover planted near-neighbors
-    (they quantize into the query's nearest cells)."""
-    import numpy as np
-
-    from klog_spark.datapipe.similarity import brute_force_topk, ivf_topk
-
-    rng = np.random.default_rng(7)
-    rows = emb.collect()
-    queries = [(r["vec_id"], list(r["embedding"])) for r in rows if r["vec_id"] < 3]
-    planted, next_id = [], 20_000
-    for qid, vec in queries:
-        v = np.asarray(vec, dtype=np.float64)
-        for _ in range(10):
-            noisy = v + 0.03 * np.linalg.norm(v) / np.sqrt(len(v)) * rng.standard_normal(len(v))
-            planted.append((next_id, [float(x) for x in noisy]))
-            next_id += 1
-    corpus = emb.select("vec_id", "embedding").unionByName(
-        spark.createDataFrame(planted, "vec_id: long, embedding: array<double>")
-        .select("vec_id", F.col("embedding").cast("array<float>").alias("embedding"))
-    )
-    exact = brute_force_topk(corpus, queries, k=10).collect()
-    approx = ivf_topk(corpus, queries, k=10, n_centroids=16, n_probe=2).collect()
-    es, as_ = {}, {}
-    for r in exact:
-        es.setdefault(r["qid"], set()).add(r["vec_id"])
-    for r in approx:
-        as_.setdefault(r["qid"], set()).add(r["vec_id"])
-        if r["rank"] == 1:
-            assert r["vec_id"] == r["qid"]
-    recall = sum(len(es[q] & as_.get(q, set())) / len(es[q]) for q in es) / len(es)
-    assert recall >= 0.8, f"ivf recall {recall}"
-
-
 def test_near_dup_clusters_transitive_chain(spark):
     """A~B and B~C (A!~C directly) must land in ONE cluster labelled by the
     min id — connected components, not just pair grouping."""
@@ -292,15 +182,14 @@ def test_near_dup_clusters_transitive_chain(spark):
     assert got == {(10, 10), (20, 10), (30, 10)}  # 40 has no pair -> no row
 
 
-def test_ivf_kmeans_training_fixes_cell_balance(spark):
+def test_ivf_kmeans_training_fixes_cell_balance():
     """On a fixture where the leading ids all sit in ONE cluster, first-N
     centroid init collapses whole far clusters into single cells (the IVF
     scaling pathology: one probe scans a quarter of the corpus). Sampled
-    k-means training must (a) keep cells balanced and (b) still hit high
-    recall vs brute force at the same probe budget."""
+    k-means training must keep cells balanced."""
     import numpy as np
 
-    from klog_spark.datapipe.similarity import brute_force_topk, ivf_topk, kmeans_centroids
+    from klog_spark.datapipe.similarity import kmeans_centroids
 
     rng = np.random.default_rng(3)
     # four directional clusters (none at the origin: cosine ground truth
@@ -311,7 +200,6 @@ def test_ivf_kmeans_training_fixes_cell_balance(spark):
     corpus = np.concatenate([c + rng.standard_normal((200, 16)) for c in centers])
     # ids in cluster order: ids 0..199 are cluster 0 -> first-16 init is
     # 16 centroids inside one cluster
-    n = len(corpus)
 
     def max_cell(cmat):
         d = (cmat * cmat).sum(axis=1)[None, :] - 2.0 * (corpus @ cmat.T)
@@ -321,22 +209,6 @@ def test_ivf_kmeans_training_fixes_cell_balance(spark):
     trained = kmeans_centroids(corpus[:1024], 16, seed=7)
     assert max_cell(first_n) >= 200        # >= one whole far cluster collapsed
     assert max_cell(trained) <= 120        # balanced: ~n/16 = 50 per cell
-
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in corpus[i]]) for i in range(n)],
-        "vec_id: long, embedding: array<double>",
-    )
-    queries = [(int(i), [float(x) for x in corpus[i]]) for i in (0, 250, 450, 650)]
-    exact = brute_force_topk(emb, queries, k=10)
-    approx = ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=3,
-                      train="kmeans", sample_size=1024)
-    es, as_ = {}, {}
-    for r in exact.collect():
-        es.setdefault(r["qid"], set()).add(r["vec_id"])
-    for r in approx.collect():
-        as_.setdefault(r["qid"], set()).add(r["vec_id"])
-    recall = sum(len(es[q] & as_.get(q, set())) / len(es[q]) for q in es) / len(es)
-    assert recall >= 0.9, f"ivf-kmeans recall {recall}"
 
 
 def test_near_dup_clusters_long_chain(spark):
@@ -460,66 +332,6 @@ def test_repetition_scores_exact(spark):
     assert (r3["n_dup_words"], r3["n_dup_grams"]) == (0, 0)
 
 
-def test_mixture_sample_budgets_and_determinism(spark):
-    from klog_spark.datapipe.mixture import mixture_sample
-
-    docs = spark.createDataFrame(
-        [(i, f"doc number {i} with text", "a" if i < 20 else "b", 100) for i in range(40)],
-        "doc_id long, text string, source string, n_chars long",
-    )
-    out = mixture_sample(docs, weights={"a": 0.5}, total_chars=1000,
-                         default_weight=0.25).collect()
-    per_src = {}
-    for r in out:
-        per_src.setdefault(r["source"], []).append(r["doc_id"])
-    # budget a: 500 chars / 100 each -> 5 docs; greedy crossing rule adds none
-    # extra because sizes divide evenly. budget b: 250 -> prior<250 admits 3
-    # (0,100,200): the crossing doc IS included
-    assert len(per_src["a"]) == 5 and len(per_src["b"]) == 3
-    # deterministic: same selection on re-run
-    out2 = mixture_sample(docs, weights={"a": 0.5}, total_chars=1000,
-                          default_weight=0.25).collect()
-    assert sorted(r["doc_id"] for r in out) == sorted(r["doc_id"] for r in out2)
-
-
-def test_ivfpq_shape_and_codebook_trainer(spark):
-    """IVF-PQ: (a) output is exactly k ranked rows per query, deterministic
-    across runs; (b) the per-subspace Lloyd codebooks reconstruct the sample
-    with LOWER quantization error than first-N codebooks — the trainer earns
-    its keep."""
-    import numpy as np
-
-    from klog_spark.datapipe.similarity import ivfpq_topk, pq_codebooks
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    qs = [(r["vec_id"], list(r["embedding"]))
-          for r in emb.filter("vec_id < 3").collect()]
-    out = ivfpq_topk(emb, qs, k=10, n_centroids=16, n_probe=4, m=8, ksub=16).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["qid"], []).append(r["rank"])
-    assert set(by_q) == {0, 1, 2}
-    assert all(sorted(v) == list(range(1, 11)) for v in by_q.values())
-    out2 = ivfpq_topk(emb, qs, k=10, n_centroids=16, n_probe=4, m=8, ksub=16).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
-
-    sample = np.array([r["embedding"] for r in emb.limit(400).collect()], dtype=np.float64)
-    m, ksub, dsub = 8, 16, sample.shape[1] // 8
-
-    def recon_err(books):
-        err = 0.0
-        for j in range(m):
-            sub = sample[:, j * dsub:(j + 1) * dsub]
-            bj = books[j]
-            d = ((sub[:, None, :] - bj[None, :, :]) ** 2).sum(axis=2)
-            err += d.min(axis=1).sum()
-        return err
-
-    trained = pq_codebooks(sample, m, ksub)
-    first_n = np.stack([sample[:ksub, j * dsub:(j + 1) * dsub] for j in range(m)])
-    assert recon_err(trained) < recon_err(first_n)
-
-
 def test_asof_join_matches_pandas_merge_asof(spark):
     """The generic as-of join must agree with pandas.merge_asof (the
     reference implementation) on random inputs, including the <=-tie case
@@ -556,50 +368,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
             for r in merged.itertuples()
         }
         assert got == want
-
-
-def _java32(s: str) -> int:
-    h = 0
-    for ch in s:
-        h = (h * 31 + ord(ch)) & 0xFFFFFFFF
-    return h
-
-
-def test_weighted_sample_aes(spark):
-    """Derandomized A-ES: the exact selected set matches a pure-Python
-    replication of key = u^(1/w); heavy-weight rows dominate the sample;
-    per-stratum k is honored; nonpositive/null weights are never selected;
-    and the sample is invariant under repartitioning."""
-    import hashlib
-    import math
-
-    from klog_spark.datapipe.mixture import weighted_sample
-
-    rows = [(i, "g" + str(i % 2), 100 if i < 100 else 1) for i in range(1000)]
-    rows += [(2000, "g0", 0), (2001, "g1", None)]  # never sampled
-    df = spark.createDataFrame(rows, "doc_id long, g string, w int")
-
-    got = sorted(r["doc_id"] for r in
-                 weighted_sample(df, k=50, weight_col="w").collect())
-
-    def key(i, w):
-        h = _java32(hashlib.sha256(str(i).encode()).hexdigest())
-        u = (h + 0.5) / 2**32
-        return u ** (1.0 / w)
-
-    ranked = sorted(((key(i, w), -i) for i, _, w in rows[:1000]), reverse=True)
-    want = sorted(-neg_i for _k, neg_i in ranked[:50])
-    assert got == want
-    heavy = sum(1 for i in got if i < 100)
-    assert heavy > 30, f"heavy rows should dominate, got {heavy}/50"
-    assert 2000 not in got and 2001 not in got
-
-    got2 = sorted(r["doc_id"] for r in
-                  weighted_sample(df.repartition(13), k=50, weight_col="w").collect())
-    assert got2 == got
-
-    per_g = weighted_sample(df, k=7, weight_col="w", by=["g"]).groupBy("g").count()
-    assert {r["g"]: r["count"] for r in per_g.collect()} == {"g0": 7, "g1": 7}
 
 
 def test_unigram_lm_scores_python_parity(spark):
@@ -1068,55 +836,6 @@ def test_chunk_documents_coverage_and_overlap(spark):
 
     with _pytest.raises(ValueError):
         chunk_documents(df, max_words=5, overlap=5)
-
-
-def test_token_budget_mixture_epochs(spark):
-    """Epoch-repetition semantics on a hand-built corpus: a source whose
-    budget is n× its mass gets n full epochs + a greedy partial, the
-    repetition cap stops full epochs at max_epochs with no partial on top,
-    a sub-mass budget yields one greedy partial, a zero-budget source is
-    absent — and the result is partition-invariant."""
-    from klog_spark.datapipe.mixture import token_budget_mixture
-
-    rows = [
-        # srcA: mass 10, weight .25 of 100 -> budget 25 = 2 full + 5 partial
-        (1, "srcA", "a b c d e"), (2, "srcA", "f g h i j"),
-        # srcB: mass 4, weight .5 -> budget 50 -> 12 full, capped at 3, no partial
-        (3, "srcB", "k l m n"),
-        # srcC: mass 8, weight .04 -> budget 4 -> 0 full + greedy partial
-        # that crosses the budget ON the first admitted doc (prior 4 !< 4)
-        (4, "srcC", "o p q r"), (5, "srcC", "s t u v"),
-        # srcD: default weight 0 -> budget 0 -> absent
-        (6, "srcD", "w x y z"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = token_budget_mixture(
-        df, weights={"srcA": 0.25, "srcB": 0.5, "srcC": 0.04},
-        total_tokens=100, max_epochs=3,
-    ).collect()
-    by_src: dict[str, list] = {}
-    for r in out:
-        by_src.setdefault(r["source"], []).append(r)
-
-    a = by_src["srcA"]
-    assert sorted((r["doc_id"], r["epoch"]) for r in a if r["epoch"] < 2) == [
-        (1, 0), (1, 1), (2, 0), (2, 1)]                 # 2 full epochs, all docs
-    partial = [r for r in a if r["epoch"] == 2]
-    assert len(partial) == 1 and partial[0]["n_tokens"] == 5  # 5-token leftover -> 1 doc
-
-    b = by_src["srcB"]
-    assert sorted(r["epoch"] for r in b) == [0, 1, 2]    # capped at max_epochs
-    assert {r["doc_id"] for r in b} == {3}
-
-    c = by_src["srcC"]
-    assert len(c) == 1 and c[0]["epoch"] == 0            # budget-crossing doc included
-    assert "srcD" not in by_src
-
-    got2 = sorted((r["doc_id"], r["epoch"]) for r in token_budget_mixture(
-        df.repartition(5), weights={"srcA": 0.25, "srcB": 0.5, "srcC": 0.04},
-        total_tokens=100, max_epochs=3,
-    ).collect())
-    assert got2 == sorted((r["doc_id"], r["epoch"]) for r in out)
 
 
 def test_perplexity_buckets_paths(spark):
@@ -1602,168 +1321,31 @@ def test_remove_repeated_spans_empty_doc_counts_zero(spark):
     assert got[3]["n_kept_words"] == 3 and got[3]["cleaned_text"] == "real words here"
 
 
-def test_rejection_sample_soft_filter_properties(spark):
-    """Soft quality sampling: deterministic across partitionings, hard
-    thresholds at |score| >= T (score >= T always kept, score <= -T never),
-    monotone acceptance in between, and T -> small recovers the hard
-    score >= 0 filter for every doc whose |score| exceeds T."""
-    from klog_spark.datapipe.mixture import rejection_sample
-
-    rows = [(i, (i - 50) * 100_000) for i in range(101)]   # scores -5M..+5M
-    scored = spark.createDataFrame(rows, "doc_id long, margin_micro long")
-    T = 2_000_000
-    got = {r["doc_id"]: r for r in rejection_sample(scored, T).collect()}
-    assert len(got) == 101
-    for i, s in rows:
-        r = got[i]
-        assert r["margin_micro"] == s and 0 <= r["u_micro"] < 1_000_000
-        # exact integer contract: u < 1/2 + s/(2T)
-        want = (r["u_micro"] - 500_000) * 2 * T < s * 1_000_000
-        assert r["kept"] == want
-        if s >= T:
-            assert r["kept"]            # prob 1 band
-        if s <= -T:
-            assert not r["kept"]        # prob 0 band
-    # in the stochastic band both outcomes actually occur
-    band = [got[i]["kept"] for i, s in rows if -T < s < T]
-    assert True in band and False in band
-    # repartitioning changes nothing (pure per-row expression)
-    again = {r["doc_id"]: r["kept"]
-             for r in rejection_sample(scored.repartition(7), T).collect()}
-    assert again == {i: got[i]["kept"] for i, _ in rows}
-    with pytest.raises(ValueError, match="temperature"):
-        rejection_sample(scored, 0)
-
-
-def test_cluster_balanced_sample_caps_big_cells(spark):
-    """Cluster-balanced subsampling: cells at or under the cap keep EVERY
-    vector; oversized cells thin toward the cap (expected-value contract:
-    kept ~ Binomial(size, cap/size)); output covers every input vector
-    exactly once and is partitioning-invariant."""
-    import random
-
-    from klog_spark.datapipe.mixture import cluster_balanced_sample
-
-    rng = random.Random("cbs-test")
-    # two tight clusters: a big one (300 vectors) and a small one (12)
-    big = [(i, [1.0 + rng.uniform(-0.01, 0.01), 0.0, 0.0, 0.0]) for i in range(300)]
-    small = [(1000 + i, [0.0, 1.0 + rng.uniform(-0.01, 0.01), 0.0, 0.0]) for i in range(12)]
-    emb = spark.createDataFrame(big + small, "vec_id long, embedding array<double>")
-    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-    out = cluster_balanced_sample(emb, cap=30, centroids=cents).collect()
-    assert len(out) == 312
-    by_cell: dict[int, list] = {}
-    for r in out:
-        by_cell.setdefault(r["cell"], []).append(r)
-    assert {c: len(rs) for c, rs in by_cell.items()} == {0: 300, 1: 12}
-    assert all(r["cell_size"] == 300 for r in by_cell[0])
-    # small cell under the cap: everything kept
-    assert all(r["kept"] for r in by_cell[1])
-    # big cell: thinned to ~cap (Binomial(300, 0.1): 6 sigma ~ 31)
-    n_kept = sum(1 for r in by_cell[0] if r["kept"])
-    assert 10 <= n_kept <= 62
-    # exact integer contract per row
-    for r in out:
-        assert r["kept"] == (r["u_micro"] * r["cell_size"] < 30 * 1_000_000)
-    again = sorted((r["vec_id"], r["kept"])
-                   for r in cluster_balanced_sample(
-                       emb.repartition(5), cap=30, centroids=cents).collect())
-    assert again == sorted((r["vec_id"], r["kept"]) for r in out)
-    with pytest.raises(ValueError, match="cap"):
-        cluster_balanced_sample(emb, cap=0, centroids=cents)
-
-
-def test_rejection_sample_and_packed_bloom_stream_parity(spark, tmp_path_factory):
-    """Both round-7 per-row screens are stateless projections/kernels, so
-    they apply UNCHANGED to a streaming DataFrame in append mode with
-    batch-identical output: the soft quality sampler (pure JVM expression)
-    and the packed-bitmap Bloom screen (broadcast bitmap + Arrow kernel)."""
+def test_packed_bloom_stream_parity(spark, tmp_path_factory):
+    """The packed-bitmap Bloom screen (broadcast bitmap + Arrow kernel) is
+    a stateless per-row kernel, so it applies UNCHANGED to a streaming
+    DataFrame in append mode with batch-identical output."""
     from klog_spark.datapipe.dedup import bloom_bits, bloom_pack, bloom_screen_packed
-    from klog_spark.datapipe.mixture import rejection_sample
 
-    scored = spark.createDataFrame(
-        [(i, (i - 30) * 150_000) for i in range(61)],
-        "doc_id long, margin_micro long",
-    )
-    docs = scored.select("doc_id", F.concat(F.lit("doc "), F.col("doc_id")).alias("text"))
-    T, m, k = 2_000_000, 1 << 14, 3
-    want_rs = {r["doc_id"]: (r["u_micro"], r["kept"])
-               for r in rejection_sample(scored, T).collect()}
+    docs = spark.createDataFrame([(i, f"doc {i}") for i in range(61)],
+                                 "doc_id long, text string")
+    m, k = 1 << 14, 3
     bitmap = bloom_pack(bloom_bits(docs.filter(F.col("doc_id") % 2 == 0), m=m, k=k), m=m)
     want_bl = {r["doc_id"]: (r["n_hits"], r["maybe_dup"])
                for r in bloom_screen_packed(docs, bitmap, m=m, k=k).collect()}
 
-    base = tmp_path_factory.mktemp("r7_stream")
-    scored.repartition(3).write.mode("overwrite").parquet(f"{base}/scored")
+    base = tmp_path_factory.mktemp("bloom_stream")
     docs.repartition(3).write.mode("overwrite").parquet(f"{base}/docs")
 
-    s_scored = (spark.readStream.schema(scored.schema)
-                .option("maxFilesPerTrigger", 1).parquet(f"{base}/scored"))
-    q1 = (rejection_sample(s_scored, T)
-          .writeStream.format("memory").queryName("rs_stream")
-          .outputMode("append").trigger(availableNow=True).start())
     s_docs = (spark.readStream.schema(docs.schema)
               .option("maxFilesPerTrigger", 1).parquet(f"{base}/docs"))
-    q2 = (bloom_screen_packed(s_docs, bitmap, m=m, k=k)
-          .writeStream.format("memory").queryName("bl_stream")
-          .outputMode("append").trigger(availableNow=True).start())
-    q1.awaitTermination(300)
-    q2.awaitTermination(300)
-    got_rs = {r["doc_id"]: (r["u_micro"], r["kept"])
-              for r in spark.sql("select * from rs_stream").collect()}
+    q = (bloom_screen_packed(s_docs, bitmap, m=m, k=k)
+         .writeStream.format("memory").queryName("bl_stream")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(300)
     got_bl = {r["doc_id"]: (r["n_hits"], r["maybe_dup"])
               for r in spark.sql("select * from bl_stream").collect()}
-    assert got_rs == want_rs
     assert got_bl == want_bl
-
-
-def test_hashed_embeddings_numpy_parity_and_composition(spark):
-    """Feature-hashing embeddings are bit-exact vs a NumPy replica of the
-    construction (java-u32 bucket, salted sign hash, L2 norm; empty docs
-    keep the zero vector), and COMPOSE with the embedding operators:
-    near-identical texts land within cosine >= 0.95 so semdedup_embedding
-    over the hashed vectors drops the planted near-copy."""
-    import numpy as np
-
-    from klog_spark.datapipe.dedup import semdedup_embedding
-    from klog_spark.datapipe.similarity import hashed_doc_embeddings
-
-    def ju32(s):
-        h = 0
-        for c in s:
-            h = (h * 31 + ord(c)) % (1 << 32)
-        return h
-
-    def ref(text, dim):
-        ws = [w for w in text.strip().lower().split() if w]
-        v = np.zeros(dim)
-        for w in ws:
-            v[ju32(w) % dim] += 1 if ju32("sign#" + w) % 2 == 0 else -1
-        n = np.sqrt((v * v).sum())
-        return v / n if n > 0 else v
-
-    texts = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the quick brown fox jumps over the lazy dog today"),  # near-copy of 1
-        (3, "completely unrelated text about spark query planning"),
-        (4, ""),
-        (5, "   "),
-    ]
-    docs = spark.createDataFrame(texts, "doc_id long, text string")
-    emb = hashed_doc_embeddings(docs, dim=32)
-    got = {r["doc_id"]: r["embedding"] for r in emb.collect()}
-    assert set(got) == {1, 2, 3, 4, 5}
-    for d, t in texts:
-        assert list(got[d]) == list(ref(t, 32)), d    # bit-exact
-    assert got[4] == [0.0] * 32 and got[5] == [0.0] * 32
-
-    out = {r["vec_id"]: (r["dup_of"], r["kept"])
-           for r in semdedup_embedding(
-               emb.filter(F.col("doc_id") <= 3)
-                  .select(F.col("doc_id").alias("vec_id"), "embedding"),
-               threshold=0.9, n_centroids=1).collect()}
-    assert out[2] == (1, False)       # near-copy pruned to its original
-    assert out[1][1] and out[3][1]
 
 
 def test_semdedup_keep_farthest_policy(spark):
@@ -1838,56 +1420,6 @@ def test_dedup_paragraph_blocks(spark):
     assert hashed == out
 
 
-def test_ivfpq_rerank_exact_order_and_recall(spark, emb):
-    """Two-stage refine invariants: (1) the re-ranked list is EXACTLY the
-    brute-force cosine order restricted to the ADC candidate set, and
-    (2) per-query recall@k vs brute force is >= plain IVF-PQ's — exact
-    re-scoring can only promote true neighbors the compressed stage
-    admitted."""
-    import numpy as np
-
-    from klog_spark.datapipe.similarity import (brute_force_topk, ivfpq_topk,
-                                                ivfpq_rerank_topk)
-    from klog_spark.entry_queries import _ann_query_set
-
-    queries = _ann_query_set(emb)
-    k, refine = 10, 40
-    adc = ivfpq_topk(emb, queries, k=refine, n_centroids=16, n_probe=2,
-                     m=8, ksub=16)
-    rr = ivfpq_rerank_topk(emb, queries, k=k, refine=refine, n_centroids=16,
-                           n_probe=2, m=8, ksub=16)
-    truth = brute_force_topk(emb, queries, k=k)
-
-    cand = {}
-    for r in adc.collect():
-        cand.setdefault(r["qid"], set()).add(r["vec_id"])
-    vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
-            for r in emb.collect()}
-    got = {}
-    for r in rr.collect():
-        got.setdefault(r["qid"], []).append((r["rank"], r["vec_id"]))
-
-    true_sets = {}
-    for r in truth.collect():
-        true_sets.setdefault(r["qid"], set()).add(r["vec_id"])
-    adc_top = {}
-    for r in adc.collect():
-        if r["rank"] <= k:
-            adc_top.setdefault(r["qid"], set()).add(r["vec_id"])
-
-    for qid, qvec in queries:
-        q = np.asarray(qvec, dtype=np.float64)
-        ids = sorted(cand[qid])
-        cos = {i: float(q @ vecs[i] / (np.linalg.norm(q) * np.linalg.norm(vecs[i])))
-               for i in ids}
-        want = [i for i in sorted(ids, key=lambda i: (-cos[i], i))][:k]
-        have = [v for _, v in sorted(got[qid])]
-        assert have == want, f"qid={qid}: rerank != exact order on candidates"
-        rec_rr = len(set(have) & true_sets[qid])
-        rec_adc = len(adc_top[qid] & true_sets[qid])
-        assert rec_rr >= rec_adc
-
-
 def test_wordlist_filter_paths_and_semantics(spark):
     """expr and broadcast-join paths agree exactly; counts are occurrence
     counts (not distinct); empty docs keep; the ppm accept test is
@@ -1944,62 +1476,6 @@ def test_calibration_sweep_confusion_counts(spark):
     assert kept_by_t == sorted(kept_by_t, reverse=True)
 
 
-def test_dsir_importance_sample_python_oracle(spark):
-    """DSIR selection equals a sequential Python recomputation: both LMs,
-    the per-word micro-nat log-ratios, the hash-Gumbel keys and the top-k.
-    Docs made of target-domain words must out-weigh off-domain docs."""
-    import hashlib
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    from klog_spark.datapipe.mixture import dsir_importance_sample
-    from klog_spark.javahash import java_string_hash_np
-
-    rows = [(i, "aa bb aa cc") for i in range(6)]          # target-ish
-    rows += [(i, "xx yy zz xx") for i in range(6, 12)]     # off-domain
-    rows += [(12, "aa xx")]                                # mixed
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    target = spark.createDataFrame(
-        [(100, "aa bb cc aa bb aa")], "doc_id long, text string")
-
-    out = {r["doc_id"]: (r["n_words"], r["weight_micro"], r["key_micro"],
-                         r["selected"])
-           for r in dsir_importance_sample(docs, target, k=4).collect()}
-
-    # sequential oracle
-    raw_words = {i: [w for w in t.lower().strip().split() if w] for i, t in rows}
-    c_raw, c_tgt = {}, {}
-    for ws in raw_words.values():
-        for w in ws:
-            c_raw[w] = c_raw.get(w, 0) + 1
-    for w in "aa bb cc aa bb aa".split():
-        c_tgt[w] = c_tgt.get(w, 0) + 1
-    n_raw = sum(c_raw.values())
-    n_tgt = sum(c_tgt.values())
-    vocab = len(set(c_raw) | set(c_tgt))
-    lr = {w: round((math.log((c_tgt.get(w, 0) + 1) / (n_tgt + vocab))
-                    - math.log((c_raw[w] + 1) / (n_raw + vocab))) * 1e6)
-          for w in c_raw}
-    want = {}
-    for i, ws in raw_words.items():
-        wm = sum(lr[w] for w in ws)
-        digest = hashlib.sha256(f"dsir:{i}".encode()).hexdigest()
-        u32 = int(java_string_hash_np(pd.Series([digest]))[0]) % (1 << 32)
-        u = (u32 + 0.5) / float(1 << 32)
-        key = wm + round(-math.log(-math.log(u)) * 1e6)
-        want[i] = (len(ws), wm, key)
-    topk = sorted(want, key=lambda i: (-want[i][2], i))[:4]
-    for i in want:
-        assert out[i] == (*want[i], i in topk), f"doc {i}"
-
-    # domain separation: every pure-target doc out-weighs every off-domain doc
-    tgt_w = [out[i][1] for i in range(6)]
-    off_w = [out[i][1] for i in range(6, 12)]
-    assert min(tgt_w) > max(off_w)
-
-
 def test_chunk_quality_filter_worst_chunk_semantics(spark):
     """A long doc with one bad section fails the worst-chunk rule even when
     most chunks are fine; a uniformly good doc keeps; chunk margins match
@@ -2031,38 +1507,6 @@ def test_chunk_quality_filter_worst_chunk_semantics(spark):
     assert min(per_chunk[2000 + i] for i in range(3)) == out[2]["min_margin_micro"]
 
 
-def test_temperature_weights_semantics(spark):
-    """alpha=1 reproduces natural token proportions (to micro rounding);
-    alpha=0.5 up-weights the low-resource source; weights sum to ~1e6;
-    composition with token_budget_mixture is deterministic."""
-    from klog_spark.datapipe.mixture import (temperature_mixture_weights,
-                                             token_budget_mixture)
-
-    rows = [(i, "w " * 100, "big") for i in range(9)]        # 900 tokens
-    rows += [(100, "w " * 100, "small")]                     # 100 tokens
-    df = spark.createDataFrame(
-        [(i, t.strip(), s) for i, t, s in rows],
-        "doc_id long, text string, source string")
-
-    nat = {r["source"]: r["weight_micro"]
-           for r in temperature_mixture_weights(df, alpha=1.0).collect()}
-    assert abs(nat["big"] - 900_000) <= 1 and abs(nat["small"] - 100_000) <= 1
-
-    sq = {r["source"]: r["weight_micro"]
-          for r in temperature_mixture_weights(df, alpha=0.5).collect()}
-    assert sq["small"] > 100_000                     # up-weighted
-    assert abs(sum(sq.values()) - 1_000_000) <= 2    # normalized
-    assert sq["big"] / sq["small"] == pytest.approx(3.0, abs=1e-4)  # sqrt(9)
-
-    mix = token_budget_mixture(
-        df, {s: w / 1e6 for s, w in sq.items()}, total_tokens=400)
-    got = mix.groupBy("source").count().collect()
-    assert {r["source"] for r in got} == {"big", "small"}
-
-    with pytest.raises(ValueError, match="alpha"):
-        temperature_mixture_weights(df, alpha=0.0)
-
-
 def test_ngram_novelty_semantics(spark):
     """Republished reference text scores 0 novelty; disjoint-vocab text
     scores 1e6; partial overlap is exact integer arithmetic."""
@@ -2085,38 +1529,6 @@ def test_ngram_novelty_semantics(spark):
     assert out[12] == (4, 3, 750_000)
 
 
-def test_sq8_codes_and_recall(spark, emb):
-    """SQ8 invariants: decoded vectors stay inside the trained per-dim
-    [min, max] box, reconstruction error is within half a quantization
-    step, and recall@10 vs exact brute force stays >= 0.9 on the fixture
-    (8-bit per dim loses little at dim=64)."""
-    from klog_spark.datapipe.similarity import (brute_force_topk, sq8_decoded,
-                                                sq8_topk, sq8_train)
-    from klog_spark.entry_queries import _ann_query_set
-
-    stats = sq8_train(emb)
-    assert len(stats) == 64 and all(mx >= mn for mn, mx in stats)
-    dec = sq8_decoded(emb, stats).select("vec_id", "embedding", "_sq8").collect()
-    for r in dec:
-        for d, (x, y) in enumerate(zip(r["embedding"], r["_sq8"])):
-            mn, mx = stats[d]
-            assert mn - 1e-12 <= y <= mx + 1e-12
-            step = (mx - mn) / 255.0 if mx > mn else 0.0
-            assert abs(float(x) - y) <= step / 2 + 1e-12
-
-    queries = _ann_query_set(emb)
-    truth = brute_force_topk(emb, queries, k=10).collect()
-    approx = sq8_topk(emb, queries, k=10).collect()
-    t = {}
-    a = {}
-    for r in truth:
-        t.setdefault(r["qid"], set()).add(r["vec_id"])
-    for r in approx:
-        a.setdefault(r["qid"], set()).add(r["vec_id"])
-    recall = sum(len(t[q] & a[q]) for q in t) / sum(len(t[q]) for q in t)
-    assert recall >= 0.9, recall
-
-
 def test_cross_source_dup_matrix_counts(spark):
     """Hand-computed duplicate-pair counts: 2x web + 1x wiki of text A,
     2x wiki of text B, unique text C -> web-wiki 2 pairs (1 text),
@@ -2133,30 +1545,6 @@ def test_cross_source_dup_matrix_counts(spark):
         ("web", "web"): (1, 1),
         ("wiki", "wiki"): (1, 1),
     }
-
-
-def test_curriculum_order_layout(spark):
-    """Buckets follow the fixed thresholds (0 = easiest), pos is contiguous
-    1..n inside every (bucket, shard), shard = hash % n_shards, and the
-    manifest is bit-identical across reruns (no RNG anywhere)."""
-    from klog_spark.datapipe.mixture import curriculum_order
-
-    rows = [(i, (i - 50) * 100_000) for i in range(100)]
-    scored = spark.createDataFrame(rows, "doc_id long, margin_micro long")
-    ts = [-2_000_000, 0, 2_000_000]
-    out = curriculum_order(scored, "margin_micro", ts, n_shards=4).collect()
-    assert len(out) == 100
-    by = {}
-    for r in out:
-        s = r["score"]
-        want_bucket = len(ts) - sum(s >= t for t in ts)
-        assert r["bucket"] == want_bucket
-        assert 0 <= r["shard"] < 4
-        by.setdefault((r["bucket"], r["shard"]), []).append(r["pos"])
-    for poss in by.values():
-        assert sorted(poss) == list(range(1, len(poss) + 1))
-    rerun = curriculum_order(scored, "margin_micro", ts, n_shards=4).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, rerun))
 
 
 def test_ngram_novelty_packed_matches_exact(spark):
@@ -2198,36 +1586,6 @@ def test_ngram_novelty_packed_matches_exact(spark):
     with contextlib.redirect_stdout(buf):
         plan_df.explain("simple")
     assert "Exchange" not in buf.getvalue()
-
-
-def test_ivfsq8_recall_close_to_ivf_flat(spark, emb):
-    """The IVF-SQ8 composite keeps recall@10 within 0.1 of IVF-Flat at the
-    same (n_centroids, n_probe) — 8-bit decode noise must not collapse the
-    probed-cell ranking — and both stay >= 0.5 vs exact ground truth."""
-    from klog_spark.datapipe.similarity import (
-        brute_force_topk, ivf_topk, sq8_decoded, sq8_train,
-    )
-    from klog_spark.entry_queries import _ann_query_set
-
-    queries = _ann_query_set(emb)
-    truth = {}
-    for r in brute_force_topk(emb, queries, k=10).collect():
-        truth.setdefault(r["qid"], set()).add(r["vec_id"])
-
-    def recall(df):
-        got = {}
-        for r in df.collect():
-            got.setdefault(r["qid"], set()).add(r["vec_id"])
-        return sum(len(truth[q] & got.get(q, set())) for q in truth) / \
-            sum(len(truth[q]) for q in truth)
-
-    flat = ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=2)
-    dec = sq8_decoded(emb, sq8_train(emb)).select(
-        "vec_id", F.col("_sq8").alias("embedding"))
-    sq8 = ivf_topk(dec, queries, k=10, n_centroids=16, n_probe=2)
-    r_flat, r_sq8 = recall(flat), recall(sq8)
-    assert r_flat >= 0.5 and r_sq8 >= 0.5
-    assert r_sq8 >= r_flat - 0.1, (r_flat, r_sq8)
 
 
 def test_corpus_drift_semantics(spark):
@@ -2353,101 +1711,3 @@ def test_kneser_ney_matches_sequential_oracle(spark):
         assert abs(total - 1.0) < 1e-12, (p, total)
 
 
-def test_mixture_interleave_schedule_properties(spark):
-    """Stride scheduling realizes weights as arrival frequency: within any
-    slot-ordered prefix where no source is exhausted, a 2x-weight source
-    appears ~2x as often (exact up to one stride); zero-weight sources
-    never appear; the schedule is deterministic across reruns."""
-    from klog_spark.datapipe.mixture import mixture_interleave
-
-    rows = [(i, f"text {i}", ["a", "b", "z"][i % 3]) for i in range(300)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = mixture_interleave(docs, {"a": 0.6, "b": 0.3, "z": 0.0}).collect()
-    assert all(r["source"] != "z" for r in out)
-    ordered = sorted(out, key=lambda r: (r["slot"], r["source"], r["doc_id"]))
-    prefix = [r["source"] for r in ordered[:60]]  # both sources unexhausted
-    na, nb = prefix.count("a"), prefix.count("b")
-    assert abs(na - 2 * nb) <= 2, (na, nb)
-    # slots are exactly rank * stride
-    for r in out:
-        stride = 10**12 // (600_000 if r["source"] == "a" else 300_000)
-        assert r["slot"] == r["rank_in_source"] * stride
-    rerun = mixture_interleave(docs, {"a": 0.6, "b": 0.3, "z": 0.0}).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, rerun))
-
-
-def test_sharded_rank_equals_per_source_window(spark):
-    """The r9 scale-shape fix (VERDICT r8 #1): mixture_interleave's sharded
-    rank composition and mixture_sample's sharded prefix sum must produce
-    EXACTLY the per-source-window outputs, for any input partitioning and
-    any shard count."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from klog_spark.datapipe.mixture import (HASH_MOD, _sharded_rank_in_group,
-                                             mixture_interleave,
-                                             mixture_sample, weighted_sample)
-    from klog_spark.javahash import java_hash_u32_expr
-
-    rows = [(i, f"doc text {i} {'x' * (i % 17)}", ["a", "b", "c"][i % 3])
-            for i in range(500)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-
-    # interleave: sharded vs naive single-window reference
-    weights = {"a": 0.5, "b": 0.3, "c": 0.2}
-    out = mixture_interleave(docs, weights).collect()
-    h = F.pmod(java_hash_u32_expr(
-        F.sha2(F.concat(F.lit("il:"), F.col("doc_id").cast("string")), 256)
-    ), F.lit(HASH_MOD))
-    w = Window.partitionBy("source").orderBy("_h", "doc_id")
-    ppm_map = F.create_map(*[x for s, p in sorted(
-        {s: int(w_ * 1_000_000) for s, w_ in weights.items()}.items())
-        for x in (F.lit(s), F.lit(p))])
-    naive = (
-        docs.select("doc_id", "source", ppm_map[F.col("source")].alias("_ppm"),
-                    h.alias("_h"))
-        .withColumn("rank_in_source", F.row_number().over(w).cast("long"))
-        .withColumn("slot", F.col("rank_in_source") * F.expr("1000000000000 div _ppm"))
-        .select("doc_id", "source", "rank_in_source", "slot")
-    ).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, naive))
-
-    # partition invariance + shard-count invariance of the rank helper
-    base = docs.select("doc_id", "source", h.alias("_h"))
-    r1 = _sharded_rank_in_group(base, "source", "_h", "doc_id", n_shards=1).collect()
-    r7 = _sharded_rank_in_group(base.repartition(13), "source", "_h", "doc_id",
-                                n_shards=7).collect()
-    key = lambda r: (r["source"], r["doc_id"])  # noqa: E731
-    assert sorted(((r["source"], r["doc_id"], r["_rank"]) for r in r1)) == \
-        sorted(((r["source"], r["doc_id"], r["_rank"]) for r in r7))
-
-    # mixture_sample: sharded prefix sum vs the naive per-source window
-    sized = docs.withColumn("n_chars", F.length("text"))
-    got = mixture_sample(sized, {"a": 0.4, "b": 0.2}, total_chars=4000).collect()
-    hh = F.pmod(java_hash_u32_expr(F.sha2(F.col("text"), 256)), F.lit(HASH_MOD))
-    wn = Window.partitionBy("source").orderBy("_h", "doc_id")
-    budget = F.create_map(F.lit("a"), F.lit(1600), F.lit("b"), F.lit(800))[
-        F.col("source")]
-    naive_ms = (
-        sized.withColumn("_h", hh)
-        .withColumn("_prior", F.coalesce(
-            F.sum("n_chars").over(wn.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0)))
-        .filter(F.col("_prior") < F.coalesce(budget, F.lit(0)))
-        .select("doc_id", "source", F.col("n_chars").cast("long").alias("n_chars"))
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, naive_ms))
-
-    # weighted_sample strata path: two-phase top-k vs single-window top-k
-    wdf = docs.withColumn("w", (F.col("doc_id") % 7 + 1).cast("double"))
-    got_ws = weighted_sample(wdf, k=9, weight_col="w", by=["source"]).collect()
-    u = (java_hash_u32_expr(F.sha2(F.col("doc_id").cast("string"), 256))
-         .cast("double") + 0.5) / float(1 << 32)
-    wk = Window.partitionBy("source").orderBy(
-        F.pow(u, 1.0 / F.col("w")).desc(), F.col("doc_id").asc())
-    naive_ws = (
-        wdf.filter(F.col("w") > 0)
-        .withColumn("_rn", F.row_number().over(wk))
-        .filter(F.col("_rn") <= 9).drop("_rn")
-    ).collect()
-    assert sorted(map(tuple, got_ws)) == sorted(map(tuple, naive_ws))

@@ -39,9 +39,6 @@ def test_fingerprint_oracle_utf16_faithful(spark):
     # Java String.hashCode reference (UTF-16 code units)
     def jhash(s):
         h = 0
-        for u in s.encode("utf-16-be"):
-            pass
-        h = 0
         import struct
         units = struct.unpack(f">{len(s.encode('utf-16-be'))//2}H", s.encode("utf-16-be"))
         for u in units:

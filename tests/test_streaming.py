@@ -363,56 +363,6 @@ def test_block_dedup_stream_matches_batch_block_set(spark, tmp_path_factory):
     assert {r["block_text"] for r in out} == batch_blocks
 
 
-def test_dsir_score_stream_matches_batch_weights(spark, tmp_path_factory):
-    """Stateless pinned-ratio DSIR scoring: streaming weight_micro equals
-    the batch operator's weights row-for-row when the stream's ratio table
-    is the one the batch trainer fitted on the same corpus."""
-    from klog_spark.datapipe.mixture import dsir_importance_sample
-    from klog_spark.streaming import dsir_score_stream
-
-    src = tmp_path_factory.mktemp("dsir_stream")
-    rows = [(i, f"aa bb w{i % 7} cc w{(i + 2) % 7}") for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    df.repartition(4).write.mode("overwrite").parquet(str(src))
-
-    target = spark.createDataFrame([(99, "aa bb aa cc")],
-                                   "doc_id long, text string")
-    batch = dsir_importance_sample(df, target, k=5)
-    want = {r["doc_id"]: (r["n_words"], r["weight_micro"])
-            for r in batch.collect()}
-
-    # fit the ratio table exactly as the batch operator does, then pin it
-    import math
-    words = [w for _, t in rows for w in t.split()]
-    twords = "aa bb aa cc".split()
-    c_raw, c_tgt = {}, {}
-    for w in words:
-        c_raw[w] = c_raw.get(w, 0) + 1
-    for w in twords:
-        c_tgt[w] = c_tgt.get(w, 0) + 1
-    vocab = len(set(c_raw) | set(c_tgt))
-    ratio = {w: round((math.log((c_tgt.get(w, 0) + 1) / (len(twords) + vocab))
-                       - math.log((c + 1) / (len(words) + vocab))) * 1e6)
-             for w, c in c_raw.items()}
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        dsir_score_stream(stream, ratio)
-        .writeStream.format("memory").queryName("dsir_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {r["doc_id"]: (r["n_words"], r["weight_micro"])
-           for r in spark.sql("select * from dsir_out").collect()}
-    assert got == want
-
-
 def test_novelty_screen_stream_matches_batch(spark, tmp_path_factory):
     """Stateless packed-Bloom novelty screen: streaming (append, no
     watermark, maxFilesPerTrigger=1) emits exactly the batch operator's

@@ -68,46 +68,31 @@ def main(sf: float = 0.1) -> int:
         "lm_quality": (eq.q_lm_quality, eq.SQL_LM_QUALITY),
         "repeated_spans": (eq.q_repeated_spans, eq.SQL_REPEATED_SPANS),
         # round-6 corpus operators at 10x the gate scale (doc_chunks'
-        # oracle bound is correlated — no fixed position cap to outgrow;
-        # token_budget_mixture's fixed budgets fall below 10x masses, so
-        # the check exercises the pure-greedy path there)
+        # oracle bound is correlated — no fixed position cap to outgrow)
         "doc_chunks": (eq.q_doc_chunks, eq.SQL_DOC_CHUNKS),
         "perplexity_buckets": (eq.q_perplexity_buckets, eq.SQL_PERPLEXITY_BUCKETS),
-        "token_budget_mixture": (eq.q_token_budget_mixture, eq.SQL_TOKEN_BUDGET_MIXTURE),
         "semdedup": (eq.q_semdedup, eq.SQL_SEMDEDUP),
         # round-7 operators at 10x the gate scale: decontamination's shingle
-        # join, the packed-bitmap Bloom kernel (same oracle as relational),
-        # the pinned soft sampler and the pinned cluster rebalancer
+        # join, the packed-bitmap Bloom kernel (same oracle as relational)
+        # and the prototype keep policy
         "contamination_removal": (eq.q_contamination_removal, eq.SQL_CONTAMINATION_REMOVAL),
         "bloom_screen_packed": (eq.q_bloom_screen_packed, eq.SQL_BLOOM_SCREEN_PACKED),
-        "quality_rejection_sample": (eq.q_quality_rejection_sample, eq.SQL_QUALITY_REJECTION_SAMPLE),
-        "cluster_balanced_sample": (eq.q_cluster_balanced_sample, eq.SQL_CLUSTER_BALANCED_SAMPLE),
         "semdedup_prototypes": (eq.q_semdedup_prototypes, eq.SQL_SEMDEDUP_PROTOTYPES),
         # late-round-7 operators: paragraph dedup's global first-occurrence
-        # rule, the two-stage ANN refine, the wordlist screen and the
-        # calibration sweep
+        # rule, the wordlist screen and the calibration sweep
         "dedup_paragraphs": (eq.q_dedup_paragraphs, eq.SQL_DEDUP_PARAGRAPHS),
-        "ann_ivfpq_rerank": (eq.q_ann_ivfpq_rerank, eq.SQL_ANN_IVFPQ_RERANK),
         "wordlist_filter": (eq.q_wordlist_filter, eq.SQL_WORDLIST_FILTER),
         "quality_calibration": (eq.q_quality_calibration, eq.SQL_QUALITY_CALIBRATION),
-        "dsir_sample": (eq.q_dsir_sample, eq.SQL_DSIR_SAMPLE),
         "chunk_quality": (eq.q_chunk_quality, eq.SQL_CHUNK_QUALITY),
-        "temperature_weights": (eq.q_temperature_weights, eq.SQL_TEMPERATURE_WEIGHTS),
         # round-8 operators at 10x the gate scale: the novelty shingle
-        # join, the SQ8 quantizer retrained on the 10x corpus (per-dim
-        # min/max change with scale — the float-identity pin is re-proven,
-        # not reused), the digest self-join matrix and the curriculum
-        # manifest windows
+        # join and the digest self-join matrix
         "ngram_novelty": (eq.q_ngram_novelty, eq.SQL_NGRAM_NOVELTY),
-        "ann_sq8_topk": (eq.q_ann_sq8_topk, eq.SQL_ANN_SQ8),
         "cross_source_dups": (eq.q_cross_source_dups, eq.SQL_CROSS_SOURCE_DUPS),
-        "curriculum_order": (eq.q_curriculum_order, eq.SQL_CURRICULUM_ORDER),
-        # late-round-8: the drift monitor's smoothing constants, the packed
-        # novelty kernel's bit derivation and the IVF-SQ8 quantizer all
-        # re-derive from the 10x corpus — scale re-proves, never reuses
+        # late-round-8: the drift monitor's smoothing constants and the
+        # packed novelty kernel's bit derivation re-derive from the 10x
+        # corpus — scale re-proves, never reuses
         "corpus_drift": (eq.q_corpus_drift, eq.SQL_CORPUS_DRIFT),
         "ngram_novelty_packed": (eq.q_ngram_novelty_packed, eq.SQL_NGRAM_NOVELTY_PACKED),
-        "ann_ivfsq8_topk": (eq.q_ann_ivfsq8_topk, eq.SQL_ANN_IVFSQ8),
     }
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "

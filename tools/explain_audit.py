@@ -28,7 +28,6 @@ def main() -> None:
     from klog_spark import entry_queries as eq
     from klog_spark.operators import aggregates
     from klog_spark.operators.parse import parse_sequences
-    from klog_spark.operators.route import routed_as_parsed
     from klog_spark.session import get_spark
 
     spark = get_spark(app_name="explain-audit", master="local[8]", shuffle_partitions=8)
@@ -81,13 +80,8 @@ def main() -> None:
     assert "CartesianProduct" not in el_plan and "BroadcastNestedLoopJoin" not in el_plan, \
         "embedding LSH dedup must not contain an all-pairs stage"
 
-    # 7. ANN probes broadcast the tiny query side
-    ann = eq.q_ann_lsh(spark, SF_DIR)
-    sections.append(("ANN LSH multiprobe", plan_of(ann), ["BroadcastHashJoin"]))
-
     # 8. routed write: pre-shuffle Exchange on (record_class, bucket) so each
     #    task writes ~one sink's file
-    from klog_spark.operators.route import write_routed
     import io as _io, contextlib as _ctx
 
     buf = _io.StringIO()
@@ -116,8 +110,7 @@ def main() -> None:
         "read-committed visibility must stay window-based, no all-pairs stage"
 
     # 8d. round-4 operators: packing is a per-shard window (no global sort),
-    #     contamination is capped equi-joins (no cartesian), IVF-PQ probes
-    #     broadcast the query side and never nest loops
+    #     contamination is capped equi-joins (no cartesian)
     pk = eq.q_corpus_pack(spark, SF_DIR)
     pk_plan = plan_of(pk, "simple")
     sections.append(("token-budget packing", plan_of(pk), ["Window"]))
@@ -127,10 +120,6 @@ def main() -> None:
     cont_plan = plan_of(cont, "simple")
     sections.append(("contamination scan", plan_of(cont), ["Join"]))
     assert "CartesianProduct" not in cont_plan and "BroadcastNestedLoopJoin" not in cont_plan
-    pq = eq.q_ann_ivfpq(spark, SF_DIR)
-    pq_plan = plan_of(pq, "simple")
-    sections.append(("IVF-PQ ANN", plan_of(pq), ["BroadcastHashJoin"]))
-    assert "CartesianProduct" not in pq_plan and "BroadcastNestedLoopJoin" not in pq_plan
 
     # 8e. named custom-operator classes: as-of is windows (no join at all),
     #     and may not nest loops
@@ -140,18 +129,9 @@ def main() -> None:
     assert "CartesianProduct" not in af_plan and "BroadcastNestedLoopJoin" not in af_plan
 
     # 8f. round-5 corpus operators: LM scoring is three keyed shuffles
-    #     (word count, score join, doc agg) with map-side partials; the
-    #     derandomized weighted sample must compile to TakeOrdered (global)
-    #     — per-partition partial top-k, never a single-partition sort
+    #     (word count, score join, doc agg) with map-side partials
     lm = eq.q_lm_quality(spark, SF_DIR)
     sections.append(("unigram LM scoring", plan_of(lm), ["HashAggregate", "Join"]))
-    from klog_spark.datapipe.mixture import weighted_sample
-
-    docs_df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    ws = weighted_sample(docs_df, k=50, weight_col="n_chars")
-    ws_plan = plan_of(ws, "simple")
-    sections.append(("weighted sample (global A-ES)", plan_of(ws), ["TakeOrderedAndProject"]))
-    assert "TakeOrderedAndProject" in ws_plan, "global sample must be TakeOrdered"
 
     # 8g. corpus stats: the repeated-span merge is windows + aggregates with
     #     no nested loop anywhere
@@ -161,18 +141,13 @@ def main() -> None:
     assert "CartesianProduct" not in rs_plan and "BroadcastNestedLoopJoin" not in rs_plan
 
     # 8h. round-6 corpus operators: chunking must stay a pure per-row
-    #     projection (ZERO Exchange); token-budget mixture broadcasts the
-    #     tiny per-source mass table; semdedup's only pairwise work is the
+    #     projection (ZERO Exchange); semdedup's only pairwise work is the
     #     per-cell equi-join (no nested loop); perplexity bucketing is the
     #     LM joins + one ntile window
     ck = eq.q_doc_chunks(spark, SF_DIR)
     ck_plan = plan_of(ck, "simple")
     sections.append(("context-window chunking", plan_of(ck), ["Scan parquet"]))
     assert "Exchange" not in ck_plan, "chunking must not shuffle"
-    tb = eq.q_token_budget_mixture(spark, SF_DIR)
-    tb_plan = plan_of(tb, "simple")
-    sections.append(("token-budget mixture", plan_of(tb), ["BroadcastHashJoin", "Window"]))
-    assert "CartesianProduct" not in tb_plan
     sd = eq.q_semdedup(spark, SF_DIR)
     sd_plan = plan_of(sd, "simple")
     sections.append(("SemDeDup (IVF-cell prune)", plan_of(sd), ["HashAggregate"]))
@@ -185,9 +160,8 @@ def main() -> None:
     assert "Exchange" not in sf_plan, "applying a pinned model must not shuffle"
 
     # 8i. round-7 operators: decontamination is the same capped shingle
-    #     equi-join as the scan (no cartesian); the packed Bloom screen and
-    #     the soft quality sampler are pure per-row kernels (ZERO Exchange);
-    #     cluster-balanced sampling broadcasts the bounded cell-size table
+    #     equi-join as the scan (no cartesian); the packed Bloom screen is
+    #     a pure per-row kernel (ZERO Exchange)
     cr = eq.q_contamination_removal(spark, SF_DIR)
     cr_plan = plan_of(cr, "simple")
     sections.append(("contamination removal", plan_of(cr), ["Join"]))
@@ -196,18 +170,6 @@ def main() -> None:
     bsp_plan = plan_of(bsp, "simple")
     sections.append(("packed Bloom screen", plan_of(bsp), ["MapInArrow"]))
     assert "Exchange" not in bsp_plan, "packed Bloom probe must not shuffle"
-    qrs = eq.q_quality_rejection_sample(spark, SF_DIR)
-    qrs_plan = plan_of(qrs, "simple")
-    sections.append(("soft quality rejection sample", plan_of(qrs), ["Scan parquet"]))
-    assert "Exchange" not in qrs_plan, "soft sampling must stay a stateless projection"
-    cbs = eq.q_cluster_balanced_sample(spark, SF_DIR)
-    cbs_plan = plan_of(cbs, "simple")
-    sections.append(("cluster-balanced sample", plan_of(cbs), ["BroadcastHashJoin"]))
-    assert "CartesianProduct" not in cbs_plan and "BroadcastNestedLoopJoin" not in cbs_plan
-    hde = eq.q_hashed_embeddings(spark, SF_DIR)
-    hde_plan = plan_of(hde, "simple")
-    sections.append(("hashed doc embeddings", plan_of(hde), ["HashAggregate"]))
-    assert "CartesianProduct" not in hde_plan and "BroadcastNestedLoopJoin" not in hde_plan
     sp = eq.q_semdedup_prototypes(spark, SF_DIR)
     sp_plan = plan_of(sp, "simple")
     sections.append(("SemDeDup prototypes (keep=farthest)", plan_of(sp), ["BroadcastHashJoin"]))
@@ -215,17 +177,11 @@ def main() -> None:
 
     # 8j. late-round-7 operators: paragraph dedup's keep decision must be a
     #     partial-aggregated hash agg (never a window funneling hot blocks
-    #     through one task); the ANN refine stage must BROADCAST the
-    #     candidate set against the corpus; the wordlist screen is a pure
-    #     projection
+    #     through one task); the wordlist screen is a pure projection
     dp = eq.q_dedup_paragraphs(spark, SF_DIR)
     dp_plan = plan_of(dp, "simple")
     sections.append(("paragraph-block dedup", plan_of(dp), ["HashAggregate"]))
     assert "Window" not in dp_plan, "block keep decision must be an agg, not a window"
-    rr = eq.q_ann_ivfpq_rerank(spark, SF_DIR)
-    rr_plan = plan_of(rr, "simple")
-    sections.append(("IVF-PQ exact re-rank", plan_of(rr), ["BroadcastHashJoin"]))
-    assert "CartesianProduct" not in rr_plan and "BroadcastNestedLoopJoin" not in rr_plan
     wf = eq.q_wordlist_filter(spark, SF_DIR)
     wf_plan = plan_of(wf, "simple")
     sections.append(("blocked-wordlist filter", plan_of(wf), ["Scan parquet"]))
@@ -234,11 +190,6 @@ def main() -> None:
     qc_plan = plan_of(qc, "simple")
     sections.append(("quality calibration sweep", plan_of(qc), ["HashAggregate"]))
     assert "CartesianProduct" not in qc_plan and "BroadcastNestedLoopJoin" not in qc_plan
-    ds = eq.q_dsir_sample(spark, SF_DIR)
-    ds_plan = plan_of(ds, "simple")
-    sections.append(("DSIR importance resampling", plan_of(ds), ["TakeOrderedAndProject"]))
-    assert "CartesianProduct" not in ds_plan and "BroadcastNestedLoopJoin" not in ds_plan, \
-        "DSIR top-k must be TakeOrdered partial top-k, never a global sort/cartesian"
     cq = eq.q_chunk_quality(spark, SF_DIR)
     cq_plan = plan_of(cq, "simple")
     sections.append(("chunk-quality worst-chunk filter", plan_of(cq), ["HashAggregate"]))
@@ -246,37 +197,22 @@ def main() -> None:
         "chunk quality's only shuffle is the doc_id aggregation"
     assert cq_plan.count("Exchange") == 1, \
         "chunk quality must shuffle exactly once (the doc_id agg)"
-    twq = eq.q_temperature_weights(spark, SF_DIR)
-    sections.append(("temperature source weights", plan_of(twq), ["HashAggregate"]))
 
     # 8k. round-8 operators: novelty is one distinct-shingle equi-join (no
-    #     cartesian); SQ8 search is a per-row decode into the GEMM kernel
-    #     (no nested loop); the cross-source matrix is a digest-keyed
-    #     self-join; the curriculum manifest windows on (bucket, shard) —
-    #     never an Exchange SinglePartition global sort
+    #     cartesian); the cross-source matrix is a digest-keyed self-join
     nv = eq.q_ngram_novelty(spark, SF_DIR)
     nv_plan = plan_of(nv, "simple")
     sections.append(("n-gram novelty scan", plan_of(nv), ["Join", "HashAggregate"]))
     assert "CartesianProduct" not in nv_plan and "BroadcastNestedLoopJoin" not in nv_plan
-    sq = eq.q_ann_sq8_topk(spark, SF_DIR)
-    sq_plan = plan_of(sq, "simple")
-    sections.append(("SQ8 scalar-quantized ANN", plan_of(sq), ["MapInPandas"]))
-    assert "CartesianProduct" not in sq_plan and "BroadcastNestedLoopJoin" not in sq_plan
     xs = eq.q_cross_source_dups(spark, SF_DIR)
     xs_plan = plan_of(xs, "simple")
     sections.append(("cross-source dup matrix", plan_of(xs), ["HashAggregate", "Join"]))
     assert "CartesianProduct" not in xs_plan and "BroadcastNestedLoopJoin" not in xs_plan
-    co = eq.q_curriculum_order(spark, SF_DIR)
-    co_plan = plan_of(co, "simple")
-    sections.append(("curriculum order manifest", plan_of(co), ["Window"]))
-    assert "Exchange SinglePartition" not in co_plan, \
-        "curriculum manifest must window per (bucket, shard), never globally"
 
     # 8l. late-round-8 operators: the drift monitor's top-k must compile to
     #     TakeOrdered (partial per-partition top-k, never a single-partition
     #     sort); the packed novelty screen is a stateless kernel (ZERO
-    #     Exchange); IVF-SQ8 keeps the broadcast probe shape with no nested
-    #     loop anywhere
+    #     Exchange)
     dr = eq.q_corpus_drift(spark, SF_DIR)
     dr_plan = plan_of(dr, "simple")
     sections.append(("corpus drift monitor", plan_of(dr), ["TakeOrderedAndProject"]))
@@ -285,22 +221,13 @@ def main() -> None:
     nvp_plan = plan_of(nvp, "simple")
     sections.append(("packed-Bloom novelty screen", plan_of(nvp), ["MapInArrow"]))
     assert "Exchange" not in nvp_plan, "packed novelty must not shuffle"
-    i8 = eq.q_ann_ivfsq8_topk(spark, SF_DIR)
-    i8_plan = plan_of(i8, "simple")
-    sections.append(("IVF-SQ8 composite ANN", plan_of(i8), ["BroadcastHashJoin"]))
-    assert "CartesianProduct" not in i8_plan and "BroadcastNestedLoopJoin" not in i8_plan
 
-    # 8m. last round-8 operators: KN scoring is vocab-sized aggregations +
-    #     one (prev, w) join back; the interleave schedule windows per
-    #     source — never a single-partition global sort
+    # 8m. last round-8 operator: KN scoring is vocab-sized aggregations +
+    #     one (prev, w) join back
     kn = eq.q_kneser_ney_score(spark, SF_DIR)
     kn_plan = plan_of(kn, "simple")
     sections.append(("Kneser-Ney bigram scoring", plan_of(kn), ["HashAggregate", "Join"]))
     assert "CartesianProduct" not in kn_plan and "BroadcastNestedLoopJoin" not in kn_plan
-    il = eq.q_mixture_interleave(spark, SF_DIR)
-    il_plan = plan_of(il, "simple")
-    sections.append(("weighted source interleave", plan_of(il), ["Window"]))
-    assert "Exchange SinglePartition" not in il_plan,         "interleave must window per source, never globally"
 
     # 9. no input-scaled driver collects: every `.collect()` in the query
     #    registry / datapipe must be bounded by a `.limit(...)` or a literal

@@ -106,13 +106,6 @@ def main() -> None:
             "outside the timed window)"
         )
         sanity_desc = "sum(n_novel) / zero-novelty docs"
-    elif mode == "manifest":
-        input_desc = (
-            f"synthetic scored corpus sf={sf} ({results[n]['rows']:,} docs, "
-            "5 sources, hash-derived integer margins; curriculum manifest "
-            "(4 buckets x 64 shards) + sharded stride interleave)"
-        )
-        sanity_desc = "sum(pos) / sum(rank_in_source)"
     elif mode.startswith("dedup"):
         input_desc = (
             f"synthetic near-dup document corpus sf={sf} "
@@ -122,7 +115,7 @@ def main() -> None:
     else:
         input_desc = f"seeded klog fixture sf={sf} ({results[n]['rows']:,} tokenized lines)"
         sanity_desc = "num_committed / num_aborted"
-    unit = ("docs/s" if mode.startswith("dedup") or mode in ("novelty", "manifest")
+    unit = ("docs/s" if mode.startswith("dedup") or mode == "novelty"
             else "sequences/s")
     proto = (
         f"{4*n} single-core 6-GiB executor JVMs vs {n} (local-cluster master: "

@@ -50,9 +50,6 @@ def main() -> None:
     if mode == "novelty":
         run_novelty(spark, sf)
         return
-    if mode == "manifest":
-        run_manifest(spark, sf)
-        return
     from klog_spark.datagen import ensure_fixture
 
     fx = str(ensure_fixture(sf))
@@ -319,64 +316,6 @@ def run_novelty(spark: SparkSession, sf: float) -> None:
             "rows_per_sec": round(n / wall, 1),
             "num_committed": row["nn"],
             "num_aborted": row["nz"],
-            "n_sessions": -1,
-        }))
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        spark.stop()
-
-
-def run_manifest(spark: SparkSession, sf: float) -> None:
-    """Manifest-family scaling mode (VERDICT r8 #5): the two newest
-    window-heavy operators — curriculum_order's (bucket, shard) manifest
-    and the r9-sharded mixture_interleave — timed together over a
-    synthetic scored corpus. Both now run windows over bounded (group,
-    shard) partitions composed via broadcast prefix offsets, so this mode
-    measures whether the manifest family scales like the per-row kernels
-    (>= 0.8) rather than like a single-task per-source sort.
-
-    Sanity across levels: num_committed = sum(pos) over the curriculum
-    manifest, num_aborted = sum(rank_in_source) over the interleave
-    schedule (both exact integers, partition-independent).
-    """
-    import os as _os
-
-    from klog_spark.datapipe.mixture import curriculum_order, mixture_interleave
-
-    n_docs = max(1000, int(100_000 * sf))
-    out = tempfile.mkdtemp(prefix="klog-scaling-manifest-",
-                           dir="/dev/shm" if _os.path.isdir("/dev/shm") else None)
-    try:
-        base = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("src"), F.pmod(F.col("id"), 5).cast("string"))
-            .alias("source"),
-            (F.pmod(F.xxhash64(F.col("id")), F.lit(2_000_001))
-             - F.lit(1_000_000)).cast("long").alias("margin_micro"),
-        )
-        base.repartition(4 * spark_cores()).write.mode("overwrite") \
-            .parquet(f"{out}/docs")
-        docs = spark.read.parquet(f"{out}/docs")
-        docs.limit(16).collect()  # pre-warm (session-init, excluded)
-
-        weights = {f"src{i}": [0.4, 0.25, 0.15, 0.15, 0.05][i] for i in range(5)}
-        t0 = time.time()
-        n = docs.count()  # first timed action
-        cur = curriculum_order(docs.select("doc_id", "margin_micro"),
-                               "margin_micro", [-300_000, 0, 300_000],
-                               n_shards=64)
-        c_row = cur.agg(F.sum("pos").cast("long").alias("sp")).collect()[0]
-        il = mixture_interleave(docs, weights)
-        i_row = il.agg(F.sum("rank_in_source").cast("long").alias("sr")).collect()[0]
-        wall = time.time() - t0
-        print(json.dumps({
-            "master": spark.sparkContext.master,
-            "mode": "manifest",
-            "rows": n,
-            "wall_s": round(wall, 2),
-            "rows_per_sec": round(n / wall, 1),
-            "num_committed": c_row["sp"],
-            "num_aborted": i_row["sr"],
             "n_sessions": -1,
         }))
     finally:
