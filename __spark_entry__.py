@@ -9,7 +9,7 @@ tokenized input, its oracle only the text rendition of the same fixture).
 ``queries()`` holds at most 50 rows, every one with an oracle; the extras
 are near-duplicate or subsumed variants under the same contract, run
 against their oracles by ``tools/check_queries.py``. The rows cover the
-klog pipeline and the training-data operators in ``klog_spark/datapipe``.
+klog pipeline and the dedup operators in ``klog_spark/datapipe``.
 """
 
 from __future__ import annotations
@@ -43,39 +43,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # reference leaves it a TODO, Segment.java:28)
         "klog_group_offsets": eq.q_sink_group_offsets,
         "klog_group_offsets_read_committed": eq.q_group_offsets_read_committed,
-        # training-data pipeline (dedup / similarity / text)
+        # training-data pipeline (dedup / similarity)
         "dedup_canonical": eq.q_dedup_canonical,           # keep-best resolution (subsumes dedup_exact's digest agg)
         "dedup_clusters": eq.q_dedup_clusters,             # large-star/small-star CC (recomputes the jaccard pair CTEs)
         "dedup_paragraphs": eq.q_dedup_paragraphs,         # CCNet/MassiveText paragraph dedup: first-occurrence keep + reassembly (r7-built)
         "semdedup": eq.q_semdedup,                         # SemDeDup on the PINNED kmeans quantizer (r7: trains offline, gates the kmeans codepath)
         "contamination_removal": eq.q_contamination_removal,  # decontaminated-corpus decision table (supersedes contamination_check row: same shingle join, train-side agg)
-        "text_lang_id": eq.q_text_lang_id,
-        "wordlist_filter": eq.q_wordlist_filter,           # blocked-wordlist (badwords) filter, integer ppm accept test (r7-built)
         "corpus_pack": eq.q_corpus_pack,                   # token-budget sequence packing
-        # round-5/6 corpus-curation classes, first driver rows (r6 rotation)
-        "pii_redaction": eq.q_pii_redaction,               # rule-based PII scrub, byte-exact rewrite parity
         "repeated_span_removal": eq.q_repeated_span_removal,  # exact-substring-dedup rewrite (spans excised; recomputes the detection CTEs)
-        "corpus_curate": eq.q_corpus_curate,               # quality+PII+split+dedup+DECONTAMINATION composed pipeline (r7: 5 stages)
-        # round-6 corpus-recipe classes, first driver rows (r7 rotation)
-        "perplexity_buckets": eq.q_perplexity_buckets,     # CCNet head/middle/tail split
-        "doc_chunks": eq.q_doc_chunks,                     # context-window chunking (zero-Exchange)
         # round-8-built operators, driver rows from birth (standing
         # rotation discipline; the rotated-out row klog_file_health is green
         # in CORRECTNESS_r07 with its subsumption note in extra_queries())
         "ngram_novelty": eq.q_ngram_novelty,               # n-gram freshness vs a reference corpus (inverse contamination; planted zero-novelty rows)
         "cross_source_dups": eq.q_cross_source_dups,       # cross-source duplication matrix (digest-keyed; per-source dedup-budget audit)
-        "corpus_drift": eq.q_corpus_drift,                 # snapshot unigram-KL drift monitor (late-r8-built, driver row from birth)
-        "kneser_ney_score": eq.q_kneser_ney_score,         # interpolated Kneser-Ney bigram scoring (late-r8-built; replaced bigram_lm_score — green r6/r7, count-interpolated path stays a gated extra, perplexity_buckets keeps the LM-filter presence)
         # round-7-built operators, driver rows from birth (no stale round)
         "bloom_screen_packed": eq.q_bloom_screen_packed,   # packed-bitmap broadcast Bloom, Arrow-kernel probe (VERDICT r6 #2)
         "semdedup_prototypes": eq.q_semdedup_prototypes,   # D4-style keep=farthest prototype selection
-        # round-8 rotation (VERDICT r7 #3/#4): the five r7-built operators
-        # with zero driver history take rows; trained_quality_filter (the
-        # only guaranteed-err row: no rows-only driver mode exists) moves to
-        # extras, and four green rows whose capability another driver row
-        # recomputes rotate out (notes inline in extra_queries()).
-        "quality_calibration": eq.q_quality_calibration,   # threshold sweep -> confusion counts; oracle NESTS the full scored_quality_filter SQL (keeps that row's coverage)
-        "chunk_quality": eq.q_chunk_quality,               # FineWeb worst-chunk decision; composes doc_chunks + the pinned model
         "minhash_recall_eval": eq.q_minhash_recall_eval,   # LSH candidate recall vs exact Jaccard; oracle NESTS the full dedup_minhash SQL (keeps that row's coverage)
         # named custom-operator classes (as-of)
         "klog_batch_state_asof": eq.q_batch_state_asof,
@@ -96,20 +79,13 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "klog_offset_gaps": eq.q_offset_gaps,                    # W8 detail; count gate-checked in txn_stats row
         "klog_cat_producer_states": eq.q_cat_producer_states,    # projection twin of sink_producer_state row
         "dedup_embedding": eq.q_dedup_embedding,                 # declared non-scale twin of dedup_embedding_lsh
-        "text_token_counts": eq.q_text_token_counts,             # subsumed by source_quality
-        "lang_id_eval": eq.q_lang_id_eval,                       # eval view of text_lang_id row
-        "doc_fingerprint": eq.q_doc_fingerprint,                 # javahash fold; test_checks.py + minhash rows
-        "text_quality": eq.q_text_quality,                       # per-doc detail of source_quality row
         "klog_group_metadata": eq.q_group_metadata,              # compaction twin of klog_group_offsets row
-        "corpus_clean": eq.q_corpus_clean,                       # composition of three driver-gated ops
         "klog_group_offset_rewinds": eq.q_group_offset_rewinds,  # incident-signal view over the group_offsets row
         "klog_cat_pid_epoch": eq.q_cat_pid_epoch,                # P3/P6 conjunction; P1/P8/F1 keep the cat_pid row
         "klog_abort_cmds": eq.q_abort_cmds,                      # S10+P7; open_txn_abort_cmds keeps the S10 driver row
         "dedup_exact": eq.q_dedup_exact,                         # digest agg inside dedup_canonical + dedup_incremental rows
         "klog_topics_sanity": eq.q_topics_sanity,                # A8 1-row sanity
         "near_dup_canonical": eq.q_near_dup_canonical,           # one representative per near-dup cluster
-        "doc_keywords": eq.q_doc_keywords,                       # TF-IDF top-k terms, integer micro-nat idf
-        "source_curation_report": eq.q_source_curation_report,   # per-source PII-rate + mean-LM dashboard
         # rotated OUT of the driver gate in round 6 (all green in
         # CORRECTNESS_r05; each capability keeps a driver row via the noted
         # subsuming query, plus its pytests)
@@ -129,8 +105,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "klog_filter_txn_id": eq.q_filter_txn_id,                # P2/P5: state_machine_violations row parses txn_state; CLI predicate pytests
         "klog_batches_per_epoch": eq.q_batches_per_epoch,        # A9: green r1-r6; txn_stats/file_health keep the agg family; salted twin pytest
         "klog_group_lag": eq.q_group_lag,                        # group family keeps 2 driver rows (offsets, read_committed)
-        "leakage_safe_split": eq.q_leakage_safe_split,           # split now driver-exercised INSIDE corpus_curate + contamination_removal rows
-        "doc_repetition": eq.q_doc_repetition,                   # textstats family keeps lm_quality/pii/lang_id/source_quality rows
+        "leakage_safe_split": eq.q_leakage_safe_split,           # split now driver-exercised INSIDE the contamination_removal row
         "dedup_simhash": eq.q_dedup_simhash,                     # near-dup family keeps minhash_lsh/embedding_lsh/clusters/semdedup rows
         "contamination_check": eq.q_contamination_check,         # superseded by the contamination_removal driver row (same join, train-side agg)
         # round-7 variants, locally gated from birth
@@ -139,12 +114,8 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rows from birth (all five green in CORRECTNESS_r06)
         "repeated_spans": eq.q_repeated_spans,                   # detection CTEs recomputed inside the repeated_span_removal driver row
         "dedup_embedding_lsh": eq.q_dedup_embedding_lsh,         # hyperplane-bucket candidates; embedding near-dup family keeps semdedup/_prototypes driver rows
-        "lm_quality_score": eq.q_lm_quality,                     # unigram LM strictly generalized by the bigram_lm_score driver row (interpolates the same unigram model)
-        "source_quality": eq.q_source_quality,                   # per-source report kept by corpus_curate + source_curation_report; per-doc heuristics by text_quality
         # rotated OUT of the driver gate in round 8 (all green in
         # CORRECTNESS_r07; capability kept by the noted driver row)
-        "trained_quality_filter": eq.q_trained_quality_filter,   # rows-only by design (iterative GD); its fitted twin is hash-covered via quality_calibration's nested scored-filter SQL + NumPy-parity pytests — moved here so no driver row burns a guaranteed err (VERDICT r7 #2)
-        "scored_quality_filter": eq.q_scored_quality_filter,     # full SQL nested inside the quality_calibration driver row; chunk_quality applies the same pinned model
         "bloom_screen": eq.q_bloom_screen,                       # relational Bloom twin; bloom_screen_packed driver row keeps the semantics (parity pytest) at the scale shape
         "dedup_minhash_lsh": eq.q_dedup_minhash,                 # full MinHash-LSH pair SQL nested inside the minhash_recall_eval driver row
         # rotated OUT mid-round-8 to give the round-8-built operators driver
@@ -153,8 +124,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-8 scale-path variant, locally gated from birth
         "ngram_novelty_packed": eq.q_ngram_novelty_packed,       # zero-Exchange packed-Bloom novelty kernel; exact-join twin holds the ngram_novelty driver row
         "soft_dedup_weights": eq.q_soft_dedup_weights,           # SoftDeDup: 1/n_copies micro weights instead of drops
-        "quality_ensemble": eq.q_quality_ensemble,               # FineWeb-Edu-style 2-of-3 vote over three gated quality signals
-        "bigram_lm_score": eq.q_bigram_lm_score,                 # count-interpolated bigram path; the KN driver row carries the bigram-LM family, perplexity_buckets the filter shape
     }
 
 
@@ -183,23 +152,13 @@ def oracle_sql() -> dict[str, str]:
         "dedup_paragraphs": eq.SQL_DEDUP_PARAGRAPHS,
         "semdedup": eq.SQL_SEMDEDUP,
         "contamination_removal": eq.SQL_CONTAMINATION_REMOVAL,
-        "text_lang_id": eq.SQL_TEXT_LANG_ID,
-        "wordlist_filter": eq.SQL_WORDLIST_FILTER,
         "corpus_pack": eq.SQL_CORPUS_PACK,
-        "pii_redaction": eq.SQL_PII_REDACTION,
         "repeated_span_removal": eq.SQL_REPEATED_SPAN_REMOVAL,
-        "corpus_curate": eq.SQL_CORPUS_CURATE,
-        "perplexity_buckets": eq.SQL_PERPLEXITY_BUCKETS,
-        "doc_chunks": eq.SQL_DOC_CHUNKS,
         "bloom_screen_packed": eq.SQL_BLOOM_SCREEN_PACKED,
         "semdedup_prototypes": eq.SQL_SEMDEDUP_PROTOTYPES,
         # r8 rotation: every row in queries() has an oracle
-        "quality_calibration": eq.SQL_QUALITY_CALIBRATION,
-        "chunk_quality": eq.SQL_CHUNK_QUALITY,
         "minhash_recall_eval": eq.SQL_MINHASH_RECALL_EVAL,
         # r8-built operators
-        "corpus_drift": eq.SQL_CORPUS_DRIFT,
-        "kneser_ney_score": eq.SQL_KNESER_NEY_SCORE,
         "ngram_novelty": eq.SQL_NGRAM_NOVELTY,
         "cross_source_dups": eq.SQL_CROSS_SOURCE_DUPS,
         "klog_batch_state_asof": eq.SQL_BATCH_STATE_ASOF,
@@ -218,20 +177,13 @@ def extra_oracle_sql() -> dict[str, str]:
         "klog_offset_gaps": eq.SQL_OFFSET_GAPS,
         "klog_cat_producer_states": eq.SQL_CAT_PRODUCER_STATES,
         "dedup_embedding": eq.SQL_DEDUP_EMBEDDING,
-        "text_token_counts": eq.SQL_TEXT_TOKEN_COUNTS,
-        "lang_id_eval": eq.SQL_LANG_ID_EVAL,
-        "doc_fingerprint": eq.SQL_DOC_FINGERPRINT,
-        "text_quality": eq.SQL_TEXT_QUALITY,
         "klog_group_metadata": eq.SQL_GROUP_METADATA,
-        "corpus_clean": eq.SQL_CORPUS_CLEAN,
         "klog_group_offset_rewinds": eq.SQL_GROUP_OFFSET_REWINDS,
         "klog_cat_pid_epoch": eq.SQL_CAT_PID_EPOCH,
         "klog_abort_cmds": eq.SQL_ABORT_CMDS,
         "dedup_exact": eq.SQL_DEDUP_EXACT,
         "klog_topics_sanity": eq.SQL_TOPICS_SANITY,
         "near_dup_canonical": eq.SQL_NEAR_DUP_CANONICAL,
-        "doc_keywords": eq.SQL_DOC_KEYWORDS,
-        "source_curation_report": eq.SQL_SOURCE_CURATION_REPORT,
         "klog_sink_control": eq.SQL_SINK_CONTROL,
         "klog_sink_txn_state": eq.SQL_SINK_TXN_STATE,
         "klog_sink_producer_state": eq.SQL_SINK_PRODUCER_STATE,
@@ -246,21 +198,15 @@ def extra_oracle_sql() -> dict[str, str]:
         "klog_batches_per_epoch": eq.SQL_BATCHES_PER_EPOCH,
         "klog_group_lag": eq.SQL_GROUP_LAG,
         "leakage_safe_split": eq.SQL_LEAKAGE_SAFE_SPLIT,
-        "doc_repetition": eq.SQL_DOC_REPETITION,
         "dedup_simhash": eq.SQL_DEDUP_SIMHASH,
         "contamination_check": eq.SQL_CONTAMINATION_CHECK,
         "semdedup_first_n": eq.SQL_SEMDEDUP_FIRST_N,
         "repeated_spans": eq.SQL_REPEATED_SPANS,
         "dedup_embedding_lsh": eq.SQL_DEDUP_EMBEDDING_LSH,
-        "lm_quality_score": eq.SQL_LM_QUALITY,
-        "source_quality": eq.SQL_SOURCE_QUALITY,
-        # r8 rotated-out rows (trained_quality_filter stays rows-only here)
-        "scored_quality_filter": eq.SQL_SCORED_QUALITY_FILTER,
+        # r8 rotated-out rows
         "bloom_screen": eq.SQL_BLOOM_SCREEN,
         "dedup_minhash_lsh": eq.SQL_DEDUP_MINHASH,
         "klog_file_health": eq.SQL_FILE_HEALTH,
         "ngram_novelty_packed": eq.SQL_NGRAM_NOVELTY_PACKED,
         "soft_dedup_weights": eq.SQL_SOFT_DEDUP_WEIGHTS,
-        "quality_ensemble": eq.SQL_QUALITY_ENSEMBLE,
-        "bigram_lm_score": eq.SQL_BIGRAM_LM_SCORE,
     }

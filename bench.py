@@ -75,7 +75,7 @@ def main() -> None:
         t0 = time.time()
         fn()
         timings[name] = round(time.time() - t0, 3)
-        # operator-owned caches (minhash sigs, LM counts) are
+        # operator-owned caches (minhash sigs, contamination shingles) are
         # per-invocation; release so run N+1 starts from the same storage
         # state as run 1 (ADVICE r7)
         release_tracked()
@@ -147,15 +147,9 @@ def main() -> None:
                                       threshold=0.5, hash_fn="xxhash64").count(),
             )
             timed("dedup_embedding_lsh", lambda: eq.q_dedup_embedding_lsh(spark, sf_dir).count())
-            timed("text_quality", lambda: eq.q_text_quality(spark, sf_dir).count())
             # round-4 operators at sf0.1 scale
             timed("corpus_pack", lambda: eq.q_corpus_pack(spark, sf_dir).count())
             timed("contamination_check", lambda: eq.q_contamination_check(spark, sf_dir).count())
-            # round-5: corpus LM scoring (3 keyed shuffles over exploded words)
-            timed("lm_quality", lambda: eq.q_lm_quality(spark, sf_dir).count())
-            # round-6: context-window chunking — the zero-shuffle per-row path
-            timed("doc_chunks", lambda: eq.q_doc_chunks(spark, sf_dir)
-                  .write.format("noop").mode("overwrite").save())
             # round-7: packed-bitmap Bloom dedup screen end-to-end — build
             # the bit table, pack it executor-side, broadcast, O(1)-probe
             timed("bloom_screen_packed", lambda: eq.q_bloom_screen_packed(spark, sf_dir)
@@ -166,10 +160,6 @@ def main() -> None:
                   lambda: dedup_paragraph_blocks(_dup_corpus(spark, sf_dir),
                                                  block_words=16, hash_blocks=True)
                   .write.format("noop").mode("overwrite").save())
-            # round-8 (VERDICT r7 #6): chunk-granular quality (explode +
-            # pinned-margin fold)
-            timed("chunk_quality", lambda: eq.q_chunk_quality(spark, sf_dir)
-                  .write.format("noop").mode("overwrite").save())
             # round-8 operators: exact novelty join and its zero-Exchange
             # packed-Bloom twin (bitmap build included — the realistic cost)
             timed("ngram_novelty", lambda: eq.q_ngram_novelty(spark, sf_dir)
@@ -178,7 +168,6 @@ def main() -> None:
             # is gate-verified (same split as dedup_minhash_lsh)
             timed("ngram_novelty_packed", lambda: _novelty_packed_xx(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
-            timed("corpus_drift", lambda: eq.q_corpus_drift(spark, sf_dir).count())
             all_runs.append(timings)
             shutil.rmtree(routed_dir, ignore_errors=True)
     finally:

@@ -96,18 +96,13 @@ def main() -> None:
             _dup_corpus(spark, sf_dir), num_hashes=64, bands=16,
             threshold=0.5, hash_fn="xxhash64").count(),
         "dedup_embedding_lsh": lambda: eq.q_dedup_embedding_lsh(spark, sf_dir).count(),
-        "text_quality": lambda: eq.q_text_quality(spark, sf_dir).count(),
         "corpus_pack": lambda: eq.q_corpus_pack(spark, sf_dir).count(),
         "contamination_check": lambda: eq.q_contamination_check(spark, sf_dir).count(),
-        "lm_quality": lambda: eq.q_lm_quality(spark, sf_dir).count(),
-        "doc_chunks": lambda: noop(eq.q_doc_chunks(spark, sf_dir)),
         "bloom_screen_packed": lambda: noop(eq.q_bloom_screen_packed(spark, sf_dir)),
         "dedup_paragraphs": lambda: noop(dedup_paragraph_blocks(
             _dup_corpus(spark, sf_dir), block_words=16, hash_blocks=True)),
-        "chunk_quality": lambda: noop(eq.q_chunk_quality(spark, sf_dir)),
         "ngram_novelty": lambda: noop(eq.q_ngram_novelty(spark, sf_dir)),
         "ngram_novelty_packed": lambda: noop(_novelty_packed_xx()),
-        "corpus_drift": lambda: eq.q_corpus_drift(spark, sf_dir).count(),
     }
     sel = {k: v for k, v in jobs.items() if not only or k in only}
 

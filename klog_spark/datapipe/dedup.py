@@ -730,9 +730,8 @@ def remove_repeated_spans(docs: DataFrame, spans: DataFrame | None = None,
     agree by construction; callers needing the raw byte-exact original for
     untouched docs can join back on ``n_removed_words = 0``. Empty tokens
     are filtered before counting, so an empty/whitespace-only document
-    reports ``n_kept_words = 0`` — matching the sibling word-count
-    operators (``bigram_lm_scores``, ``chunk_documents``) rather than the
-    single-''-token artifact of ``split`` (ADVICE r6); offsets are
+    reports ``n_kept_words = 0`` rather than the single-''-token artifact
+    of ``split`` (ADVICE r6); offsets are
     unaffected for trimmed non-empty text, where ``split`` emits no empty
     tokens.
 

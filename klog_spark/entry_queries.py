@@ -1784,181 +1784,6 @@ WHERE list_cosine_similarity(e1.embedding, e2.embedding) >= {threshold}
 SQL_DEDUP_EMBEDDING_LSH = _sql_dedup_embedding_lsh()
 
 
-def q_corpus_clean(spark, sf_dir):
-    """The end-to-end training-data cleaning recipe as ONE composed query:
-    quality-filter the corpus, exact-dedup it, keep the best copy per group
-    (longest, ties to lowest id), emit the surviving documents. Each stage
-    is an operator verified on its own elsewhere; this verifies the
-    composition."""
-    from .datapipe.dedup import exact_dedup_keep_best
-    from .datapipe.textstats import quality_scores
-
-    corpus = _dup_corpus(spark, sf_dir)
-    q = quality_scores(corpus).filter(F.col("passes_quality")).select("doc_id", "n_words")
-    passing = corpus.join(q, "doc_id")
-    resolved = exact_dedup_keep_best(passing, F.col("n_words").cast("long"))
-    return (
-        resolved.filter(F.col("kept"))
-        .join(q, resolved["doc_id"] == q["doc_id"])
-        .select(resolved["doc_id"], "n_words", "group_size")
-    )
-
-
-def q_corpus_curate(spark, sf_dir):
-    """The curation pipeline as ONE composed, gate-verified query:
-    plant PII on a deterministic subset (doc_id % 7 == 0 gets an email
-    appended, so the scrub stage genuinely removes documents), split the
-    corpus content-hash-safely into train/eval, then keep TRAIN documents
-    that pass quality AND carry no PII AND are the keeper of their
-    exact-duplicate group AND are not contaminated against the eval side
-    (>= 3 distinct 8-gram shingles shared — dedup.decontaminate, the r7
-    removal stage), reporting each survivor's cross-document repeated-span
-    word coverage and post-excision word count alongside. Every stage is
-    an independently gated operator; this verifies the five-stage
-    composition end to end."""
-    from .datapipe.dedup import (
-        decontaminate, exact_dedup_keep_best, leakage_safe_split,
-        remove_repeated_spans, repeated_ngram_spans,
-    )
-    from .datapipe.textstats import quality_scores, redact_pii
-
-    corpus = _dup_corpus(spark, sf_dir).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(F.col("text"), F.lit(" reach me: u"),
-                     F.col("doc_id").cast("string"), F.lit("@x.io")),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    split = leakage_safe_split(corpus, train_pct=80)
-    train_ids = split.filter(F.col("split") == "train").select("doc_id")
-    decon_keep = decontaminate(corpus, split, n=8, min_common=3).filter(F.col("kept")).select("doc_id")
-    q = quality_scores(corpus).filter(F.col("passes_quality")).select("doc_id", "n_words")
-    clean = redact_pii(corpus).filter(~F.col("had_pii")).select("doc_id")
-    eligible = corpus.join(q, "doc_id").join(clean, "doc_id").join(train_ids, "doc_id")
-    resolved = exact_dedup_keep_best(eligible, F.col("n_words").cast("long"))
-    span_table = repeated_ngram_spans(corpus, n=8, min_df=2)
-    spans = span_table.groupBy("doc_id").agg(
-        F.sum(F.col("span_end") - F.col("span_start")).cast("long").alias("cov")
-    )
-    # the REWRITE step (r6): each survivor's word count after excising its
-    # repeated spans. The Spark side takes the actual splice output; the
-    # oracle recomputes it as n_words - coverage (merged spans are disjoint
-    # and in-bounds), cross-checking the splice arithmetic independently.
-    cleaned = remove_repeated_spans(corpus, spans=span_table).select(
-        "doc_id", F.col("n_kept_words").alias("n_words_clean")
-    )
-    return (
-        resolved.filter(F.col("kept"))
-        .join(q, "doc_id")
-        .join(spans, "doc_id", "left")
-        .join(cleaned, "doc_id")
-        .join(decon_keep, "doc_id")
-        .select(
-            "doc_id", "n_words", "group_size",
-            F.coalesce("cov", F.lit(0)).cast("long").alias("span_cov_words"),
-            "n_words_clean",
-        )
-    )
-
-
-def _sql_corpus_curate() -> str:
-    from .datapipe.textstats import PII_PATTERNS
-
-    email = PII_PATTERNS["email"]
-    return f"""
-WITH {SQL_DUP_CORPUS},
-planted AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 7 = 0
-              THEN text || ' reach me: u' || CAST(doc_id AS VARCHAR) || '@x.io'
-              ELSE text END AS text
-  FROM corpus
-),
-w AS (
-  SELECT doc_id, text,
-         regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM planted
-),
-m AS (
-  SELECT doc_id, text, len(words) AS n_words,
-         len(list_filter(words, x -> list_contains({{STOPS}}, x))) AS n_stop,
-         len(regexp_extract_all(text, '[^a-zA-Z0-9_\\s]')) AS n_punct,
-         len(regexp_extract_all(text, '{email}')) AS n_email
-  FROM w
-),
-spl AS (
-  SELECT doc_id,
-         CASE WHEN {_sql_java_u32('sha256(text)')} % 100 < 80
-              THEN 'train' ELSE 'test' END AS split
-  FROM planted
-),
-eligible AS (
-  SELECT m.doc_id, m.text, CAST(m.n_words AS INT) AS n_words
-  FROM m JOIN spl ON spl.doc_id = m.doc_id AND spl.split = 'train'
-  WHERE n_words >= 5 AND n_stop / n_words >= 0.01
-        AND n_punct / length(text) < 0.3 AND n_email = 0
-),
-ranked AS (
-  SELECT doc_id, n_words,
-         ROW_NUMBER() OVER (PARTITION BY text ORDER BY n_words DESC, doc_id ASC) AS rn,
-         COUNT(*) OVER (PARTITION BY text) AS group_size
-  FROM eligible
-),
-pg AS (
-  -- correlated-bound comprehension, no fixed position cap (ADVICE r5 #1)
-  SELECT doc_id, u.pos AS pos, u.gram AS gram FROM (
-    SELECT doc_id,
-           unnest([{{'pos': i, 'gram': array_to_string(words[i + 1 : i + 8], ' ')}}
-                   for i in range(0, len(words) - 8 + 1)]) AS u
-    FROM w WHERE len(words) >= 8
-  )
-),
-hot AS (SELECT gram FROM pg GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2),
-fl AS (SELECT doc_id, pos FROM pg JOIN hot USING (gram)),
-mm AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos >= COALESCE(MAX(pos + 8) OVER (
-                 PARTITION BY doc_id ORDER BY pos
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-              THEN 1 ELSE 0 END AS new_span
-  FROM fl
-),
-ss AS (
-  SELECT doc_id, span_id, MIN(pos) AS s, MAX(pos) + 8 AS e
-  FROM (SELECT *, CAST(SUM(new_span) OVER (
-          PARTITION BY doc_id ORDER BY pos
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS span_id
-        FROM mm)
-  GROUP BY doc_id, span_id
-),
-cov AS (SELECT doc_id, CAST(SUM(e - s) AS BIGINT) AS cov FROM ss GROUP BY doc_id),
--- decontamination (dedup.decontaminate, n=8 min_common=3): distinct
--- 8-gram shingles per doc (truncated shingle for docs under 8 words,
--- mirroring _word_shingles), counted against the eval side's shingle set
-dg AS (
-  SELECT doc_id, unnest(list_distinct([
-           array_to_string(list_slice(words, i + 1, i + 8), ' ')
-           for i in range(0, greatest(len(words) - 8, 0) + 1)
-         ])) AS gram
-  FROM w
-),
-tg AS (SELECT DISTINCT dg.gram FROM dg JOIN spl ON spl.doc_id = dg.doc_id AND spl.split = 'test'),
-contam AS (
-  SELECT dg.doc_id, COUNT(DISTINCT dg.gram) AS n_test_shingles
-  FROM dg JOIN tg USING (gram)
-  GROUP BY dg.doc_id
-)
--- n_words_clean: post-excision count via interval arithmetic (merged spans
--- are disjoint and in-bounds), independently checking the Spark splice
-SELECT r.doc_id, r.n_words, CAST(r.group_size AS BIGINT) AS group_size,
-       CAST(COALESCE(cov.cov, 0) AS BIGINT) AS span_cov_words,
-       CAST(r.n_words - COALESCE(cov.cov, 0) AS BIGINT) AS n_words_clean
-FROM ranked r LEFT JOIN cov USING (doc_id) LEFT JOIN contam USING (doc_id)
-WHERE r.rn = 1 AND COALESCE(contam.n_test_shingles, 0) < 3
-""".replace("{STOPS}", _sql_stoplist_all())
-
-
 def q_file_health(spark, sf_dir):
     """Per-dump-file health report (aggregates.file_health); the oracle
     recomputes the counts and gaps from the text CTEs."""
@@ -1988,530 +1813,6 @@ SELECT p.file, p.segment_type, p.n_lines, p.n_batches, p.n_corrupt,
        CAST(p.n_corrupt AS DOUBLE) / p.n_lines AS corrupt_rate,
        CAST(COALESCE(g.ng, 0) AS BIGINT) AS n_offset_gaps
 FROM per_file p LEFT JOIN g USING (file)
-"""
-
-
-def q_doc_keywords(spark, sf_dir):
-    """TF-IDF keyword extraction (textstats.doc_keywords): top-3 terms per
-    document; idf rounded once per term to integer micro-nats so ranking is
-    an exact-integer comparison — the same engine-replicable construction
-    as the LM scorer. The oracle rebuilds tf/df/idf/ranking from scratch."""
-    from .datapipe.textstats import doc_keywords
-
-    return doc_keywords(_docs(spark, sf_dir), k=3)
-
-
-SQL_DOC_KEYWORDS = """
-WITH words AS (
-  SELECT doc_id, w
-  FROM (SELECT doc_id,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM documents)
-  WHERE w <> ''
-),
-tf AS (
-  SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM words GROUP BY doc_id, w
-),
-nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM documents),
-idf AS (
-  SELECT w,
-         CAST(ROUND(LN(CAST(n_docs AS DOUBLE) / COUNT(DISTINCT doc_id)) * 1000000)
-              AS BIGINT) AS idf_micro
-  FROM tf, nd GROUP BY w, n_docs
-),
-scored AS (
-  SELECT tf.doc_id, tf.w, tf.tf, tf.tf * idf.idf_micro AS score_micro
-  FROM tf JOIN idf USING (w)
-),
-r AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                               ORDER BY score_micro DESC, w ASC) AS rank
-  FROM scored
-)
-SELECT doc_id, CAST(rank AS INT) AS rank, w AS keyword, tf,
-       CAST(score_micro AS DOUBLE) / 1000000.0 AS tfidf
-FROM r WHERE rank <= 3
-"""
-
-
-# SQL_CORPUS_CURATE is assigned after _sql_stoplist_all is defined below
-
-
-def q_text_token_counts(spark, sf_dir):
-    from .datapipe.textstats import token_counts
-
-    return token_counts(_docs(spark, sf_dir))
-
-
-SQL_TEXT_TOKEN_COUNTS = """
-SELECT doc_id,
-       CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS INT) AS n_ws_tokens,
-       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS INT) AS n_subword_tokens,
-       CAST(length(text) AS INT) AS n_chars
-FROM documents
-"""
-
-
-def q_text_quality(spark, sf_dir):
-    from .datapipe.textstats import quality_scores
-
-    return quality_scores(_docs(spark, sf_dir))
-
-
-def _sql_stoplist_all() -> str:
-    from .datapipe.textstats import STOPWORDS
-
-    words = sorted({w for ws in STOPWORDS.values() for w in ws})
-    return "[" + ", ".join(f"'{w}'" for w in words) + "]"
-
-
-SQL_TEXT_QUALITY = f"""
-WITH w AS (
-  SELECT doc_id, text, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM documents
-),
-m AS (
-  SELECT doc_id, text, len(words) AS n_words,
-         len(list_filter(words, x -> list_contains({{STOPS}}, x))) AS n_stop,
-         len(regexp_extract_all(text, '[^a-zA-Z0-9_\\s]')) AS n_punct,
-         length(regexp_replace(text, '\\s+', '', 'g')) AS n_nonspace
-  FROM w
-)
-SELECT doc_id, CAST(n_words AS INT) AS n_words,
-       ROUND(n_nonspace / n_words, 4) AS avg_word_len,
-       ROUND(n_stop / n_words, 4) AS stopword_ratio,
-       ROUND(n_punct / length(text), 4) AS punct_ratio,
-       (n_words >= 5 AND n_stop / n_words >= 0.01 AND n_punct / length(text) < 0.3) AS passes_quality
-FROM m
-""".replace("{STOPS}", _sql_stoplist_all())
-
-
-SQL_CORPUS_CURATE = _sql_corpus_curate()
-
-
-SQL_CORPUS_CLEAN = f"""
-WITH {SQL_DUP_CORPUS},
-w AS (
-  SELECT doc_id, text, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM corpus
-),
-m AS (
-  SELECT doc_id, text, len(words) AS n_words,
-         len(list_filter(words, x -> list_contains({{STOPS}}, x))) AS n_stop,
-         len(regexp_extract_all(text, '[^a-zA-Z0-9_\\s]')) AS n_punct
-  FROM w
-),
-passing AS (
-  SELECT doc_id, text, CAST(n_words AS INT) AS n_words
-  FROM m
-  WHERE n_words >= 5 AND n_stop / n_words >= 0.01 AND n_punct / length(text) < 0.3
-),
-ranked AS (
-  SELECT doc_id, n_words,
-         ROW_NUMBER() OVER (PARTITION BY text ORDER BY n_words DESC, doc_id ASC) AS rn,
-         COUNT(*) OVER (PARTITION BY text) AS group_size
-  FROM passing
-)
-SELECT doc_id, n_words, CAST(group_size AS BIGINT) AS group_size
-FROM ranked WHERE rn = 1
-""".replace("{STOPS}", _sql_stoplist_all())
-
-
-def q_wordlist_filter(spark, sf_dir):
-    """Blocked-wordlist filter (textstats.wordlist_filter — the
-    RefinedWeb/C4 badwords recipe): per-doc blocked-word counts and an
-    all-integer parts-per-million accept test (3% here), zero float
-    thresholds on either engine. Gate runs the plan-literal 'expr' path;
-    the broadcast-join scale path is pinned equal by pytest."""
-    from .datapipe.textstats import wordlist_filter
-
-    return wordlist_filter(_docs(spark, sf_dir), ["slow", "dup", "spam"],
-                           max_ppm=30_000)
-
-
-SQL_WORDLIST_FILTER = """
-WITH w AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                     x -> x <> '') AS ws
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(ws) AS BIGINT) AS n_words,
-       CAST(len(list_filter(ws, x -> list_contains(['dup', 'slow', 'spam'], x)))
-            AS BIGINT) AS n_blocked,
-       len(list_filter(ws, x -> list_contains(['dup', 'slow', 'spam'], x))) * 1000000
-         <= 30000 * len(ws) AS keep
-FROM w
-"""
-
-
-def q_text_lang_id(spark, sf_dir):
-    from .datapipe.textstats import lang_id
-
-    return lang_id(_docs(spark, sf_dir))
-
-
-def _sql_lang_id() -> str:
-    from .datapipe.textstats import STOPWORDS
-
-    langs = sorted(STOPWORDS)
-    score_cols = []
-    for lang in langs:
-        lst = "[" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + "]"
-        score_cols.append(
-            f"CAST(len(list_intersect(list_distinct(words), {lst})) AS INT) AS score_{lang}"
-        )
-    best = f"score_{langs[0]}"
-    lang_expr = f"'{langs[0]}'"
-    for lang in langs[1:]:
-        lang_expr = f"CASE WHEN score_{lang} > {best} THEN '{lang}' ELSE {lang_expr} END"
-        best = f"greatest(score_{lang}, {best})"
-    return f"""
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM documents
-),
-s AS (SELECT doc_id, {', '.join(score_cols)} FROM w)
-SELECT doc_id, {', '.join('score_' + lg for lg in langs)},
-       CASE WHEN {best} > 0 THEN {lang_expr} ELSE 'unknown' END AS lang_guess
-FROM s
-"""
-
-
-SQL_TEXT_LANG_ID = _sql_lang_id()
-
-
-def q_lang_id_eval(spark, sf_dir):
-    """Heuristic-vs-ground-truth confusion counts: the documents table
-    carries a `lang` label — every training-data pipeline evaluates its
-    language-ID stage against one."""
-    from .datapipe.textstats import lang_id
-
-    docs = _docs(spark, sf_dir)
-    pred = lang_id(docs).select("doc_id", "lang_guess")
-    truth = docs.select("doc_id", "lang")
-    return pred.join(truth, "doc_id").groupBy("lang", "lang_guess").agg(
-        F.count("*").alias("n_docs")
-    )
-
-
-SQL_LANG_ID_EVAL = f"""
-SELECT d.lang, p.lang_guess, COUNT(*) AS n_docs
-FROM ({_sql_lang_id()}) p JOIN documents d USING (doc_id)
-GROUP BY d.lang, p.lang_guess
-"""
-
-
-def q_lm_quality(spark, sf_dir):
-    """Unigram-LM (perplexity-style) quality scoring: the corpus trains its
-    own word->count LM, each doc scored by average negative log-likelihood
-    (textstats.unigram_lm_scores). Cross-engine determinism comes from the
-    per-WORD integer micro-nat rounding — documents integer-sum those, so
-    no float sum order can differ; the oracle recomputes the identical LM
-    and scoring from scratch in SQL."""
-    from .datapipe.textstats import unigram_lm_scores
-
-    return unigram_lm_scores(_docs(spark, sf_dir))
-
-
-SQL_LM_QUALITY = """
-WITH words AS (
-  SELECT doc_id, w
-  FROM (SELECT doc_id,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM documents)
-  WHERE w <> ''
-),
-lm AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM words GROUP BY w),
-tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total FROM lm),
-nll AS (
-  -- per-word micro-nats, rounded ONCE here exactly like the Spark side:
-  -- document sums below are integer and therefore order-independent
-  SELECT w,
-         CAST(ROUND(-LN(CAST(c AS DOUBLE) / n_total) * 1000000) AS BIGINT)
-           AS nll_micro
-  FROM lm, tot
-)
-SELECT words.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_words,
-       CAST(CAST(SUM(nll_micro) AS BIGINT) AS DOUBLE)
-         / (1000000.0 * COUNT(*)) AS avg_nll
-FROM words JOIN nll USING (w)
-GROUP BY words.doc_id
-"""
-
-
-def q_bigram_lm_score(spark, sf_dir):
-    """Interpolated bigram-LM quality scoring (textstats.bigram_lm_scores):
-    position >= 2 scores -ln(0.9*c(prev,w)/c(prev) + 0.1*c(w)/N), the first
-    word its unigram nll — one rung closer to the KenLM filters CCNet ships
-    than the unigram gate row. Same cross-engine determinism contract:
-    per-position integer micro-nat rounding (a pure function of LM counts),
-    integer doc sums, one exact double division at the end. The oracle
-    retrains both LM tables and rescores from scratch in SQL."""
-    from .datapipe.textstats import bigram_lm_scores
-
-    return bigram_lm_scores(_docs(spark, sf_dir))
-
-
-SQL_BIGRAM_LM_SCORE = """
-WITH d AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                     w -> w <> '') AS ws
-  FROM documents
-),
-pos AS (
-  SELECT doc_id, u.w AS w, u.p AS prev FROM (
-    SELECT doc_id,
-           unnest([{'w': ws[i],
-                    'p': CASE WHEN i > 1 THEN ws[i-1] END}
-                   for i in range(1, len(ws) + 1)]) AS u
-    FROM d WHERE len(ws) > 0)
-),
-uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM pos GROUP BY w),
-tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total FROM uni),
-uni_nll AS (
-  SELECT w,
-         CAST(ROUND(-LN(CAST(c AS DOUBLE) / n_total) * 1000000) AS BIGINT)
-           AS nll_micro
-  FROM uni, tot
-),
-bi AS (
-  SELECT prev, w, CAST(COUNT(*) AS BIGINT) AS cb
-  FROM pos WHERE prev IS NOT NULL GROUP BY prev, w
-),
-bi_nll AS (
-  SELECT bi.prev, bi.w,
-         CAST(ROUND(-LN(0.9 * CAST(bi.cb AS DOUBLE) / cl.c
-                        + 0.1 * CAST(cu.c AS DOUBLE) / tot.n_total)
-                    * 1000000) AS BIGINT) AS nll_micro
-  FROM bi
-  JOIN uni cl ON bi.prev = cl.w
-  JOIN uni cu ON bi.w = cu.w
-  CROSS JOIN tot
-),
-scored AS (
-  SELECT p.doc_id, u.nll_micro FROM pos p JOIN uni_nll u ON p.w = u.w
-  WHERE p.prev IS NULL
-  UNION ALL
-  SELECT p.doc_id, b.nll_micro
-  FROM pos p JOIN bi_nll b ON p.prev = b.prev AND p.w = b.w
-  WHERE p.prev IS NOT NULL
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_words,
-       CAST(CAST(SUM(nll_micro) AS BIGINT) AS DOUBLE)
-         / (1000000.0 * COUNT(*)) AS avg_nll
-FROM scored GROUP BY doc_id
-"""
-
-
-def q_doc_chunks(spark, sf_dir):
-    """Context-window chunking (textstats.chunk_documents): every document
-    split into word-boundary chunks of <= 40 words with an 8-word overlap
-    (stride 32) — the prep step that fits long documents into a model
-    context length. Pure per-row JVM expression, zero shuffle; the oracle
-    recomputes every chunk boundary and text from scratch with a
-    correlated-bound list comprehension (no fixed position cap)."""
-    from .datapipe.textstats import chunk_documents
-
-    return chunk_documents(_docs(spark, sf_dir), max_words=40, overlap=8)
-
-
-SQL_DOC_CHUNKS = """
-WITH d AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                     w -> w <> '') AS ws
-  FROM documents
-)
-SELECT doc_id, u.chunk_id, u.chunk_text, u.n_chunk_words FROM (
-  SELECT doc_id,
-         unnest([{
-             'chunk_id': CAST(k AS BIGINT),
-             'chunk_text': array_to_string(list_slice(ws, k*32 + 1, k*32 + 40), ' '),
-             'n_chunk_words': CAST(LEAST(len(ws) - k*32, 40) AS BIGINT)
-           } for k in range(0, (GREATEST(len(ws) - 8, 1) - 1) // 32 + 1)]) AS u
-  FROM d WHERE len(ws) > 0)
-"""
-
-
-def q_trained_quality_filter(spark, sf_dir):
-    """The CCNet/fastText-style trained corpus filter, end to end in one
-    query: heuristic labels (the gated Gopher-style ``passes_quality``
-    rules) train a logistic-regression generalization of themselves via
-    ``classifier.train_logreg`` (full-batch GD, one JVM aggregation per
-    iteration over a persisted feature projection), and the fitted model
-    scores EVERY document as a pure column expression — the filter a
-    100 TB curation run would apply. Output: per (source, kept) counts
-    plus model/heuristic agreement — the corpus-level acceptance report.
-
-    No ``oracle_sql`` on purpose: iterative GD is the driver contract's
-    canonical non-SQL-expressible case (rows-only driver check). The
-    strong verification lives in pytest: weights and the kept set must
-    match a sequential NumPy recomputation of the identical pipeline
-    (test_trained_quality_filter_end_to_end), and the trainer itself is
-    NumPy-parity + single-scan pinned."""
-    from .datapipe.classifier import score_expr, standardize, train_logreg
-    from .datapipe.textstats import quality_scores
-
-    docs = _docs(spark, sf_dir)
-    raw = quality_scores(docs).select(
-        "doc_id",
-        F.col("stopword_ratio").alias("f_stop"),
-        F.col("punct_ratio").alias("f_punct"),
-        (F.log1p(F.col("n_words")) / F.lit(10.0)).alias("f_len"),
-        F.col("passes_quality").cast("int").alias("label"),
-    )
-    feats, _stats = standardize(raw, ["f_stop", "f_punct", "f_len"])
-    fit = train_logreg(feats, ["f_stop", "f_punct", "f_len"], "label",
-                       iters=TRAINED_FILTER_GATE_ITERS, lr=TRAINED_FILTER_LR)
-    p = score_expr(fit["weights"], ["f_stop", "f_punct", "f_len"])
-    scored = feats.join(docs.select("doc_id", "source"), "doc_id").select(
-        "source", "label", (p >= 0.5).cast("int").alias("kept")
-    )
-    return scored.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("kept").cast("long").alias("n_kept"),
-        F.sum((F.col("kept") == F.col("label")).cast("int")).cast("long")
-         .alias("n_agree_heuristic"),
-    )
-
-
-# pinned so the pytest's sequential recomputation trains identically;
-# 100 iters @ lr=2.0 on z-scored features reaches 100% heuristic agreement
-# at sf0.001 with a 0.08 decision margin (measured 2026-08-17).
-# The GATE variant runs 20 iterations (VERDICT r6 next #6): each GD step is
-# one Spark aggregation job, so the gate row's cost is ~fixed-overhead ×
-# iters; 20 keeps the decision margins 3+ orders above fp noise
-# (min |p-0.5| = 2.4e-3 at sf0.001 / 3.3e-3 at sf0.01, 98-99% heuristic
-# agreement — measured 2026-08-17) while the 100-iter trajectory stays
-# pinned by the SCORED_FILTER_WEIGHTS pin-parity pytest.
-TRAINED_FILTER_ITERS = 100
-TRAINED_FILTER_GATE_ITERS = 20
-TRAINED_FILTER_LR = 2.0
-
-
-def q_pii_redaction(spark, sf_dir):
-    """Rule-based PII scrubbing (textstats.redact_pii) over documents with
-    DETERMINISTICALLY PLANTED PII (an email, an IP and an SSN-shaped
-    triple derived from doc_id appended to every text) so the gate
-    exercises real rewrites, not just no-ops; both engines plant and scrub
-    the identical strings, so clean_text must hash byte-for-byte."""
-    from .datapipe.textstats import redact_pii
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"), F.col("doc_id").cast("string"),
-            F.lit("@example.com at 10.0.0."),
-            (F.col("doc_id") % 200).cast("string"),
-            F.lit(" tel "),
-            (F.lit(200) + F.col("doc_id") % 700).cast("string"),
-            F.lit("-"),
-            F.lpad((F.col("doc_id") % 990 + 10).cast("string"), 3, "0"),
-            F.lit("-"),
-            F.lpad((F.col("doc_id") % 9000 + 1000).cast("string"), 4, "0"),
-            F.lit(" ref 123-45-"),
-            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-        ).alias("text"),
-    )
-    return redact_pii(docs)
-
-
-def _sql_pii_redaction() -> str:
-    from .datapipe.textstats import PII_ORDER, PII_PATTERNS
-
-    planted = ("""text || ' contact user' || CAST(doc_id AS VARCHAR)
-        || '@example.com at 10.0.0.' || CAST(doc_id % 200 AS VARCHAR)
-        || ' tel ' || CAST(200 + doc_id % 700 AS VARCHAR)
-        || '-' || lpad(CAST(doc_id % 990 + 10 AS VARCHAR), 3, '0')
-        || '-' || lpad(CAST(doc_id % 9000 + 1000 AS VARCHAR), 4, '0')
-        || ' ref 123-45-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')""")
-    red = "t"
-    for name in PII_ORDER:
-        red = (f"regexp_replace({red}, '{PII_PATTERNS[name]}', "
-               f"'<{name.upper()}>', 'g')")
-    counts = ", ".join(
-        f"CAST(len(regexp_extract_all(t, '{p}')) AS INT) AS n_{name}"
-        for name, p in PII_PATTERNS.items()
-    )
-    had = " + ".join(f"n_{name}" for name in PII_PATTERNS)
-    return f"""
-WITH planted AS (
-  SELECT doc_id, {planted} AS t FROM documents
-),
-c AS (SELECT doc_id, t, {counts} FROM planted)
-SELECT doc_id, {red} AS clean_text,
-       {", ".join("n_" + n for n in PII_PATTERNS)},
-       ({had}) > 0 AS had_pii
-FROM c
-"""
-
-
-SQL_PII_REDACTION = _sql_pii_redaction()
-
-
-def q_source_quality(spark, sf_dir):
-    """Per-source corpus report: which crawl sources yield usable text
-    (the groupBy every filtering pipeline runs before dropping a source).
-    Decimal sums make the averages summation-order-free."""
-    from .datapipe.textstats import quality_scores
-
-    docs = _docs(spark, sf_dir)
-    q = quality_scores(docs).join(docs.select("doc_id", "source"), "doc_id")
-    dec = lambda c: F.sum(F.col(c).cast("decimal(28,6)"))  # noqa: E731
-    return q.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.round((dec("n_words") / F.count("*")).cast("double"), 4).alias("avg_words"),
-        F.round((dec("stopword_ratio") / F.count("*")).cast("double"), 4).alias("avg_stopword_ratio"),
-        F.round((dec("punct_ratio") / F.count("*")).cast("double"), 4).alias("avg_punct_ratio"),
-        F.round(
-            (F.sum(F.when(F.col("passes_quality"), 1).otherwise(0)) / F.count("*")).cast("double"), 4
-        ).alias("pass_rate"),
-    )
-
-
-SQL_SOURCE_QUALITY = f"""
-WITH q AS ({SQL_TEXT_QUALITY})
-SELECT d.source, COUNT(*) AS n_docs,
-       ROUND(CAST(SUM(CAST(q.n_words AS DECIMAL(28,6))) / COUNT(*) AS DOUBLE), 4) AS avg_words,
-       ROUND(CAST(SUM(CAST(q.stopword_ratio AS DECIMAL(28,6))) / COUNT(*) AS DOUBLE), 4) AS avg_stopword_ratio,
-       ROUND(CAST(SUM(CAST(q.punct_ratio AS DECIMAL(28,6))) / COUNT(*) AS DOUBLE), 4) AS avg_punct_ratio,
-       ROUND(CAST(SUM(CASE WHEN q.passes_quality THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4) AS pass_rate
-FROM q JOIN documents d USING (doc_id)
-GROUP BY d.source
-"""
-
-
-def q_doc_fingerprint(spark, sf_dir):
-    from .datapipe.textstats import fingerprints
-
-    return fingerprints(_docs(spark, sf_dir))
-
-
-# Encoding-faithful oracle: the Spark side hashes UTF-16 code units
-# (javahash), so codepoints >= 0x10000 expand to surrogate pairs here;
-# string_split(text, '') iterates every character including newlines
-# (regexp '.' would drop them).
-SQL_DOC_FINGERPRINT = """
-WITH u AS (
-  SELECT doc_id,
-    flatten([CASE WHEN unicode(c) < 65536 THEN [unicode(c)::BIGINT]
-                  ELSE [55296 + ((unicode(c)::BIGINT - 65536) // 1024),
-                        56320 + ((unicode(c)::BIGINT - 65536) % 1024)] END
-             for c in list_filter(string_split(text, ''), x -> x <> '')]) AS units
-  FROM documents
-),
-h AS (
-  SELECT doc_id,
-    list_reduce(list_prepend(0::BIGINT, units), (acc, c) -> (acc * 31 + c) % 4294967296) AS h_u32
-  FROM u
-)
-SELECT doc_id,
-  CAST(CASE WHEN h_u32 >= 2147483648 THEN h_u32 - 4294967296 ELSE h_u32 END AS INT) AS fingerprint
-FROM h
 """
 
 
@@ -2638,40 +1939,6 @@ FROM spl s LEFT JOIN flagged f ON s.doc_id = f.train_doc
 WHERE s.split = 'train'
 """,
 )
-
-
-def q_doc_repetition(spark, sf_dir):
-    """Gopher-style intra-document repetition metrics (duplicate word /
-    2-gram fractions) — pure per-row JVM expressions, no shuffle."""
-    from .datapipe.textstats import repetition_scores
-
-    return repetition_scores(_docs(spark, sf_dir), n=2)
-
-
-SQL_DOC_REPETITION = """
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM documents
-),
-m AS (
-  SELECT doc_id,
-    len(words) AS n_words,
-    len(words) - len(list_distinct(words)) AS n_dup_words,
-    CASE WHEN len(words) >= 2 THEN len(words) - 1 ELSE 0 END AS n_grams,
-    [array_to_string(list_slice(words, i + 1, i + 2), ' ')
-     for i in range(0, greatest(len(words) - 2, 0) + 1)] AS grams
-  FROM w
-)
-SELECT doc_id,
-  CAST(n_words AS BIGINT) AS n_words,
-  CAST(n_dup_words AS BIGINT) AS n_dup_words,
-  CASE WHEN n_words > 0 THEN CAST(n_dup_words AS DOUBLE) / n_words ELSE 0.0 END AS dup_word_frac,
-  CAST(n_grams AS BIGINT) AS n_grams,
-  CAST(CASE WHEN n_grams > 0 THEN n_grams - len(list_distinct(grams)) ELSE 0 END AS BIGINT) AS n_dup_grams,
-  CASE WHEN n_grams > 0
-       THEN CAST(n_grams - len(list_distinct(grams)) AS DOUBLE) / n_grams
-       ELSE 0.0 END AS dup_gram_frac
-FROM m
-"""
 
 
 def q_group_offsets_read_committed(spark, sf_dir):
@@ -2856,119 +2123,6 @@ FROM c WHERE tag = 1
 """
 
 
-def q_source_curation_report(spark, sf_dir):
-    """Per-source curation dashboard over the round-5 scores: document
-    count, PII-document rate (PII planted on doc_id % 7 == 0 exactly as
-    the pii gate plants it, so the rate is non-trivial), and the mean
-    unigram-LM negative log-likelihood — the table that decides which
-    crawl sources live or die. Decimal sums keep the mean
-    summation-order-free (the source_quality trick); the rate is an exact
-    integer division."""
-    from .datapipe.textstats import redact_pii, unigram_lm_scores
-
-    raw = _docs(spark, sf_dir)
-    planted = raw.select(
-        "doc_id", "source",
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(F.col("text"), F.lit(" reach me: u"),
-                     F.col("doc_id").cast("string"), F.lit("@x.io")),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    pii = redact_pii(planted).select("doc_id", "had_pii")
-    lm = unigram_lm_scores(planted).select("doc_id", "avg_nll")
-    j = planted.select("doc_id", "source").join(pii, "doc_id").join(lm, "doc_id")
-    return j.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.col("had_pii").cast("int")).cast("long").alias("n_pii_docs"),
-        (F.sum(F.col("had_pii").cast("int")).cast("double") / F.count("*"))
-        .alias("pii_rate"),
-        F.round(
-            (F.sum(F.col("avg_nll").cast("decimal(28,6)")) / F.count("*"))
-            .cast("double"), 4
-        ).alias("mean_nll"),
-    )
-
-
-def _sql_source_curation_report() -> str:
-    from .datapipe.textstats import PII_PATTERNS
-
-    any_pii = " + ".join(
-        f"len(regexp_extract_all(text, '{p}'))" for p in PII_PATTERNS.values()
-    )
-    # the LM CTEs over the PLANTED text (same construction as SQL_LM_QUALITY)
-    return f"""
-WITH planted AS (
-  SELECT doc_id, source,
-         CASE WHEN doc_id % 7 = 0
-              THEN text || ' reach me: u' || CAST(doc_id AS VARCHAR) || '@x.io'
-              ELSE text END AS text
-  FROM documents
-),
-words AS (
-  SELECT doc_id, w
-  FROM (SELECT doc_id,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM planted)
-  WHERE w <> ''
-),
-lm AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM words GROUP BY w),
-tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total FROM lm),
-nll AS (
-  SELECT w,
-         CAST(ROUND(-LN(CAST(c AS DOUBLE) / n_total) * 1000000) AS BIGINT)
-           AS nll_micro
-  FROM lm, tot
-),
-doc_nll AS (
-  SELECT words.doc_id,
-         CAST(CAST(SUM(nll_micro) AS BIGINT) AS DOUBLE)
-           / (1000000.0 * COUNT(*)) AS avg_nll
-  FROM words JOIN nll USING (w)
-  GROUP BY words.doc_id
-),
-pii AS (
-  SELECT doc_id, ({any_pii}) > 0 AS had_pii
-  FROM planted
-)
-SELECT p.source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN pii.had_pii THEN 1 ELSE 0 END) AS BIGINT) AS n_pii_docs,
-       CAST(SUM(CASE WHEN pii.had_pii THEN 1 ELSE 0 END) AS DOUBLE)
-         / COUNT(*) AS pii_rate,
-       ROUND(CAST(SUM(CAST(d.avg_nll AS DECIMAL(28,6))) / COUNT(*) AS DOUBLE), 4)
-         AS mean_nll
-FROM planted p JOIN pii USING (doc_id) JOIN doc_nll d USING (doc_id)
-GROUP BY p.source
-"""
-
-
-SQL_SOURCE_CURATION_REPORT = _sql_source_curation_report()
-
-
-def q_perplexity_buckets(spark, sf_dir):
-    """CCNet-style perplexity bucketing (textstats.perplexity_buckets):
-    every document scored by the gated interpolated bigram LM, each source
-    split into 3 equal-count buckets by ascending avg_nll — 1 = head
-    (most LM-like), 3 = tail, the head/middle/tail split CCNet curates
-    with. Gate path is rank-based ntile with an (avg_nll, doc_id) total
-    order; the threshold (approx-percentile broadcast) path is the 100-TB
-    variant, pytest-verified."""
-    from .datapipe.textstats import perplexity_buckets
-
-    return perplexity_buckets(_docs(spark, sf_dir), n_buckets=3)
-
-
-SQL_PERPLEXITY_BUCKETS = f"""
-WITH scores AS ({SQL_BIGRAM_LM_SCORE})
-SELECT s.doc_id, d.source, s.n_words, s.avg_nll,
-       CAST(ntile(3) OVER (PARTITION BY d.source
-                           ORDER BY s.avg_nll ASC, s.doc_id ASC) AS INT)
-         AS ppl_bucket
-FROM scores s JOIN documents d USING (doc_id)
-"""
-
-
 def q_semdedup_first_n(spark, sf_dir):
     """SemDeDup on the engine-replicable first_n quantizer (the original
     r6 gate path, kept as the oracle-trivial variant): the
@@ -3093,186 +2247,12 @@ def _sql_semdedup_pinned_cent() -> str:
 SQL_SEMDEDUP = _sql_semdedup(_sql_semdedup_pinned_cent())
 
 
-# Fitted scored-filter model PINNED from a training run on the sf0.01
-# documents fixture (DuckDB-computed features -> classifier.numpy_reference,
-# 2026-08-17; iters/lr = TRAINED_FILTER_ITERS/TRAINED_FILTER_LR). Spark
-# query and DuckDB oracle embed the SAME literals — the production
-# "train once, apply everywhere" path. tests/test_datapipe.py asserts the
-# pin matches the live distributed trainer (standardize + train_logreg) to
-# 1e-6 and selects the identical kept set; min |margin| on the fixture is
-# 1.56e-3, three orders above the tolerance. punct_ratio is constant 0.0
-# at sf0.01, so standardize's zero-variance contract pins (0.0, 1.0) and
-# the trained weight is exactly 0.
-SCORED_FILTER_STATS = {
-    "f_stop": (0.029895400000000034, 0.025336553018119882),
-    "f_punct": (0.0, 1.0),
-    "f_len": (0.38833975999999965, 0.05493060193890474),
-}
-SCORED_FILTER_WEIGHTS = [4.1170419261988735, 5.386846812164516, 0.0,
-                         1.8356810606531175]
-
-
-def q_scored_quality_filter(spark, sf_dir):
-    """The APPLY side of the trained quality filter, hash-verified: the
-    pinned logreg model (bias + z-scored stopword/punct/length features)
-    scores every document as a pure JVM column expression; kept = margin
-    >= 0. f_len is pre-rounded to a 6-dp decimal grid so both engines
-    standardize bit-identical inputs — downstream arithmetic is the same
-    literal fold, making margin_micro deterministic-identical (the
-    train step itself stays NumPy/pytest-verified in
-    trained_quality_filter — cross-row float means are fp-order-dependent
-    and so not SQL-hashable; a FITTED model has no such step)."""
-    from .datapipe.textstats import quality_scores
-
-    q = quality_scores(_docs(spark, sf_dir))
-    feats = {
-        "f_stop": F.col("stopword_ratio"),
-        "f_punct": F.col("punct_ratio"),
-        "f_len": F.round(F.log1p(F.col("n_words")) / 10.0, 6),
-    }
-    margin = F.lit(SCORED_FILTER_WEIGHTS[0])
-    for w, (name, col) in zip(SCORED_FILTER_WEIGHTS[1:], feats.items()):
-        m, s = SCORED_FILTER_STATS[name]
-        margin = margin + F.lit(w) * ((col - F.lit(m)) / F.lit(s))
-    return q.select(
-        "doc_id",
-        (margin >= 0).alias("kept"),
-        F.round(margin * 1000000).cast("long").alias("margin_micro"),
-    )
-
-
-def _sql_scored_quality_filter() -> str:
-    (m1, s1) = SCORED_FILTER_STATS["f_stop"]
-    (m2, s2) = SCORED_FILTER_STATS["f_punct"]
-    (m3, s3) = SCORED_FILTER_STATS["f_len"]
-    w0, w1, w2, w3 = SCORED_FILTER_WEIGHTS
-    return f"""
-WITH q AS ({SQL_TEXT_QUALITY}),
-f AS (
-  SELECT doc_id, stopword_ratio, punct_ratio,
-         ROUND(ln(1 + n_words) / 10.0, 6) AS f_len
-  FROM q
-),
-s AS (
-  SELECT doc_id,
-         {w0!r} + {w1!r} * ((stopword_ratio - {m1!r}) / {s1!r})
-                + {w2!r} * ((punct_ratio - {m2!r}) / {s2!r})
-                + {w3!r} * ((f_len - {m3!r}) / {s3!r}) AS margin
-  FROM f
-)
-SELECT doc_id, margin >= 0 AS kept,
-       CAST(ROUND(margin * 1000000) AS BIGINT) AS margin_micro
-FROM s
-"""
-
-
-SQL_SCORED_QUALITY_FILTER = _sql_scored_quality_filter()
-
-CALIBRATION_THRESHOLDS = [-5_000_000, -2_000_000, -500_000, 0,
-                          500_000, 2_000_000, 5_000_000]
-
-
-def q_quality_calibration(spark, sf_dir):
-    """Operating-point calibration of the pinned quality filter
-    (classifier.calibration_sweep): confusion counts of margin >= t against
-    the Gopher-style heuristic labels at seven candidate thresholds — the
-    precision/recall trade-off table read before a full filtering run.
-    All-integer on the hash-verified micro-margin grid; one scan, one
-    bounded explode, one groupBy."""
-    from .datapipe.classifier import calibration_sweep
-    from .datapipe.textstats import quality_scores
-
-    scored = q_scored_quality_filter(spark, sf_dir)
-    labels = quality_scores(_docs(spark, sf_dir)).select(
-        "doc_id", F.col("passes_quality").cast("int").alias("label")
-    )
-    return calibration_sweep(scored.join(labels, "doc_id"),
-                             "margin_micro", "label", CALIBRATION_THRESHOLDS)
-
-
-SQL_QUALITY_CALIBRATION = f"""
-WITH s AS (SELECT * FROM ({SQL_SCORED_QUALITY_FILTER})),
-q AS ({SQL_TEXT_QUALITY}),
-j AS (
-  SELECT s.doc_id, s.margin_micro AS mm, CAST(q.passes_quality AS INT) AS y
-  FROM s JOIN q USING (doc_id)
-),
-e AS (
-  SELECT j.*, CAST(t.threshold_micro AS BIGINT) AS threshold_micro
-  FROM j CROSS JOIN (
-    SELECT unnest({CALIBRATION_THRESHOLDS}) AS threshold_micro) t
-)
-SELECT threshold_micro,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN mm >= threshold_micro THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       CAST(SUM(CASE WHEN mm >= threshold_micro AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-       CAST(SUM(CASE WHEN mm >= threshold_micro AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-       CAST(SUM(CASE WHEN mm < threshold_micro AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-       CAST(SUM(CASE WHEN mm < threshold_micro AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-FROM e GROUP BY threshold_micro
-"""
-
-
-def q_chunk_quality(spark, sf_dir):
-    """Chunk-granular quality filtering (textstats.chunk_quality_filter):
-    every 40-word/8-overlap context chunk scored with the pinned model,
-    per-doc decision on the WORST chunk — the FineWeb-style refinement
-    that catches one bad section inside a long document. The oracle
-    composes the gated chunk SQL with a from-scratch recomputation of the
-    chunk features and the pinned margin fold."""
-    from .datapipe.textstats import chunk_quality_filter
-
-    return chunk_quality_filter(_docs(spark, sf_dir), SCORED_FILTER_WEIGHTS,
-                                SCORED_FILTER_STATS, max_words=40, overlap=8)
-
-
-def _sql_chunk_quality() -> str:
-    (m1, s1) = SCORED_FILTER_STATS["f_stop"]
-    (m2, s2) = SCORED_FILTER_STATS["f_punct"]
-    (m3, s3) = SCORED_FILTER_STATS["f_len"]
-    w0, w1, w2, w3 = SCORED_FILTER_WEIGHTS
-    return f"""
-WITH chunks AS (SELECT * FROM ({SQL_DOC_CHUNKS})),
-feat AS (
-  SELECT doc_id, chunk_text,
-         regexp_split_to_array(lower(trim(chunk_text)), '\\s+') AS words
-  FROM chunks
-),
-sc AS (
-  SELECT doc_id,
-         ROUND(len(list_filter(words, x -> list_contains({{STOPS}}, x)))
-               / len(words), 4) AS f_stop,
-         ROUND(len(regexp_extract_all(chunk_text, '[^a-zA-Z0-9_\\s]'))
-               / length(chunk_text), 4) AS f_punct,
-         ROUND(ln(1 + len(words)) / 10.0, 6) AS f_len
-  FROM feat
-),
-mg AS (
-  SELECT doc_id,
-         CAST(ROUND(({w0!r} + {w1!r} * ((f_stop - {m1!r}) / {s1!r})
-                            + {w2!r} * ((f_punct - {m2!r}) / {s2!r})
-                            + {w3!r} * ((f_len - {m3!r}) / {s3!r}))
-                    * 1000000) AS BIGINT) AS mm
-  FROM sc
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks,
-       CAST(MIN(mm) AS BIGINT) AS min_margin_micro,
-       CAST(SUM(mm) AS BIGINT) AS sum_margin_micro,
-       MIN(mm) >= 0 AS keep
-FROM mg GROUP BY doc_id
-""".replace("{STOPS}", _sql_stoplist_all())
-
-
-SQL_CHUNK_QUALITY = _sql_chunk_quality()
-
-
 def q_minhash_recall_eval(spark, sf_dir):
     """Candidate-recall evaluation of the MinHash-LSH near-dup detector
-    against the exact n-gram-Jaccard ground truth — the near-dup family's
-    twin of ann_recall_eval: one row (n_exact_pairs, n_lsh_pairs,
-    n_common_pairs); recall = common/exact, precision = common/lsh, left
-    as exact integers. Composes two driver-gated pair queries; the oracle
-    nests both full SQLs and intersects."""
+    against the exact n-gram-Jaccard ground truth: one row (n_exact_pairs,
+    n_lsh_pairs, n_common_pairs); recall = common/exact, precision =
+    common/lsh, left as exact integers. Composes two driver-gated pair
+    queries; the oracle nests both full SQLs and intersects."""
     mh = q_dedup_minhash(spark, sf_dir).select("id1", "id2")
     ex = q_dedup_ngram_jaccard(spark, sf_dir).select("id1", "id2")
     full = ex.withColumn("_e", F.lit(1)).join(
@@ -3642,60 +2622,6 @@ GROUP BY doc_id
 SQL_NGRAM_NOVELTY_PACKED = _sql_ngram_novelty_packed()
 
 
-def q_corpus_drift(spark, sf_dir):
-    """Snapshot-to-snapshot distribution drift (textstats.corpus_drift):
-    top-20 words by |contribution to KL(new || old)| between the full
-    corpus and a snapshot missing every third document — the ingest
-    monitor for silent source-mix shifts. Per-word micro-nat rounding
-    before the cross-row ordering (the DSIR determinism pattern); the
-    oracle rebuilds both LMs, the smoothing constants and every
-    contribution from scratch."""
-    from .datapipe.textstats import corpus_drift
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return corpus_drift(docs, docs.filter(F.col("doc_id") % 3 != 0), top_k=20)
-
-
-SQL_CORPUS_DRIFT = """
-WITH ow AS (
-  SELECT unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                            x -> x <> '')) AS word
-  FROM documents
-),
-nw AS (
-  SELECT unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                            x -> x <> '')) AS word
-  FROM documents WHERE doc_id % 3 <> 0
-),
-oc AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS c_old FROM ow GROUP BY word),
-nc AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS c_new FROM nw GROUP BY word),
-j AS (
-  SELECT word,
-         CAST(coalesce(c_old, 0) AS BIGINT) AS c_old,
-         CAST(coalesce(c_new, 0) AS BIGINT) AS c_new
-  FROM oc FULL OUTER JOIN nc USING (word)
-),
-tot AS (
-  SELECT CAST(SUM(c_old) AS BIGINT) AS n_old,
-         CAST(SUM(c_new) AS BIGINT) AS n_new,
-         CAST(COUNT(*) AS BIGINT) AS v
-  FROM j
-),
-scored AS (
-  SELECT word, c_old, c_new,
-         CAST(ROUND(((c_new + 1) / CAST(n_new + v AS DOUBLE))
-                    * (ln((c_new + 1) / CAST(n_new + v AS DOUBLE))
-                       - ln((c_old + 1) / CAST(n_old + v AS DOUBLE)))
-                    * 1000000.0) AS BIGINT) AS contrib_micro_nats
-  FROM j CROSS JOIN tot
-)
-SELECT word, c_old, c_new, contrib_micro_nats
-FROM scored
-ORDER BY abs(contrib_micro_nats) DESC, word ASC
-LIMIT 20
-"""
-
-
 def q_soft_dedup_weights(spark, sf_dir):
     """SoftDeDup over the planted-duplicate corpus (dedup.soft_dedup_weights):
     every copy of a duplicated text carries weight 1/n_copies in integer
@@ -3714,115 +2640,3 @@ SELECT doc_id, n_copies,
        CAST(ROUND(1000000.0 / n_copies) AS BIGINT) AS weight_micro
 FROM d JOIN c USING (digest)
 """
-
-
-QUALITY_ENSEMBLE_BADWORDS = ["spam", "xxx", "clickbait"]
-
-
-def q_quality_ensemble(spark, sf_dir):
-    """FineWeb-Edu-style ensemble vote: three independent gated quality
-    signals — the pinned scored-filter margin, the Gopher-style heuristic
-    rules, and the badwords ppm screen — combined as an integer vote
-    (keep when >= 2 of 3 pass). Pure composition of driver-gated
-    operators; the oracle nests the scored-filter SQL and recomputes the
-    other two votes from scratch."""
-    from .datapipe.textstats import quality_scores, wordlist_filter
-
-    scored = q_scored_quality_filter(spark, sf_dir).select(
-        "doc_id", F.col("kept").cast("int").alias("v_model"))
-    heur = quality_scores(_docs(spark, sf_dir)).select(
-        "doc_id", F.col("passes_quality").cast("int").alias("v_heur"))
-    words = wordlist_filter(_docs(spark, sf_dir), QUALITY_ENSEMBLE_BADWORDS,
-                            max_ppm=10_000).select(
-        "doc_id", F.col("keep").cast("int").alias("v_words"))
-    j = scored.join(heur, "doc_id").join(words, "doc_id")
-    votes = (F.col("v_model") + F.col("v_heur") + F.col("v_words")).cast("long")
-    return j.select("doc_id", "v_model", "v_heur", "v_words",
-                    votes.alias("n_votes"), (votes >= 2).alias("keep"))
-
-
-def _sql_quality_ensemble() -> str:
-    blk = ", ".join(f"'{w}'" for w in sorted(QUALITY_ENSEMBLE_BADWORDS))
-    return f"""
-WITH s AS (SELECT doc_id, CAST(kept AS INT) AS v_model
-           FROM ({SQL_SCORED_QUALITY_FILTER})),
-q AS (SELECT doc_id, CAST(passes_quality AS INT) AS v_heur
-      FROM ({SQL_TEXT_QUALITY})),
-w AS (
-  SELECT doc_id,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x <> '')) AS n_words,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> list_contains([{blk}], x))) AS n_blocked
-  FROM documents
-),
-wv AS (
-  SELECT doc_id,
-         CASE WHEN n_blocked * 1000000 <= 10000 * n_words THEN 1 ELSE 0 END
-           AS v_words
-  FROM w
-)
-SELECT s.doc_id, s.v_model, q.v_heur, wv.v_words,
-       CAST(s.v_model + q.v_heur + wv.v_words AS BIGINT) AS n_votes,
-       s.v_model + q.v_heur + wv.v_words >= 2 AS keep
-FROM s JOIN q USING (doc_id) JOIN wv USING (doc_id)
-"""
-
-
-SQL_QUALITY_ENSEMBLE = _sql_quality_ensemble()
-
-
-def q_kneser_ney_score(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram scoring
-    (textstats.kneser_ney_doc_scores, d=0.75) — KenLM's smoothing family,
-    one rung above the count-interpolated bigram row. Per-position
-    micro-nat rounding, integer doc sums; the oracle rebuilds the bigram,
-    left/right-continuation and type-count tables from scratch and
-    replays the identical float expression."""
-    from .datapipe.textstats import kneser_ney_doc_scores
-
-    return kneser_ney_doc_scores(_docs(spark, sf_dir))
-
-
-SQL_KNESER_NEY_SCORE = """
-WITH w AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                     x -> x <> '') AS ws
-  FROM documents
-),
-w2 AS (SELECT doc_id, ws FROM w WHERE len(ws) >= 2),
-pr AS (
-  SELECT doc_id, t.prev AS prev, t.w AS w FROM (
-    SELECT doc_id,
-           unnest([{'prev': ws[i - 1], 'w': ws[i]}
-                   for i in range(2, len(ws) + 1)]) AS t
-    FROM w2)
-),
-c12 AS (SELECT prev, w, CAST(COUNT(*) AS BIGINT) AS c12 FROM pr GROUP BY 1, 2),
-c1 AS (
-  SELECT prev, CAST(SUM(c12) AS BIGINT) AS c1,
-         CAST(COUNT(*) AS BIGINT) AS r1
-  FROM c12 GROUP BY 1
-),
-lc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS l2 FROM c12 GROUP BY 1),
-bt AS (SELECT CAST(COUNT(*) AS BIGINT) AS b FROM c12),
-sp AS (
-  SELECT c12.prev, c12.w,
-         CAST(ROUND(-ln(greatest(CAST(c12 AS DOUBLE) - 0.75, 0.0)
-                          / CAST(c1 AS DOUBLE)
-                        + (0.75 * CAST(r1 AS DOUBLE) / CAST(c1 AS DOUBLE))
-                          * (CAST(l2 AS DOUBLE) / CAST(b AS DOUBLE)))
-                    * 1000000) AS BIGINT) AS nll_micro
-  FROM c12 JOIN c1 USING (prev) JOIN lc USING (w) CROSS JOIN bt
-)
-SELECT pr.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       CAST(SUM(sp.nll_micro) AS BIGINT) AS sum_nll_micro,
-       CAST(ROUND(CAST(SUM(sp.nll_micro) AS DOUBLE) / COUNT(*)) AS BIGINT)
-         AS avg_nll_micro
-FROM pr JOIN sp USING (prev, w)
-GROUP BY pr.doc_id
-"""
-
-

@@ -43,11 +43,6 @@ def java_string_hash_np(strings: pd.Series) -> np.ndarray:
     return h.astype(np.int32)
 
 
-@pandas_udf(IntegerType())
-def java_string_hash(s: pd.Series) -> pd.Series:
-    return pd.Series(java_string_hash_np(s), index=s.index)
-
-
 def java_hash_u32_expr(col):
     """Java ``String.hashCode`` as an UNSIGNED 32-bit pure-JVM expression
     (whole-stage codegen, no Python): fold ``(acc*31 + unit) mod 2^32`` over

@@ -280,52 +280,6 @@ def dedup_stream(docs: DataFrame, text_col: str = "text",
     )
 
 
-def scored_filter_stream(docs: DataFrame, weights: list[float],
-                         stats: dict[str, tuple[float, float]],
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
-    """Streaming twin of the pinned scored quality filter
-    (entry_queries.q_scored_quality_filter): apply a FITTED logreg model to
-    documents as they arrive. Stateless — the margin is a pure per-row
-    column fold over the same z-scored features as the batch query, so the
-    stream needs no aggregation state, no watermark, and emits in append
-    mode with exactly the batch decision for every row (pytest-asserted).
-    This is the shape a 100-TB ingest filter runs as: train offline, pin
-    the model, score the firehose."""
-    from .datapipe.textstats import quality_scores
-
-    q = quality_scores(docs, text_col=text_col, id_col=id_col)
-    feats = {
-        "f_stop": F.col("stopword_ratio"),
-        "f_punct": F.col("punct_ratio"),
-        "f_len": F.round(F.log1p(F.col("n_words")) / 10.0, 6),
-    }
-    margin = F.lit(float(weights[0]))
-    for w, (name, col) in zip(weights[1:], feats.items()):
-        m, s = stats[name]
-        margin = margin + F.lit(float(w)) * ((col - F.lit(float(m))) / F.lit(float(s)))
-    return q.select(
-        "doc_id",
-        (margin >= 0).alias("kept"),
-        F.round(margin * 1000000).cast("long").alias("margin_micro"),
-    )
-
-
-def wordlist_filter_stream(docs: DataFrame, blocklist: list[str],
-                           max_ppm: int = 100_000, text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
-    """Streaming twin of the blocked-wordlist filter
-    (textstats.wordlist_filter, 'expr' path): the blocklist probe and the
-    integer ppm accept test are pure per-row column expressions, so the
-    stream is stateless, needs no watermark, and emits in append mode with
-    exactly the batch decision for every row (pytest-asserted) — the
-    ingest-side badwords screen of a firehose pipeline."""
-    from .datapipe.textstats import wordlist_filter
-
-    return wordlist_filter(docs, blocklist, max_ppm=max_ppm,
-                           text_col=text_col, id_col=id_col, method="expr")
-
-
 def block_dedup_stream(docs: DataFrame, block_words: int = 16,
                        text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:

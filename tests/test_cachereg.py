@@ -20,11 +20,12 @@ def test_track_and_release(spark):
 
 
 def test_operators_register_their_caches(spark):
-    """minhash (persist_signatures), the unigram LM and the Kneser-Ney
-    bigram model all leave ZERO persisted blocks behind once
-    release_tracked runs — the long-lived-session leak the advice flagged."""
-    from klog_spark.datapipe.dedup import minhash_dedup
-    from klog_spark.datapipe.textstats import kneser_ney_doc_scores, unigram_lm_scores
+    """minhash (persist_signatures) and the contamination scan's shingle
+    table both leave ZERO persisted blocks behind once release_tracked
+    runs — the long-lived-session leak the advice flagged."""
+    from pyspark.sql import functions as F
+
+    from klog_spark.datapipe.dedup import contamination_report, minhash_dedup
 
     docs = spark.createDataFrame(
         [(i, f"some words {i} repeat words here", "web") for i in range(40)],
@@ -37,9 +38,10 @@ def test_operators_register_their_caches(spark):
     release_tracked(blocking=True)
     baseline = n_cached()  # session fixtures legitimately cache the parsed fixture
     minhash_dedup(docs, num_hashes=8, bands=4, shingle_n=2).count()
-    unigram_lm_scores(docs).count()
-    kneser_ney_doc_scores(docs).count()
-    assert len(_TRACKED) >= 3
+    split = docs.select("doc_id", F.when(F.col("doc_id") % 4 == 0, "test")
+                        .otherwise("train").alias("split"))
+    contamination_report(docs, split, n=2).count()
+    assert len(_TRACKED) >= 2
     assert n_cached() > baseline, "operators should have cached intermediates"
     release_tracked(blocking=True)
     assert _TRACKED == []

@@ -52,11 +52,9 @@ def test_validity_routing(parsed_df, oracle_parsed):
 # --- javahash (F5) -----------------------------------------------------------
 
 def _java_hash_ref(s: str) -> int:
+    utf16 = s.encode("utf-16-le")
     h = 0
-    for c in s.encode("utf-16-be"):
-        pass
-    h = 0
-    for unit in [int.from_bytes(s.encode("utf-16-le")[i:i + 2], "little") for i in range(0, 2 * len(s.encode("utf-16-le")) // 2, 2)]:
+    for unit in [int.from_bytes(utf16[i:i + 2], "little") for i in range(0, len(utf16), 2)]:
         h = (31 * h + unit) & 0xFFFFFFFF
     return h - 0x100000000 if h >= 0x80000000 else h
 
@@ -69,6 +67,9 @@ def _java_hash_ref(s: str) -> int:
         ("my-txn-1", None),          # checked against the formula
         ("transactional-id-xyz", None),
         ("é漢字", None),  # non-ASCII UTF-16 units
+        ("line one\nline two\nline three", None),
+        ("emoji 🎉 and CJK 漢字 mixed", None),  # surrogate pair
+        ("tab\tand\rcarriage", None),
     ],
 )
 def test_java_string_hash(s, expected):

@@ -1,14 +1,10 @@
-"""Training-data pipeline operators: dedup recall, ANN recall, text stats."""
+"""Training-data pipeline operators: dedup (exact, near-dup, semantic),
+Bloom screens, contamination, packing and novelty."""
 
 import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
 
 @pytest.fixture(scope="module")
@@ -71,17 +67,6 @@ def test_embedding_near_dups_planted(spark, emb):
     planted = {(r["vec_id"] - 100000, r["vec_id"]) for r in dup.collect()}
     got = {(r["id1"], r["id2"]) for r in rows}
     assert planted == got  # identical vectors, nothing else is close
-
-
-def test_textstats_shapes(docs):
-    from klog_spark.datapipe.textstats import lang_id, quality_scores, token_counts
-
-    n = docs.count()
-    assert token_counts(docs).count() == n
-    q = quality_scores(docs)
-    assert q.filter(F.col("stopword_ratio").isNull()).count() == 0
-    langs = lang_id(docs).groupBy("lang_guess").count().collect()
-    assert len(langs) >= 2  # fixture has multiple languages
 
 
 def test_ngram_max_df_cap_is_subquadratic_on_hot_shingle(spark):
@@ -314,24 +299,6 @@ def test_contamination_report_detects_cross_split_copy(spark):
     assert rows[2]["n_train_docs"] == 1
 
 
-def test_repetition_scores_exact(spark):
-    from klog_spark.datapipe.textstats import repetition_scores
-
-    docs = spark.createDataFrame(
-        [(1, "a a a b"), (2, "x"), (3, "p q r s")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in repetition_scores(docs, n=2).collect()}
-    r1 = got[1]  # words [a,a,a,b]: dup_words=2; grams [a a, a a, a b]: dup=1
-    assert (r1["n_words"], r1["n_dup_words"], r1["n_grams"], r1["n_dup_grams"]) == (4, 2, 3, 1)
-    assert r1["dup_word_frac"] == 2 / 4 and r1["dup_gram_frac"] == 1 / 3
-    r2 = got[2]  # single word: no grams
-    assert (r2["n_words"], r2["n_dup_words"], r2["n_grams"], r2["n_dup_grams"]) == (1, 0, 0, 0)
-    assert r2["dup_gram_frac"] == 0.0
-    r3 = got[3]
-    assert (r3["n_dup_words"], r3["n_dup_grams"]) == (0, 0)
-
-
 def test_asof_join_matches_pandas_merge_asof(spark):
     """The generic as-of join must agree with pandas.merge_asof (the
     reference implementation) on random inputs, including the <=-tie case
@@ -368,73 +335,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
             for r in merged.itertuples()
         }
         assert got == want
-
-
-def test_unigram_lm_scores_python_parity(spark):
-    """LM scoring matches a sequential Python replication exactly (the
-    per-word micro-nat rounding makes doc sums order-independent), under
-    any partitioning; empty docs are omitted."""
-    import math
-    from collections import Counter
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from klog_spark.datapipe.textstats import unigram_lm_scores
-
-    docs = [
-        (1, "the cat sat on the mat"),
-        (2, "the the the the"),
-        (3, "zqx glorb wibble"),
-        (4, "   "),                     # no words -> omitted
-        (5, "The CAT sat"),             # lowercased -> shares counts
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r["doc_id"]: (r["n_words"], r["avg_nll"])
-           for r in unigram_lm_scores(df).collect()}
-
-    words = {i: [w for w in t.lower().strip().split() if w] for i, t in docs}
-    lm = Counter(w for ws in words.values() for w in ws)
-    n_total = sum(lm.values())
-    nll_micro = {
-        w: int(Decimal(-math.log(c / n_total) * 1e6).quantize(0, ROUND_HALF_UP))
-        for w, c in lm.items()
-    }
-    want = {
-        i: (len(ws), sum(nll_micro[w] for w in ws) / (1e6 * len(ws)))
-        for i, ws in words.items() if ws
-    }
-    assert got == want
-    assert 4 not in got
-    # gibberish scores strictly worse than stopword-heavy text
-    assert got[3][1] > got[2][1]
-    got2 = {r["doc_id"]: (r["n_words"], r["avg_nll"])
-            for r in unigram_lm_scores(df.repartition(7)).collect()}
-    assert got2 == got
-
-
-def test_pii_redaction_rules(spark):
-    """Planted PII of every class is scrubbed, counts are per-class exact,
-    clean text is byte-stable, and PII-free text passes through untouched."""
-    from klog_spark.datapipe.textstats import redact_pii
-
-    rows = [
-        (1, "mail me at jane.doe+x@corp.example.org today"),
-        (2, "server 192.168.0.17 then 10.0.0.1 again"),
-        (3, "call +1 (555) 123-4567 or 555 987 6543"),
-        (4, "ssn 123-45-6789 end"),
-        (5, "perfectly clean text with numbers 12345 and dots.."),
-        (6, "combo a@b.co 10.1.2.3 123-45-6789"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in redact_pii(df).collect()}
-    assert out[1]["clean_text"] == "mail me at <EMAIL> today"
-    assert out[1]["n_email"] == 1 and out[1]["had_pii"]
-    assert out[2]["clean_text"] == "server <IPV4> then <IPV4> again"
-    assert out[2]["n_ipv4"] == 2
-    assert out[3]["n_phone"] == 2 and "<PHONE>" in out[3]["clean_text"]
-    assert out[4]["clean_text"] == "ssn <SSN_LIKE> end"
-    assert out[5]["clean_text"] == rows[4][1] and not out[5]["had_pii"]
-    assert out[6]["clean_text"] == "combo <EMAIL> <IPV4> <SSN_LIKE>"
-    assert (out[6]["n_email"], out[6]["n_ipv4"], out[6]["n_ssn_like"]) == (1, 1, 1)
 
 
 def test_repeated_ngram_spans(spark):
@@ -557,320 +457,6 @@ def test_remove_repeated_spans(spark):
     assert via_table == out
 
 
-def test_logreg_trainer_matches_numpy(spark):
-    """Distributed full-batch GD vs the sequential NumPy oracle: same
-    weights and loss trajectory to 1e-6 (only float-summation order can
-    differ), >95% accuracy on separable blobs, partition-invariant, and
-    the fitted model usable as a pure filter expression."""
-    import numpy as np
-
-    from klog_spark.datapipe.classifier import (
-        numpy_reference, score_expr, train_logreg,
-    )
-
-    rng = np.random.default_rng(7)
-    n = 400
-    X0 = rng.normal((-1.0, -0.5), 0.6, size=(n // 2, 2))
-    X1 = rng.normal((1.0, 0.8), 0.6, size=(n // 2, 2))
-    X = np.vstack([X0, X1])
-    y = np.array([0] * (n // 2) + [1] * (n // 2))
-    rows = [(float(a), float(b), int(t)) for (a, b), t in zip(X, y)]
-    df = spark.createDataFrame(rows, "f1 double, f2 double, label int")
-
-    fit = train_logreg(df, ["f1", "f2"], "label", iters=60, lr=1.0, reg=1e-3)
-    w_ref, loss_ref = numpy_reference(X, y, iters=60, lr=1.0, reg=1e-3)
-    assert np.allclose(fit["weights"], w_ref, atol=1e-6)
-    assert np.allclose(fit["losses"], loss_ref, atol=1e-6)
-    assert fit["losses"][-1] < fit["losses"][0]  # it actually trained
-
-    scored = df.withColumn("p", score_expr(fit["weights"], ["f1", "f2"]))
-    acc = scored.filter(
-        ((F.col("p") > 0.5) & (F.col("label") == 1))
-        | ((F.col("p") <= 0.5) & (F.col("label") == 0))
-    ).count() / n
-    assert acc > 0.95
-
-    fit2 = train_logreg(df.repartition(9), ["f1", "f2"], "label",
-                        iters=60, lr=1.0, reg=1e-3)
-    assert np.allclose(fit2["weights"], fit["weights"], atol=1e-6)
-
-
-def test_trained_quality_filter_end_to_end(spark):
-    """The shipped trained-filter query (heuristic labels -> train_logreg
-    -> score_expr filter -> acceptance report) against a sequential NumPy
-    recomputation of the identical pipeline: same weights to 1e-6, same
-    kept decisions doc-for-doc, same per-source report. Features come from
-    the independently gated quality_scores operator; this pins everything
-    downstream of them."""
-    import numpy as np
-
-    from klog_spark import entry_queries as eq
-    from klog_spark.datapipe.classifier import numpy_reference
-    from klog_spark.datapipe.textstats import quality_scores
-
-    out = {r["source"]: (r["n_docs"], r["n_kept"], r["n_agree_heuristic"])
-           for r in eq.q_trained_quality_filter(spark, SF_DIR).collect()}
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    feats = quality_scores(docs).join(docs.select("doc_id", "source"), "doc_id")
-    rows = feats.select("doc_id", "source", "stopword_ratio", "punct_ratio",
-                        "n_words", "passes_quality").collect()
-    X = np.asarray(
-        [(r["stopword_ratio"], r["punct_ratio"], np.log1p(r["n_words"]) / 10.0)
-         for r in rows])
-    y = [int(r["passes_quality"]) for r in rows]
-    # the query z-scores via classifier.standardize (population std,
-    # zero-variance divisor pinned to 1.0) — replicate exactly
-    sd = X.std(0)
-    X = (X - X.mean(0)) / np.where(sd > 0.0, sd, 1.0)
-    w, _ = numpy_reference(X, y, iters=eq.TRAINED_FILTER_GATE_ITERS,
-                           lr=eq.TRAINED_FILTER_LR)
-    Xb = np.hstack([np.ones((len(X), 1)), np.asarray(X)])
-    p = 1.0 / (1.0 + np.exp(-(Xb @ np.asarray(w))))
-    # no doc may sit so close to the threshold that float-sum order could
-    # flip its decision between the two implementations
-    assert np.min(np.abs(p - 0.5)) > 1e-9
-    want: dict = {}
-    for r, pi in zip(rows, p):
-        n, k, a = want.get(r["source"], (0, 0, 0))
-        kept = int(pi >= 0.5)
-        want[r["source"]] = (n + 1, k + kept,
-                             a + int(kept == int(r["passes_quality"])))
-    assert out == want
-    # the trained model must actually generalize the heuristic it mimics
-    agree = sum(a for _, _, a in out.values()) / sum(n for n, _, _ in out.values())
-    assert agree > 0.9, agree
-
-
-def test_logreg_trainer_scans_input_once(spark):
-    """The GD loop must NOT re-execute upstream lineage per iteration:
-    train_logreg persists its (label, features) projection, so an
-    accumulator-counted mapInArrow feeding it fires once (the cache
-    materialization), not once per iteration (VERDICT r5 #1)."""
-    from klog_spark.datapipe.classifier import train_logreg
-
-    acc = spark.sparkContext.accumulator(0)
-
-    def counted(it):
-        for batch in it:
-            acc.add(batch.num_rows)
-            yield batch
-
-    base = spark.range(200).selectExpr(
-        "cast(id % 7 as double) as f1",
-        "cast(id % 2 as int) as label",
-    ).repartition(4)
-    df = base.mapInArrow(counted, "f1 double, label int")
-    train_logreg(df, ["f1"], "label", iters=10, lr=0.5)
-    # one full pass = 200 rows; without the persist this would be
-    # (iters + 1) * 200. Allow a single speculative/retry re-read but
-    # nothing iteration-proportional.
-    assert acc.value <= 400, acc.value
-
-
-def test_compression_ratio_scores(spark):
-    """Ratio parity with direct zlib, and the signal's defining ordering:
-    repetitive text compresses far better than high-entropy text."""
-    import zlib
-
-    from klog_spark.datapipe.textstats import compression_ratio_scores
-
-    import random
-
-    rng = random.Random("zratio")
-    noisy = " ".join("".join(rng.choice("abcdefghijklmnopqrstuvwxyz0123456789")
-                             for _ in range(8)) for _ in range(60))
-    rows = [
-        (1, "spam spam spam " * 40),
-        (2, noisy),
-        (3, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in compression_ratio_scores(df).collect()}
-    for i, t in rows:
-        raw = t.encode()
-        if raw:
-            assert out[i]["compressed_bytes"] == len(zlib.compress(raw, 6))
-            assert out[i]["raw_bytes"] == len(raw)
-    assert out[1]["compression_ratio"] < 0.1          # templated: tiny
-    assert out[2]["compression_ratio"] > 0.5          # high entropy: poor
-    assert out[3]["compression_ratio"] is None        # empty doc: undefined
-
-
-def test_doc_keywords_python_parity(spark):
-    """TF-IDF keywords match a sequential Python replication exactly
-    (micro-int idf makes ranks integer-comparable), invariant under
-    repartitioning, with ties broken (score DESC, word ASC)."""
-    import math
-    from collections import Counter
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from klog_spark.datapipe.textstats import doc_keywords
-
-    docs = [
-        (1, "apple banana apple cherry"),
-        (2, "banana banana durian"),
-        (3, "cherry cherry cherry apple"),
-        (4, "unique singular special terms"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {(r["doc_id"], r["rank"]): (r["keyword"], r["tf"], r["tfidf"])
-           for r in doc_keywords(df, k=3).collect()}
-
-    words = {i: [w for w in t.lower().split() if w] for i, t in docs}
-    n_docs = len(docs)
-    dfreq = Counter()
-    for ws in words.values():
-        for w in set(ws):
-            dfreq[w] += 1
-    idf_micro = {
-        w: int(Decimal(math.log(n_docs / c) * 1e6).quantize(0, ROUND_HALF_UP))
-        for w, c in dfreq.items()
-    }
-    want = {}
-    for i, ws in words.items():
-        tfs = Counter(ws)
-        ranked = sorted(tfs.items(), key=lambda kv: (-kv[1] * idf_micro[kv[0]], kv[0]))
-        for rank, (w, tf) in enumerate(ranked[:3], start=1):
-            want[(i, rank)] = (w, tf, tf * idf_micro[w] / 1e6)
-    assert got == want
-    got2 = {(r["doc_id"], r["rank"]): (r["keyword"], r["tf"], r["tfidf"])
-            for r in doc_keywords(df.repartition(5), k=3).collect()}
-    assert got2 == got
-
-
-def test_bigram_lm_scores_python_parity(spark):
-    """Interpolated bigram-LM scoring matches a sequential Python
-    replication exactly (per-position micro-nat rounding -> integer doc
-    sums), under any partitioning; a doc repeating a strong bigram scores
-    better than the same words shuffled into unseen bigrams."""
-    import math
-    from collections import Counter
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from klog_spark.datapipe.textstats import bigram_lm_scores
-
-    docs = [
-        (1, "the cat sat on the mat"),
-        (2, "the cat the cat the cat"),
-        (3, "cat the mat on sat the"),
-        (4, "   "),                     # no words -> omitted
-        (5, "The CAT sat"),             # lowercased -> shares counts
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r["doc_id"]: (r["n_words"], r["avg_nll"])
-           for r in bigram_lm_scores(df).collect()}
-
-    words = {i: [w for w in t.lower().strip().split() if w] for i, t in docs}
-    uni = Counter(w for ws in words.values() for w in ws)
-    bi = Counter(p for ws in words.values() for p in zip(ws, ws[1:]))
-    n_total = sum(uni.values())
-
-    def micro(x: float) -> int:
-        return int(Decimal(x * 1e6).quantize(0, ROUND_HALF_UP))
-
-    want = {}
-    for i, ws in words.items():
-        if not ws:
-            continue
-        s = micro(-math.log(uni[ws[0]] / n_total))
-        for prev, w in zip(ws, ws[1:]):
-            p = 0.9 * bi[(prev, w)] / uni[prev] + 0.1 * uni[w] / n_total
-            s += micro(-math.log(p))
-        want[i] = (len(ws), s / (1e6 * len(ws)))
-    assert got == want
-    assert 4 not in got
-    # repeated strong bigrams beat the same-ish unigrams in novel orders
-    assert got[2][1] < got[3][1]
-    got2 = {r["doc_id"]: (r["n_words"], r["avg_nll"])
-            for r in bigram_lm_scores(df.repartition(7)).collect()}
-    assert got2 == got
-
-
-def test_chunk_documents_coverage_and_overlap(spark):
-    """Chunking invariants: every word index covered, consecutive chunks
-    share exactly `overlap` words, stride-step reconstruction returns the
-    original word sequence, short/empty docs behave (single chunk / omitted),
-    and bad params fail loudly."""
-    import pytest as _pytest
-
-    from klog_spark.datapipe.textstats import chunk_documents
-
-    docs = [
-        (1, " ".join(f"w{i}" for i in range(23))),   # 23 words
-        (2, "alpha beta gamma"),                      # < max_words -> 1 chunk
-        (3, "  "),                                    # no words -> omitted
-        (4, " ".join(f"x{i}" for i in range(10))),   # exactly max_words
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    max_words, overlap = 10, 3
-    stride = max_words - overlap
-    rows = chunk_documents(df, max_words=max_words, overlap=overlap).collect()
-    by_doc: dict[int, list] = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert 3 not in by_doc
-    assert [r["chunk_id"] for r in sorted(by_doc[2], key=lambda r: r["chunk_id"])] == [0]
-    assert by_doc[2][0]["chunk_text"] == "alpha beta gamma"
-    assert len(by_doc[4]) == 1 and by_doc[4][0]["n_chunk_words"] == max_words
-
-    words = [w for w in docs[0][1].split()]
-    chunks = sorted(by_doc[1], key=lambda r: r["chunk_id"])
-    # expected chunk count: ceil(max(n - overlap, 1) / stride) — only
-    # chunks that add at least one new word are emitted
-    assert len(chunks) == (max(len(words) - overlap, 1) - 1) // stride + 1
-    for k, r in enumerate(chunks):
-        cw = r["chunk_text"].split()
-        assert cw == words[k * stride: k * stride + max_words]
-        assert r["n_chunk_words"] == len(cw)
-        if k > 0:
-            prev = chunks[k - 1]["chunk_text"].split()
-            if len(prev) == max_words:
-                assert prev[-overlap:] == cw[:overlap]   # exact overlap
-    # stride-step reconstruction: drop each chunk's first `overlap` words
-    # (they repeat the previous chunk) except the first chunk
-    recon = chunks[0]["chunk_text"].split()
-    for r in chunks[1:]:
-        recon.extend(r["chunk_text"].split()[overlap:])
-    assert recon == words
-
-    with _pytest.raises(ValueError):
-        chunk_documents(df, max_words=5, overlap=5)
-
-
-def test_perplexity_buckets_paths(spark):
-    """The rank (gate) path balances bucket sizes per source; the threshold
-    (100-TB) path assigns every scored doc a value-monotone bucket in
-    1..k from the approx-percentile cutoffs."""
-    from klog_spark.datapipe.textstats import (
-        perplexity_bucket_thresholds, perplexity_buckets,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    exact = perplexity_buckets(docs, n_buckets=3).collect()
-    sizes: dict[tuple, int] = {}
-    for r in exact:
-        assert 1 <= r["ppl_bucket"] <= 3
-        sizes[(r["source"], r["ppl_bucket"])] = sizes.get((r["source"], r["ppl_bucket"]), 0) + 1
-    for src in {s for s, _ in sizes}:
-        per = [sizes.get((src, b), 0) for b in (1, 2, 3)]
-        assert max(per) - min(per) <= 1                  # ntile equal-count
-
-    cuts = perplexity_bucket_thresholds(docs, n_buckets=3)
-    assert set(cuts) == {r["source"] for r in exact}
-    assert all(len(c) == 2 and c[0] <= c[1] for c in cuts.values())
-    thr = perplexity_buckets(docs, n_buckets=3, thresholds=cuts).collect()
-    assert len(thr) == len(exact)
-    by_src: dict[str, list] = {}
-    for r in thr:
-        assert 1 <= r["ppl_bucket"] <= 3
-        by_src.setdefault(r["source"], []).append(r)
-    for rs in by_src.values():
-        rs.sort(key=lambda r: (r["avg_nll"], r["doc_id"]))
-        buckets = [r["ppl_bucket"] for r in rs]
-        assert buckets == sorted(buckets)                # value-monotone
-
-
 def test_semdedup_embedding_clusters(spark):
     """SemDeDup keep/drop semantics on a hand-built corpus: exact-duplicate
     sets co-locate in one cell and keep exactly their lowest id (dup_of
@@ -891,86 +477,6 @@ def test_semdedup_embedding_clusters(spark):
     assert out[20] == (1, False)
     assert out[30] == (None, True)
     assert len(out) == 7
-
-
-from hypothesis import HealthCheck, given, settings  # noqa: E402
-from hypothesis import strategies as st  # noqa: E402
-
-
-@settings(max_examples=12, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(
-    lens=st.lists(st.integers(min_value=0, max_value=120), min_size=1, max_size=8),
-    max_words=st.integers(min_value=2, max_value=40),
-    overlap_frac=st.floats(min_value=0.0, max_value=0.99),
-)
-def test_chunk_documents_property(spark, lens, max_words, overlap_frac):
-    """Property: for ANY (doc lengths, max_words, overlap), stride-step
-    reconstruction (first chunk + each later chunk minus its overlap
-    prefix) returns every document's exact word sequence, no chunk exceeds
-    max_words, chunk ids are dense from 0, and zero-word docs are absent."""
-    from klog_spark.datapipe.textstats import chunk_documents
-
-    overlap = min(int(overlap_frac * max_words), max_words - 1)
-    docs = [(i, " ".join(f"w{i}x{j}" for j in range(n))) for i, n in enumerate(lens)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    rows = chunk_documents(df, max_words=max_words, overlap=overlap).collect()
-    by_doc: dict[int, list] = {}
-    for r in rows:
-        assert r["n_chunk_words"] <= max_words
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for i, n in enumerate(lens):
-        if n == 0:
-            assert i not in by_doc
-            continue
-        chunks = sorted(by_doc[i], key=lambda r: r["chunk_id"])
-        assert [c["chunk_id"] for c in chunks] == list(range(len(chunks)))
-        recon = chunks[0]["chunk_text"].split()
-        for c in chunks[1:]:
-            recon.extend(c["chunk_text"].split()[overlap:])
-        assert recon == docs[i][1].split()
-
-
-def test_scored_quality_filter_pin_matches_trainer(spark):
-    """The pinned applied-model gate row IS the live distributed trainer's
-    output: standardize + train_logreg on the same 6-dp-rounded features at
-    sf0.01 reproduce the pinned stats and weights to 1e-6 and select the
-    IDENTICAL kept set (min |margin| on the fixture is 1.56e-3 — three
-    orders above the tolerance, so the set can't flip)."""
-    from klog_spark import entry_queries as eq
-    from klog_spark.datapipe.classifier import standardize, train_logreg
-    from klog_spark.datapipe.textstats import quality_scores
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    raw = quality_scores(docs).select(
-        "doc_id",
-        F.col("stopword_ratio").alias("f_stop"),
-        F.col("punct_ratio").alias("f_punct"),
-        F.round(F.log1p(F.col("n_words")) / 10.0, 6).alias("f_len"),
-        F.col("passes_quality").cast("int").alias("label"),
-    )
-    cols = ["f_stop", "f_punct", "f_len"]
-    feats, stats = standardize(raw, cols)
-    for c in cols:
-        pm, ps = eq.SCORED_FILTER_STATS[c]
-        assert abs(stats[c][0] - pm) < 1e-9 and abs(stats[c][1] - ps) < 1e-9
-    fit = train_logreg(feats, cols, "label",
-                       iters=eq.TRAINED_FILTER_ITERS, lr=eq.TRAINED_FILTER_LR)
-    for got, pin in zip(fit["weights"], eq.SCORED_FILTER_WEIGHTS):
-        assert abs(got - pin) < 1e-6
-
-    gate = {r["doc_id"]: (r["kept"], r["margin_micro"])
-            for r in eq.q_scored_quality_filter(spark, "/root/testdata/sf0.01").collect()}
-    # live-weight margins over the standardized features select the same set
-    live_margin = sum(
-        (F.lit(w) * F.col(c) for w, c in zip(fit["weights"][1:], cols)),
-        F.lit(float(fit["weights"][0])),
-    )
-    live = {r["doc_id"]: r["k"]
-            for r in feats.select("doc_id", (live_margin >= 0).alias("k")).collect()}
-    assert len(gate) == len(live) == 500
-    assert all(gate[d][0] == live[d] for d in gate)
-    assert min(abs(m) for _, m in gate.values()) > 1000  # >= 1e-3 margin floor
 
 
 def test_semdedup_kmeans_path_drops_exact_dups(spark):
@@ -1284,27 +790,6 @@ def test_decontaminate_drops_planted_contamination(spark):
     assert rescan == []
 
 
-def test_perplexity_buckets_unknown_source(spark):
-    """ADVICE r6: a source missing from the thresholds dict fails loud by
-    default (never a silent NULL bucket); on_unknown_source='tail' maps it
-    to the worst bucket."""
-    from klog_spark.datapipe.textstats import (
-        perplexity_bucket_thresholds, perplexity_buckets,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    cuts = perplexity_bucket_thresholds(docs, n_buckets=3)
-    known = sorted(cuts)
-    partial = {s: cuts[s] for s in known[:-1]}
-    missing = known[-1]
-    with pytest.raises(ValueError, match=missing):
-        perplexity_buckets(docs, n_buckets=3, thresholds=partial)
-    rows = perplexity_buckets(docs, n_buckets=3, thresholds=partial,
-                              on_unknown_source="tail").collect()
-    assert all(r["ppl_bucket"] == 3 for r in rows if r["source"] == missing)
-    assert all(1 <= r["ppl_bucket"] <= 3 for r in rows)
-
-
 def test_remove_repeated_spans_empty_doc_counts_zero(spark):
     """ADVICE r6: an empty/whitespace-only document reports n_kept_words=0
     (the '' split artifact is filtered), matching the sibling word-count
@@ -1420,93 +905,6 @@ def test_dedup_paragraph_blocks(spark):
     assert hashed == out
 
 
-def test_wordlist_filter_paths_and_semantics(spark):
-    """expr and broadcast-join paths agree exactly; counts are occurrence
-    counts (not distinct); empty docs keep; the ppm accept test is
-    all-integer."""
-    from klog_spark.datapipe.textstats import wordlist_filter
-
-    rows = [
-        (1, "bad bad bad good good good good good good good"),  # 3/10 blocked
-        (2, "clean words only here"),
-        (3, "bad"),                                             # 1/1 blocked
-        (4, "   "),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: (r["n_words"], r["n_blocked"], r["keep"])
-           for r in wordlist_filter(df, ["bad", "worse"], max_ppm=300_000).collect()}
-    assert out == {1: (10, 3, True), 2: (4, 0, True), 3: (1, 1, False), 4: (0, 0, True)}
-    # threshold is inclusive: exactly 30% blocked at max_ppm=300000 keeps
-    strict = {r["doc_id"]: r["keep"]
-              for r in wordlist_filter(df, ["bad"], max_ppm=299_999).collect()}
-    assert strict[1] is False
-
-    joined = {r["doc_id"]: (r["n_words"], r["n_blocked"], r["keep"])
-              for r in wordlist_filter(df, ["bad", "worse"], max_ppm=300_000,
-                                       method="join").collect()}
-    assert joined == out
-    with pytest.raises(ValueError, match="method"):
-        wordlist_filter(df, ["bad"], method="nope")
-
-    # ADVICE r7: an EMPTY blocklist must analyze (F.array() alone is
-    # array<void> and array_contains fails) — everything keeps, 0 blocked
-    for method in ("expr", "join"):
-        empty = {r["doc_id"]: (r["n_blocked"], r["keep"])
-                 for r in wordlist_filter(df, [], max_ppm=0,
-                                          method=method).collect()}
-        assert empty == {1: (0, True), 2: (0, True), 3: (0, True), 4: (0, True)}
-
-
-def test_calibration_sweep_confusion_counts(spark):
-    """Hand-checkable confusion table at three thresholds; counts partition
-    n_docs; monotonicity: n_kept is non-increasing in the threshold."""
-    from klog_spark.datapipe.classifier import calibration_sweep
-
-    rows = [(1, 10, 1), (2, 5, 1), (3, -1, 0), (4, -7, 1), (5, 3, 0)]
-    df = spark.createDataFrame(rows, "doc_id long, margin_micro long, label int")
-    out = {r["threshold_micro"]: (r["n_kept"], r["tp"], r["fp"], r["fn"], r["tn"])
-           for r in calibration_sweep(df, "margin_micro", "label",
-                                      [-10, 0, 6]).collect()}
-    assert out == {
-        -10: (5, 3, 2, 0, 0),
-        0: (3, 2, 1, 1, 1),
-        6: (1, 1, 0, 2, 2),
-    }
-    kept_by_t = [out[t][0] for t in sorted(out)]
-    assert kept_by_t == sorted(kept_by_t, reverse=True)
-
-
-def test_chunk_quality_filter_worst_chunk_semantics(spark):
-    """A long doc with one bad section fails the worst-chunk rule even when
-    most chunks are fine; a uniformly good doc keeps; chunk margins match
-    scoring each chunk text independently with the pinned doc-level fold."""
-    from klog_spark.datapipe.textstats import (chunk_documents,
-                                               chunk_quality_filter)
-    from klog_spark.entry_queries import (SCORED_FILTER_STATS,
-                                          SCORED_FILTER_WEIGHTS)
-
-    good = "the key table a value " * 8          # stopword-rich, passes
-    bad = "zzz " * 40                            # stopword-free block
-    rows = [(1, (good * 2).strip()),             # all-good chunks
-            (2, (good + bad + good).strip())]    # one bad chunk inside
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in chunk_quality_filter(
-        df, SCORED_FILTER_WEIGHTS, SCORED_FILTER_STATS,
-        max_words=40, overlap=0).collect()}
-    assert out[1]["keep"] is True
-    assert out[2]["keep"] is False
-    assert out[2]["min_margin_micro"] < 0 < out[1]["min_margin_micro"]
-
-    # per-chunk margins == scoring each chunk text as its own document
-    chunks = chunk_documents(df, max_words=40, overlap=0)
-    rescored = chunk_quality_filter(
-        chunks.select(F.col("chunk_text").alias("text"),
-                      (F.col("doc_id") * 1000 + F.col("chunk_id")).alias("doc_id")),
-        SCORED_FILTER_WEIGHTS, SCORED_FILTER_STATS, max_words=40, overlap=0)
-    per_chunk = {r["doc_id"]: r["min_margin_micro"] for r in rescored.collect()}
-    assert min(per_chunk[2000 + i] for i in range(3)) == out[2]["min_margin_micro"]
-
-
 def test_ngram_novelty_semantics(spark):
     """Republished reference text scores 0 novelty; disjoint-vocab text
     scores 1e6; partial overlap is exact integer arithmetic."""
@@ -1588,31 +986,6 @@ def test_ngram_novelty_packed_matches_exact(spark):
     assert "Exchange" not in buf.getvalue()
 
 
-def test_corpus_drift_semantics(spark):
-    """Drift contributions: identical snapshots -> all zero; removing every
-    doc containing a marker word makes that word the top NEGATIVE
-    contributor (its new-LM mass collapses to smoothing); totals are
-    order-independent exact integers."""
-    from klog_spark.datapipe.textstats import corpus_drift
-
-    rows = [(i, "common words here " + ("marker " * 5 if i % 2 == 0 else ""))
-            for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    same = corpus_drift(docs, docs, top_k=50).collect()
-    assert all(r["contrib_micro_nats"] == 0 for r in same)
-
-    new = docs.filter(F.col("doc_id") % 2 == 1)  # all marker docs removed
-    out = {r["word"]: r for r in corpus_drift(docs, new, top_k=50).collect()}
-    # the vanished word keeps only smoothing mass in the new LM: its
-    # contribution is NEGATIVE (p_new ~ 0 down-weights it in KL(new||old));
-    # the surviving words gained relative mass: positive contributions
-    assert out["marker"]["c_new"] == 0
-    assert out["marker"]["contrib_micro_nats"] < 0
-    for w in ("common", "words", "here"):
-        assert out[w]["contrib_micro_nats"] > 0
-
-
 def test_ngram_novelty_packed_xxhash_variant(spark):
     """The xxhash64 throughput probes (paired with an xxhash64-built
     bitmap) reproduce the exact operator's novelty at m = 2^20, like the
@@ -1649,65 +1022,5 @@ def test_soft_dedup_weights_mass_conservation(spark):
            for r in soft_dedup_weights(df).collect()}
     assert out == {1: (3, 333333), 2: (3, 333333), 3: (3, 333333),
                    4: (1, 1_000_000)}
-
-
-def test_quality_ensemble_vote_arithmetic(spark):
-    """2-of-3 ensemble: n_votes is the exact sum of the three gated
-    signals and keep == (n_votes >= 2) row-for-row; the individual vote
-    columns match their source operators on the fixture."""
-    from klog_spark import entry_queries as eq
-
-    sf_dir = "/root/testdata/sf0.001"
-    out = eq.q_quality_ensemble(spark, sf_dir).collect()
-    assert out
-    for r in out:
-        assert r["n_votes"] == r["v_model"] + r["v_heur"] + r["v_words"]
-        assert r["keep"] == (r["n_votes"] >= 2)
-    model = {r["doc_id"]: int(r["kept"])
-             for r in eq.q_scored_quality_filter(spark, sf_dir).collect()}
-    assert all(r["v_model"] == model[r["doc_id"]] for r in out)
-
-
-def test_kneser_ney_matches_sequential_oracle(spark):
-    """KN scores equal a sequential Python recomputation bigram-by-bigram,
-    and interpolated KN is a PROPER distribution: for every context,
-    P(w | context) summed over the full vocabulary equals exactly 1."""
-    import math
-    from collections import Counter, defaultdict
-
-    from klog_spark.datapipe.textstats import kneser_ney_doc_scores
-
-    rows = [(1, "a b a b c"), (2, "a b c d"), (3, "b c b c"), (4, "solo")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: (r["n_bigrams"], r["sum_nll_micro"], r["avg_nll_micro"])
-           for r in kneser_ney_doc_scores(docs).collect()}
-    assert 4 not in out  # single-word doc has no bigram
-
-    # sequential oracle
-    c12, c1, r1, l2 = Counter(), Counter(), defaultdict(set), defaultdict(set)
-    seqs = {i: t.split() for i, t in rows if len(t.split()) >= 2}
-    for ws in seqs.values():
-        for p, w in zip(ws, ws[1:]):
-            c12[(p, w)] += 1
-            c1[p] += 1
-            r1[p].add(w)
-            l2[w].add(p)
-    B = len(c12)
-    d = 0.75
-
-    def prob(p, w):
-        return (max(c12[(p, w)] - d, 0.0) / c1[p]
-                + (d * len(r1[p]) / c1[p]) * (len(l2[w]) / B))
-
-    for doc_id, ws in seqs.items():
-        nll = [round(-math.log(prob(p, w)) * 1_000_000)
-               for p, w in zip(ws, ws[1:])]
-        want = (len(nll), sum(nll), round(sum(nll) / len(nll)))
-        assert out[doc_id] == want, (doc_id, out[doc_id], want)
-
-    vocab = set(l2) | set(c1)
-    for p in c1:
-        total = sum(prob(p, w) for w in vocab)
-        assert abs(total - 1.0) < 1e-12, (p, total)
 
 

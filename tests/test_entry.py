@@ -29,20 +29,15 @@ def test_oracle_keys_subset_of_queries(entry_mod):
     qs = set(entry_mod.queries())
     os_ = set(entry_mod.oracle_sql())
     assert os_ <= qs
-    # round-8 contract (VERDICT r7 #2/#3): EVERY driver row has a full
-    # rows+schema+hash oracle — the driver has no rows-only mode, so a
-    # no-oracle row is a guaranteed err. Rows-only operators (iterative GD)
-    # live in extra_queries(), where the local gate accepts rows-only.
+    # EVERY driver row has a full rows+schema+hash oracle — the driver has
+    # no rows-only mode, so a no-oracle row is a guaranteed err.
     assert qs == os_
     # the driver samples ~50 rows per round: keep the registry inside the
     # budget so no row is ever formally stale (VERDICT r3 missing #1)
     assert len(qs) <= 50
-    # retired near-duplicates keep the same contract in the local-only
-    # dicts, except declared rows-only extras (no SQL oracle by design)
-    ROWS_ONLY_EXTRAS = {"trained_quality_filter"}
+    # retired near-duplicates keep the same contract in the local-only dicts
     xq, xo = set(entry_mod.extra_queries()), set(entry_mod.extra_oracle_sql())
-    assert xq - xo == ROWS_ONLY_EXTRAS
-    assert xo <= xq
+    assert xq == xo
     assert not (qs & xq)
 
 

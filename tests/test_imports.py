@@ -1,5 +1,6 @@
 """Every ``klog_spark`` import in the product, tools and bench scripts
-resolves, function-local ones included, and is used.
+resolves, function-local ones included, and is used; every module-level
+name in ``entry_queries`` is reachable from a row or a script.
 
 Datapipe imports are function-local, and most rows, ``tools/`` and
 ``bench*.py`` never run under pytest, so a removed module or name would
@@ -63,24 +64,31 @@ def _klog_imports(path: Path):
                     yield node.lineno, module, alias
 
 
+def _eq_attributes(path: Path) -> list[ast.Attribute]:
+    """The ``eq.<name>`` nodes in ``path``, if it binds ``eq`` to
+    ``klog_spark.entry_queries``."""
+    if not any(alias.asname == "eq" and f"{module}.{alias.name}" == "klog_spark.entry_queries"
+               for _, module, alias in _klog_imports(path)):
+        return []
+    return [node for node in ast.walk(_parse(path))
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
+            and node.value.id == "eq"]
+
+
 def _problems(path: Path) -> list[str]:
     where = path.relative_to(ROOT)
-    problems, eq_bound = [], False
+    problems = []
     for lineno, module, alias in _klog_imports(path):
         if module is None:
             missing = _missing(alias.name, [])
         else:
             missing = _missing(module, [alias.name])
-            eq_bound |= (alias.asname == "eq"
-                         and f"{module}.{alias.name}" == "klog_spark.entry_queries")
         problems += [f"{where}:{lineno}: {m}" for m in missing]
-    if eq_bound:
+    if eq_attributes := _eq_attributes(path):
         from klog_spark import entry_queries
 
-        for node in ast.walk(_parse(path)):
-            if (isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
-                    and node.value.id == "eq" and not hasattr(entry_queries, node.attr)):
-                problems.append(f"{where}:{node.lineno}: eq.{node.attr}")
+        problems += [f"{where}:{node.lineno}: eq.{node.attr}" for node in eq_attributes
+                     if not hasattr(entry_queries, node.attr)]
     return problems
 
 
@@ -103,3 +111,52 @@ def test_klog_spark_imports_are_used():
             if (alias.asname or alias.name.split(".")[0]) not in used:
                 unused.append(f"{path.relative_to(ROOT)}:{lineno}: {alias.name}")
     assert unused == []
+
+
+def _entry_queries_graph() -> dict[str, set[str]]:
+    """Map each module-level name ``entry_queries.py`` binds (imports
+    aside) to the module-level names its definition references."""
+    tree = _parse(ROOT / "klog_spark" / "entry_queries.py")
+    bound: dict[str, ast.AST] = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            bound[node.name] = node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for target in targets:
+                for n in ast.walk(target):
+                    if isinstance(n, ast.Name):
+                        bound[n.id] = node
+    return {name: {n.id for n in ast.walk(node)
+                   if isinstance(n, ast.Name) and n.id in bound and n.id != name}
+            for name, node in bound.items()}
+
+
+def _entry_queries_roots() -> set[str]:
+    """Names of ``entry_queries`` used outside it: ``eq.<name>`` where
+    ``eq`` is the module, and ``from klog_spark.entry_queries import``."""
+    users = [ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / "bench_extra.py",
+             *sorted((ROOT / "tests").glob("*.py")), *sorted((ROOT / "tools").glob("*.py")),
+             *sorted((ROOT / "perfbench").rglob("*.py"))]
+    roots = set()
+    for path in users:
+        roots |= {alias.name for _, module, alias in _klog_imports(path)
+                  if module == "klog_spark.entry_queries"}
+        roots |= {node.attr for node in _eq_attributes(path)}
+    return roots
+
+
+def test_entry_queries_names_are_reachable():
+    """Every module-level name in ``entry_queries.py`` is reachable from a
+    driver row, an oracle or a test, tool or bench script that names it,
+    so a cut that retires rows cannot leave their SQL helpers, constants or
+    SQL behind."""
+    graph = _entry_queries_graph()
+    seen, todo = set(), [n for n in _entry_queries_roots() if n in graph]
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo += graph[name]
+    assert len(graph) > 100
+    assert sorted(set(graph) - seen) == []

@@ -258,72 +258,6 @@ def test_dedup_stream_within_watermark(spark, tmp_path_factory):
     assert {r["text"] for r in out} == {f"txt {i}" for i in range(25)}
 
 
-def test_scored_filter_stream_matches_batch(spark, tmp_path_factory):
-    """The pinned-model quality filter applied to a stream (stateless
-    append projection) emits exactly the batch gate query's decision and
-    micro-rounded margin for every document."""
-    from klog_spark import entry_queries as eq
-    from klog_spark.streaming import scored_filter_stream
-
-    src = tmp_path_factory.mktemp("scored_stream")
-    batch = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text")
-    batch.repartition(5).write.mode("overwrite").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(str(src))
-    )
-    q = (
-        scored_filter_stream(stream, eq.SCORED_FILTER_WEIGHTS,
-                             eq.SCORED_FILTER_STATS)
-        .writeStream.format("memory").queryName("scored_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {r["doc_id"]: (r["kept"], r["margin_micro"])
-           for r in spark.sql("select * from scored_stream").collect()}
-    want = {r["doc_id"]: (r["kept"], r["margin_micro"])
-            for r in eq.q_scored_quality_filter(
-                spark, "/root/testdata/sf0.001").collect()}
-    assert got == want and len(got) == batch.count()
-
-
-def test_wordlist_filter_stream_matches_batch(spark, tmp_path_factory):
-    """Stateless badwords screen: streaming decisions equal the batch
-    operator row-for-row across micro-batches."""
-    from klog_spark.datapipe.textstats import wordlist_filter
-    from klog_spark.streaming import wordlist_filter_stream
-
-    src = tmp_path_factory.mktemp("wordlist_stream")
-    rows = [(i, ("bad " * (i % 4) + "fine words here").strip())
-            for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    df.repartition(6).write.mode("overwrite").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        wordlist_filter_stream(stream, ["bad"], max_ppm=300_000)
-        .writeStream.format("memory").queryName("wl_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {r["doc_id"]: (r["n_words"], r["n_blocked"], r["keep"])
-           for r in spark.sql("select * from wl_out").collect()}
-    want = {r["doc_id"]: (r["n_words"], r["n_blocked"], r["keep"])
-            for r in wordlist_filter(df, ["bad"], max_ppm=300_000).collect()}
-    assert got == want
-
-
 def test_block_dedup_stream_matches_batch_block_set(spark, tmp_path_factory):
     """Streaming block admission: exactly one row per distinct block
     survives across micro-batches, and the admitted block set equals the

@@ -189,10 +189,6 @@ def main(names=None):
             print(f"  {name:36s} DRIVER CANON FAIL: {canon_err}")
             failures.append(name)
             continue
-        status = []
-        if name not in oss:
-            print(f"  {name:36s} rows={len(srows):7d}  (no oracle: rows-only) {time.time()-t0:5.1f}s")
-            continue
         try:
             tbl = con.execute(oss[name]).arrow()
             ocols = list(tbl.schema.names)

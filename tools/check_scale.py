@@ -64,13 +64,9 @@ def main(sf: float = 0.1) -> int:
             eq.q_group_commit_rates,
             eq.SQL_GROUP_COMMIT_RATES.replace(eq.klog_base_cte(), eq.klog_base_cte(fx)),
         ),
-        # round-5 corpus heavyweights over the sf-scale documents table
-        "lm_quality": (eq.q_lm_quality, eq.SQL_LM_QUALITY),
+        # round-5 corpus heavyweight over the sf-scale documents table
         "repeated_spans": (eq.q_repeated_spans, eq.SQL_REPEATED_SPANS),
-        # round-6 corpus operators at 10x the gate scale (doc_chunks'
-        # oracle bound is correlated — no fixed position cap to outgrow)
-        "doc_chunks": (eq.q_doc_chunks, eq.SQL_DOC_CHUNKS),
-        "perplexity_buckets": (eq.q_perplexity_buckets, eq.SQL_PERPLEXITY_BUCKETS),
+        # round-6 corpus operator at 10x the gate scale
         "semdedup": (eq.q_semdedup, eq.SQL_SEMDEDUP),
         # round-7 operators at 10x the gate scale: decontamination's shingle
         # join, the packed-bitmap Bloom kernel (same oracle as relational)
@@ -78,20 +74,15 @@ def main(sf: float = 0.1) -> int:
         "contamination_removal": (eq.q_contamination_removal, eq.SQL_CONTAMINATION_REMOVAL),
         "bloom_screen_packed": (eq.q_bloom_screen_packed, eq.SQL_BLOOM_SCREEN_PACKED),
         "semdedup_prototypes": (eq.q_semdedup_prototypes, eq.SQL_SEMDEDUP_PROTOTYPES),
-        # late-round-7 operators: paragraph dedup's global first-occurrence
-        # rule, the wordlist screen and the calibration sweep
+        # late-round-7 operator: paragraph dedup's global first-occurrence
+        # rule
         "dedup_paragraphs": (eq.q_dedup_paragraphs, eq.SQL_DEDUP_PARAGRAPHS),
-        "wordlist_filter": (eq.q_wordlist_filter, eq.SQL_WORDLIST_FILTER),
-        "quality_calibration": (eq.q_quality_calibration, eq.SQL_QUALITY_CALIBRATION),
-        "chunk_quality": (eq.q_chunk_quality, eq.SQL_CHUNK_QUALITY),
         # round-8 operators at 10x the gate scale: the novelty shingle
         # join and the digest self-join matrix
         "ngram_novelty": (eq.q_ngram_novelty, eq.SQL_NGRAM_NOVELTY),
         "cross_source_dups": (eq.q_cross_source_dups, eq.SQL_CROSS_SOURCE_DUPS),
-        # late-round-8: the drift monitor's smoothing constants and the
-        # packed novelty kernel's bit derivation re-derive from the 10x
-        # corpus — scale re-proves, never reuses
-        "corpus_drift": (eq.q_corpus_drift, eq.SQL_CORPUS_DRIFT),
+        # late-round-8: the packed novelty kernel's bit derivation
+        # re-derives from the 10x corpus — scale re-proves, never reuses
         "ngram_novelty_packed": (eq.q_ngram_novelty_packed, eq.SQL_NGRAM_NOVELTY_PACKED),
     }
     con.execute(

@@ -128,38 +128,21 @@ def main() -> None:
     sections.append(("AS-OF join (union+window)", plan_of(af), ["Window"]))
     assert "CartesianProduct" not in af_plan and "BroadcastNestedLoopJoin" not in af_plan
 
-    # 8f. round-5 corpus operators: LM scoring is three keyed shuffles
-    #     (word count, score join, doc agg) with map-side partials
-    lm = eq.q_lm_quality(spark, SF_DIR)
-    sections.append(("unigram LM scoring", plan_of(lm), ["HashAggregate", "Join"]))
-
-    # 8g. corpus stats: the repeated-span merge is windows + aggregates with
+    # 8f. corpus stats: the repeated-span merge is windows + aggregates with
     #     no nested loop anywhere
     rs = eq.q_repeated_spans(spark, SF_DIR)
     rs_plan = plan_of(rs, "simple")
     sections.append(("repeated-span detection", plan_of(rs), ["Window", "HashAggregate"]))
     assert "CartesianProduct" not in rs_plan and "BroadcastNestedLoopJoin" not in rs_plan
 
-    # 8h. round-6 corpus operators: chunking must stay a pure per-row
-    #     projection (ZERO Exchange); semdedup's only pairwise work is the
-    #     per-cell equi-join (no nested loop); perplexity bucketing is the
-    #     LM joins + one ntile window
-    ck = eq.q_doc_chunks(spark, SF_DIR)
-    ck_plan = plan_of(ck, "simple")
-    sections.append(("context-window chunking", plan_of(ck), ["Scan parquet"]))
-    assert "Exchange" not in ck_plan, "chunking must not shuffle"
+    # 8g. round-6 corpus operator: semdedup's only pairwise work is the
+    #     per-cell equi-join (no nested loop)
     sd = eq.q_semdedup(spark, SF_DIR)
     sd_plan = plan_of(sd, "simple")
     sections.append(("SemDeDup (IVF-cell prune)", plan_of(sd), ["HashAggregate"]))
     assert "CartesianProduct" not in sd_plan and "BroadcastNestedLoopJoin" not in sd_plan
-    pb = eq.q_perplexity_buckets(spark, SF_DIR)
-    sections.append(("perplexity bucketing", plan_of(pb), ["Window", "HashAggregate"]))
-    sf_q = eq.q_scored_quality_filter(spark, SF_DIR)
-    sf_plan = plan_of(sf_q, "simple")
-    sections.append(("pinned scored filter (apply)", plan_of(sf_q), ["Scan parquet"]))
-    assert "Exchange" not in sf_plan, "applying a pinned model must not shuffle"
 
-    # 8i. round-7 operators: decontamination is the same capped shingle
+    # 8h. round-7 operators: decontamination is the same capped shingle
     #     equi-join as the scan (no cartesian); the packed Bloom screen is
     #     a pure per-row kernel (ZERO Exchange)
     cr = eq.q_contamination_removal(spark, SF_DIR)
@@ -175,30 +158,15 @@ def main() -> None:
     sections.append(("SemDeDup prototypes (keep=farthest)", plan_of(sp), ["BroadcastHashJoin"]))
     assert "CartesianProduct" not in sp_plan and "BroadcastNestedLoopJoin" not in sp_plan
 
-    # 8j. late-round-7 operators: paragraph dedup's keep decision must be a
+    # 8i. late-round-7 operator: paragraph dedup's keep decision must be a
     #     partial-aggregated hash agg (never a window funneling hot blocks
-    #     through one task); the wordlist screen is a pure projection
+    #     through one task)
     dp = eq.q_dedup_paragraphs(spark, SF_DIR)
     dp_plan = plan_of(dp, "simple")
     sections.append(("paragraph-block dedup", plan_of(dp), ["HashAggregate"]))
     assert "Window" not in dp_plan, "block keep decision must be an agg, not a window"
-    wf = eq.q_wordlist_filter(spark, SF_DIR)
-    wf_plan = plan_of(wf, "simple")
-    sections.append(("blocked-wordlist filter", plan_of(wf), ["Scan parquet"]))
-    assert "Exchange" not in wf_plan, "the expr wordlist path must not shuffle"
-    qc = eq.q_quality_calibration(spark, SF_DIR)
-    qc_plan = plan_of(qc, "simple")
-    sections.append(("quality calibration sweep", plan_of(qc), ["HashAggregate"]))
-    assert "CartesianProduct" not in qc_plan and "BroadcastNestedLoopJoin" not in qc_plan
-    cq = eq.q_chunk_quality(spark, SF_DIR)
-    cq_plan = plan_of(cq, "simple")
-    sections.append(("chunk-quality worst-chunk filter", plan_of(cq), ["HashAggregate"]))
-    assert "Exchange hashpartitioning(doc_id" in cq_plan, \
-        "chunk quality's only shuffle is the doc_id aggregation"
-    assert cq_plan.count("Exchange") == 1, \
-        "chunk quality must shuffle exactly once (the doc_id agg)"
 
-    # 8k. round-8 operators: novelty is one distinct-shingle equi-join (no
+    # 8j. round-8 operators: novelty is one distinct-shingle equi-join (no
     #     cartesian); the cross-source matrix is a digest-keyed self-join
     nv = eq.q_ngram_novelty(spark, SF_DIR)
     nv_plan = plan_of(nv, "simple")
@@ -209,25 +177,12 @@ def main() -> None:
     sections.append(("cross-source dup matrix", plan_of(xs), ["HashAggregate", "Join"]))
     assert "CartesianProduct" not in xs_plan and "BroadcastNestedLoopJoin" not in xs_plan
 
-    # 8l. late-round-8 operators: the drift monitor's top-k must compile to
-    #     TakeOrdered (partial per-partition top-k, never a single-partition
-    #     sort); the packed novelty screen is a stateless kernel (ZERO
-    #     Exchange)
-    dr = eq.q_corpus_drift(spark, SF_DIR)
-    dr_plan = plan_of(dr, "simple")
-    sections.append(("corpus drift monitor", plan_of(dr), ["TakeOrderedAndProject"]))
-    assert "TakeOrderedAndProject" in dr_plan and "CartesianProduct" not in dr_plan
+    # 8k. late-round-8 operator: the packed novelty screen is a stateless
+    #     kernel (ZERO Exchange)
     nvp = eq.q_ngram_novelty_packed(spark, SF_DIR)
     nvp_plan = plan_of(nvp, "simple")
     sections.append(("packed-Bloom novelty screen", plan_of(nvp), ["MapInArrow"]))
     assert "Exchange" not in nvp_plan, "packed novelty must not shuffle"
-
-    # 8m. last round-8 operator: KN scoring is vocab-sized aggregations +
-    #     one (prev, w) join back
-    kn = eq.q_kneser_ney_score(spark, SF_DIR)
-    kn_plan = plan_of(kn, "simple")
-    sections.append(("Kneser-Ney bigram scoring", plan_of(kn), ["HashAggregate", "Join"]))
-    assert "CartesianProduct" not in kn_plan and "BroadcastNestedLoopJoin" not in kn_plan
 
     # 9. no input-scaled driver collects: every `.collect()` in the query
     #    registry / datapipe must be bounded by a `.limit(...)` or a literal
