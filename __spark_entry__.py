@@ -43,14 +43,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # reference leaves it a TODO, Segment.java:28)
         "klog_group_offsets": eq.q_sink_group_offsets,
         "klog_group_offsets_read_committed": eq.q_group_offsets_read_committed,
-        # training-data pipeline (dedup / similarity)
+        # training-data pipeline (dedup)
         "dedup_canonical": eq.q_dedup_canonical,           # keep-best resolution (subsumes dedup_exact's digest agg)
-        "dedup_clusters": eq.q_dedup_clusters,             # large-star/small-star CC (recomputes the jaccard pair CTEs)
-        "dedup_paragraphs": eq.q_dedup_paragraphs,         # CCNet/MassiveText paragraph dedup: first-occurrence keep + reassembly (r7-built)
-        "semdedup": eq.q_semdedup,                         # SemDeDup on the PINNED kmeans quantizer (r7: trains offline, gates the kmeans codepath)
         "contamination_removal": eq.q_contamination_removal,  # decontaminated-corpus decision table (supersedes contamination_check row: same shingle join, train-side agg)
         "corpus_pack": eq.q_corpus_pack,                   # token-budget sequence packing
-        "repeated_span_removal": eq.q_repeated_span_removal,  # exact-substring-dedup rewrite (spans excised; recomputes the detection CTEs)
         # round-8-built operators, driver rows from birth (standing
         # rotation discipline; the rotated-out row klog_file_health is green
         # in CORRECTNESS_r07 with its subsumption note in extra_queries())
@@ -58,8 +54,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cross_source_dups": eq.q_cross_source_dups,       # cross-source duplication matrix (digest-keyed; per-source dedup-budget audit)
         # round-7-built operators, driver rows from birth (no stale round)
         "bloom_screen_packed": eq.q_bloom_screen_packed,   # packed-bitmap broadcast Bloom, Arrow-kernel probe (VERDICT r6 #2)
-        "semdedup_prototypes": eq.q_semdedup_prototypes,   # D4-style keep=farthest prototype selection
-        "minhash_recall_eval": eq.q_minhash_recall_eval,   # LSH candidate recall vs exact Jaccard; oracle NESTS the full dedup_minhash SQL (keeps that row's coverage)
         # named custom-operator classes (as-of)
         "klog_batch_state_asof": eq.q_batch_state_asof,
     }
@@ -78,14 +72,12 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "klog_group_coordinating_partition": eq.q_group_coordinating_partition,  # F5 twin; test_checks.py javahash
         "klog_offset_gaps": eq.q_offset_gaps,                    # W8 detail; count gate-checked in txn_stats row
         "klog_cat_producer_states": eq.q_cat_producer_states,    # projection twin of sink_producer_state row
-        "dedup_embedding": eq.q_dedup_embedding,                 # declared non-scale twin of dedup_embedding_lsh
         "klog_group_metadata": eq.q_group_metadata,              # compaction twin of klog_group_offsets row
         "klog_group_offset_rewinds": eq.q_group_offset_rewinds,  # incident-signal view over the group_offsets row
         "klog_cat_pid_epoch": eq.q_cat_pid_epoch,                # P3/P6 conjunction; P1/P8/F1 keep the cat_pid row
         "klog_abort_cmds": eq.q_abort_cmds,                      # S10+P7; open_txn_abort_cmds keeps the S10 driver row
         "dedup_exact": eq.q_dedup_exact,                         # digest agg inside dedup_canonical + dedup_incremental rows
         "klog_topics_sanity": eq.q_topics_sanity,                # A8 1-row sanity
-        "near_dup_canonical": eq.q_near_dup_canonical,           # one representative per near-dup cluster
         # rotated OUT of the driver gate in round 6 (all green in
         # CORRECTNESS_r05; each capability keeps a driver row via the noted
         # subsuming query, plus its pytests)
@@ -97,7 +89,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "klog_empty_txns": eq.q_empty_txns,                      # A6: txn_stats num_empty_txn
         "klog_first_last_batch": eq.q_first_last_batch,          # A4: file/line_no extremes; pytest parity
         "klog_group_commit_rates": eq.q_group_commit_rates,      # group family keeps 3 driver rows
-        "dedup_ngram_jaccard": eq.q_dedup_ngram_jaccard,         # dedup_clusters row recomputes the same pair CTEs
         "dedup_incremental": eq.q_dedup_incremental,             # digest screen: dedup_canonical + contamination_check rows
         # rotated OUT of the driver gate in round 7 (all green in
         # CORRECTNESS_r06; each capability keeps a driver row via the noted
@@ -106,18 +97,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "klog_batches_per_epoch": eq.q_batches_per_epoch,        # A9: green r1-r6; txn_stats/file_health keep the agg family; salted twin pytest
         "klog_group_lag": eq.q_group_lag,                        # group family keeps 2 driver rows (offsets, read_committed)
         "leakage_safe_split": eq.q_leakage_safe_split,           # split now driver-exercised INSIDE the contamination_removal row
-        "dedup_simhash": eq.q_dedup_simhash,                     # near-dup family keeps minhash_lsh/embedding_lsh/clusters/semdedup rows
         "contamination_check": eq.q_contamination_check,         # superseded by the contamination_removal driver row (same join, train-side agg)
-        # round-7 variants, locally gated from birth
-        "semdedup_first_n": eq.q_semdedup_first_n,               # engine-replicable first_n quantizer twin of the pinned-kmeans driver row
-        # rotated OUT mid-round-7 to give the round-7-built operators driver
-        # rows from birth (all five green in CORRECTNESS_r06)
-        "repeated_spans": eq.q_repeated_spans,                   # detection CTEs recomputed inside the repeated_span_removal driver row
-        "dedup_embedding_lsh": eq.q_dedup_embedding_lsh,         # hyperplane-bucket candidates; embedding near-dup family keeps semdedup/_prototypes driver rows
         # rotated OUT of the driver gate in round 8 (all green in
         # CORRECTNESS_r07; capability kept by the noted driver row)
         "bloom_screen": eq.q_bloom_screen,                       # relational Bloom twin; bloom_screen_packed driver row keeps the semantics (parity pytest) at the scale shape
-        "dedup_minhash_lsh": eq.q_dedup_minhash,                 # full MinHash-LSH pair SQL nested inside the minhash_recall_eval driver row
         # rotated OUT mid-round-8 to give the round-8-built operators driver
         # rows from birth (green in CORRECTNESS_r07)
         "klog_file_health": eq.q_file_health,                    # W8/corrupt-rate capability kept by klog_txn_stats (num_offset_gaps) + klog_sink_corrupt driver rows
@@ -148,16 +131,9 @@ def oracle_sql() -> dict[str, str]:
         "klog_group_offsets": eq.SQL_SINK_GROUP_OFFSETS,
         "klog_group_offsets_read_committed": eq.SQL_GROUP_OFFSETS_READ_COMMITTED,
         "dedup_canonical": eq.SQL_DEDUP_CANONICAL,
-        "dedup_clusters": eq.SQL_DEDUP_CLUSTERS,
-        "dedup_paragraphs": eq.SQL_DEDUP_PARAGRAPHS,
-        "semdedup": eq.SQL_SEMDEDUP,
         "contamination_removal": eq.SQL_CONTAMINATION_REMOVAL,
         "corpus_pack": eq.SQL_CORPUS_PACK,
-        "repeated_span_removal": eq.SQL_REPEATED_SPAN_REMOVAL,
         "bloom_screen_packed": eq.SQL_BLOOM_SCREEN_PACKED,
-        "semdedup_prototypes": eq.SQL_SEMDEDUP_PROTOTYPES,
-        # r8 rotation: every row in queries() has an oracle
-        "minhash_recall_eval": eq.SQL_MINHASH_RECALL_EVAL,
         # r8-built operators
         "ngram_novelty": eq.SQL_NGRAM_NOVELTY,
         "cross_source_dups": eq.SQL_CROSS_SOURCE_DUPS,
@@ -176,14 +152,12 @@ def extra_oracle_sql() -> dict[str, str]:
         "klog_group_coordinating_partition": eq.SQL_GROUP_COORDINATING_PARTITION,
         "klog_offset_gaps": eq.SQL_OFFSET_GAPS,
         "klog_cat_producer_states": eq.SQL_CAT_PRODUCER_STATES,
-        "dedup_embedding": eq.SQL_DEDUP_EMBEDDING,
         "klog_group_metadata": eq.SQL_GROUP_METADATA,
         "klog_group_offset_rewinds": eq.SQL_GROUP_OFFSET_REWINDS,
         "klog_cat_pid_epoch": eq.SQL_CAT_PID_EPOCH,
         "klog_abort_cmds": eq.SQL_ABORT_CMDS,
         "dedup_exact": eq.SQL_DEDUP_EXACT,
         "klog_topics_sanity": eq.SQL_TOPICS_SANITY,
-        "near_dup_canonical": eq.SQL_NEAR_DUP_CANONICAL,
         "klog_sink_control": eq.SQL_SINK_CONTROL,
         "klog_sink_txn_state": eq.SQL_SINK_TXN_STATE,
         "klog_sink_producer_state": eq.SQL_SINK_PRODUCER_STATE,
@@ -192,20 +166,14 @@ def extra_oracle_sql() -> dict[str, str]:
         "klog_empty_txns": eq.SQL_EMPTY_TXNS,
         "klog_first_last_batch": eq.SQL_FIRST_LAST_BATCH,
         "klog_group_commit_rates": eq.SQL_GROUP_COMMIT_RATES,
-        "dedup_ngram_jaccard": eq.SQL_DEDUP_NGRAM_JACCARD,
         "dedup_incremental": eq.SQL_DEDUP_INCREMENTAL,
         "klog_filter_txn_id": eq.SQL_FILTER_TXN_ID,
         "klog_batches_per_epoch": eq.SQL_BATCHES_PER_EPOCH,
         "klog_group_lag": eq.SQL_GROUP_LAG,
         "leakage_safe_split": eq.SQL_LEAKAGE_SAFE_SPLIT,
-        "dedup_simhash": eq.SQL_DEDUP_SIMHASH,
         "contamination_check": eq.SQL_CONTAMINATION_CHECK,
-        "semdedup_first_n": eq.SQL_SEMDEDUP_FIRST_N,
-        "repeated_spans": eq.SQL_REPEATED_SPANS,
-        "dedup_embedding_lsh": eq.SQL_DEDUP_EMBEDDING_LSH,
         # r8 rotated-out rows
         "bloom_screen": eq.SQL_BLOOM_SCREEN,
-        "dedup_minhash_lsh": eq.SQL_DEDUP_MINHASH,
         "klog_file_health": eq.SQL_FILE_HEALTH,
         "ngram_novelty_packed": eq.SQL_NGRAM_NOVELTY_PACKED,
         "soft_dedup_weights": eq.SQL_SOFT_DEDUP_WEIGHTS,

@@ -41,8 +41,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from klog_spark.datapipe.dedup import dedup_paragraph_blocks, minhash_dedup
-    from klog_spark.entry_queries import _dup_corpus
     from klog_spark.operators import checks
     from klog_spark.operators.enrich import enrich_with_producer_meta
     from klog_spark.operators.route import routed_as_parsed
@@ -75,9 +73,9 @@ def main() -> None:
         t0 = time.time()
         fn()
         timings[name] = round(time.time() - t0, 3)
-        # operator-owned caches (minhash sigs, contamination shingles) are
-        # per-invocation; release so run N+1 starts from the same storage
-        # state as run 1 (ADVICE r7)
+        # operator-owned caches (contamination shingles) are per-invocation;
+        # release so run N+1 starts from the same storage state as run 1
+        # (ADVICE r7)
         release_tracked()
 
     # RAM-backed staging dir: the bench measures engine time, not /tmp disk
@@ -135,18 +133,6 @@ def main() -> None:
             timed("klog_state_machine",
                   lambda: checks.state_machine_violations(routed_as_parsed(staged, classes=["txn_state"])).count())
             timed("dedup_exact", lambda: eq.q_dedup_exact(spark, sf_dir).count())
-            # throughput path (xxhash64 strings); the java32 oracle variant is
-            # gate-verified. The r8 word-hash kernel is the SCALING-corpus
-            # winner (+50%, BENCH/SCALING_RUN.md) but measured SLOWER on this
-            # fixture's longer documents (in-session A/B 4.8s vs 5.7s at
-            # sf0.1, BENCH/BASELINE.md r8) — kernel choice is corpus-shape
-            # dependent, so the bench row keeps the comparable string path
-            timed(
-                "dedup_minhash_lsh",
-                lambda: minhash_dedup(_dup_corpus(spark, sf_dir), num_hashes=64, bands=16,
-                                      threshold=0.5, hash_fn="xxhash64").count(),
-            )
-            timed("dedup_embedding_lsh", lambda: eq.q_dedup_embedding_lsh(spark, sf_dir).count())
             # round-4 operators at sf0.1 scale
             timed("corpus_pack", lambda: eq.q_corpus_pack(spark, sf_dir).count())
             timed("contamination_check", lambda: eq.q_contamination_check(spark, sf_dir).count())
@@ -154,18 +140,12 @@ def main() -> None:
             # the bit table, pack it executor-side, broadcast, O(1)-probe
             timed("bloom_screen_packed", lambda: eq.q_bloom_screen_packed(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
-            # late round-7: paragraph dedup (min-struct agg + reassembly,
-            # xxhash64 8-byte shuffle key)
-            timed("dedup_paragraphs",
-                  lambda: dedup_paragraph_blocks(_dup_corpus(spark, sf_dir),
-                                                 block_words=16, hash_blocks=True)
-                  .write.format("noop").mode("overwrite").save())
             # round-8 operators: exact novelty join and its zero-Exchange
             # packed-Bloom twin (bitmap build included — the realistic cost)
             timed("ngram_novelty", lambda: eq.q_ngram_novelty(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
             # throughput path (xxhash64 probes); the java32 oracle variant
-            # is gate-verified (same split as dedup_minhash_lsh)
+            # is gate-verified
             timed("ngram_novelty_packed", lambda: _novelty_packed_xx(spark, sf_dir)
                   .write.format("noop").mode("overwrite").save())
             all_runs.append(timings)

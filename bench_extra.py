@@ -29,8 +29,6 @@ def main() -> None:
 
     from klog_spark import entry_queries as eq
     from klog_spark.cachereg import release_tracked
-    from klog_spark.datapipe.dedup import dedup_paragraph_blocks, minhash_dedup
-    from klog_spark.entry_queries import _dup_corpus
     from klog_spark.operators import aggregates, checks
     from klog_spark.operators.enrich import enrich_with_producer_meta
     from klog_spark.operators.parse import parse_sequences
@@ -92,15 +90,9 @@ def main() -> None:
         "klog_state_machine": lambda: checks.state_machine_violations(
             routed_as_parsed(_staged(), classes=["txn_state"])).count(),
         "dedup_exact": lambda: eq.q_dedup_exact(spark, sf_dir).count(),
-        "dedup_minhash_lsh": lambda: minhash_dedup(
-            _dup_corpus(spark, sf_dir), num_hashes=64, bands=16,
-            threshold=0.5, hash_fn="xxhash64").count(),
-        "dedup_embedding_lsh": lambda: eq.q_dedup_embedding_lsh(spark, sf_dir).count(),
         "corpus_pack": lambda: eq.q_corpus_pack(spark, sf_dir).count(),
         "contamination_check": lambda: eq.q_contamination_check(spark, sf_dir).count(),
         "bloom_screen_packed": lambda: noop(eq.q_bloom_screen_packed(spark, sf_dir)),
-        "dedup_paragraphs": lambda: noop(dedup_paragraph_blocks(
-            _dup_corpus(spark, sf_dir), block_words=16, hash_blocks=True)),
         "ngram_novelty": lambda: noop(eq.q_ngram_novelty(spark, sf_dir)),
         "ngram_novelty_packed": lambda: noop(_novelty_packed_xx()),
     }

@@ -1,14 +1,13 @@
 """Operator-owned cache registry (ADVICE r7).
 
-Several operators ``persist()`` bounded intermediates (MinHash signatures,
-the contamination scan's split-joined shingle table) because multiple
-eager jobs — or one expensive lazy plan referenced several times —
-consume them inside a single invocation. The persist is the right call
-per invocation, but in a LONG-LIVED session (the test suite, the
-query/oracle gate, the bench loop, a user notebook) those blocks
-accumulate: nothing ever unpersisted them, because the operator returns a
-lazy plan that still references the cache, so it cannot release it before
-the caller materializes.
+An operator may ``persist()`` a bounded intermediate (the contamination
+scan's split-joined shingle table) because multiple eager jobs — or one
+expensive lazy plan referenced several times — consume it inside a
+single invocation. The persist is the right call per invocation, but in
+a LONG-LIVED session (the test suite, the query/oracle gate, the bench
+loop, a user notebook) those blocks accumulate: nothing ever unpersisted
+them, because the operator returns a lazy plan that still references the
+cache, so it cannot release it before the caller materializes.
 
 This registry makes the lifetime explicit without giving up in-invocation
 reuse: operators register every persist via :func:`track`, and session

@@ -50,7 +50,7 @@ def java_hash_u32_expr(col):
     equals the UTF-16 code unit, so this matches :func:`java_string_hash_np`
     bit-for-bit — and is exactly replicable in any SQL engine (DuckDB:
     ``list_reduce`` over ``unicode(c)``), which is what makes the
-    MinHash/SimHash oracles possible."""
+    leakage-split and Bloom-screen oracles possible."""
     units = F.transform(F.split(col, ""), lambda c: F.ascii(c).cast("bigint"))
     return F.aggregate(
         units, F.lit(0).cast("bigint"),

@@ -280,47 +280,6 @@ def dedup_stream(docs: DataFrame, text_col: str = "text",
     )
 
 
-def block_dedup_stream(docs: DataFrame, block_words: int = 16,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Streaming paragraph-block admission — the ingest face of
-    ``dedup.dedup_paragraph_blocks``: documents explode into disjoint
-    ``block_words``-word blocks (same normalization as the batch operator)
-    and ``dropDuplicates`` state admits only the FIRST-ARRIVED copy of
-    each distinct block. Emits (doc_id, block_idx, block_text) of admitted
-    blocks in append mode; which occurrence wins depends on arrival order
-    (the batch operator pins min (doc_id, block_idx) instead), but the
-    admitted DISTINCT BLOCK SET is identical to batch for the same input
-    (pytest-asserted). State is one row per distinct block — the same
-    trade, and the same remedy past memory (periodic batch re-dedup), as
-    ``dedup_stream``. Document reassembly stays a downstream batch step
-    (``foreachBatch``): it needs all of a doc's blocks, which an unbounded
-    stream cannot close over.
-    """
-    words = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda w: w != ""
-    )
-    base = docs.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
-    blk = (
-        base.filter(F.size("_w") > 0)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(
-                        F.lit(0),
-                        F.ceil(F.size("_w") / F.lit(block_words)).cast("int") - 1,
-                    ),
-                    lambda i: F.array_join(
-                        F.slice("_w", i * block_words + 1, block_words), " "
-                    ),
-                )
-            ).alias("block_idx", "block_text"),
-        )
-    )
-    return blk.dropDuplicates(["block_text"])
-
-
 def novelty_screen_stream(docs: DataFrame, bitmap, m: int, k: int, n: int = 3,
                           text_col: str = "text", id_col: str = "doc_id",
                           hash_fn: str = "java32") -> DataFrame:

@@ -13,7 +13,7 @@ FIXTURE_SF = 0.001
 def _release_operator_caches():
     """Release operator-owned persisted intermediates after every test
     (klog_spark.cachereg) — the shared session otherwise accumulates
-    minhash-signature / contamination-shingle cache blocks across tests."""
+    contamination-shingle cache blocks across tests."""
     from klog_spark.cachereg import release_tracked
 
     yield

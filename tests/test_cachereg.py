@@ -20,12 +20,12 @@ def test_track_and_release(spark):
 
 
 def test_operators_register_their_caches(spark):
-    """minhash (persist_signatures) and the contamination scan's shingle
-    table both leave ZERO persisted blocks behind once release_tracked
-    runs — the long-lived-session leak the advice flagged."""
+    """The contamination scan's shingle table leaves ZERO persisted blocks
+    behind once release_tracked runs — the long-lived-session leak the
+    advice flagged."""
     from pyspark.sql import functions as F
 
-    from klog_spark.datapipe.dedup import contamination_report, minhash_dedup
+    from klog_spark.datapipe.dedup import contamination_report
 
     docs = spark.createDataFrame(
         [(i, f"some words {i} repeat words here", "web") for i in range(40)],
@@ -37,11 +37,10 @@ def test_operators_register_their_caches(spark):
 
     release_tracked(blocking=True)
     baseline = n_cached()  # session fixtures legitimately cache the parsed fixture
-    minhash_dedup(docs, num_hashes=8, bands=4, shingle_n=2).count()
     split = docs.select("doc_id", F.when(F.col("doc_id") % 4 == 0, "test")
                         .otherwise("train").alias("split"))
     contamination_report(docs, split, n=2).count()
-    assert len(_TRACKED) >= 2
+    assert len(_TRACKED) >= 1
     assert n_cached() > baseline, "operators should have cached intermediates"
     release_tracked(blocking=True)
     assert _TRACKED == []

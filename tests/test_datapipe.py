@@ -1,4 +1,4 @@
-"""Training-data pipeline operators: dedup (exact, near-dup, semantic),
+"""Training-data pipeline operators: exact dedup, leakage-safe split,
 Bloom screens, contamination, packing and novelty."""
 
 import pytest
@@ -14,11 +14,6 @@ def dup_corpus(spark):
     return _dup_corpus(spark, SF_DIR).cache()
 
 
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-
 def test_exact_dedup_finds_planted_dups(dup_corpus):
     from klog_spark.datapipe.dedup import exact_duplicates
 
@@ -29,187 +24,6 @@ def test_exact_dedup_finds_planted_dups(dup_corpus):
     originals = {r["keep_doc_id"] for r in rows}
     assert all(k % 10 == 0 and k < 1000000 for k in originals)
     assert all((i % 10 == 0) for i in ids if i < 1000000)
-
-
-def test_minhash_recall_vs_exact_jaccard(dup_corpus):
-    from klog_spark.datapipe.dedup import minhash_dedup, ngram_jaccard_pairs
-
-    exact = {
-        (r["id1"], r["id2"])
-        for r in ngram_jaccard_pairs(dup_corpus, n=3, threshold=0.8).collect()
-    }
-    mh = {(r["id1"], r["id2"]) for r in minhash_dedup(dup_corpus, threshold=0.7).collect()}
-    assert exact, "fixture must contain high-jaccard pairs"
-    recall = len(exact & mh) / len(exact)
-    assert recall >= 0.9, f"minhash recall {recall}"
-
-
-def test_simhash_finds_near_dups(dup_corpus):
-    from klog_spark.datapipe.dedup import simhash_near_pairs
-
-    pairs = {(r["id1"], r["id2"]) for r in simhash_near_pairs(dup_corpus, max_hamming=3).collect()}
-    # exact copies have hamming 0 and must all be found
-    exact_pairs = {
-        (r["doc_id"] - 1000000, r["doc_id"])
-        for r in dup_corpus.filter((F.col("doc_id") >= 1000000) & (F.col("doc_id") < 2000000)).collect()
-    }
-    assert exact_pairs <= pairs
-
-
-def test_embedding_near_dups_planted(spark, emb):
-    from klog_spark.datapipe.dedup import embedding_near_dups
-
-    dup = emb.filter(F.col("vec_id") % 20 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(dup)
-    rows = embedding_near_dups(corpus, threshold=0.95).collect()
-    planted = {(r["vec_id"] - 100000, r["vec_id"]) for r in dup.collect()}
-    got = {(r["id1"], r["id2"]) for r in rows}
-    assert planted == got  # identical vectors, nothing else is close
-
-
-def test_ngram_max_df_cap_is_subquadratic_on_hot_shingle(spark):
-    """Every doc shares one boilerplate shingle; with a df cap the candidate
-    count must collapse from ~n^2/2 to the true near-dup pairs only."""
-    from klog_spark.datapipe.dedup import _word_shingles, shingle_candidates
-
-    n = 60
-    rows = [(i, f"hot shingle boiler u{i} v{i} w{i} x{i} y{i} z{i}") for i in range(n)]
-    rows.append((1000, rows[0][1]))  # one true dup pair
-    docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-    sh = _word_shingles(docs.select("doc_id", "text"), "text", 3)
-    uncapped = shingle_candidates(sh, max_df=None).count()
-    capped = shingle_candidates(sh, max_df=10).count()
-    assert uncapped >= n * (n - 1) // 2  # the hot shingle pairs everyone
-    assert capped == 1  # only the planted dup survives candidate generation
-
-
-def test_ngram_max_df_does_not_change_results_below_cap(dup_corpus):
-    """max_df above the fixture's max shingle df => identical exact output."""
-    from klog_spark.datapipe.dedup import ngram_jaccard_pairs
-
-    free = {tuple(r) for r in ngram_jaccard_pairs(dup_corpus, n=3, threshold=0.5).collect()}
-    capped = {tuple(r) for r in ngram_jaccard_pairs(dup_corpus, n=3, threshold=0.5, max_df=20).collect()}
-    assert free == capped and free
-
-
-def test_minhash_java32_matches_planted_dups(dup_corpus):
-    """The oracle-verifiable java32 hash variant must still find every exact
-    copy (signature agreement 1.0)."""
-    from klog_spark.datapipe.dedup import minhash_dedup
-
-    got = {(r["id1"], r["id2"]) for r in minhash_dedup(dup_corpus, threshold=0.99, hash_fn="java32").collect()}
-    exact_pairs = {
-        (r["doc_id"] - 1000000, r["doc_id"])
-        for r in dup_corpus.filter((F.col("doc_id") >= 1000000) & (F.col("doc_id") < 2000000)).collect()
-    }
-    assert exact_pairs <= got
-
-
-def test_minhash_word_hash_variant_matches_planted_dups(dup_corpus):
-    """VERDICT r7 #5: the allocation-light 'xxhash64_words' signature path
-    (per-word int64 hashes combined per shingle — NO n-gram strings) finds
-    every planted exact copy at threshold 0.99 and agrees with the string
-    path on the full detected pair set at the default threshold (same
-    MinHash statistics, different-but-uniform hash family)."""
-    from klog_spark.datapipe.dedup import minhash_dedup
-
-    got = {(r["id1"], r["id2"])
-           for r in minhash_dedup(dup_corpus, threshold=0.99,
-                                  hash_fn="xxhash64_words").collect()}
-    exact_pairs = {
-        (r["doc_id"] - 1000000, r["doc_id"])
-        for r in dup_corpus.filter(
-            (F.col("doc_id") >= 1000000) & (F.col("doc_id") < 2000000)).collect()
-    }
-    assert exact_pairs <= got
-
-    base = {(r["id1"], r["id2"])
-            for r in minhash_dedup(dup_corpus, threshold=0.5).collect()}
-    words = {(r["id1"], r["id2"])
-             for r in minhash_dedup(dup_corpus, threshold=0.5,
-                                    hash_fn="xxhash64_words").collect()}
-    # near-dup (non-exact) pairs may flip on hash-family boundaries; the
-    # exact copies must be in both and the sets must agree on >= 95%
-    assert exact_pairs <= base and exact_pairs <= words
-    assert len(base & words) >= 0.95 * max(len(base), len(words))
-
-
-def test_embedding_lsh_dedup_matches_exact(spark, emb):
-    """The bucketed (no-O(n^2)) path must find the planted duplicates the
-    exact cross-join path finds."""
-    from klog_spark.datapipe.dedup import embedding_near_dups, embedding_near_dups_lsh
-
-    dup = emb.filter(F.col("vec_id") % 20 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(dup)
-    exact = {(r["id1"], r["id2"]) for r in embedding_near_dups(corpus, threshold=0.95).collect()}
-    lsh = {(r["id1"], r["id2"]) for r in
-           embedding_near_dups_lsh(corpus, threshold=0.95, n_planes=8, n_tables=2).collect()}
-    assert exact == lsh and exact  # exact dups always bucket-collide
-
-
-def test_near_dup_clusters_transitive_chain(spark):
-    """A~B and B~C (A!~C directly) must land in ONE cluster labelled by the
-    min id — connected components, not just pair grouping."""
-    from klog_spark.datapipe.dedup import near_dup_clusters, ngram_jaccard_pairs
-
-    W = [f"w{i}" for i in range(12)]
-    docs = spark.createDataFrame(
-        [(10, " ".join(W[0:8])), (20, " ".join(W[2:10])), (30, " ".join(W[4:12])),
-         (40, "totally unrelated text about other things entirely")],
-        "doc_id: long, text: string",
-    )
-    pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.5)
-    got = {(r["doc_id"], r["cluster_id"]) for r in near_dup_clusters(pairs).collect()}
-    assert got == {(10, 10), (20, 10), (30, 10)}  # 40 has no pair -> no row
-
-
-def test_ivf_kmeans_training_fixes_cell_balance():
-    """On a fixture where the leading ids all sit in ONE cluster, first-N
-    centroid init collapses whole far clusters into single cells (the IVF
-    scaling pathology: one probe scans a quarter of the corpus). Sampled
-    k-means training must keep cells balanced."""
-    import numpy as np
-
-    from klog_spark.datapipe.similarity import kmeans_centroids
-
-    rng = np.random.default_rng(3)
-    # four directional clusters (none at the origin: cosine ground truth
-    # must respect the cluster structure)
-    centers = np.zeros((4, 16))
-    for i in range(4):
-        centers[i, i] = 40.0
-    corpus = np.concatenate([c + rng.standard_normal((200, 16)) for c in centers])
-    # ids in cluster order: ids 0..199 are cluster 0 -> first-16 init is
-    # 16 centroids inside one cluster
-
-    def max_cell(cmat):
-        d = (cmat * cmat).sum(axis=1)[None, :] - 2.0 * (corpus @ cmat.T)
-        return int(np.bincount(np.argmin(d, axis=1), minlength=len(cmat)).max())
-
-    first_n = corpus[:16]
-    trained = kmeans_centroids(corpus[:1024], 16, seed=7)
-    assert max_cell(first_n) >= 200        # >= one whole far cluster collapsed
-    assert max_cell(trained) <= 120        # balanced: ~n/16 = 50 per cell
-
-
-def test_near_dup_clusters_long_chain(spark):
-    """A 200-node path graph: min-label propagation would need 199 rounds;
-    the large-star/small-star alternation must converge inside the default
-    max_iter (O(log^2 n) rounds). Also covers two components at once and
-    reversed/self/duplicate pair noise."""
-    from klog_spark.datapipe.dedup import near_dup_clusters
-
-    chain = [(i, i + 1) for i in range(200, 400)]          # component min=200
-    other = [(1000, 1001), (1001, 1000), (1002, 1001), (1002, 1002)]
-    pairs = spark.createDataFrame(chain + other, "id1: long, id2: long")
-    got = {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
-    assert {d for d in got if d < 1000} == set(range(200, 401))
-    assert all(got[d] == 200 for d in range(200, 401))
-    assert got[1000] == got[1001] == got[1002] == 1000
 
 
 def test_exact_dedup_keep_best_policy(spark):
@@ -335,171 +149,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
             for r in merged.itertuples()
         }
         assert got == want
-
-
-def test_repeated_ngram_spans(spark):
-    """Cross-doc repeated 4-gram spans: planted shared passages are found
-    with exact word offsets, overlapping repeats merge into maximal spans,
-    unique text is never flagged, and the xxhash64-keyed scale variant
-    equals the string-keyed one."""
-    from klog_spark.datapipe.dedup import repeated_ngram_spans
-
-    shared = "alpha beta gamma delta epsilon zeta"       # 6 words
-    rows = [
-        (1, f"u1a u1b {shared} u1c u1d"),                # span at words [2, 8)
-        (2, f"{shared} completely different tail here"),  # span at [0, 6)
-        (3, "totally unique words nothing repeated at all ever"),
-        (4, f"x1 x2 x3 {shared} y1 {shared}"),            # two spans, gap 1 word
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = repeated_ngram_spans(df, n=4, min_df=2)
-    got = {(r["doc_id"], r["span_start"], r["span_end"])
-           for r in out.collect()}
-    # doc4: spans [3,9) and [10,16); the 1-word gap means the two repeats
-    # do NOT merge (no flagged 4-gram bridges them)
-    assert got == {(1, 2, 8), (2, 0, 6), (4, 3, 9), (4, 10, 16)}
-    hashed = {(r["doc_id"], r["span_start"], r["span_end"])
-              for r in repeated_ngram_spans(df, n=4, min_df=2,
-                                            hash_ngrams=True).collect()}
-    assert hashed == got
-
-    # adjacent repeats DO merge: two shared trigram-blocks overlapping
-    rows2 = [(1, "p q r s t u v"), (2, "p q r s t u v end")]
-    df2 = spark.createDataFrame(rows2, "doc_id long, text string")
-    out2 = {(r["doc_id"], r["span_start"], r["span_end"], r["n_flagged_positions"])
-            for r in repeated_ngram_spans(df2, n=4, min_df=2).collect()}
-    assert out2 == {(1, 0, 7, 4), (2, 0, 7, 4)}
-
-
-def test_repeated_spans_property(spark):
-    """Property: on random small corpora over a tiny vocabulary (forcing
-    natural cross-doc n-gram repeats), the Spark construction equals a
-    sequential Python oracle computing flagged positions and merged spans
-    directly."""
-    import random
-
-    from klog_spark.datapipe.dedup import repeated_ngram_spans
-
-    rng = random.Random("spans-prop")
-    N = 4
-    for trial in range(6):
-        vocab = [f"w{j}" for j in range(rng.randint(3, 6))]
-        docs = []
-        for i in range(rng.randint(2, 7)):
-            n_words = rng.randint(0, 20)
-            docs.append((i, " ".join(rng.choice(vocab) for _ in range(n_words))))
-
-        # sequential oracle
-        grams = {}
-        for i, t in docs:
-            ws = [w for w in t.lower().strip().split() if w]
-            for p in range(max(0, len(ws) - N + 1)):
-                grams.setdefault(" ".join(ws[p:p + N]), set()).add(i)
-        repeated = {g for g, ids in grams.items() if len(ids) >= 2}
-        want = set()
-        for i, t in docs:
-            ws = [w for w in t.lower().strip().split() if w]
-            flagged = [p for p in range(max(0, len(ws) - N + 1))
-                       if " ".join(ws[p:p + N]) in repeated]
-            spans, cur = [], None
-            for p in flagged:
-                if cur is not None and p < cur[1]:
-                    cur = (cur[0], p + N, cur[2] + 1)
-                else:
-                    if cur:
-                        spans.append(cur)
-                    cur = (p, p + N, 1)
-            if cur:
-                spans.append(cur)
-            want |= {(i, s, e, k) for s, e, k in spans}
-
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_flagged_positions"])
-               for r in repeated_ngram_spans(df, n=N, min_df=2).collect()}
-        assert got == want, f"trial {trial}: {sorted(got)} != {sorted(want)}"
-
-
-def test_remove_repeated_spans(spark):
-    """The excision step: planted shared passages are spliced out at exact
-    word offsets, untouched docs pass through whole, a fully-duplicated doc
-    collapses to the empty string, and detection+removal composes with a
-    precomputed span table identically to the fused path."""
-    from klog_spark.datapipe.dedup import (
-        remove_repeated_spans, repeated_ngram_spans,
-    )
-
-    shared = "alpha beta gamma delta epsilon zeta"       # 6 words
-    rows = [
-        (1, f"u1a u1b {shared} u1c u1d"),
-        (2, f"{shared} completely different tail here"),
-        (3, "totally unique words nothing repeated at all ever"),
-        (4, f"x1 x2 x3 {shared} y1 {shared}"),
-        (5, shared), (6, shared),                         # fully duplicated
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: (r["cleaned_text"], r["n_removed_words"], r["n_kept_words"])
-           for r in remove_repeated_spans(df, n=4, min_df=2).collect()}
-    assert out[1] == ("u1a u1b u1c u1d", 6, 4)
-    assert out[2] == ("completely different tail here", 6, 4)
-    assert out[3] == ("totally unique words nothing repeated at all ever", 0, 8)
-    # doc4: spans [3,9) and [10,16) -> words x1 x2 x3 + the 1-word gap y1
-    assert out[4] == ("x1 x2 x3 y1", 12, 4)
-    assert out[5] == ("", 6, 0) and out[6] == ("", 6, 0)
-    # word-count conservation on every row
-    for doc_id, (_, rem, kept) in out.items():
-        n = len(dict(rows)[doc_id].split())
-        assert rem + kept == n, doc_id
-
-    spans = repeated_ngram_spans(df, n=4, min_df=2)
-    via_table = {r["doc_id"]: (r["cleaned_text"], r["n_removed_words"],
-                               r["n_kept_words"])
-                 for r in remove_repeated_spans(df, spans=spans).collect()}
-    assert via_table == out
-
-
-def test_semdedup_embedding_clusters(spark):
-    """SemDeDup keep/drop semantics on a hand-built corpus: exact-duplicate
-    sets co-locate in one cell and keep exactly their lowest id (dup_of
-    points at it), singletons survive, and cross-cluster vectors are never
-    compared (orthogonal vectors share no cell at any threshold)."""
-    from klog_spark.datapipe.dedup import semdedup_embedding
-
-    e1, e2, e3 = [1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]
-    rows = [(0, e1), (1, e2), (2, e3),          # 3 orthogonal "centroids"
-            (10, e1), (11, e1),                  # dups of e1 -> keep 0
-            (20, e2),                            # dup of e2 -> keep 1
-            (30, [0.7, 0.7, 0.14])]              # singleton, own direction
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r["vec_id"]: (r["dup_of"], r["kept"])
-           for r in semdedup_embedding(df, threshold=0.95, n_centroids=3).collect()}
-    assert out[0] == (None, True) and out[1] == (None, True) and out[2] == (None, True)
-    assert out[10] == (0, False) and out[11] == (0, False)
-    assert out[20] == (1, False)
-    assert out[30] == (None, True)
-    assert len(out) == 7
-
-
-def test_semdedup_kmeans_path_drops_exact_dups(spark):
-    """The kmeans-trained (scale/balance) quantizer path: exact duplicates
-    have identical vectors, so they land in the same cell under ANY
-    quantizer and are always pruned with the lowest id as canonical —
-    regardless of how the cells partition the rest of the corpus."""
-    import random
-
-    from klog_spark.datapipe.dedup import semdedup_embedding
-
-    rng = random.Random("semdedup-km")
-    base = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(40)]
-    rows = [(i, v) for i, v in enumerate(base)]
-    rows += [(100 + i, base[i]) for i in range(0, 40, 5)]   # 8 exact dups
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r["vec_id"]: (r["dup_of"], r["kept"])
-           for r in semdedup_embedding(df, threshold=0.999, n_centroids=4,
-                                       train="kmeans", seed=3).collect()}
-    assert len(out) == 48
-    for i in range(0, 40, 5):
-        assert out[100 + i] == (i, False)       # dup dropped, canonical = original
-        assert out[i][1]                        # original kept
 
 
 def test_bloom_screen_no_false_negatives(spark):
@@ -706,52 +355,6 @@ def test_bloom_screen_broadcast_empty_bits(spark):
     assert out == {1: (0, False), 2: (0, False)}
 
 
-def test_semdedup_mega_cell_fails_loud(spark):
-    """VERDICT r6 next #4: a degenerate embedding distribution that lands
-    (nearly) everything in one cell must raise BEFORE the per-cell
-    self-join runs — never a silent O(n^2) stage — and the error names the
-    offending cell; with the cap lifted the same corpus still dedups."""
-    from klog_spark.datapipe.dedup import semdedup_embedding
-
-    # 120 near-identical vectors -> one mega-cell under any quantizer
-    rows = [(i, [1.0, 0.0, 0.0, i * 1e-9]) for i in range(120)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="max_cell_size"):
-        semdedup_embedding(df, threshold=0.99, n_centroids=4,
-                           max_cell_size=50)
-    out = semdedup_embedding(df, threshold=0.99, n_centroids=4,
-                             max_cell_size=200).collect()
-    assert len(out) == 120
-    assert sum(0 if r["kept"] else 1 for r in out) > 0
-
-
-def test_semdedup_pinned_centroids_match_live_trainer(spark):
-    """Pin-parity (VERDICT r6 next #3, the SCORED_FILTER_WEIGHTS pattern):
-    re-running the live kmeans trainer (similarity.kmeans_centroids, same
-    sample/seed/iters as tools/pin_centroids.py) on the semdedup gate
-    corpus reproduces entry_queries.SEMDEDUP_CENTROIDS bit-for-bit, so the
-    pinned literals can never drift from the code that produced them."""
-    import numpy as np
-
-    from klog_spark import entry_queries as eq
-    from klog_spark.datapipe.similarity import kmeans_centroids
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    dup = emb.filter(F.col("vec_id") % 20 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(dup)
-    sample = np.array(
-        [r["embedding"] for r in
-         corpus.select("vec_id", "embedding").orderBy("vec_id").limit(4096).collect()],
-        dtype=np.float64,
-    )
-    cents = kmeans_centroids(sample, 16, n_iter=10, seed=7)
-    pinned = np.array(eq.SEMDEDUP_CENTROIDS, dtype=np.float64)
-    assert cents.shape == pinned.shape == (16, 64)
-    assert np.array_equal(cents, pinned)   # repr round-trips exactly
-
-
 def test_decontaminate_drops_planted_contamination(spark):
     """Contamination REMOVAL (VERDICT r6 next #5): a train doc sharing >= 3
     distinct 5-gram shingles with the test side is dropped; clean train
@@ -790,22 +393,6 @@ def test_decontaminate_drops_planted_contamination(spark):
     assert rescan == []
 
 
-def test_remove_repeated_spans_empty_doc_counts_zero(spark):
-    """ADVICE r6: an empty/whitespace-only document reports n_kept_words=0
-    (the '' split artifact is filtered), matching the sibling word-count
-    operators."""
-    from klog_spark.datapipe.dedup import remove_repeated_spans
-
-    docs = spark.createDataFrame(
-        [(1, ""), (2, "   "), (3, "real words here")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in remove_repeated_spans(docs, n=3, min_df=2).collect()}
-    assert got[1]["n_kept_words"] == 0 and got[1]["cleaned_text"] == ""
-    assert got[2]["n_kept_words"] == 0 and got[2]["cleaned_text"] == ""
-    assert got[3]["n_kept_words"] == 3 and got[3]["cleaned_text"] == "real words here"
-
-
 def test_packed_bloom_stream_parity(spark, tmp_path_factory):
     """The packed-bitmap Bloom screen (broadcast bitmap + Arrow kernel) is
     a stateless per-row kernel, so it applies UNCHANGED to a streaming
@@ -831,78 +418,6 @@ def test_packed_bloom_stream_parity(spark, tmp_path_factory):
     got_bl = {r["doc_id"]: (r["n_hits"], r["maybe_dup"])
               for r in spark.sql("select * from bl_stream").collect()}
     assert got_bl == want_bl
-
-
-def test_semdedup_keep_farthest_policy(spark):
-    """keep='farthest' (D4-style prototypes): within a near-dup
-    neighborhood the member farthest from its centroid survives and the
-    cluster-typical member is dropped; exact copies still resolve to the
-    original via the id tiebreak; min_id semantics are unchanged."""
-    from klog_spark.datapipe.dedup import semdedup_embedding
-
-    rows = [
-        (1, [1.0, 0.0]),    # nearest the centroid -> dropped under farthest
-        (2, [1.2, 0.0]),    # same direction, farther -> the kept prototype
-        (3, [0.0, 1.0]),    # other cell, untouched
-        (10, [1.2, 0.0]),   # exact copy of 2 -> tie, larger id loses
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = [[1.0, 0.0], [0.0, 1.0]]
-    out_min = {r["vec_id"]: (r["dup_of"], r["kept"])
-               for r in semdedup_embedding(df, 0.95, centroids=cents).collect()}
-    out_far = {r["vec_id"]: (r["dup_of"], r["kept"])
-               for r in semdedup_embedding(df, 0.95, centroids=cents,
-                                           keep="farthest").collect()}
-    assert out_min == {1: (None, True), 2: (1, False), 3: (None, True), 10: (1, False)}
-    assert out_far == {1: (2, False), 2: (None, True), 3: (None, True), 10: (2, False)}
-    with pytest.raises(ValueError, match="keep"):
-        semdedup_embedding(df, 0.95, centroids=cents, keep="nope")
-
-
-def test_dedup_paragraph_blocks(spark):
-    """Paragraph-block dedup: exact duplicate docs come back empty, the
-    first occurrence keeps its full text, within-doc repeated blocks keep
-    only the first copy, empty docs report 0 blocks, and the xxhash64-keyed
-    scale variant equals the string-keyed one. Verified against a
-    sequential Python oracle replaying the first-(doc_id, block_idx) rule."""
-    from klog_spark.datapipe.dedup import dedup_paragraph_blocks
-
-    K = 3
-    blk_a = "a1 a2 a3"
-    blk_b = "b1 b2 b3"
-    rows = [
-        (1, f"{blk_a} {blk_b} tail1"),       # all blocks first-occurrence
-        (2, f"{blk_a} {blk_b} tail1"),       # exact copy -> everything dropped
-        (3, f"{blk_b} {blk_b} fresh"),       # within-doc repeat of b... but
-        #   doc3 block0 = blk_b already seen in doc1 block1 -> dropped;
-        #   doc3 block1 = blk_b dropped too; block2 = "fresh" kept
-        (4, "   "),                          # whitespace-only -> 0 blocks
-        (5, "solo"),                         # short doc, 1 partial block
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    # sequential oracle
-    seen, want = set(), {}
-    for doc_id, text in rows:
-        ws = [w for w in text.lower().strip().split() if w]
-        blocks = [" ".join(ws[i:i + K]) for i in range(0, len(ws), K)]
-        kept = []
-        for b in blocks:
-            if b not in seen:
-                seen.add(b)
-                kept.append(b)
-        want[doc_id] = (len(blocks), len(kept), " ".join(kept))
-
-    out = {r["doc_id"]: (r["n_blocks"], r["n_kept_blocks"], r["kept_text"])
-           for r in dedup_paragraph_blocks(df, block_words=K).collect()}
-    assert out == want
-    assert out[2] == (3, 0, "")
-    assert out[4] == (0, 0, "")
-
-    hashed = {r["doc_id"]: (r["n_blocks"], r["n_kept_blocks"], r["kept_text"])
-              for r in dedup_paragraph_blocks(df, block_words=K,
-                                              hash_blocks=True).collect()}
-    assert hashed == out
 
 
 def test_ngram_novelty_semantics(spark):
@@ -989,7 +504,7 @@ def test_ngram_novelty_packed_matches_exact(spark):
 def test_ngram_novelty_packed_xxhash_variant(spark):
     """The xxhash64 throughput probes (paired with an xxhash64-built
     bitmap) reproduce the exact operator's novelty at m = 2^20, like the
-    java32 gate path — the dedup_minhash_lsh bench/gate hash split."""
+    java32 gate path — xxhash64 for the bench, java32 for the gate."""
     from klog_spark.datapipe.dedup import (
         bloom_pack, ngram_novelty, ngram_novelty_packed, shingle_bloom_bits,
     )

@@ -258,45 +258,6 @@ def test_dedup_stream_within_watermark(spark, tmp_path_factory):
     assert {r["text"] for r in out} == {f"txt {i}" for i in range(25)}
 
 
-def test_block_dedup_stream_matches_batch_block_set(spark, tmp_path_factory):
-    """Streaming block admission: exactly one row per distinct block
-    survives across micro-batches, and the admitted block set equals the
-    batch operator's kept set (duplicates planted across files so state
-    must carry between triggers)."""
-    from klog_spark.datapipe.dedup import dedup_paragraph_blocks
-    from klog_spark.streaming import block_dedup_stream
-
-    src = tmp_path_factory.mktemp("blk_stream")
-    blocks = [f"b{j} w1 w2" for j in range(10)]           # 3-word blocks
-    rows = [(i, f"{blocks[i % 10]} {blocks[(i + 1) % 10]}")
-            for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    df.repartition(5).write.mode("overwrite").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        block_dedup_stream(stream, block_words=3)
-        .writeStream.format("memory").queryName("blk_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out = spark.sql("select * from blk_out").collect()
-    assert len(out) == len({r["block_text"] for r in out})  # one per block
-    batch = dedup_paragraph_blocks(df, block_words=3)
-    batch_blocks = set()
-    for r in batch.collect():
-        if r["kept_text"]:
-            ws = r["kept_text"].split()
-            batch_blocks |= {" ".join(ws[i:i + 3]) for i in range(0, len(ws), 3)}
-    assert {r["block_text"] for r in out} == batch_blocks
-
-
 def test_novelty_screen_stream_matches_batch(spark, tmp_path_factory):
     """Stateless packed-Bloom novelty screen: streaming (append, no
     watermark, maxFilesPerTrigger=1) emits exactly the batch operator's

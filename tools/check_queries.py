@@ -174,6 +174,10 @@ def main(names=None):
     failures = []
     compiled_before = compiled_classes(spark)
     for name in selected:
+        if name not in oss:
+            print(f"  {name:36s} NO ORACLE")
+            failures.append(name)
+            continue
         release_tracked()  # per-row storage hygiene (ADVICE r7)
         t0 = time.time()
         sdf = qs[name](spark, SF_DIR)

@@ -64,19 +64,10 @@ def main(sf: float = 0.1) -> int:
             eq.q_group_commit_rates,
             eq.SQL_GROUP_COMMIT_RATES.replace(eq.klog_base_cte(), eq.klog_base_cte(fx)),
         ),
-        # round-5 corpus heavyweight over the sf-scale documents table
-        "repeated_spans": (eq.q_repeated_spans, eq.SQL_REPEATED_SPANS),
-        # round-6 corpus operator at 10x the gate scale
-        "semdedup": (eq.q_semdedup, eq.SQL_SEMDEDUP),
         # round-7 operators at 10x the gate scale: decontamination's shingle
-        # join, the packed-bitmap Bloom kernel (same oracle as relational)
-        # and the prototype keep policy
+        # join and the packed-bitmap Bloom kernel (same oracle as relational)
         "contamination_removal": (eq.q_contamination_removal, eq.SQL_CONTAMINATION_REMOVAL),
         "bloom_screen_packed": (eq.q_bloom_screen_packed, eq.SQL_BLOOM_SCREEN_PACKED),
-        "semdedup_prototypes": (eq.q_semdedup_prototypes, eq.SQL_SEMDEDUP_PROTOTYPES),
-        # late-round-7 operator: paragraph dedup's global first-occurrence
-        # rule
-        "dedup_paragraphs": (eq.q_dedup_paragraphs, eq.SQL_DEDUP_PARAGRAPHS),
         # round-8 operators at 10x the gate scale: the novelty shingle
         # join and the digest self-join matrix
         "ngram_novelty": (eq.q_ngram_novelty, eq.SQL_NGRAM_NOVELTY),
@@ -88,10 +79,6 @@ def main(sf: float = 0.1) -> int:
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
     )
 
     failures = []

@@ -67,19 +67,6 @@ def main() -> None:
     pruned_plan = plan_of(staged.select("doc_id", "commit"))
     sections.append(("staging partition pruning", pruned_plan, ["PartitionFilters"]))
 
-    # 5. dedup minhash LSH candidate join (shuffle on band buckets only)
-    d = eq.q_dedup_minhash(spark, SF_DIR)
-    sections.append(("minhash LSH", plan_of(d), ["HashAggregate"]))
-
-    # 6. embedding LSH dedup: bucket equi-joins only — the plan must contain
-    #    NO cartesian/nested-loop stage (the whole point vs dedup_embedding)
-    el = eq.q_dedup_embedding_lsh(spark, SF_DIR)
-    el_plan = plan_of(el, "simple")
-    # equi-join on bucket — any hash/merge join form is fine (AQE picks)
-    sections.append(("embedding LSH dedup", plan_of(el), ["Join"]))
-    assert "CartesianProduct" not in el_plan and "BroadcastNestedLoopJoin" not in el_plan, \
-        "embedding LSH dedup must not contain an all-pairs stage"
-
     # 8. routed write: pre-shuffle Exchange on (record_class, bucket) so each
     #    task writes ~one sink's file
     import io as _io, contextlib as _ctx
@@ -128,20 +115,6 @@ def main() -> None:
     sections.append(("AS-OF join (union+window)", plan_of(af), ["Window"]))
     assert "CartesianProduct" not in af_plan and "BroadcastNestedLoopJoin" not in af_plan
 
-    # 8f. corpus stats: the repeated-span merge is windows + aggregates with
-    #     no nested loop anywhere
-    rs = eq.q_repeated_spans(spark, SF_DIR)
-    rs_plan = plan_of(rs, "simple")
-    sections.append(("repeated-span detection", plan_of(rs), ["Window", "HashAggregate"]))
-    assert "CartesianProduct" not in rs_plan and "BroadcastNestedLoopJoin" not in rs_plan
-
-    # 8g. round-6 corpus operator: semdedup's only pairwise work is the
-    #     per-cell equi-join (no nested loop)
-    sd = eq.q_semdedup(spark, SF_DIR)
-    sd_plan = plan_of(sd, "simple")
-    sections.append(("SemDeDup (IVF-cell prune)", plan_of(sd), ["HashAggregate"]))
-    assert "CartesianProduct" not in sd_plan and "BroadcastNestedLoopJoin" not in sd_plan
-
     # 8h. round-7 operators: decontamination is the same capped shingle
     #     equi-join as the scan (no cartesian); the packed Bloom screen is
     #     a pure per-row kernel (ZERO Exchange)
@@ -153,18 +126,6 @@ def main() -> None:
     bsp_plan = plan_of(bsp, "simple")
     sections.append(("packed Bloom screen", plan_of(bsp), ["MapInArrow"]))
     assert "Exchange" not in bsp_plan, "packed Bloom probe must not shuffle"
-    sp = eq.q_semdedup_prototypes(spark, SF_DIR)
-    sp_plan = plan_of(sp, "simple")
-    sections.append(("SemDeDup prototypes (keep=farthest)", plan_of(sp), ["BroadcastHashJoin"]))
-    assert "CartesianProduct" not in sp_plan and "BroadcastNestedLoopJoin" not in sp_plan
-
-    # 8i. late-round-7 operator: paragraph dedup's keep decision must be a
-    #     partial-aggregated hash agg (never a window funneling hot blocks
-    #     through one task)
-    dp = eq.q_dedup_paragraphs(spark, SF_DIR)
-    dp_plan = plan_of(dp, "simple")
-    sections.append(("paragraph-block dedup", plan_of(dp), ["HashAggregate"]))
-    assert "Window" not in dp_plan, "block keep decision must be an agg, not a window"
 
     # 8j. round-8 operators: novelty is one distinct-shingle equi-join (no
     #     cartesian); the cross-source matrix is a digest-keyed self-join

@@ -106,17 +106,10 @@ def main() -> None:
             "outside the timed window)"
         )
         sanity_desc = "sum(n_novel) / zero-novelty docs"
-    elif mode.startswith("dedup"):
-        input_desc = (
-            f"synthetic near-dup document corpus sf={sf} "
-            f"({results[n]['rows']:,} docs, exact copy planted every 10th)"
-        )
-        sanity_desc = "near-dup pairs / flagged docs"
     else:
         input_desc = f"seeded klog fixture sf={sf} ({results[n]['rows']:,} tokenized lines)"
         sanity_desc = "num_committed / num_aborted"
-    unit = ("docs/s" if mode.startswith("dedup") or mode == "novelty"
-            else "sequences/s")
+    unit = "docs/s" if mode == "novelty" else "sequences/s"
     proto = (
         f"{4*n} single-core 6-GiB executor JVMs vs {n} (local-cluster master: "
         "separate executor processes, per-executor heap/GC constant as N "

@@ -37,16 +37,6 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    if mode in ("dedup", "dedup_words"):
-        # dedup_words = the allocation-light signature kernel (VERDICT r7
-        # #5): word-hash int64 shingle keys, no n-gram strings — same LSH /
-        # verify dataflow, same planted-pair answer
-        run_dedup(spark, sf,
-                  hash_fn="xxhash64_words" if mode == "dedup_words" else "xxhash64")
-        return
-    if mode == "paragraphs":
-        run_paragraphs(spark, sf)
-        return
     if mode == "novelty":
         run_novelty(spark, sf)
         return
@@ -115,138 +105,6 @@ def main() -> None:
         spark.stop()
 
 
-def run_dedup(spark: SparkSession, sf: float,
-              hash_fn: str = "xxhash64") -> None:
-    """LLM-pipeline scaling mode (VERDICT r6 next #7): MinHash+LSH near-dup
-    detection over a deterministic synthetic document corpus — the same
-    N -> 4N two-parallelism protocol as parse_agg, so the dedup half of the
-    engine carries its own >= 0.8 efficiency evidence.
-
-    Corpus: sf-scaled (sf1 = 100k docs of 80 synthetic words each, vocab
-    4000), PLUS an exact copy of every 10th doc — generated JVM-side from
-    spark.range (no RNG, identical at every parallelism level), written to
-    tmp parquet OUTSIDE the timed window (the fixture role). Timed: scan ->
-    minhash signatures (64 perms) -> banded LSH candidates -> signature
-    verify -> pair count. Sanity across levels: num_committed = verified
-    near-dup pairs, num_aborted = distinct flagged docs.
-    """
-    import os as _os
-
-    from klog_spark.datapipe.dedup import minhash_dedup
-
-    n_docs = max(1000, int(100_000 * sf))
-    out = tempfile.mkdtemp(prefix="klog-scaling-dedup-",
-                           dir="/dev/shm" if _os.path.isdir("/dev/shm") else None)
-    try:
-        words = F.transform(
-            F.sequence(F.lit(0), F.lit(79)),
-            lambda i: F.concat(
-                F.lit("w"),
-                F.pmod(F.xxhash64(F.col("doc_id") * F.lit(997) + i), F.lit(4000)),
-            ),
-        )
-        base = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"), F.concat_ws(" ", words).alias("text")
-        )
-        dups = base.filter(F.col("doc_id") % 10 == 0).select(
-            (F.col("doc_id") + n_docs).alias("doc_id"), "text"
-        )
-        base.unionByName(dups).repartition(4 * spark_cores()) \
-            .write.mode("overwrite").parquet(f"{out}/docs")
-        docs = spark.read.parquet(f"{out}/docs")
-        docs.limit(16).collect()  # pre-warm (session-init, excluded)
-
-        t0 = time.time()
-        n = docs.count()  # first timed action
-        pairs = minhash_dedup(docs, num_hashes=64, bands=16, shingle_n=3,
-                              threshold=0.5, hash_fn=hash_fn)
-        # one action for the whole dedup: 2*n_pairs exploded members ->
-        # (pair count, distinct flagged docs) in a single aggregate
-        row = (
-            pairs.select(F.explode(F.array("id1", "id2")).alias("d"))
-            .agg((F.count("*") / 2).cast("long").alias("np"),
-                 F.countDistinct("d").alias("nf"))
-            .collect()[0]
-        )
-        n_pairs, n_flagged = row["np"], row["nf"]
-        wall = time.time() - t0
-        print(json.dumps({
-            "master": spark.sparkContext.master,
-            "mode": "dedup" if hash_fn == "xxhash64" else "dedup_words",
-            "rows": n,
-            "wall_s": round(wall, 2),
-            "rows_per_sec": round(n / wall, 1),
-            "num_committed": n_pairs,
-            "num_aborted": n_flagged,
-            "n_sessions": -1,
-        }))
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        spark.stop()
-
-
-def run_paragraphs(spark: SparkSession, sf: float) -> None:
-    """Paragraph-block dedup scaling mode: the round-7 first-occurrence-keep
-    rewrite over the same deterministic synthetic corpus as run_dedup, under
-    the identical N -> 4N protocol. Exercises the min-struct block
-    aggregation (one wide shuffle on 8-byte hashed block keys), the doc_id
-    regroup and the reassembly join — a different shuffle/agg mix than
-    MinHash (no Python beyond the scan, no banded explode), so it isolates
-    whether the dedup family's scaling ceiling is the algorithm or the VM.
-
-    Sanity across levels: num_committed = total blocks,
-    num_aborted = globally-kept blocks (both must be identical at N and 4N).
-    """
-    import os as _os
-
-    from klog_spark.datapipe.dedup import dedup_paragraph_blocks
-
-    n_docs = max(1000, int(100_000 * sf))
-    out = tempfile.mkdtemp(prefix="klog-scaling-para-",
-                           dir="/dev/shm" if _os.path.isdir("/dev/shm") else None)
-    try:
-        words = F.transform(
-            F.sequence(F.lit(0), F.lit(79)),
-            lambda i: F.concat(
-                F.lit("w"),
-                F.pmod(F.xxhash64(F.col("doc_id") * F.lit(997) + i), F.lit(4000)),
-            ),
-        )
-        base = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"), F.concat_ws(" ", words).alias("text")
-        )
-        dups = base.filter(F.col("doc_id") % 10 == 0).select(
-            (F.col("doc_id") + n_docs).alias("doc_id"), "text"
-        )
-        base.unionByName(dups).repartition(4 * spark_cores()) \
-            .write.mode("overwrite").parquet(f"{out}/docs")
-        docs = spark.read.parquet(f"{out}/docs")
-        docs.limit(16).collect()  # pre-warm (session-init, excluded)
-
-        t0 = time.time()
-        n = docs.count()  # first timed action
-        rewritten = dedup_paragraph_blocks(docs, block_words=16,
-                                           hash_blocks=True)
-        row = rewritten.agg(
-            F.sum("n_blocks").cast("long").alias("nb"),
-            F.sum("n_kept_blocks").cast("long").alias("nk"),
-        ).collect()[0]
-        wall = time.time() - t0
-        print(json.dumps({
-            "master": spark.sparkContext.master,
-            "mode": "paragraphs",
-            "rows": n,
-            "wall_s": round(wall, 2),
-            "rows_per_sec": round(n / wall, 1),
-            "num_committed": row["nb"],
-            "num_aborted": row["nk"],
-            "n_sessions": -1,
-        }))
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        spark.stop()
-
-
 def spark_cores() -> int:
     """Shuffle-partition count = core count, passed by the runner."""
     import os
@@ -262,8 +120,7 @@ def run_novelty(spark: SparkSession, sf: float) -> None:
     scalar aggregate. This is the firehose-rate component of the dedup
     family (the screen every arriving document passes at 100 TB); with no
     shuffle in the timed plan it should scale at the VM's pure-compute
-    ceiling, separating the family's kernel scaling from its candidate-join
-    IPC ceiling.
+    ceiling.
 
     Sanity across levels: num_committed = sum(n_novel),
     num_aborted = count(novelty_ppm = 0) (the planted republications).
