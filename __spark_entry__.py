@@ -8,8 +8,8 @@ klog_spark/entry_queries.py: the Spark side of a klog row consumes only the
 tokenized input, its oracle only the text rendition of the same fixture).
 ``queries()`` holds at most 50 rows, every one with an oracle; the extras
 are near-duplicate or subsumed variants under the same contract, run
-against their oracles by ``tools/check_queries.py``. The rows cover the
-klog pipeline and the dedup operators in ``klog_spark/datapipe``.
+against their oracles by ``tools/check_queries.py``. Every row is a
+``klog_*`` row over the klog pipeline: parse, route, enrich and aggregate.
 """
 
 from __future__ import annotations
@@ -43,17 +43,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # reference leaves it a TODO, Segment.java:28)
         "klog_group_offsets": eq.q_sink_group_offsets,
         "klog_group_offsets_read_committed": eq.q_group_offsets_read_committed,
-        # training-data pipeline (dedup)
-        "dedup_canonical": eq.q_dedup_canonical,           # keep-best resolution (subsumes dedup_exact's digest agg)
-        "contamination_removal": eq.q_contamination_removal,  # decontaminated-corpus decision table (supersedes contamination_check row: same shingle join, train-side agg)
-        "corpus_pack": eq.q_corpus_pack,                   # token-budget sequence packing
-        # round-8-built operators, driver rows from birth (standing
-        # rotation discipline; the rotated-out row klog_file_health is green
-        # in CORRECTNESS_r07 with its subsumption note in extra_queries())
-        "ngram_novelty": eq.q_ngram_novelty,               # n-gram freshness vs a reference corpus (inverse contamination; planted zero-novelty rows)
-        "cross_source_dups": eq.q_cross_source_dups,       # cross-source duplication matrix (digest-keyed; per-source dedup-budget audit)
-        # round-7-built operators, driver rows from birth (no stale round)
-        "bloom_screen_packed": eq.q_bloom_screen_packed,   # packed-bitmap broadcast Bloom, Arrow-kernel probe (VERDICT r6 #2)
         # named custom-operator classes (as-of)
         "klog_batch_state_asof": eq.q_batch_state_asof,
     }
@@ -76,7 +65,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "klog_group_offset_rewinds": eq.q_group_offset_rewinds,  # incident-signal view over the group_offsets row
         "klog_cat_pid_epoch": eq.q_cat_pid_epoch,                # P3/P6 conjunction; P1/P8/F1 keep the cat_pid row
         "klog_abort_cmds": eq.q_abort_cmds,                      # S10+P7; open_txn_abort_cmds keeps the S10 driver row
-        "dedup_exact": eq.q_dedup_exact,                         # digest agg inside dedup_canonical + dedup_incremental rows
         "klog_topics_sanity": eq.q_topics_sanity,                # A8 1-row sanity
         # rotated OUT of the driver gate in round 6 (all green in
         # CORRECTNESS_r05; each capability keeps a driver row via the noted
@@ -89,24 +77,15 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "klog_empty_txns": eq.q_empty_txns,                      # A6: txn_stats num_empty_txn
         "klog_first_last_batch": eq.q_first_last_batch,          # A4: file/line_no extremes; pytest parity
         "klog_group_commit_rates": eq.q_group_commit_rates,      # group family keeps 3 driver rows
-        "dedup_incremental": eq.q_dedup_incremental,             # digest screen: dedup_canonical + contamination_check rows
         # rotated OUT of the driver gate in round 7 (all green in
         # CORRECTNESS_r06; each capability keeps a driver row via the noted
         # subsuming query, plus its pytests)
         "klog_filter_txn_id": eq.q_filter_txn_id,                # P2/P5: state_machine_violations row parses txn_state; CLI predicate pytests
         "klog_batches_per_epoch": eq.q_batches_per_epoch,        # A9: green r1-r6; txn_stats/file_health keep the agg family; salted twin pytest
         "klog_group_lag": eq.q_group_lag,                        # group family keeps 2 driver rows (offsets, read_committed)
-        "leakage_safe_split": eq.q_leakage_safe_split,           # split now driver-exercised INSIDE the contamination_removal row
-        "contamination_check": eq.q_contamination_check,         # superseded by the contamination_removal driver row (same join, train-side agg)
-        # rotated OUT of the driver gate in round 8 (all green in
-        # CORRECTNESS_r07; capability kept by the noted driver row)
-        "bloom_screen": eq.q_bloom_screen,                       # relational Bloom twin; bloom_screen_packed driver row keeps the semantics (parity pytest) at the scale shape
         # rotated OUT mid-round-8 to give the round-8-built operators driver
         # rows from birth (green in CORRECTNESS_r07)
         "klog_file_health": eq.q_file_health,                    # W8/corrupt-rate capability kept by klog_txn_stats (num_offset_gaps) + klog_sink_corrupt driver rows
-        # round-8 scale-path variant, locally gated from birth
-        "ngram_novelty_packed": eq.q_ngram_novelty_packed,       # zero-Exchange packed-Bloom novelty kernel; exact-join twin holds the ngram_novelty driver row
-        "soft_dedup_weights": eq.q_soft_dedup_weights,           # SoftDeDup: 1/n_copies micro weights instead of drops
     }
 
 
@@ -130,13 +109,7 @@ def oracle_sql() -> dict[str, str]:
         "klog_cat_render": eq.SQL_CAT_RENDER,
         "klog_group_offsets": eq.SQL_SINK_GROUP_OFFSETS,
         "klog_group_offsets_read_committed": eq.SQL_GROUP_OFFSETS_READ_COMMITTED,
-        "dedup_canonical": eq.SQL_DEDUP_CANONICAL,
-        "contamination_removal": eq.SQL_CONTAMINATION_REMOVAL,
-        "corpus_pack": eq.SQL_CORPUS_PACK,
-        "bloom_screen_packed": eq.SQL_BLOOM_SCREEN_PACKED,
         # r8-built operators
-        "ngram_novelty": eq.SQL_NGRAM_NOVELTY,
-        "cross_source_dups": eq.SQL_CROSS_SOURCE_DUPS,
         "klog_batch_state_asof": eq.SQL_BATCH_STATE_ASOF,
     }
 
@@ -156,7 +129,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "klog_group_offset_rewinds": eq.SQL_GROUP_OFFSET_REWINDS,
         "klog_cat_pid_epoch": eq.SQL_CAT_PID_EPOCH,
         "klog_abort_cmds": eq.SQL_ABORT_CMDS,
-        "dedup_exact": eq.SQL_DEDUP_EXACT,
         "klog_topics_sanity": eq.SQL_TOPICS_SANITY,
         "klog_sink_control": eq.SQL_SINK_CONTROL,
         "klog_sink_txn_state": eq.SQL_SINK_TXN_STATE,
@@ -166,15 +138,9 @@ def extra_oracle_sql() -> dict[str, str]:
         "klog_empty_txns": eq.SQL_EMPTY_TXNS,
         "klog_first_last_batch": eq.SQL_FIRST_LAST_BATCH,
         "klog_group_commit_rates": eq.SQL_GROUP_COMMIT_RATES,
-        "dedup_incremental": eq.SQL_DEDUP_INCREMENTAL,
         "klog_filter_txn_id": eq.SQL_FILTER_TXN_ID,
         "klog_batches_per_epoch": eq.SQL_BATCHES_PER_EPOCH,
         "klog_group_lag": eq.SQL_GROUP_LAG,
-        "leakage_safe_split": eq.SQL_LEAKAGE_SAFE_SPLIT,
-        "contamination_check": eq.SQL_CONTAMINATION_CHECK,
         # r8 rotated-out rows
-        "bloom_screen": eq.SQL_BLOOM_SCREEN,
         "klog_file_health": eq.SQL_FILE_HEALTH,
-        "ngram_novelty_packed": eq.SQL_NGRAM_NOVELTY_PACKED,
-        "soft_dedup_weights": eq.SQL_SOFT_DEDUP_WEIGHTS,
     }

@@ -2,9 +2,8 @@
 local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
-The klog pipeline queries run over the seeded fixture at the matching scale
-(generated/cached under data/klog/); the datapipe queries run over the
-driver-provided tables in $SPARK_GRAFT_SF_DIR.
+The queries run over the seeded klog fixture at the scale named by
+$SPARK_GRAFT_SF_DIR's ``sf<N>`` suffix (generated/cached under data/klog/).
 
 Noise protocol (VERDICT r3 #4): this VM's wall-clock varies up to 3x run to
 run, so the suite executes $KLOG_BENCH_RUNS times (default 3) in one session
@@ -45,20 +44,6 @@ def main() -> None:
     from klog_spark.operators.enrich import enrich_with_producer_meta
     from klog_spark.operators.route import routed_as_parsed
 
-    def _novelty_packed_xx(spark, sf_dir):
-        from klog_spark.datapipe.dedup import (bloom_pack, ngram_novelty_packed,
-                                               shingle_bloom_bits)
-        from klog_spark.entry_queries import (NOVELTY_BLOOM_K, NOVELTY_BLOOM_M,
-                                              _novelty_corpora)
-
-        tgt, ref = _novelty_corpora(spark, sf_dir)
-        bm = bloom_pack(
-            shingle_bloom_bits(ref, m=NOVELTY_BLOOM_M, k=NOVELTY_BLOOM_K, n=3,
-                               hash_fn="xxhash64"),
-            m=NOVELTY_BLOOM_M)
-        return ngram_novelty_packed(tgt, bm, m=NOVELTY_BLOOM_M,
-                                    k=NOVELTY_BLOOM_K, n=3, hash_fn="xxhash64")
-
     seq = spark.read.parquet(f"{fx}/sequences.parquet")
     n_rows = seq.count()
     parse_sequences(seq).filter("record_class='batch'").count()  # warm python workers
@@ -68,15 +53,9 @@ def main() -> None:
     timings: dict[str, float] = {}
 
     def timed(name: str, fn) -> None:
-        from klog_spark.cachereg import release_tracked
-
         t0 = time.time()
         fn()
         timings[name] = round(time.time() - t0, 3)
-        # operator-owned caches (contamination shingles) are per-invocation;
-        # release so run N+1 starts from the same storage state as run 1
-        # (ADVICE r7)
-        release_tracked()
 
     # RAM-backed staging dir: the bench measures engine time, not /tmp disk
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
@@ -132,22 +111,6 @@ def main() -> None:
             )
             timed("klog_state_machine",
                   lambda: checks.state_machine_violations(routed_as_parsed(staged, classes=["txn_state"])).count())
-            timed("dedup_exact", lambda: eq.q_dedup_exact(spark, sf_dir).count())
-            # round-4 operators at sf0.1 scale
-            timed("corpus_pack", lambda: eq.q_corpus_pack(spark, sf_dir).count())
-            timed("contamination_check", lambda: eq.q_contamination_check(spark, sf_dir).count())
-            # round-7: packed-bitmap Bloom dedup screen end-to-end — build
-            # the bit table, pack it executor-side, broadcast, O(1)-probe
-            timed("bloom_screen_packed", lambda: eq.q_bloom_screen_packed(spark, sf_dir)
-                  .write.format("noop").mode("overwrite").save())
-            # round-8 operators: exact novelty join and its zero-Exchange
-            # packed-Bloom twin (bitmap build included — the realistic cost)
-            timed("ngram_novelty", lambda: eq.q_ngram_novelty(spark, sf_dir)
-                  .write.format("noop").mode("overwrite").save())
-            # throughput path (xxhash64 probes); the java32 oracle variant
-            # is gate-verified
-            timed("ngram_novelty_packed", lambda: _novelty_packed_xx(spark, sf_dir)
-                  .write.format("noop").mode("overwrite").save())
             all_runs.append(timings)
             shutil.rmtree(routed_dir, ignore_errors=True)
     finally:
@@ -162,7 +125,7 @@ def main() -> None:
     # txn-stat) — the parse itself runs twice, staged reads are parse-free
     pipeline_s = best["klog_parse_route"] + best["klog_txn_stats"] + best["klog_routed_write"]
     print(json.dumps({
-        "metric": "headline query suite wall time (parse/route/aggregate + datapipe; best-of-N)",
+        "metric": "headline query suite wall time (parse/route/aggregate; best-of-N)",
         "value": total,
         "unit": "sec",
         "queries": best,

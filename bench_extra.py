@@ -1,8 +1,8 @@
 """Per-query isolation bench (guide §1.4): times a SELECTED subset of the
 bench.py query set with noop sinks, so an optimization can be A/B'd in
-minutes instead of a full 3-run suite. Same session factory, fixture and
-release discipline as bench.py; NOT a replacement for it — the driver's
-numbers come from the frozen bench.py.
+minutes instead of a full 3-run suite. Same session factory and fixture
+as bench.py; NOT a replacement for it — the driver's numbers come from the
+frozen bench.py.
 
 Usage:
   SPARK_GRAFT_SF_DIR=... python bench_extra.py [runs] [name ...]
@@ -28,7 +28,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from klog_spark import entry_queries as eq
-    from klog_spark.cachereg import release_tracked
     from klog_spark.operators import aggregates, checks
     from klog_spark.operators.enrich import enrich_with_producer_meta
     from klog_spark.operators.parse import parse_sequences
@@ -43,21 +42,6 @@ def main() -> None:
 
     def noop(df):
         df.write.format("noop").mode("overwrite").save()
-
-    def _novelty_packed_xx():
-        from klog_spark.datapipe.dedup import (bloom_pack,
-                                               ngram_novelty_packed,
-                                               shingle_bloom_bits)
-        from klog_spark.entry_queries import (NOVELTY_BLOOM_K, NOVELTY_BLOOM_M,
-                                              _novelty_corpora)
-
-        tgt, ref = _novelty_corpora(spark, sf_dir)
-        bm = bloom_pack(
-            shingle_bloom_bits(ref, m=NOVELTY_BLOOM_M, k=NOVELTY_BLOOM_K, n=3,
-                               hash_fn="xxhash64"),
-            m=NOVELTY_BLOOM_M)
-        return ngram_novelty_packed(tgt, bm, m=NOVELTY_BLOOM_M,
-                                    k=NOVELTY_BLOOM_K, n=3, hash_fn="xxhash64")
 
     import shutil
     import tempfile
@@ -89,12 +73,6 @@ def main() -> None:
                               F.countDistinct("producer_id").alias("p")).collect(),
         "klog_state_machine": lambda: checks.state_machine_violations(
             routed_as_parsed(_staged(), classes=["txn_state"])).count(),
-        "dedup_exact": lambda: eq.q_dedup_exact(spark, sf_dir).count(),
-        "corpus_pack": lambda: eq.q_corpus_pack(spark, sf_dir).count(),
-        "contamination_check": lambda: eq.q_contamination_check(spark, sf_dir).count(),
-        "bloom_screen_packed": lambda: noop(eq.q_bloom_screen_packed(spark, sf_dir)),
-        "ngram_novelty": lambda: noop(eq.q_ngram_novelty(spark, sf_dir)),
-        "ngram_novelty_packed": lambda: noop(_novelty_packed_xx()),
     }
     sel = {k: v for k, v in jobs.items() if not only or k in only}
 
@@ -110,7 +88,6 @@ def main() -> None:
                 fn()
                 dt = round(time.time() - t0, 3)
                 best[name] = min(best.get(name, 1e9), dt)
-                release_tracked()
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
     print(json.dumps(best))

@@ -1,20 +1,15 @@
 """Operator-owned cache registry (ADVICE r7).
 
-An operator may ``persist()`` a bounded intermediate (the contamination
-scan's split-joined shingle table) because multiple eager jobs — or one
-expensive lazy plan referenced several times — consume it inside a
-single invocation. The persist is the right call per invocation, but in
-a LONG-LIVED session (the test suite, the query/oracle gate, the bench
-loop, a user notebook) those blocks accumulate: nothing ever unpersisted
-them, because the operator returns a lazy plan that still references the
-cache, so it cannot release it before the caller materializes.
+An operator that ``persist()``s an intermediate inside a lazy plan cannot
+release it before its caller materializes the plan, so in a long-lived
+session (a test suite, a bench loop, a notebook) the blocks would pile up.
+Such an operator registers the persist via :func:`track`, and the session
+owner calls :func:`release_tracked` at an invocation boundary. Releasing is
+always safe: Spark recomputes an unpersisted plan.
 
-This registry makes the lifetime explicit without giving up in-invocation
-reuse: operators register every persist via :func:`track`, and session
-owners call :func:`release_tracked` at their natural checkpoint boundaries
-(after a gate row, a bench query, a pytest). Releasing is always safe —
-Spark recomputes an unpersisted plan — so the worst case of releasing too
-early is lost reuse, never wrong results.
+No operator tracks a persist today. The module stays because the
+benchmark harness (``perfbench/workloads.py``) imports
+:func:`release_tracked`.
 """
 
 from __future__ import annotations

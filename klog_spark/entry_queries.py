@@ -13,7 +13,6 @@ value hashes); doubles are explicitly rounded on both sides.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,9 +65,10 @@ def _sqlq(pattern: str) -> str:
 
 
 def _sql_java_u32(expr: str) -> str:
-    """DuckDB replica of javahash.java_hash_u32_expr (BMP text). The
-    ``u >= 0`` filter drops the [''] artifact of splitting an empty string
-    (DuckDB's unicode('') is -1); hash('') must be 0."""
+    """Java ``String.hashCode`` of ``expr`` as an unsigned 32-bit BIGINT
+    (BMP text), for the F5 coordinating-partition oracles. The ``u >= 0``
+    filter drops the [''] artifact of splitting an empty string (DuckDB's
+    unicode('') is -1); hash('') must be 0."""
     return (
         f"list_reduce(list_prepend(0::BIGINT, list_filter("
         f"[unicode(c)::BIGINT for c in string_split({expr}, '')], u -> u >= 0)), "
@@ -1134,153 +1134,6 @@ SELECT arg_min(doc_id, ord) AS first_batch_doc_id, arg_max(doc_id, ord) AS last_
 """
 
 
-# ---------------------------------------------------------------------------
-# Training-data pipeline queries (documents)
-#
-# The driver tables contain no duplicates, so dedup queries derive a
-# deterministic dup-corpus from `documents` with identical expressions on
-# both sides: every doc_id % 10 == 0 gets an exact copy (+1000000), every
-# doc_id % 10 == 1 gets a near-dup with one appended token (+2000000).
-# ---------------------------------------------------------------------------
-
-#: Below this on-disk size a single-task first stage is cheaper than the
-#: repartition shuffle that would parallelize it (~0.3-0.6 s fixed cost
-#: per extra stage on this VM; measured at sf0.1 where spreading the
-#: 0.6 MiB tables regressed small queries 1.5-2x while at sf1 the
-#: 5.9 MiB tables gain 2-5x from it). ~2 MiB compressed ~ 10 MiB raw.
-_SPREAD_MIN_BYTES = 2 * 1024 * 1024
-
-
-def _spread(df: DataFrame, path: str | None = None) -> DataFrame:
-    """Unsplittable-input guard (optimization guide §2.5 "input skew").
-
-    The driver-provided tables are single-row-group parquet files; parquet
-    cannot split below a row group, so their scan — and with it the
-    expensive FIRST stage of every consumer (digest / shingle explode)
-    — runs in ONE task regardless of split-size configs. A cheap
-    round-robin repartition right after the read unlocks the session's
-    full parallelism. No-op when the input is tiny (a one-task stage then
-    beats the shuffle) or when the scan already has enough splits (real
-    multi-file tables at scale), so this never ADDS a shuffle where the
-    layout is healthy; row-order changes are immaterial — every consumer
-    is partition-order-independent by the repo's determinism contract
-    (integer micro rounding, hash keys, ordered limits), which the
-    query/oracle gate re-verifies."""
-    if path is not None:
-        try:
-            if os.path.getsize(path) < _SPREAD_MIN_BYTES:
-                return df
-        except OSError:
-            pass
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() * 2 >= target:
-        return df
-    return df.repartition(target)
-
-
-def _docs(spark, sf_dir):
-    path = f"{sf_dir}/documents.parquet"
-    return _spread(spark.read.parquet(path), path)
-
-
-def _dup_corpus(spark, sf_dir) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    exact = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    near = docs.filter(F.col("doc_id") % 10 == 1).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zq")).alias("text"),
-    )
-    return docs.unionByName(exact).unionByName(near)
-
-
-SQL_DUP_CORPUS = """
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id, text || ' zq' AS text FROM documents WHERE doc_id % 10 = 1
-)"""
-
-
-def q_dedup_exact(spark, sf_dir):
-    from .datapipe.dedup import exact_duplicates
-
-    return exact_duplicates(_dup_corpus(spark, sf_dir))
-
-
-SQL_DEDUP_EXACT = f"""
-WITH {SQL_DUP_CORPUS},
-g AS (
-  SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS keep_doc_id,
-         COUNT(*) OVER (PARTITION BY text) AS group_size
-  FROM corpus
-)
-SELECT doc_id, keep_doc_id, group_size FROM g WHERE group_size > 1
-"""
-
-
-def q_dedup_canonical(spark, sf_dir):
-    """Post-dedup canonicalization: keep the highest-quality copy per exact
-    group (score = whitespace token count, ties to the lowest doc_id)."""
-    from .datapipe.dedup import exact_dedup_keep_best
-
-    corpus = _dup_corpus(spark, sf_dir)
-    score = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).cast("long")
-    return exact_dedup_keep_best(corpus, score)
-
-
-SQL_DEDUP_CANONICAL = f"""
-WITH {SQL_DUP_CORPUS},
-scored AS (
-  SELECT doc_id, text,
-         CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS score
-  FROM corpus
-),
-ranked AS (
-  SELECT doc_id, text, score,
-         ROW_NUMBER() OVER (PARTITION BY text ORDER BY score DESC, doc_id ASC) AS rn,
-         COUNT(*) OVER (PARTITION BY text) AS group_size
-  FROM scored
-),
-keepers AS (SELECT text, doc_id AS keep_doc_id FROM ranked WHERE rn = 1)
-SELECT r.doc_id, k.keep_doc_id, (r.rn = 1) AS kept, CAST(r.group_size AS BIGINT) AS group_size
-FROM ranked r JOIN keepers k USING (text)
-"""
-
-
-def q_leakage_safe_split(spark, sf_dir):
-    """Content-hash train/test split over the dup corpus: exact duplicates
-    provably land in the same split (no train->test leakage via copies)."""
-    from .datapipe.dedup import leakage_safe_split
-
-    return leakage_safe_split(_dup_corpus(spark, sf_dir), train_pct=80)
-
-
-SQL_LEAKAGE_SAFE_SPLIT = f"""
-WITH {SQL_DUP_CORPUS},
-h AS (
-  SELECT doc_id, {_sql_java_u32('sha256(text)')} % 100 AS bucket FROM corpus
-)
-SELECT doc_id, CASE WHEN bucket < 80 THEN 'train' ELSE 'test' END AS split FROM h
-"""
-
-
-def _sql_must_replace(base: str, old: str, new: str) -> str:
-    """``str.replace`` for composed oracles that FAILS AT BUILD TIME when
-    the marker text is absent (ADVICE r6): a reformat of the base SQL must
-    break the import, not silently degrade the composed oracle into the
-    base query (which the gate would only catch as a schema mismatch)."""
-    if old not in base:
-        raise AssertionError(
-            f"oracle compose marker not found (base SQL reformatted?): {old[:80]!r}"
-        )
-    return base.replace(old, new)
-
-
 def q_file_health(spark, sf_dir):
     """Per-dump-file health report (aggregates.file_health); the oracle
     recomputes the counts and gaps from the text CTEs."""
@@ -1319,123 +1172,6 @@ def q_batches_per_epoch_salted(spark, sf_dir):
     from .operators.skew import salted_batches_per_epoch
 
     return salted_batches_per_epoch(load_parsed_raw(spark, sf_dir), salt_buckets=16)
-
-
-# --- round-4 training-pipeline extensions: packing / contamination
-
-
-def q_corpus_pack(spark, sf_dir):
-    """Token-budget sequence packing over the tokenized table (the trainer
-    batch-construction step): per-pack rollup with exact fill ratios. Packs
-    are prefix-sum assignments within the input shard (file) — no global
-    sort, shard-independent at 10^12 sequences."""
-    from .tokens import pack_stats
-
-    fx = klog_fixture(sf_dir)
-    seq = spark.read.parquet(f"{fx}/sequences.parquet")
-    return pack_stats(seq, budget=4096)
-
-
-SQL_CORPUS_PACK = f"""
-WITH s AS (
-  SELECT regexp_extract(doc_id, '^(.*):([0-9]+)$', 1) AS file,
-         TRY_CAST(regexp_extract(doc_id, '^(.*):([0-9]+)$', 2) AS INT) AS line_no,
-         length(line) AS n_tok
-  FROM read_parquet('{FX}/sequences_text.parquet')
-),
-p AS (
-  SELECT file, n_tok,
-         COALESCE(SUM(n_tok) OVER (PARTITION BY file ORDER BY line_no
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior
-  FROM s
-)
-SELECT file, CAST(FLOOR(prior / 4096) AS BIGINT) AS pack_id,
-       COUNT(*) AS n_seqs, CAST(SUM(n_tok) AS BIGINT) AS pack_tokens,
-       CAST(CAST(SUM(n_tok) AS BIGINT) AS DOUBLE) / 4096.0 AS fill_ratio
-FROM p GROUP BY file, pack_id
-"""
-
-
-def q_contamination_check(spark, sf_dir):
-    """Train->test contamination scan over the dup corpus: test docs sharing
-    >= 3 distinct 5-gram shingles with any train doc. Exact copies are
-    split-safe by construction (leakage_safe_split keys on content digest);
-    what this surfaces is near-copies crossing the split boundary."""
-    from .datapipe.dedup import contamination_report, leakage_safe_split
-
-    corpus = _dup_corpus(spark, sf_dir)
-    split = leakage_safe_split(corpus, train_pct=80)
-    return contamination_report(corpus, split, n=5, min_common=3, max_df=50)
-
-
-SQL_CONTAMINATION_CHECK = f"""
-WITH {SQL_DUP_CORPUS},
-spl AS (
-  SELECT doc_id,
-         CASE WHEN {_sql_java_u32('sha256(text)')} % 100 < 80 THEN 'train' ELSE 'test' END AS split
-  FROM corpus
-),
-w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM corpus
-),
-sh0 AS (
-  SELECT doc_id, unnest(list_distinct([
-           array_to_string(list_slice(words, i + 1, i + 5), ' ')
-           for i in range(0, greatest(len(words) - 5, 0) + 1)
-         ])) AS shingle
-  FROM w
-),
-shj AS (SELECT sh0.doc_id, sh0.shingle, spl.split FROM sh0 JOIN spl USING (doc_id)),
-capped AS (
-  SELECT * FROM shj
-  WHERE shingle IN (SELECT shingle FROM shj GROUP BY shingle HAVING COUNT(*) <= 50)
-),
-hits AS (
-  SELECT t.doc_id AS test_doc, t.shingle, tr.doc_id AS train_doc
-  FROM capped t JOIN capped tr USING (shingle)
-  WHERE t.split = 'test' AND tr.split = 'train'
-)
-SELECT test_doc, COUNT(DISTINCT shingle) AS n_shared_shingles,
-       COUNT(DISTINCT train_doc) AS n_train_docs
-FROM hits GROUP BY test_doc HAVING COUNT(DISTINCT shingle) >= 3
-"""
-
-
-def q_contamination_removal(spark, sf_dir):
-    """Contamination REMOVAL (dedup.decontaminate — VERDICT r6 next #5):
-    the step after the scan — for EVERY train-split document of the dup
-    corpus, count the distinct 5-gram shingles it shares with the test
-    side and drop it at >= 3 (same max_df=50 hot-shingle cap as the scan).
-    The gate hashes the full keep/drop decision table
-    (doc_id, n_test_shingles, n_test_docs, kept) — the decontaminated
-    corpus is the kept filter. The oracle recomputes the shingle join from
-    scratch, aggregated on the train side."""
-    from .datapipe.dedup import decontaminate, leakage_safe_split
-
-    corpus = _dup_corpus(spark, sf_dir)
-    split = leakage_safe_split(corpus, train_pct=80)
-    return decontaminate(corpus, split, n=5, min_common=3, max_df=50)
-
-
-SQL_CONTAMINATION_REMOVAL = _sql_must_replace(
-    SQL_CONTAMINATION_CHECK,
-    """SELECT test_doc, COUNT(DISTINCT shingle) AS n_shared_shingles,
-       COUNT(DISTINCT train_doc) AS n_train_docs
-FROM hits GROUP BY test_doc HAVING COUNT(DISTINCT shingle) >= 3
-""",
-    """, flagged AS (
-  SELECT train_doc, COUNT(DISTINCT shingle) AS n_test_shingles,
-         COUNT(DISTINCT test_doc) AS n_test_docs
-  FROM hits GROUP BY train_doc
-)
-SELECT s.doc_id,
-       CAST(COALESCE(f.n_test_shingles, 0) AS BIGINT) AS n_test_shingles,
-       CAST(COALESCE(f.n_test_docs, 0) AS BIGINT) AS n_test_docs,
-       COALESCE(f.n_test_shingles, 0) < 3 AS kept
-FROM spl s LEFT JOIN flagged f ON s.doc_id = f.train_doc
-WHERE s.split = 'train'
-""",
-)
 
 
 def q_group_offsets_read_committed(spark, sf_dir):
@@ -1498,30 +1234,6 @@ latest AS (
 SELECT group_id, commit_topic, commit_partition, committed_offset,
        committed_leader_epoch, commit_timestamp_ms
 FROM latest WHERE rn = 1 AND NOT is_deletion
-"""
-
-
-def q_dedup_incremental(spark, sf_dir):
-    """Append-only ingestion check: the planted duplicate batch (ids >=
-    1,000,000 in the dup corpus) screened against the base documents table —
-    exact copies are flagged with their canonical corpus id, near-copies
-    (' zq' suffix) pass through."""
-    from .datapipe.dedup import incremental_exact_dups
-
-    corpus = _docs(spark, sf_dir).select("doc_id", "text")
-    incoming = _dup_corpus(spark, sf_dir).filter(F.col("doc_id") >= 1000000)
-    return incremental_exact_dups(incoming, corpus)
-
-
-SQL_DEDUP_INCREMENTAL = f"""
-WITH {SQL_DUP_CORPUS},
-idx AS (
-  SELECT sha256(text) AS digest, MIN(doc_id) AS dup_of FROM documents GROUP BY 1
-),
-inc AS (
-  SELECT doc_id, sha256(text) AS digest FROM corpus WHERE doc_id >= 1000000
-)
-SELECT inc.doc_id, idx.dup_of FROM inc JOIN idx USING (digest)
 """
 
 
@@ -1617,301 +1329,4 @@ c AS (
 SELECT doc_id, producer_id, ts_ms,
        carried.o AS snap_last_offset, carried.e AS snap_coordinator_epoch
 FROM c WHERE tag = 1
-"""
-
-
-BLOOM_M, BLOOM_K = 4096, 3
-
-
-def q_bloom_screen(spark, sf_dir):
-    """Bloom-filter dedup pre-screen (dedup.bloom_bits + bloom_screen):
-    the corpus digest filter (m=4096 bits, k=3 salted java-hash probes)
-    screens the planted incoming batch — exact copies (ids >= 1,000,000)
-    MUST come back maybe_dup (Bloom has no false negatives), ' zq'
-    near-copies (ids >= 2,000,000) are definitely-new unless they land on
-    the measured ~3% false-positive rate, which the oracle recomputes
-    bit-for-bit. The fast path an incremental-dedup ingest runs before the
-    exact digest join."""
-    from .datapipe.dedup import bloom_bits, bloom_screen
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    bits = bloom_bits(docs, m=BLOOM_M, k=BLOOM_K)
-    incoming = _dup_corpus(spark, sf_dir).filter(F.col("doc_id") >= 1000000)
-    return bloom_screen(incoming, bits, m=BLOOM_M, k=BLOOM_K)
-
-
-def _sql_bloom_screen(m: int = BLOOM_M, k: int = BLOOM_K) -> str:
-    def bit_exprs(src: str) -> str:
-        return ", ".join(
-            _sql_java_u32(f"sha256({src}) || ':{i}'") + f" % {m}"
-            for i in range(k)
-        )
-
-    return f"""
-WITH {SQL_DUP_CORPUS},
-base_bits AS (
-  SELECT DISTINCT CAST(u AS BIGINT) AS bit FROM (
-    SELECT unnest([{bit_exprs("text")}]) AS u FROM documents)
-),
-probes AS (
-  SELECT doc_id, CAST(u AS BIGINT) AS pbit FROM (
-    SELECT doc_id, unnest([{bit_exprs("text")}]) AS u
-    FROM corpus WHERE doc_id >= 1000000)
-)
-SELECT p.doc_id, CAST(COUNT(b.bit) AS BIGINT) AS n_hits,
-       COUNT(b.bit) = {k} AS maybe_dup
-FROM probes p LEFT JOIN base_bits b ON p.pbit = b.bit
-GROUP BY p.doc_id
-"""
-
-
-SQL_BLOOM_SCREEN = _sql_bloom_screen()
-
-
-def q_bloom_screen_packed(spark, sf_dir):
-    """The PACKED broadcast form of the Bloom pre-screen (dedup.bloom_pack
-    + bloom_screen_packed — VERDICT r6 weak #1 closed): the same corpus
-    filter packed into an m-bit numpy bitmap, shipped via
-    SparkContext.broadcast, probed with O(1) bit tests inside an Arrow
-    kernel. Same (doc_id, n_hits, maybe_dup) decision table and the same
-    DuckDB oracle as the relational form — the gate hashes the packed
-    kernel's output bit-for-bit against SQL that recomputes the filter
-    relationally."""
-    from .datapipe.dedup import bloom_bits, bloom_pack, bloom_screen_packed
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    bitmap = bloom_pack(bloom_bits(docs, m=BLOOM_M, k=BLOOM_K), m=BLOOM_M)
-    incoming = _dup_corpus(spark, sf_dir).filter(F.col("doc_id") >= 1000000)
-    return bloom_screen_packed(incoming, bitmap, m=BLOOM_M, k=BLOOM_K)
-
-
-SQL_BLOOM_SCREEN_PACKED = SQL_BLOOM_SCREEN
-
-
-def _novelty_corpora(spark, sf_dir):
-    """Reference = documents with doc_id % 3 == 0; targets = the rest PLUS
-    exact re-publications of every 9th reference doc (ids offset by 5M) —
-    planted zero-novelty rows among naturally-varying ones."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    ref = docs.filter(F.col("doc_id") % 3 == 0)
-    tgt = docs.filter(F.col("doc_id") % 3 != 0)
-    republished = ref.filter(F.col("doc_id") % 9 == 0).select(
-        (F.col("doc_id") + 5_000_000).alias("doc_id"), "text"
-    )
-    return tgt.unionByName(republished), ref
-
-
-def q_ngram_novelty(spark, sf_dir):
-    """Per-doc n-gram novelty vs a reference corpus (dedup.ngram_novelty):
-    the freshness metric for growing an existing corpus — republished
-    reference docs land at novelty_ppm = 0, genuinely new text near 1e6.
-    One distinct-shingle equi-join, integer ppm output."""
-    from .datapipe.dedup import ngram_novelty
-
-    tgt, ref = _novelty_corpora(spark, sf_dir)
-    return ngram_novelty(tgt, ref, n=3)
-
-
-SQL_NGRAM_NOVELTY = """
-WITH ref_docs AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-),
-tgt_docs AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0
-  UNION ALL
-  SELECT doc_id + 5000000 AS doc_id, text FROM ref_docs WHERE doc_id % 9 = 0
-),
-tw AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM tgt_docs
-),
-tsh AS (
-  SELECT doc_id, unnest(list_distinct([
-           array_to_string(list_slice(words, i + 1, i + 3), ' ')
-           for i in range(0, greatest(len(words) - 3, 0) + 1)
-         ])) AS shingle
-  FROM tw
-),
-rw AS (
-  SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM ref_docs
-),
-rsh AS (
-  SELECT DISTINCT unnest(list_distinct([
-           array_to_string(list_slice(words, i + 1, i + 3), ' ')
-           for i in range(0, greatest(len(words) - 3, 0) + 1)
-         ])) AS shingle
-  FROM rw
-)
-SELECT t.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_shingles,
-       CAST(SUM(CASE WHEN r.shingle IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-       CAST(ROUND(SUM(CASE WHEN r.shingle IS NULL THEN 1 ELSE 0 END)
-                  * 1000000.0 / COUNT(*)) AS BIGINT) AS novelty_ppm
-FROM tsh t LEFT JOIN rsh r USING (shingle)
-GROUP BY t.doc_id
-"""
-
-
-def _mirror_corpus(spark, sf_dir):
-    """documents + cross-source mirrors: every 10th doc re-published under
-    'mirror_a', every 15th under 'mirror_b', every 40th duplicated WITHIN
-    its own source — known dup-pair counts across and inside sources."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text", "source")
-    ma = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text",
-        F.lit("mirror_a").alias("source"))
-    mb = docs.filter(F.col("doc_id") % 15 == 0).select(
-        (F.col("doc_id") + 2_000_000).alias("doc_id"), "text",
-        F.lit("mirror_b").alias("source"))
-    same = docs.filter(F.col("doc_id") % 40 == 0).select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"), "text", "source")
-    return docs.unionByName(ma).unionByName(mb).unionByName(same)
-
-
-def q_cross_source_dups(spark, sf_dir):
-    """Cross-source duplication matrix (dedup.cross_source_dup_matrix):
-    which sources mirror which, as exact-duplicate pair counts per
-    unordered source pair — the audit before per-source dedup budgets.
-    Digest-keyed, integer-exact."""
-    from .datapipe.dedup import cross_source_dup_matrix
-
-    return cross_source_dup_matrix(_mirror_corpus(spark, sf_dir))
-
-
-SQL_CROSS_SOURCE_DUPS = """
-WITH corpus AS (
-  SELECT doc_id, text, source FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text, 'mirror_a' FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id + 2000000, text, 'mirror_b' FROM documents WHERE doc_id % 15 = 0
-  UNION ALL
-  SELECT doc_id + 3000000, text, source FROM documents WHERE doc_id % 40 = 0
-),
-per AS (
-  SELECT sha256(text) AS digest, source, CAST(COUNT(*) AS BIGINT) AS n
-  FROM corpus GROUP BY 1, 2
-),
-cross_pairs AS (
-  SELECT a.source AS source_a, b.source AS source_b,
-         CAST(SUM(a.n * b.n) AS BIGINT) AS n_dup_pairs,
-         CAST(COUNT(DISTINCT a.digest) AS BIGINT) AS n_texts
-  FROM per a JOIN per b USING (digest)
-  WHERE a.source < b.source
-  GROUP BY 1, 2
-),
-same_pairs AS (
-  SELECT source AS source_a, source AS source_b,
-         CAST(SUM(n * (n - 1) / 2) AS BIGINT) AS n_dup_pairs,
-         CAST(COUNT(DISTINCT digest) AS BIGINT) AS n_texts
-  FROM per WHERE n >= 2
-  GROUP BY 1, 2
-)
-SELECT * FROM cross_pairs WHERE n_dup_pairs > 0
-UNION ALL
-SELECT * FROM same_pairs WHERE n_dup_pairs > 0
-"""
-
-
-NOVELTY_BLOOM_M = 1 << 20
-NOVELTY_BLOOM_K = 4
-
-
-def q_ngram_novelty_packed(spark, sf_dir):
-    """The zero-Exchange packed-Bloom novelty screen
-    (dedup.ngram_novelty_packed) on the same corpora as the exact driver
-    row: reference shingles -> bloom bitmap (built outside the gated plan),
-    per-doc probes + novelty count inside ONE Arrow kernel. At m = 2^20 the
-    FP rate is ~0 for this fixture, so the oracle — which recomputes every
-    bit and probe relationally — hashes exactly."""
-    from .datapipe.dedup import bloom_pack, ngram_novelty_packed, shingle_bloom_bits
-
-    tgt, ref = _novelty_corpora(spark, sf_dir)
-    bitmap = bloom_pack(
-        shingle_bloom_bits(ref, m=NOVELTY_BLOOM_M, k=NOVELTY_BLOOM_K, n=3),
-        m=NOVELTY_BLOOM_M,
-    )
-    return ngram_novelty_packed(tgt, bitmap, m=NOVELTY_BLOOM_M,
-                                k=NOVELTY_BLOOM_K, n=3)
-
-
-def _sql_ngram_novelty_packed(m: int = NOVELTY_BLOOM_M,
-                              k: int = NOVELTY_BLOOM_K) -> str:
-    bits = ", ".join(
-        _sql_java_u32(f"sha256(shingle) || ':{i}'") + f" % {m}"
-        for i in range(k)
-    )
-    return f"""
-WITH ref_docs AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-),
-tgt_docs AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0
-  UNION ALL
-  SELECT doc_id + 5000000 AS doc_id, text FROM ref_docs WHERE doc_id % 9 = 0
-),
-rw AS (
-  SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM ref_docs
-),
-rsh AS (
-  SELECT DISTINCT unnest(list_distinct([
-           array_to_string(list_slice(words, i + 1, i + 3), ' ')
-           for i in range(0, greatest(len(words) - 3, 0) + 1)
-         ])) AS shingle
-  FROM rw
-),
-ref_bits AS (
-  SELECT DISTINCT CAST(u AS BIGINT) AS bit FROM (
-    SELECT unnest([{bits}]) AS u FROM rsh)
-),
-tw AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words
-  FROM tgt_docs
-),
-tsh AS (
-  SELECT doc_id, unnest(list_distinct([
-           array_to_string(list_slice(words, i + 1, i + 3), ' ')
-           for i in range(0, greatest(len(words) - 3, 0) + 1)
-         ])) AS shingle
-  FROM tw
-),
-pr AS (
-  SELECT doc_id, shingle, CAST(u AS BIGINT) AS pbit FROM (
-    SELECT doc_id, shingle, unnest([{bits}]) AS u FROM tsh)
-),
-hit AS (
-  SELECT p.doc_id, p.shingle, COUNT(b.bit) = {k} AS seen
-  FROM pr p LEFT JOIN ref_bits b ON p.pbit = b.bit
-  GROUP BY p.doc_id, p.shingle
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_shingles,
-       CAST(SUM(CASE WHEN seen THEN 0 ELSE 1 END) AS BIGINT) AS n_novel,
-       CAST(FLOOR(SUM(CASE WHEN seen THEN 0 ELSE 1 END)
-                  * 1000000.0 / COUNT(*) + 0.5) AS BIGINT) AS novelty_ppm
-FROM hit
-GROUP BY doc_id
-"""
-
-
-SQL_NGRAM_NOVELTY_PACKED = _sql_ngram_novelty_packed()
-
-
-def q_soft_dedup_weights(spark, sf_dir):
-    """SoftDeDup over the planted-duplicate corpus (dedup.soft_dedup_weights):
-    every copy of a duplicated text carries weight 1/n_copies in integer
-    micro units, so duplicated CONTENT sums to ~one document of mass —
-    the down-weight alternative to dropping. Exact integers end to end."""
-    from .datapipe.dedup import soft_dedup_weights
-
-    return soft_dedup_weights(_dup_corpus(spark, sf_dir))
-
-
-SQL_SOFT_DEDUP_WEIGHTS = f"""
-WITH {SQL_DUP_CORPUS},
-d AS (SELECT doc_id, sha256(text) AS digest FROM corpus),
-c AS (SELECT digest, CAST(COUNT(*) AS BIGINT) AS n_copies FROM d GROUP BY digest)
-SELECT doc_id, n_copies,
-       CAST(ROUND(1000000.0 / n_copies) AS BIGINT) AS weight_micro
-FROM d JOIN c USING (digest)
 """

@@ -43,21 +43,6 @@ def java_string_hash_np(strings: pd.Series) -> np.ndarray:
     return h.astype(np.int32)
 
 
-def java_hash_u32_expr(col):
-    """Java ``String.hashCode`` as an UNSIGNED 32-bit pure-JVM expression
-    (whole-stage codegen, no Python): fold ``(acc*31 + unit) mod 2^32`` over
-    the string's characters. For BMP text (all fixture data) ``ascii(char)``
-    equals the UTF-16 code unit, so this matches :func:`java_string_hash_np`
-    bit-for-bit — and is exactly replicable in any SQL engine (DuckDB:
-    ``list_reduce`` over ``unicode(c)``), which is what makes the
-    leakage-split and Bloom-screen oracles possible."""
-    units = F.transform(F.split(col, ""), lambda c: F.ascii(c).cast("bigint"))
-    return F.aggregate(
-        units, F.lit(0).cast("bigint"),
-        lambda acc, c: F.pmod(acc * F.lit(31) + c, F.lit(4294967296)),
-    )
-
-
 def coordinating_partition_np(ids: pd.Series, num_partitions: int = 50) -> np.ndarray:
     h = java_string_hash_np(ids).astype(np.int64)
     # Java abs() with the MIN_VALUE guard the reference applies.

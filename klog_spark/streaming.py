@@ -252,46 +252,3 @@ def group_lag_stream(stream: DataFrame, log_end: DataFrame) -> DataFrame:
             ~F.col("is_deletion"), F.col("log_end_offset") - F.col("committed_offset")
         ).alias("lag"),
     )
-
-
-def dedup_stream(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id",
-                 watermark_col: str | None = None,
-                 watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact deduplication: keep the FIRST-ARRIVED row per
-    content digest (sha256 of the text — 32 B of state per distinct doc,
-    the same digest key the batch dedup family shuffles on).
-
-    Backed by ``dropDuplicates`` streaming state. Without a watermark
-    column the state is the full distinct-digest set (exact forever, state
-    grows with distinct content — the batch-ingest screen
-    ``dedup.incremental_exact_dups`` is the right tool once that set
-    outgrows executor memory). With ``watermark_col`` the digest set is
-    evicted past the watermark: exact within the window, the standard
-    bounded-state trade.
-    """
-    hashed = docs.withColumn("_digest", F.sha2(F.col(text_col), 256))
-    if watermark_col is None:
-        return hashed.dropDuplicates(["_digest"]).drop("_digest")
-    return (
-        hashed.withWatermark(watermark_col, watermark)
-        .dropDuplicatesWithinWatermark(["_digest"])
-        .drop("_digest")
-    )
-
-
-def novelty_screen_stream(docs: DataFrame, bitmap, m: int, k: int, n: int = 3,
-                          text_col: str = "text", id_col: str = "doc_id",
-                          hash_fn: str = "java32") -> DataFrame:
-    """Streaming novelty screen — the ingest face of
-    ``dedup.ngram_novelty_packed``: the reference corpus's shingle Bloom
-    bitmap broadcasts once and every arriving document scores its
-    (n_shingles, n_novel, novelty_ppm) inside one stateless Arrow kernel —
-    no join, no state, no watermark; append mode emits exactly the batch
-    decision per row (pytest-asserted). The shape for 'only ingest
-    documents novel vs the existing 100-TB corpus' admission control."""
-    from .datapipe.dedup import ngram_novelty_packed
-
-    return ngram_novelty_packed(docs, bitmap, m=m, k=k, n=n,
-                                text_col=text_col, id_col=id_col,
-                                hash_fn=hash_fn)

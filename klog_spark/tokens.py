@@ -51,51 +51,3 @@ def token_series_to_texts(tokens: pd.Series) -> pd.Series:
     starts = ends - lens
     out = [text[s:e] for s, e in zip(starts.tolist(), ends.tolist())]
     return pd.Series(out, index=tokens.index, dtype=object)
-
-
-def pack_sequences(df, budget: int = 4096, id_col: str = "doc_id",
-                   n_tok_col: str = "n_tok"):
-    """Streaming token-budget packing: assign each sequence to a training
-    pack of ~``budget`` tokens, preserving source order — the
-    batch-construction step between a tokenized corpus and a trainer.
-
-    pack_id = floor(prefix_tokens / budget) over (file, line_no) order,
-    where prefix_tokens excludes the current row: a pack closes as soon as
-    its budget is crossed, sequences are never split, and the assignment is
-    a pure prefix-sum — deterministic, engine-replicable, and (unlike
-    first-fit-decreasing) requiring NO global sort or driver state.
-
-    Scale: the window keys on ``file`` (the input shard), so prefix sums
-    never cross shard boundaries — at 10^12 sequences each shard packs
-    independently, exactly how a real pipeline shards packing. Skew is
-    bounded by shard size.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    parts = F.regexp_extract(F.col(id_col), r"^(.*):([0-9]+)$", 1)
-    line_no = F.regexp_extract(F.col(id_col), r"^(.*):([0-9]+)$", 2).cast("int")
-    w = Window.partitionBy("file").orderBy("line_no")
-    prior = F.coalesce(
-        F.sum(n_tok_col).over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
-    )
-    return (
-        df.select(F.col(id_col).alias("doc_id"), F.col(n_tok_col).alias("n_tok"),
-                  parts.alias("file"), line_no.alias("line_no"))
-        .withColumn("pack_id", F.floor(prior / budget).cast("long"))
-    )
-
-
-def pack_stats(df, budget: int = 4096, id_col: str = "doc_id",
-               n_tok_col: str = "n_tok"):
-    """Per-pack rollup of ``pack_sequences``: sequence count, token count,
-    and fill ratio vs the budget (exact int -> double division, so the ratio
-    hashes identically across engines)."""
-    from pyspark.sql import functions as F
-
-    packed = pack_sequences(df, budget=budget, id_col=id_col, n_tok_col=n_tok_col)
-    return packed.groupBy("file", "pack_id").agg(
-        F.count("*").alias("n_seqs"),
-        F.sum("n_tok").cast("long").alias("pack_tokens"),
-        (F.sum("n_tok").cast("double") / F.lit(float(budget))).alias("fill_ratio"),
-    )

@@ -9,17 +9,6 @@ from klog_spark.session import get_spark
 FIXTURE_SF = 0.001
 
 
-@pytest.fixture(autouse=True)
-def _release_operator_caches():
-    """Release operator-owned persisted intermediates after every test
-    (klog_spark.cachereg) — the shared session otherwise accumulates
-    contamination-shingle cache blocks across tests."""
-    from klog_spark.cachereg import release_tracked
-
-    yield
-    release_tracked()
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="klog-spark-tests", master="local[8]", shuffle_partitions=8)

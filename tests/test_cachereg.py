@@ -17,31 +17,3 @@ def test_track_and_release(spark):
     assert not df.storageLevel.useMemory
     assert df.count() == 100  # unpersisted plan recomputes fine
     assert _TRACKED == []
-
-
-def test_operators_register_their_caches(spark):
-    """The contamination scan's shingle table leaves ZERO persisted blocks
-    behind once release_tracked runs — the long-lived-session leak the
-    advice flagged."""
-    from pyspark.sql import functions as F
-
-    from klog_spark.datapipe.dedup import contamination_report
-
-    docs = spark.createDataFrame(
-        [(i, f"some words {i} repeat words here", "web") for i in range(40)],
-        "doc_id long, text string, source string",
-    )
-    def n_cached():
-        sc = spark.sparkContext._jsc.sc()
-        return sum(1 for r in sc.getRDDStorageInfo() if r.numCachedPartitions() > 0)
-
-    release_tracked(blocking=True)
-    baseline = n_cached()  # session fixtures legitimately cache the parsed fixture
-    split = docs.select("doc_id", F.when(F.col("doc_id") % 4 == 0, "test")
-                        .otherwise("train").alias("split"))
-    contamination_report(docs, split, n=2).count()
-    assert len(_TRACKED) >= 1
-    assert n_cached() > baseline, "operators should have cached intermediates"
-    release_tracked(blocking=True)
-    assert _TRACKED == []
-    assert n_cached() == baseline, "every operator-owned cache must release"

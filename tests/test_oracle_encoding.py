@@ -1,21 +1,7 @@
-"""Encoding and rendering assumptions the oracles rest on: the driver's
-document tables are single-line ASCII, and the instant renderer prints
+"""Rendering assumption the oracles rest on: the instant renderer prints
 what Java's ``Instant.toString`` prints."""
 
-import duckdb
 from pyspark.sql import functions as F
-
-
-def test_driver_documents_are_single_line_ascii():
-    """The sf0.01 gate tables satisfy the simple-text precondition (the
-    oracles no longer require it, but assert it so a driver-data change is
-    noticed)."""
-    con = duckdb.connect()
-    n = con.execute(
-        "SELECT count(*) FROM read_parquet('/root/testdata/sf0.01/documents.parquet') "
-        "WHERE regexp_matches(text, '[^\\x20-\\x7e]')"
-    ).fetchone()[0]
-    assert n == 0
 
 
 def test_instant_string_matches_java_instant_tostring(spark):

@@ -26,22 +26,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from check_queries import (  # noqa: E402
     SF_DIR,
-    TABLES,
     driver_canon_check,
     lint_arrow_schema,
     lint_spark_schema,
 )
 
 import __spark_entry__ as entry  # noqa: E402
-
-
-def _oracle_con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
 
 
 def test_lint_catches_uncast_sum_over():
@@ -68,7 +58,7 @@ def test_all_oracle_arrow_schemas_lint_clean():
     from klog_spark.entry_queries import ORACLE_SF, ensure_fixture
 
     ensure_fixture(ORACLE_SF)  # klog oracles read the sf0.01 fixture files
-    con = _oracle_con()
+    con = duckdb.connect()
     oss = {**entry.oracle_sql(), **entry.extra_oracle_sql()}
     bad = {}
     for name, sql in oss.items():

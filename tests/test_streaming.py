@@ -192,111 +192,3 @@ def test_group_lag_stream_matches_batch(spark, fixture_dir, stream_input, tmp_pa
         for r in group_lag(batch_parsed).collect()
     }
     assert got == want and got
-
-
-def test_dedup_stream_matches_batch_distinct(spark, tmp_path_factory):
-    """Streaming exact dedup: over any micro-batch split, exactly one row
-    per distinct text survives, and the surviving digest set equals the
-    batch distinct set. Duplicates planted across DIFFERENT files so the
-    state must carry between micro-batches."""
-    from klog_spark.streaming import dedup_stream
-
-    src = tmp_path_factory.mktemp("dedup_stream")
-    texts = [f"document body {i % 40}" for i in range(200)]  # 5x dup each
-    df = spark.createDataFrame(
-        [(i, texts[i]) for i in range(200)], "doc_id long, text string"
-    )
-    df.repartition(8).write.mode("overwrite").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("memory").queryName("dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out = spark.sql("select * from dedup_out").collect()
-    assert len(out) == 40
-    assert {r["text"] for r in out} == set(texts)
-
-
-def test_dedup_stream_within_watermark(spark, tmp_path_factory):
-    """The watermark-bounded dedup variant: duplicates arriving within the
-    watermark window are dropped; the output carries exactly one row per
-    distinct text when all dups are inside the window."""
-    import datetime as dt
-
-    from klog_spark.streaming import dedup_stream
-
-    src = tmp_path_factory.mktemp("dedup_wm")
-    base = dt.datetime(2024, 1, 1)
-    rows = [(i, f"txt {i % 25}", base + dt.timedelta(seconds=i)) for i in range(100)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, ts timestamp")
-    df.repartition(4).write.mode("overwrite").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        dedup_stream(stream, watermark_col="ts", watermark="1 hour")
-        .writeStream.format("memory").queryName("dedup_wm_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out = spark.sql("select * from dedup_wm_out").collect()
-    assert len(out) == 25
-    assert {r["text"] for r in out} == {f"txt {i}" for i in range(25)}
-
-
-def test_novelty_screen_stream_matches_batch(spark, tmp_path_factory):
-    """Stateless packed-Bloom novelty screen: streaming (append, no
-    watermark, maxFilesPerTrigger=1) emits exactly the batch operator's
-    (n_shingles, n_novel, novelty_ppm) per row across micro-batches."""
-    from klog_spark.datapipe.dedup import (
-        bloom_pack, ngram_novelty_packed, shingle_bloom_bits,
-    )
-    from klog_spark.streaming import novelty_screen_stream
-
-    ref = spark.createDataFrame(
-        [(i, f"reference doc {i} alpha beta {i} gamma") for i in range(50)],
-        "doc_id long, text string")
-    rows = [(100 + i, f"reference doc {i} alpha beta {i} gamma")
-            for i in range(0, 50, 6)]
-    rows += [(900 + i, f"fresh stream text {i} zz qq ww") for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    src = tmp_path_factory.mktemp("novelty_stream")
-    df.repartition(5).write.mode("overwrite").parquet(str(src))
-
-    m, k = 1 << 18, 3
-    bitmap = bloom_pack(shingle_bloom_bits(ref, m=m, k=k, n=3), m=m)
-    want = {r["doc_id"]: (r["n_shingles"], r["n_novel"], r["novelty_ppm"])
-            for r in ngram_novelty_packed(df, bitmap, m=m, k=k, n=3).collect()}
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        novelty_screen_stream(stream, bitmap, m=m, k=k, n=3)
-        .writeStream.format("memory").queryName("nv_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {r["doc_id"]: (r["n_shingles"], r["n_novel"], r["novelty_ppm"])
-           for r in spark.sql("SELECT * FROM nv_out").collect()}
-    assert got == want and len(got) == len(rows)
-    # planted republications are 0-novel even through the stream
-    assert all(got[100 + i][2] == 0 for i in range(0, 50, 6))

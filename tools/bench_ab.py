@@ -13,7 +13,7 @@ Usage:
   python tools/bench_ab.py <ref> [rounds] [query ...]
 e.g.
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 \
-  python tools/bench_ab.py e1e3fb9 3 klog_parse_only ngram_novelty
+  python tools/bench_ab.py e1e3fb9 3 klog_parse_only klog_txn_stats
 
 The ref's worktree is created under /tmp/bench-ab-<ref> (reused if
 present) with the gitignored data/ fixture dir symlinked from the working

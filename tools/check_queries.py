@@ -1,14 +1,14 @@
 """Local replica of the driver's correctness gate.
 
 Runs every ``__spark_entry__.queries()`` entry at sf0.01 on Spark, runs the
-matching ``oracle_sql()`` through DuckDB (with the driver's pre-registered
-views emulated), and compares row count, column names and an
-order-insensitive value hash. Usage: python tools/check_queries.py [name...]
+matching ``oracle_sql()`` through DuckDB (every oracle reads the fixture's
+text rendition by path, so no driver table is registered), and compares
+row count, column names and an order-insensitive value hash. Usage:
+python tools/check_queries.py [name...]
 
 Before its verdict it prints how many generated classes Spark compiled for
 the rows it ran: the working set that ``spark.sql.codegen.cache.maxEntries``
-in ``klog_spark/session.py`` must exceed. For the klog surface alone, pass
-the names of the 38 ``klog_*`` rows.
+in ``klog_spark/session.py`` must exceed.
 
 Oracle results are fetched via DuckDB's **Arrow** surface (``.arrow()``),
 not ``fetchall()``: a driver harness that fetches via Arrow/pandas sees
@@ -37,7 +37,6 @@ import pyarrow as pa
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = "documents embeddings".split()
 
 
 def _norm(v):
@@ -161,14 +160,11 @@ def main(names=None):
     if tz:
         spark.conf.set("spark.sql.session.timeZone", tz)
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
 
     # driver-gate registry + the locally-verified extras: the
     # local gate always checks the FULL surface
     qs = {**entry.queries(), **entry.extra_queries()}
     oss = {**entry.oracle_sql(), **entry.extra_oracle_sql()}
-    from klog_spark.cachereg import release_tracked
 
     selected = names or list(qs)
     failures = []
@@ -178,7 +174,6 @@ def main(names=None):
             print(f"  {name:36s} NO ORACLE")
             failures.append(name)
             continue
-        release_tracked()  # per-row storage hygiene (ADVICE r7)
         t0 = time.time()
         sdf = qs[name](spark, SF_DIR)
         slint = lint_spark_schema(sdf.schema)

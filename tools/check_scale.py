@@ -64,22 +64,7 @@ def main(sf: float = 0.1) -> int:
             eq.q_group_commit_rates,
             eq.SQL_GROUP_COMMIT_RATES.replace(eq.klog_base_cte(), eq.klog_base_cte(fx)),
         ),
-        # round-7 operators at 10x the gate scale: decontamination's shingle
-        # join and the packed-bitmap Bloom kernel (same oracle as relational)
-        "contamination_removal": (eq.q_contamination_removal, eq.SQL_CONTAMINATION_REMOVAL),
-        "bloom_screen_packed": (eq.q_bloom_screen_packed, eq.SQL_BLOOM_SCREEN_PACKED),
-        # round-8 operators at 10x the gate scale: the novelty shingle
-        # join and the digest self-join matrix
-        "ngram_novelty": (eq.q_ngram_novelty, eq.SQL_NGRAM_NOVELTY),
-        "cross_source_dups": (eq.q_cross_source_dups, eq.SQL_CROSS_SOURCE_DUPS),
-        # late-round-8: the packed novelty kernel's bit derivation
-        # re-derives from the 10x corpus — scale re-proves, never reuses
-        "ngram_novelty_packed": (eq.q_ngram_novelty_packed, eq.SQL_NGRAM_NOVELTY_PACKED),
     }
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
 
     failures = []
     for name, (q, sql) in checks.items():

@@ -96,18 +96,6 @@ def main() -> None:
     assert "CartesianProduct" not in rc_plan and "BroadcastNestedLoopJoin" not in rc_plan, \
         "read-committed visibility must stay window-based, no all-pairs stage"
 
-    # 8d. round-4 operators: packing is a per-shard window (no global sort),
-    #     contamination is capped equi-joins (no cartesian)
-    pk = eq.q_corpus_pack(spark, SF_DIR)
-    pk_plan = plan_of(pk, "simple")
-    sections.append(("token-budget packing", plan_of(pk), ["Window"]))
-    assert "Sort [" not in pk_plan.split("Window")[0] or "hashpartitioning(file" in pk_plan, \
-        "packing must window per file shard, not globally sort"
-    cont = eq.q_contamination_check(spark, SF_DIR)
-    cont_plan = plan_of(cont, "simple")
-    sections.append(("contamination scan", plan_of(cont), ["Join"]))
-    assert "CartesianProduct" not in cont_plan and "BroadcastNestedLoopJoin" not in cont_plan
-
     # 8e. named custom-operator classes: as-of is windows (no join at all),
     #     and may not nest loops
     af = eq.q_batch_state_asof(spark, SF_DIR)
@@ -115,47 +103,16 @@ def main() -> None:
     sections.append(("AS-OF join (union+window)", plan_of(af), ["Window"]))
     assert "CartesianProduct" not in af_plan and "BroadcastNestedLoopJoin" not in af_plan
 
-    # 8h. round-7 operators: decontamination is the same capped shingle
-    #     equi-join as the scan (no cartesian); the packed Bloom screen is
-    #     a pure per-row kernel (ZERO Exchange)
-    cr = eq.q_contamination_removal(spark, SF_DIR)
-    cr_plan = plan_of(cr, "simple")
-    sections.append(("contamination removal", plan_of(cr), ["Join"]))
-    assert "CartesianProduct" not in cr_plan and "BroadcastNestedLoopJoin" not in cr_plan
-    bsp = eq.q_bloom_screen_packed(spark, SF_DIR)
-    bsp_plan = plan_of(bsp, "simple")
-    sections.append(("packed Bloom screen", plan_of(bsp), ["MapInArrow"]))
-    assert "Exchange" not in bsp_plan, "packed Bloom probe must not shuffle"
-
-    # 8j. round-8 operators: novelty is one distinct-shingle equi-join (no
-    #     cartesian); the cross-source matrix is a digest-keyed self-join
-    nv = eq.q_ngram_novelty(spark, SF_DIR)
-    nv_plan = plan_of(nv, "simple")
-    sections.append(("n-gram novelty scan", plan_of(nv), ["Join", "HashAggregate"]))
-    assert "CartesianProduct" not in nv_plan and "BroadcastNestedLoopJoin" not in nv_plan
-    xs = eq.q_cross_source_dups(spark, SF_DIR)
-    xs_plan = plan_of(xs, "simple")
-    sections.append(("cross-source dup matrix", plan_of(xs), ["HashAggregate", "Join"]))
-    assert "CartesianProduct" not in xs_plan and "BroadcastNestedLoopJoin" not in xs_plan
-
-    # 8k. late-round-8 operator: the packed novelty screen is a stateless
-    #     kernel (ZERO Exchange)
-    nvp = eq.q_ngram_novelty_packed(spark, SF_DIR)
-    nvp_plan = plan_of(nvp, "simple")
-    sections.append(("packed-Bloom novelty screen", plan_of(nvp), ["MapInArrow"]))
-    assert "Exchange" not in nvp_plan, "packed novelty must not shuffle"
-
     # 9. no input-scaled driver collects: every `.collect()` in the query
-    #    registry / datapipe must be bounded by a `.limit(...)` or a literal
-    #    id filter — driver memory must never grow with the corpus
-    bounded = (".limit(", 'F.col("vec_id") < 5')
-    for src in [Path("klog_spark/entry_queries.py"), *Path("klog_spark/datapipe").glob("*.py")]:
-        for i, line in enumerate(src.read_text().splitlines(), 1):
-            if ".collect()" in line and not any(b in line for b in bounded):
-                raise AssertionError(
-                    f"{src}:{i} unbounded driver collect: {line.strip()!r} — "
-                    "cap it with .limit(...) or a literal filter"
-                )
+    #    registry must be bounded by a `.limit(...)` — driver memory must
+    #    never grow with the input
+    src = Path("klog_spark/entry_queries.py")
+    for i, line in enumerate(src.read_text().splitlines(), 1):
+        if ".collect()" in line and ".limit(" not in line:
+            raise AssertionError(
+                f"{src}:{i} unbounded driver collect: {line.strip()!r} — "
+                "cap it with .limit(...)"
+            )
     print("driver-collect audit: all collects bounded")
 
     failures = []

@@ -95,21 +95,10 @@ def main() -> None:
     bench_dir = REPO / "BENCH"
     bench_dir.mkdir(exist_ok=True)
     # raw result tables land here, one section PER MODE (a run replaces its
-    # own mode's section and leaves the others — the file carries the klog
-    # half AND the datapipe half side by side); the curated analysis
+    # own mode's section and leaves the others); the curated analysis
     # (variance, VM-limit falsification, write-path study) lives in
     # BENCH/BASELINE.md — update it by hand from these numbers, don't clobber
-    if mode == "novelty":
-        input_desc = (
-            f"synthetic document corpus sf={sf} ({results[n]['rows']:,} docs; "
-            "reference = every 10th doc, shingle Bloom bitmap (m=2^24) built "
-            "outside the timed window)"
-        )
-        sanity_desc = "sum(n_novel) / zero-novelty docs"
-    else:
-        input_desc = f"seeded klog fixture sf={sf} ({results[n]['rows']:,} tokenized lines)"
-        sanity_desc = "num_committed / num_aborted"
-    unit = "docs/s" if mode == "novelty" else "sequences/s"
+    input_desc = f"seeded klog fixture sf={sf} ({results[n]['rows']:,} tokenized lines)"
     proto = (
         f"{4*n} single-core 6-GiB executor JVMs vs {n} (local-cluster master: "
         "separate executor processes, per-executor heap/GC constant as N "
@@ -125,14 +114,14 @@ for the N -> 4N executor criterion. Timed first action -> last action (session
 startup excluded). Input: {input_desc}; best of 3 interleaved fresh-JVM
 runs per level.
 
-| parallelism | wall (s) | throughput ({unit}) |
+| parallelism | wall (s) | throughput (sequences/s) |
 |---|---|---|
 | {level(n)}  | {results[n]['wall_s']} | {r_n:,.0f} |
 | {level(4*n)} | {results[4*n]['wall_s']} | {r_4n:,.0f} |
 
 **Scaling efficiency (R_{{4N}} / R_N) / 4 = {eff:.3f}** (target >= 0.8).
 
-Aggregate sanity at both levels ({sanity_desc}): {results[n]['num_committed']} /
+Aggregate sanity at both levels (num_committed / num_aborted): {results[n]['num_committed']} /
 {results[n]['num_aborted']}, sessions={results[n]['n_sessions']}
 (identical across parallelism levels: {results[n]['num_committed'] == results[4*n]['num_committed']
  and results[n]['num_aborted'] == results[4*n]['num_aborted']}).

@@ -37,9 +37,6 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    if mode == "novelty":
-        run_novelty(spark, sf)
-        return
     from klog_spark.datagen import ensure_fixture
 
     fx = str(ensure_fixture(sf))
@@ -110,74 +107,6 @@ def spark_cores() -> int:
     import os
 
     return int(os.environ.get("SPARK_SCALING_CORES", "32"))
-
-
-def run_novelty(spark: SparkSession, sf: float) -> None:
-    """Packed-Bloom novelty-screen scaling mode (round 8): the zero-Exchange
-    admission-control kernel — reference shingles packed into a broadcast
-    bitmap OUTSIDE the timed window (the index role, like the fixture),
-    then the timed job is scan -> per-doc k-probe Arrow kernel -> one
-    scalar aggregate. This is the firehose-rate component of the dedup
-    family (the screen every arriving document passes at 100 TB); with no
-    shuffle in the timed plan it should scale at the VM's pure-compute
-    ceiling.
-
-    Sanity across levels: num_committed = sum(n_novel),
-    num_aborted = count(novelty_ppm = 0) (the planted republications).
-    """
-    import os as _os
-
-    from klog_spark.datapipe.dedup import (bloom_pack, ngram_novelty_packed,
-                                           shingle_bloom_bits)
-
-    n_docs = max(1000, int(100_000 * sf))
-    m, k = 1 << 24, 4
-    out = tempfile.mkdtemp(prefix="klog-scaling-novelty-",
-                           dir="/dev/shm" if _os.path.isdir("/dev/shm") else None)
-    try:
-        words = F.transform(
-            F.sequence(F.lit(0), F.lit(79)),
-            lambda i: F.concat(
-                F.lit("w"),
-                F.pmod(F.xxhash64(F.col("doc_id") * F.lit(997) + i), F.lit(4000)),
-            ),
-        )
-        base = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"), F.concat_ws(" ", words).alias("text")
-        )
-        base.repartition(4 * spark_cores()).write.mode("overwrite") \
-            .parquet(f"{out}/docs")
-        docs = spark.read.parquet(f"{out}/docs")
-        # reference = every 10th doc; bitmap built OUTSIDE the timed window
-        bitmap = bloom_pack(
-            shingle_bloom_bits(docs.filter(F.col("doc_id") % 10 == 0),
-                               m=m, k=k, n=3, hash_fn="xxhash64"),
-            m=m,
-        )
-        docs.limit(16).collect()  # pre-warm (session-init, excluded)
-
-        t0 = time.time()
-        n = docs.count()  # first timed action
-        scr = ngram_novelty_packed(docs, bitmap, m=m, k=k, n=3,
-                                   hash_fn="xxhash64")
-        row = scr.agg(
-            F.sum("n_novel").cast("long").alias("nn"),
-            F.sum((F.col("novelty_ppm") == 0).cast("int")).cast("long").alias("nz"),
-        ).collect()[0]
-        wall = time.time() - t0
-        print(json.dumps({
-            "master": spark.sparkContext.master,
-            "mode": "novelty",
-            "rows": n,
-            "wall_s": round(wall, 2),
-            "rows_per_sec": round(n / wall, 1),
-            "num_committed": row["nn"],
-            "num_aborted": row["nz"],
-            "n_sessions": -1,
-        }))
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        spark.stop()
 
 
 if __name__ == "__main__":
