@@ -9,8 +9,10 @@ by Spark instead of a single-threaded visitor walk.
 
 INPUT is either a directory/glob of `kafka-dump-log` text output or a
 parquet path/directory of tokenized sequences (the engine's native table);
-``sources.dump_files.read_input`` tells them apart. Results stream through
+``sources.dump_files.read_input`` tells them apart. Listings stream through
 ``toLocalIterator`` — the driver never holds a whole dump in memory.
+``segment txn-stat`` collects its empty- and open-transaction lines through
+one ``collect()``, as klog holds both lists in memory.
 
 Usage::
 
@@ -63,9 +65,9 @@ def _apply_batch_predicate(parsed: DataFrame, pid: int | None = None,
     a predicate selects whole BATCHES (header + all record lines). On DATA
     segments pid/epoch compare the batch header; on __transaction_state
     segments they are an EXISTS over the nested state-change messages
-    (headers there carry producerId -1). Shared by ``segment cat`` and
-    ``segment txn-stat`` exactly as the reference shares BatchPredicate
-    between Cat.java:81 and TxnStat.java:85."""
+    (headers there carry producerId -1). Serves ``segment cat`` only:
+    ``segment txn-stat`` (DATA segments only) passes the same predicate to
+    the transactional fold as its filters (TxnStat.java:85)."""
     from pyspark.sql import Window
 
     from .operators.aggregates import attach_parent_batch
@@ -187,120 +189,102 @@ def cmd_segment_txn_stat(spark, args) -> int:
     — with the multi-file filename prefix and the ``--line-numbers`` option
     (printEmpty/printOpen at :105-127; ADVICE r5 #4 print parity).
 
+    Like the reference's one TransactionalInfoCollector pass, the input is
+    parsed once and folded once (``aggregates.txn_groups`` with the
+    predicate as its filters): the summary and both detail lists derive
+    from that one fold. Each empty line carries the control message that
+    closed it (``closing_ctl.k``), and the detail lines print in stream
+    order.
+
     Beyond the reference: snapshot dumps mixed into the input are tolerated
     (their producer_state rows cannot perturb the batch-stream aggregates);
     the reference would fail its header parse on them."""
-    from .operators.aggregates import empty_txns, open_txns, txn_stats
-
-    parsed = _parsed(spark, args.input)
-    seg_types = {r[0] for r in parsed.select("segment_type").distinct().collect()}
-    bad = seg_types - {"data"}
-    if bad:
-        topic_of = {"txn_state": "__transaction_state",
-                    "consumer_offsets": "__consumer_offsets"}
-        raise SystemExit(
-            ", ".join(sorted(topic_of.get(t, t) for t in bad))
-            + " partitions do not contain transactional messages"
-        )
-    topics = [r[0] for r in parsed.select("topic").distinct().collect()
-              if r[0] is not None]
-    if len(topics) > 1:
-        raise SystemExit(
-            "Segment dumps come from multiple different topics " + str(sorted(topics))
-        )
-    if any(v is not None for v in (args.pid, args.producer_epoch, args.leader_epoch)):
-        parsed = _apply_batch_predicate(
-            parsed, pid=args.pid, producer_epoch=args.producer_epoch,
-            leader_epoch=args.leader_epoch,
-        )
-    row = txn_stats(parsed).collect()[0]
-    print(f"num_committed: {row['num_committed']}")
-    print(f"num_aborted: {row['num_aborted']}")
-    print("txn_size_stats: " + _int_summary_stats(
-        row["txn_size_count"], row["txn_size_sum"],
-        row["txn_size_min"], row["txn_size_max"]))
-    print("txn_duration_stats_ms: " + _int_summary_stats(
-        row["txn_dur_count"], row["txn_dur_sum"],
-        row["txn_dur_min"], row["txn_dur_max"]))
-    multi = parsed.select("file").distinct().limit(2).count() > 1
-    # Detail lines render the reference's record toStrings byte-for-byte
-    # (printEmpty/printOpen TxnStat.java:106-127 print "%s" of the Java
-    # records): EmptyTransaction[closingBatch=Batch(...),
-    # controlMessage=ControlMessage(...)] and
-    # ProducerSession[...]->FirstBatchInTxn[firstBatchInTxn=Batch(...),
-    # numDataBatches=N]. The location prefix is the control message's /
-    # first batch's file (only with >1 segment) and line (--line-numbers).
-    from .operators.aggregates import attach_parent_batch
+    from .operators.aggregates import (batch_selected, empty_groups, open_groups,
+                                       txn_groups, txn_summary)
     from .operators.render import batch_record_string, control_record_string
 
-    batches = parsed.filter(F.col("record_class") == "batch")
-    bstr = batches.select(
-        F.col("doc_id").alias("_b_doc"), batch_record_string().alias("_b_str")
-    )
-    # closing_batch_doc_id is the control BATCH line (the txn fold attributes
-    # controls to klog's currentBatch cursor); the ControlMessage detail is
-    # the last control record inside that batch (Kafka control batches carry
-    # exactly one — the window is just defensive).
-    from pyspark.sql import Window as _W
+    filters = {"pid": args.pid, "producer_epoch": args.producer_epoch,
+               "leader_epoch": args.leader_epoch}
+    parsed = _parsed(spark, args.input).persist()
+    g = txn_groups(parsed, count_gaps=True, **filters).persist()
+    try:
+        # with a predicate, the filename prefix counts only the files that
+        # hold a selected batch
+        in_scope = ((F.col("record_class") == "batch") & batch_selected("", **filters)
+                    if any(v is not None for v in filters.values()) else F.lit(True))
+        pre = parsed.agg(
+            F.collect_set("segment_type").alias("seg_types"),
+            F.collect_set("topic").alias("topics"),
+            F.countDistinct(F.when(in_scope, F.col("file"))).alias("n_files"),
+        ).first()
+        bad = set(pre["seg_types"]) - {"data"}
+        if bad:
+            topic_of = {"txn_state": "__transaction_state",
+                        "consumer_offsets": "__consumer_offsets"}
+            raise SystemExit(
+                ", ".join(sorted(topic_of.get(t, t) for t in bad))
+                + " partitions do not contain transactional messages"
+            )
+        if len(pre["topics"]) > 1:
+            raise SystemExit(
+                "Segment dumps come from multiple different topics "
+                + str(sorted(pre["topics"]))
+            )
+        row = txn_summary(g).first()
+        print(f"num_committed: {row['num_committed']}")
+        print(f"num_aborted: {row['num_aborted']}")
+        print("txn_size_stats: " + _int_summary_stats(
+            row["txn_size_count"], row["txn_size_sum"],
+            row["txn_size_min"], row["txn_size_max"]))
+        print("txn_duration_stats_ms: " + _int_summary_stats(
+            row["txn_dur_count"], row["txn_dur_sum"],
+            row["txn_dur_min"], row["txn_dur_max"]))
 
-    ctls = attach_parent_batch(
-        parsed.filter(F.col("record_class").isin("batch", "control_msg"))
-    ).filter(F.col("record_class") == "control_msg")
-    cstr = (
-        ctls.withColumn(
-            "_rn",
-            F.row_number().over(
-                _W.partitionBy("parent.doc_id").orderBy(F.desc("line_no"))
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("file").alias("_c_file"), F.col("line_no").alias("_c_line"),
-            control_record_string().alias("_c_str"),
-            F.col("parent.doc_id").alias("_parent_doc"),
-        )
-    )
-    et = (
-        empty_txns(parsed)
-        .join(cstr, F.col("closing_batch_doc_id") == F.col("_parent_doc"))
-        .join(bstr, F.col("closing_batch_doc_id") == F.col("_b_doc"))
-    )
-    prefix = F.lit("empty_txn:")
-    if multi:
-        prefix = F.concat(prefix, F.col("_c_file"), F.lit(":"))
-    if args.line_numbers:
-        prefix = F.concat(prefix, F.col("_c_line").cast("string"), F.lit(":"))
-    et_line = F.concat(
-        prefix, F.lit(" EmptyTransaction[closingBatch="), F.col("_b_str"),
-        F.lit(", controlMessage="), F.col("_c_str"), F.lit("]"),
-    )
-    for r in et.orderBy("closing_batch_doc_id").select(et_line.alias("l")).toLocalIterator():
-        print(r["l"])
+        # Detail lines render the reference's record toStrings byte-for-byte
+        # (printEmpty/printOpen TxnStat.java:106-127 print "%s" of the Java
+        # records), prefixed with the control message's / first batch's
+        # file (only with >1 segment) and line (--line-numbers).
+        def located(kind: str, at: str, *body):
+            prefix = [F.lit(kind + ":")]
+            if pre["n_files"] > 1:
+                prefix += [F.col(at + ".file"), F.lit(":")]
+            if args.line_numbers:
+                prefix += [F.col(at + ".line_no").cast("string"), F.lit(":")]
+            return F.col(at).alias("k"), F.concat(*prefix, *body).alias("l")
 
-    ot = open_txns(parsed).join(
-        batches.select(
-            F.col("doc_id").alias("_b_doc"), F.col("file").alias("_b_file"),
-            F.col("line_no").alias("_b_line"), batch_record_string().alias("_b_str"),
-        ),
-        F.col("first_batch_doc_id") == F.col("_b_doc"),
-    )
-    oprefix = F.lit("open_txn:")
-    if multi:
-        oprefix = F.concat(oprefix, F.col("_b_file"), F.lit(":"))
-    if args.line_numbers:
-        oprefix = F.concat(oprefix, F.col("_b_line").cast("string"), F.lit(":"))
-    ot_line = F.concat(
-        oprefix,
-        F.format_string(
-            " ProducerSession[producerId=%d, producerEpoch=%s]->"
-            "FirstBatchInTxn[firstBatchInTxn=",
-            F.col("producer_id"), F.col("producer_epoch").cast("string"),
-        ),
-        F.col("_b_str"),
-        F.format_string(", numDataBatches=%d]", F.col("n_data_batches")),
-    )
-    for r in ot.orderBy("first_batch_doc_id").select(ot_line.alias("l")).toLocalIterator():
-        print(r["l"])
+        batches = parsed.filter(F.col("record_class") == "batch").select(
+            F.col("doc_id").alias("_b_doc"), batch_record_string().alias("_b_str"))
+        ctls = parsed.filter(F.col("record_class") == "control_msg").select(
+            F.struct("file", "line_no").alias("_c_k"), control_record_string().alias("_c_str"))
+        empty = (
+            empty_groups(g)
+            .join(ctls, F.col("closing_ctl.k") == F.col("_c_k"))
+            .join(batches, F.col("closing_ctl.doc_id") == F.col("_b_doc"))
+            .select(F.lit(0).alias("list"), *located(
+                "empty_txn", "closing_ctl.k", F.lit(" EmptyTransaction[closingBatch="),
+                F.col("_b_str"), F.lit(", controlMessage="), F.col("_c_str"), F.lit("]"),
+            ))
+        )
+        open_ = (
+            open_groups(g)
+            .join(batches, F.col("first_data.doc_id") == F.col("_b_doc"))
+            .select(F.lit(1).alias("list"), *located(
+                "open_txn", "first_data.k",
+                F.format_string(
+                    " ProducerSession[producerId=%d, producerEpoch=%s]->"
+                    "FirstBatchInTxn[firstBatchInTxn=",
+                    F.col("producer_id"), F.col("producer_epoch").cast("string"),
+                ),
+                F.col("_b_str"),
+                F.format_string(", numDataBatches=%d]", F.col("n_data_batches")),
+            ))
+        )
+        # both lists through one collect(); klog holds them in memory too
+        for r in sorted(empty.unionByName(open_).collect()):
+            print(r["l"])
+    finally:
+        g.unpersist()
+        parsed.unpersist()
     return 0
 
 

@@ -271,7 +271,7 @@ gm_msgs AS (
 
 def klog_txn_cte(fx: str = FX) -> str:
     """CTEs for the sessionized transactional fold (valid data-segment
-    batches + their control messages; see aggregates._txn_groups)."""
+    batches + their control messages; see aggregates.txn_groups)."""
     return klog_base_cte(fx) + """,
 dbatches AS (
   SELECT * FROM batches WHERE segment_type = 'data'

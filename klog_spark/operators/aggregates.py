@@ -73,7 +73,7 @@ def attach_parent_batch(parsed: DataFrame) -> DataFrame:
     return parsed.withColumn("parent", parent)
 
 
-def _batch_selected(prefix: str, pid, producer_epoch, leader_epoch):
+def batch_selected(prefix: str, pid, producer_epoch, leader_epoch):
     """BatchPredicate conjunction (segment/cli/BatchPredicate.java:29-62)."""
     p = lambda c: F.col(prefix + c)  # noqa: E731
     cond = F.lit(True)
@@ -102,8 +102,8 @@ def _is_gap():
     )
 
 
-def _txn_groups(parsed: DataFrame, count_gaps: bool = False, pid: int | None = None,
-                producer_epoch: int | None = None, leader_epoch: int | None = None) -> DataFrame:
+def txn_groups(parsed: DataFrame, count_gaps: bool = False, pid: int | None = None,
+               producer_epoch: int | None = None, leader_epoch: int | None = None) -> DataFrame:
     """The transactional fold (TransactionalInfoCollector.java:56-113): one
     row per (session, txn group); group id = #controls strictly before.
 
@@ -112,7 +112,8 @@ def _txn_groups(parsed: DataFrame, count_gaps: bool = False, pid: int | None = N
     currentBatch cursor, collector :61). Only batch-header and control lines
     of data segments enter the per-file window that attaches the cursor.
 
-    ``count_gaps`` (txn_stats only) also keeps offset-gap batches — the
+    ``count_gaps`` (``txn_stats`` and ``segment txn-stat``; the open and
+    empty groups are the same either way) also keeps offset-gap batches — the
     previous-countable-batch lookup shares the cursor's window — and adds
     ``n_gaps``. Gap rows that are not events get a per-line ``_spread`` key
     so the ``producer_id = -1`` bulk never forms a hot session partition;
@@ -129,11 +130,11 @@ def _txn_groups(parsed: DataFrame, count_gaps: bool = False, pid: int | None = N
     is_data = (
         is_b & F.col("is_valid") & F.col("is_transactional") & ~F.col("is_control")
         & (F.col("producer_id") != -1) & (F.col("producer_epoch") != -1)
-        & _batch_selected("", pid, producer_epoch, leader_epoch)
+        & batch_selected("", pid, producer_epoch, leader_epoch)
     )
     is_ctl = (
         ~is_b & F.col("parent").isNotNull() & F.col("parent.is_valid")
-        & _batch_selected("parent.", pid, producer_epoch, leader_epoch)
+        & batch_selected("parent.", pid, producer_epoch, leader_epoch)
     )
     keep, session, extra = is_data | is_ctl, ["producer_id", "producer_epoch"], []
     if count_gaps:
@@ -184,12 +185,22 @@ def _open():
     return ~F.col("has_control") & (F.col("n_data_batches") > 0)
 
 
-def txn_stats(parsed: DataFrame, **filters) -> DataFrame:
+def empty_groups(g: DataFrame) -> DataFrame:
+    """The empty transactions of a ``txn_groups`` result; ``closing_ctl.k``
+    is the (file, line_no) of the control message that closed each one."""
+    return g.filter(_empty())
+
+
+def open_groups(g: DataFrame) -> DataFrame:
+    """The open transactions of a ``txn_groups`` result; ``first_data.k`` is
+    the (file, line_no) of each one's first data batch."""
+    return g.filter(_open())
+
+
+def txn_summary(g: DataFrame) -> DataFrame:
     """Single-row TransactionalInfo summary (TxnStat output,
     segment/cli/TxnStat.java:94-103) + offset-gap count (W8): the final
-    aggregate over the fold, gap rows included, so the Arrow parse and each
-    Exchange run exactly once."""
-    g = _txn_groups(parsed, count_gaps=True, **filters)
+    aggregate over a ``txn_groups(..., count_gaps=True)`` result."""
     closed = F.col("has_control") & (F.col("n_data_batches") > 0)
     dur = (F.col("closing_ctl.ct") - F.col("first_data.ct")).cast("int")
     zero = F.lit(0).cast("long")
@@ -214,10 +225,16 @@ def txn_stats(parsed: DataFrame, **filters) -> DataFrame:
     )
 
 
+def txn_stats(parsed: DataFrame, **filters) -> DataFrame:
+    """``txn_summary`` over the gap-counting fold, so the Arrow parse and
+    each Exchange run exactly once."""
+    return txn_summary(txn_groups(parsed, count_gaps=True, **filters))
+
+
 def open_txns(parsed: DataFrame, **filters) -> DataFrame:
     """Sessions whose trailing group has no closing control
     (collector finisher :109-113; printed TxnStat.java:101-103)."""
-    return _txn_groups(parsed, **filters).filter(_open()).select(
+    return open_groups(txn_groups(parsed, **filters)).select(
         "producer_id", "producer_epoch",
         F.col("first_data.doc_id").alias("first_batch_doc_id"),
         F.col("n_data_batches").alias("n_data_batches"),
@@ -227,7 +244,7 @@ def open_txns(parsed: DataFrame, **filters) -> DataFrame:
 def empty_txns(parsed: DataFrame, **filters) -> DataFrame:
     """Control batches that closed a transaction with no data
     (EmptyTransaction.java:24-35)."""
-    return _txn_groups(parsed, **filters).filter(_empty()).select(
+    return empty_groups(txn_groups(parsed, **filters)).select(
         "producer_id", "producer_epoch",
         F.col("closing_ctl.doc_id").alias("closing_batch_doc_id"),
         F.col("closing_ctl.commit").alias("commit"),

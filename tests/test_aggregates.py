@@ -194,6 +194,7 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     reference implementation) on random inputs, including the <=-tie case
     and the tolerance contract."""
     import random
+    import zlib
 
     import pandas as pd
 
@@ -204,7 +205,7 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     for key in ("a", "b", "c"):
         ts_pool = rng.sample(range(0, 500), 40)
         for t in sorted(ts_pool)[:20]:
-            right_rows.append((key, t, t * 10 + hash(key) % 7))
+            right_rows.append((key, t, t * 10 + zlib.crc32(key.encode()) % 7))
         for _ in range(30):
             left_rows.append((len(left_rows), key, rng.randrange(0, 520)))
     rdf = spark.createDataFrame(right_rows, "k string, ts long, val long")

@@ -237,6 +237,85 @@ def test_cli_txn_stat_contract(spark, dump_dir, capsys):
     assert ", average=" in stats_line and stats_line.rstrip().endswith("}")
 
 
+def _batch_line(base, last, pid, is_control, create_ms, position):
+    return (f"baseOffset: {base} lastOffset: {last} count: {last - base + 1} "
+            f"baseSequence: -1 lastSequence: -1 producerId: {pid} producerEpoch: 0 "
+            f"partitionLeaderEpoch: 0 isTransactional: true isControl: {str(is_control).lower()} "
+            f"deleteHorizonMs: OptionalLong.empty position: {position} CreateTime: {create_ms} "
+            "size: 80 magic: 2 compresscodec: NONE crc: 1234 isvalid: true")
+
+
+def _control_line(offset, create_ms, marker):
+    return (f"| offset: {offset} CreateTime: {create_ms} keySize: 4 valueSize: 6 "
+            f"sequence: -1 headerKeys: [] endTxnMarker: {marker} coordinatorEpoch: 0")
+
+
+def test_cli_txn_stat_empty_lines_print_their_own_control(spark, tmp_path, capsys):
+    """One control batch holding two control records (ABORT, then COMMIT)
+    closes two empty transactions of one session (klog's currentBatch
+    cursor attaches both records to that batch). Each empty_txn line names
+    the control message that closed it, and the lines print in stream
+    order (line 4 before line 11, not the string order of line numbers)."""
+    from klog_spark.__main__ import main
+
+    lines = [
+        "Dumping /tmp/kafka-logs/payments-0/00000000000000000000.log",
+        "Starting offset: 0",
+        _batch_line(0, 1, 5, True, 1700000000000, 0),
+        _control_line(0, 1700000000000, "ABORT"),
+        _control_line(1, 1700000000000, "COMMIT"),
+        _batch_line(2, 2, 5, False, 1700000000100, 80),
+        "| offset: 2 CreateTime: 1700000000100 keySize: 3 valueSize: 3 sequence: 0 headerKeys: []",
+        _batch_line(3, 3, 5, True, 1700000000200, 160),
+        _control_line(3, 1700000000200, "COMMIT"),
+        _batch_line(4, 4, 5, True, 1700000000300, 240),
+        _control_line(4, 1700000000300, "ABORT"),
+    ]
+    dump = tmp_path / "payments-0-00000000000000000000.log.dump.txt"
+    dump.write_text("\n".join(lines) + "\n")
+    assert main(["segment", "txn-stat", str(dump), "--line-numbers"], spark=spark) == 0
+    out = capsys.readouterr().out.splitlines()
+    assert out[:2] == ["num_committed: 2", "num_aborted: 2"]
+    empty = [ln for ln in out if ln.startswith("empty_txn:")]
+    assert [ln.split(" ", 1)[0] for ln in empty] == ["empty_txn:4:", "empty_txn:5:", "empty_txn:11:"]
+    assert [ln.split("controlMessage=")[1].split(", createTime")[0] for ln in empty] == [
+        "ControlMessage(offset=0", "ControlMessage(offset=1", "ControlMessage(offset=4"]
+    assert [ln.split("commit=")[1].split(",")[0] for ln in empty] == ["false", "true", "false"]
+    assert not any(ln.startswith("open_txn:") for ln in out)
+
+
+def test_cli_txn_stat_matches_oracle(spark, dump_dir, oracle_parsed, capsys):
+    """`segment txn-stat` over the DATA dumps, unfiltered and with --pid 1,
+    against the sequential oracle fold: the commit/abort counts, the empty
+    transactions' closing batches in stream order, and the open
+    transactions' sessions and sizes."""
+    import fnmatch
+    import re
+
+    from klog_spark import oracle
+    from klog_spark.__main__ import main
+
+    pay = [p for p in oracle_parsed if fnmatch.fnmatch(p.file, "payments-*.log.dump.txt")]
+    by_doc = {p.doc_id: p for p in pay}
+    for extra, kw in (([], {}), (["--pid", "1"], {"pid": 1})):
+        want = oracle.txn_stat(pay, **kw)
+        assert main(["segment", "txn-stat", dump_dir + "/payments-*.log.dump.txt", *extra],
+                    spark=spark) == 0
+        out = capsys.readouterr().out.splitlines()
+        assert out[:2] == [f"num_committed: {want.num_committed}",
+                           f"num_aborted: {want.num_aborted}"]
+        empty = [re.match(r"empty_txn:(.*?):? EmptyTransaction\[closingBatch=Batch\(baseOffset=(\d+),",
+                          ln).groups() for ln in out if ln.startswith("empty_txn:")]
+        assert len(empty) == len(want.empty_txns) > 0
+        assert empty == [(by_doc[d].file, str(by_doc[d].fields["base_offset"]))
+                         for d in want.empty_txns]
+        opened = sorted(tuple(int(x) for x in re.search(
+            r"producerId=(\d+), producerEpoch=(\d+)\].*numDataBatches=(\d+)\]$", ln).groups())
+            for ln in out if ln.startswith("open_txn:"))
+        assert len(opened) == len(want.open_txns) > 0
+        assert opened == sorted((pid, ep, n) for (pid, ep), (_, n) in want.open_txns.items())
+
+
 def test_cli_cat_transactional_id_rejects_non_txn_input(spark, dump_dir):
     """Cat.java:78-80: the flag on a mixed/non-TS input must error."""
     import pytest as _pytest

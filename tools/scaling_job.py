@@ -2,8 +2,11 @@
 pipeline, timed from first action to last (JVM/session startup excluded per
 BASELINE.md). Run via spark-submit at two parallelism levels:
 
-    spark-submit --master local[8]  --py-files dist/klog_spark.zip tools/scaling_job.py <sf> <out>
-    spark-submit --master local[32] --py-files dist/klog_spark.zip tools/scaling_job.py <sf> <out>
+    spark-submit --master local[8]  --py-files dist/klog_spark.zip tools/scaling_job.py <sf> [parse_agg|full|write]
+    spark-submit --master local[32] --py-files dist/klog_spark.zip tools/scaling_job.py <sf> [parse_agg|full|write]
+
+The mode defaults to ``full``; the routed output goes to a temporary
+directory that the job removes.
 
 Prints one JSON line: rows, wall seconds, rows/sec.
 """
