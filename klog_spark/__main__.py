@@ -7,12 +7,18 @@ those commands (plus the beyond-reference ``group`` analytics and the
 the same commands at the same dump files and get the same output — computed
 by Spark instead of a single-threaded visitor walk.
 
-INPUT is either a directory/glob of `kafka-dump-log` text output or a
-parquet path/directory of tokenized sequences (the engine's native table);
-``sources.dump_files.read_input`` tells them apart. Listings stream through
-``toLocalIterator`` — the driver never holds a whole dump in memory.
-``segment txn-stat`` collects its empty- and open-transaction lines through
-one ``collect()``, as klog holds both lists in memory.
+INPUT is either a directory/glob of `kafka-dump-log` text output, a
+parquet path/directory of tokenized sequences (the engine's native table)
+or a fixture directory; ``sources.dump_files.read_input`` tells them apart.
+Every command reads one ``Pipeline(spark, INPUT)``: one parse, which
+``parsed_raw()`` returns and ``parsed()`` routes. Every command but
+``route`` persists that parse for the call and unpersists it before
+``main`` returns, as most run several Spark jobs over it (a sorted listing
+alone samples its range and then sorts); ``route`` consumes its parse in
+one write job, where a persist would only add the cache's cost. Listings
+stream through ``toLocalIterator`` — the driver never holds a whole dump in
+memory. ``segment txn-stat`` collects its empty- and open-transaction lines
+through one ``collect()``, as klog holds both lists in memory.
 
 Usage::
 
@@ -34,19 +40,6 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def _parsed(spark: SparkSession, path: str) -> DataFrame:
-    from .operators.parse import parse_sequences
-    from .sources.dump_files import read_input
-
-    return parse_sequences(read_input(spark, path))
-
-
-def _routed(spark: SparkSession, path: str) -> DataFrame:
-    from .operators.route import apply_validity_routing
-
-    return apply_validity_routing(_parsed(spark, path))
 
 
 def _print_rows(df: DataFrame, col: str | None = None) -> int:
@@ -118,7 +111,7 @@ def _apply_batch_predicate(parsed: DataFrame, pid: int | None = None,
     )
 
 
-def cmd_segment_cat(spark, args) -> int:
+def cmd_segment_cat(p, args) -> int:
     """``klog segment cat`` with the reference's BatchPredicate semantics
     (BatchPredicate.java:29-66, Cat.java:76-88): predicates select whole
     BATCHES — a selected batch prints its header line plus ALL its record
@@ -137,7 +130,7 @@ def cmd_segment_cat(spark, args) -> int:
     """
     from .operators.render import render_cat_lines
 
-    parsed = _parsed(spark, args.input)
+    parsed = p.parsed_raw()
     active = any(v is not None for v in
                  (args.pid, args.producer_epoch, args.leader_epoch))
     if args.transactional_id is not None:
@@ -175,7 +168,7 @@ def _int_summary_stats(count, total, mn, mx) -> str:
             f"average={total / count:.6f}, max={mx}}}")
 
 
-def cmd_segment_txn_stat(spark, args) -> int:
+def cmd_segment_txn_stat(p, args) -> int:
     """``klog segment txn-stat`` with the reference's full contract
     (TxnStat.java:64-126): an eager pre-pass rejects non-DATA segments
     ("__transaction_state partitions do not contain transactional
@@ -205,7 +198,7 @@ def cmd_segment_txn_stat(spark, args) -> int:
 
     filters = {"pid": args.pid, "producer_epoch": args.producer_epoch,
                "leader_epoch": args.leader_epoch}
-    parsed = _parsed(spark, args.input).persist()
+    parsed = p.parsed_raw()
     g = txn_groups(parsed, count_gaps=True, **filters).persist()
     try:
         # with a predicate, the filename prefix counts only the files that
@@ -284,66 +277,53 @@ def cmd_segment_txn_stat(spark, args) -> int:
             print(r["l"])
     finally:
         g.unpersist()
-        parsed.unpersist()
     return 0
 
 
-def cmd_snapshot_cat(spark, args) -> int:
-    from .operators.filters import cat_producer_states
-
-    df = cat_producer_states(
-        _routed(spark, args.input), pid=args.pid, producer_epoch=args.producer_epoch
-    ).orderBy("file", "line_no")
-    _print_rows(df.drop("file", "line_no"))
+def cmd_snapshot_cat(p, args) -> int:
+    df = p.cat_producer_states(pid=args.pid, producer_epoch=args.producer_epoch)
+    _print_rows(df.orderBy("file", "line_no").drop("file", "line_no"))
     return 0
 
 
-def cmd_snapshot_abort_cmd(spark, args) -> int:
-    from .operators.enrich import abort_commands_for
-
-    df = abort_commands_for(_routed(spark, args.input), args.pid, args.producer_epoch)
-    _print_rows(df, "abort_command")
+def cmd_snapshot_abort_cmd(p, args) -> int:
+    _print_rows(p.abort_commands(args.pid, args.producer_epoch), "abort_command")
     return 0
 
 
-def cmd_group(spark, args) -> int:
-    from .operators.group_offsets import (
-        group_lag, latest_group_metadata, latest_group_offsets,
-        offset_rewinds, read_committed_group_offsets,
-    )
+def cmd_group(p, args) -> int:
+    from .operators.group_offsets import offset_rewinds, read_committed_group_offsets
 
-    routed = _routed(spark, args.input)
     if args.view == "offsets":
-        df = (read_committed_group_offsets(routed) if args.read_committed
-              else latest_group_offsets(routed))
+        df = (read_committed_group_offsets(p.parsed()) if args.read_committed
+              else p.group_offsets())
         df = df.orderBy("group_id", "commit_topic", "commit_partition")
     elif args.view == "lag":
-        df = group_lag(routed).orderBy("group_id", "commit_topic", "commit_partition")
+        df = p.group_lag().orderBy("group_id", "commit_topic", "commit_partition")
     elif args.view == "metadata":
-        df = latest_group_metadata(routed).orderBy("group_id")
+        df = p.group_metadata().orderBy("group_id")
     else:
-        df = offset_rewinds(routed).orderBy("group_id", "file", "line_no")
+        df = offset_rewinds(p.parsed()).orderBy("group_id", "file", "line_no")
     _print_rows(df)
     return 0
 
 
-def cmd_segment_health(spark, args) -> int:
+def cmd_segment_health(p, args) -> int:
     """Per-file health dashboard (aggregates.file_health over arbitrary CLI
     input, the same table as q_file_health and the file_health SQL view):
     line/batch/corrupt counts, corrupt rate, offset-gap count per segment
     file — the first look at a dump fleet."""
     from .operators.aggregates import file_health
 
-    _print_rows(file_health(_parsed(spark, args.input), _routed(spark, args.input)).orderBy("file"))
+    _print_rows(file_health(p.parsed_raw(), p.parsed()).orderBy("file"))
     return 0
 
 
-def cmd_route(spark, args) -> int:
+def cmd_route(p, args) -> int:
     from .operators.route import read_routed, sink_counts, write_routed
 
-    routed = _routed(spark, args.input)
-    write_routed(routed, args.out, write_tasks=args.write_tasks)
-    _print_rows(sink_counts(read_routed(spark, args.out)))
+    write_routed(p.parsed(), args.out, write_tasks=args.write_tasks)
+    _print_rows(sink_counts(read_routed(p.spark, args.out)))
     print(f"routed staging written to {args.out}")
     return 0
 
@@ -401,12 +381,19 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
+    from .pipeline import Pipeline
+
     args = build_parser().parse_args(argv)
     if spark is None:
         from .session import get_spark
 
         spark = get_spark(app_name="klog-spark-cli")
-    return args.fn(spark, args)
+    p = Pipeline(spark, args.input)
+    parse = p.parsed_raw() if args.fn is cmd_route else p.parsed_raw().persist()
+    try:
+        return args.fn(p, args)
+    finally:
+        parse.unpersist()
 
 
 if __name__ == "__main__":

@@ -15,11 +15,11 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import grammar as g
 from .datagen import ensure_fixture
+from .pipeline import Pipeline
 
 FIXTURE_ROOT = "/root/repo/data/klog"
 ORACLE_SF = 0.01  # the driver's correctness scale
@@ -33,14 +33,6 @@ def sf_of(sf_dir: str) -> float:
 
 def klog_fixture(sf_dir: str) -> str:
     return str(ensure_fixture(sf_of(sf_dir), FIXTURE_ROOT))
-
-
-def load_parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.parse import parse_sequences
-    from .operators.route import apply_validity_routing
-
-    fx = klog_fixture(sf_dir)
-    return apply_validity_routing(parse_sequences(spark.read.parquet(f"{fx}/sequences.parquet")))
 
 
 # ---------------------------------------------------------------------------
@@ -340,23 +332,13 @@ gaps AS (
 )"""
 
 
-def load_parsed_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parse WITHOUT validity re-routing: the transactional aggregates need
-    invalid batches still classified as batches (klog's cursor points at
-    them; their messages are dropped, not re-attached)."""
-    from .operators.parse import parse_sequences
-
-    fx = klog_fixture(sf_dir)
-    return parse_sequences(spark.read.parquet(f"{fx}/sequences.parquet"))
-
-
 # ---------------------------------------------------------------------------
 # klog query registry
 # ---------------------------------------------------------------------------
 
 def q_route_counts(spark, sf_dir):
     return (
-        load_parsed(spark, sf_dir)
+        Pipeline(spark, klog_fixture(sf_dir)).parsed()
         .groupBy("record_class")
         .agg(F.count("*").alias("n_rows"))
     )
@@ -369,9 +351,9 @@ SELECT record_class, COUNT(*) AS n_rows FROM classified GROUP BY record_class
 
 
 def q_sink_batches(spark, sf_dir):
-    fx = klog_fixture(sf_dir)
-    parsed = load_parsed(spark, sf_dir)
-    toks = spark.read.parquet(f"{fx}/sequences.parquet").select(
+    p = Pipeline(spark, klog_fixture(sf_dir))
+    parsed = p.parsed()
+    toks = p.input_df().select(
         "doc_id",
         F.aggregate("tokens", F.lit(0).cast("long"), lambda a, x: a + x).alias("token_sum"),
     )
@@ -405,7 +387,9 @@ FROM batches b JOIN tok t USING (doc_id)
 
 
 def q_sink_control(spark, sf_dir):
-    return load_parsed(spark, sf_dir).filter(F.col("record_class") == "control_msg").select(
+    return Pipeline(spark, klog_fixture(sf_dir)).parsed().filter(
+        F.col("record_class") == "control_msg"
+    ).select(
         "doc_id", "file", "line_no", "offset", "msg_create_time_ms",
         "key_size", "value_size", "sequence", "commit", "coordinator_epoch",
     )
@@ -420,7 +404,9 @@ FROM ctl_msgs
 
 
 def q_sink_txn_state(spark, sf_dir):
-    return load_parsed(spark, sf_dir).filter(F.col("record_class") == "txn_state").select(
+    return Pipeline(spark, klog_fixture(sf_dir)).parsed().filter(
+        F.col("record_class") == "txn_state"
+    ).select(
         "doc_id", "file", "line_no", "offset", "transactional_id",
         "txn_producer_id", "txn_producer_epoch", "state", "partitions",
         "txn_last_update_ms", "txn_timeout_ms",
@@ -437,7 +423,9 @@ FROM txn_msgs
 
 
 def q_sink_producer_state(spark, sf_dir):
-    return load_parsed(spark, sf_dir).filter(F.col("record_class") == "producer_state").select(
+    return Pipeline(spark, klog_fixture(sf_dir)).parsed().filter(
+        F.col("record_class") == "producer_state"
+    ).select(
         "doc_id", "file", "line_no", "producer_id", "producer_epoch",
         "coordinator_epoch", "current_txn_first_offset", "last_timestamp_ms",
         "first_sequence", "last_sequence", "last_offset", "offset_delta", "timestamp_ms",
@@ -454,7 +442,9 @@ FROM snapshots
 
 
 def q_sink_corrupt(spark, sf_dir):
-    return load_parsed(spark, sf_dir).filter(F.col("record_class") == "corrupt").select(
+    return Pipeline(spark, klog_fixture(sf_dir)).parsed().filter(
+        F.col("record_class") == "corrupt"
+    ).select(
         "doc_id", "file", "line_no", "source",
     )
 
@@ -468,7 +458,9 @@ SELECT doc_id, file, line_no, source FROM classified WHERE record_class = 'corru
 def q_sink_group_offsets(spark, sf_dir):
     """__consumer_offsets offset-commit sink — BEYOND the reference surface
     (Segment.java:28 leaves the type a TODO; we decode it)."""
-    return load_parsed(spark, sf_dir).filter(F.col("record_class") == "offset_commit").select(
+    return Pipeline(spark, klog_fixture(sf_dir)).parsed().filter(
+        F.col("record_class") == "offset_commit"
+    ).select(
         "doc_id", "file", "line_no", "offset", "msg_create_time_ms",
         "group_id", "commit_topic", "commit_partition", "committed_offset",
         "committed_leader_epoch", "commit_metadata", "commit_timestamp_ms",
@@ -489,9 +481,7 @@ FROM oc_msgs
 def q_group_lag(spark, sf_dir):
     """Per-group consumer lag: compacted latest commit per (group, topic,
     partition) vs the dumped partition's log-end offset."""
-    from .operators.group_offsets import group_lag
-
-    return group_lag(load_parsed(spark, sf_dir))
+    return Pipeline(spark, klog_fixture(sf_dir)).group_lag()
 
 
 SQL_GROUP_LAG = f"""
@@ -518,9 +508,7 @@ FROM latest l JOIN log_end e
 def q_group_metadata(spark, sf_dir):
     """Latest group-metadata record per consumer group (compaction
     semantics; tombstoned groups dropped)."""
-    from .operators.group_offsets import latest_group_metadata
-
-    return latest_group_metadata(load_parsed(spark, sf_dir))
+    return Pipeline(spark, klog_fixture(sf_dir)).group_metadata()
 
 
 SQL_GROUP_METADATA = f"""
@@ -540,7 +528,7 @@ def q_group_commit_rates(spark, sf_dir):
     group x partition), then a plain grouped aggregate."""
     from pyspark.sql import Window
 
-    oc = load_parsed(spark, sf_dir).filter(
+    oc = Pipeline(spark, klog_fixture(sf_dir)).parsed().filter(
         (F.col("record_class") == "offset_commit") & ~F.col("is_deletion")
     )
     w = Window.partitionBy("group_id", "commit_topic", "commit_partition").orderBy(
@@ -581,9 +569,7 @@ FROM deltas GROUP BY group_id, window_start_ms
 
 
 def q_txn_stats(spark, sf_dir):
-    from .operators.aggregates import txn_stats
-
-    df = txn_stats(load_parsed_raw(spark, sf_dir))
+    df = Pipeline(spark, klog_fixture(sf_dir)).txn_stats()
     return df.select(
         F.col("num_committed").cast("long"),
         F.col("num_aborted").cast("long"),
@@ -628,7 +614,7 @@ FROM grp
 def q_batches_per_epoch(spark, sf_dir):
     from .operators.aggregates import batches_per_epoch
 
-    return batches_per_epoch(load_parsed_raw(spark, sf_dir))
+    return batches_per_epoch(Pipeline(spark, klog_fixture(sf_dir)).parsed_raw())
 
 
 SQL_BATCHES_PER_EPOCH = f"""
@@ -642,7 +628,7 @@ GROUP BY producer_id, producer_epoch
 def q_open_txns(spark, sf_dir):
     from .operators.aggregates import open_txns
 
-    return open_txns(load_parsed_raw(spark, sf_dir)).select(
+    return open_txns(Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()).select(
         "producer_id", "producer_epoch", "first_batch_doc_id",
         F.col("n_data_batches").cast("long").alias("n_data_batches"),
     )
@@ -659,7 +645,7 @@ FROM grp WHERE NOT has_ctl
 def q_empty_txns(spark, sf_dir):
     from .operators.aggregates import empty_txns
 
-    return empty_txns(load_parsed_raw(spark, sf_dir))
+    return empty_txns(Pipeline(spark, klog_fixture(sf_dir)).parsed_raw())
 
 
 SQL_EMPTY_TXNS = f"""
@@ -673,7 +659,7 @@ FROM grp WHERE has_ctl AND n_data = 0
 def q_offset_gaps(spark, sf_dir):
     from .operators.aggregates import offset_gaps
 
-    return offset_gaps(load_parsed_raw(spark, sf_dir)).select(
+    return offset_gaps(Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()).select(
         "doc_id", "file", "line_no", "base_offset", "prev_last_offset"
     )
 
@@ -693,7 +679,8 @@ FROM g WHERE prev_last_offset IS NOT NULL AND base_offset <> prev_last_offset + 
 def q_cat_pid(spark, sf_dir):
     from .operators.filters import cat_batches
 
-    return cat_batches(load_parsed_raw(spark, sf_dir), pid=1).filter(F.col("is_valid")).select(
+    raw = Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()
+    return cat_batches(raw, pid=1).filter(F.col("is_valid")).select(
         "doc_id", "base_offset", "last_offset", "count", "producer_id",
         "producer_epoch", "is_transactional", "is_control", "create_time",
     )
@@ -721,9 +708,7 @@ FROM batches WHERE segment_type = 'data' AND producer_id = 1
 def q_cat_producer_states(spark, sf_dir):
     """`klog snapshot cat` projection (snapshot/cli/Cat.OutputVisitor:71-99)
     with Instant-rendered timestamps."""
-    from .operators.filters import cat_producer_states
-
-    return cat_producer_states(load_parsed(spark, sf_dir)).select(
+    return Pipeline(spark, klog_fixture(sf_dir)).cat_producer_states().select(
         "doc_id", "producer_id", "producer_epoch", "coordinator_epoch",
         "current_txn_first_offset", "last_timestamp",
         "first_sequence", "last_sequence", "last_offset", "offset_delta", "timestamp",
@@ -746,7 +731,8 @@ def q_cat_pid_epoch(spark, sf_dir):
     projection (BatchPredicate.java:29-62)."""
     from .operators.filters import cat_batches
 
-    return cat_batches(load_parsed_raw(spark, sf_dir), pid=1001, producer_epoch=0).filter(
+    raw = Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()
+    return cat_batches(raw, pid=1001, producer_epoch=0).filter(
         F.col("is_valid")
     ).select("doc_id", "base_offset", "last_offset", "producer_id", "producer_epoch", "create_time")
 
@@ -763,7 +749,8 @@ def q_cat_leader_epoch(spark, sf_dir):
     """P4: --leader-epoch filter through the cat projection."""
     from .operators.filters import cat_batches
 
-    return cat_batches(load_parsed_raw(spark, sf_dir), leader_epoch=2).filter(
+    raw = Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()
+    return cat_batches(raw, leader_epoch=2).filter(
         F.col("is_valid")
     ).select("doc_id", "base_offset", "partition_leader_epoch", "producer_id", "create_time")
 
@@ -779,7 +766,8 @@ FROM batches WHERE segment_type = 'data' AND partition_leader_epoch = 2
 def q_filter_txn_id(spark, sf_dir):
     from .operators.filters import filter_txn_state
 
-    return filter_txn_state(load_parsed_raw(spark, sf_dir), transactional_id="txn-app-3").filter(
+    raw = Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()
+    return filter_txn_state(raw, transactional_id="txn-app-3").filter(
         ~F.col("is_deletion")
     ).select("doc_id", "transactional_id", "txn_producer_id", "txn_producer_epoch", "state")
 
@@ -794,7 +782,8 @@ FROM txn_msgs WHERE transactional_id = 'txn-app-3'
 def q_state_machine_violations(spark, sf_dir):
     from .operators.checks import state_machine_violations
 
-    return state_machine_violations(load_parsed_raw(spark, sf_dir)).select(
+    raw = Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()
+    return state_machine_violations(raw).select(
         "doc_id", "transactional_id", "producer_id", "producer_epoch", "prev_state", "state"
     )
 
@@ -826,9 +815,9 @@ FROM seq WHERE prev_state IS NOT NULL AND {{VALID_PREV}}
 def q_enrich_producer_team(spark, sf_dir):
     from .operators.enrich import enrich_with_producer_meta
 
-    fx = klog_fixture(sf_dir)
-    meta = spark.read.parquet(f"{fx}/producer_meta.parquet")
-    b = load_parsed(spark, sf_dir).filter(
+    p = Pipeline(spark, klog_fixture(sf_dir))
+    meta = p.producer_meta()
+    b = p.parsed().filter(
         (F.col("record_class") == "batch") & (F.col("segment_type") == "data") & (F.col("producer_id") != -1)
     )
     return (
@@ -850,9 +839,9 @@ GROUP BY m.team
 def q_enrich_topic(spark, sf_dir):
     from .operators.enrich import enrich_with_topic_meta
 
-    fx = klog_fixture(sf_dir)
-    meta = spark.read.parquet(f"{fx}/topic_meta.parquet")
-    b = load_parsed(spark, sf_dir).filter(F.col("record_class") == "batch")
+    p = Pipeline(spark, klog_fixture(sf_dir))
+    meta = p.topic_meta()
+    b = p.parsed().filter(F.col("record_class") == "batch")
     return enrich_with_topic_meta(b, meta).groupBy("cleanup_policy", "is_internal").agg(
         F.count("*").alias("n_batches")
     )
@@ -869,7 +858,8 @@ GROUP BY m.cleanup_policy, m.is_internal
 def q_abort_cmds(spark, sf_dir):
     from .operators.enrich import abort_commands_for
 
-    return abort_commands_for(load_parsed_raw(spark, sf_dir), pid=1, producer_epoch=0).select(
+    raw = Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()
+    return abort_commands_for(raw, pid=1, producer_epoch=0).select(
         "doc_id", "producer_id", "producer_epoch", "coordinator_epoch", "abort_command"
     )
 
@@ -886,7 +876,7 @@ FROM snapshots WHERE producer_id = 1 AND producer_epoch = 0
 def q_coordinating_partition(spark, sf_dir):
     from .javahash import with_coordinating_partition
 
-    ids = load_parsed_raw(spark, sf_dir).filter(
+    ids = Pipeline(spark, klog_fixture(sf_dir)).parsed_raw().filter(
         F.col("transactional_id").isNotNull()
     ).select("transactional_id").distinct()
     return with_coordinating_partition(ids, "transactional_id", 50)
@@ -923,7 +913,7 @@ def q_position_monotonic(spark, sf_dir):
     (AssertBatchPositionMonotonic's intent), over the routed batch view."""
     from .operators.checks import position_monotonic_violations
 
-    return position_monotonic_violations(load_parsed(spark, sf_dir))
+    return position_monotonic_violations(Pipeline(spark, klog_fixture(sf_dir)).parsed())
 
 
 SQL_POSITION_MONOTONIC = f"""
@@ -942,7 +932,7 @@ def q_leader_epoch_monotonic(spark, sf_dir):
     """W3: partitionLeaderEpoch non-decreasing within a dump file."""
     from .operators.checks import leader_epoch_monotonic_violations
 
-    return leader_epoch_monotonic_violations(load_parsed(spark, sf_dir))
+    return leader_epoch_monotonic_violations(Pipeline(spark, klog_fixture(sf_dir)).parsed())
 
 
 SQL_LEADER_EPOCH_MONOTONIC = f"""
@@ -962,7 +952,7 @@ def q_deep_iteration(spark, sf_dir):
     SegmentDumpReader.java:136-163's sniffing, at table scale)."""
     from .operators.aggregates import deep_iteration_files
 
-    return deep_iteration_files(load_parsed(spark, sf_dir))
+    return deep_iteration_files(Pipeline(spark, klog_fixture(sf_dir)).parsed())
 
 
 SQL_DEEP_ITERATION = f"""
@@ -980,7 +970,7 @@ def q_topics_sanity(spark, sf_dir):
     """A8: txn-stat's one-topic precondition (TxnStat.java:78-81)."""
     from .operators.aggregates import topics_sanity
 
-    return topics_sanity(load_parsed_raw(spark, sf_dir))
+    return topics_sanity(Pipeline(spark, klog_fixture(sf_dir)).parsed_raw())
 
 
 SQL_TOPICS_SANITY = f"""
@@ -996,9 +986,7 @@ def q_open_txn_abort_cmds(spark, sf_dir):
     transactions from the segment dumps joined to producer-snapshot states
     on (producer_id, producer_epoch), one abort command per match
     (snapshot/cli/AbortCmd.OutputVisitor:68-77)."""
-    from .operators.enrich import open_txn_abort_commands
-
-    return open_txn_abort_commands(load_parsed_raw(spark, sf_dir))
+    return Pipeline(spark, klog_fixture(sf_dir)).open_txn_abort_commands()
 
 
 SQL_OPEN_TXN_ABORT_CMDS = f"""
@@ -1023,7 +1011,7 @@ def q_group_coordinating_partition(spark, sf_dir):
     from .javahash import with_coordinating_partition
 
     ids = (
-        load_parsed_raw(spark, sf_dir)
+        Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()
         .filter(F.col("segment_type") == "data")
         .select(F.col("topic").alias("group_id"))
         .distinct()
@@ -1050,7 +1038,7 @@ def q_cat_render(spark, sf_dir):
     byte-for-byte the reference's format strings (Cat.OutputVisitor)."""
     from .operators.render import render_cat_lines
 
-    return render_cat_lines(load_parsed(spark, sf_dir), color=True)
+    return render_cat_lines(Pipeline(spark, klog_fixture(sf_dir)).parsed(), color=True)
 
 
 def _sql_cat_render() -> str:
@@ -1123,7 +1111,7 @@ SQL_CAT_RENDER = _sql_cat_render()
 def q_first_last_batch(spark, sf_dir):
     from .operators.aggregates import first_last_batch
 
-    return first_last_batch(load_parsed_raw(spark, sf_dir))
+    return first_last_batch(Pipeline(spark, klog_fixture(sf_dir)).parsed_raw())
 
 
 SQL_FIRST_LAST_BATCH = f"""
@@ -1139,7 +1127,8 @@ def q_file_health(spark, sf_dir):
     recomputes the counts and gaps from the text CTEs."""
     from .operators.aggregates import file_health
 
-    return file_health(load_parsed_raw(spark, sf_dir), load_parsed(spark, sf_dir))
+    p = Pipeline(spark, klog_fixture(sf_dir))
+    return file_health(p.parsed_raw(), p.parsed())
 
 
 SQL_FILE_HEALTH = f"""
@@ -1171,7 +1160,8 @@ def q_batches_per_epoch_salted(spark, sf_dir):
     identical result to the direct aggregate, same oracle SQL."""
     from .operators.skew import salted_batches_per_epoch
 
-    return salted_batches_per_epoch(load_parsed_raw(spark, sf_dir), salt_buckets=16)
+    raw = Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()
+    return salted_batches_per_epoch(raw, salt_buckets=16)
 
 
 def q_group_offsets_read_committed(spark, sf_dir):
@@ -1183,7 +1173,7 @@ def q_group_offsets_read_committed(spark, sf_dir):
     view."""
     from .operators.group_offsets import read_committed_group_offsets
 
-    return read_committed_group_offsets(load_parsed(spark, sf_dir))
+    return read_committed_group_offsets(Pipeline(spark, klog_fixture(sf_dir)).parsed())
 
 
 SQL_GROUP_OFFSETS_READ_COMMITTED = f"""
@@ -1243,7 +1233,7 @@ def q_group_offset_rewinds(spark, sf_dir):
     signal; tombstones legitimately reset the chain."""
     from .operators.group_offsets import offset_rewinds
 
-    return offset_rewinds(load_parsed(spark, sf_dir))
+    return offset_rewinds(Pipeline(spark, klog_fixture(sf_dir)).parsed())
 
 
 SQL_GROUP_OFFSET_REWINDS = f"""
@@ -1271,7 +1261,7 @@ def q_batch_state_asof(spark, sf_dir):
     deterministic on both engines."""
     from .operators.asof import asof_join
 
-    parsed = load_parsed(spark, sf_dir)
+    parsed = Pipeline(spark, klog_fixture(sf_dir)).parsed()
     b = parsed.filter(
         (F.col("record_class") == "batch") & (F.col("segment_type") == "data")
         & (F.col("producer_id") != -1)

@@ -69,10 +69,10 @@ def read_committed_group_offsets(parsed: DataFrame) -> DataFrame:
     joins, no driver state; the compaction shuffle stays one row per live
     group-partition.
 
-    Input contract: the POST-routing view (load_parsed / staged sinks). A
-    CRC-invalid batch is then class 'corrupt' and never acts as a parent —
-    its messages attribute to the previous valid batch, mirroring klog's
-    invalid-batch message-drop. (``routed_as_parsed`` restores such batches
+    Input contract: the POST-routing view (``Pipeline.parsed()``, unstaged
+    or over staged sinks). A CRC-invalid batch is then class 'corrupt' and
+    never acts as a parent — its messages attribute to the previous valid
+    batch, mirroring klog's invalid-batch message-drop. (``routed_as_parsed`` restores such batches
     for the klog txn cursor; do not feed that restored view here.)
     """
     co = parsed.filter(

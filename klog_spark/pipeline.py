@@ -5,6 +5,10 @@ invocation at once (segment cat / txn-stat / snapshot cat / abort-cmd —
 segment/cli/Cat.java:71-90, TxnStat.java:64-104, snapshot/cli/*):
 the input table is parsed once, routed once, and every aggregate/report is
 a query over the routed result.
+
+``Pipeline`` is the one place that loads and parses input: the CLI
+(``__main__``), the SQL views (``sql.register_views``) and the query rows
+of ``entry_queries`` all build on it.
 """
 
 from __future__ import annotations
@@ -15,15 +19,21 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import Checkpoint, run_incremental
 from .operators import aggregates, checks, enrich, filters
-from .operators.parse import parse_sequences
 from .operators.route import apply_validity_routing, read_routed, routed_as_parsed, sink_counts
+from .sources.dump_files import read_input
 
 
 @dataclass
 class Pipeline:
-    """``staging_dir`` is the parse-once switch: after :meth:`stage` (or with
+    """``fixture_dir`` is any input ``sources.dump_files.read_input``
+    accepts: a fixture directory, tokenized parquet, or a directory/glob of
+    dump-text files. Unstaged, the Pipeline builds ONE raw parse of it on
+    first use; :meth:`parsed_raw` returns that DataFrame and :meth:`parsed`
+    routes it, so persisting :meth:`parsed_raw` serves every query of the
+    Pipeline from one parse.
+
+    ``staging_dir`` is the parse-once switch: after :meth:`stage` (or with
     a pre-existing routed table) every query reads the partitioned staging
     parquet — partition-pruned per sink class, zero re-parses — instead of
     re-running the Arrow parse per query. At 100 TB the parse is the
@@ -36,16 +46,17 @@ class Pipeline:
     fixture_dir: str
     staging_dir: str | None = None
     _staged: tuple[str, DataFrame] | None = field(default=None, init=False, repr=False)
+    _parse: DataFrame | None = field(default=None, init=False, repr=False)
 
     def input_df(self) -> DataFrame:
-        return self.spark.read.parquet(str(Path(self.fixture_dir) / "sequences.parquet"))
+        return read_input(self.spark, self.fixture_dir)
 
     def stage(self, out_dir: str) -> "Pipeline":
         """Parse + route ONCE into a partitioned staging table; further
         queries on the returned Pipeline are parse-free."""
         from .operators.route import write_routed
 
-        write_routed(apply_validity_routing(parse_sequences(self.input_df())), out_dir)
+        write_routed(apply_validity_routing(self._raw()), out_dir)
         self.staging_dir, self._staged = out_dir, None
         return self
 
@@ -71,7 +82,7 @@ class Pipeline:
         """
         if self.staging_dir:
             return self._staged_df()
-        return apply_validity_routing(parse_sequences(self.input_df()))
+        return apply_validity_routing(self._raw())
 
     def parsed_raw(self) -> DataFrame:
         """Pre-routing parse for the transactional aggregates (the view
@@ -81,15 +92,15 @@ class Pipeline:
 
     def _raw(self, *classes: str) -> DataFrame:
         """The raw view; from a staging table, pruned to ``classes`` (all
-        classes when none are named)."""
+        classes when none are named). Unstaged, the one parse of the input,
+        built on first use."""
         if self.staging_dir:
             return routed_as_parsed(self._staged_df(), list(classes) if classes else None)
-        return parse_sequences(self.input_df())
+        if self._parse is None:
+            from .operators.parse import parse_sequences
 
-    def run_routed(self, out_dir: str) -> dict:
-        """Checkpointed incremental route-write (resumable, idempotent)."""
-        ckpt = Checkpoint(Path(out_dir) / "_checkpoint")
-        return run_incremental(self.spark, str(Path(self.fixture_dir) / "sequences.parquet"), out_dir, ckpt)
+            self._parse = parse_sequences(self.input_df())
+        return self._parse
 
     # --- the reference's query surface -------------------------------------
     def txn_stats(self, **flt) -> DataFrame:

@@ -54,9 +54,12 @@ OUT_SCHEMA = StructType(
 
 
 def read_input(spark: SparkSession, path: str) -> DataFrame:
-    """The one input resolver of the CLI and the SQL views: tokenized-sequence
+    """The one input resolver (``Pipeline.input_df``): a fixture directory
+    reads its ``sequences.parquet`` (not its meta tables); tokenized-sequence
     parquet (a ``.parquet`` path, or a directory holding parquet files) is
     read as is; anything else is a directory/glob of dump-text files."""
+    if os.path.exists(os.path.join(path, "sequences.parquet")):
+        path = os.path.join(path, "sequences.parquet")
     if path.endswith(".parquet") or (
         os.path.isdir(path) and _glob.glob(os.path.join(path, "*.parquet"))
     ):

@@ -1,6 +1,6 @@
 """The whole analysis surface as Spark SQL views.
 
-``register_views(spark, input)`` publishes the engine as a set of
+``register_views(spark, input_path)`` publishes the engine as a set of
 temp views so an analyst can work purely in ``spark.sql`` — the
 Spark-idiomatic twin of the CLI:
 
@@ -15,8 +15,9 @@ analytic views:
 
 Views are DataFrame-backed (createOrReplaceTempView), so every SQL query
 plans through the same operators the API uses — one parse, partition
-pruning, broadcast joins and windows included. ``input`` is a DataFrame,
-a tokenized-parquet path, or a dump-text directory (sources.dump_files).
+pruning, broadcast joins and windows included. ``input_path`` is any input a
+``Pipeline`` reads (a fixture directory, tokenized parquet or dump-text
+files); every view derives from that Pipeline's one parse.
 """
 
 from __future__ import annotations
@@ -38,18 +39,14 @@ _CLASS_VIEWS = {
 }
 
 
-def register_views(spark: SparkSession, input_data, prefix: str = "klog") -> list[str]:
+def register_views(spark: SparkSession, input_path: str, prefix: str = "klog") -> list[str]:
     """Register the view surface; returns the list of view names."""
     from .operators import aggregates, checks, group_offsets
-    from .operators.parse import parse_sequences
-    from .operators.route import apply_validity_routing
-    from .sources.dump_files import read_input
+    from .pipeline import Pipeline
 
-    seq = (input_data if isinstance(input_data, DataFrame)
-           else read_input(spark, str(input_data)))
-
-    parsed = parse_sequences(seq)          # raw: txn aggregates consume this
-    routed = apply_validity_routing(parsed)  # sink view: corrupt re-routed
+    p = Pipeline(spark, str(input_path))
+    parsed = p.parsed_raw()  # raw: txn aggregates consume this
+    routed = p.parsed()      # sink view: corrupt re-routed
 
     views: dict[str, DataFrame] = {"parsed": routed}
     for view, cls in _CLASS_VIEWS.items():

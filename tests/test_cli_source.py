@@ -436,3 +436,60 @@ def test_cli_segment_health(spark, dump_dir, capsys, tmp_path):
                for ln in out}
     assert {r["file"]: r["corrupt_rate"] for r in view} == printed
     assert any(rate > 0 for rate in printed.values())
+
+
+def _run_cli(spark, capsys, argv):
+    """(stdout, SystemExit message or None) of one CLI call."""
+    from klog_spark.__main__ import main
+
+    try:
+        assert main(argv, spark=spark) == 0
+        exit_msg = None
+    except SystemExit as e:
+        exit_msg = str(e)
+    return capsys.readouterr().out, exit_msg
+
+
+def test_cli_reads_a_fixture_directory(spark, fixture_dir, capsys):
+    """A fixture directory reads its sequences.parquet, not all four of its
+    parquet tables as one: `segment txn-stat` and `segment health` print (or
+    reject) exactly what they do on the sequences.parquet path itself."""
+    from klog_spark.sources.dump_files import read_input
+
+    seq = f"{fixture_dir}/sequences.parquet"
+    assert read_input(spark, fixture_dir).count() == spark.read.parquet(seq).count()
+    got = {}
+    for cmd in ("txn-stat", "health"):
+        got[cmd] = _run_cli(spark, capsys, ["segment", cmd, fixture_dir])
+        assert got[cmd] == _run_cli(spark, capsys, ["segment", cmd, seq])
+    # the fixture holds the internal topics' dumps, which txn-stat rejects
+    assert "do not contain transactional messages" in got["txn-stat"][1]
+    assert got["health"][0] and got["health"][1] is None
+
+
+def test_cli_parses_once_and_unpersists(spark, dump_dir, capsys, tmp_path, monkeypatch):
+    """Every command builds one parse per call (``segment health`` used to
+    build two), and none leaves a cache entry behind: the persisted parse is
+    released before ``main`` returns. Counted against the entries already
+    cached, because session-scoped fixtures hold their own."""
+    from klog_spark.operators import parse
+
+    calls = []
+    real = parse.parse_sequences
+    monkeypatch.setattr(parse, "parse_sequences", lambda df: calls.append(df) or real(df))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    for argv in (
+        ["segment", "cat", dump_dir],
+        ["segment", "txn-stat", dump_dir + "/payments-*.log.dump.txt"],
+        ["segment", "health", dump_dir],
+        ["snapshot", "cat", dump_dir],
+        ["snapshot", "abort-cmd", dump_dir, "--pid", "1", "--producer-epoch", "0"],
+        ["group", "lag", dump_dir],
+        ["route", dump_dir, "--out", str(tmp_path / "routed")],
+    ):
+        calls.clear()
+        out, exit_msg = _run_cli(spark, capsys, argv)
+        assert exit_msg is None and out, argv
+        assert len(calls) == 1, argv
+        assert cache.numCachedEntries() == before, argv

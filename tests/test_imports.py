@@ -1,6 +1,7 @@
 """Every ``klog_spark`` import in the product, tools and bench scripts
 resolves, function-local ones included, and is used; every module-level
-name in ``entry_queries`` is reachable from a row or a script.
+name in ``entry_queries`` is reachable from a row or a script; only
+``Pipeline`` (and the incremental and streaming writers) parses input.
 
 Rows import their operators function-locally, and most rows, ``tools/``
 and ``bench*.py`` never run under pytest, so a removed module or name would
@@ -160,3 +161,24 @@ def test_entry_queries_names_are_reachable():
             todo += graph[name]
     assert len(graph) > 90
     assert sorted(set(graph) - seen) == []
+
+
+def test_only_pipeline_parses():
+    """``Pipeline`` is the one place that loads and parses input: no other
+    ``klog_spark`` module calls ``parse_sequences`` or
+    ``apply_validity_routing``, so the CLI, the SQL views and the
+    ``entry_queries`` rows cannot fork a load path of their own again. ``checkpoint.py``
+    (the incremental route-write) and ``streaming.py`` (the file-stream
+    sink) parse the new input of their own runs."""
+    allowed = {"pipeline.py", "checkpoint.py", "streaming.py"}
+    calls = []
+    for path in sorted((ROOT / "klog_spark").rglob("*.py")):
+        if path.relative_to(ROOT / "klog_spark").as_posix() in allowed:
+            continue
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = getattr(func, "id", None) or getattr(func, "attr", None)
+                if name in {"parse_sequences", "apply_validity_routing"}:
+                    calls.append(f"{path.relative_to(ROOT)}:{node.lineno}: {name}")
+    assert calls == []
