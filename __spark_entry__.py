@@ -43,8 +43,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # reference leaves it a TODO, Segment.java:28)
         "klog_group_offsets": eq.q_sink_group_offsets,
         "klog_group_offsets_read_committed": eq.q_group_offsets_read_committed,
-        # named custom-operator classes (as-of)
-        "klog_batch_state_asof": eq.q_batch_state_asof,
     }
 
 
@@ -53,7 +51,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     every ``tools/check_queries.py`` run, excluded from the driver's 50-row
     gate budget. Each line names the surviving driver row + pytest."""
     return {
-        "klog_batches_per_epoch_salted": eq.q_batches_per_epoch_salted,  # = A9 row; test_skew.py parity
         "klog_position_monotonic": eq.q_position_monotonic,      # W2: 0-row on valid fixtures; planted-violation pytest
         "klog_leader_epoch_monotonic": eq.q_leader_epoch_monotonic,  # W3: same
         "klog_cat_leader_epoch": eq.q_cat_leader_epoch,          # P4: same filter helper as cat_pid_epoch row
@@ -71,7 +68,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # subsuming query, plus its pytests)
         "klog_sink_control": eq.q_sink_control,                  # X3: control parse drives txn_stats/abort_cmds rows; route_counts counts the class
         "klog_sink_txn_state": eq.q_sink_txn_state,              # X4: filter_txn_id + state_machine_violations rows parse txn_state
-        "klog_sink_producer_state": eq.q_sink_producer_state,    # S7/X5: open_txn_abort_cmds + batch_state_asof rows parse snapshots
+        "klog_sink_producer_state": eq.q_sink_producer_state,    # S7/X5: open_txn_abort_cmds row parses snapshots
         "klog_cat_pid": eq.q_cat_pid,                            # P1/P8/F1: cat_render row renders the same projections + instants
         "klog_open_txns": eq.q_open_txns,                        # A5: txn_stats num_open_txn + open_txn_abort_cmds detail
         "klog_empty_txns": eq.q_empty_txns,                      # A6: txn_stats num_empty_txn
@@ -81,10 +78,9 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # CORRECTNESS_r06; each capability keeps a driver row via the noted
         # subsuming query, plus its pytests)
         "klog_filter_txn_id": eq.q_filter_txn_id,                # P2/P5: state_machine_violations row parses txn_state; CLI predicate pytests
-        "klog_batches_per_epoch": eq.q_batches_per_epoch,        # A9: green r1-r6; txn_stats/file_health keep the agg family; salted twin pytest
+        "klog_batches_per_epoch": eq.q_batches_per_epoch,        # A9: green r1-r6; txn_stats/file_health keep the agg family
         "klog_group_lag": eq.q_group_lag,                        # group family keeps 2 driver rows (offsets, read_committed)
-        # rotated OUT mid-round-8 to give the round-8-built operators driver
-        # rows from birth (green in CORRECTNESS_r07)
+        # rotated OUT of the driver gate in round 8 (green in CORRECTNESS_r07)
         "klog_file_health": eq.q_file_health,                    # W8/corrupt-rate capability kept by klog_txn_stats (num_offset_gaps) + klog_sink_corrupt driver rows
     }
 
@@ -109,15 +105,12 @@ def oracle_sql() -> dict[str, str]:
         "klog_cat_render": eq.SQL_CAT_RENDER,
         "klog_group_offsets": eq.SQL_SINK_GROUP_OFFSETS,
         "klog_group_offsets_read_committed": eq.SQL_GROUP_OFFSETS_READ_COMMITTED,
-        # r8-built operators
-        "klog_batch_state_asof": eq.SQL_BATCH_STATE_ASOF,
     }
 
 
 def extra_oracle_sql() -> dict[str, str]:
     """Oracles for ``extra_queries()`` — same contract, local gate only."""
     return {
-        "klog_batches_per_epoch_salted": eq.SQL_BATCHES_PER_EPOCH,
         "klog_position_monotonic": eq.SQL_POSITION_MONOTONIC,
         "klog_leader_epoch_monotonic": eq.SQL_LEADER_EPOCH_MONOTONIC,
         "klog_cat_leader_epoch": eq.SQL_CAT_LEADER_EPOCH,
@@ -141,6 +134,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "klog_filter_txn_id": eq.SQL_FILTER_TXN_ID,
         "klog_batches_per_epoch": eq.SQL_BATCHES_PER_EPOCH,
         "klog_group_lag": eq.SQL_GROUP_LAG,
-        # r8 rotated-out rows
+        # rotated OUT of the driver gate in round 8
         "klog_file_health": eq.SQL_FILE_HEALTH,
     }

@@ -1155,15 +1155,6 @@ FROM per_file p LEFT JOIN g USING (file)
 """
 
 
-def q_batches_per_epoch_salted(spark, sf_dir):
-    """A9 via explicit two-phase salting (north rule's skew handling) —
-    identical result to the direct aggregate, same oracle SQL."""
-    from .operators.skew import salted_batches_per_epoch
-
-    raw = Pipeline(spark, klog_fixture(sf_dir)).parsed_raw()
-    return salted_batches_per_epoch(raw, salt_buckets=16)
-
-
 def q_group_offsets_read_committed(spark, sf_dir):
     """READ_COMMITTED compaction of __consumer_offsets: transactional offset
     commits (sendOffsetsToTransaction) are visible only when the nearest
@@ -1249,74 +1240,4 @@ SELECT group_id, commit_topic, commit_partition, file, line_no,
        committed_offset, prev_offset
 FROM p
 WHERE NOT is_deletion AND prev_offset IS NOT NULL AND committed_offset < prev_offset
-"""
-
-
-def q_batch_state_asof(spark, sf_dir):
-    """AS-OF join (operators/asof.py): every data batch annotated with the
-    producer-snapshot state that was current AT ITS CreateTime — the
-    'what did the broker think this producer's state was when this batch
-    was written' post-mortem view. Right side deduped to one row per
-    (producer, instant) by newest (file, line_no) so tie resolution is
-    deterministic on both engines."""
-    from .operators.asof import asof_join
-
-    parsed = Pipeline(spark, klog_fixture(sf_dir)).parsed()
-    b = parsed.filter(
-        (F.col("record_class") == "batch") & (F.col("segment_type") == "data")
-        & (F.col("producer_id") != -1)
-    ).select("doc_id", "producer_id", F.col("create_time_ms").alias("ts_ms"))
-    s = (
-        parsed.filter(F.col("record_class") == "producer_state")
-        .groupBy("producer_id", F.col("last_timestamp_ms").alias("ts_ms"))
-        .agg(
-            F.max_by(
-                F.struct(F.col("last_offset"), F.col("coordinator_epoch")),
-                F.struct(F.col("file"), F.col("line_no")),
-            ).alias("x")
-        )
-        .select(
-            "producer_id", "ts_ms",
-            F.col("x.last_offset").alias("snap_last_offset"),
-            F.col("x.coordinator_epoch").alias("snap_coordinator_epoch"),
-        )
-    )
-    return asof_join(
-        b, s, on="ts_ms", by=["producer_id"],
-        right_cols=["snap_last_offset", "snap_coordinator_epoch"],
-    )
-
-
-SQL_BATCH_STATE_ASOF = f"""
-WITH {klog_base_cte()},
-b AS (
-  SELECT doc_id, producer_id, create_time_ms AS ts_ms
-  FROM batches WHERE segment_type = 'data' AND producer_id <> -1
-),
-s AS (
-  SELECT producer_id, ts_ms, snap_last_offset, snap_coordinator_epoch FROM (
-    SELECT producer_id, last_timestamp_ms AS ts_ms,
-           last_offset AS snap_last_offset, coordinator_epoch AS snap_coordinator_epoch,
-           ROW_NUMBER() OVER (PARTITION BY producer_id, last_timestamp_ms
-                              ORDER BY file DESC, line_no DESC) AS rn
-    FROM snapshots) WHERE rn = 1
-),
-u AS (
-  SELECT producer_id, ts_ms, 1 AS tag, doc_id,
-         CAST(NULL AS STRUCT(o BIGINT, e INT)) AS pay
-  FROM b
-  UNION ALL
-  SELECT producer_id, ts_ms, 0 AS tag, NULL AS doc_id,
-         struct_pack(o := snap_last_offset, e := snap_coordinator_epoch) AS pay
-  FROM s
-),
-c AS (
-  SELECT *, LAST_VALUE(CASE WHEN tag = 0 THEN pay END IGNORE NULLS) OVER (
-      PARTITION BY producer_id ORDER BY ts_ms ASC, tag ASC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS carried
-  FROM u
-)
-SELECT doc_id, producer_id, ts_ms,
-       carried.o AS snap_last_offset, carried.e AS snap_coordinator_epoch
-FROM c WHERE tag = 1
 """

@@ -330,35 +330,3 @@ def deep_iteration_files(parsed: DataFrame) -> DataFrame:
         .select("file").distinct().withColumn("deep_iteration", F.lit(True))
     )
     return files.join(deep, "file", "left").fillna(False, ["deep_iteration"])
-
-
-def nest_messages(parsed: DataFrame) -> DataFrame:
-    """Materialize klog's exact Batch shape (Batch.java:33-245): one row per
-    batch with its record lines collected as an ordered array of structs
-    (Batch.messages, Batch.java:53). Shuffles once on the batch key; message
-    arrays are bounded by batch `count` (small), so no skew concern."""
-    with_parent = attach_parent_batch(
-        parsed.filter(F.col("record_class").isin("batch", *MSG_CLASSES))
-    )
-    msgs = with_parent.filter(
-        F.col("record_class").isin(*MSG_CLASSES) & F.col("parent").isNotNull()
-    ).select(
-        F.col("parent.doc_id").alias("batch_doc_id"),
-        F.struct(
-            "record_class", "line_no", "offset", "msg_create_time_ms",
-            "key_size", "value_size", "sequence", "header_keys",
-            "commit", "coordinator_epoch",
-            "transactional_id", "txn_producer_id", "txn_producer_epoch",
-            "state", "partitions", "is_deletion",
-            "group_id", "commit_topic", "commit_partition", "committed_offset",
-            "generation",
-        ).alias("message"),
-    )
-    nested = msgs.groupBy("batch_doc_id").agg(
-        F.sort_array(F.collect_list(F.struct(F.col("message.line_no").alias("k"),
-                                             F.col("message").alias("m")))).alias("_sorted")
-    ).select("batch_doc_id", F.col("_sorted.m").alias("messages"))
-    batches = parsed.filter(F.col("record_class") == "batch")
-    return batches.join(nested, batches["doc_id"] == nested["batch_doc_id"], "left").drop(
-        "batch_doc_id"
-    ).withColumn("messages", F.coalesce(F.col("messages"), F.array()))

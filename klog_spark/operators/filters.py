@@ -77,29 +77,6 @@ def filter_producer_states(parsed: DataFrame, pid: int | None = None,
     return df
 
 
-def filter_batches_nested(nested: DataFrame, pid: int | None = None,
-                          producer_epoch: int | None = None,
-                          transactional_id: str | None = None) -> DataFrame:
-    """P2/P5 in the reference's literal shape (BatchPredicate.java:34,56-62):
-    on TRANSACTION_STATE dumps the predicate is an EXISTS over the nested
-    ``Batch.messages`` array (nest_messages output) — a batch is selected
-    iff some state-change message matches. Deletions carry no payload
-    pid/epoch, so pid predicates never match them (null => false), exactly
-    like the reference's TransactionStateChange-only visitor."""
-
-    def pred(m):
-        c = F.lit(True)
-        if pid is not None:
-            c = c & (m["txn_producer_id"] == pid)
-        if producer_epoch is not None:
-            c = c & (m["txn_producer_epoch"] == producer_epoch)
-        if transactional_id is not None:
-            c = c & (m["transactional_id"] == transactional_id)
-        return c
-
-    return nested.filter(F.exists("messages", pred))
-
-
 def cat_batches(parsed: DataFrame, **filters) -> DataFrame:
     """`klog segment cat` batch projection (P8/F1): display fields with the
     CreateTime rendered as a UTC instant string (Batch.java:113)."""

@@ -213,9 +213,10 @@ def read_routed(spark, out_dir: str) -> DataFrame:
     return spark.read.schema(PARSED_SCHEMA).parquet(out_dir)
 
 
-def read_sink(spark, out_dir: str, record_class: str) -> DataFrame:
-    """Read one sink with partition pruning + the klog per-class projection."""
-    df = read_routed(spark, out_dir).filter(F.col("record_class") == record_class)
+def project_sink(routed: DataFrame, record_class: str) -> DataFrame:
+    """One sink of a routed frame: its class's rows (partition-pruned over a
+    staging read) in the klog per-class projection."""
+    df = routed.filter(F.col("record_class") == record_class)
     cols = SINK_PROJECTIONS.get(record_class)
     return df.select(*cols) if cols else df
 

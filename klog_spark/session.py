@@ -83,11 +83,11 @@ def get_spark(
         # the klog query surface's working set of distinct generated classes,
         # or every warm pass recompiles its plans with Janino. Working set =
         # compiles of one cold pass (``compiled_classes`` below): 163-167
-        # for the seven staged queries, 390 for one round of the 38
+        # for the seven staged queries, 359 for one round of the 36
         # ``klog_*`` rows of ``__spark_entry__``. At 100 entries each warm
         # staged pass recompiled 152-158 of them; at 1000 it compiles none,
         # and staged latency_s_p50 fell 25 % (10 of 10 alternating pairs,
-        # 4 vCPU). 1000 is 2.5x the larger set. Re-measure when adding
+        # 4 vCPU). 1000 is 2.8x the larger set. Re-measure when adding
         # operators: ``tools/check_queries.py`` prints the compiles of the
         # rows it runs, tests/test_session.py those of two staged passes.
         # Static conf: it takes effect only when the JVM starts.

@@ -23,9 +23,8 @@ files); every view derives from that Pipeline's one parse.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .operators.route import SINK_PROJECTIONS
+from .operators.route import project_sink
 
 _CLASS_VIEWS = {
     "batches": "batch",
@@ -50,9 +49,7 @@ def register_views(spark: SparkSession, input_path: str, prefix: str = "klog") -
 
     views: dict[str, DataFrame] = {"parsed": routed}
     for view, cls in _CLASS_VIEWS.items():
-        df = routed.filter(F.col("record_class") == cls)
-        cols = SINK_PROJECTIONS.get(cls)
-        views[view] = df.select(*cols) if cols else df
+        views[view] = project_sink(routed, cls)
 
     views.update(
         {

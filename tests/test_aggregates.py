@@ -187,42 +187,3 @@ def test_sessionless_transactional_batch_is_cursor_not_event(spark):
         assert got[k] == want[k], (k, got[k], want[k])
     assert got["num_committed"] == 1 and got["num_empty_txn"] == 1
     assert got["num_open_txn"] == 0 and got["txn_size_count"] == 0
-
-
-def test_asof_join_matches_pandas_merge_asof(spark):
-    """The generic as-of join must agree with pandas.merge_asof (the
-    reference implementation) on random inputs, including the <=-tie case
-    and the tolerance contract."""
-    import random
-    import zlib
-
-    import pandas as pd
-
-    from klog_spark.operators.asof import asof_join
-
-    rng = random.Random("asof-test")
-    right_rows, left_rows = [], []
-    for key in ("a", "b", "c"):
-        ts_pool = rng.sample(range(0, 500), 40)
-        for t in sorted(ts_pool)[:20]:
-            right_rows.append((key, t, t * 10 + zlib.crc32(key.encode()) % 7))
-        for _ in range(30):
-            left_rows.append((len(left_rows), key, rng.randrange(0, 520)))
-    rdf = spark.createDataFrame(right_rows, "k string, ts long, val long")
-    ldf = spark.createDataFrame(left_rows, "lid long, k string, ts long")
-
-    for tol in (None, 25):
-        got = {
-            r["lid"]: r["val"]
-            for r in asof_join(ldf, rdf, on="ts", by=["k"], right_cols=["val"],
-                               tolerance=tol).collect()
-        }
-        lpd = pd.DataFrame(left_rows, columns=["lid", "k", "ts"]).sort_values("ts")
-        rpd = pd.DataFrame(right_rows, columns=["k", "ts", "val"]).sort_values("ts")
-        merged = pd.merge_asof(lpd, rpd, on="ts", by="k",
-                               tolerance=tol, allow_exact_matches=True)
-        want = {
-            int(r.lid): (None if pd.isna(r.val) else int(r.val))
-            for r in merged.itertuples()
-        }
-        assert got == want

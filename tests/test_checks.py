@@ -154,11 +154,12 @@ def test_monotonic_checks_flag_planted_violations(spark):
 
 
 def test_incremental_staging_gives_exact_read_committed(spark, fixture_dir, tmp_path):
-    """The documented claim (streaming.py): for order-sensitive semantics,
-    checkpoint.run_incremental is the exact incremental path. Stage the
-    corpus in TWO file batches, then read-committed group offsets over the
-    staged table must equal the single-pass batch result — even though
-    some transactions' markers land in the second batch."""
+    """The boundary streaming.py documents: read-committed visibility is a
+    batch query over the committed sink, which checkpoint.run_incremental
+    stages in whole-file runs. Stage the corpus in TWO file batches, then
+    read-committed group offsets over the staged table must equal the
+    single-pass batch result — even though some transactions' markers land
+    in the second batch."""
     from pyspark.sql import functions as F
 
     from klog_spark.checkpoint import Checkpoint, run_incremental

@@ -1,6 +1,6 @@
 """Every ``klog_spark`` import in the product, tools and bench scripts
 resolves, function-local ones included, and is used; every module-level
-name in ``entry_queries`` is reachable from a row or a script; only
+name in ``klog_spark`` is reachable from the product or a script; only
 ``Pipeline`` (and the incremental and streaming writers) parses input.
 
 Rows import their operators function-locally, and most rows, ``tools/``
@@ -46,12 +46,13 @@ def _parse(path: Path) -> ast.Module:
     return ast.parse(path.read_text(), filename=str(path))
 
 
-def _klog_imports(path: Path):
+def _klog_imports(path: Path, nodes=None):
     """Yield ``(lineno, module, alias)`` for every name ``path`` imports
-    from ``klog_spark``; ``module`` is the resolved module of a ``from``
-    import and None for a plain ``import``."""
+    from ``klog_spark`` (within ``nodes``, default the whole file);
+    ``module`` is the resolved module of a ``from`` import and None for a
+    plain ``import``."""
     package = ".".join(path.relative_to(ROOT).parts[:-1])  # where a relative import starts
-    for node in ast.walk(_parse(path)):
+    for node in (n for top in (nodes or [_parse(path)]) for n in ast.walk(top)):
         if isinstance(node, ast.Import):
             for alias in node.names:
                 if alias.name.split(".")[0] == "klog_spark":
@@ -65,15 +66,48 @@ def _klog_imports(path: Path):
                     yield node.lineno, module, alias
 
 
-def _eq_attributes(path: Path) -> list[ast.Attribute]:
-    """The ``eq.<name>`` nodes in ``path``, if it binds ``eq`` to
-    ``klog_spark.entry_queries``."""
-    if not any(alias.asname == "eq" and f"{module}.{alias.name}" == "klog_spark.entry_queries"
-               for _, module, alias in _klog_imports(path)):
-        return []
-    return [node for node in ast.walk(_parse(path))
-            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
-            and node.value.id == "eq"]
+@functools.cache
+def _modules() -> dict[str, Path]:
+    """Every ``klog_spark`` module by dotted name."""
+    out = {}
+    for path in sorted((ROOT / "klog_spark").rglob("*.py")):
+        parts = path.relative_to(ROOT).with_suffix("").parts
+        out[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = path
+    return out
+
+
+def _bindings(path: Path, nodes=None) -> dict[str, tuple[str, str | None]]:
+    """Map each local name the ``klog_spark`` imports in ``nodes`` bind to
+    ``(module, name)``; ``name`` is None where the binding is a module."""
+    out = {}
+    for _, module, alias in _klog_imports(path, nodes):
+        if module is None:  # ``import klog_spark.x`` binds the package, ``... as y`` the module
+            out[alias.asname or "klog_spark"] = (alias.name if alias.asname else "klog_spark", None)
+        elif f"{module}.{alias.name}" in _modules():
+            out[alias.asname or alias.name] = (f"{module}.{alias.name}", None)
+        else:
+            out[alias.asname or alias.name] = (module, alias.name)
+    return out
+
+
+def _references(node: ast.AST, bindings: dict[str, tuple[str, str | None]]):
+    """Yield ``(lineno, module, name)`` for each ``klog_spark`` name
+    ``node`` uses through ``bindings``: an imported name, or
+    ``mod.name`` where ``mod`` is an imported module. Bare identifiers
+    that no import binds are not matched."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and n.id in bindings and bindings[n.id][1] is not None:
+            yield n.lineno, *bindings[n.id]
+        elif isinstance(n, ast.Attribute):
+            chain, value = [n.attr], n.value
+            while isinstance(value, ast.Attribute):
+                chain, value = [value.attr, *chain], value.value
+            if isinstance(value, ast.Name) and value.id in bindings and bindings[value.id][1] is None:
+                module = bindings[value.id][0]
+                while chain and f"{module}.{chain[0]}" in _modules():
+                    module = f"{module}.{chain.pop(0)}"
+                if chain:
+                    yield n.lineno, module, chain[0]
 
 
 def _problems(path: Path) -> list[str]:
@@ -85,16 +119,15 @@ def _problems(path: Path) -> list[str]:
         else:
             missing = _missing(module, [alias.name])
         problems += [f"{where}:{lineno}: {m}" for m in missing]
-    if eq_attributes := _eq_attributes(path):
-        from klog_spark import entry_queries
-
-        problems += [f"{where}:{node.lineno}: eq.{node.attr}" for node in eq_attributes
-                     if not hasattr(entry_queries, node.attr)]
+    attributes = {(lineno, module, name) for lineno, module, name in
+                  _references(_parse(path), _bindings(path)) if module in _modules()}
+    for lineno, module, name in sorted(attributes):
+        problems += [f"{where}:{lineno}: {m}" for m in _missing(module, [name])]
     return problems
 
 
 def test_klog_spark_imports_resolve():
-    assert len(SOURCES) > 40
+    assert len(SOURCES) > 30
     problems = [p for path in SOURCES for p in _problems(path)]
     assert problems == []
 
@@ -114,53 +147,98 @@ def test_klog_spark_imports_are_used():
     assert unused == []
 
 
-def _entry_queries_graph() -> dict[str, set[str]]:
-    """Map each module-level name ``entry_queries.py`` binds (imports
-    aside) to the module-level names its definition references."""
-    tree = _parse(ROOT / "klog_spark" / "entry_queries.py")
-    bound: dict[str, ast.AST] = {}
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
-            bound[node.name] = node
-        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
-            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-            for target in targets:
-                for n in ast.walk(target):
-                    if isinstance(n, ast.Name):
-                        bound[n.id] = node
-    return {name: {n.id for n in ast.walk(node)
-                   if isinstance(n, ast.Name) and n.id in bound and n.id != name}
-            for name, node in bound.items()}
+#: The product's entry points: the CLI, the query API, the SQL views and
+#: the incremental route-write.
+PRODUCT_ROOTS = (
+    ("klog_spark.__main__", "main"),
+    ("klog_spark.pipeline", "Pipeline"),
+    ("klog_spark.sql", "register_views"),
+    ("klog_spark.checkpoint", "run_incremental"),
+)
+
+#: Names kept with no caller in the product or a script, each for a reason.
+KEPT_ROOTS = (
+    ("klog_spark.oracle", "*"),  # the tests' reference implementation
+    ("klog_spark.streaming", "read_sequence_stream"),  # the file-stream sink resume is to move onto
+    ("klog_spark.streaming", "start_routed_sink"),  # the same sink's writer
+    ("klog_spark.cachereg", "track"),  # the other half of perfbench's release_tracked
+)
+
+#: Scripts whose ``klog_spark`` uses are roots (tests are not).
+SCRIPTS = [
+    ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / "bench_extra.py",
+    *sorted((ROOT / "tools").glob("*.py")), *sorted((ROOT / "perfbench").rglob("*.py")),
+]
 
 
-def _entry_queries_roots() -> set[str]:
-    """Names of ``entry_queries`` used outside it: ``eq.<name>`` where
-    ``eq`` is the module, and ``from klog_spark.entry_queries import``."""
-    users = [ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / "bench_extra.py",
-             *sorted((ROOT / "tests").glob("*.py")), *sorted((ROOT / "tools").glob("*.py")),
-             *sorted((ROOT / "perfbench").rglob("*.py"))]
+def _package_graph() -> tuple[dict[tuple[str, str], set[tuple[str, str]]], set[tuple[str, str]]]:
+    """Map each ``(module, name)`` that a ``klog_spark`` module binds at
+    module level to the ``(module, name)`` pairs its definition uses: names
+    of its own module, and names reached through its imports, function-local
+    ones included. Module-level import aliases are nodes too, with an edge
+    to what they import, so a name re-exported through a module is
+    followed. Returns the graph and the defined (non-import) names."""
+    graph, defined = {}, set()
+    for module, path in _modules().items():
+        tree = _parse(path)
+        imports = [n for n in tree.body if isinstance(n, (ast.Import, ast.ImportFrom))]
+        top = _bindings(path, imports)
+        local: dict[str, ast.AST] = {}
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                local[node.name] = node
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for target in targets:
+                    for n in ast.walk(target):
+                        if isinstance(n, ast.Name):
+                            local[n.id] = node
+        for name, node in local.items():
+            bindings = {**top, **_bindings(path, [node])}
+            graph[module, name] = (
+                {(m, n) for _, m, n in _references(node, bindings)}
+                | {(module, n.id) for n in ast.walk(node)
+                   if isinstance(n, ast.Name) and n.id in local and n.id != name}
+            )
+            defined.add((module, name))
+        for alias, target in top.items():
+            graph.setdefault((module, alias), set()).add(target)
+    return graph, defined
+
+
+def _script_roots() -> set[tuple[str, str]]:
+    """The ``klog_spark`` names the driver contract, tools, bench and
+    perfbench scripts import or use."""
     roots = set()
-    for path in users:
-        roots |= {alias.name for _, module, alias in _klog_imports(path)
-                  if module == "klog_spark.entry_queries"}
-        roots |= {node.attr for node in _eq_attributes(path)}
+    for path in SCRIPTS:
+        bindings = _bindings(path)
+        roots |= {target for target in bindings.values() if target[1] is not None}
+        roots |= {(m, n) for _, m, n in _references(_parse(path), bindings)}
     return roots
 
 
-def test_entry_queries_names_are_reachable():
-    """Every module-level name in ``entry_queries.py`` is reachable from a
-    driver row, an oracle or a test, tool or bench script that names it,
-    so a cut that retires rows cannot leave their SQL helpers, constants or
-    SQL behind."""
-    graph = _entry_queries_graph()
-    seen, todo = set(), [n for n in _entry_queries_roots() if n in graph]
+def test_package_names_are_reachable():
+    """Every module-level name in ``klog_spark`` is reachable from the
+    product (the CLI, ``Pipeline``, the SQL views, ``run_incremental``), a
+    script that uses it (the driver contract, ``tools/``, ``bench*.py``,
+    ``perfbench/``) or ``KEPT_ROOTS``, so an operator only tests reach, or
+    a helper a retired row leaves behind, fails here."""
+    graph, defined = _package_graph()
+    roots = {*PRODUCT_ROOTS, *_script_roots()}
+    roots |= {key for key in defined if key[1].startswith("__")}  # read by Python, not called
+    roots |= {key for key in defined
+              if (key[0], "*") in KEPT_ROOTS or key in KEPT_ROOTS}
+    seen, todo = set(), [key for key in roots if key in graph]
     while todo:
-        name = todo.pop()
-        if name not in seen:
-            seen.add(name)
-            todo += graph[name]
-    assert len(graph) > 90
-    assert sorted(set(graph) - seen) == []
+        key = todo.pop()
+        if key not in seen:
+            seen.add(key)
+            todo += graph.get(key, ())
+    assert len(defined) > 250
+    stale = [f"{m}.{n}" for m, n in PRODUCT_ROOTS + KEPT_ROOTS if n != "*" and (m, n) not in defined]
+    assert stale == []
+    unreachable = sorted(f"{m}.{n}" for m, n in defined - seen)
+    assert unreachable == [], "no product or script reaches:\n" + "\n".join(unreachable)
 
 
 def test_only_pipeline_parses():

@@ -1,43 +1,23 @@
-"""X6/S4: nested Batch.messages materialization + deep-iteration flag."""
+"""S4 deep-iteration flag, klog's currentBatch cursor and the F6 cat renderer."""
 
 from pyspark.sql import functions as F
 
 
-def test_nest_messages_counts_match(parsed_df):
-    from klog_spark.operators.aggregates import nest_messages
-
-    nested = nest_messages(parsed_df).cache()
-    # every valid batch in a deep-iteration file carries exactly `count`
-    # messages unless corrupt lines orphaned some (flagged separately)
-    sample = nested.filter(
-        (F.col("segment_type") == "data") & F.col("is_valid") & (F.size("messages") > 0)
-    ).select("doc_id", "count", F.size("messages").alias("n_msgs"))
-    mismatched = sample.filter(F.col("count") != F.col("n_msgs")).count()
-    total = sample.count()
-    n_corrupt = parsed_df.filter(F.col("record_class") == "corrupt").count()
-    assert total > 0
-    # only corrupt-adjacent batches can differ (a corrupt message line
-    # removes one message; a corrupt header makes messages attach to the
-    # previous batch) — each corrupt line can disturb at most 2 batches
-    assert mismatched <= 2 * n_corrupt
-    assert mismatched / total < 0.15
-
-    # message order inside the array follows line order
-    row = nested.filter(F.size("messages") >= 2).select("messages").first()
-    line_nos = [m["line_no"] for m in row["messages"]]
-    assert line_nos == sorted(line_nos)
-    nested.unpersist()
-
-
 def test_control_batches_have_control_message(parsed_df):
-    from klog_spark.operators.aggregates import nest_messages
+    """A valid control batch with one record line under klog's
+    currentBatch cursor holds its control message."""
+    from klog_spark.operators.aggregates import MSG_CLASSES, attach_parent_batch
 
-    nested = nest_messages(parsed_df)
-    ctl = nested.filter(
-        F.col("is_control") & F.col("is_valid") & (F.col("segment_type") == "data")
-        & (F.size("messages") == 1)
-    ).select(F.col("messages")[0]["record_class"].alias("cls"))
-    classes = {r["cls"] for r in ctl.collect()}
+    records = attach_parent_batch(
+        parsed_df.filter(F.col("record_class").isin("batch", *MSG_CLASSES))
+    ).filter(
+        F.col("record_class").isin(*MSG_CLASSES) & F.col("parent.is_control")
+        & F.col("parent.is_valid") & (F.col("segment_type") == "data")
+    )
+    single = records.groupBy("parent.doc_id").agg(
+        F.count("*").alias("n"), F.min("record_class").alias("cls")
+    ).filter(F.col("n") == 1)
+    classes = {r["cls"] for r in single.collect()}
     assert classes == {"control_msg"}
 
 
@@ -52,46 +32,6 @@ def test_deep_iteration_flag(spark, parsed_df):
     assert log_files.filter(~F.col("deep_iteration")).count() == 0
     assert snap_files.filter(F.col("deep_iteration")).count() == 0
     assert log_files.count() > 0 and snap_files.count() > 0
-
-
-def test_table_io_fallback(spark, fixture_dir):
-    from klog_spark.sources.table_io import iceberg_available, read_table
-
-    assert iceberg_available(spark) is False  # sandbox has no Iceberg jar
-    df = read_table(spark, f"{fixture_dir}/sequences.parquet")
-    assert df.count() > 0
-
-
-def test_nested_exists_filter_equals_flat_filter(parsed_df):
-    """The literal BatchPredicate EXISTS shape over Batch.messages must
-    select exactly the parent batches of the flat txn_state filter's rows."""
-    from pyspark.sql import functions as F
-
-    from klog_spark.operators.aggregates import attach_parent_batch, nest_messages
-    from klog_spark.operators.filters import filter_batches_nested, filter_txn_state
-
-    nested = nest_messages(parsed_df)
-
-    # pick a real (pid, txn_id) from the fixture
-    sample = parsed_df.filter(F.col("record_class") == "txn_state").select(
-        "txn_producer_id", "transactional_id"
-    ).first()
-    pid, txn_id = sample["txn_producer_id"], sample["transactional_id"]
-
-    for kw in ({"pid": pid}, {"transactional_id": txn_id}):
-        got = {r["doc_id"] for r in filter_batches_nested(nested, **kw).select("doc_id").collect()}
-        flat_kw = dict(kw)
-        flat = filter_txn_state(parsed_df, **flat_kw)
-        if "pid" in kw:  # deletions carry no pid; EXISTS can't match them
-            flat = flat.filter(F.col("record_class") == "txn_state")
-        with_parent = attach_parent_batch(parsed_df)
-        match_docs = {r["doc_id"] for r in flat.select("doc_id").collect()}
-        want = {
-            r["parent"]["doc_id"]
-            for r in with_parent.filter(F.col("doc_id").isin(list(match_docs))).collect()
-            if r["parent"] is not None
-        }
-        assert got == want and got, kw
 
 
 def test_cat_render_styles_and_plain(parsed_df):

@@ -143,10 +143,10 @@ def test_staged_pruned_queries_parity(spark, fixture_dir, tmp_path):
 
 
 def test_read_sink_projections(spark, routed_dir):
-    from klog_spark.operators.route import SINK_PROJECTIONS, read_sink
+    from klog_spark.operators.route import SINK_PROJECTIONS, project_sink, read_routed
 
     for cls, cols in SINK_PROJECTIONS.items():
-        df = read_sink(spark, routed_dir, cls)
+        df = project_sink(read_routed(spark, routed_dir), cls)
         assert df.columns == cols
         assert df.count() > 0, cls
 
@@ -232,11 +232,11 @@ def test_empty_input_gives_empty_answers(spark, tmp_path):
 
 
 def test_empty_staging_sink_readers(spark, tmp_path, capsys):
-    """Zero input rows: the sink reader and the route CLI's sink-count
+    """Zero input rows: the sink projections and the route CLI's sink-count
     re-read answer with no rows instead of failing to infer the schema of a
     staging table that holds only ``_SUCCESS``."""
     from klog_spark.__main__ import main
-    from klog_spark.operators.route import SINK_PROJECTIONS, read_sink
+    from klog_spark.operators.route import SINK_PROJECTIONS, project_sink, read_routed
     from klog_spark.schemas import INPUT_SCHEMA
 
     inp = str(tmp_path / "sequences.parquet")
@@ -246,7 +246,7 @@ def test_empty_staging_sink_readers(spark, tmp_path, capsys):
     printed = capsys.readouterr().out
     assert "record_class=" not in printed and "routed staging written" in printed
     for cls, cols in SINK_PROJECTIONS.items():
-        df = read_sink(spark, out, cls)
+        df = project_sink(read_routed(spark, out), cls)
         assert df.columns == cols and df.count() == 0, cls
 
 
@@ -268,49 +268,3 @@ def test_write_routed_bounds_file_count(spark, fixture_dir, tmp_path):
     assert 0 < len(parquet_files) <= 16, parquet_files
     # read-back integrity
     assert spark.read.parquet(out).count() == parsed.count()
-
-
-def test_bucketed_staging_shuffle_free_join(spark, parsed_df):
-    """Bucketed staging: the producer correlation must (a) equal the same
-    computation over the unbucketed parsed view and (b) compile to a plan
-    with ZERO Exchange operators once broadcast is disabled — the co-located
-    big-big join story at 10^12 rows."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from klog_spark.sources.bucketed import producer_correlation, stage_bucketed
-
-    prefix = "t_bucketed_stage"
-    tables = stage_bucketed(parsed_df, prefix, buckets=4)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        corr = producer_correlation(spark, prefix)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            corr.explain("simple")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, f"bucketed join must be shuffle-free:\n{plan}"
-        got = {r["producer_id"]: tuple(r)[1:] for r in corr.collect()}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        for t in tables.values():
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-    # reference computation over the unbucketed parsed view
-    b = (
-        parsed_df.filter((F.col("record_class") == "batch") & (F.col("producer_id") != -1))
-        .groupBy("producer_id")
-        .agg(F.count("*").alias("n_batches"), F.max("last_offset").alias("mlo"),
-             F.max("producer_epoch").alias("mbe"))
-    )
-    s = (
-        parsed_df.filter(F.col("record_class") == "producer_state")
-        .groupBy("producer_id")
-        .agg(F.count("*").alias("n_snapshots"), F.max("producer_epoch").alias("mse"),
-             F.max("coordinator_epoch").alias("mce"))
-    )
-    want = {r["producer_id"]: tuple(r)[1:] for r in b.join(s, "producer_id").collect()}
-    assert got == want and got

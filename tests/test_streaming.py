@@ -1,4 +1,5 @@
-"""Structured Streaming surface: routed sink parity with batch, watermark agg."""
+"""The streaming routed sink: parity with the batch route, exactly-once
+resume and the pre-shuffle's file count."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,90 +39,6 @@ def test_streaming_routed_sink_matches_batch(spark, fixture_dir, stream_input, t
     assert spark.read.parquet(str(out)).count() == sum(want.values())
 
 
-def test_streaming_marker_counts(spark, fixture_dir, stream_input, tmp_path):
-    from klog_spark.operators.parse import parse_sequences
-    from klog_spark.streaming import read_sequence_stream, start_marker_counts_sink
-
-    q = start_marker_counts_sink(
-        read_sequence_stream(spark, stream_input), str(tmp_path / "ckpt2"), query_name="mc_test"
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("select sum(num_committed) c, sum(num_aborted) a from mc_test").collect()[0]
-    batch = parse_sequences(spark.read.parquet(f"{fixture_dir}/sequences.parquet"))
-    want = batch.filter(F.col("record_class") == "control_msg").agg(
-        F.sum(F.when(F.col("commit"), 1).otherwise(0)).alias("c"),
-        F.sum(F.when(~F.col("commit"), 1).otherwise(0)).alias("a"),
-    ).collect()[0]
-    assert rows["c"] == want["c"]
-    assert rows["a"] == want["a"]
-
-
-def test_stateful_session_marker_totals(spark, fixture_dir, stream_input, tmp_path):
-    """applyInPandasWithState operator: final per-file totals must equal the
-    batch groupBy, with state carried across multiple micro-batches."""
-    from pyspark.sql import functions as F
-
-    from klog_spark.operators.parse import parse_sequences
-    from klog_spark.streaming import read_sequence_stream, session_marker_totals_stream
-
-    q = (
-        session_marker_totals_stream(read_sequence_stream(spark, stream_input, max_files_per_trigger=2))
-        .writeStream.format("memory").queryName("smt_test").outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    # 'update' mode emits one row per state change; the LAST row per file is
-    # the final total
-    got = {
-        r["file"]: (r["num_committed"], r["num_aborted"])
-        for r in spark.sql("select * from smt_test").collect()
-    }  # memory sink appends in order; dict keeps the last per file
-    batch = parse_sequences(spark.read.parquet(f"{fixture_dir}/sequences.parquet"))
-    want = {
-        r["file"]: (r["c"], r["a"])
-        for r in batch.filter(F.col("record_class") == "control_msg")
-        .groupBy("file")
-        .agg(F.sum(F.when(F.col("commit"), 1).otherwise(0)).alias("c"),
-             F.sum(F.when(~F.col("commit"), 1).otherwise(0)).alias("a"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_stateful_latest_group_offsets_matches_batch(spark, fixture_dir, stream_input, tmp_path):
-    """Streaming compaction of offset commits: the final state per
-    (group, topic, partition) must equal the batch latest_group_offsets,
-    with micro-batches delivering files in arbitrary order (the state's
-    (file, line_no) ordering key absorbs late arrivals)."""
-    from klog_spark.operators.group_offsets import latest_group_offsets
-    from klog_spark.operators.parse import parse_sequences
-    from klog_spark.streaming import latest_group_offsets_stream, read_sequence_stream
-
-    q = (
-        latest_group_offsets_stream(read_sequence_stream(spark, stream_input, max_files_per_trigger=2))
-        .writeStream.format("memory").queryName("lgo_test").outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt4"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    # take the newest emission per key by the carried (file, line_no) order
-    final = {}
-    for r in spark.sql("select * from lgo_test").collect():
-        key = (r["group_id"], r["commit_topic"], r["commit_partition"])
-        cand = (r["file"], r["line_no"], r["committed_offset"], r["is_deletion"])
-        if key not in final or (cand[0], cand[1]) > (final[key][0], final[key][1]):
-            final[key] = cand
-    got = {k: v[2] for k, v in final.items() if not v[3]}
-
-    batch = parse_sequences(spark.read.parquet(f"{fixture_dir}/sequences.parquet"))
-    want = {
-        (r["group_id"], r["commit_topic"], r["commit_partition"]): r["committed_offset"]
-        for r in latest_group_offsets(batch).collect()
-    }
-    assert got == want and got
-
-
 def test_streaming_sink_file_count_tracks_write_tasks(spark, stream_input, tmp_path):
     """VERDICT r3 #5: the streaming routed sink must use the same weighted
     (record_class, bucket) pre-shuffle as the batch write, so one micro-batch
@@ -153,42 +70,3 @@ def test_streaming_sink_file_count_tracks_write_tasks(spark, stream_input, tmp_p
     for d in class_dirs:
         n = len(list(d.glob("*.parquet")))
         assert n <= buckets[d.name.split("=", 1)[1]], (d.name, n)
-
-
-def test_group_lag_stream_matches_batch(spark, fixture_dir, stream_input, tmp_path):
-    """Stream-static lag: the final emission per group-partition must equal
-    the batch group_lag, across multiple out-of-order micro-batches."""
-    from klog_spark.operators.group_offsets import group_lag
-    from klog_spark.operators.parse import parse_sequences
-    from klog_spark.operators.route import apply_validity_routing
-    from klog_spark.streaming import group_lag_stream, read_sequence_stream
-
-    batch_parsed = apply_validity_routing(
-        parse_sequences(spark.read.parquet(f"{fixture_dir}/sequences.parquet"))
-    )
-    log_end = (
-        batch_parsed.filter((F.col("record_class") == "batch") & (F.col("segment_type") == "data"))
-        .groupBy("topic", "partition")
-        .agg((F.max("last_offset") + F.lit(1)).alias("log_end_offset"))
-    )
-    q = (
-        group_lag_stream(read_sequence_stream(spark, stream_input, max_files_per_trigger=2), log_end)
-        .writeStream.format("memory").queryName("gls_test").outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_lag"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    # compact the emissions per key by the carried segment order, drop keys
-    # whose newest update is a tombstone — the documented consumer contract
-    final = {}
-    for r in spark.sql("select * from gls_test").collect():
-        key = (r["group_id"], r["commit_topic"], r["commit_partition"])
-        cand = (r["file"], r["line_no"], r["is_deletion"], r["lag"])
-        if key not in final or (cand[0], cand[1]) > (final[key][0], final[key][1]):
-            final[key] = cand
-    got = {k: v[3] for k, v in final.items() if not v[2]}
-    want = {
-        (r["group_id"], r["commit_topic"], r["commit_partition"]): r["lag"]
-        for r in group_lag(batch_parsed).collect()
-    }
-    assert got == want and got

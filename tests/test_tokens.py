@@ -1,16 +1,24 @@
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from klog_spark.tokens import texts_to_token_arrays, token_series_to_texts
+from klog_spark.operators.parse import _decode_tokens
+from klog_spark.tokens import texts_to_token_arrays
+
+
+def _decoded(values: np.ndarray, offsets: np.ndarray) -> list[str]:
+    """The texts the parse decodes from the encoder's flat values and
+    offsets, as one Arrow list array."""
+    lines, n_tok = _decode_tokens(pa.ListArray.from_arrays(offsets, values))
+    assert n_tok.tolist() == np.diff(offsets).tolist()
+    return lines
 
 
 def test_roundtrip_basic():
     texts = ["hello", "", "baseOffset: 12 lastOffset: 13", "uniçødé \U0001f600"]
     values, offsets = texts_to_token_arrays(texts)
-    series = pd.Series([values[offsets[i]:offsets[i + 1]] for i in range(len(texts))])
-    assert token_series_to_texts(series).tolist() == texts
+    assert _decoded(values, offsets) == texts
 
 
 @settings(max_examples=50, deadline=None)
@@ -18,8 +26,7 @@ def test_roundtrip_basic():
 def test_roundtrip_property(texts):
     values, offsets = texts_to_token_arrays(texts)
     assert len(values) == sum(len(t) for t in texts)
-    series = pd.Series([np.asarray(values[offsets[i]:offsets[i + 1]]) for i in range(len(texts))])
-    assert token_series_to_texts(series).tolist() == texts
+    assert _decoded(values, offsets) == texts
 
 
 def test_codepoint_encoding_is_invertible_identity():

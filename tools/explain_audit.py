@@ -96,13 +96,6 @@ def main() -> None:
     assert "CartesianProduct" not in rc_plan and "BroadcastNestedLoopJoin" not in rc_plan, \
         "read-committed visibility must stay window-based, no all-pairs stage"
 
-    # 8e. named custom-operator classes: as-of is windows (no join at all),
-    #     and may not nest loops
-    af = eq.q_batch_state_asof(spark, SF_DIR)
-    af_plan = plan_of(af, "simple")
-    sections.append(("AS-OF join (union+window)", plan_of(af), ["Window"]))
-    assert "CartesianProduct" not in af_plan and "BroadcastNestedLoopJoin" not in af_plan
-
     # 9. no input-scaled driver collects: every `.collect()` in the query
     #    registry must be bounded by a `.limit(...)` — driver memory must
     #    never grow with the input
