@@ -65,7 +65,7 @@ def _apply_batch_predicate(parsed: DataFrame, pid: int | None = None,
 
     from .operators.aggregates import attach_parent_batch
 
-    df = attach_parent_batch(parsed).withColumn(
+    df = attach_parent_batch(parsed, "line_no").withColumn(
         "_batch_line",
         F.when(F.col("record_class") == "batch", F.col("line_no"))
         .otherwise(F.col("parent.line_no")),

@@ -43,31 +43,16 @@ def _countable_batch():
     return F.col("is_valid") & ~fatal
 
 
-def attach_parent_batch(parsed: DataFrame) -> DataFrame:
+def attach_parent_batch(parsed: DataFrame, *fields: str) -> DataFrame:
     """Attach each record line's enclosing batch header (klog's currentBatch).
 
-    Adds a ``parent`` struct column to every row, carrying the most recent
-    batch-header line within the same dump file.
+    Adds a ``parent`` struct column to every row, carrying ``fields`` of the
+    most recent batch-header line within the same dump file. Name only the
+    fields the caller reads: the struct is what the per-file window sorts.
     """
     w = Window.partitionBy("file").orderBy("line_no").rowsBetween(Window.unboundedPreceding, 0)
     parent = F.last(
-        F.when(
-            F.col("record_class") == "batch",
-            F.struct(
-                F.col("doc_id").alias("doc_id"),
-                F.col("line_no").alias("line_no"),
-                F.col("base_offset").alias("base_offset"),
-                F.col("last_offset").alias("last_offset"),
-                F.col("count").alias("count"),
-                F.col("producer_id").alias("producer_id"),
-                F.col("producer_epoch").alias("producer_epoch"),
-                F.col("create_time_ms").alias("create_time_ms"),
-                F.col("partition_leader_epoch").alias("partition_leader_epoch"),
-                F.col("is_transactional").alias("is_transactional"),
-                F.col("is_control").alias("is_control"),
-                F.col("is_valid").alias("is_valid"),
-            ),
-        ),
+        F.when(F.col("record_class") == "batch", F.struct(*fields)),
         ignorenulls=True,
     ).over(w)
     return parsed.withColumn("parent", parent)
@@ -122,7 +107,8 @@ def txn_groups(parsed: DataFrame, count_gaps: bool = False, pid: int | None = No
     """
     rows = attach_parent_batch(parsed.filter(
         (F.col("segment_type") == "data") & F.col("record_class").isin("batch", "control_msg")
-    ))
+    ), "doc_id", "producer_id", "producer_epoch", "create_time_ms", "partition_leader_epoch",
+        "is_valid")
     is_b = F.col("record_class") == "batch"
     # a transactional data batch without a real session (pid/epoch == -1) is
     # reference-fatal (SegmentDumpReader.checkBatch) — never an event, though

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .aggregates import MSG_CLASSES, attach_parent_batch, with_previous_batch
+from .aggregates import MSG_CLASSES, with_previous_batch
 
 # validPrevious transition table (TransactionStateChange.java:82-127):
 # state -> set of legal predecessors
@@ -58,9 +58,12 @@ def state_machine_violations(parsed: DataFrame) -> DataFrame:
     sc = parsed.filter(F.col("record_class") == "txn_state")
     w = Window.partitionBy("txn_producer_id", "txn_producer_epoch").orderBy("file", "line_no")
     sc = sc.withColumn("prev_state", F.lag("state").over(w))
-    cond = F.lit(False)
-    for state, preds in VALID_PREVIOUS.items():
-        cond = cond | ((F.col("state") == state) & ~F.col("prev_state").isin(*preds))
+    # one lookup: an unknown state finds no predecessor array, so the
+    # condition is NULL and the row is never a violation
+    valid_previous = F.create_map(*[
+        x for state, preds in VALID_PREVIOUS.items() for x in (F.lit(state), F.array(*map(F.lit, preds)))
+    ])
+    cond = ~F.array_contains(valid_previous[F.col("state")], F.col("prev_state"))
     return sc.filter(F.col("prev_state").isNotNull() & cond).select(
         "doc_id", "file", "line_no", "transactional_id",
         F.col("txn_producer_id").alias("producer_id"),
@@ -73,28 +76,31 @@ def batch_message_count_check(parsed: DataFrame) -> DataFrame:
     """Deep-iteration integrity: each batch header's `count` must equal the
     number of record lines grouped under it (the reference's stateful
     `expect` counter, SegmentDumpReader.java:182-203, which throws on
-    mismatch). Flags batches whose message-line count differs."""
-    with_parent = attach_parent_batch(
-        parsed.filter(F.col("record_class").isin("batch", *MSG_CLASSES))
-    )
-    msg_counts = (
-        with_parent.filter(F.col("record_class").isin(*MSG_CLASSES) & F.col("parent").isNotNull())
-        .groupBy(F.col("parent.doc_id").alias("batch_doc_id"))
-        .agg(F.count("*").alias("n_messages"))
-    )
-    batches = parsed.filter(F.col("record_class") == "batch").select(
-        F.col("doc_id").alias("batch_doc_id"), "file", "line_no", "count"
-    )
-    joined = batches.join(msg_counts, "batch_doc_id", "left").withColumn(
-        "n_messages", F.coalesce(F.col("n_messages"), F.lit(0))
-    )
-    # only deep-iteration files carry message lines at all: flag within
-    # files that have at least one message line
-    deep_files = (
-        parsed.filter(F.col("record_class").isin(*MSG_CLASSES)).select("file").distinct()
-    )
+    mismatch). Flags batches whose message-line count differs, within files
+    that have at least one message line (only deep-iteration dumps carry
+    them).
+
+    One per-file window gives each line its cursor (the doc_id of the
+    latest batch line at or before it) and the file's has-message-lines
+    flag; the group-by on (file, cursor) reuses the window's partitioning,
+    and its aggregates are fixed-width, so it hash-aggregates unsorted."""
+    is_batch = F.col("record_class") == "batch"
+    lines = parsed.filter(F.col("record_class").isin("batch", *MSG_CLASSES)).select(
+        "file", "line_no", "doc_id", "count", is_batch.alias("is_batch"))
+    w = Window.partitionBy("file").orderBy("line_no")
+    cursor = F.last(F.when(F.col("is_batch"), F.col("doc_id")), ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, 0))
+    deep = F.max(~F.col("is_batch")).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
     return (
-        joined.join(F.broadcast(deep_files), "file", "left_semi")
+        lines.select("file", "line_no", "count", "is_batch",
+                     cursor.alias("batch_doc_id"), deep.alias("deep"))
+        .filter(F.col("batch_doc_id").isNotNull() & F.col("deep"))
+        .groupBy("file", "batch_doc_id")
+        .agg(
+            F.max(F.when(F.col("is_batch"), F.col("line_no"))).alias("line_no"),
+            F.max(F.when(F.col("is_batch"), F.col("count"))).alias("count"),
+            F.count(F.when(~F.col("is_batch"), 1)).alias("n_messages"),
+        )
         .filter(F.col("count") != F.col("n_messages"))
         .select("batch_doc_id", "file", "line_no", "count", "n_messages")
     )

@@ -222,7 +222,10 @@ def project_sink(routed: DataFrame, record_class: str) -> DataFrame:
 
 
 def sink_counts(parsed: DataFrame) -> DataFrame:
-    return parsed.groupBy("record_class").agg(F.count("*").alias("n_rows")).orderBy("record_class")
+    """Rows per record class, in class order. At most one row per sink, so
+    one partition sorts them: ``orderBy`` would start a range-sampling job."""
+    return (parsed.groupBy("record_class").agg(F.count("*").alias("n_rows"))
+            .coalesce(1).sortWithinPartitions("record_class"))
 
 
 def routed_as_parsed(routed: DataFrame, classes: list[str] | None = None) -> DataFrame:

@@ -28,10 +28,10 @@ from .sources.dump_files import read_input
 class Pipeline:
     """``fixture_dir`` is any input ``sources.dump_files.read_input``
     accepts: a fixture directory, tokenized parquet, or a directory/glob of
-    dump-text files. Unstaged, the Pipeline builds ONE raw parse of it on
-    first use; :meth:`parsed_raw` returns that DataFrame and :meth:`parsed`
-    routes it, so persisting :meth:`parsed_raw` serves every query of the
-    Pipeline from one parse.
+    dump-text files. The Pipeline builds ONE raw parse of it on first use
+    (again only when ``fixture_dir`` changes); unstaged, :meth:`parsed_raw`
+    returns that DataFrame and :meth:`parsed` routes it, so persisting
+    :meth:`parsed_raw` serves every query of the Pipeline from one parse.
 
     ``staging_dir`` is the parse-once switch: after :meth:`stage` (or with
     a pre-existing routed table) every query reads the partitioned staging
@@ -40,36 +40,54 @@ class Pipeline:
     dominant cost; the product API must pay it once. The staging table is
     listed once, on first use after :meth:`stage` or a ``staging_dir``
     change; the sink view and every raw view derive from that one
-    DataFrame."""
+    DataFrame, and each per-class raw view is built once and dropped with
+    it. The read-only meta tables are likewise read once per path."""
 
     spark: SparkSession
     fixture_dir: str
     staging_dir: str | None = None
-    _staged: tuple[str, DataFrame] | None = field(default=None, init=False, repr=False)
-    _parse: DataFrame | None = field(default=None, init=False, repr=False)
+    #: (staging_dir, its read, the per-class raw views built on that read)
+    _staged: tuple[str, DataFrame, dict[tuple[str, ...], DataFrame]] | None = field(
+        default=None, init=False, repr=False)
+    _meta: dict[str, DataFrame] = field(default_factory=dict, init=False, repr=False)
+    _parse: tuple[str, DataFrame] | None = field(default=None, init=False, repr=False)
 
     def input_df(self) -> DataFrame:
         return read_input(self.spark, self.fixture_dir)
 
     def stage(self, out_dir: str) -> "Pipeline":
         """Parse + route ONCE into a partitioned staging table; further
-        queries on the returned Pipeline are parse-free."""
+        queries on the returned Pipeline are parse-free. Always stages the
+        input, never an earlier staging table."""
         from .operators.route import write_routed
 
-        write_routed(apply_validity_routing(self._raw()), out_dir)
+        write_routed(apply_validity_routing(self._input_parse()), out_dir)
         self.staging_dir, self._staged = out_dir, None
         return self
 
-    def _staged_df(self) -> DataFrame:
+    def _input_parse(self) -> DataFrame:
+        if self._parse is None or self._parse[0] != self.fixture_dir:
+            from .operators.parse import parse_sequences
+
+            self._parse = (self.fixture_dir, parse_sequences(self.input_df()))
+        return self._parse[1]
+
+    def _staged_read(self) -> tuple[str, DataFrame, dict[tuple[str, ...], DataFrame]]:
         if self._staged is None or self._staged[0] != self.staging_dir:
-            self._staged = (self.staging_dir, read_routed(self.spark, self.staging_dir))
-        return self._staged[1]
+            self._staged = (self.staging_dir, read_routed(self.spark, self.staging_dir), {})
+        return self._staged
+
+    def _meta_table(self, name: str) -> DataFrame:
+        path = str(Path(self.fixture_dir) / f"{name}.parquet")
+        if path not in self._meta:
+            self._meta[path] = self.spark.read.parquet(path)
+        return self._meta[path]
 
     def topic_meta(self) -> DataFrame:
-        return self.spark.read.parquet(str(Path(self.fixture_dir) / "topic_meta.parquet"))
+        return self._meta_table("topic_meta")
 
     def producer_meta(self) -> DataFrame:
-        return self.spark.read.parquet(str(Path(self.fixture_dir) / "producer_meta.parquet"))
+        return self._meta_table("producer_meta")
 
     def parsed(self) -> DataFrame:
         """Parse + validity routing (no materialization — callers compose).
@@ -81,7 +99,7 @@ class Pipeline:
         re-attached to an earlier valid batch).
         """
         if self.staging_dir:
-            return self._staged_df()
+            return self._staged_read()[1]
         return apply_validity_routing(self._raw())
 
     def parsed_raw(self) -> DataFrame:
@@ -92,15 +110,14 @@ class Pipeline:
 
     def _raw(self, *classes: str) -> DataFrame:
         """The raw view; from a staging table, pruned to ``classes`` (all
-        classes when none are named). Unstaged, the one parse of the input,
-        built on first use."""
+        classes when none are named) and built once per class list. Unstaged,
+        the one parse of the input, built on first use."""
         if self.staging_dir:
-            return routed_as_parsed(self._staged_df(), list(classes) if classes else None)
-        if self._parse is None:
-            from .operators.parse import parse_sequences
-
-            self._parse = parse_sequences(self.input_df())
-        return self._parse
+            _, routed, views = self._staged_read()
+            if classes not in views:
+                views[classes] = routed_as_parsed(routed, list(classes) if classes else None)
+            return views[classes]
+        return self._input_parse()
 
     # --- the reference's query surface -------------------------------------
     def txn_stats(self, **flt) -> DataFrame:

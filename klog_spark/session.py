@@ -83,7 +83,7 @@ def get_spark(
         # the klog query surface's working set of distinct generated classes,
         # or every warm pass recompiles its plans with Janino. Working set =
         # compiles of one cold pass (``compiled_classes`` below): 163-167
-        # for the seven staged queries, 359 for one round of the 36
+        # for the seven staged queries, 358 for one round of the 36
         # ``klog_*`` rows of ``__spark_entry__``. At 100 entries each warm
         # staged pass recompiled 152-158 of them; at 1000 it compiles none,
         # and staged latency_s_p50 fell 25 % (10 of 10 alternating pairs,
@@ -92,6 +92,16 @@ def get_spark(
         # rows it runs, tests/test_session.py those of two staged passes.
         # Static conf: it takes effect only when the JVM starts.
         "spark.sql.codegen.cache.maxEntries": "1000",
+        # No Python call-site capture per DataFrame call. With it on, every
+        # ``functions.*`` / ``Column`` call makes about five extra py4j round
+        # trips (active-session lookup, a conf read, origin set and clear) to
+        # record the Python file:line for error messages. Building the seven
+        # staged queries of a staged ``Pipeline`` sent 6,381 py4j commands
+        # with it and 2,441 without (``txn_stats`` alone: 2,391 and 761).
+        # The cost: an ``AnalysisException`` no longer names the Python line
+        # that built the failing expression. Static conf, and PySpark caches
+        # it per process on first use: set it before the JVM starts.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         "spark.ui.enabled": "false",
     }
     if extra_conf:

@@ -16,6 +16,20 @@ def test_state_machine_violations_match_oracle(parsed_df, oracle_parsed):
     assert len(got) > 0  # fixture injects some
 
 
+def test_state_machine_lookup_semantics(spark):
+    """The validPrevious lookup flags a transition from a state outside the
+    predecessor set, and never flags a state the table does not know."""
+    states = ["Empty", "PrepareCommit", "Bogus", "Ongoing", "PrepareCommit"]
+    df = spark.createDataFrame(
+        [(f"f:{i}", "f", i, "txn_state", "t", 7, 0, st) for i, st in enumerate(states, 1)],
+        "doc_id string, file string, line_no int, record_class string, transactional_id string, "
+        "txn_producer_id long, txn_producer_epoch int, state string",
+    )
+    got = [(r["line_no"], r["prev_state"], r["state"])
+           for r in checks.state_machine_violations(df).orderBy("line_no").collect()]
+    assert got == [(2, "Empty", "PrepareCommit"), (4, "Bogus", "Ongoing")]
+
+
 def test_position_monotonic_holds_on_fixture(parsed_df):
     # generator emits strictly increasing positions per file
     assert checks.position_monotonic_violations(parsed_df).count() == 0
@@ -34,6 +48,59 @@ def test_batch_message_count_check(parsed_df):
     flagged = df.count()
     corrupt = parsed_df.filter(F.col("record_class") == "corrupt").count()
     assert flagged <= 2 * corrupt + 1
+
+
+def _sequential_message_count_check(rows) -> list[tuple]:
+    """klog's sequential cursor (SegmentDumpReader.java:182-203): walk each
+    file's lines in order, keep the current batch and count the message
+    lines under it; flag a batch whose ``count`` differs, in files that hold
+    any message line."""
+    from klog_spark.operators.aggregates import MSG_CLASSES
+
+    by_file: dict[str, list] = {}
+    for r in rows:
+        by_file.setdefault(r["file"], []).append(r)
+    flagged = []
+    for file, lines in by_file.items():
+        if not any(r["record_class"] in MSG_CLASSES for r in lines):
+            continue
+        counted = []  # [batch row, message lines under it]
+        for r in sorted(lines, key=lambda r: r["line_no"]):
+            if r["record_class"] == "batch":
+                counted.append([r, 0])
+            elif r["record_class"] in MSG_CLASSES and counted:
+                counted[-1][1] += 1
+        flagged += [(b["doc_id"], file, b["line_no"], b["count"], n) for b, n in counted
+                    if b["count"] is not None and b["count"] != n]
+    return sorted(flagged)
+
+
+def test_batch_message_count_matches_sequential_cursor(spark, fixture_dir, tmp_path):
+    """The one-window message-count check equals klog's sequential cursor
+    on the fixture, unstaged and staged, and its staged plan is one scan
+    and one window with no join."""
+    import contextlib
+    import io
+    import re
+
+    from klog_spark.pipeline import Pipeline
+
+    direct = Pipeline(spark, fixture_dir)
+    want = _sequential_message_count_check(direct.parsed_raw().select(
+        "record_class", "file", "line_no", "doc_id", "count").collect())
+    assert want
+    staged = Pipeline(spark, fixture_dir).stage(str(tmp_path / "staged"))
+    for p in (direct, staged):
+        got = p.all_checks()["batch_message_count"]
+        assert sorted(map(tuple, got.collect())) == want
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        staged.all_checks()["batch_message_count"].explain("simple")
+    plan = buf.getvalue()
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert "Join" not in plan, plan
+    assert plan.count("FileScan") == 1, plan
 
 
 def test_validity_routing(parsed_df, oracle_parsed):

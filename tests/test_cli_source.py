@@ -189,7 +189,7 @@ def test_cli_cat_transactional_id(spark, dump_dir, capsys):
                  "--no-color"], spark=spark) == 0
     out = capsys.readouterr().out.strip().splitlines()
     # expected: every line of every batch with a matching message
-    wp = attach_parent_batch(parsed).withColumn(
+    wp = attach_parent_batch(parsed, "line_no").withColumn(
         "_bl", F.when(F.col("record_class") == "batch", F.col("line_no"))
                 .otherwise(F.col("parent.line_no")))
     hit_batches = {

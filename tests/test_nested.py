@@ -9,7 +9,8 @@ def test_control_batches_have_control_message(parsed_df):
     from klog_spark.operators.aggregates import MSG_CLASSES, attach_parent_batch
 
     records = attach_parent_batch(
-        parsed_df.filter(F.col("record_class").isin("batch", *MSG_CLASSES))
+        parsed_df.filter(F.col("record_class").isin("batch", *MSG_CLASSES)),
+        "doc_id", "is_control", "is_valid",
     ).filter(
         F.col("record_class").isin(*MSG_CLASSES) & F.col("parent.is_control")
         & F.col("parent.is_valid") & (F.col("segment_type") == "data")

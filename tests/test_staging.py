@@ -142,6 +142,32 @@ def test_staged_pruned_queries_parity(spark, fixture_dir, tmp_path):
         assert _rows(df) == _rows(want[name]), name
 
 
+def test_restage_drops_the_memoized_views(spark, fixture_dir, tmp_path):
+    """A Pipeline staged from one input, queried, then staged from another
+    answers from the new table only: its memoized staged read and per-class
+    raw views are rebuilt, not reused."""
+    from klog_spark.pipeline import Pipeline
+
+    full = spark.read.parquet(f"{fixture_dir}/sequences.parquet")
+    files = sorted(r["file"] for r in full.select(
+        F.regexp_extract("doc_id", r"^(.*):[0-9]+$", 1).alias("file")).distinct().collect())
+    part = str(tmp_path / "part.parquet")
+    full.filter(F.regexp_extract("doc_id", r"^(.*):[0-9]+$", 1).isin(*files[: len(files) // 2])
+                ).write.parquet(part)
+
+    def answers(p):
+        return {"sink_counts": _rows(p.sink_counts()), "txn_stats": _rows(p.txn_stats()),
+                **{name: _rows(df) for name, df in p.all_checks().items()}}
+
+    p = Pipeline(spark, part).stage(str(tmp_path / "a"))
+    before = answers(p)
+    p.fixture_dir = fixture_dir
+    p.stage(str(tmp_path / "b"))
+    after = answers(p)
+    assert after["sink_counts"] != before["sink_counts"]
+    assert after == answers(Pipeline(spark, fixture_dir, staging_dir=str(tmp_path / "b")))
+
+
 def test_read_sink_projections(spark, routed_dir):
     from klog_spark.operators.route import SINK_PROJECTIONS, project_sink, read_routed
 
