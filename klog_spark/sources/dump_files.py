@@ -39,31 +39,23 @@ import os
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    ArrayType, IntegerType, StringType, StructField, StructType,
-)
 
-OUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("tokens", ArrayType(IntegerType())),
-        StructField("n_tok", IntegerType()),
-        StructField("source", StringType()),
-    ]
-)
+from ..schemas import INPUT_SCHEMA
 
 
 def read_input(spark: SparkSession, path: str) -> DataFrame:
     """The one input resolver (``Pipeline.input_df``): a fixture directory
     reads its ``sequences.parquet`` (not its meta tables); tokenized-sequence
     parquet (a ``.parquet`` path, or a directory holding parquet files) is
-    read as is; anything else is a directory/glob of dump-text files."""
+    read as is, with its declared schema (inferring it would start a
+    footer-reading Spark job on every read); anything else is a
+    directory/glob of dump-text files."""
     if os.path.exists(os.path.join(path, "sequences.parquet")):
         path = os.path.join(path, "sequences.parquet")
     if path.endswith(".parquet") or (
         os.path.isdir(path) and _glob.glob(os.path.join(path, "*.parquet"))
     ):
-        return spark.read.parquet(path)
+        return spark.read.schema(INPUT_SCHEMA).parquet(path)
     return read_dump_files(spark, path)
 
 
@@ -125,4 +117,4 @@ def read_dump_files(spark: SparkSession, path: str) -> DataFrame:
                     }
                 )
 
-    return pdf.mapInPandas(explode, OUT_SCHEMA)
+    return pdf.mapInPandas(explode, INPUT_SCHEMA)

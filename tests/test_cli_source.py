@@ -493,3 +493,36 @@ def test_cli_parses_once_and_unpersists(spark, dump_dir, capsys, tmp_path, monke
         assert exit_msg is None and out, argv
         assert len(calls) == 1, argv
         assert cache.numCachedEntries() == before, argv
+
+
+#: Spark jobs of one call of each group view that scans the parse once, on
+#: the test session. With the persist each ran 6: its build job was the only
+#: one it added.
+SINGLE_SCAN_JOBS = {"offsets": 5, "metadata": 5, "rewinds": 5}
+
+
+def test_cli_single_scan_group_views_skip_the_persist(spark, dump_dir, capsys, monkeypatch):
+    """``group offsets``, ``group metadata`` and ``group rewinds`` scan the
+    parse once, so the CLI does not persist it for them: the persist's build
+    job was the only job it changed. Each runs its pinned job count, and
+    ``group lag`` (two scans without the cache) still persists."""
+    persisted = []
+    frame = type(spark.range(1))
+    real = frame.persist
+    monkeypatch.setattr(frame, "persist", lambda self, *a, **k: persisted.append(self) or real(self, *a, **k))
+    sc, jobs = spark.sparkContext, {}
+    for view in SINGLE_SCAN_JOBS:
+        persisted.clear()
+        group = f"cli-group-{view}"
+        sc.setJobGroup(group, group)
+        try:
+            out, exit_msg = _run_cli(spark, capsys, ["group", view, dump_dir])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert exit_msg is None and out, view
+        assert persisted == [], view
+        jobs[view] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == SINGLE_SCAN_JOBS
+    persisted.clear()
+    _run_cli(spark, capsys, ["group", "lag", dump_dir])
+    assert len(persisted) == 1
