@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .aggregates import batch_selected
+
 
 def instant_string(ms_col: Column) -> Column:
     """Epoch-millis -> the exact string ``java.time.Instant.toString()``
@@ -41,14 +43,8 @@ def instant_string(ms_col: Column) -> Column:
 def filter_batches(parsed: DataFrame, pid: int | None = None, producer_epoch: int | None = None,
                    leader_epoch: int | None = None) -> DataFrame:
     """P1/P3/P4/P6 over data-segment batches (conjunction; None = no-op)."""
-    df = parsed.filter((F.col("record_class") == "batch") & (F.col("segment_type") == "data"))
-    if pid is not None:
-        df = df.filter(F.col("producer_id") == pid)
-    if producer_epoch is not None:
-        df = df.filter(F.col("producer_epoch") == producer_epoch)
-    if leader_epoch is not None:
-        df = df.filter(F.col("partition_leader_epoch") == leader_epoch)
-    return df
+    return parsed.filter((F.col("record_class") == "batch") & (F.col("segment_type") == "data")
+                         & batch_selected("", pid, producer_epoch, leader_epoch))
 
 
 def filter_txn_state(parsed: DataFrame, pid: int | None = None, producer_epoch: int | None = None,

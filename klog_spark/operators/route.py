@@ -104,10 +104,10 @@ PRE_SHUFFLE_MIN_PARALLELISM = 4
 #: In single-JVM local mode the shuffle write/read runs through one
 #: process's page cache and syscall path; past ~16 concurrent tasks it
 #: serializes and the pre-shuffle costs more than the writer fan-out saves
-#: (tools/bench_write_variants.py at local[32], sf0.1: direct best 4.9s vs
-#: pre-shuffled best 12.8s; at local[8] pre-shuffle wins 2.5x). A real
-#: multi-executor cluster shuffles across JVMs/network and never hits this
-#: ceiling, so the guard applies to local masters only.
+#: (BENCH/BASELINE.md, round-3 write-path addendum, local[32], sf0.1:
+#: direct best 4.9s vs pre-shuffled best 12.8s; at local[8] pre-shuffle
+#: wins 2.5x). A real multi-executor cluster shuffles across JVMs/network
+#: and never hits this ceiling, so the guard applies to local masters only.
 PRE_SHUFFLE_LOCAL_MAX_PARALLELISM = 16
 
 #: Rough structural shares of each sink class in a klog dump, used ONLY to

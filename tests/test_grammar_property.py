@@ -9,6 +9,7 @@ import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from klog_spark import grammar as g
 from klog_spark import oracle
 from klog_spark.operators.parse import _parse_arrow_batch
 
@@ -105,6 +106,37 @@ def group_metadata_lines(draw):
     )
 
 
+@st.composite
+def control_lines(draw):
+    return (
+        f"| offset: {draw(nat)} CreateTime: {draw(nat)} keySize: {draw(i32)} valueSize: {draw(i32)} "
+        f"sequence: {draw(i32)} headerKeys: [{draw(hdr)}]{draw(payload_tail)} "
+        f"endTxnMarker: {draw(st.sampled_from(['COMMIT', 'ABORT']))} "
+        f"coordinatorEpoch: {draw(st.integers(0, 2**31 - 1))}"
+    )
+
+
+@st.composite
+def txn_state_lines(draw):
+    kind = draw(st.sampled_from(["state", "tombstone", "bad"]))
+    if kind == "tombstone":
+        payload = "<DELETE>"
+    elif kind == "bad":  # digit-free: can never match the payload grammar
+        payload = draw(st.text(alphabet="abc=,x ", max_size=15))
+    else:
+        payload = (
+            f"producerId:{draw(nat)},producerEpoch:{draw(st.integers(0, 2**15 - 1))},"
+            f"state={draw(st.sampled_from(g.TXN_STATES))},"
+            f"partitions=[{draw(st.text(alphabet='abc-,0123456789', max_size=12))}],"
+            f"txnLastUpdateTimestamp={draw(nat)},txnTimeoutMs={draw(nat)}"
+        )
+    return (
+        f"| offset: {draw(nat)} CreateTime: {draw(nat)} keySize: {draw(i32)} valueSize: {draw(i32)} "
+        f"sequence: {draw(i32)} headerKeys: [{draw(hdr)}]{draw(payload_tail)} "
+        f"key: transaction_metadata::transactionalId={draw(gname)} payload: {payload}"
+    )
+
+
 def _parse_lines(lines):
     docs = [f"f.log.dump.txt:{i + 3}" for i in range(len(lines))]
     src = "/tmp/kafka-logs/t-0/00000000000000000000.log"
@@ -126,6 +158,7 @@ def _parse_lines(lines):
 @settings(max_examples=60, deadline=None)
 @given(st.lists(st.one_of(batch_lines(), data_lines(), snapshot_lines(),
                           offset_commit_lines(), group_metadata_lines(),
+                          control_lines(), txn_state_lines(),
                           st.text(alphabet="abc|: 0123456789", max_size=40)), min_size=1, max_size=20))
 def test_parse_matches_oracle_on_random_lines(lines):
     out, want = _parse_lines(lines)

@@ -306,7 +306,8 @@ def test_fast_path_header_keys_greedy_semantics():
     """r9 split-based record extraction must reproduce the grammar's exact
     greedy `\\[(?P<hk>.*)\\]( payload:.*)?` semantics — including payloads
     containing ']' and '] payload:' — and the RE2-validated batch fast
-    path must parse both deleteHorizonMs layouts."""
+    path must parse both deleteHorizonMs layouts. A digit run past its
+    column's type (int64, or a narrow int32/int16/int8 field) is NULL."""
     import re
 
     import pyarrow as pa
@@ -330,6 +331,17 @@ def test_fast_path_header_keys_greedy_semantics():
         " isTransactional: false isControl: false position: 0 CreateTime: 123 size: 70"
         " magic: 2 compresscodec: none crc: 111 isvalid: true",
     ]
+    # narrow fields exactly at their type bound, then one past it
+    # (count int32, producerEpoch int16, magic int8; keySize int32)
+    for count, epoch, magic, key_size in ((2**31 - 1, 2**15 - 1, 127, 2**31 - 1),
+                                          (2**31, 2**15, 128, 2**31)):
+        cases.append(
+            f"baseOffset: 1 lastOffset: 2 count: {count} baseSequence: -1 lastSequence: -1"
+            f" producerId: 7 producerEpoch: {epoch} partitionLeaderEpoch: 0"
+            " isTransactional: false isControl: false position: 0 CreateTime: 123 size: 70"
+            f" magic: {magic} compresscodec: none crc: 111 isvalid: true")
+        cases.append(f"| offset: 1 CreateTime: 2 keySize: {key_size} valueSize: 4 sequence: 5"
+                     " headerKeys: []")
     rows = [(f"f.dump.txt:{i + 3}", [ord(c) for c in ln], len(ln),
              "/tmp/kafka-logs/t-0/0.log") for i, ln in enumerate(cases)]
     batch = pa.RecordBatch.from_arrays(
@@ -349,3 +361,11 @@ def test_fast_path_header_keys_greedy_semantics():
     # >int64 digit run: still a batch row, field NULL (corrupt-not-crash)
     assert d["record_class"][7] == "batch" and d["base_offset"][7] is None
     assert d["last_offset"][7] == 2
+    # a narrow field past its bound is NULL, never wrapped; the row keeps
+    # its class and its other fields
+    assert [d[c][8] for c in ("record_class", "count", "producer_epoch", "magic")] == \
+        ["batch", 2**31 - 1, 2**15 - 1, 127]
+    assert [d[c][9] for c in ("record_class", "key_size", "value_size")] == ["data_msg", 2**31 - 1, 4]
+    assert [d[c][10] for c in ("record_class", "count", "producer_epoch", "magic", "producer_id")] == \
+        ["batch", None, None, None, 7]
+    assert [d[c][11] for c in ("record_class", "key_size", "value_size")] == ["data_msg", None, 4]
